@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Artifacts
+
 /** Driver bench harness: one JSON line with per-query wall-clock at the
   * target scale factor. A warmup pass at sf0.001 runs every query once
   * first so the timed numbers measure the engine, not JVM/codegen/JIT
@@ -186,13 +188,7 @@ object Bench {
     // float-rounded oracles (rrf/bm25) across hosts.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec's "No Partition Defined" WARN is noise in this harness:
     // every unpartitioned window in the suite is allowlisted
@@ -218,20 +214,20 @@ object Bench {
     // pass through the artifact ledger (per-dir keys canonicalized so
     // warmup-dir observations map onto the timed dir's entries).
     val retainRequested = sys.env.getOrElse("SPARK_GRAFT_RETAIN", "all")
-    SparkEntry.ArtifactLedger.enabled = true
+    Artifacts.ArtifactLedger.enabled = true
     def canonKey(k: String, dir: String): String = k.replace(dir, "@dir")
     val warmAccesses = scala.collection.mutable.Map.empty[String, Set[(String, String)]]
     val warmupFailed = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
-      SparkEntry.ArtifactLedger.drainAccesses()
+      Artifacts.ArtifactLedger.drainAccesses()
       try { fn(spark, warmupDir).count() } catch { case _: Throwable => warmupFailed += name }
-      warmAccesses(name) = SparkEntry.ArtifactLedger.drainAccesses()
+      warmAccesses(name) = Artifacts.ArtifactLedger.drainAccesses()
         .map { case (n, k) => (n, canonKey(k, warmupDir)) }.toSet
     }
-    SparkEntry.ArtifactLedger.drainBuilds()
+    Artifacts.ArtifactLedger.drainBuilds()
     // access recording exists only to build the consumer map; stop it for
     // the timed pass (builds stay recorded for the attribution map)
-    SparkEntry.ArtifactLedger.accessRecording = false
+    Artifacts.ArtifactLedger.accessRecording = false
     // the consumer map is only trustworthy if every query's warmup run
     // actually executed: a query that failed at warmup contributes no
     // accesses, so its artifacts would be dropped after an EARLIER
@@ -246,7 +242,7 @@ object Bench {
       } else retainRequested
     // drop ALL warmup-dir artifacts (nothing consumes them again) and
     // every cached block — the timed pass starts artifact-cold either way
-    SparkEntry.resetArtifactCaches(spark)
+    Artifacts.resetArtifactCaches(spark)
     // entry -> last consumer in sorted (= timed) order; later queries
     // overwrite earlier ones in the fold
     val sortedQueryNames = SparkEntry.queries.keys.toSeq.sorted
@@ -295,10 +291,10 @@ object Bench {
     // sorted order: per-query timings land in the same position every
     // round, so cross-round BENCH diffs compare like with like
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      SparkEntry.ArtifactLedger.drainBuilds()
+      Artifacts.ArtifactLedger.drainBuilds()
       val gc0 = gcNow()
       val a = timeOnce(name, s"cold:$name", fn)
-      val coldBuilds = SparkEntry.ArtifactLedger.drainBuilds()
+      val coldBuilds = Artifacts.ArtifactLedger.drainBuilds()
       // THREE reps from round 10 (was 2): min-of-2 left the min basis
       // exposed to single-draw scheduler/GC noise — two same-tree draws
       // this round read 126.9 vs 153.9 s min with the spread localized
@@ -317,7 +313,7 @@ object Bench {
       // cold-minus-min cost "jit/noise"). A warm-rep build is also a
       // signal worth seeing on stderr: it means the cold rep did NOT
       // finish the artifact, so the min basis carries build cost.
-      val lateBuilds = SparkEntry.ArtifactLedger.drainBuilds()
+      val lateBuilds = Artifacts.ArtifactLedger.drainBuilds()
       if (lateBuilds.nonEmpty)
         System.err.println(s"[bench] query '$name' built artifacts in a WARM rep: " +
           lateBuilds.distinct.mkString(","))
@@ -327,7 +323,7 @@ object Bench {
       // straight off bench_full.json (r9 verdict item 1)
       gcPerQuery(name) = gcNow() - gc0
       if (retain == "drop") dropAfter.getOrElse(name, Nil).foreach { case (cache, ck) =>
-        SparkEntry.dropArtifactEntries(cache, k => canonKey(k, sfDir) == ck)
+        Artifacts.dropArtifactEntries(cache, k => canonKey(k, sfDir) == ck)
       }
       // localCheckpoint blocks are released by the ContextCleaner only
       // after their DataFrames are GC'd; across 100+ queries the dead

@@ -1,186 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.index.LshIndex
-import graft.operators.{Joins, Knn, MetricsAnalytics, Recall, Snapshots}
-import graft.sources.{MetricLogs, SvgPlot, Tables}
-import graft.text.{Dedup, TextFunctions}
+import graft.queries.{Artifacts, QuerySpec}
+import graft.queries.VectorIndexQueries.knnExact
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract — see SURVEY.md §7.
   *
   * Every entry in `queries` is one operator from SURVEY §2 (or the extended
-  * LLM-pipeline surface); entries with deterministic, SQL-expressible
-  * semantics also appear in `oracleSql` for the DuckDB hash-match.
+  * LLM-pipeline surface), and each carries its oracle: both maps are
+  * derived from the [[graft.queries.QuerySpec]] registry, one object per
+  * family under `graft.queries`.
   */
 object SparkEntry {
 
-  val KnnK = 10
-
-  /** Registry of every per-dir DataFrame artifact cache, keyed by a
-    * stable name. Caches are created ONLY through [[namedArtifactCache]],
-    * which auto-registers them — so [[resetArtifactCaches]] and the bench
-    * artifact ledger enumerate the registry and can never miss one (the
-    * r9 review found four caches added late in the round absent from the
-    * hand-maintained drop list, which made ColdReps' "artifact-cold" reps
-    * serve warm localCheckpointed adjacencies for exactly the queries the
-    * tool was adjudicating). A ContractSpec source lint enforces that no
-    * DataFrame TrieMap in this file is created any other way. */
-  private val artifactCacheRegistry = scala.collection.concurrent.TrieMap
-    .empty[String, scala.collection.concurrent.TrieMap[_, DataFrame]]
-
-  private def namedArtifactCache[K](name: String): scala.collection.concurrent.TrieMap[K, DataFrame] = {
-    val m = scala.collection.concurrent.TrieMap.empty[K, DataFrame]
-    artifactCacheRegistry.put(name, m)
-    m
-  }
-
-  /** Bench-side ledger: which artifact caches a query touched/built.
-    * Off by default (zero overhead outside the bench harness); when
-    * enabled, [[cachedArtifact]] records every access (for the
-    * last-consumer retention analysis) and every build (for the
-    * cold-cost attribution map in bench_full.json — r9 verdict item 6:
-    * the NAME, not just the seconds). Single-threaded consumer (Bench's
-    * timing loop); concurrent producers are fine via the queues. */
-  private[graft] object ArtifactLedger {
-    @volatile var enabled = false
-    /** Accesses feed only the warmup-time consumer map; Bench turns this
-      * off for the timed pass so 325×3 reps don't enqueue into a queue
-      * nobody drains (r10 review). Builds stay recorded throughout. */
-    @volatile var accessRecording = true
-    private val buildsQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val accessQ = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    private[SparkEntry] def nameOf(cache: AnyRef): Option[String] =
-      artifactCacheRegistry.collectFirst { case (n, c) if c eq cache => n }
-    private[SparkEntry] def recordBuild(cache: AnyRef): Unit =
-      if (enabled) nameOf(cache).foreach(buildsQ.add)
-    /** Builds of driver-VALUE model caches (trained codebooks, merge
-      * tables, moment vectors) — invisible to the DataFrame-cache ledger
-      * but just as real in a cold rep; recording them keeps the bench's
-      * cold-minus-min attribution honest (r11: `bpe_sampled_curve`'s
-      * 2.7 s of sampled merge training read as "jit/noise"). */
-    private[SparkEntry] def recordNamedBuild(name: String): Unit =
-      if (enabled) buildsQ.add(name)
-    private[SparkEntry] def recordAccess(cache: AnyRef, key: Any): Unit =
-      if (enabled && accessRecording) nameOf(cache).foreach(n => accessQ.add((n, key.toString)))
-    def drainBuilds(): Seq[String] = {
-      val b = Seq.newBuilder[String]
-      var x = buildsQ.poll(); while (x != null) { b += x; x = buildsQ.poll() }
-      b.result()
-    }
-    def drainAccesses(): Seq[(String, String)] = {
-      val b = Seq.newBuilder[(String, String)]
-      var x = accessQ.poll(); while (x != null) { b += x; x = accessQ.poll() }
-      b.result()
-    }
-  }
-
-  /** Unpersist + forget the entries of artifact cache `cacheName` whose
-    * key's string form satisfies `keyMatches` — the bench's
-    * drop-after-last-consumer retention policy (r9 verdict item 1: 250
-    * retained localCheckpointed/cached DataFrames in one JVM were the
-    * suspect mechanism for the suite-wide warm inflation). Removing the
-    * map reference lets the ContextCleaner reclaim localCheckpoint
-    * blocks (unpersist alone does not free those). */
-  private[graft] def dropArtifactEntries(cacheName: String, keyMatches: String => Boolean): Unit =
-    artifactCacheRegistry.get(cacheName).foreach { c =>
-      val m = c.asInstanceOf[scala.collection.concurrent.TrieMap[Any, DataFrame]]
-      m.keys.filter(k => keyMatches(k.toString)).foreach { k =>
-        m.remove(k).foreach(df =>
-          try df.unpersist(blocking = false) catch { case _: Throwable => () })
-      }
-    }
-
-  // Model/ground-truth memo per dataset dir. The reference builds each
-  // index ONCE and searches it repeatedly (dynamic_script_*.py build →
-  // search loop); our per-operator query entries share the same fitted
-  // model the same way. Deterministic (fixed seeds), so results are
-  // unchanged — only the redundant re-fits go away.
-  private val ivfFlatCache = scala.collection.concurrent.TrieMap.empty[String, Array[Array[Long]]]
-  private val ivfUpsertCache = scala.collection.concurrent.TrieMap.empty[String, Array[Array[Long]]]
-  private val pqFlatCache = scala.collection.concurrent.TrieMap.empty[String, graft.index.PqFlat.Model]
-  private val sqCache = scala.collection.concurrent.TrieMap.empty[String, graft.index.SqModel]
-  private val gtCache = namedArtifactCache[String]("gt")
-
-  /** Drop every memoized per-dir DataFrame artifact and clear the Spark
-    * block cache — the "cold rep" state for same-JVM cold-cost
-    * adjudication (SCALING.md protocol): JIT/codegen stay warm, every
-    * engine-side artifact rebuilds. Model/layout caches (trained
-    * codebooks, written file layouts) are on-purpose NOT dropped — they
-    * are deterministic replays / on-disk artifacts whose cost queries
-    * like `knn_pq_flat` measure separately. Used by
-    * [[graft.tools.ColdReps]]. */
-  /** Derived-VALUE caches (collected stats, driver-solved matrices) that
-    * are artifact-like: no query measures their build separately, so an
-    * "artifact-cold" rep must rebuild them too or it understates cold
-    * cost (r10 review — the same warm-serving mis-adjudication class the
-    * DataFrame registry closed in r9's review). Trained-codebook caches
-    * (ivfFlat/pq/sq) stay exempt ON PURPOSE: their training replays are
-    * measured by their own queries (`knn_pq_flat` et al.). */
-  // lazy: the referenced caches are defined further down the object and
-  // object vals initialize top-to-bottom; forced only at reset time
-  private lazy val derivedValueCaches: Seq[scala.collection.concurrent.TrieMap[_, _]] =
-    Seq(hubnessMomentsCache, zcaMatrixCache)
-
-  private[graft] def resetArtifactCaches(spark: SparkSession): Unit = {
-    // enumerate the REGISTRY, not a hand-maintained list: the r9 review
-    // found four late-added caches missing from the old Seq, which made
-    // ColdReps' "artifact-cold" reps serve warm cosine adjacencies and
-    // shortlist-32 bitext pairs (catalog.clearCache does not free
-    // localCheckpoint blocks, so a forgotten cache stays warm forever)
-    artifactCacheRegistry.values.foreach { c =>
-      c.values.foreach(df => try df.unpersist(blocking = false) catch { case _: Throwable => () })
-      c.asInstanceOf[scala.collection.concurrent.TrieMap[Any, DataFrame]].clear()
-    }
-    derivedValueCaches.foreach(_.clear())
-    spark.catalog.clearCache()
-  }
-
-  /** Guarded per-key memo for DataFrame artifacts (cached/localCheckpointed
-    * builds). Two hazards the raw `getOrElseUpdate` had (round-8 review):
-    * (a) a checkpointed/cached artifact dies with its SparkContext — a
-    * same-JVM session restart must rebuild, not serve a LogicalRDD whose
-    * blocks died with the old session; (b) get-then-put is not atomic —
-    * concurrent first callers (the spec suites drive queries in parallel)
-    * could each build; `putIfAbsent` makes one the winner and the losing
-    * build is discarded (correct either way, just wasted work avoided
-    * for every later caller). */
-  private def cachedArtifact[K](cache: scala.collection.concurrent.TrieMap[K, DataFrame],
-      key: K)(build: => DataFrame): DataFrame = {
-    ArtifactLedger.recordAccess(cache, key)
-    cache.get(key).filter(df => !df.sparkSession.sparkContext.isStopped)
-      .getOrElse {
-        ArtifactLedger.recordBuild(cache)
-        val df = build
-        val winner = cache.putIfAbsent(key, df).getOrElse(df)
-        if (!winner.sparkSession.sparkContext.isStopped) winner
-        else { cache.put(key, df); df }
-      }
-  }
-
-  private def sqModel(spark: SparkSession, dir: String): graft.index.SqModel =
-    sqCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:sq")
-      val base = Tables.embeddingBase(spark, dir)
-      graft.index.SqIndex.fit(base, base)
-    })
-
-  /** Exact ground truth, cached per dir (the `sift_groundtruth` analog —
-    * computed once, scored against by every recall query). */
-  private def groundTruth(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(gtCache, dir)(
-      Knn.exact(Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir), KnnK)
-        .cache())
-
-  /** Per-(query, dir) memo for search results that a paired recall_*
-    * query re-scores: the reference's lifecycle is search once, then
-    * compute recall ON THAT RESULT — re-executing the whole index search
-    * inside the recall query would benchmark the same work twice. */
-  private val searchCache = namedArtifactCache[(String, String)]("search")
-  private def memoSearch(name: String, dir: String)(build: => DataFrame): DataFrame =
-    cachedArtifact(searchCache, (name, dir))(build.cache())
+  val KnnK: Int = Artifacts.KnnK
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Exact brute-force kNN over the embeddings split — the reference's one
@@ -188,12352 +22,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     knnExact(spark, "/root/testdata/sf0.001")
 
-  private def knnExact(spark: SparkSession, dir: String): DataFrame =
-    Knn.exact(
-      Tables.embeddingQueries(spark, dir),
-      Tables.embeddingBase(spark, dir),
-      KnnK)
-
-  /** Matryoshka-truncation search (Kusupati et al. 2022, MRL): exact
-    * kNN over only the FIRST 32 of 64 dims — the nested-prefix serving
-    * pattern where a truncated embedding stands in for the full vector
-    * at half the scan bytes. Same broadcast + bounded-heap plan as
-    * [[knnExact]]; [[recallMatryoshka]] scores the quality loss against
-    * full-dim ground truth. */
-  private def knnMatryoshka(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("knn_matryoshka", dir) {
-      Knn.exact(
-        Tables.embeddingQueries(spark, dir)
-          .withColumn("q_embedding", slice(col("q_embedding"), 1, 32)),
-        Tables.embeddingBase(spark, dir)
-          .withColumn("embedding", slice(col("embedding"), 1, 32)),
-        KnnK)
-    }
-
-  /** Recall of the half-dim matryoshka search vs full-dim ground truth —
-    * the measured cost of the 2× byte saving. */
-  private def recallMatryoshka(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnMatryoshka(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** Radius (range) search — FAISS `range_search`: every base vector
-    * within squared-L2 1.40 of the query. The 1.40 cut keeps ~1% of all
-    * pairs at fixture scale; the double fold is bit-identical to the
-    * oracle's sequential list_reduce replay, so the boundary compare
-    * agrees exactly. */
-  private def knnRadius(spark: SparkSession, dir: String): DataFrame =
-    Knn.radius(
-      Tables.embeddingQueries(spark, dir),
-      Tables.embeddingBase(spark, dir),
-      maxDistSq = 1.40)
-
-  /** IVF inverted-list introspection: per-cell population plus the FAISS
-    * imbalance factor (nlist·Σs²/n², basis points — an integer on both
-    * engines; nlist = non-empty cells). The list-size histogram is what
-    * operators watch to decide re-training/re-sharding at scale. */
-  private def ivfListStats(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = graft.index.IvfFlat
-      .assignments(Tables.embeddingBase(spark, dir), ivfFlatModel(spark, dir))
-      .groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
-    val tot = sizes.agg(
-      sum(col("n_vecs")).as("n"),
-      sum(col("n_vecs") * col("n_vecs")).as("ss"),
-      count(lit(1)).as("nl"))
-    sizes.crossJoin(tot)
-      .select(col("cid"), col("n_vecs"),
-        expr("(nl * ss * 10000) div (n * n)").as("imbalance_bp"))
-  }
-
-  /** Index ADVISOR — the cost-based physical-design step: from the one
-    * measured statistic that matters (base cardinality n) and each
-    * registered index family's fixed configuration, the closed-form
-    * per-query cost of serving k-NN through it — distance computations
-    * and bytes touched — and the min-bytes winner. The formulas mirror
-    * the ACTUAL registered configs: exact scan (n full vectors),
-    * IVF-Flat (8 centroids + nprobe 2 of 8 cells), graph search (n/16
-    * seed scores + 3 hops × beam 32 × degree 16), BQ (n 8-byte Hamming
-    * words + 100 full-vector reranks). Recall per family is measured
-    * separately by the recall_* queries — this emits the cost side of
-    * that trade, all in exact integer arithmetic. */
-  private def indexAdvisor(spark: SparkSession, dir: String): DataFrame = {
-    val strategies = explode(array(
-      struct(lit("exact").as("strategy"),
-        expr("n").as("est_comps"), expr("n * 256").as("est_bytes")),
-      struct(lit("ivf_flat").as("strategy"),
-        expr("8 + (n * 2) div 8").as("est_comps"),
-        expr("8 * 256 + ((n * 2) div 8) * 256").as("est_bytes")),
-      struct(lit("graph").as("strategy"),
-        expr("n div 16 + 1536").as("est_comps"),
-        expr("(n div 16 + 1536) * 256").as("est_bytes")),
-      struct(lit("bq").as("strategy"),
-        expr("n + 100").as("est_comps"),
-        expr("n * 8 + 100 * 256").as("est_bytes"))))
-    Tables.embeddingBase(spark, dir)
-      .agg(count(lit(1)).as("n"))
-      .select(strategies.as("s"))
-      .select(col("s.strategy"), col("s.est_comps"), col("s.est_bytes"))
-      .withColumn("chosen",
-        col("est_bytes") === min(col("est_bytes")).over(
-          Window.partitionBy(lit(1))))
-      .transform(graft.functions.Guards.boundedWindow(_, "index_advisor"))
-  }
-
-  /** Cluster-balanced sampling: per-IVF-cell quota of 40 vectors, kept
-    * by Knuth id-hash priority — the embedding-space analog of
-    * [[domainMix]] and the SemDeDup/SSL-curation practice of flattening
-    * cluster skew so head clusters don't dominate a training mix.
-    * Assignment reuses the trained IVF centroid artifact; selection is
-    * one window per cell, deterministic in doc identity on any engine.
-    * Per cell: population, kept count, and the kept id-sum (pins the
-    * exact selection, not just its size). */
-  private def clusterBalanceSample(spark: SparkSession, dir: String): DataFrame = {
-    val asg = graft.index.IvfFlat
-      .assignments(Tables.embeddingBase(spark, dir), ivfFlatModel(spark, dir))
-    val bucket = graft.operators.Sampling.idBucket(col("vec_id"), 1000000)
-    val w = Window.partitionBy(col("cid")).orderBy(bucket, col("vec_id"))
-    asg.withColumn("rn", row_number().over(w))
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_total"),
-        sum(when(col("rn") <= 40, 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("rn") <= 40, col("vec_id")).otherwise(lit(0L))).as("kept_id_sum"))
-  }
-
-  /** Embedding-table data-quality gate — the `dq_checks` sibling for
-    * the vector column: zero vectors (dead rows a cosine metric divides
-    * by), dimension drift, and the exact-integer norm range on the
-    * 2²⁰ quantization grid (a float norm would hash differently per
-    * engine; the grid norm is replayable). One map + one aggregate. */
-  private def embeddingDq(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(graft.index.IvfFlat.quantize(col("embedding")).as("qv"))
-      .select(size(col("qv")).as("dim"),
-        aggregate(col("qv"), lit(0L), (a, e) => a + e * e).as("nsq"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(when(col("nsq") === 0, 1L).otherwise(0L)).as("n_zero"),
-        min(col("nsq")).as("min_norm_sq_q"),
-        max(col("nsq")).as("max_norm_sq_q"),
-        sum(when(col("dim") === 64, 0L).otherwise(1L)).as("n_bad_dim"))
-
-  /** Index MAINTENANCE: split the hottest inverted list in two — the
-    * action [[ivfListStats]]' imbalance alarm calls for (FAISS re-trains
-    * wholesale; splitting touches ONLY the fat cell's rows). The
-    * largest cell (ties to the lower cid) trains a deterministic
-    * 2-means on its own members with the same integer-Lloyd trainer as
-    * the parent model, its rows re-assign to the sub-centroids
-    * published as new cids nlist and nlist+1, and the output is the
-    * post-split list census with the new imbalance factor. At 100 TB
-    * this is one partition-pruned scan of the hot list, not a corpus
-    * re-train. */
-  private def ivfSplitHotCell(spark: SparkSession, dir: String): DataFrame = {
-    val cs = ivfFlatModel(spark, dir)
-    val base = Tables.embeddingBase(spark, dir)
-    val asg = graft.index.IvfFlat.assignments(base, cs).localCheckpoint()
-    val hot = asg.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("cid")).select(col("cid")).first().getInt(0)
-    val cellBase = base.join(
-      asg.filter(col("cid") === hot).select(col("vec_id")), Seq("vec_id"))
-    val sub = graft.index.IvfFlat.fit(cellBase, nlist = 2)
-    val subAsg = graft.index.IvfFlat.assignments(cellBase, sub)
-      .select(col("vec_id"), (col("cid") + cs.length).as("cid"))
-    val sizes = asg.filter(col("cid") =!= hot).unionByName(subAsg)
-      .groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
-    val tot = sizes.agg(sum(col("n_vecs")).as("n"),
-      sum(col("n_vecs") * col("n_vecs")).as("ss"), count(lit(1)).as("nl"))
-    sizes.crossJoin(tot)
-      .select(col("cid"), col("n_vecs"),
-        expr("(nl * ss * 10000) div (n * n)").as("imbalance_bp"))
-  }
-
-  /** Binary (Hamming) kNN — FAISS IndexBinaryFlat over 60-bit simhash
-    * signatures: top-10 docs by popcount(xor) distance. Signatures are
-    * materialized once (they feed both the broadcast query side and the
-    * scan side of the self-derived cross join). */
-  private def knnHamming(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.text.Dedup.simHashSignatures(
-      Tables.documents(spark, dir), "doc_id", "text").localCheckpoint()
-    Knn.hammingTopK(
-      sigs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("query_id"), col("simhash").as("q_sig")),
-      sigs.filter(col("doc_id") % 20 =!= 0)
-        .select(col("doc_id").as("vec_id"), col("simhash").as("sig")),
-      KnnK)
-  }
-
-  /** Grouped kNN: neighbors restricted to the query's own label — the
-    * per-domain retrieval shape (equi-join on the group key, no global
-    * nested loop). */
-  private def knnGrouped(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"), col("label"))
-    val b = emb.filter(col("vec_id") % 20 =!= 0)
-    Knn.groupedExact(q, b, "label", KnnK)
-  }
-
-  /** Approximate distinct (HLL++) with a deterministic error-bound check
-    * against the exact count — the sketch-aggregation coverage. HLL is
-    * deterministic for fixed input, so the boolean is stable. */
-  private def approxDistinctParts(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        countDistinct(col("l_partkey")).as("n_exact"),
-        approx_count_distinct(col("l_partkey")).as("__approx"))
-      .select(col("l_returnflag"), col("n_exact"),
-        (abs(col("__approx") - col("n_exact")) <= col("n_exact") * 0.15).as("within_15pct"))
-
-  /** Approximate quantile (percentile_approx / KLL-style sketch) with a
-    * deterministic RANK-bound check against the data: the sketch
-    * guarantees rank error ≤ n/accuracy, so the returned value's exact
-    * rank interval [n_lt, n_le] must intersect [0.5n − n/acc, 0.5n +
-    * n/acc]. The sketch is deterministic for fixed input, so the boolean
-    * is stable — same shape as [[approxDistinctParts]]'s HLL bound. At
-    * scale this is THE distributed-quantile pattern: a mergeable sketch
-    * per partition (one pass, fixed memory) instead of a global sort. */
-  private def approxQuantileEvents(spark: SparkSession, dir: String): DataFrame = {
-    val acc = 100 // rank error ≤ 1% of n — a real sketch, not exact
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-    val ap = ev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        expr(s"approx_percentile(cents, 0.5, $acc)").as("__ap50"))
-    val ranks = ev.join(ap.select(col("event_type"), col("__ap50")), Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(sum(when(col("cents") < col("__ap50"), 1L).otherwise(0L)).as("__n_lt"),
-        sum(when(col("cents") <= col("__ap50"), 1L).otherwise(0L)).as("__n_le"))
-    ap.join(ranks, Seq("event_type"))
-      .select(col("event_type"), col("n"),
-        (col("__n_lt") <= col("n") * 0.5 + col("n") / acc &&
-          col("__n_le") >= col("n") * 0.5 - col("n") / acc).as("rank_ok"))
-  }
-
-  /** Count-Min-Sketch heavy hitters with a deterministic bound check —
-    * the third mergeable sketch next to HLL ([[approxDistinctParts]]) and
-    * the quantile sketch ([[approxQuantileEvents]]). The CMS is built in
-    * one distributed pass (`count_min_sketch`, fixed seed ⇒
-    * deterministic); the driver then reads the sketch ARTIFACT (a few KB
-    * — model-sized, not data-sized) and checks the classic guarantee for
-    * the exact top users: exact ≤ estimate ≤ exact + ε·N. At 100 TB this
-    * is how per-key frequencies are monitored without a keyed shuffle:
-    * sketches merge associatively across partitions. */
-  private def cmsHeavyUsers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val eps = 0.005
-    val ev = Tables.events(spark, dir)
-    val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-      .orderBy(col("n_exact").desc, col("user_id")).limit(10).collect()
-    val row = ev.agg(
-      expr(s"count_min_sketch(user_id, ${eps}d, 0.99d, 42)").as("s"),
-      count(lit(1)).as("n")).head()
-    val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(row.getAs[Array[Byte]]("s")))
-    val slack = (eps * row.getAs[Long]("n")).toLong
-    exact.toSeq.map { r =>
-      val (uid, n) = (r.getLong(0), r.getLong(1))
-      val est = cms.estimateCount(uid)
-      (uid, n, est >= n && est <= n + slack)
-    }.toDF("user_id", "n_exact", "within_bound")
-  }
-
-  /** Incremental stats refresh ([[graft.operators.IncrementalAgg]]): the
-    * standing summary of the first 24 days absorbs one merge per daily
-    * ingest batch — O(|summary| + |batch|) per refresh, never a rescan
-    * of the base — and the folded result must equal the full-table
-    * aggregation (the oracle). avg derives exactly from the merged sums
-    * (integer floor-div). */
-  private def incrementalAgg(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.IncrementalAgg
-    val ev = Tables.events(spark, dir)
-      .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
-    val cut = lit("2024-01-25").cast("timestamp")
-    val base = IncrementalAgg.summarize(ev.filter(col("ts") < cut), "event_type", col("cents"))
-    val merged = (25 to 31).foldLeft(base) { (acc, day) =>
-      val batch = ev.filter(col("ts") >= lit(f"2024-01-$day%02d").cast("timestamp") &&
-        col("ts") < lit(if (day == 31) "2024-02-01" else f"2024-01-${day + 1}%02d").cast("timestamp"))
-      IncrementalAgg.merge(acc, IncrementalAgg.summarize(batch, "event_type", col("cents")), "event_type")
-    }
-    merged.select(col("event_type"), col("n"), col("sum_v").as("sum_cents"),
-      col("min_v").as("min_cents"), col("max_v").as("max_cents"),
-      expr("sum_v div n").as("avg_cents"))
-  }
-
-  /** Three-stage funnel (view → click → purchase, strictly increasing
-    * event time per user): the classic product-analytics query — one
-    * shuffle per stage on user_id, the natural key. */
-  private def funnelConversion(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select(col("user_id"), col("event_type"), col("ts"))
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("tv"))
-    val c = ev.filter(col("event_type") === "click").join(v, Seq("user_id"))
-      .filter(col("ts") > col("tv"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("tc"))
-    val p = ev.filter(col("event_type") === "purchase").join(c, Seq("user_id"))
-      .filter(col("ts") > col("tc"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("tp"))
-    v.agg(count(lit(1)).as("n_view")).crossJoin(
-      c.agg(count(lit(1)).as("n_click_after_view"))).crossJoin(
-      p.agg(count(lit(1)).as("n_purchase_after_click")))
-  }
-
-  private def knnExactWindow(spark: SparkSession, dir: String): DataFrame =
-    Knn.exactWindow(
-      Tables.embeddingQueries(spark, dir),
-      Tables.embeddingBase(spark, dir),
-      KnnK)
-
-  private def knnCosine(spark: SparkSession, dir: String): DataFrame =
-    cosineHits(spark, dir)
-
-  /** IVF pruned kNN (SURVEY §2.2 I2 / §2.3). nlist=8/nprobe=6 clears the
-    * BASELINE ≥0.9 recall bar on the weakly-clustered synthetic embeddings
-    * (autotuned via graft.tools.IvfSweep, the MRPT-autotune analog); on
-    * naturally clustered corpora the same code runs nlist=√n, nprobe≈10%. */
-
-  /** Deterministic integer-Lloyd IVF (graft.index.IvfFlat): the
-    * oracle-checkable member of the IVF family — quantized grid, exact
-    * int64 training, fixed 2 iterations, nprobe=6 probe + float rerank. */
-  private def ivfFlatModel(spark: SparkSession, dir: String): Array[Array[Long]] =
-    ivfFlatCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:ivf_flat")
-      graft.index.IvfFlat.fit(Tables.embeddingBase(spark, dir), nlist = 8)
-    })
-
-  private def knnIvfFlat(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("ivf_flat", dir) {
-      graft.index.IvfFlat.search(ivfFlatModel(spark, dir),
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir), KnnK, nprobe = 6)
-    }
-
-  /** Integer-IVF recall vs exact ground truth in basis points (⊕). */
-  private def recallIvfFlat(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnIvfFlat(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** FILTERED IVF search — predicate-composable index serving (the
-    * filtered-ANN feature of the Milvus/FAISS family,
-    * `/root/reference/dynamic_script_milvus.py`'s collection schema
-    * carries exactly such metadata fields): the label predicate prunes
-    * the inverted lists BEFORE any float distance — the probe join scans
-    * selectivity × nprobe/nlist of the corpus. Pre-filtering, not
-    * post-filtering: a k-limit can't recover recall a late filter threw
-    * away. The model is the standard full-corpus one; only serving
-    * composes the predicate. */
-  private def knnIvfFiltered(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("ivf_filtered", dir) {
-      graft.index.IvfFlat.search(ivfFlatModel(spark, dir),
-        Tables.embeddingQueries(spark, dir),
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % 20 =!= 0 && col("label").isin(0, 1, 2))
-          .select(col("vec_id"), col("embedding")),
-        KnnK, nprobe = 6)
-    }
-
-  /** Filtered-IVF recall vs the exact FILTERED ground truth
-    * ([[knnFiltered]]) — measures what cell pruning costs under a
-    * predicate, where per-cell survivor counts are thinner. */
-  private def recallIvfFiltered(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnIvfFiltered(spark, dir), knnFiltered(spark, dir), KnnK)
-
-  /** Index survives D1 upsert without retrain (the FAISS `add_with_ids`
-    * semantics): the coarse quantizer is fit on the 80% pre-insert
-    * snapshot; the upserted 20% is assigned to the EXISTING cells at
-    * search time ([[graft.index.IvfFlat.search]] re-assigns whatever base
-    * it is handed). At scale this is how an IVF index absorbs continuous
-    * ingestion — retraining only when list imbalance (`ivf_list_stats`)
-    * degrades. */
-  private def knnIvfUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    val pre = base.filter(col("vec_id") % 5 =!= 4)
-    val model = ivfUpsertCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:ivf_upsert")
-      graft.index.IvfFlat.fit(pre, nlist = 8)
-    })
-    val snapshot = graft.operators.Snapshots.insert(pre, base.filter(col("vec_id") % 5 === 4))
-    graft.index.IvfFlat.search(model, Tables.embeddingQueries(spark, dir),
-      snapshot, KnnK, nprobe = 6)
-  }
-
-  private val ivfLayoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Same IVF search served from the cluster-partitioned parquet layout:
-    * dynamic partition pruning reads only the probed cluster directories.
-    * Identical results to knn_ivf_flat (deterministic assignment), so it
-    * shares that oracle — one logical answer, two physical plans. */
-  private def knnIvfFlatPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val model = ivfFlatModel(spark, dir)
-    val path = ivfLayoutCache.getOrElseUpdate(dir, {
-      val p = s"target/ivf_flat_layout/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.index.IvfFlat.writeLayout(model, Tables.embeddingBase(spark, dir), p)
-      p
-    })
-    graft.index.IvfFlat.searchPartitioned(model, path,
-      Tables.embeddingQueries(spark, dir), KnnK, nprobe = 6)
-  }
-
-  private val zorderLayoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  // (session, dir) key: catalog entries die with the session, so a new
-  // session must re-register even if the files survive on disk.
-  private val bucketedTableCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-
-  /** One cheap memoized aggregate per fixture dir: approximate user
-    * cardinality + event-time span + corpus doc count — the quantities
-    * every streaming query's state-store sizing derives from
-    * ([[graft.streaming.StreamingMetrics.statePartitionsFor]]). At
-    * fixture scale every derived count lands on the measured 4-store
-    * floor (stream oracles unchanged); at 100 TB the same call sites
-    * size stores to the actual key space instead of a constant. */
-  private case class StreamCensus(users: Long, spanMs: Long) {
-    def windowBuckets(stepMs: Long): Long = spanMs / stepMs + 1
-  }
-  private val streamCensusCache =
-    scala.collection.concurrent.TrieMap.empty[String, StreamCensus]
-  private def streamCensus(spark: SparkSession, dir: String): StreamCensus =
-    streamCensusCache.getOrElseUpdate(dir, {
-      val r = Tables.events(spark, dir).agg(
-        approx_count_distinct(col("user_id")).as("u"),
-        (unix_millis(max(col("ts"))) - unix_millis(min(col("ts")))).as("span")).head()
-      // empty events ⇒ null extent: size to the rule's floor, don't NPE
-      if (r.isNullAt(1)) StreamCensus(0L, 0L)
-      else StreamCensus(r.getLong(0), r.getLong(1))
-    })
-
-  // separate memo from streamCensus: only the doc-keyed stream query
-  // needs the corpus count — folding it into the events census would
-  // bill a documents scan to whichever user/window-keyed stream query
-  // happens to run first per dir (visible under the cold-rep headline)
-  private val docCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def docCount(spark: SparkSession, dir: String): Long =
-    docCountCache.getOrElseUpdate(dir, Tables.documents(spark, dir).count())
-
-  // Per-JVM nonce in the bucketed tables' names AND (external) locations:
-  // concurrent JVMs sharing spark-warehouse/ can never clobber each
-  // other's files (the round-6 FILE_NOT_EXIST flake when two test JVMs
-  // raced on the same managed table directory). A shutdown hook removes
-  // this JVM's own directories so repeated runs don't accumulate
-  // bucketed fact-table copies (sweeping OTHER nonces' dirs would
-  // reintroduce the concurrent-JVM race the nonce exists to close; only
-  // a kill -9 leaks, bounded by one li+ord pair per crashed run).
-  private val bucketedNonce: String = {
-    val nonce = java.lang.Long.toHexString(java.lang.System.nanoTime())
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      Option(new java.io.File("target/bucketed").listFiles())
-        .foreach(_.filter(_.getName.endsWith(s"_$nonce")).foreach(rm))
-    }))
-    nonce
-  }
-
-  /** Co-located (bucketed) fact join: both tables persisted bucketed by
-    * the join key, so the sort-merge join runs with ZERO exchanges on
-    * either side — the shuffle that dominates a 100 TB fact⋈fact join is
-    * paid once at layout time and amortized over every subsequent join.
-    * The only shuffle left in the plan is the final groupBy's (asserted
-    * in PlanSpec). The `merge` hint pins SMJ so the demonstration doesn't
-    * silently degrade to a fixture-scale broadcast. */
-  private def bucketedJoinAgg(spark: SparkSession, dir: String): DataFrame = {
-    val (liTab, ordTab) = bucketedTableCache.getOrElseUpdate((spark, dir), {
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      val li = s"graft_li_${tag}_$bucketedNonce"
-      val ord = s"graft_ord_${tag}_$bucketedNonce"
-      graft.sources.Layout.writeBucketed(
-        Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-        li, "l_orderkey", numBuckets = 32, location = Some(s"target/bucketed/$li"))
-      graft.sources.Layout.writeBucketed(
-        Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
-        ord, "o_orderkey", numBuckets = 32, location = Some(s"target/bucketed/$ord"))
-      (li, ord)
-    })
-    spark.table(liTab)
-      .join(spark.table(ordTab).hint("merge"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-        count(lit(1)).as("n"))
-  }
-
-  /** 2-D range scan over the Z-ordered events layout
-    * ([[graft.sources.Layout.writeZOrdered]]): each file covers a small
-    * (user, time) rectangle, so the footer min/max stats on BOTH columns
-    * are tight and the pushed range predicates skip most row groups —
-    * the Delta/Iceberg Z-ORDER data-skipping pattern. The answer is
-    * layout-independent (the oracle filters the plain table). */
-  private def zorderRangeScan(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val path = zorderLayoutCache.getOrElseUpdate(dir, {
-      val p = s"target/zorder_layout/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.sources.Layout.writeZOrdered(ev, "user_id", "ts", p)
-      p
-    })
-    val maxUser = ev.agg(max(col("user_id")).cast("long")).head().getLong(0)
-    spark.read.parquet(path)
-      .filter(col("user_id") <= lit(maxUser / 10) &&
-        col("ts") >= lit("2024-01-05").cast("timestamp") &&
-        col("ts") < lit("2024-01-10").cast("timestamp"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-  }
-
-  /** Deterministic integer PQ (graft.index.PqFlat): all 16 codebooks
-    * trained in one relational Lloyd chain; ADC shortlist 150 → exact
-    * rerank — the oracle-checkable PQ. */
-  private def pqFlatModel(spark: SparkSession, dir: String): graft.index.PqFlat.Model =
-    pqFlatCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:pq_flat")
-      graft.index.PqFlat.fit(Tables.embeddingBase(spark, dir))
-    })
-
-  private def knnPqFlat(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("pq_flat", dir) {
-      graft.index.PqFlat.searchRerank(pqFlatModel(spark, dir),
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir), KnnK, 150)
-    }
-
-  /** Integer-PQ recall vs exact ground truth in basis points (⊕). */
-  private def recallPqFlat(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnPqFlat(spark, dir), groundTruth(spark, dir), KnnK)
-
-  // ——— OPQ-lite: variance-balanced dimension permutation for PQ ———
-
-  private val pqPermCache = scala.collection.concurrent.TrieMap.empty[String, Array[Int]]
-
-  /** Variance-BALANCED dimension permutation (the cheap core of OPQ,
-    * Ge et al. 2013: contiguous slicing concentrates high-variance dims
-    * in few subquantizers, wasting codebook entropy elsewhere): rank
-    * dims by an exact-integer dispersion on the coarsened grid
-    * (y = ⌊grid/256⌋ keeps n·Σy² inside int64), snake-deal the ranks
-    * across the 16 subspaces so each gets one dim per variance tier.
-    * The permutation is a 64-entry model artifact — a pure function of
-    * the base, replayed by the oracle. */
-  private def pqPermutation(spark: SparkSession, dir: String): Array[Int] =
-    pqPermCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:pq_perm")
-      val st = Tables.embeddingBase(spark, dir)
-        .select(posexplode(graft.index.IvfFlat.quantize(col("embedding")))
-          .as(Seq("pos", "e")))
-        .withColumn("y", expr("(e - ((e % 256 + 256) % 256)) div 256"))
-        .groupBy(col("pos"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("s1"),
-          sum(col("y") * col("y")).as("s2"))
-        .select(col("pos"),
-          (col("n") * col("s2") - col("s1") * col("s1")).as("disp"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      val m = 16
-      val ranked = st.sortBy { case (pos, disp) => (-disp, pos) }.map(_._1)
-      ranked.zipWithIndex.map { case (pos, r) =>
-        val rnd = r / m
-        val sub = if (rnd % 2 == 0) r % m else m - 1 - (r % m)
-        (sub, rnd, pos)
-      }.sortBy { case (sub, rnd, _) => (sub, rnd) }.map(_._3)
-    })
-
-  private def permuteVec(vecCol: String, perm: Array[Int]): org.apache.spark.sql.Column =
-    array(perm.toIndexedSeq.map(i => col(vecCol)(i)): _*)
-
-  private val pqPermModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.index.PqFlat.Model]
-
-  private def pqPermModel(spark: SparkSession, dir: String): graft.index.PqFlat.Model =
-    pqPermModelCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:pq_perm_codebook")
-      val perm = pqPermutation(spark, dir)
-      graft.index.PqFlat.fit(
-        Tables.embeddingBase(spark, dir)
-          .withColumn("embedding", permuteVec("embedding", perm)),
-        m = 16, ksub = 32, iters = 2)
-    })
-
-  /** PQ search through the variance-permuted layout: both sides permute
-    * (L2 is permutation-invariant when applied to both), so the whole
-    * trained/encode/ADC/rerank path is [[knnPqFlat]]'s unchanged — only
-    * the subspace CONTENTS differ. [[recallPqPerm]] measures what the
-    * balanced codebooks buy over contiguous slicing. */
-  private def knnPqPerm(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("pq_perm", dir) {
-      val perm = pqPermutation(spark, dir)
-      graft.index.PqFlat.searchRerank(
-        pqPermModel(spark, dir),
-        Tables.embeddingQueries(spark, dir)
-          .withColumn("q_embedding", permuteVec("q_embedding", perm)),
-        Tables.embeddingBase(spark, dir)
-          .withColumn("embedding", permuteVec("embedding", perm)),
-        KnnK, 150)
-    }
-
-  /** Permuted-PQ recall vs exact ground truth (⊕). */
-  private def recallPqPerm(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnPqPerm(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** PQ codebook health: per-subquantizer codeword populations and the
-    * same FAISS imbalance factor [[ivfListStats]] reports for IVF lists
-    * (nl·Σs²/n² in basis points, per sub_id). Dead or hot codewords
-    * inflate quantization error and skew the ADC join — this is the
-    * introspection that says WHEN to retrain, computed from the encoded
-    * base artifact with one aggregate. */
-  private def pqCodeStats(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = pqFlatModel(spark, dir).encodedBase
-      .groupBy(col("sub_id").cast("long").as("sub_id"),
-        col("code").cast("long").as("code"))
-      .agg(count(lit(1)).as("n_vecs"))
-    val tot = sizes.groupBy(col("sub_id")).agg(
-      sum(col("n_vecs")).as("n"),
-      sum(col("n_vecs") * col("n_vecs")).as("ss"),
-      count(lit(1)).as("nl"))
-    sizes.join(tot, Seq("sub_id"))
-      .select(col("sub_id"), col("code"), col("n_vecs"),
-        expr("(nl * ss * 10000) div (n * n)").as("imbalance_bp"))
-  }
-
-  private val fvecsCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** S1/S2 source round-trip as a checked query: export the base to the
-    * reference's `.fvecs` binary format, read it back with the
-    * binaryRecords decoder, and emit a per-record integer digest (sum of
-    * 2²⁰-grid-quantized elements). Ids in fvecs are POSITIONAL
-    * (np.arange in the reference), so the oracle re-derives them as the
-    * vec_id rank. float32 survives the round trip exactly ⇒ the digests
-    * hash-match the parquet-side replay. Writer is driver-side (a
-    * fixtures-scale exporter; a 100 TB export would write
-    * per-partition shards of the same record format). */
-  private def fvecsRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = fvecsCache.getOrElseUpdate(dir, {
-      val d = new java.io.File(s"target/fvecs_rt/${java.lang.Integer.toHexString(dir.hashCode)}")
-      deleteRecursively(d)
-      // sharded executor-side export (no driver collect): range-sorted by
-      // vec_id, one shard per partition; shard names sort in id order so
-      // the directory read reassigns the same positional ids
-      graft.sources.Fvecs.writeFvecsSharded(
-        Tables.embeddingBase(spark, dir)
-          .select(col("vec_id").as("id"), col("embedding").as("vector")),
-        d.getPath, numShards = 4)
-      d.getPath
-    })
-    graft.sources.Fvecs.readFvecs(spark, path)
-      .select(col("id"),
-        aggregate(graft.index.IvfFlat.quantize(col("vector")), lit(0L), (acc, e) => acc + e)
-          .as("qsum"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    // listFiles() returns null (not empty) on races/IO errors — skip, and
-    // let the subsequent writer surface any real problem
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
-  /** Read back an executor-side parquet sink, tolerating the empty-stream
-    * case (no part files → no inferable schema) by returning an empty
-    * frame with the declared schema instead of throwing. */
-  private[graft] def readSinkOrEmpty(spark: SparkSession, dir: java.io.File,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val hasParts = Option(dir.listFiles())
-      .exists(_.exists(_.getName.startsWith("part-")))
-    if (hasParts) spark.read.parquet(dir.getPath)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private val csvCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val jsonlCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** CSV source/sink round-trip: documents (arbitrary text — commas,
-    * quotes) written as RFC-4180 CSV (escape = doubled quote) and read
-    * back with an explicit schema, proven lossless by per-lang counts +
-    * text PolyHash sums matching the parquet-direct oracle. multiLine
-    * read keeps embedded newlines correct; note a multiLine CSV file is
-    * not splittable — at 100 TB write many files (one per task, as here)
-    * so parallelism comes from the file count, not intra-file splits. */
-  private def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = csvCache.getOrElseUpdate(dir, {
-      val p = s"target/csv_rt/${java.lang.Integer.toHexString(dir.hashCode)}"
-      Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text"))
-        .write.mode("overwrite")
-        .option("header", "true").option("escape", "\"")
-        .csv(p)
-      p
-    })
-    spark.read
-      .schema("doc_id LONG, lang STRING, text STRING")
-      .option("header", "true").option("escape", "\"").option("multiLine", "true")
-      .csv(path)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(graft.functions.PolyHash.column(col("text"), 257L, 1000000007L))
-          .as("text_hash_sum"))
-  }
-
-  /** JSONL source/sink round-trip: events re-emitted as line-delimited
-    * JSON (integer cents + epoch-ms — the lossless wire types; doubles
-    * and timestamps are normalized BEFORE serialization) and read back
-    * with an explicit schema, including a JSON-string column carried
-    * through one level of escaping. Line-delimited JSON is splittable —
-    * the 100 TB-native text format. */
-  private def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = jsonlCache.getOrElseUpdate(dir, {
-      val p = s"target/jsonl_rt/${java.lang.Integer.toHexString(dir.hashCode)}"
-      Tables.events(spark, dir).select(
-          col("event_id"), col("user_id"), col("event_type"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"),
-          expr("unix_millis(ts)").as("ts_ms"),
-          col("props"))
-        .write.mode("overwrite").json(p)
-      p
-    })
-    spark.read
-      .schema("event_id LONG, user_id LONG, event_type STRING, cents LONG, ts_ms LONG, props STRING")
-      .json(path)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("cents")).as("sum_cents"),
-        min(col("ts_ms")).as("min_ts_ms"),
-        max(col("ts_ms")).as("max_ts_ms"),
-        sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"))
-  }
-
-  private val ivfPqCache = scala.collection.concurrent.TrieMap.empty[String, graft.index.IvfPq.Model]
-
-  /** IVF+PQ (graft.index.IvfPq) — the faithful FAISS IndexIVFPQ analog
-    * (SURVEY §2.2 I2: nlist/m=16/nprobe): coarse cells SHARED with
-    * knn_ivf_flat (as FAISS shares the coarse quantizer), residual PQ
-    * codebooks, per-(query, probed-cell) ADC, shortlist 250, exact
-    * rerank. Full training replayed by the oracle (⊕). */
-  private def ivfPqModel(spark: SparkSession, dir: String): graft.index.IvfPq.Model =
-    ivfPqCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:ivfpq")
-      graft.index.IvfPq.fit(Tables.embeddingBase(spark, dir), ivfFlatModel(spark, dir))
-    })
-
-  private def knnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("ivfpq", dir) {
-      graft.index.IvfPq.search(ivfPqModel(spark, dir),
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        KnnK, nprobe = 7, shortlist = 250)
-    }
-
-  private def recallIvfPq(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnIvfPq(spark, dir), groundTruth(spark, dir), KnnK)
-
-  private val ivfPqLayoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Same IVFPQ search served from cell-partitioned parquet inverted
-    * lists: dynamic partition pruning reads only the probed cells, each
-    * holding m-byte codes — pruned AND compressed scan. One logical
-    * answer, two physical plans (shared oracle, cf. knn_ivf_flat_part). */
-  private def knnIvfPqPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val model = ivfPqModel(spark, dir)
-    val path = ivfPqLayoutCache.getOrElseUpdate(dir, {
-      val p = s"target/ivfpq_lists_layout/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.index.IvfPq.writeListsLayout(model, p)
-      p
-    })
-    graft.index.IvfPq.searchPartitioned(model, path,
-      Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-      KnnK, nprobe = 7, shortlist = 250)
-  }
-
-  private val prefixLayoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Same prefix-rerank served from the stored-prefix parquet layout:
-    * the cheap pass reads only (vec_id, prefix) — column pruning makes
-    * the physically smaller scan. One logical answer, two physical
-    * plans, shared oracle (cf. knn_ivf_flat_part). */
-  private def knnPrefixPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val path = prefixLayoutCache.getOrElseUpdate(dir, {
-      val p = s"target/prefix_layout/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.sources.Layout.writePrefixLayout(Tables.embeddingBase(spark, dir), 32, p)
-      p
-    })
-    Knn.prefixRerankStored(graft.sources.Layout.readPrefixLayout(spark, path),
-      Tables.embeddingQueries(spark, dir), KnnK, prefixDim = 32, shortlistSize = 200)
-  }
-
-  /** MIPS top-k (Knn.mipsTopK): inner-product metric — FAISS
-    * METRIC_INNER_PRODUCT, the retrieval-scorer metric (⊕). */
-  private def knnMips(spark: SparkSession, dir: String): DataFrame =
-    Knn.mipsTopK(Tables.embeddingQueries(spark, dir),
-      Tables.embeddingBase(spark, dir), KnnK)
-
-  /** Deterministic per-label stratified sample (Sampling.idBucket < 10
-    * of 100): the reproducible 10% split a 100 TB pipeline can re-derive
-    * on any engine — same Knuth-mix rule as train_test_split (⊕). */
-  private def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    Tables.table(spark, dir, "embeddings")
-      .filter(graft.operators.Sampling.idBucket(col("vec_id"), 100) < 10)
-      .select(col("vec_id"), col("label"))
-
-  /** Two-stage prefix-dim kNN (Knn.prefixRerank — Matryoshka-style
-    * adaptive retrieval): 32-of-64-dim cheap pass, shortlist 200, exact
-    * rerank. The modern scale path for trained-prefix embeddings (⊕). */
-  private def knnPrefix(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("prefix", dir) {
-      Knn.prefixRerank(Tables.embeddingQueries(spark, dir),
-        Tables.embeddingBase(spark, dir), KnnK, prefixDim = 32, shortlistSize = 200)
-    }
-
-  private def recallPrefix(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnPrefix(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** LSH kNN (SURVEY §2.2 I4/I5): Spark-first RP-LSH bucket join, 8 hash
-    * tables, bucket length 1.0 (recall 0.95-0.97 across fixtures; the
-    * MLlib-wrapper variant LshIndex.search stays covered in KnnSpec). */
-  private def knnLsh(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("lsh", dir) {
-      LshIndex.searchFast(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        KnnK, numHashTables = 8, bucketLength = 1.0, dim = 64)
-    }
-
-
-
-  /** SQ8 scalar-quantized kNN with exact rerank (shortlist 50). */
-  private def knnSq(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("sq", dir) {
-      graft.index.SqIndex.searchRerank(sqModel(spark, dir),
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir), KnnK, 50)
-    }
-
-  /** SQ8 recall vs exact ground truth, in basis points — the SQ codec is
-    * deterministic double arithmetic, so this has a full DuckDB oracle. */
-  private def recallSq(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnSq(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** Binary-quantization kNN: 1-bit sign encoding against per-dim integer
-    * thresholds, Hamming (popcount) shortlist 100, exact re-rank — see
-    * [[graft.index.BqIndex]]. */
-  private def knnBq(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("bq", dir) {
-      graft.index.BqIndex.search(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        KnnK, shortlist = 100)
-    }
-
-  /** BQ recall vs exact ground truth, in basis points — thresholds, bits
-    * and Hamming ranks are all integer, so the full index replays. */
-  private def recallBq(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnBq(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** M1 recall with a full DuckDB oracle: predictions from a degraded base
-    * (every 3rd vector dropped) scored against exact ground truth. */
-  private def recallDegraded(spark: SparkSession, dir: String): DataFrame = {
-    val queries = Tables.embeddingQueries(spark, dir)
-    val base = Tables.embeddingBase(spark, dir)
-    val degraded = base.filter(col("vec_id") % 3 =!= 0)
-    Recall.recallBasisPoints(Knn.exact(queries, degraded, KnnK), Knn.exact(queries, base, KnnK), KnnK)
-  }
-
-
-  /** LSH recall vs exact ground truth in basis points (threshold ≥ 0.7
-    * per BASELINE ladder) — hash-sign projections are exact integer
-    * constructions, so this has a full DuckDB oracle too. */
-  private def recallLsh(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnLsh(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** D1-D4 + the reference's delete∘insert=identity invariant (SURVEY §5):
-    * delete 50% of the base (odd ids) via anti-join, re-insert via union,
-    * search — results must hash-match the untouched-base oracle. */
-  private def knnUpdateIdentity(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    val odd = base.filter(col("vec_id") % 2 === 1)
-    val cycled = Snapshots.insert(Snapshots.deleteByIds(base, odd), odd)
-    Knn.exact(Tables.embeddingQueries(spark, dir), cycled, KnnK)
-  }
-
-  /** Update-fraction sweep over the delete∘insert identity: the server
-    * scripts test 25% and 75% update loads (dynamic_script_redis.py:109,
-    * dynamic_script_milvus.py:59); this runs the cycle at {25, 50, 75}%
-    * of the id range and fingerprints each post-cycle snapshot (count +
-    * two id moments + an embedding-derived integer term). The oracle
-    * computes the SAME fingerprints on the untouched base table — so a
-    * hash match IS the identity invariant, at every tested fraction.
-    * The fingerprint floats stay exact: float32 → double is lossless and
-    * ×1000/floor is the fixed IEEE sequence both engines share. */
-  private def updateFractionSweep(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    val n = base.agg(max(col("vec_id"))).head().getLong(0) + 1
-    Seq(25L, 50L, 75L).map { pct =>
-      val cutoff = n * (100 - pct) / 100
-      Snapshots.deleteInsertCycle(base, cutoff)
-        .agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("vec_id")).as("id_sum"),
-          sum(col("vec_id") * col("vec_id")).as("id_sq_sum"),
-          sum(floor(element_at(col("embedding"), 1).cast("double") * 1000 + 0.5)
-            .cast("long")).as("e0_milli_sum"))
-        .select(lit(pct).as("update_pct"), col("n_rows"), col("id_sum"),
-          col("id_sq_sum"), col("e0_milli_sum"))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** M5: mean of the last 5 events per user (tail-window summary). */
-  private def metricsTail(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.tailSummary(
-      Tables.events(spark, dir), col("user_id"), Seq(col("ts"), col("event_id")), col("value"), 5)
-
-  /** M6: mean of the first 5 events per user (head-window summary). */
-  private def metricsHead(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.headSummary(
-      Tables.events(spark, dir), col("user_id"), Seq(col("ts"), col("event_id")), col("value"), 5)
-
-  /** M7: cross-client aggregation over event_type. */
-  private def multiTenantAgg(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.crossClientAgg(Tables.events(spark, dir), col("event_type"), col("value"))
-
-  /** The reference's headline scaling artifact — the {10..50}-client
-    * sweep (multi_tenant_script.py:121-180, plots/scaling_behavior.pdf) —
-    * as a deterministic replay: for each client count the event stream is
-    * dealt to clients by `user_id % n` (the reference's round-robin query
-    * assignment), per-client load integrals stand in for the wall-clock
-    * metrics (latency→cents, qps→rows, recall→hit ratio in bps), and the
-    * curve is the M7 aggregate per (backend, num_clients). Integer
-    * arithmetic end to end so any engine replays it exactly.
-    *
-    * Scale shape: the 5× client-count amplify feeds straight into a
-    * map-side-combined two-level aggregate — one shuffle keyed
-    * (backend, num_clients, client), output bounded by
-    * 5·|backends|·max(n) rows. */
-  private def multiTenantCurve(spark: SparkSession, dir: String): DataFrame = {
-    val perClient = Tables.events(spark, dir)
-      .select(col("event_type").as("backend"), col("user_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("num_clients", explode(lit(Array(10, 20, 30, 40, 50))))
-      // % not pmod: the oracle's % takes the dividend's sign, and the two
-      // would deal a negative user_id to different clients
-      .withColumn("client", col("user_id") % col("num_clients"))
-      .groupBy(col("backend"), col("num_clients"), col("client"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"),
-        sum(when(col("cents") % 5 === 0, 1L).otherwise(0L)).as("hits"))
-      .withColumn("recall_bps", expr("(10000 * hits) div n_rows"))
-    perClient.groupBy(col("backend"), col("num_clients"))
-      // FLOOR division for the one mean whose numerator can go negative
-      // (cents): Spark's `div` truncates toward zero while the oracle's
-      // `//` floors — they agree only for non-negative dividends, so the
-      // sign-stable (s − pmod(s, n)) div n form keeps the replay
-      // engine-exact for ANY input. The other means divide provably
-      // non-negative counts/bps, where div == floor.
-      .agg(expr("(sum(sum_cents) - pmod(sum(sum_cents), count(1))) div count(1)")
-          .as("mean_latency_cents"),
-        expr("sum(n_rows) div count(1)").as("mean_qps_rows"),
-        sum(col("n_rows")).as("sum_qps_rows"),
-        expr("sum(recall_bps) div count(1)").as("mean_recall_bps"))
-  }
-
-  /** S6 twin of [[multiTenantCurve]] — the scaling_behavior chart itself
-    * (multi_tenant_script.py:195-206): one line per backend, x = client
-    * count, y = PER-CLIENT throughput (the quantity whose decline with
-    * client count is the reference's scaling finding; the aggregate sum
-    * is constant in n by construction), rendered through the same
-    * deterministic SVG pipeline as `svg_interval_chart`. */
-  private def svgTenantCurveChart(spark: SparkSession, dir: String): DataFrame =
-    SvgPlot.multiSeriesChart(
-      multiTenantCurve(spark, dir),
-      col("backend"), col("num_clients").cast("long"), col("mean_qps_rows"),
-      title = "Per-client QPS vs Client Count", xlabel = "Clients", ylabel = "QPS")
-
-  /** The same scaling chart in the reference's ACTUAL artifact format
-    * (multi_tenant_script.py:190-202 saves scaling_behavior via
-    * matplotlib): [[multiTenantCurve]] rendered through the
-    * deterministic PDF sink. */
-  private def pdfTenantCurveChart(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.PdfPlot.multiSeriesPdf(
-      multiTenantCurve(spark, dir),
-      col("backend"), col("num_clients").cast("long"), col("mean_qps_rows"),
-      title = "Per-client QPS vs Client Count", xlabel = "Clients", ylabel = "QPS")
-
-  /** M8/M9: sentinel-region pairing — each signup paired with the user's
-    * next purchase. */
-  private def eventRegions(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.regionPairs(
-      Tables.events(spark, dir), col("user_id"), col("ts"), col("event_id"),
-      col("event_type"), "signup", "purchase")
-
-  /** Gap-based sessionization (30-minute gap) over the event stream. */
-  private def sessionizeEvents(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.sessionize(
-      Tables.events(spark, dir), col("user_id"), col("ts"), col("event_id"), 30L * 60 * 1000)
-
-  /** Built-in event-time session windows (session_window, 30-min gap),
-    * aggregated per session — the Spark-native sibling of the
-    * window-function sessionize. Timestamps are floored to MILLISECONDS
-    * before windowing so the gap comparison happens in the same ms
-    * domain the oracle replays (sub-ms fixture precision would otherwise
-    * split sessions at gaps the ms math calls equal). */
-  private def sessionWindows(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("user_id"), timestamp_millis(unix_millis(col("ts"))).as("ts"))
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_millis(col("sw.start")).as("start_ms"),
-        unix_millis(col("sw.end")).as("end_ms"),
-        col("n_events"))
-
-  /** Range (band) join via bucketed co-location (Joins.bandPairs): for
-    * each click event, how many OTHER-user events land within ±5 min —
-    * the theta-join the reference never needs but a sessionized event
-    * store does constantly. The bucket join keeps it a hash join at any
-    * scale; left join + count preserves zero-match clicks. */
-  private def rangeJoinEvents(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("tms"))
-    val clicks = Tables.events(spark, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("tms"))
-    graft.operators.Joins.bandPairs(clicks, ev, "tms", 300000L)
-      .groupBy(col("event_id"))
-      .agg(sum(when(col("r_user_id") =!= col("user_id"), 1L).otherwise(0L)).as("n_nearby"))
-  }
-
-  /** D1 existence-guarded upsert (Snapshots.insert dedupe=true — the
-    * Redis `HSET`-if-absent pattern, dynamic_script_redis.py:49-55):
-    * re-inserting an overlapping slice must not duplicate ids. */
-  private def upsertGuard(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.table(spark, dir, "embeddings")
-      .filter(col("vec_id") % 20 =!= 0).select(col("vec_id"), col("label"))
-    val updates = Tables.table(spark, dir, "embeddings")
-      .filter(col("vec_id") % 10 === 0).select(col("vec_id"), col("label"))
-    graft.operators.Snapshots.insert(base, updates, "vec_id", dedupe = true)
-  }
-
-  /** S4→S5 round-trip: synthesize the reference's interval-log lines from
-    * events, then regex-parse them back to typed columns. */
-  private def logRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val metrics = Tables.events(spark, dir).select(
-      col("event_id").cast("int").as("interval"),
-      col("value").as("qps"),
-      (col("value") * 2).as("latency_ms"),
-      (col("value") / 100).as("recall"))
-    MetricLogs.parseLines(MetricLogs.formatLines(metrics))
-  }
-
-  /** S6 plot sink, chart 1 (plots.py:47-95): multi-series interval line
-    * chart rendered as a deterministic SVG document. Series = event_type
-    * (the reference's per-db lines), x = interval 1..5 (`event_id % 5 + 1`,
-    * the reference's first-5-intervals slice), y = value in basis points.
-    * Every coordinate is integer pixel math the oracle replays exactly. */
-  private def svgIntervalChart(spark: SparkSession, dir: String): DataFrame =
-    SvgPlot.multiSeriesChart(
-      Tables.events(spark, dir),
-      col("event_type"),
-      (pmod(col("event_id"), lit(5L)) + 1L).cast("long"),
-      floor(col("value") * 100).cast("long"),
-      title = "Value over First 5 Intervals", xlabel = "Interval", ylabel = "Value bp")
-
-  /** S6 in the reference's ACTUAL artifact format (plots.py:93-95 writes
-    * PDFs): the interval chart as a complete deterministic vector PDF —
-    * see [[graft.sources.PdfPlot]]. The oracle rebuilds the document
-    * byte-for-byte: path ops from the same integer pixel math, object 4's
-    * /Length, the xref offsets and startxref from part-length arithmetic. */
-  private def pdfIntervalChart(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.PdfPlot.multiSeriesPdf(
-      Tables.events(spark, dir),
-      col("event_type"),
-      (pmod(col("event_id"), lit(5L)) + 1L).cast("long"),
-      floor(col("value") * 100).cast("long"),
-      title = "Value over First 5 Intervals", xlabel = "Interval", ylabel = "Value bp")
-
-  /** The dual-axis QPS/latency figure (logs/plot.py:39-70) in the
-    * reference's actual PDF format — same inputs as
-    * [[svgQpsLatencyChart]], rendered by [[graft.sources.PdfPlot.dualAxisPdf]]
-    * (region fills painted under the two stroked paths). */
-  private def pdfQpsLatencyChart(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val rows = ev.select(
-      unix_millis(col("ts")).as("x"),
-      floor(col("value") * 100).cast("long").as("abp"),
-      floor(col("value") * 200).cast("long").as("bbp"))
-    val regions = MetricsAnalytics.regionPairs(
-        ev, col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        "signup", "purchase")
-      .orderBy((col("end_ms") - col("start_ms")).desc, col("start_ms"),
-        col("start_event_id"))
-      .limit(3)
-      .select(col("start_ms").as("xs"), col("end_ms").as("xe"))
-    graft.sources.PdfPlot.dualAxisPdf(rows, regions,
-      title = "QPS and Latency with Phase Regions", xlabel = "Time ms",
-      ylabel = "QPS bp", y2label = "Latency bp",
-      aLabel = "QPS", bLabel = "Latency", regionLabel = "Phase")
-  }
-
-  /** S6 plot sink, chart 2 (logs/plot.py:39-70): dual-axis QPS/latency
-    * chart over event time with shaded phase regions — QPS (value) and
-    * latency (2·value) share the x axis but scale independently (the
-    * twinx axes), and the 3 longest signup→purchase spans (M9
-    * regionPairs) shade as full-height rects, the axvspan regions. */
-  private def svgQpsLatencyChart(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val rows = ev.select(
-      unix_millis(col("ts")).as("x"),
-      floor(col("value") * 100).cast("long").as("abp"),
-      floor(col("value") * 200).cast("long").as("bbp"))
-    val regions = MetricsAnalytics.regionPairs(
-        ev, col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        "signup", "purchase")
-      .orderBy((col("end_ms") - col("start_ms")).desc, col("start_ms"),
-        col("start_event_id"))
-      .limit(3)
-      .select(col("start_ms").as("xs"), col("end_ms").as("xe"),
-        lit("phase").as("cls"))
-    SvgPlot.dualAxisChart(rows, regions,
-      title = "QPS and Latency with Phase Regions", xlabel = "Time ms",
-      ylabel = "QPS bp", y2label = "Latency bp",
-      aLabel = "QPS", bLabel = "Latency", regionLabel = "Phase")
-  }
-
-  /** Temporal as-of join: each click matched to the user's latest signup
-    * at or before it (composed union+window — no range cross-product). */
-  private def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"),
-        col("event_id").as("signup_id"), col("value").as("signup_value"))
-    Joins.asOf(clicks, signups, "user_id", "ts", Seq("signup_id", "signup_value"))
-      .select(
-        col("event_id"), col("user_id"),
-        // sentinel for clicks before any signup: avoids engine-specific
-        // null-hashing differences in the oracle compare
-        coalesce(col("signup_id"), lit(-1L)).as("signup_id"),
-        coalesce(col("signup_value"), lit(-1.0)).as("signup_value"))
-  }
-
-  /** Winnowing fingerprint summary per document (rolling-hash k-grams,
-    * sliding-window min — candidate keys for plagiarism-style near-dup).
-    * min_fp −1-sentineled for sub-k-length docs (engine-neutral null). */
-  private def docWinnow(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Dedup.winnowFingerprints(Tables.documents(spark, dir), "doc_id", "text")
-      .select(col("doc_id"), size(col("fps")).as("n_fps"),
-        coalesce(array_min(col("fps")), lit(-1L)).as("min_fp"))
-
-  /** JSON prop extraction + aggregation over the event stream. */
-  private def eventProps(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Text quality / token statistics (LLM-pipeline text analysis). */
-  private def textStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      TextFunctions.tokenCount(t).as("n_tokens"),
-      TextFunctions.distinctTokenCount(t).as("n_distinct"),
-      TextFunctions.avgTokenLen(t).as("avg_token_len"),
-      TextFunctions.stopwordRatio(t, TextFunctions.LangStopwords.head._2).as("stopword_ratio"),
-      TextFunctions.bpeTokenCount(t).as("n_bpe_tokens"))
-  }
-
-  /** Language-ID heuristic over documents. */
-  private def langId(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"), TextFunctions.langId(col("text")).as("pred_lang"))
-
-  /** Corpus term frequency: top-20 words by document frequency — the
-    * explode-aggregate text shape (vocabulary building). */
-  private def topWords(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(array_distinct(TextFunctions.tokens(col("text")))).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("df"))
-      .orderBy(col("df").desc, col("word"))
-      .limit(20)
-
-  /** TF-IDF per (doc, word) for the corpus top terms: tf = in-doc count,
-    * idf = ln(N / df). Two aggregations + a broadcast join. */
-  private def tfidf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val n = docs.select(countDistinct(col("doc_id")).as("n_docs"))
-    val terms = docs
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("word"))
-    val tf = terms.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    // df is vocabulary-sized — unbounded at corpus scale, so no broadcast
-    // hint (AQE broadcasts at runtime when it measures small)
-    tf.join(df, Seq("word"))
-      .crossJoin(broadcast(n))
-      .filter(col("df") >= 50) // corpus-common terms: keeps output bounded
-      .select(
-        col("doc_id"), col("word"),
-        round(col("tf") * log(col("n_docs").cast("double") / col("df")), 4).as("tfidf"))
-  }
-
-  /** Semantic group-by (SURVEY §7 M8): element-wise centroid of the
-    * embedding vectors per label, emitted long-form (label, pos, avg). */
-  private def labelCentroids(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "e")))
-      .groupBy(col("label"), col("pos"))
-      // quantized to int with floor(x·1e4 + .5): engines disagree on
-      // round()'s half-rule (HALF_UP vs half-even), floor is rule-free
-      .agg(floor(avg(col("e").cast("double")) * 10000 + 0.5).cast("long").as("avg_q"))
-
-  /** Quality filter — the C4-style document gate: token-count range +
-    * minimum alphabetic ratio, emitting pass/fail per doc. */
-  private def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      (TextFunctions.tokenCount(t).between(10, 1000) &&
-        (TextFunctions.avgTokenLen(t) >= lit(2.0)) &&
-        (TextFunctions.distinctTokenCount(t) >= lit(5))).as("pass"))
-  }
-
-  /** Full corpus-curation pipeline (quality gate → exact dedup → blocked
-    * near-dup kill → language tag) — the deterministic oracle variant;
-    * the MinHash variant is exercised in CorpusPipelineSpec. */
-  private def corpusCurate(spark: SparkSession, dir: String): DataFrame =
-    graft.text.CorpusPipeline.curate(
-      Tables.documents(spark, dir),
-      graft.text.CorpusPipeline.Config(minhashShingle = 1, nearDupThreshold = 0.8),
-      graft.text.CorpusPipeline.BlockedKill(Seq("lang", "source")))
-      .select(col("doc_id"), col("pred_lang"), col("n_tokens"))
-
-  /** Deterministic hash-based train/test split counts per label. */
-  private def trainTestSplit(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.trainTestSplit(
-      Tables.embeddings(spark, dir), "vec_id", trainPct = 80)
-      .groupBy(col("label"), col("split"))
-      .agg(count(lit(1)).as("n"))
-
-  /** BM25 lexical retrieval: top-10 documents for a fixed term query. */
-  private def bm25TopK(spark: SparkSession, dir: String): DataFrame =
-    graft.text.TextRank.bm25TopK(
-      Tables.documents(spark, dir), Seq("spark", "join", "query"), 10)
-
-  /** Reciprocal-rank fusion of two lexical rankings (BM25 and raw TF) —
-    * the hybrid-retrieval combiner, rank ties broken deterministically. */
-  private def rrfFuse(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val terms = Seq("spark", "join", "query")
-    val byBm25 = graft.text.TextRank.bm25(docs, terms)
-    val byTf = docs
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
-      .filter(col("term").isin(terms: _*))
-      .groupBy(col("doc_id")).agg(count(lit(1)).cast("double").as("score"))
-    graft.text.TextRank.rrfFuse(Seq(byBm25, byTf))
-  }
-
-  /** Hybrid search: lexical BM25 over documents fused (RRF) with a
-    * cosine vector ranking over embeddings on the shared id space — the
-    * headline query of the reference's server backends (Weaviate hybrid,
-    * Redis FT.SEARCH KNN+filter, Milvus). Query = 3 terms + the vec_id-0
-    * embedding. */
-  private def hybridSearch(spark: SparkSession, dir: String): DataFrame =
-    // memoized per dir (r10): the fused list has TWO consumers now —
-    // the query itself and hybrid_rerank's shortlist — the same
-    // search-once-score-on-it lifecycle as the recall pairs
-    memoSearch("hybrid_search", dir) {
-      val docs = Tables.documents(spark, dir)
-      val byBm25 = graft.text.TextRank.bm25(docs, Seq("spark", "join", "query"))
-      val emb = Tables.table(spark, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_embedding"))
-      val byVec = emb.crossJoin(broadcast(qv))
-        .select(col("vec_id").as("doc_id"),
-          graft.functions.VectorFunctions.cosine(col("q_embedding"), col("embedding")).as("score"))
-      graft.text.TextRank.rrfFuse(Seq(byBm25, byVec))
-    }
-
-  /** Connected components over the blocked near-dup pair graph — the
-    * transitive-closure dedup-cluster operator; oracled against a DuckDB
-    * recursive CTE (undirected reachability → min label per component). */
-  private def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // the ≥0.8 subset of the memoized 0.5-threshold pair scan — pairs
-    // are found once and re-scored (see ngramPairs)
-    val pairs = ngramPairs(spark, dir).filter(col("jaccard_bp") >= 8000L)
-    graft.text.Dedup.duplicateClusters(pairs.select(col("id_a"), col("id_b")))
-  }
-
-  /** Threshold-tuning profile: the distribution of exact pair Jaccard
-    * over the memoized ≥0.5 candidate scan, bucketed at 500 bp — the
-    * histogram an operator reads BEFORE choosing a dedup cutoff (a τ in
-    * a valley keeps clusters stable; a τ on a mode makes borderline
-    * pairs flap between runs). Zero new pair scans. */
-  private def jaccardThresholdProfile(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs(spark, dir)
-      .select(expr("(jaccard_bp div 500) * 500").as("bucket_bp"))
-      .groupBy(col("bucket_bp")).agg(count(lit(1)).as("n_pairs"))
-
-  /** Duplication provenance: near-dup pair counts by (source, source)
-    * — which feeds copy from which (mirror sites, syndication). Sources
-    * are unordered in a pair, so the key is (lo, hi). */
-  private def dedupRateBySource(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    ngramPairs(spark, dir)
-      .join(src.select(col("doc_id").as("id_a"), col("source").as("sa")), Seq("id_a"))
-      .join(src.select(col("doc_id").as("id_b"), col("source").as("sb")), Seq("id_b"))
-      .select(least(col("sa"), col("sb")).as("source_lo"),
-        greatest(col("sa"), col("sb")).as("source_hi"))
-      .groupBy(col("source_lo"), col("source_hi"))
-      .agg(count(lit(1)).as("n_pairs"))
-  }
-
-  /** Near-dup-aware (LEAKAGE-SAFE) train/test split: the split unit is
-    * the duplicate CLUSTER, not the document — a test doc whose
-    * near-duplicate sits in train is benchmark contamination by
-    * construction. Every doc takes its component's min-id
-    * representative ([[dedupClusters]]; unclustered docs represent
-    * themselves) and the deterministic Knuth id-hash routes the
-    * REPRESENTATIVE, so an entire cluster lands on one side — asserted
-    * as an invariant in EdgeCaseSpec. Same 80/20 rule as
-    * `train_test_split`, upgraded with the dedup artifact. */
-  private def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val comp = dedupClusters(spark, dir)
-      .select(col("id").as("doc_id"), col("component"))
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("component"))
-      .withColumn("split",
-        when(graft.operators.Sampling.idBucket(col("component"), 100) < 80,
-          lit("train")).otherwise(lit("test")))
-  }
-
-  /** The practical OUTPUT of the dedup family: a per-document keep/drop
-    * decision. Duplicate clusters ([[dedupClusters]] — transitive
-    * closure of the ≥0.8-Jaccard pair graph) each elect ONE canonical
-    * representative by quality (the [[qualityScoreLinear]] linear score,
-    * ties to the lower id); unclustered docs are their own component and
-    * keep themselves. One left join + one component-keyed window — the
-    * cluster table is duplicate-sized, not corpus-sized. */
-  private def dedupKeepList(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val t = col("text")
-    val enStop = graft.text.TextFunctions.LangStopwords.head._2
-    val score = lit(3L) * TextFunctions.tokenCount(t) +
-      lit(20L) * TextFunctions.stopwordCount(t, enStop) -
-      lit(5L) * length(regexp_replace(t, "[a-zA-Z0-9\\s]", ""))
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), score.cast("long").as("score"))
-    val clusters = dedupClusters(spark, dir)
-      .withColumnRenamed("id", "doc_id")
-    val full = scored.join(clusters, Seq("doc_id"), "left")
-      .withColumn("component", coalesce(col("component"), col("doc_id")))
-    val w = Window.partitionBy(col("component"))
-      .orderBy(col("score").desc, col("doc_id"))
-    full.withColumn("keep", row_number().over(w) === 1)
-      .select(col("doc_id"), col("component"), col("score"), col("keep"))
-  }
-
-  /** Rare-token familiarity: per doc, the share of token OCCURRENCES
-    * whose corpus document-frequency is < 5 — an integer-portable
-    * out-of-vocabulary/quality signal (the engine-checkable stand-in for
-    * float LM perplexity, whose libm logs don't replay bit-for-bit
-    * across engines). Two shuffles at any scale: one df aggregate keyed
-    * by token, one token-keyed join back + per-doc aggregate. */
-  private def rareTokenStats(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(graft.text.TextFunctions.tokens(col("text"))).as("tok"))
-    val df = toks.groupBy(col("tok"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    toks.join(df, Seq("tok"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("df") < 5, 1L).otherwise(0L)).as("n_rare"))
-      .select(col("doc_id"), col("n_tokens"), col("n_rare"),
-        expr("n_rare * 10000 div n_tokens").as("rare_bp"))
-  }
-
-  /** PII redaction pass (emails / long digit runs) with redacted-text
-    * fingerprint — the scrubbing stage of a training-data pipeline. */
-  private def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.piiRedact(Tables.documents(spark, dir), "doc_id", "text")
-
-  /** Pseudo-relevance-feedback size knobs, shared with the oracle:
-    * top-[[PrfFeedbackDocs]] BM25 hits feed the expansion, the
-    * top-[[PrfExpansionK]] non-seed terms (capped tf mass, length ≥ 4)
-    * join the query, and the expanded query re-retrieves. */
-  private val PrfFeedbackDocs = 10
-  private val PrfExpansionK = 5
-
-  /** BM25 with pseudo-relevance-feedback query EXPANSION (RM3-style,
-    * Abdul-Jaleel et al. TREC 2004 — the classic two-pass retrieval
-    * move): retrieve with the seed terms, mine the top feedback docs
-    * for the strongest co-occurring terms, re-retrieve with the
-    * expanded query. The expansion statistic is frozen-integer
-    * (Σ min(tf, 3) over feedback docs, ties by term) so the term choice
-    * replays exactly; the scoring passes are the proven `bm25_topk`
-    * machinery. The expansion set is a [[PrfExpansionK]]-row driver
-    * solve (metadata-sized, the IVF-centroid precedent). Scale: two
-    * linear retrieval passes + one feedback-doc-bounded term aggregate. */
-  private def bm25Prf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val fb = graft.text.TextRank.bm25TopK(docs, HybridTerms, PrfFeedbackDocs)
-      .select(col("doc_id"))
-    val expTerms = docs.join(fb, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
-      .filter(length(col("term")) >= 4 && !col("term").isin(HybridTerms: _*))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .groupBy(col("term")).agg(sum(least(col("tf"), lit(3L))).as("w"))
-      .orderBy(col("w").desc, col("term")).limit(PrfExpansionK)
-      .collect().map(_.getString(0)).toSeq
-    graft.text.TextRank.bm25TopK(docs, HybridTerms ++ expTerms, PrfFeedbackDocs)
-  }
-
-  /** Context-window chunking: 128-token windows, stride 64. */
-  private def docChunks(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.chunk(Tables.documents(spark, dir), "doc_id", "text")
-
-  /** Gopher-style repetition signals + verdict per doc. */
-  private def repetitionStats(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.repetitionStats(Tables.documents(spark, dir), "doc_id", "text")
-
-  /** Benchmark-contamination scan: docs with doc_id ≡ 7 (mod 20) act as
-    * the held-out benchmark; count training docs sharing an 8-gram. */
-  private def contaminationScan(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.contamination(Tables.documents(spark, dir), "doc_id", "text",
-      col("doc_id") % 20 === 7)
-
-  /** Quantized-cosine threshold of the embedding decontamination screen
-    * (floor(cos·10⁹) ≥ this ⇒ contaminated): 0.35, the same rung the
-    * SemDeDup prune uses on these fixtures — high enough that the
-    * weakly-correlated synthetic corpus yields a sparse nonzero tail,
-    * low enough that a planted paraphrase (near-identical embedding)
-    * cannot slip under it. Shared with the oracle via interpolation. */
-  private val ContaminationEmbThresholdQ = 350000000L
-
-  /** Embedding-level decontamination
-    * ([[graft.text.Curation.contaminationEmbedding]]): the paraphrase
-    * screen over the SAME held-out convention as the 8-gram scan
-    * (id ≡ 7 mod 20 = the benchmark slice). */
-  private def contaminationEmbeddingScan(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.contaminationEmbedding(
-      Tables.embeddings(spark, dir), "vec_id", "embedding",
-      col("vec_id") % 20 === 7, ContaminationEmbThresholdQ)
-
-  /** Domain mixing: deterministic hash-priority downsample to ≤5 docs
-    * per (lang, source) cell. */
-  private def domainMix(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.domainMix(Tables.documents(spark, dir), "doc_id",
-      Seq("lang", "source"), cap = 5)
-
-  /** Water-filling token-budget allocation across sources
-    * ([[graft.text.Curation.tokenBudgetAllocation]]): half the corpus'
-    * tokens, split equally with capacity caps and redistribution. */
-  private def tokenBudgetMix(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.tokenBudgetAllocation(
-      Tables.documents(spark, dir), "source", "text", budgetPctBps = 5000)
-
-  /** Temperature-based language resampling (τ = 1/2) — see
-    * [[graft.text.Curation.temperatureMix]]: low-resource languages
-    * upsampled relative to their natural share, exact int64 quotas. */
-  private def temperatureMixQ(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.temperatureMix(Tables.documents(spark, dir), "lang")
-
-  /** Exact + bag-of-words fingerprints per document. */
-  private def docFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      TextFunctions.fingerprint(col("text")).as("fp"),
-      TextFunctions.bagFingerprint(col("text")).as("bag_fp"))
-
-  /** Exact dedup groups by normalized-text hash. */
-  private def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exact(Tables.documents(spark, dir), "doc_id", "text")
-
-  /** Blocked n-gram Jaccard near-dup pairs (same lang+source block). */
-  private def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs(spark, dir)
-
-  /** Exact substring dedup (Lee et al. 2021 criterion): pairs of docs
-    * sharing a contiguous run of ≥ 20 tokens, found by position-aware
-    * 12-token window hashing + diagonal gaps-and-islands — see
-    * [[graft.text.Dedup.substringSpans]]. */
-  private def substringDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.substringSpans(Tables.documents(spark, dir), "doc_id", "text",
-      windowTokens = 12, minSpanTokens = 20, dfCap = 50L)
-
-  /** MinHash-LSH near-dup pairs (3-word shingles, 16 hashes, 4 bands,
-    * verified Jaccard). Word-level shingles=1 admits far too many
-    * candidates on the vocabulary-dense synthetic corpus; 3-gram shingles
-    * keep banding selective — the scale-correct configuration. */
-  private def minhashNearDup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minHashNearDup(Tables.documents(spark, dir), "doc_id", "text",
-      shingleSize = 3, numHashes = 16, numBands = 4, threshold = 0.5)
-
-  /** Measured quality of the MinHash-LSH candidate generator: recall of
-    * [[minhashNearDup]]'s verified pairs against EXACT ground truth from
-    * the prefix-filtered set-similarity join
-    * ([[graft.text.Dedup.setSimJoin]], same 3-gram shingle domain, same
-    * τ = 0.5). Precision is 1 by construction (candidates are
-    * exact-verified); recall is what the 16-hash/4-band config actually
-    * buys — the "measure, don't guess" number that justifies (or
-    * indicts) a banding schedule before it runs on 100 TB. */
-  /** Exact Jaccard ≥ 0.5 pairs on the 3-gram domain, memoized per dir —
-    * the shared ground truth both banding-quality queries
-    * ([[lshQuality]], [[simhashQuality]]) score against; computed once
-    * per session like the kNN ground truth. */
-  private def setSimGt3(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("setsim_gt3", dir) {
-      Dedup.setSimJoin(Tables.documents(spark, dir), "doc_id", "text",
-        thresholdBps = 5000, shingleSize = 3).select(col("id_a"), col("id_b"))
-    }
-
-  private def lshQuality(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val gt = setSimGt3(spark, dir)
-    val found = Dedup.minHashNearDup(docs, "doc_id", "text",
-      shingleSize = 3, numHashes = 16, numBands = 4, threshold = 0.5)
-      .select(col("id_a"), col("id_b"))
-    gt.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(found.agg(count(lit(1)).as("n_found")))
-      .crossJoin(gt.join(found, Seq("id_a", "id_b"), "left_semi")
-        .agg(count(lit(1)).as("n_hits")))
-      .select(col("n_exact"), col("n_found"),
-        when(col("n_exact") > 0, expr("(n_hits * 10000) div n_exact"))
-          .otherwise(lit(10000L)).as("recall_bp"))
-  }
-
-  /** Incremental-ingestion dedup ([[graft.text.Dedup.minHashNearDupAgainst]]):
-    * every 4th document plays the arriving increment, the rest the
-    * standing corpus. */
-  private def incrementalNearDup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minHashNearDupAgainst(Tables.documents(spark, dir), "doc_id", "text",
-      isNew = col("doc_id") % 4 === 0,
-      shingleSize = 3, numHashes = 16, numBands = 4, threshold = 0.5)
-
-  /** Streaming MinHash near-dup run END-TO-END by the streaming engine:
-    * continuous-ingestion dedup where each arriving doc is checked
-    * against the prior docs sharing a banded signature bucket
-    * (flatMapGroupsWithState keyed by band bucket — state tracks bucket
-    * occupancy, not the corpus). Same portable hash pipeline as the
-    * batch operator, so the emitted pairs ARE the batch pairs
-    * (StreamingSpec proves cross-micro-batch equality); a pair
-    * colliding in several bands emits once per band, so the registered
-    * output dedupes — and then shares minhash_neardup's oracle. */
-  private def streamMinhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val ds = spark.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-      .select(col("doc_id"), col("text"))
-      .as[graft.streaming.StreamingMetrics.DocIn]
-    val sink = "stream_neardup_" + java.lang.Integer.toHexString(dir.hashCode)
-    // band-bucket-keyed state: ≤ numBands × corpus docs distinct keys
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        docCount(spark, dir) * 4)) {
-      val q = graft.streaming.StreamingMetrics
-        .nearDupStream(ds, shingleSize = 3, numHashes = 16, numBands = 4, threshold = 0.5)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink).distinct()
-  }
-
-  /** SimHash near-dup pairs (banded 16-bit chunks, hamming ≤ 3). */
-  private def simhashNearDup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simHashNearDup(Tables.documents(spark, dir), "doc_id", "text", maxHamming = 3)
-
-  /** Embedding-cosine near-dup pairs (brute; LSH variant in Dedup). */
-  private def embeddingNearDup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDup(Tables.embeddings(spark, dir), "vec_id", "embedding", 0.35)
-
-  /** Multimodal metadata pass over text-as-payload media rows. */
-  private def multimodalMeta(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Multimodal.mediaMeta(
-      graft.multimodal.Multimodal.asMediaTable(
-        Tables.documents(spark, dir), "doc_id", "text", "text/plain"))
-
-  /** Multimodal frame sampling: 256-byte frames, stride 192, one digest
-    * row per frame (stub decode = byte slicing; plumbing is real). The
-    * payload is ASCII-sanitized on BOTH sides (DuckDB cannot slice
-    * blobs, so its oracle windows by character — projecting each
-    * non-ASCII codepoint to '?' makes byte and character windows
-    * provably identical for any fixture, not just today's). */
-  private def multimodalFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Multimodal.frameSample(
-      graft.multimodal.Multimodal.asMediaTable(
-        Tables.documents(spark, dir)
-          .withColumn("text", regexp_replace(col("text"), "[^\\x00-\\x7F]", "?")),
-        "doc_id", "text", "text/plain"))
-
-  /** Multimodal feature extraction (integer stub featurizer — the
-    * oracle-checkable pseudo-embedding; ASCII-sanitized payloads as in
-    * multimodal_frames so DuckDB's per-codepoint replay equals the
-    * byte-level pass). */
-  // exploded to (media_id, dim_idx, feature) scalar rows: the checked
-  // output must be sortable by the harness's canonicalizer (raw array
-  // columns are not), and exploded rows carry the same information
-  private def multimodalEmbed(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Multimodal.extractIntFeatures(
-      graft.multimodal.Multimodal.asMediaTable(
-        Tables.documents(spark, dir)
-          .withColumn("text", regexp_replace(col("text"), "[^\\x00-\\x7F]", "?")),
-        "doc_id", "text", "text/plain"))
-      .select(col("media_id"), posexplode(col("features")).as(Seq("dim_idx", "feature")))
-      .select(col("media_id"), col("dim_idx").cast("long").as("dim_idx"), col("feature"))
-
-  /** Audio-style VAD over text-as-payload media
-    * ([[graft.multimodal.Multimodal.audioWindows]]): 128-byte
-    * non-overlapping windows, active = mean sample ≥ 64; per-media
-    * window census + activity share (ASCII-sanitized as in the other
-    * multimodal queries so the per-codepoint oracle equals the
-    * byte-level pass). */
-  /** Per-media VAD census over sanitized text-as-payload rows — shared
-    * by the batch query and the streaming twin (aggregation is per
-    * media row, so micro-batch splits cannot change it). */
-  private def vadCensus(docs: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.audioWindows(
-      graft.multimodal.Multimodal.asMediaTable(
-        docs.withColumn("text", regexp_replace(col("text"), "[^\\x00-\\x7F]", "?")),
-        "doc_id", "text", "text/plain"))
-      .groupBy(col("media_id"))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(col("active").cast("long")).as("n_active"),
-        expr("sum(CAST(active AS BIGINT)) * 10000 div count(1)").as("active_bp"),
-        sum(col("energy")).as("total_energy"))
-
-  private def multimodalAudioVad(spark: SparkSession, dir: String): DataFrame =
-    vadCensus(Tables.documents(spark, dir))
-
-  /** The VAD pass as CONTINUOUS media ingestion (the C1 background-loop
-    * shape applied to multimodal payloads): media rows stream in, each
-    * micro-batch runs the row-local window pass + per-media census and
-    * appends to an executor-side parquet sink — no driver collect. A
-    * media row is never split across micro-batches, so the streamed
-    * union IS the batch answer and shares its oracle. */
-  private def streamAudioVad(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/documents*.parquet")
-    val outDir = new java.io.File(
-      s"target/stream_vad/${java.lang.Integer.toHexString(dir.hashCode)}")
-    deleteRecursively(outDir)
-    // no keyed state on this path (foreachBatch / batch-sized per-micro-
-    // batch work): the fixture floor of the sizing rule applies
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          vadCensus(batch).write.mode("append").parquet(outDir.getPath)
-          (): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    readSinkOrEmpty(spark, outDir, StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_windows", LongType),
-      StructField("n_active", LongType),
-      StructField("active_bp", LongType),
-      StructField("total_energy", LongType))))
-  }
-
-  /** JSON function breadth (§2.7): typed `from_json` struct extraction
-    * next to the stringly `get_json_object` path, missing-key null
-    * behavior — both pinned to the same integer profile. */
-  private def jsonFuncs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    Tables.events(spark, dir)
-      .select(col("event_type"),
-        from_json(col("props"), StructType(Seq(StructField("k", LongType)))).as("j"),
-        get_json_object(col("props"), "$.k").as("ks"),
-        get_json_object(col("props"), "$.missing").as("ms"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("j.k")).as("sum_k"),
-        sum(col("j.k").isNotNull.cast("long")).as("n_parsed"),
-        sum(col("ks").cast("long")).as("sum_k_str"),
-        sum(col("ms").isNull.cast("long")).as("n_missing"))
-  }
-
-  /** Order-to-first-ship cycle time per priority class — the
-    * operational-latency profile: one fact aggregate to each order's
-    * first ship day, one FK join, integer day arithmetic. */
-  private def orderCycleTime(spark: SparkSession, dir: String): DataFrame = {
-    val firstShip = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(min(to_date(col("l_shipdate"))).as("ship_day"))
-    Tables.orders(spark, dir)
-      .join(firstShip, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_orderpriority"),
-        datediff(col("ship_day"), to_date(col("o_orderdate"))).cast("long").as("lag_days"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), sum(col("lag_days")).as("sum_lag_days"),
-        min(col("lag_days")).as("min_lag"), max(col("lag_days")).as("max_lag"))
-  }
-
-  /** Repeat-purchase census: customers by order multiplicity, repeat
-    * share in bp — one keyed aggregate plus a scalar census. */
-  private def repeatPurchaseRate(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-      .agg(count(lit(1)).as("n_customers"),
-        sum(when(col("n_orders") >= 2, 1L).otherwise(0L)).as("n_repeat"),
-        max(col("n_orders")).as("max_orders"),
-        sum(col("n_orders")).as("total_orders"))
-      .withColumn("repeat_bp", expr("(n_repeat * 10000) div n_customers"))
-
-  /** Cumulative distinct users by day — exact running adoption without
-    * a running set: each user collapses to a first-seen day (one keyed
-    * aggregate), the metadata-sized day grid carries a prefix sum. */
-  private def cumulativeDistinctUsers(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("new_users"))
-      .withColumn("cum_users", sum(col("new_users")).over(Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .transform(graft.functions.Guards.boundedWindow(_, "cumulative_distinct_users"))
-      // day as yyyy-MM-dd TEXT (the rolling_7d_users rule): date columns
-      // reach the comparer through engine-specific date/timestamp
-      // representations; a string day is representation-proof
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-        col("new_users"), col("cum_users"))
-
-  /** Pareto 80/20 concentration: revenue share of the top-20% customers
-    * (ceil(n/5) by spend, deterministic ties) in bp — the census
-    * companion to [[giniCustomerSpend]]'s index. */
-  private def pareto8020(spark: SparkSession, dir: String): DataFrame = {
-    val spend = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x"))
-    // the customer census is data-sized, so the descending spend rank is
-    // a range-partitioned parallel prefix count (Eval.withGlobalRowNumber),
-    // never a single-partition row_number window; n rides back in as a
-    // 1-row broadcast (max rank = census size)
-    val ranked = graft.operators.Eval.withGlobalRowNumber(
-      spend, Seq(negate(col("x")), col("o_custkey")), "rn")
-    val census = ranked.agg(max(col("rn")).as("n"))
-    ranked.crossJoin(broadcast(census))
-      .agg(max(col("n")).as("n_customers"),
-        expr("max((n + 4) div 5)").as("top20_customers"),
-        sum(when(col("rn") <= expr("(n + 4) div 5"), col("x")).otherwise(0L))
-          .as("top20_cents"),
-        sum(col("x")).as("total_cents"))
-      .withColumn("share_bp", expr("(top20_cents * 10000) div total_cents"))
-  }
-
-  /** Weekly seasonality index: per-ISO-weekday revenue vs the uniform
-    * share, cross-multiplied integers (rev·7·10⁴ div total). */
-  private def weeklySeasonality(spark: SparkSession, dir: String): DataFrame = {
-    val byDow = Tables.orders(spark, dir)
-      .groupBy(expr("weekday(o_orderdate) + 1").as("dow"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-    byDow.withColumn("total", sum(col("cents")).over(Window.partitionBy()))
-      .transform(graft.functions.Guards.boundedWindow(_, "weekly_seasonality"))
-      .select(col("dow"), col("cents"),
-        expr("(cents * 7 * 10000) div total").as("index_bp"))
-  }
-
-  /** Lag-1 autocorrelation of daily revenue — the time-series
-    * persistence diagnostic next to the EWMA/anomaly family: daily
-    * sums quantized to 10³-cent units (keeps every co-moment exact
-    * int64 at any SF), Pearson over (xₜ, xₜ₊₁) from the six exact
-    * sums, ρ in ppm via one fixed-shape double. The day grid is
-    * metadata-sized, so the single-partition lead() window is fine by
-    * design (the same regime as the equi-depth histogram). */
-  private def autocorrDailyRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100000").as("x"))
-    daily
-      .withColumn("y", lead(col("x"), 1).over(Window.orderBy(col("day"))))
-      .transform(graft.functions.Guards.boundedWindow(_, "autocorr_daily_revenue"))
-      .filter(col("y").isNotNull)
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("n"),
-        // zero-variance guard (constant revenue series, or a 1-pair
-        // series): the covariance numerator is 0 whenever a variance is
-        // 0, so greatest(…,1) reports r1 = 0 instead of a NaN cast —
-        // the same guard as xcorr_event_types and the trend detectors
-        floor(lit(1000000.0) * (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / sqrt(greatest(col("n") * col("sxx") - col("sx") * col("sx"), lit(1L)).cast("double")
-            * greatest(col("n") * col("syy") - col("sy") * col("sy"), lit(1L)).cast("double")))
-          .cast("long").as("r1_ppm"))
-  }
-
-  /** CUSUM changepoint screen over daily revenue — the sequential
-    * drift detector next to [[autocorrDailyRevenue]]'s persistence and
-    * `anomaly_mad`'s pointwise outliers. The one-sided CUSUM recurrence
-    * S_t = max(0, S_{t-1} + (x_t − μ)) is replayed in closed form
-    * S_t = P_t − min(0, min_{j≤t} P_j) (P = inclusive prefix sum of the
-    * deviations), so it's two windows over the DAILY grid instead of a
-    * sequential loop; μ is the exact floor-mean of the daily series
-    * (pmod-adjusted division — engine-portable). The day grid is
-    * calendar-cardinality, so the unpartitioned prefix windows are
-    * bounded by design (WindowAuditSpec allowlist). Flag = the CUSUM
-    * statistic exceeding one average day of revenue above the running
-    * baseline. All arithmetic exact int64. */
-  private def cusumChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyRevenue(spark, dir)
-    val stats = daily.agg(count(lit(1)).as("__n"), sum(col("x")).as("__sx"))
-    val w = Window.orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily.crossJoin(broadcast(stats))
-      .withColumn("mu", expr("(__sx - pmod(__sx, __n)) div __n"))
-      .withColumn("p", sum(col("x") - col("mu")).over(w))
-      .withColumn("s", col("p") - least(lit(0L), min(col("p")).over(w)))
-      .transform(graft.functions.Guards.boundedWindow(_, "cusum_changepoint"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("x"),
-        col("s").as("cusum"),
-        (col("s") > col("mu")).cast("int").as("flag"))
-  }
-
-  /** Lagged cross-correlation between two event streams' daily value
-    * series (click → purchase, lags 0–7 days) — the lead-indicator
-    * diagnostic generalizing [[autocorrDailyRevenue]] to two series:
-    * per lag, Pearson over (x_{t−ℓ}, y_t) from six exact int64
-    * co-moments of the cent-quantized daily sums, ρ in ppm via one
-    * fixed-shape double. The lag alignment is an equi-join on the
-    * shifted day key (day grids are calendar-sized), so no windows at
-    * all — the 8 lags fan out from a broadcast literal. */
-  private def xcorrEventTypes(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(to_date(col("ts")).as("day"), col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-    val dx = e.filter(col("event_type") === "click")
-      .groupBy(col("day")).agg(sum(col("cents")).as("x"))
-      .withColumnRenamed("day", "xday")
-    val dy = e.filter(col("event_type") === "purchase")
-      .groupBy(col("day")).agg(sum(col("cents")).as("y"))
-    val lags = spark.range(0, 8).select(col("id").cast("int").as("lag"))
-    dy.crossJoin(broadcast(lags))
-      .join(dx, date_add(col("xday"), col("lag")) === col("day"))
-      .groupBy(col("lag").cast("long").as("lag"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("lag"), col("n"),
-        // zero-variance guard (constant series in a lag window, or a
-        // 1-day overlap): the covariance numerator is exactly 0 whenever
-        // either variance is 0 (Cauchy–Schwarz), so greatest(…,1) turns
-        // the 0/0 into a clean r_ppm = 0 instead of a NaN whose cast
-        // Spark and DuckDB disagree on — same guard as the sibling
-        // detectors (mann_kendall var_num, theil_sen dd, ks n_a·n_b)
-        floor(lit(1000000.0) * (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / sqrt(greatest(col("n") * col("sxx") - col("sx") * col("sx"), lit(1L)).cast("double")
-            * greatest(col("n") * col("syy") - col("sy") * col("sy"), lit(1L)).cast("double")))
-          .cast("long").as("r_ppm"))
-  }
-
-  /** The cent-quantized daily-revenue series shared by the trend
-    * detectors ([[cusumChangepoint]], [[mannKendallTrend]],
-    * [[theilSenSlope]]): calendar-cardinality, so the localCheckpoint
-    * materializes a few-thousand-row table once instead of re-scanning
-    * orders on both sides of the pair join — and memoSearch shares that
-    * ONE materialization across all three consumers per fixture dir
-    * (the same shared-artifact policy as the kNN ground truths). */
-  private def dailyRevenue(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("daily_revenue", dir) {
-      Tables.orders(spark, dir)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100000").as("x"))
-        .localCheckpoint()
-    }
-
-  /** Mann–Kendall trend test over daily revenue — the nonparametric
-    * companion to [[cusumChangepoint]]'s drift screen: S = Σ_{i<j}
-    * sign(x_j − x_i) as an exact integer census over day pairs, the
-    * tie-corrected variance numerator n(n−1)(2n+5) − Σ t(t−1)(2t+5)
-    * kept as an integer (Var = num/18), and the continuity-corrected
-    * normal score z in ppm via ONE fixed-shape double
-    * (mul/div/sqrt/floor — bit-portable). The pair join is
-    * CALENDAR-bounded (≈day_count²/2 rows regardless of data volume),
-    * so no windows and no data-sized blowup; trend flags at |z| ≥ 1.96.
-    */
-  private def mannKendallTrend(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyRevenue(spark, dir)
-    // NOT spread (r13, reverting r12): the daily table is
-    // CALENDAR-bounded — ≈2.4k rows at ANY corpus scale — so the pair
-    // pass is constant work a single task absorbs; the r12 forced
-    // 32-way reshuffle measured 2.3× SLOWER (0.203 → 0.474 s
-    // same-session) and buys nothing asymptotically.
-    val pa = daily.as("a")
-      .join(daily.as("b"), col("a.day") < col("b.day"))
-      .agg(sum(when(col("b.x") > col("a.x"), 1L)
-        .when(col("b.x") < col("a.x"), -1L).otherwise(0L)).as("s_stat"))
-    val ta = daily.groupBy(col("x")).agg(count(lit(1)).as("t"))
-      .agg(sum(col("t")).as("nd"),
-        sum(expr("t * (t - 1) * (2 * t + 5)")).as("tie_adj"))
-    pa.crossJoin(broadcast(ta))
-      .withColumn("var_num",
-        greatest(lit(1L), expr("nd * (nd - 1) * (2 * nd + 5) - tie_adj")))
-      .withColumn("zc", when(col("s_stat") > 0, col("s_stat") - 1)
-        .when(col("s_stat") < 0, col("s_stat") + 1).otherwise(lit(0L)))
-      .withColumn("z_ppm",
-        floor(lit(1000000.0) * col("zc").cast("double")
-          / sqrt(col("var_num").cast("double") / lit(18.0))).cast("long"))
-      .select(col("nd").as("n_days"), col("s_stat"), col("var_num"),
-        col("z_ppm"),
-        when(col("z_ppm") >= 1960000L, 1)
-          .when(col("z_ppm") <= -1960000L, -1).otherwise(0).as("trend"))
-  }
-
-  /** Theil–Sen robust slope of daily revenue — the estimator the trend
-    * flag ([[mannKendallTrend]]) points at: the LOWER MEDIAN of all
-    * pairwise slopes floor((x_j − x_i)·10⁶ / (day_j − day_i))
-    * (pmod-adjusted floor division — engine-portable on negative
-    * rises). The pair set is calendar-bounded (≈2.9M rows on the TPC-H
-    * date span, CONSTANT in data volume), and its slopes are nearly all
-    * distinct (2.19M of 2.89M measured), so ranking them is the wrong
-    * plan — the median is a TWO-LEVEL SELECTION instead: pass 1 folds
-    * slopes into fixed-width 2²⁰-unit buckets (map-side combine to a
-    * few-thousand-row histogram) and runs
-    * [[graft.operators.Eval.withExclusivePrefixSum]] over it to find
-    * the ONE bucket straddling rank (m+1) div 2; pass 2 re-derives only
-    * that bucket's slopes (cheaper than checkpointing 2.9M longs — the
-    * pair join is two broadcast-NL scans of the checkpointed daily
-    * table) and ranks within it via a KEYED window (bucket population ≤
-    * the calendar-bounded pair count; single-digit thousands in
-    * practice). Nothing data-sized is ever sorted or checkpointed. */
-  private def theilSenSlope(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyRevenue(spark, dir)
-    // NOT spread (r13, reverting r12): calendar-bounded input — the
-    // ≈2.9M-pair BNL is CONSTANT work at any corpus scale and the r12
-    // reshuffle measured slower same-session (2.60 → 2.95 s); see
-    // mannKendallTrend.
-    val dailyA = daily
-    def slopes = dailyA.as("a").join(daily.as("b"), col("a.day") < col("b.day"))
-      .select(((col("b.x") - col("a.x")) * lit(1000000L)).as("num"),
-        datediff(col("b.day"), col("a.day")).cast("long").as("dd"))
-      // greatest(dd, 1) never changes a real pair (a.day < b.day ⇒ dd ≥ 1);
-      // it guards ANSI mod-by-zero when Catalyst folds the bucket filter
-      // into the join condition and evaluates the slope on raw day pairs
-      .select(expr("(num - pmod(num, greatest(dd, 1))) div greatest(dd, 1)")
-        .as("slope_u"))
-      .withColumn("bkt", expr("(slope_u - pmod(slope_u, 1048576)) div 1048576"))
-    val hist = slopes.groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
-    // Driver-solved straddling-bucket selection (r13, r12 verdict item 6;
-    // guide §5, the pageRankInt driver-solve pattern): the histogram is
-    // METADATA-sized — calendar-bounded slopes fold into 2^20-unit
-    // buckets, single-digit thousands of rows at any corpus scale — so
-    // the prefix-sum + total + hit-filter machinery (a range exchange, a
-    // checkpoint, two more aggregates and a broadcast join per action)
-    // is replaced by one bounded collect and three Long literals.
-    // Guarded: at most 100k+1 rows are collected; a larger histogram
-    // (or an empty one) falls back to the distributed selection below,
-    // which reproduces the identical arithmetic.
-    val hrows = hist.limit(100001).collect()
-    var hbkt = 0L; var hbelow = 0L; var mTot = 0L; var found = false
-    if (hrows.length <= 100000) {
-      val sorted = hrows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      mTot = sorted.map(_._2).sum
-      val half = (mTot + 1) / 2 // == (m + 1) div 2: both floor for m ≥ 0
-      var below = 0L
-      sorted.foreach { case (b, c) =>
-        if (!found && below < half && below + c >= half) {
-          hbkt = b; hbelow = below; found = true
-        }
-        below += c
-      }
-    }
-    if (found) {
-      val half = (mTot + 1) / 2
-      val w = Window.partitionBy(col("bkt")).orderBy(col("slope_u"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      slopes.filter(col("bkt") === lit(hbkt))
-        .groupBy(col("slope_u"), col("bkt"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("below2",
-          lit(hbelow) + coalesce(sum(col("c")).over(w), lit(0L)))
-        .filter(col("below2") < lit(half) && col("below2") + col("c") >= lit(half))
-        .select(lit(mTot).as("n_pairs"), col("slope_u").as("slope_med_u"))
-    } else {
-      val pre = graft.operators.Eval.withExclusivePrefixSum(hist, "bkt", "cnt", "below")
-      val m = pre.agg(sum(col("cnt")).as("__m"))
-      val hit = pre.crossJoin(broadcast(m))
-        .filter(col("below") < expr("(__m + 1) div 2") &&
-          col("below") + col("cnt") >= expr("(__m + 1) div 2"))
-        .select(col("bkt").as("hbkt"), col("below").as("hbelow"), col("__m"))
-      val w = Window.partitionBy(col("hbkt")).orderBy(col("slope_u"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      slopes.join(broadcast(hit), col("bkt") === col("hbkt"))
-        .groupBy(col("slope_u"), col("hbkt"), col("hbelow"), col("__m"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("below2",
-          col("hbelow") + coalesce(sum(col("c")).over(w), lit(0L)))
-        .filter(col("below2") < expr("(__m + 1) div 2") &&
-          col("below2") + col("c") >= expr("(__m + 1) div 2"))
-        .select(col("__m").as("n_pairs"), col("slope_u").as("slope_med_u"))
-    }
-  }
-
-  /** Two-sample Kolmogorov–Smirnov distance between order-price
-    * distributions of the BUILDING market segment vs the rest — the
-    * distribution-shift test next to [[mannKendallTrend]]'s trend and
-    * `embedding_drift`'s vector drift. Entirely integer: per distinct
-    * cent value the signed mass c₁·n₂ − c₂·n₁ accumulates through
-    * [[graft.operators.Eval.withExclusivePrefixSum]] (range-partitioned
-    * parallel prefix — the value grid is data-sized), D = max |cum| and
-    * d_ppm = 10⁶·D div (n₁·n₂); `at_cents` reports the smallest value
-    * attaining the max. One groupBy on the value + one range shuffle.
-    * Bound argument: the signed mass c₁·n₂ − c₂·n₁ and its prefix are
-    * ≤ n₁·n₂ in magnitude, so the int64 path is exact for n ≤ 3×10⁹
-    * rows per side (~2 TB of orders); beyond that the weights (and
-    * [[graft.operators.Eval.withExclusivePrefixSum]]'s accumulator)
-    * must widen to DECIMAL — the d_ppm scaling below already does. */
-  private def ksTwoSample(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).select(col("o_custkey"),
-      expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v"))
-    val c = Tables.customer(spark, dir).select(col("c_custkey"),
-      (col("c_mktsegment") === "BUILDING").cast("long").as("a"))
-    val g = o.join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("v"))
-      .agg(sum(col("a")).as("c1"), sum(lit(1L) - col("a")).as("c2"))
-    val tot = g.agg(sum(col("c1")).as("__n1"), sum(col("c2")).as("__n2"))
-    val cum = graft.operators.Eval.withExclusivePrefixSum(
-        g.crossJoin(broadcast(tot))
-          .withColumn("wv", col("c1") * col("__n2") - col("c2") * col("__n1")),
-        "v", "wv", "below")
-      .withColumn("diff", abs(col("below") + col("wv")))
-    // ONE aggregate pass picks D and its witness (r13, guide §2.3 /
-    // verdict item 6): max(struct(diff, −v)) is lexicographic, so its
-    // second field is −min(v) among the max-diff rows — exactly the old
-    // two-pass shape (agg max(diff), re-scan cum under a filter against
-    // it), which evaluated the whole cum subtree (join + groupBy +
-    // range-partitioned prefix) TWICE per action.
-    cum.agg(max(struct(col("diff").as("d"), (-col("v")).as("nv"))).as("b"),
-        max(col("__n1")).as("n_a"), max(col("__n2")).as("n_b"))
-      .select(col("n_a"), col("n_b"), col("b.d").as("__d"),
-        (-col("b.nv")).as("at_cents"))
-      .select(col("n_a"), col("n_b"),
-        // greatest guards the degenerate empty-segment corpus (n_a or
-        // n_b = 0 ⇒ every cum is 0 ⇒ D = 0 and the division is moot).
-        // The 10⁶ scaling runs in DECIMAL(38,0): __d is bounded by
-        // n_a·n_b, so the int64 product 10⁶·__d would wrap at only
-        // ~3×10⁶ rows per side — decimal keeps d_ppm exact up to the
-        // signed-mass path's own bound (n ≤ 3×10⁹ per side, the int64
-        // ceiling of c₁·n₂ documented above)
-        expr("(CAST(1000000 AS DECIMAL(38,0)) * __d) div greatest(1, n_a * n_b)")
-          .as("d_ppm"),
-        col("at_cents"))
-  }
-
-  /** Benford first-digit profile of order totals — the fraud-analytics
-    * screen: observed first-digit shares vs Benford's law, both in ppm
-    * (expected values are FROZEN integer constants, round(1e6·log10(1
-    * + 1/d)) — the NdcgW pattern), deviation exact. One scan + one
-    * 9-group aggregate. */
-  private def benfordDigits(spark: SparkSession, dir: String): DataFrame = {
-    val benford = map(Seq(1 -> 301030, 2 -> 176091, 3 -> 124939, 4 -> 96910,
-      5 -> 79181, 6 -> 66947, 7 -> 57992, 8 -> 51153, 9 -> 45757)
-      .flatMap { case (d, p) => Seq(lit(d), lit(p)) }: _*)
-    Tables.orders(spark, dir)
-      .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .filter(col("cents") > 0)
-      .select(substring(col("cents").cast("string"), 1, 1).cast("int").as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      .withColumn("n_total", sum(col("n")).over(Window.partitionBy()))
-      .transform(graft.functions.Guards.boundedWindow(_, "benford_digits"))
-      .select(col("digit"), col("n"),
-        expr("(n * 1000000) div n_total").as("obs_ppm"),
-        element_at(benford, col("digit")).cast("long").as("benford_ppm"))
-      .withColumn("dev_ppm", abs(col("obs_ppm") - col("benford_ppm")))
-  }
-
-  /** Gini concentration of customer spend — exact-integer inequality
-    * measure over the sorted prefix weighting: G = (2Σi·xᵢ − (n+1)Σx)
-    * / (nΣx), ranks ascending with custkey ties (Σi·xᵢ is invariant
-    * under tie order). Numerator exact int64; the final ratio is one
-    * fixed-shape double in ppm. */
-  private def giniCustomerSpend(spark: SparkSession, dir: String): DataFrame = {
-    val spend = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x"))
-    // ascending spend rank as a range-partitioned parallel prefix count —
-    // same de-globalized shape as pareto8020 (Σi·xᵢ only needs the rank)
-    graft.operators.Eval.withGlobalRowNumber(
-        spend, Seq(col("x"), col("o_custkey")), "i")
-      .agg(count(lit(1)).as("n_customers"),
-        sum(col("x")).as("total_cents"),
-        sum(col("i") * col("x")).as("six"))
-      .select(col("n_customers"), col("total_cents"),
-        floor(lit(1000000.0)
-          * (lit(2L) * col("six") - (col("n_customers") + 1) * col("total_cents")).cast("double")
-          / (col("n_customers") * col("total_cents")).cast("double")).cast("long")
-          .as("gini_ppm"))
-  }
-
-  /** Spearman rank correlation (value vs event time, per event type) —
-    * §2.7 stats breadth beyond `metrics_correlation`'s Pearson: ordinal
-    * ranks via row_number with event_id ties (deterministic), Σd²
-    * exact int64, ρ = 1 − 6Σd²/(n(n²−1)) in ppm through one
-    * fixed-shape double expression. Both rankings share one
-    * event_type-keyed exchange. */
-  private def spearmanValueTs(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"),
-        unix_millis(col("ts")).as("ms"), col("event_id"))
-    val w = Window.partitionBy(col("event_type"))
-    e.withColumn("r1", row_number().over(w.orderBy(col("cents"), col("event_id"))))
-      .withColumn("r2", row_number().over(w.orderBy(col("ms"), col("event_id"))))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum((col("r1") - col("r2")).cast("long") * (col("r1") - col("r2")).cast("long"))
-          .as("d2_sum"))
-      .select(col("event_type"), col("n"), col("d2_sum"),
-        // n = 1 guard: a single observation has d2_sum = 0 and a zero
-        // n(n²−1) denominator — greatest(…,1) reports ρ = 1 (the
-        // degenerate perfect correlation) instead of a NaN cast
-        floor(lit(1000000.0) * (lit(1.0) - lit(6.0) * col("d2_sum").cast("double")
-          / greatest(col("n") * (col("n") * col("n") - 1), lit(1L)).cast("double")))
-          .cast("long").as("rho_ppm"))
-  }
-
-  /** Rocchio nearest-centroid classification — the prototype method
-    * next to `knn_classify`'s majority vote: per-label centroids on the
-    * 2²⁰ integer grid (exact int64 sums, the same floor-div mean as
-    * IvfFlat's Lloyd step, so any engine replays them), queries
-    * assigned to the nearest centroid by exact integer distance, ties
-    * to the smaller label. Emits the labeled-vs-predicted confusion
-    * matrix. Centroids are model-parameter-sized (10 rows) and
-    * broadcast; classification is a map over the query stream. */
-  private def rocchioClassify(spark: SparkSession, dir: String): DataFrame =
-    rocchioPreds(spark, dir)
-      .groupBy(col("q_label"), col("p_label"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Per-query Rocchio predictions (query_id, q_label, p_label) —
-    * factored from [[rocchioClassify]] so [[kappaClassifiers]] can join
-    * them against the k-NN vote without re-deriving the centroids. */
-  private def rocchioPreds(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.l2sq
-    val emb = Tables.embeddings(spark, dir)
-    val bq = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("label"), graft.index.IvfFlat.quantize(col("embedding")).as("qv"))
-    val cents = bq
-      .select(col("label"), posexplode(col("qv")).as(Seq("pos", "e")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(col("e")).as("s"), count(lit(1)).as("cnt"))
-      .select(col("label"), col("pos"),
-        expr("(2*s + cnt - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) div (2*cnt)").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        p => p.getField("c")).as("cvec"))
-      .select(col("label").as("p_label"), col("cvec"))
-    val qq = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        graft.index.IvfFlat.quantize(col("embedding")).as("qv"))
-    qq.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("q_label"), col("p_label"),
-        l2sq(col("qv"), col("cvec")).as("dist"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("dist"), col("p_label"))))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("q_label"), col("p_label"))
-  }
-
-  /** Cohen's κ between the two classifiers the engine already serves —
-    * k-NN majority vote (`knn_classify`) vs Rocchio nearest-centroid
-    * (`rocchio_classify`) on the same held-out queries: the
-    * inter-rater-agreement number that tells whether the two methods
-    * disagree beyond chance. po and pe come from exact integer counts
-    * (agreement census + per-label marginal products), κ in ppm via one
-    * fixed-shape double: κ = (n·agree − Σ_l m1_l·m2_l) / (n² − Σ_l
-    * m1_l·m2_l). Both prediction sets are query-cardinality; the
-    * marginal join is label-cardinality (broadcast-sized). */
-  private def kappaClassifiers(spark: SparkSession, dir: String): DataFrame = {
-    val knn = knnClassify(spark, dir).select(col("query_id"), col("pred_label"))
-    val roc = rocchioPreds(spark, dir).select(col("query_id"), col("p_label"))
-    val joined = knn.join(roc, Seq("query_id"))
-      .agg(count(lit(1)).as("n"),
-        sum((col("pred_label") === col("p_label")).cast("long")).as("agree"))
-    val m1 = knn.groupBy(col("pred_label").as("l")).agg(count(lit(1)).as("m1"))
-    val m2 = roc.groupBy(col("p_label").as("l")).agg(count(lit(1)).as("m2"))
-    val pe = m1.join(m2, Seq("l")).agg(sum(col("m1") * col("m2")).as("s_marg"))
-    joined.crossJoin(broadcast(pe))
-      .select(col("n"), col("agree"),
-        // degenerate-census guard: if both classifiers emit a single
-        // label for every query, pe = 1 makes κ 0/0 — greatest(…,1)
-        // reports κ = 0 (no measurable agreement beyond chance) instead
-        // of a NaN cast that Spark and DuckDB disagree on; same guard
-        // family as ece_calibration's denominator
-        floor(lit(1000000.0) * (col("n") * col("agree") - col("s_marg")).cast("double")
-          / greatest(col("n") * col("n") - col("s_marg"), lit(1L)).cast("double"))
-          .cast("long").as("kappa_ppm"))
-  }
-
-  /** k-anonymity audit over quasi-identifiers (lang, source, length
-    * band) — the privacy-side curation check next to `pii_redact`: a
-    * released corpus slice whose quasi-identifier group has fewer than
-    * k members re-identifies its authors. Emits per (lang, source) the
-    * group census and the rows at risk under k=5. One keyed aggregate
-    * over the grouped census. */
-  private def kAnonymity(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .groupBy(col("lang"), col("source"), expr("n_chars div 500").as("len_band"))
-      .agg(count(lit(1)).as("sz"))
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_groups"),
-        sum(when(col("sz") < 5, 1L).otherwise(0L)).as("n_small_groups"),
-        sum(when(col("sz") < 5, col("sz")).otherwise(0L)).as("rows_at_risk"))
-
-  /** χ² contingency table for event_type × ISO weekday — §2.7 stats
-    * breadth beyond moments: per-cell observed counts and the χ² term
-    * in ppm. The deviation (obs·N − row·col) stays exact int64; only
-    * its square and the denominator cross 2⁶³, so both move to double
-    * through one fixed-shape expression (single multiply + divide +
-    * floor — correctly rounded identically in any IEEE engine). */
-  private def contingencyStats(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
-      .groupBy(col("event_type"), expr("weekday(ts) + 1").as("dow"))
-      .agg(count(lit(1)).as("obs"))
-    val rowT = cells.groupBy(col("event_type")).agg(sum(col("obs")).as("row_n"))
-    val colT = cells.groupBy(col("dow")).agg(sum(col("obs")).as("col_n"))
-    val n = cells.agg(sum(col("obs")).as("n_total"))
-    cells.join(rowT, Seq("event_type")).join(colT, Seq("dow")).crossJoin(broadcast(n))
-      .withColumn("dev", col("obs") * col("n_total") - col("row_n") * col("col_n"))
-      .select(col("event_type"), col("dow"), col("obs"),
-        floor(lit(1000000.0) * (col("dev").cast("double") * col("dev").cast("double"))
-          / (col("row_n").cast("double") * col("col_n").cast("double")
-            * col("n_total").cast("double"))).cast("long").as("chi2_term_ppm"))
-  }
-
-  /** Char-trigram language ID (Cavnar–Trenkle n-gram profiles) — the
-    * second language-ID method next to `lang_id`'s stopword argmax:
-    * per-language top-50 trigram profiles trained on a DETERMINISTIC
-    * 1-in-4 id-hash sample of the corpus (Sampling.idBucket — profiles
-    * are a per-language statistic, so at 100 TB they train on a sample,
-    * never the full corpus; the explode-aggregate is the query's cost
-    * center and now touches a quarter of the text). Every document is
-    * still scored corpus-wide by DISTINCT-trigram overlap, argmax with
-    * lexicographic ties. Texts under 3 chars build no trigrams on either
-    * side (sequence(1, 0) would otherwise emit a descending [1, 0] and
-    * two bogus substrings). Emits the labeled-vs-predicted confusion
-    * matrix. All integer counts, deterministic — full DuckDB replay. */
-  private def langIdNgram(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
-    // repartition BEFORE the ~300×-amplifying trigram explode: text is
-    // compact on disk (one 128 MB scan partition holds ~10⁶ docs), so
-    // scan partitioning under-parallelizes the explode-side work by the
-    // amplification factor — the one shuffle of compact rows buys
-    // full-width parallelism for the gram pipeline (measured 10×-probe
-    // fix: the scoring chain was running on ONE core at 10× fixture)
-    val eligible = docs.filter(length(col("t")) >= 3).repartition(col("doc_id"))
-    // codegen trigram kernel (GraftFunctions.charNgrams): the HOF
-    // transform(sequence…, substring…) form evaluates interpreted and
-    // was the measured cost center — same values, one fused byte scan
-    val tg = graft.functions.GraftFunctions.charNgrams(col("t"), 3)
-    val trigrams = eligible
-      .filter(graft.operators.Sampling.idBucket(col("doc_id"), 4) === 0)
-      .select(col("doc_id"), col("lang"), explode(tg).as("g"))
-    val profile = trigrams.groupBy(col("lang"), col("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("lang"))
-        .orderBy(col("cnt").desc, col("g"))))
-      .filter(col("rn") <= 50)
-      .select(col("lang").as("p_lang"), col("g"))
-    val docGrams = eligible.select(col("doc_id"),
-      explode(graft.functions.GraftFunctions.charNgrams(col("t"), 3, distinct = true)).as("g"))
-    val scoredLang = docGrams.join(profile, Seq("g"))
-      .groupBy(col("doc_id"), col("p_lang"))
-      .agg(count(lit(1)).as("overlap"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
-        .orderBy(col("overlap").desc, col("p_lang"))))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("p_lang"))
-    docs.select(col("doc_id"), col("lang"))
-      .join(scoredLang, Seq("doc_id"), "left")
-      .select(col("lang"), coalesce(col("p_lang"), lit("unknown")).as("predicted_lang"))
-      .groupBy(col("lang"), col("predicted_lang"))
-      .agg(count(lit(1)).as("n"))
-  }
-
-  /** Regexp function breadth (§2.7): match-all extraction counts,
-    * group extraction, containment — the simple character-class subset
-    * where Java and RE2 regex dialects provably agree. */
-  private def regexpFuncs(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0))).cast("long"))
-          .as("n_digit_runs"),
-        sum(size(regexp_extract_all(col("text"), lit("[A-Za-z]{4,}"), lit(0))).cast("long"))
-          .as("n_long_words"),
-        sum(length(regexp_extract(col("text"), "([A-Za-z]+)", 1)).cast("long"))
-          .as("sum_first_alpha_len"),
-        sum(col("text").rlike("[0-9]").cast("long")).as("n_with_digit"))
-
-  /** NOT IN vs NOT EXISTS under nulls (§2.7) — the classic
-    * three-valued-logic trap: one NULL in the NOT IN subquery makes the
-    * whole predicate UNKNOWN for every row (zero survivors), while NOT
-    * EXISTS keeps its anti-join semantics. Both authored as SQL so
-    * Catalyst plans the real subquery rewrites; the counts pin the
-    * divergence. */
-  private def notInVsNotExists(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("__orders_nn")
-    Tables.customer(spark, dir).createOrReplaceTempView("__customer_nn")
-    spark.sql(
-      """SELECT
-        |  (SELECT count(*) FROM __orders_nn WHERE o_custkey NOT IN
-        |     (SELECT CASE WHEN c_custkey % 1000 = 7 THEN NULL ELSE c_custkey END
-        |      FROM __customer_nn)) AS n_not_in_with_null,
-        |  (SELECT count(*) FROM __orders_nn o WHERE NOT EXISTS
-        |     (SELECT 1 FROM __customer_nn c
-        |      WHERE CASE WHEN c.c_custkey % 1000 = 7 THEN NULL
-        |            ELSE c.c_custkey END = o.o_custkey)) AS n_not_exists,
-        |  (SELECT count(*) FROM __orders_nn WHERE o_custkey NOT IN
-        |     (SELECT c_custkey FROM __customer_nn WHERE c_custkey % 1000 <> 7))
-        |    AS n_not_in_no_null""".stripMargin)
-  }
-
-  /** TPC-H Q3-shaped: top-10 orders by revenue. orders/customer GROW with
-    * scale factor — no broadcast hint (a forced broadcast of a fact-sized
-    * table OOMs executors at 100 TB); AQE still picks broadcast-hash at
-    * fixture scale from runtime stats. */
-  private def q3TopOrders(spark: SparkSession, dir: String): DataFrame = {
-    // aggregate the fact table FIRST (4× fewer rows reach the join —
-    // the group key l_orderkey is the join key, and o_orderdate is
-    // functionally dependent on it), then attach the order date and
-    // validate the customer FK as a semi join (c_custkey is the PK, so
-    // inner ≡ semi and the planner can broadcast the small side). Same
-    // answer, roughly half the shuffled bytes of join-then-aggregate.
-    val rev = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("__rev"))
-    rev
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"), "left_semi")
-      .select(col("l_orderkey"), col("o_orderdate"), round(col("__rev"), 2).as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** TPC-H Q5-shaped: revenue by supplier nation across the full star
-    * join. nation/region are constant-size (25/5 rows at ANY scale
-    * factor) — broadcast them; supplier grows with SF, so AQE decides. */
-  private def q5RegionRevenue(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-        count(lit(1)).as("n_items"))
-
-  /** Running total per customer — the window-function coverage query. */
-  private def windowRunningTotal(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    Tables.orders(spark, dir).select(
-      col("o_custkey"), col("o_orderkey"),
-      round(sum(col("o_totalprice")).over(w), 2).as("running_total"))
-  }
-
-  /** Word co-occurrence lift: the 20 highest-count tokens, scored
-    * pairwise by lift = P(a,b) / (P(a)·P(b)) in integer basis points —
-    * the PMI-family association signal of corpus analysis. Occurrences
-    * are filtered to the top-20 vocabulary BEFORE the doc-level
-    * self-join, so the pair space is ≤ C(20,2) per doc regardless of
-    * corpus size; everything is an equi-join on doc_id or token. */
-  private def wordLiftPairs(spark: SparkSession, dir: String): DataFrame = {
-    val occ = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(array_distinct(
-        TextFunctions.tokens(col("text")))).as("tok"))
-      .localCheckpoint() // consumed by df-count, top-20 rank, and the pair join
-    val n = Tables.documents(spark, dir).count()
-    val dfs = occ.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // orderBy+limit plans as TakeOrderedAndProject (distributed partial
-    // top-k per partition), not a single-partition window sort over the
-    // whole vocabulary
-    val top = dfs.orderBy(col("df").desc, col("tok")).limit(20)
-      .select(col("tok"), col("df"))
-    val kept = occ.join(broadcast(top.select(col("tok"))), Seq("tok"))
-    val pairs = kept.as("a").join(kept.as("b"), Seq("doc_id"))
-      .filter(col("a.tok") < col("b.tok"))
-      .groupBy(col("a.tok").as("tok_a"), col("b.tok").as("tok_b"))
-      .agg(count(lit(1)).as("n_both"))
-    pairs
-      .join(broadcast(top.select(col("tok").as("tok_a"), col("df").as("df_a"))), Seq("tok_a"))
-      .join(broadcast(top.select(col("tok").as("tok_b"), col("df").as("df_b"))), Seq("tok_b"))
-      .withColumn("num", lit(10000L) * lit(n) * col("n_both"))
-      .withColumn("den", col("df_a") * col("df_b"))
-      // integer division, not double-then-truncate: at corpus scale the
-      // double quotient's rounding could cross the floor boundary
-      .select(col("tok_a"), col("tok_b"), col("n_both"),
-        expr("num div den").as("lift_bp"))
-  }
-
-  /** Model-based quality scoring with a frozen linear model: integer
-    * features (token count, stopword hits, punctuation chars) weighted
-    * by fixed integer coefficients — the fastText-style quality
-    * classifier reduced to its deterministic, engine-portable core.
-    * Purely row-local: scales as a map stage. */
-  private def qualityScoreLinear(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val enStop = graft.text.TextFunctions.LangStopwords.head._2
-    val nTok = TextFunctions.tokenCount(t)
-    val nStop = TextFunctions.stopwordCount(t, enStop)
-    val nPunct = length(regexp_replace(t, "[a-zA-Z0-9\\s]", ""))
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      nTok.cast("long").as("n_tok"),
-      nStop.cast("long").as("n_stop"),
-      nPunct.cast("long").as("n_punct"),
-      (lit(3L) * nTok + lit(20L) * nStop - lit(5L) * nPunct).as("score"),
-      (lit(3L) * nTok + lit(20L) * nStop - lit(5L) * nPunct >= 100L).as("keep"))
-  }
-
-  /** Per-language rank-normalized quality percentile — cross-lingual
-    * calibration of [[qualityScoreLinear]]'s raw score: a "keep the top
-    * 40% PER LANGUAGE" gate instead of one global threshold (the
-    * FineWeb-style per-language cut; a global cut would empty
-    * low-resource languages whose raw scores run lower). Percentile =
-    * ((rn − 1)·10000) div (n − 1) over the deterministic (score,
-    * doc_id) order — one window per language partition, exact integer
-    * arithmetic, and the language IS the natural shuffle key a corpus
-    * is already bucketed by. */
-  private def qualityPercentile(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val enStop = graft.text.TextFunctions.LangStopwords.head._2
-    val score = lit(3L) * TextFunctions.tokenCount(t) +
-      lit(20L) * TextFunctions.stopwordCount(t, enStop) -
-      lit(5L) * length(regexp_replace(t, "[a-zA-Z0-9\\s]", ""))
-    val w = Window.partitionBy(col("lang")).orderBy(col("score"), col("doc_id"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), score.as("score"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("lang"))))
-      .select(col("doc_id"), col("lang"), col("score"),
-        when(col("n") > 1, expr("((rn - 1) * 10000) div (n - 1)"))
-          .otherwise(lit(10000L)).as("pct_bp"))
-      .withColumn("keep_top40", col("pct_bp") >= 6000)
-  }
-
-  /** Shard routing audit under a scale-out
-    * ([[graft.operators.Sampling.withRendezvousShard]]): every document
-    * routed by rendezvous hashing at 8 and at 9 shards, per-shard counts
-    * before/after plus how many keys ENTERED each shard. The HRW
-    * invariant — old shards only lose, every relocated key lands on the
-    * new shard — is emitted as a checked boolean per shard. Both
-    * assignments are row-local expressions over one scan; the only
-    * shuffle is the final 9-group count. */
-  private def shardAssign(spark: SparkSession, dir: String): DataFrame = {
-    val a = graft.operators.Sampling.withRendezvousShard(
-      graft.operators.Sampling.withRendezvousShard(
-        Tables.documents(spark, dir).select(col("doc_id")),
-        "doc_id", 8, "shard_before"),
-      "doc_id", 9, "shard_after")
-    a.groupBy(col("shard_after").as("shard"))
-      .agg(
-        sum(when(col("shard_before") === col("shard_after"), 0L).otherwise(1L))
-          .as("n_entered"),
-        count(lit(1)).as("n_after"))
-      .join(
-        a.groupBy(col("shard_before").as("shard"))
-          .agg(count(lit(1)).as("n_before")),
-        Seq("shard"), "full_outer")
-      .select(col("shard"),
-        coalesce(col("n_before"), lit(0L)).as("n_before"),
-        coalesce(col("n_after"), lit(0L)).as("n_after"),
-        coalesce(col("n_entered"), lit(0L)).as("n_entered"),
-        // HRW: only the NEW shard (id 8) gains keys
-        (coalesce(col("n_entered"), lit(0L)) === 0L || col("shard") === 8L)
-          .as("hrw_invariant"))
-  }
-
-  /** Deterministic per-group top-N sampling: exactly `n` rows per group,
-    * chosen by the Knuth-mixed id hash (not data order, not an RNG) — the
-    * reproducible "examples per domain" picker of eval-set builders. One
-    * window shuffle keyed by the group column. */
-  private def groupSample(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("lang"), col("source"))
-      .orderBy(col("mix"), col("doc_id"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"),
-        graft.operators.Sampling.idBucket(col("doc_id"), 1000000007).as("mix"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("doc_id"), col("lang"), col("source"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Winsorized per-group statistics: rank-selected p05/p95 bounds (pure
-    * integer selection — no interpolation, so any engine picks the same
-    * bound values), then the mean of the clamped series in integer
-    * cents. The robust-mean pattern of metrics pipelines, computed with
-    * one window + one aggregate, both keyed by event_type. */
-  private def winsorizedStats(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("cents"), col("event_id"))
-    val ranked = Tables.events(spark, dir)
-      .select(col("event_type"), col("event_id"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("event_type"))))
-    val bounds = ranked
-      .withColumn("lo_rank", expr("greatest((n * 5) div 100, 1L)"))
-      .withColumn("hi_rank", expr("least((n * 95) div 100 + 1, n)"))
-      .filter(col("rn") === col("lo_rank") || col("rn") === col("hi_rank"))
-      .groupBy(col("event_type"))
-      .agg(min(col("cents")).as("p05_cents"), max(col("cents")).as("p95_cents"))
-    ranked.join(broadcast(bounds), Seq("event_type"))
-      .select(col("event_type"), col("p05_cents"), col("p95_cents"),
-        greatest(least(col("cents"), col("p95_cents")), col("p05_cents")).as("clamped"))
-      .groupBy(col("event_type"), col("p05_cents"), col("p95_cents"))
-      .agg(count(lit(1)).as("n"), sum(col("clamped")).as("wsum"))
-      .select(col("event_type"), col("p05_cents"), col("p95_cents"), col("n"),
-        expr("(wsum - ((wsum % n + n) % n)) div n").as("wins_mean_cents"))
-  }
-
-  /** Window-function breadth (§2.7 checklist): percent_rank / cume_dist
-    * (quantized to integer bp — the ratios are exact small-int divisions,
-    * identical IEEE doubles in any engine), nth_value / first / last over
-    * an explicit unbounded ROWS frame, and lag with a default. The
-    * (cents, o_orderkey) ordering is total, so every rank function is
-    * tie-free and deterministic. */
-  private def windowFuncs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy(col("prio")).orderBy(col("cents"), col("o_orderkey"))
-    val wAll = wOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_orderpriority").as("prio"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .select(col("o_orderkey"), col("prio"), col("cents"),
-        floor(percent_rank().over(wOrd) * 10000).cast("long").as("pr_bp"),
-        floor(cume_dist().over(wOrd) * 10000).cast("long").as("cd_bp"),
-        nth_value(col("cents"), 3).over(wAll).as("third_cents"),
-        first(col("cents")).over(wAll).as("min_cents"),
-        last(col("cents")).over(wAll).as("max_cents"),
-        lag(col("cents"), 2, -1L).over(wOrd).as("lag2_cents"))
-  }
-
-  /** Array/map function breadth (§2.7 checklist): per order, the
-    * line-number-ordered quantity/price arrays run through the codegen'd
-    * higher-order functions — transform, filter, exists, forall,
-    * zip_with, aggregate — plus map_from_arrays/element_at. All values
-    * integer, so every engine agrees exactly. */
-  private def arrayMapFuncs(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir).select(
-      col("l_orderkey"), col("l_linenumber"),
-      col("l_quantity").cast("long").as("qty"),
-      floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("price_cents"))
-    // l_linenumber is NOT unique per order in the synthetic data — sort
-    // ONE struct array on the full (ln, qty, price) tuple and project
-    // both columns from it, so qtys[i] and prices[i] stay aligned
-    li.groupBy(col("l_orderkey"))
-      .agg(array_sort(collect_list(struct(
-        col("l_linenumber"), col("qty"), col("price_cents")))).as("srt"))
-      .select(col("l_orderkey"),
-        transform(col("srt"), s => s.getField("qty")).as("qtys"),
-        transform(col("srt"), s => s.getField("price_cents")).as("prices"))
-      .select(col("l_orderkey"),
-        size(col("qtys")).as("n"),
-        aggregate(transform(col("qtys"), x => x * 2), lit(0L), (a, x) => a + x)
-          .as("doubled_sum"),
-        size(filter(col("qtys"), x => x > 25)).as("n_big"),
-        exists(col("qtys"), x => x === 50).as("has_50"),
-        forall(col("qtys"), x => x > 0).as("all_pos"),
-        aggregate(zip_with(col("qtys"), col("prices"), (q, p) => q * p),
-          lit(0L), (a, x) => a + x).as("dot_cents"),
-        element_at(
-          map_from_arrays(array(lit("le25"), lit("gt25")),
-            array(size(filter(col("qtys"), x => x <= 25)),
-              size(filter(col("qtys"), x => x > 25)))),
-          "gt25").as("map_gt25"))
-  }
-
-  /** ROLLUP aggregation (grouping-sets coverage). */
-  private def rollupAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n"))
-
-  /** CUBE aggregation — completes the grouping-sets family. */
-  private def cubeAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n"))
-
-  /** PIVOT: per-user-cohort event counts spread over the (fixed, known)
-    * event-type set — explicit value list keeps the output schema static,
-    * which is both the deterministic and the 100 TB-safe form (a dynamic
-    * pivot needs a driver-side distinct scan first). */
-  private def pivotEvents(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy((col("user_id") % 10).as("cohort"))
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-      .agg(count(lit(1)))
-      .na.fill(0) // empty (cohort, type) combos: 0, like a FILTERed count
-
-  /** Semi/anti-join coverage: customers with vs without orders. */
-  private def semiAntiOrders(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir).select(col("o_custkey").as("c_custkey"))
-    val withOrders = c.join(o, Seq("c_custkey"), "left_semi").agg(count(lit(1)).as("n_with"))
-    val withoutOrders = c.join(o, Seq("c_custkey"), "left_anti").agg(count(lit(1)).as("n_without"))
-    withOrders.crossJoin(withoutOrders)
-  }
-
-  /** Tumbling-window aggregation — the same transform serves the
-    * Structured Streaming path (StreamingMetrics.windowedAgg); batch and
-    * stream share one plan. */
-  private def windowedAgg(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingMetrics.windowedAgg(
-      Tables.events(spark, dir), "1 hour", "2 hours")
-
-  /** The same windowed aggregation executed by the streaming ENGINE
-    * (micro-batches, state store, AvailableNow backlog replay) — shares
-    * windowed_agg's oracle: one logical answer, batch and streaming
-    * physical execution. */
-  private def streamWindowedAgg(spark: SparkSession, dir: String): DataFrame = {
-    // (window, type)-keyed state: hour buckets over the span × 5 types
-    val c = streamCensus(spark, dir)
-    graft.streaming.StreamingMetrics.availableNowWindowedAgg(
-      spark, dir, "1 hour", "2 hours",
-      stateKeys = c.windowBuckets(3600000L) * 5)
-  }
-
-  private val lateAuditCache = namedArtifactCache[String]("late_audit")
-
-  /** Late-data + restart-recovery audit
-    * ([[graft.streaming.StreamingMetrics.lateDataAudit]]): 90% of
-    * events stream first, the checkpointed query restarts on the
-    * held-back 10%, and the recovered watermark drops exactly the rows
-    * whose day-window already closed. Cached per dir — the two-phase
-    * run is one logical query. */
-  private def streamLateData(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(lateAuditCache, dir) {
-      graft.streaming.StreamingMetrics.lateDataAudit(spark,
-        Tables.events(spark, dir).select(col("event_id"), col("ts")),
-        s"target/stream_late/${java.lang.Integer.toHexString(dir.hashCode)}",
-        // day-window-keyed state: one key per day in the event span
-        stateKeys = streamCensus(spark, dir).windowBuckets(86400000L))
-        .cache()
-    }
-
-  /** Skew-safe salted join, oracled against the plain join it must equal:
-    * lineitem (probe, salted by row id) ⋈ nation-sized dim (build,
-    * replicated saltFactor×). The salt spreads any hot key over 8
-    * reducers; results are identical by construction. */
-  private def saltedJoinAgg(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"))
-    val sup = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-      .withColumnRenamed("s_suppkey", "l_suppkey")
-    graft.operators.Joins.salted(li, sup, "l_suppkey", saltFactor = 8, bigIdCol = "l_orderkey")
-      .groupBy(col("s_nationkey"))
-      .agg(round(sum(col("l_extendedprice")), 2).as("sum_price"), count(lit(1)).as("n"))
-  }
-
-  /** Window-function breadth: per-user gap to the previous event (lag)
-    * and quartile bucket by value (ntile) — integer-exact outputs. */
-  private def eventDeltas(spark: SparkSession, dir: String): DataFrame = {
-    val wLag = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val wTile = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("cents"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ts"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .select(
-        col("user_id"), col("event_id"),
-        coalesce(unix_millis(col("ts")) - lag(unix_millis(col("ts")), 1).over(wLag), lit(-1L))
-          .as("gap_ms"),
-        ntile(4).over(wTile).as("value_quartile"))
-  }
-
-  /** Set-operation coverage: suppliers of returned items INTERSECT /
-    * EXCEPT suppliers of non-returned items, as counts. */
-  private def setOpsSuppliers(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val returned = li.filter(col("l_returnflag") === "R").select(col("l_suppkey"))
-    val kept = li.filter(col("l_returnflag") =!= "R").select(col("l_suppkey"))
-    returned.intersect(kept).agg(count(lit(1)).as("n_both"))
-      .crossJoin(returned.except(kept).agg(count(lit(1)).as("n_only_returned")))
-  }
-
-  /** Distinct aggregation coverage: distinct parts/suppliers per return
-    * flag. */
-  private def distinctParts(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        count(lit(1)).as("n_rows"))
-
-  /** Table profiling — the ANALYZE/data-quality shape: per-column null
-    * count, distinct count, min/max over lineitem's numeric columns. */
-  private def tableProfile(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    cols.map { c =>
-      li.agg(
-        lit(c).as("column_name"),
-        count(lit(1)).as("n_rows"),
-        count(when(col(c).isNull, 1)).as("n_nulls"),
-        countDistinct(col(c)).as("n_distinct"),
-        round(min(col(c)), 2).as("min_val"),
-        round(max(col(c)), 2).as("max_val"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** Exact p50/p95 of the event value (in integer cents — engine-stable
-    * interpolation on identical integer inputs) per event type. */
-  private def metricsQuantiles(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("event_type"))
-      .agg(
-        floor(expr("percentile(cents, 0.5)") * 100 + 0.5).cast("long").as("p50_q"),
-        floor(expr("percentile(cents, 0.95)") * 100 + 0.5).cast("long").as("p95_q"))
-
-  /** Diversified retrieval: cosine shortlist 20 → greedy MMR selection of
-    * 5 with λ = 0.7 — see [[graft.operators.Knn.mmrTopK]]. */
-  private def knnMmr(spark: SparkSession, dir: String): DataFrame =
-    Knn.mmrTopK(
-      Tables.embeddingQueries(spark, dir),
-      Tables.embeddingBase(spark, dir),
-      k = 5, shortlist = 20, lambdaNum = 7)
-
-  /** Graph centrality for curation: documents are linked when they share
-    * a RARE word-8-gram (2 ≤ df ≤ 5 — the contamination-scan blocking
-    * key), then 3 rounds of exact-int64 PageRank rank the most
-    * re-quoted documents. Blocking on rare grams bounds the self-join
-    * fan-out at ≤ df·(df−1)/2 pairs per gram — the quadratic never
-    * materializes at scale.
-    *
-    * Gram identity is its PolyHash, computed by the streaming
-    * [[graft.functions.ShingleHashes]] kernel: no 50-char gram strings
-    * are ever built (the HOF string path is interpreted and was 30× the
-    * query's cost) and every downstream join/groupBy keys on int64. */
-  /** Documents linked by a shared RARE word-8-gram (2 ≤ df ≤ 5): the
-    * blocking-bounded edge list feeding both graph analytics queries. */
-  private val sharedGramEdgeCache = namedArtifactCache[String]("shared_gram_edges")
-
-  /** The rare-gram doc-similarity graph is a BUILT ARTIFACT (like the
-    * NN-Descent adjacency): derive once per fixture dir and reuse across
-    * the analytics that consume it (PageRank, triangles). */
-  private def sharedGramEdges(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(sharedGramEdgeCache, dir)(buildSharedGramEdges(spark, dir).localCheckpoint())
-
-  private def buildSharedGramEdges(spark: SparkSession, dir: String): DataFrame = {
-    // Shingle-hashing is the corpus-sized CPU work: repartition first so
-    // it runs on every core (the raw scan is one small file = one task),
-    // and materialize it once — otherwise it re-runs for the df count
-    // AND for each side of the edge self-join (4 full passes).
-    val cores = spark.sparkContext.defaultParallelism
-    val byGram = Tables.documents(spark, dir).repartition(cores)
-      .select(col("doc_id"), graft.functions.GraftFunctions.shingleHashes(
-        TextFunctions.tokens(col("text")), 8)("ph").as("phs"))
-      .select(col("doc_id"), explode(array_distinct(col("phs"))).as("g"))
-      .localCheckpoint()
-    val rare = byGram.groupBy(col("g"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, 5))
-      .select(col("g"))
-    val rareSh = byGram.join(rare, Seq("g")).localCheckpoint()
-    // the pair census replaces a bare .distinct(): same shuffle shape
-    // (groupBy on the pair key), and the shared-gram count becomes the
-    // edge weight w = max(1, 6 − #shared) — more shared rare grams =
-    // closer — consumed by sssp_weighted; the unweighted analytics
-    // (PageRank, triangles, BFS, k-core, label-prop) project it away
-    rareSh.as("a")
-      .join(rareSh.as("b"), Seq("g"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-      .agg(greatest(lit(1L), lit(6L) - count(lit(1))).as("w"))
-  }
-
-  private def pagerankSharedGrams(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.pageRankInt(sharedGramEdges(spark, dir), iters = 3)
-      .select(col("id").as("doc_id"), col("deg"), col("score"))
-
-  /** Triangle counts on the shared-rare-gram graph — the clustering/
-    * community-density signal next to PageRank's centrality. */
-  private def graphTriangles(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.triangleCounts(sharedGramEdges(spark, dir))
-      .select(col("id").as("doc_id"), col("n_triangles"))
-
-  /** Multi-source BFS on the shared-rare-gram graph
-    * ([[graft.operators.Graph.bfsHops]], 4 rounds): hop distance from
-    * the nearest seed document (every 50th doc id) — the traversal
-    * primitive next to the propagation-style analytics, e.g. "how close
-    * is each document to a known-bad seed set". */
-  private def bfsHops(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.bfsHops(
-      sharedGramEdges(spark, dir),
-      Tables.documents(spark, dir).filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("id")),
-      rounds = 4)
-      .select(col("id").as("doc_id"), col("hops"))
-
-  /** Weighted shortest path on the shared-rare-gram graph
-    * ([[graft.operators.Graph.ssspWeighted]], 4 Bellman–Ford rounds)
-    * from the same seed set as [[bfsHops]]: edge weight = max(1, 6 −
-    * #shared rare grams), so heavily-overlapping documents are CLOSER —
-    * "how contaminated is each document by a known-bad seed, counting
-    * strength of overlap", the weighted refinement of hop distance. */
-  private def ssspWeighted(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.ssspWeighted(
-      sharedGramEdges(spark, dir),
-      Tables.documents(spark, dir).filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("id")),
-      rounds = 4)
-      .select(col("id").as("doc_id"), col("dist"))
-
-  /** 2-core peeling of the shared-gram document graph
-    * ([[graft.operators.Graph.kCorePeel]], 4 rounds): strips the
-    * tree-like fringe so only documents embedded in CYCLES of near-dup
-    * relations remain — the dense template/boilerplate clusters worth a
-    * human look, vs leaf nodes that merely touch one. peel_round says
-    * WHEN each doc fell (0 = survived). */
-  private def kcoreSharedGrams(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.kCorePeel(sharedGramEdges(spark, dir), k = 2, rounds = 4)
-      .select(col("id").as("doc_id"), col("peel_round"))
-
-  /** C4-style duplicate-block removal with reassembly
-    * ([[graft.text.Dedup.blockDedup]], 10-token blocks). */
-  private def blockDedup(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Dedup.blockDedup(
-      Tables.documents(spark, dir), "doc_id", "text", blockTokens = 10)
-
-  /** Corpus-level trigram novelty ([[graft.text.Dedup.trigramNovelty]]). */
-  private def trigramNovelty(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Dedup.trigramNovelty(Tables.documents(spark, dir), "doc_id", "text")
-
-  /** EXACT global Jaccard ≥ 0.6 pairs via prefix filtering
-    * ([[graft.text.Dedup.setSimJoin]], the AllPairs/PPJoin shape) — the
-    * deterministic complement to MinHash: no blocking key, no
-    * probabilistic misses, still never all-pairs. */
-  private def setsimJoin(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Dedup.setSimJoin(
-      Tables.documents(spark, dir), "doc_id", "text", thresholdBps = 6000)
-      .select(col("id_a"), col("id_b"), col("jaccard_bp"))
-
-  /** MERGE INTO over the orders snapshot
-    * ([[graft.operators.Snapshots.mergeInto]]): the source batch updates
-    * every 7th order (+5% in integer cents), inserts a shifted copy of
-    * every 11th, and the matched-delete clause drops matched rows whose
-    * incoming cents are ≡ 0 (mod 7). */
-  private def mergeIntoOrders(spark: SparkSession, dir: String): DataFrame = {
-    val tgt = Tables.orders(spark, dir).select(col("o_orderkey"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val upd = tgt.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), (col("cents") + expr("cents div 20")).as("cents"))
-    val ins = tgt.filter(col("o_orderkey") % 11 === 0)
-      .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-        expr("cents div 2").as("cents"))
-    graft.operators.Snapshots.mergeInto(
-      tgt, upd.unionByName(ins), "o_orderkey", Seq("cents"),
-      deleteWhen = col("src_cents") % 7 === 0)
-  }
-
-  /** BPE tokenizer training (graft.text.Bpe): 6 merge rounds over the
-    * corpus' word-frequency table. The corpus-sized work is one tokenize
-    * + groupBy; every round then runs over the vocabulary-sized distinct-
-    * word table only. */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, String, String, Long)]]
-
-  /** The 6-round merge table, memoized per dir (file-convention model
-    * memo) — bpe_merges and bpe_encode share one training run. */
-  private def bpeMergeRows(spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    bpeMergesCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:bpe_merges")
-      graft.text.Bpe.trainMerges(Tables.documents(spark, dir), "text", rounds = 6)
-        .orderBy(col("round")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    })
-
-  private def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    bpeMergeRows(spark, dir).toDF("round", "pair", "merged", "cnt")
-  }
-
-  /** Tokenizer APPLICATION — the per-document encode pass of the trained
-    * BPE model (the token-counting step every training pipeline runs over
-    * the full corpus). The merge table is a 6-row driver artifact (like a
-    * centroid table); the encode itself is a row-local fold — no shuffle,
-    * no UDF, scales as a map stage. Output is count- AND content-checked
-    * (PolyHash over the symbol stream). */
-  private def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val merges = bpeMergeRows(spark, dir).map { case (_, p, m, _) => (p, m) }
-    graft.text.Bpe.applyMerges(docs, "text", merges)
-      .select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_words"),
-        size(col("bpe_symbols")).cast("long").as("n_bpe"),
-        graft.functions.PolyHash.column(
-          array_join(col("bpe_symbols"), " "), 257L, 1000000007L).as("sym_hash"))
-  }
-
-  /** Tokenizer FERTILITY per language — BPE symbols per whitespace word
-    * in basis points, the standard multilingual-tokenizer diagnostic
-    * (high fertility = the vocabulary under-serves that language; zh
-    * stays near char-level while en compresses). Same row-local encode
-    * pass as [[bpeEncode]], one tiny per-lang aggregate on top. */
-  private def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val merges = bpeMergeRows(spark, dir).map { case (_, p, m, _) => (p, m) }
-    graft.text.Bpe.applyMerges(docs, "text", merges)
-      .select(col("lang"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_words"),
-        size(col("bpe_symbols")).cast("long").as("n_bpe"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe"))
-      .select(col("lang"), col("n_docs"), col("n_words"), col("n_bpe"),
-        expr("(10000 * n_bpe) div n_words").as("fertility_bp"))
-  }
-
-  /** Tokenizer VOCABULARY-SIZE knob curve: corpus fertility at merge
-    * budgets 0 / 3 / 6 from ONE training run — the vocab-pruning read a
-    * tokenizer engineer takes before freezing vocab size (each extra
-    * merge buys shorter sequences; the curve shows the marginal return).
-    * Rung 0 is the char-level floor. The merge table is the memoized
-    * 6-round chain; each rung is a row-local re-encode + one aggregate.
-    * The oracle reads the SAME chain's intermediate states dw0/dw3/dw6 —
-    * one replayed training, three rungs. */
-  private def bpeVocabCurve(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val merges = bpeMergeRows(spark, dir).map { case (_, p, m, _) => (p, m) }
-    def rung(m: Int): DataFrame =
-      graft.text.Bpe.applyMerges(docs, "text", merges.take(m))
-        .select(TextFunctions.tokenCount(col("text")).cast("long").as("n_words"),
-          size(col("bpe_symbols")).cast("long").as("n_bpe"))
-        .agg(sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe"))
-        .select(lit(m.toLong).as("n_merges"), col("n_words"), col("n_bpe"),
-          expr("(10000 * n_bpe) div n_words").as("fertility_bp"))
-    rung(0).unionByName(rung(3)).unionByName(rung(6))
-  }
-
-  /** 1-in-N document-sample rungs for BPE training (r10 verdict item 7).
-    * [[graft.text.Bpe.trainMerges]] is one driver round-trip per merge —
-    * vocabulary-sized per round but SEQUENTIAL, so a 32k-merge vocab
-    * means 32k jobs; the standard remedy is training the merge table on
-    * a deterministic document sample (pair statistics are corpus-level
-    * frequencies — a 1-in-N id-residue sample estimates them with the
-    * full corpus only paying the final re-encode). mod 1 = full-corpus
-    * training (the shipped table); 4 and 16 are the sampled rungs.
-    * The curve scores each rung's vocabulary on the WHOLE corpus:
-    * fertility drift + merge-table agreement are the measured cost of
-    * the 16× training-input cut. */
-  private val BpeSampleMods = Seq(1, 4, 16)
-
-  private val bpeSampledCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Long, String, String, Long)]]
-  private def bpeSampledMergeRows(spark: SparkSession, dir: String,
-      mod: Int): Seq[(Long, String, String, Long)] =
-    if (mod == 1) bpeMergeRows(spark, dir)
-    else bpeSampledCache.getOrElseUpdate((dir, mod), {
-      ArtifactLedger.recordNamedBuild(s"model:bpe_merges_mod$mod")
-      graft.text.Bpe.trainMerges(
-        Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(mod.toLong)) === 0),
-        "text", rounds = 6)
-        .orderBy(col("round")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    })
-
-  private def bpeSampledCurve(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val fullPairs = bpeMergeRows(spark, dir).map(_._2).toSet
-    def rung(mod: Int): DataFrame = {
-      val rows = bpeSampledMergeRows(spark, dir, mod)
-      val shared = rows.count(r => fullPairs.contains(r._2))
-      graft.text.Bpe.applyMerges(docs, "text", rows.map { case (_, p, m, _) => (p, m) })
-        .select(TextFunctions.tokenCount(col("text")).cast("long").as("n_words"),
-          size(col("bpe_symbols")).cast("long").as("n_bpe"))
-        .agg(sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe"))
-        .select(lit(mod.toLong).as("sample_mod"), col("n_words"), col("n_bpe"),
-          expr("(10000 * n_bpe) div n_words").as("fertility_bp"),
-          lit(shared.toLong).as("n_shared_merges"))
-    }
-    BpeSampleMods.map(rung).reduce(_.unionByName(_))
-  }
-
-  /** DuckDB replay of the full BPE training chain: per round, pair
-    * counting via list_transform over the split symbol string, arg-max
-    * with the same (cnt DESC, pair ASC) tie-break, and the same two-pass
-    * literal merge rewrite. */
-  /** The shared BPE training chain (CTEs wf, s0, p/c/b/s per round) —
-    * prefix of both the merge-table oracle and the encode oracle. */
-  /** Training-chain CTE body with a corpus predicate and a name prefix —
-    * the primitive under [[bpeChainCtes]] (full corpus, bare names) and
-    * the sampled-training rungs of `bpe_sampled_curve` (1-in-N document
-    * sample, `u$N` prefix). */
-  private def bpeChainBody(rounds: Int, pfx: String, docPred: String): String = {
-    // AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and each
-    // round references the previous ~4x — inlined, the 6-round chain
-    // re-evaluates 4^6 times and never finishes
-    val head =
-      s"""${pfx}wf AS MATERIALIZED (SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest(string_split(trim(text), ' ')) AS word FROM documents WHERE $docPred)
-         |  WHERE word <> '' GROUP BY 1),
-         |${pfx}s0 AS MATERIALIZED (SELECT freq, array_to_string(string_split(word, ''), ' ') AS seq FROM ${pfx}wf)""".stripMargin
-    val steps = (1 to rounds).map { r =>
-      s"""${pfx}p$r AS MATERIALIZED (SELECT unnest(list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i+1])) AS pair, freq
-         |  FROM (SELECT string_split(seq, ' ') AS l, freq FROM ${pfx}s${r - 1})),
-         |${pfx}c$r AS MATERIALIZED (SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM ${pfx}p$r GROUP BY 1),
-         |${pfx}b$r AS MATERIALIZED (SELECT pair, replace(pair, ' ', '') AS merged, cnt FROM ${pfx}c$r ORDER BY cnt DESC, pair LIMIT 1),
-         |${pfx}s$r AS MATERIALIZED (SELECT freq, trim(replace(replace(' ' || seq || ' ',
-         |    (SELECT ' ' || pair || ' ' FROM ${pfx}b$r), (SELECT ' ' || merged || ' ' FROM ${pfx}b$r)),
-         |    (SELECT ' ' || pair || ' ' FROM ${pfx}b$r), (SELECT ' ' || merged || ' ' FROM ${pfx}b$r))) AS seq
-         |  FROM ${pfx}s${r - 1})""".stripMargin
-    }
-    (head +: steps).mkString(",\n")
-  }
-
-  private def bpeChainCtes(rounds: Int): String =
-    "WITH " + bpeChainBody(rounds, "", "TRUE")
-
-  private def bpeOracle(rounds: Int): String = {
-    val finals = (1 to rounds)
-      .map(r => s"SELECT CAST($r AS BIGINT) AS round, pair, merged, cnt FROM b$r")
-      .mkString("\nUNION ALL ")
-    bpeChainCtes(rounds) + "\n" + finals
-  }
-
-  /** Per-document re-encode CTEs shared by the encode + fertility
-    * oracles: the training chain, then the identical two-pass literal
-    * rewrite applied to every document word. */
-  /** Full-corpus re-encode body against the merge chain `$chainPfx`,
-    * dw-table names prefixed `$pfx` — shared by the encode/fertility
-    * oracles (bare names, full chain) and the sampled-training rungs
-    * (re-encode the WHOLE corpus with a sample-trained vocabulary). */
-  private def bpeDocBody(rounds: Int, pfx: String, chainPfx: String): String = {
-    val docHead =
-      s"""${pfx}dw0 AS MATERIALIZED (SELECT doc_id, widx,
-         |    array_to_string(string_split(word, ''), ' ') AS seq FROM (
-         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word,
-         |         unnest(generate_series(1, len(string_split(trim(text), ' ')))) AS widx
-         |  FROM documents))""".stripMargin
-    val docSteps = (1 to rounds).map { r =>
-      s"""${pfx}dw$r AS MATERIALIZED (SELECT doc_id, widx, trim(replace(replace(' ' || seq || ' ',
-         |    (SELECT ' ' || pair || ' ' FROM ${chainPfx}b$r), (SELECT ' ' || merged || ' ' FROM ${chainPfx}b$r)),
-         |    (SELECT ' ' || pair || ' ' FROM ${chainPfx}b$r), (SELECT ' ' || merged || ' ' FROM ${chainPfx}b$r))) AS seq
-         |  FROM ${pfx}dw${r - 1})""".stripMargin
-    }
-    (docHead +: docSteps).mkString(",\n")
-  }
-
-  private def bpeDocCtes(rounds: Int): String =
-    Seq(bpeChainCtes(rounds), bpeDocBody(rounds, "", "")).mkString(",\n")
-
-  /** Encode oracle: re-derive the merge table (same chain), then apply
-    * the identical two-pass literal rewrite to every document word and
-    * aggregate back to per-doc token counts + a PolyHash of the full
-    * symbol stream (content-exact, not just count-exact). */
-  private def bpeEncodeOracle(rounds: Int): String = {
-    val streamed =
-      s"""docsym AS MATERIALIZED (SELECT doc_id, count(*) AS n_words,
-         |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe,
-         |  string_agg(seq, ' ' ORDER BY widx) AS sym FROM dw$rounds GROUP BY 1)
-         |SELECT doc_id, CAST(n_words AS BIGINT) AS n_words, n_bpe,
-         |  ${duckPolyHash("sym", 257L, 1000000007L)} AS sym_hash
-         |FROM docsym""".stripMargin
-    bpeDocCtes(rounds) + ",\n" + streamed
-  }
-
-  /** Fertility oracle: the same re-encode, aggregated per language. */
-  private def bpeFertilityOracle(rounds: Int): String = {
-    val streamed =
-      s"""docagg AS MATERIALIZED (SELECT doc_id, count(*) AS n_words,
-         |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe
-         |  FROM dw$rounds GROUP BY 1)
-         |SELECT d.lang, count(*) AS n_docs,
-         |  CAST(sum(a.n_words) AS BIGINT) AS n_words,
-         |  CAST(sum(a.n_bpe) AS BIGINT) AS n_bpe,
-         |  CAST((10000 * CAST(sum(a.n_bpe) AS BIGINT)) // CAST(sum(a.n_words) AS BIGINT) AS BIGINT) AS fertility_bp
-         |FROM docagg a JOIN documents d USING (doc_id) GROUP BY 1""".stripMargin
-    bpeDocCtes(rounds) + ",\n" + streamed
-  }
-
-  /** DuckDB replay of the MMR greedy trajectory. The cosine is the
-    * bit-exact fold replay (three sequential list_reduce sums = the fused
-    * kernel's three accumulators, then dot / (√na·√nb)), so the integer
-    * basis-point quantization agrees and every argmax decision is
-    * reproduced. */
-  private def mmrOracle(k: Int, shortlist: Int, lambdaNum: Int): String = {
-    def fold(body: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(generate_series(1, len(x.e)), i -> $body)), (a, v) -> a + v)"
-    def cos = s"(${fold("x.e[i] * y.e[i]")} / (sqrt(${fold("x.e[i] * x.e[i]")}) * sqrt(${fold("y.e[i] * y.e[i]")})))"
-    val head =
-      s"""WITH q AS MATERIALIZED (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS e
-         |  FROM embeddings WHERE vec_id % 20 = 0),
-         |b AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |  FROM embeddings WHERE vec_id % 20 <> 0),
-         |sc AS MATERIALIZED (SELECT x.query_id, y.vec_id, $cos AS cos
-         |  FROM q x CROSS JOIN b y),
-         |cands AS MATERIALIZED (SELECT query_id, vec_id,
-         |    CAST(floor(cos * 10000) AS BIGINT) AS rel_bps
-         |  FROM (SELECT query_id, vec_id, cos, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rn FROM sc)
-         |  WHERE rn <= $shortlist),
-         |ce AS MATERIALIZED (SELECT c.query_id, c.vec_id, b.e
-         |  FROM cands c JOIN b ON b.vec_id = c.vec_id),
-         |sims AS MATERIALIZED (SELECT x.query_id, x.vec_id AS a, y.vec_id AS b,
-         |    CAST(floor($cos * 10000) AS BIGINT) AS sim_bps
-         |  FROM ce x JOIN ce y ON x.query_id = y.query_id AND x.vec_id <> y.vec_id),
-         |g1 AS MATERIALIZED (SELECT query_id, vec_id, 1 AS pick
-         |  FROM (SELECT query_id, vec_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY rel_bps DESC, vec_id) AS rn FROM cands)
-         |  WHERE rn = 1)""".stripMargin
-    val rounds = (2 to k).map { r =>
-      s"""m$r AS MATERIALIZED (SELECT s.query_id, s.a AS vec_id, max(s.sim_bps) AS ms
-         |  FROM sims s JOIN g${r - 1} g ON g.query_id = s.query_id AND g.vec_id = s.b
-         |  GROUP BY 1, 2),
-         |p$r AS MATERIALIZED (SELECT query_id, vec_id, $r AS pick FROM (
-         |  SELECT m.query_id, m.vec_id, row_number() OVER (PARTITION BY m.query_id
-         |      ORDER BY $lambdaNum * c.rel_bps - ${10 - lambdaNum} * m.ms DESC, m.vec_id) AS rn
-         |  FROM m$r m JOIN cands c ON c.query_id = m.query_id AND c.vec_id = m.vec_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM g${r - 1} x
-         |    WHERE x.query_id = m.query_id AND x.vec_id = m.vec_id))
-         |  WHERE rn = 1),
-         |g$r AS MATERIALIZED (SELECT * FROM g${r - 1} UNION ALL SELECT * FROM p$r)""".stripMargin
-    }
-    (head +: rounds).mkString(",\n") +
-      s"\nSELECT query_id, vec_id AS neighbor_id, CAST(pick AS INTEGER) AS pick FROM g$k"
-  }
-
-  /** Weighted deterministic sampling: keep probability proportional to
-    * document length (capped at 1.0) — the up/down-weighting step of a
-    * data-mixing recipe, as a map-side hash filter (see
-    * [[graft.operators.Sampling.weightedSample]]). */
-  private def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.weightedSample(
-      Tables.documents(spark, dir)
-        .withColumn("w_bps", least(col("n_chars") * 20, lit(10000)).cast("long")),
-      "doc_id", col("w_bps"))
-      .select(col("doc_id"), col("w_bps"))
-
-  /** Snapshot diff over two derived versions of `orders`: drops keys
-    * ≡3 (mod 97) from the old side, ≡7 (mod 89) from the new side, and
-    * bumps the price 10% on keys ≡11 (mod 83) — so every change class
-    * appears and the classification is fully deterministic. Prices are
-    * integer cents (exact in both engines — no float rounding rule) and
-    * an absent side projects as −1 instead of null so the compare is over
-    * non-null integers. */
-  private def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val oldSnap = orders.filter(col("o_orderkey") % 97 =!= 3)
-    val newSnap = orders.filter(col("o_orderkey") % 89 =!= 7)
-      .withColumn("cents",
-        when(col("o_orderkey") % 83 === 11, col("cents") + expr("cents div 10"))
-          .otherwise(col("cents")))
-    Snapshots.diff(oldSnap, newSnap, "o_orderkey", Seq("cents"))
-      .select(col("o_orderkey"), col("change_type"),
-        coalesce(col("old_cents"), lit(-1L)).as("old_cents"),
-        coalesce(col("new_cents"), lit(-1L)).as("new_cents"))
-  }
-
-  /** 3σ anomaly scan over the minutely value series. The flag compares
-    * (n·x − T)²·(n−1) against 9·n·(n·Σx² − T²) — the z-score test with
-    * every aggregate an exact int64 and the final comparison a fixed
-    * sequence of IEEE-double ops on those exact inputs, so the boundary
-    * decision is bit-reproducible in any engine (no mean/stddev
-    * fold-order drift). Cents are floor(v·100 + 0.5) — a fixed IEEE
-    * mul/add/floor sequence, unlike round() whose double path is a
-    * per-library special case (the one construct family that stayed
-    * red in the external gate for three rounds: a whole-table bucket
-    * SUM surfaces a single diverging row that post-sum-rounded or
-    * binned round() queries absorb). */
-  private def metricsAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val ms = unix_millis(col("ts"))
-    val perMin = Tables.events(spark, dir)
-      .select((ms - pmod(ms, lit(60000L))).as("bucket_ms"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("bucket_ms"))
-      .agg(sum(col("cents")).as("x"))
-    val glob = perMin.agg(
-      count(lit(1)).as("n"), sum(col("x")).as("t"),
-      sum(col("x") * col("x")).as("sx2"))
-    // self-multiply, not pow(·, 2): IEEE multiplication is correctly
-    // rounded in every engine, while pow's y=2 path is a per-library
-    // special case — the one construct that broke oracle portability
-    val dev = (col("n") * col("x") - col("t")).cast("double")
-    val lhs = dev * dev * (col("n") - 1).cast("double")
-    val rhs = lit(9.0) * col("n").cast("double") *
-      (col("n").cast("double") * col("sx2").cast("double") -
-        col("t").cast("double") * col("t").cast("double"))
-    // direction as ±1 BIGINT, not 'high'/'low' strings: with the other
-    // two columns already exact int64, this keeps the whole output free
-    // of string/NULL canonicalization — one less way an external checker
-    // can disagree with a value-identical result
-    perMin.crossJoin(broadcast(glob))
-      .filter(lhs > rhs)
-      .select(col("bucket_ms"), col("x").as("cents_sum"),
-        when(col("x") * col("n") > col("t"), lit(1L)).otherwise(lit(-1L))
-          .as("direction"))
-  }
-
-  /** GROUPING SETS coverage (the general form behind rollup/cube): the
-    * (flag, status) / (flag) / () sets in ONE pass — Spark expands the
-    * sets into a single Expand + hash aggregate, so adding a grouping set
-    * costs map-side rows, never an extra scan of the fact table. The
-    * per-column `grouping()` bits disambiguate set-null from data-null. */
-  private def groupingSetsAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupingSets(
-        Seq(Seq(col("l_returnflag"), col("l_linestatus")), Seq(col("l_returnflag")), Seq()),
-        col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        (grouping(col("l_returnflag")) * 2 + grouping(col("l_linestatus")))
-          .cast("long").as("gset"),
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        count(lit(1)).as("n"))
-
-  /** Second-moment statistics per event type: Pearson correlation between
-    * the event value and its JSON payload key, plus population covariance
-    * and sample stddev — one partial-aggregable pass (co-moment sketches
-    * merge associatively, same scale shape as avg/sum). */
-  private def metricsCorrelation(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(
-        col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(corr(col("cents"), col("k")), 4).as("corr_vk"),
-        round(covar_pop(col("cents"), col("k")), 2).as("covar_vk"),
-        round(stddev_samp(col("cents")), 2).as("stddev_cents"))
-
-  /** Equi-width histogram of the event value (20 integer-cent bins between
-    * the observed min/max): the global extent is a 1-row broadcast, the
-    * binning a map-side integer expression, the histogram one hash
-    * aggregate — the standard profile/visualization query at any scale. */
-  private def eventsHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val cents = Tables.events(spark, dir)
-      .select(round(col("value") * 100).cast("long").as("cents"))
-    val ext = cents.agg(
-      min(col("cents")).as("lo"),
-      // integer ceil((max-min+1)/20) — exact int64 arithmetic, no
-      // float-division rounding rule to match across engines
-      expr("(max(cents) - min(cents) + 20) div 20").as("width"))
-    cents.crossJoin(broadcast(ext))
-      .groupBy(expr("(cents - lo) div width").as("bin"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("cents")).as("bin_min"),
-        max(col("cents")).as("bin_max"))
-  }
-
-  /** Minutely resample of the event stream with LOCF gap filling — see
-    * [[MetricsAnalytics.gapFillLocf]]. Sum kept in integer cents
-    * (floor-cents: bit-portable, see [[metricsAnomalies]]). */
-  private def metricsGapfill(spark: SparkSession, dir: String): DataFrame =
-    MetricsAnalytics.gapFillLocf(
-      Tables.events(spark, dir)
-        .select(col("ts"), floor(col("value") * 100 + 0.5).cast("long").as("cents")),
-      col("ts"), col("cents"), stepMs = 60000L)
-
-  private def q1Agg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-        round(avg(col("l_discount")), 4).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-
-  /** SCD Type-2 dimension build from the event stream — per user, the
-    * history of event_type state changes as [from, to) validity
-    * intervals. See [[Snapshots.scd2]]: one shuffle at any scale. */
-  private def scd2UserState(spark: SparkSession, dir: String): DataFrame =
-    Snapshots.scd2(Tables.events(spark, dir), "user_id", "event_type", "ts", "event_id")
-
-  /** Sequence packing for training batches (concat-and-chunk, 256-token
-    * bins, sharded by lang) — see [[graft.text.Curation.packSequences]]. */
-  private def sequencePack(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.packSequences(
-      Tables.documents(spark, dir), "doc_id", "text", "lang", capacity = 256)
-
-  /** Bloom-filter join pruning (the runtime-filter / dynamic-filtering
-    * pattern): BUILDING-segment customer keys → a 2048-word portable
-    * Bloom filter → map-side prune of orders BEFORE any join. Reports
-    * the pruned cardinality against the exact semi-join: no false
-    * negatives by construction, false positives deterministic (fixed
-    * hash family). At 100 TB the 16 KB filter rides the broadcast and
-    * the fact table never shuffles non-members. */
-  private def bloomJoinPrune(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir)
-      .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val orders = Tables.orders(spark, dir)
-    val words = Joins.bloomFilterWords(cust, "c_custkey", numWords = 2048)
-    val nPass = Joins.bloomProbe(orders, "o_custkey", words)
-      .agg(count(lit(1)).as("n_bloom_pass"))
-    val nTrue = orders
-      .join(cust.withColumnRenamed("c_custkey", "o_custkey"), Seq("o_custkey"), "left_semi")
-      .agg(count(lit(1)).as("n_true_match"))
-    nPass.crossJoin(nTrue)
-      .withColumn("n_false_pos", col("n_bloom_pass") - col("n_true_match"))
-  }
-
-  /** TPC-H Q4-shaped: order counts by priority where some line item
-    * shipped after the order date — a correlated EXISTS, planned as a
-    * hash LEFT SEMI join (equi key + residual range predicate), which
-    * stops probing an order on its first late item. */
-  private def q4OrderPriority(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_shipdate"))
-    Tables.orders(spark, dir)
-      .join(li,
-        col("o_orderkey") === col("l_orderkey") && col("l_shipdate") > col("o_orderdate"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("order_count"))
-  }
-
-  /** TPC-H Q10-shaped: top 20 customers by revenue lost to returns. */
-  private def q10Returned(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .filter(col("l_returnflag") === "R")
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-
-  /** UNPIVOT (melt): the wide per-returnflag profile turned long —
-    * `stack` keeps it one generator projection, no shuffle beyond the
-    * aggregate that built the wide table. */
-  private def unpivotProfile(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        // per-row integer cents BEFORE the sum: int64 sums are
-        // fold-order-free, so the value is identical in any engine.
-        // floor(x+0.5), not round(): Spark's HALF_UP round on double
-        // allocates a BigDecimal per row — 4× this query's cost at 10×
-        // probe scale; floor is pure double math and identical for
-        // these positive inputs
-        sum(floor(col("l_quantity") * 100 + 0.5).cast("long")).as("sum_qty_cents"),
-        sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("sum_price_cents"),
-        count(lit(1)).as("n_rows"))
-      .select(col("l_returnflag"), expr(
-        """stack(3,
-          |  'sum_qty_cents', sum_qty_cents,
-          |  'sum_price_cents', sum_price_cents,
-          |  'n_rows', n_rows) AS (metric, value)""".stripMargin))
-
-  /** Edit-distance near-duplicate pairs: block on (lang, source) plus a
-    * length-band CELL join — the bandPairs 3-cell trick on n_chars div
-    * 32, so near-length pairs are never split by a band boundary and
-    * the blocked equi-join (never a nested loop) bounds each candidate
-    * set. Survivors get exact Levenshtein over the 40-char prefixes. */
-  private def fuzzyDedupLev(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).select(
-      col("doc_id"), col("lang"), col("source"), col("n_chars"),
-      substring(col("text"), 1, 40).as("prefix"))
-    val band = expr("n_chars div 32")
-    val a = d.withColumn("__cell", explode(array(band - 1, band, band + 1)))
-    val b = d.withColumn("__cell", band)
-    a.as("a").join(b.as("b"),
-        col("a.lang") === col("b.lang") &&
-        col("a.source") === col("b.source") &&
-        col("a.__cell") === col("b.__cell") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .filter(abs(col("a.n_chars") - col("b.n_chars")) <= 32)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        levenshtein(col("a.prefix"), col("b.prefix")).as("lev"))
-      .filter(col("lev") <= 8)
-  }
-
-  /** Hopping-window aggregation (2 h windows, 1 h slide): each event
-    * lands in 2 windows — see [[graft.streaming.StreamingMetrics
-    * .hoppingWindowAgg]]; the same plan runs under the streaming engine. */
-  private def hoppingWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingMetrics.hoppingWindowAgg(
-      Tables.events(spark, dir), "2 hours", "1 hour", "2 hours")
-
-  /** Late-interaction (ColBERT MaxSim) retrieval: every 50th document's
-    * first 4 tokens act as the multi-vector query; top 5 documents by
-    * Σ per-query-token best dot product. Exact int64 throughout — see
-    * [[graft.text.LateInteraction]]. */
-  private def lateInteraction(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    graft.text.LateInteraction.maxSimTopK(
-      docs.filter(pmod(col("doc_id"), lit(50L)) === 0), docs,
-      "doc_id", "text", qLen = 4, k = 5)
-  }
-
-  /** CDC changelog apply (MERGE INTO semantics): the event stream is an
-    * op-coded changelog per user — `error` rows are deletes, everything
-    * else upserts its integer-cents payload. The materialized state is
-    * arg-max-by-time per key then a delete filter: ONE shuffle however
-    * long the history, the standard snapshot-from-changelog fold. */
-  private def cdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms").desc, col("event_id").desc)
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "D")
-      .select(col("user_id"), col("cents"), col("ms").as("last_ms"))
-  }
-
-  /** RANGE-frame window (time-based, not row-based): each event's
-    * trailing-1-hour spend per user. rangeBetween on epoch-ms makes the
-    * frame a value interval — peers at the same timestamp are all
-    * included, unlike a ROWS frame. */
-  private def rangeFrameTotal(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms"))
-      .rangeBetween(-3600000L, 0L)
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .select(col("user_id"), col("event_id"),
-        sum(col("cents")).over(w).as("trailing_hour_cents"))
-  }
-
-  /** Metadata-FILTERED vector search — the server backends' headline
-    * feature (Milvus boolean expressions, Redis FT.SEARCH hybrid
-    * predicates, Weaviate `where`): top-k restricted to base vectors
-    * whose label passes the predicate. The filter lands ON THE SCAN
-    * (pushed predicate), so selective filters shrink the candidate set
-    * before a single distance is computed — pre-filtering, not
-    * post-filtering, which k-limits can't recover from. */
-  private def knnFiltered(spark: SparkSession, dir: String): DataFrame =
-    // memoized: the exact filtered answer doubles as the ground truth
-    // for the filtered index-serving recall queries
-    memoSearch("filtered_exact", dir) {
-      Knn.exact(
-        Tables.embeddingQueries(spark, dir),
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % 20 =!= 0 && col("label").isin(0, 1, 2))
-          .select(col("vec_id"), col("embedding")),
-        KnnK)
-    }
-
-  /** FILTERED graph search ([[graft.index.GraphIndex.searchFiltered]]):
-    * the beam traverses the FULL adjacency (pruning disallowed nodes
-    * from expansion disconnects the graph under selective predicates —
-    * the ACORN observation), only the final rerank restricts to the
-    * allowed set. Same model as `knn_graph`; only serving composes the
-    * predicate, and the beam widens by ~1/selectivity (32 → 96 for the
-    * ~30% label slice) so the visited set carries enough ALLOWED
-    * candidates — the filtered-search knob ACORN turns. */
-  private def knnGraphFiltered(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("graph_filtered", dir) {
-      graft.index.GraphIndex.searchFiltered(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        graphAdj(spark, dir),
-        Tables.embeddings(spark, dir)
-          .filter(col("label").isin(0, 1, 2)).select(col("vec_id")),
-        KnnK, seedMod = 16, seedK = 8, hops = 3, beam = 96)
-    }
-
-  /** Filtered-graph recall vs the exact FILTERED ground truth — what
-    * traversal-preserving post-rerank costs under a ~30%-selectivity
-    * predicate. */
-  private def recallGraphFiltered(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphFiltered(spark, dir),
-      knnFiltered(spark, dir), KnnK)
-
-  /** Cell-blocked adjacency ([[graft.index.GraphIndex.buildCellBlocked]]
-    * over the shared IvfFlat coarse model) — the 100 TB build artifact,
-    * memoized like the exact graph. */
-  private def cellBlockedAdj(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("cell_adj", dir) {
-      graft.index.GraphIndex.buildCellBlocked(
-        Tables.embeddingBase(spark, dir), ivfFlatModel(spark, dir),
-        degree = 16, nassign = 3)
-    }
-
-  /** Edge recall of the cell-blocked build vs the exact degree-16
-    * graph — the measured cost of never running the all-pairs pass. */
-  private def graphCellBlockedQuality(spark: SparkSession, dir: String): DataFrame = {
-    val exact = graphAdj(spark, dir).select(col("node_id"), col("neighbor_id"))
-    val blocked = cellBlockedAdj(spark, dir).select(col("node_id"), col("neighbor_id"))
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(blocked.agg(count(lit(1)).as("n_blocked")))
-      .crossJoin(exact.join(blocked, Seq("node_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits")))
-      .select(col("n_exact"), col("n_blocked"),
-        expr("(n_hits * 10000) div n_exact").as("edge_recall_bp"))
-  }
-
-  /** Beam search served from the cell-blocked adjacency — the full
-    * scale pipeline (coarse model → blocked build → batched beam) end
-    * to end, with recall vs exact ground truth measured next. */
-  private def knnGraphCellBlocked(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("graph_cell", dir) {
-      graft.index.GraphIndex.search(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        cellBlockedAdj(spark, dir), KnnK, seedMod = 16, seedK = 8, hops = 3, beam = 32)
-    }
-
-  private def recallGraphCellBlocked(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphCellBlocked(spark, dir),
-      groundTruth(spark, dir), KnnK)
-
-  /** Correlated scalar subquery, given to Spark AS SQL so Catalyst's
-    * decorrelation (RewriteCorrelatedScalarSubquery) does the planning:
-    * orders beating 1.5× their customer's average land in one aggregate
-    * + one join after rewrite — the optimizer feature itself is what
-    * this query pins down. */
-  private def correlatedSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_orders_v")
-    spark.sql(
-      """SELECT o.o_orderpriority, count(*) AS n_big
-        |FROM graft_orders_v o
-        |WHERE o.o_totalprice > (
-        |  SELECT 1.5 * avg(o2.o_totalprice) FROM graft_orders_v o2
-        |  WHERE o2.o_custkey = o.o_custkey)
-        |GROUP BY o.o_orderpriority""".stripMargin)
-  }
-
-  /** Scalar-function breadth (§2.7 families: date, string, math) in one
-    * integer-exact profile per order month. */
-  private def scalarFuncs(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(
-        year(col("o_orderdate")).as("o_year"),
-        month(col("o_orderdate")).as("o_month"))
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct(dayofweek(col("o_orderdate"))).as("n_weekdays"),
-        sum(length(col("o_orderpriority"))).as("prio_chars"),
-        sum(when(upper(substring(col("o_orderstatus"), 1, 1)) === "F", 1L)
-          .otherwise(0L)).as("n_f"),
-        max(abs(round(col("o_totalprice") * 100).cast("long"))).as("max_cents"),
-        min(pmod(col("o_orderkey"), lit(97L))).as("min_key_mod"))
-
-  /** Boilerplate share per document (C4 repeated-line rule, df ≥ 3) —
-    * see [[graft.text.Curation.boilerplate]]. */
-  private def boilerplateStats(spark: SparkSession, dir: String): DataFrame =
-    graft.text.Curation.boilerplate(
-      Tables.documents(spark, dir), "doc_id", "text", minDf = 3)
-
-  /** Time-weighted average (TWAP): each event's value holds until the
-    * user's next event; the mean weights by holding duration — the
-    * sensor/price aggregation where plain avg() over-counts bursts.
-    * lead() and the aggregate share one user partitioning: one shuffle.
-    * All integer (ms × cents), div-by-zero guarded out. */
-  private def twapUser(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("dur", lead(col("ms"), 1).over(w) - col("ms"))
-      .filter(col("dur").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sum(col("dur")).as("observed_ms"),
-        sum(col("cents") * col("dur")).as("weighted"))
-      .filter(col("observed_ms") > 0)
-      .select(col("user_id"), col("observed_ms"),
-        expr("weighted div observed_ms").as("twap_cents"))
-  }
-
-  /** EXCEPT ALL / INTERSECT ALL — multiset set-operation semantics
-    * (duplicates preserved), completing §2.7's set-op family. */
-  private def setOpsAll(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val returned = li.filter(col("l_returnflag") === "R").select(col("l_suppkey"))
-    val kept = li.filter(col("l_returnflag") =!= "R").select(col("l_suppkey"))
-    returned.exceptAll(kept).agg(count(lit(1)).as("n_except_all"))
-      .crossJoin(returned.intersectAll(kept).agg(count(lit(1)).as("n_intersect_all")))
-  }
-
-  /** Retrieval evaluation: MRR@10 with label agreement as relevance —
-    * the IR metric companion to recall@k (M1). Per query: reciprocal
-    * rank (basis points, integer floor) of the first same-label
-    * neighbor in the cosine top-10; 0 if none. One extra join + agg on
-    * top of the search itself. */
-  private def knnLabelMrr(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val hits = cosineHits(spark, dir)
-      .join(qLab, Seq("query_id"))
-      .join(bLab, Seq("neighbor_id"))
-    val first = hits.filter(col("q_label") === col("b_label"))
-      .groupBy(col("query_id")).agg(min(col("rank")).as("r1"))
-    qLab.join(first, Seq("query_id"), "left")
-      .select(coalesce(expr("10000 div r1"), lit(0L)).as("rr_bp"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(col("rr_bp")).as("rr_sum_bp"))
-      .withColumn("mrr_bp", expr("rr_sum_bp div n_queries"))
-  }
-
-  // ——— Graph-based ANN (HNSW-class capability, SURVEY §2.2 I1/I3/I6) ———
-
-  private val GraphDegree = 16
-  private val graphAdjCache = namedArtifactCache[String]("graph_adj")
-
-  /** Degree-16 exact k-NN graph of the base — the adjacency standing in
-    * for the reference's HNSW/NGT graph structures (see
-    * [[graft.index.GraphIndex]]). Cached per dir: built once, searched
-    * repeatedly — the reference's build → search-loop lifecycle. */
-  private def graphAdj(spark: SparkSession, dir: String): DataFrame =
-    // localCheckpoint, not cache: consumers reference the adjacency
-    // subplan many times per beam hop — a LogicalRDD leaf keeps their
-    // analyzed plans small where a cached plan tree would not
-    cachedArtifact(graphAdjCache, dir)(
-      graft.index.GraphIndex.buildExact(Tables.embeddingBase(spark, dir), GraphDegree)
-        .localCheckpoint())
-
-  /** HNSW-class graph search: entry-point seeding (1/16 deterministic
-    * subsample scored exactly, 8 seeds kept), then 3 batched
-    * expand-score-prune beam rounds (beam 32) through the degree-16
-    * adjacency, exact rerank over everything visited. Every stage is a
-    * hash join — no sequential walk. */
-  private val graphSearchCache = namedArtifactCache[String]("graph_search")
-
-  private def knnGraphSearch(spark: SparkSession, dir: String): DataFrame =
-    // cached per dir: recall evaluation reuses the search output, the way
-    // the reference scores recall on the batch it just searched
-    cachedArtifact(graphSearchCache, dir)(graft.index.GraphIndex.search(
-      Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-      graphAdj(spark, dir), KnnK, seedMod = 16, seedK = 8, hops = 3, beam = 32)
-      .cache())
-
-  /** COSINE-served graph search — end-to-end cosine serving (cosine-built
-    * degree-16 adjacency + cosine-ranked beam), the default metric of the
-    * HNSW-class backends the reference wraps (Redis/Milvus expose COSINE;
-    * Weaviate defaults to it). Reuses the hubness family's memoized raw
-    * cosine adjacency. */
-  private def knnGraphCosine(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("knn_graph_cosine", dir)(graft.index.GraphIndex.searchCosine(
-      Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-      rawCosineAdjacency(spark, dir), KnnK, seedMod = 16, seedK = 8,
-      hops = 3, beam = 32))
-
-  /** Recall of cosine graph serving vs the exact cosine top-k. */
-  private def recallGraphCosine(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphCosine(spark, dir), cosineHits(spark, dir), KnnK)
-
-  /** Mutual (reciprocal) k-NN pairs: edges of the exact degree-16 graph
-    * present in BOTH directions — the symmetric-neighbor criterion used
-    * for near-dup image mining, RNN-descent graph pruning, and
-    * diversity-aware rerank. One equi-join of the memoized adjacency
-    * against itself on the reversed edge key; no new distance math. */
-  private def mutualKnnPairs(spark: SparkSession, dir: String): DataFrame = {
-    val adj = graphAdj(spark, dir)
-    adj.as("a").join(adj.as("b"),
-      col("a.node_id") === col("b.neighbor_id") &&
-        col("a.neighbor_id") === col("b.node_id"))
-      .filter(col("a.node_id") < col("a.neighbor_id"))
-      .select(col("a.node_id").as("id_a"), col("a.neighbor_id").as("id_b"),
-        col("a.rank").as("rank_ab"), col("b.rank").as("rank_ba"))
-  }
-
-  /** Graph-search recall vs exact ground truth (BASELINE graph-class
-    * ladder: HNSW/NGT ≈ 0.94–0.98 at k=10). */
-  private def recallGraph(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphSearch(spark, dir), groundTruth(spark, dir), KnnK)
-
-  /** Recall LADDER for the graph index — recall@1/5/10 in one query
-    * (the standard ANN evaluation curve; @1 is the "exact hit" serving
-    * bar, @10 the batch-retrieval bar). Re-scores the one memoized
-    * search against the one cached ground truth three times — scoring
-    * is join-aggregate arithmetic, the search is never re-run. */
-  private def recallCurveGraph(spark: SparkSession, dir: String): DataFrame =
-    Seq(1, 5, 10).map { k =>
-      Recall.recallBasisPoints(
-        knnGraphSearch(spark, dir), groundTruth(spark, dir), k)
-        .withColumn("k", lit(k.toLong))
-    }.reduce(_ unionByName _)
-
-  /** First-order Markov transition matrix over per-user event streams:
-    * counts and probabilities (bps) of prev_type → type steps — the
-    * product-analytics companion of [[eventPaths]]'s path mining. One
-    * keyed window (user) + one tiny aggregate (|types|² rows). */
-  private def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("p_bp", expr(
-        "(n * 10000) div sum(n) over (partition by prev_type)"))
-  }
-
-  private val graphStoredCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Graph index persisted as a TABLE and served from the stored copy —
-    * the cold-start path: a restarted cluster reads the adjacency from
-    * parquet instead of rebuilding (the reference's NGT keeps its graph
-    * in an on-disk dir the same way, dynamic_script_ngt.py:57-65).
-    * Deterministic search ⇒ shares knn_graph's oracle: one logical
-    * answer, two physical plans. */
-  private def knnGraphStored(spark: SparkSession, dir: String): DataFrame = {
-    val path = graphStoredCache.getOrElseUpdate(dir, {
-      val p = s"target/graph_adj/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graphAdj(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    // the per-hop adjacency joins each scan the stored parquet directly:
-    // an eager localCheckpoint load measured no faster at fixture scale
-    // (materialization ≈ the repeat scans of a small columnar file), and
-    // at server scale the hot index lives in the OS page cache either way
-    graft.index.GraphIndex.search(
-      Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-      spark.read.parquet(path), KnnK, seedMod = 16, seedK = 8, hops = 3, beam = 32)
-  }
-
-  // ——— NN-Descent: the O(n·d²)-per-round approximate graph build ———
-
-  private val nndAdjCache = namedArtifactCache[String]("nnd_adj")
-
-  /** Degree-16 approximate k-NN graph via 3 NN-Descent rounds from a
-    * per-edge hashed init — the linear-in-n build that replaces
-    * [[graphAdj]]'s all-pairs pass at 100 TB
-    * (see [[graft.index.GraphIndex.buildNNDescent]]). */
-  private def nndAdj(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(nndAdjCache, dir)(
-      graft.index.GraphIndex.buildNNDescent(
-        Tables.embeddingBase(spark, dir), GraphDegree, rounds = 3)
-        .cache())
-
-  /** Build quality of the NN-Descent graph: fraction of the exact
-    * degree-16 graph's edges recovered, in basis points — the graph
-    * analog of search recall (NN-Descent converges to ≳90% edge recall
-    * in 2-3 rounds on intrinsically low-dim data). */
-  private def nndGraphQuality(spark: SparkSession, dir: String): DataFrame = {
-    val exact = graphAdj(spark, dir).select(col("node_id"), col("neighbor_id"))
-    val approx = nndAdj(spark, dir).select(col("node_id"), col("neighbor_id"))
-    exact.join(approx, Seq("node_id", "neighbor_id"))
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(exact.agg(count(lit(1)).as("n_total")))
-      .select(expr("n_hits * 10000 div n_total").as("overlap_bp"))
-  }
-
-  private val nndSearchCache = namedArtifactCache[String]("nnd_search")
-
-  /** Graph search over the NN-Descent adjacency — same beam search as
-    * [[knnGraphSearch]], approximate build instead of exact. */
-  private def knnGraphNnd(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(nndSearchCache, dir)(graft.index.GraphIndex.search(
-      Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-      nndAdj(spark, dir), KnnK, seedMod = 16, seedK = 8, hops = 3, beam = 32)
-      .cache())
-
-  /** End-to-end recall of approximate-build + graph search. */
-  private def recallGraphNnd(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphNnd(spark, dir), groundTruth(spark, dir), KnnK)
-
-  // ——— Multi-probe LSH (Lv et al., VLDB 2007) ———
-
-  /** Multi-probe RP-LSH: 4 tables probing 3 buckets each (0, ±1) — the
-    * recall of ~more tables at half the index footprint; compare
-    * [[knnLsh]]'s 8 tables × 1 probe. Index size (rows in the bucket
-    * join's build side) halves; the probe fan-out moves to the tiny
-    * query side. */
-  private def knnLshMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("lsh_mp", dir) {
-      graft.index.LshIndex.searchFast(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
-        KnnK, numHashTables = 4, bucketLength = 1.0, dim = 64, probes = 3)
-    }
-
-  private def recallLshMultiprobe(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnLshMultiprobe(spark, dir), groundTruth(spark, dir), KnnK)
-
-  // ——— Semantic dedup (SemDeDup, Abbas et al. 2023) ———
-
-  /** Cluster-then-prune semantic dedup over the embedding base: IvfFlat's
-    * integer-exact k-means (8 cells) localizes candidates, then within
-    * each cell a row is dropped iff a LOWER-id row of the same cell has
-    * cosine ≥ 0.35 with it. The pair join is per-cluster (candidates
-    * co-partitioned by cid — never all-pairs), which is exactly how
-    * SemDeDup stays tractable at 100 TB. Output: (vec_id, cid, kept). */
-  private def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.cosine
-    val base = Tables.embeddingBase(spark, dir)
-    val withEmb = graft.index.IvfFlat.assignments(base, ivfFlatModel(spark, dir))
-      .join(base, "vec_id")
-    val lo = withEmb.select(col("cid"), col("vec_id").as("lo_id"),
-      col("embedding").as("lo_emb"))
-    val drops = withEmb.join(lo, "cid")
-      .filter(col("lo_id") < col("vec_id") &&
-        cosine(col("embedding"), col("lo_emb")) >= 0.35)
-      .select(col("vec_id")).distinct().withColumn("__d", lit(1))
-    withEmb.join(drops, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid").cast("int").as("cid"),
-        col("__d").isNull.as("kept"))
-  }
-
-  /** Gap-based sessionization executed by the streaming ENGINE —
-    * flatMapGroupsWithState custom state (SURVEY §2.6 C1's stateful
-    * form), AvailableNow backlog replay, append-mode memory sink. Shares
-    * the batch [[sessionizeEvents]] oracle: one logical answer, stateful
-    * streaming physical execution. */
-  private def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val events = Tables.normalizeEventTs(raw)
-    val ds = events.select(col("user_id"), col("ts"), col("event_id"))
-      .as[graft.streaming.StreamingMetrics.Ev]
-    val sink = "stream_sess_" + java.lang.Integer.toHexString(dir.hashCode)
-    // user-keyed state: stores sized by the user-cardinality census
-    // (fixture lands on the measured 4-store floor)
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        streamCensus(spark, dir).users)) {
-      val q = graft.streaming.StreamingMetrics.sessionizeStream(ds, gapMs = 1800000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
-      .select(col("user_id").as("key"), col("event_id"), col("session_id"))
-  }
-
-  // ——— Incremental graph insert: D1 without the D3 rebuild ———
-
-  private val upsertSearchCache = namedArtifactCache[String]("upsert_search")
-
-  /** The reference's dynamic-updates experiment ON the graph index:
-    * build NN-Descent on the 80% snapshot (vec_id % 5 ≠ 4), insert the
-    * held-out 20% via HNSW-style beam-search insertion + reverse-edge
-    * re-prune ([[graft.index.GraphIndex.insert]]), then search the full
-    * base through the augmented adjacency. The embedded baselines
-    * REBUILD here (SURVEY §2.4 D3) — BASELINE records their QPS halving
-    * during this phase; the incremental insert touches O(|new|·degree)
-    * rows instead. */
-  private def knnGraphUpsert(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(upsertSearchCache, dir) {
-      val base = Tables.embeddingBase(spark, dir)
-      val pre = base.filter(col("vec_id") % 5 =!= 4)
-      val ins = base.filter(col("vec_id") % 5 === 4)
-      val adjPre = graft.index.GraphIndex.buildNNDescent(pre, GraphDegree, rounds = 3)
-      val adjAug = graft.index.GraphIndex.insert(pre, adjPre, ins, GraphDegree)
-      graft.index.GraphIndex.search(
-        Tables.embeddingQueries(spark, dir), base, adjAug, KnnK,
-        seedMod = 16, seedK = 8, hops = 3, beam = 32).cache()
-    }
-
-  /** End-to-end recall after the incremental insert — the reference's
-    * post-re-insert recovery measurement (BASELINE: FAISS-HNSW recovers
-    * to ≈4 950 q/s / recall 0.9769 after re-insert). */
-  private def recallGraphUpsert(spark: SparkSession, dir: String): DataFrame =
-    Recall.recallBasisPoints(knnGraphUpsert(spark, dir), groundTruth(spark, dir), KnnK)
-
-  private val deleteSearchCache = namedArtifactCache[String]("delete_search")
-
-  /** The delete phase without a rebuild (D2, where the reference's
-    * embedded backends can only D3): drop the 20% deleted nodes from the
-    * full-base NN-Descent graph by FILTERING adjacency edges — a
-    * metadata-cheap predicate, no index work — and search the surviving
-    * base through what remains. */
-  private def knnGraphDelete(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(deleteSearchCache, dir) {
-      val surviving = Tables.embeddingBase(spark, dir).filter(col("vec_id") % 5 =!= 4)
-      val adjDel = nndAdj(spark, dir)
-        .filter(col("node_id") % 5 =!= 4 && col("neighbor_id") % 5 =!= 4)
-      graft.index.GraphIndex.search(
-        Tables.embeddingQueries(spark, dir), surviving, adjDel, KnnK,
-        seedMod = 16, seedK = 8, hops = 3, beam = 32).cache()
-    }
-
-  /** Post-delete recall vs exact ground truth over the SURVIVING base —
-    * index quality after edge-filter deletion (the reference's
-    * during-delete phase, BASELINE: FAISS-HNSW −53% QPS while
-    * rebuilding; the filter costs nothing). */
-  private def recallGraphDelete(spark: SparkSession, dir: String): DataFrame = {
-    val surviving = Tables.embeddingBase(spark, dir).filter(col("vec_id") % 5 =!= 4)
-    val gt = Knn.exact(Tables.embeddingQueries(spark, dir), surviving, KnnK)
-    Recall.recallBasisPoints(knnGraphDelete(spark, dir), gt, KnnK)
-  }
-
-  /** C1/C2 executed by the streaming ENGINE: the reference's
-    * `background_search_loop` (dynamic_script_faiss.py:31-43) — a stream
-    * of query batches answered with exact kNN against the snapshot
-    * current at each micro-batch ([[graft.streaming.StreamingMetrics
-    * .knnSearchLoop]]; the AtomicReference read is C2's snapshot
-    * isolation made explicit). Micro-batch splits are arbitrary, but the
-    * union of per-batch answers IS the batch answer — so this shares
-    * knn_exact's oracle. */
-  private def streamKnnSearch(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val snapshot = new java.util.concurrent.atomic.AtomicReference(
-      Tables.embeddingBase(spark, dir))
-    val qStream = spark.readStream.schema(schema).parquet(s"$dir/embeddings*.parquet")
-      .filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    // executor-side parquet sink per micro-batch (the 100 TB shape: result
-    // batches never pass through the driver), read back lazily at the end
-    val outDir = new java.io.File(
-      s"target/stream_knn/${java.lang.Integer.toHexString(dir.hashCode)}")
-    deleteRecursively(outDir)
-    // per-micro-batch search shuffles are batch-sized, not corpus-sized
-    // (no keyed state) — the fixture floor applies at any scale here
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = graft.streaming.StreamingMetrics.knnSearchLoop(qStream, snapshot, KnnK) {
-        (res, _) =>
-          res.select(col("query_id"), col("neighbor_id"), col("rank"))
-            .write.mode("append").parquet(outDir.getPath)
-      }
-      q.processAllAvailable()
-      q.stop()
-    }
-    readSinkOrEmpty(spark, outDir, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.IntegerType))))
-  }
-
-  /** C1 against the INDEX (the reference's background loop literally
-    * searches its FAISS index while updates land,
-    * dynamic_script_faiss.py:31-43): micro-batched query stream answered
-    * by IvfFlat search against a model trained ONCE before the stream
-    * starts — train-offline/serve-online, the production split. Cell
-    * pruning per batch; results to an executor-side parquet sink. The
-    * union of micro-batch answers is the batch IVF answer, so this
-    * shares knn_ivf_flat's oracle. */
-  private def streamIvfSearch(spark: SparkSession, dir: String): DataFrame = {
-    val model = ivfFlatModel(spark, dir)
-    val base = Tables.embeddingBase(spark, dir)
-    // the base→cell assignment is part of the SERVED INDEX: build it once
-    // with the model, before the stream — per-micro-batch work must not
-    // re-quantize the corpus
-    val baseAssign = graft.index.IvfFlat
-      .assignBase(base, model).localCheckpoint()
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val qStream = spark.readStream.schema(schema).parquet(s"$dir/embeddings*.parquet")
-      .filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val outDir = new java.io.File(
-      s"target/stream_ivf/${java.lang.Integer.toHexString(dir.hashCode)}")
-    deleteRecursively(outDir)
-    // no keyed state on this path (foreachBatch / batch-sized per-micro-
-    // batch work): the fixture floor of the sizing rule applies
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = qStream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.index.IvfFlat.searchAssigned(model, batch, base, baseAssign, KnnK, nprobe = 6)
-            .write.mode("append").parquet(outDir.getPath)
-          (): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    readSinkOrEmpty(spark, outDir, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.IntegerType))))
-  }
-
-  /** The background search loop served from the GRAPH index — completes
-    * the streaming-serving trio (exact `stream_knn_search`, IVF
-    * `stream_ivf_search`, graph here): the adjacency is built once
-    * before the stream (the served index), each micro-batch of queries
-    * beam-searches it, results append to an executor-side parquet sink.
-    * Per-micro-batch work is independent of base size after seeding
-    * (the graph-search property that makes it the serving index). */
-  private def streamGraphSearch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val base = Tables.embeddingBase(spark, dir)
-    val adj = graphAdj(spark, dir)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val qStream = spark.readStream.schema(schema).parquet(s"$dir/embeddings*.parquet")
-      .filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val outDir = new java.io.File(
-      s"target/stream_graph/${java.lang.Integer.toHexString(dir.hashCode)}")
-    deleteRecursively(outDir)
-    // no keyed state on this path (foreachBatch / batch-sized per-micro-
-    // batch work): the fixture floor of the sizing rule applies
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = qStream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.index.GraphIndex.search(batch, base, adj, KnnK,
-            seedMod = 16, seedK = 8, hops = 3, beam = 32)
-            .write.mode("append").parquet(outDir.getPath)
-          (): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    readSinkOrEmpty(spark, outDir, StructType(Seq(
-      StructField("query_id", LongType),
-      StructField("neighbor_id", LongType),
-      StructField("rank", IntegerType))))
-  }
-
-  // ——— Retrieval/IR metric: nDCG@10 ———
-
-  private val NdcgW = Seq(1000000L, 630930L, 500000L, 430677L, 386853L,
-    356207L, 333333L, 315465L, 301030L, 289065L)
-  private val NdcgIdcg = NdcgW.scanLeft(0L)(_ + _).tail
-
-  /** nDCG@10 with binary label-agreement relevance over the cosine
-    * top-10. Discount weights are FROZEN integer micro-units
-    * (round(1e6/log2(i+1))) so DCG and IDCG are exact int64 sums on any
-    * engine; IDCG ranks the query's full relevant pool capped at 10.
-    * Per query: ndcg_bp = 10000·DCG div IDCG. */
-  /** Exact-integer AUC ([[graft.operators.Eval.aucBps]]) of a
-    * centroid-affinity score against the label-0 class: embeddings are
-    * grid-quantized (the BQ/SQ convention), the global centroid is the
-    * per-dim exact floor-mean (numerator made exactly divisible before
-    * the division — engine-portable), the score the integer dot against
-    * it. Mann–Whitney with tie credit, no pairwise join. */
-  private def aucLabelScore(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.aucBps(centroidScores(spark, dir), "score", "pos")
-
-  /** The (pos, score) rows behind [[aucLabelScore]] and
-    * [[eceCalibration]]: grid-quantized embeddings, global per-dim
-    * exact floor-mean centroid (model-parameter-sized — 64 longs on the
-    * driver), score = integer dot against it. */
-  private def centroidScores(spark: SparkSession, dir: String): DataFrame = {
-    val q = Tables.embeddings(spark, dir).select(
-      col("vec_id"),
-      when(col("label") === 0, 1L).otherwise(0L).as("pos"),
-      expr("transform(embedding, e -> cast(floor(cast(e as double) * 1048576 + 0.5) as bigint))")
-        .as("qv"))
-      .localCheckpoint() // consumed by the centroid agg AND the scoring pass
-    val cent = q.select(posexplode(col("qv")).as(Seq("d", "e")))
-      .groupBy(col("d"))
-      // exact floor-mean: subtract the positive mod so the division is
-      // exact — identical under truncating (Spark div) and flooring
-      // (DuckDB //) integer division
-      .agg(expr("(sum(e) - pmod(sum(e), count(*))) div count(*)").as("c"))
-      .orderBy(col("d")).collect().map(_.getLong(1))
-    val centLit = array(cent.map(lit(_)).toIndexedSeq: _*)
-    q.withColumn("centArr", centLit).select(col("pos"),
-      expr("aggregate(zip_with(qv, centArr, (a, b) -> a * b), 0L, (acc, x) -> acc + x)")
-        .as("score"))
-  }
-
-  /** Reliability diagram / expected-calibration-error decomposition of
-    * the centroid-affinity score against the label-0 class — the
-    * calibration companion to [[aucLabelScore]]'s discrimination: the
-    * score is min-max normalized to a ppm confidence (one fixed-shape
-    * double — mul/div/floor, bit-portable), cut into 10 equal-width
-    * bins, and each bin reports its census, exact floor-mean
-    * confidence, empirical positive rate, and |acc − conf| gap — the
-    * per-bin ECE contribution. One scan + a 10-group aggregate; the
-    * min/max ride in as a 1-row broadcast. */
-  private def eceCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val sc = centroidScores(spark, dir)
-    val ext = sc.agg(min(col("score")).as("__smin"), max(col("score")).as("__smax"))
-    sc.crossJoin(broadcast(ext))
-      .withColumn("conf_ppm",
-        floor(lit(1000000.0) * (col("score") - col("__smin")).cast("double")
-          / greatest(lit(1L), col("__smax") - col("__smin")).cast("double"))
-          .cast("long"))
-      .withColumn("bin", least(lit(9L), expr("conf_ppm div 100000")))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"),
-        sum(col("conf_ppm")).as("__sconf"))
-      .select(col("bin"), col("n"), col("n_pos"),
-        expr("(__sconf - pmod(__sconf, n)) div n").as("conf_ppm"),
-        expr("(n_pos * 1000000) div n").as("acc_ppm"))
-      .withColumn("gap_ppm", abs(col("conf_ppm") - col("acc_ppm")))
-  }
-
-  private def ndcgAt10(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val wArr = array(NdcgW.map(lit): _*)
-    val iArr = array(NdcgIdcg.map(lit): _*)
-    val dcg = cosineHits(spark, dir)
-      .join(qLab, Seq("query_id"))
-      .join(bLab, Seq("neighbor_id"))
-      .groupBy(col("query_id"))
-      .agg(sum(when(col("q_label") === col("b_label"),
-        element_at(wArr, col("rank"))).otherwise(0L)).as("dcg_micro"))
-    val pool = qLab
-      .join(bLab.groupBy(col("b_label")).agg(count(lit(1)).as("n_rel")),
-        qLab("q_label") === col("b_label"), "left")
-      .select(col("query_id"),
-        least(coalesce(col("n_rel"), lit(0L)), lit(10L)).cast("int").as("r_ideal"))
-    dcg.join(pool, Seq("query_id"))
-      .select(col("query_id"), col("dcg_micro"),
-        when(col("r_ideal") === 0, lit(0L))
-          .otherwise(element_at(iArr, col("r_ideal"))).as("idcg_micro"))
-      .withColumn("ndcg_bp", when(col("idcg_micro") === 0, lit(0L))
-        .otherwise(expr("(dcg_micro * 10000) div idcg_micro")))
-  }
-
-  // ——— Time-series / quality analytics ———
-
-  /** OHLC downsampling bars per (event_type, hour): open/close selected
-    * by a PACKED int64 ordering key (epoch-ms·2²⁰ + event_id — unique,
-    * so arg-min/max is deterministic on any engine) via min_by/max_by;
-    * high/low/volume ride the same single-shuffle aggregate. No window
-    * sort anywhere. */
-  private def ohlcBars(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_type"),
-        unix_millis(date_trunc("hour", col("ts"))).as("hour_ms"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"),
-        (unix_millis(col("ts")) * lit(1048576L) + col("event_id")).as("ord"))
-      .groupBy(col("event_type"), col("hour_ms"))
-      .agg(
-        expr("min_by(cents, ord)").as("open_cents"),
-        max(col("cents")).as("high_cents"),
-        min(col("cents")).as("low_cents"),
-        expr("max_by(cents, ord)").as("close_cents"),
-        count(lit(1)).as("n_events"))
-
-  /** Interval union (gaps-and-islands): each event claims a 5-minute
-    * window [ms, ms+300000); overlapping-or-touching claims merge into
-    * islands per user via a running-max window + prefix-sum island ids.
-    * The window and both aggregations all partition by user_id, so one
-    * exchange feeds the whole plan. */
-  private def intervalMerge(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val winOrd = Window.partitionBy(col("user_id")).orderBy(col("start_ms"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_millis(col("ts")).as("start_ms"),
-        (unix_millis(col("ts")) + 300000L).as("end_ms"))
-      .withColumn("prev_max_end",
-        max(col("end_ms")).over(winOrd.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("new_island",
-        when(col("prev_max_end").isNull || col("start_ms") > col("prev_max_end"), 1L)
-          .otherwise(0L))
-      .withColumn("island_id", sum(col("new_island")).over(winOrd))
-      .groupBy(col("user_id"), col("island_id"))
-      .agg(min(col("start_ms")).as("i_start"), max(col("end_ms")).as("i_end"),
-        count(lit(1)).as("i_events"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_islands"),
-        sum(col("i_end") - col("i_start")).as("covered_ms"),
-        max(col("i_events")).as("max_island_events"))
-  }
-
-  /** Data-quality expectation suite (Deequ-style declarative checks):
-    * completeness, value ranges, key uniqueness, and FK integrity over
-    * lineitem/orders, one verdict row per check. The scalar checks share
-    * ONE scan; uniqueness is a keyed count; the FK check is a left-anti
-    * join — at 100 TB each check class stays a single pass. */
-  private def dqChecks(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val scalar = li.agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(col("l_orderkey").isNull, 1L).otherwise(0L)).as("null_ok"),
-      sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L).otherwise(0L)).as("qty_out"),
-      sum(when(col("l_discount") < 0 || col("l_discount") > 1, 1L).otherwise(0L)).as("disc_out"))
-    val dupKeys = li.groupBy(col("l_orderkey"), col("l_linenumber"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-      .agg(count(lit(1)).as("n_dup"))
-    val orphans = li.join(Tables.table(spark, dir, "orders"),
-        li("l_orderkey") === col("o_orderkey"), "left_anti")
-      .agg(count(lit(1)).as("n_orphan"))
-    scalar.crossJoin(dupKeys).crossJoin(orphans).selectExpr(
-      """stack(6,
-        |  'row_count_min_1000', n_rows, n_rows >= 1000,
-        |  'orderkey_not_null', null_ok, null_ok = 0,
-        |  'quantity_in_1_50', qty_out, qty_out = 0,
-        |  'discount_in_0_1', disc_out, disc_out = 0,
-        |  'linenumber_unique', n_dup, n_dup = 0,
-        |  'orders_fk', n_orphan, n_orphan = 0) AS (check_name, observed, pass)""".stripMargin)
-  }
-
-  /** Integer EWMA (α = 1/8) of each user's event stream: s₁ = c₁,
-    * sᵢ = (7·sᵢ₋₁ + cᵢ) div 8 over non-negative cents ordered by
-    * (epoch-ms, event_id). A row-local fold over the user's collected,
-    * sorted events (groups are bounded — ≤ ~100 rows/user in the
-    * fixtures, and a 100 TB deployment would window the stream first);
-    * one shuffle on user_id, exactly replayable as a recursive CTE. */
-  private def ewmaUser(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("user_id"),
-        struct(unix_millis(col("ts")).as("ms"), col("event_id").as("eid"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents")).as("e"))
-      .groupBy(col("user_id"))
-      .agg(array_sort(collect_list(col("e"))).as("seq"))
-      .select(col("user_id"), size(col("seq")).cast("long").as("n_events"),
-        expr("""aggregate(seq,
-          named_struct('i', CAST(0 AS BIGINT), 's', CAST(0 AS BIGINT)),
-          (acc, x) -> named_struct('i', acc.i + 1,
-            's', CASE WHEN acc.i = 0 THEN x.cents
-                      ELSE (7 * acc.s + x.cents) div 8 END)).s""").as("ewma_cents"))
-
-  // ——— Round-3 additions: lexical index, table layouts, IR eval, sketch
-  // union, relational breadth ———
-
-  private val orcCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val datePartCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val sortedFilesCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val manifestCache = namedArtifactCache[String]("manifest")
-
-  /** ORC source/sink round-trip (Spark's second bundled columnar
-    * format): events re-emitted as ORC with lossless wire types
-    * (integer cents + epoch-ms) and read back — per-type aggregate must
-    * match the parquet-direct answer. */
-  private def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = orcCache.getOrElseUpdate(dir, {
-      val p = s"target/orc_rt/${java.lang.Integer.toHexString(dir.hashCode)}"
-      Tables.events(spark, dir).select(
-          col("event_id"), col("user_id"), col("event_type"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"),
-          unix_millis(col("ts")).as("ts_ms"))
-        .write.mode("overwrite").orc(p)
-      p
-    })
-    spark.read.orc(path)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("cents")).as("sum_cents"),
-        min(col("ts_ms")).as("min_ts_ms"),
-        max(col("ts_ms")).as("max_ts_ms"),
-        countDistinct(col("user_id")).as("n_users"))
-  }
-
-  /** Hive-style date-partitioned layout + partition-pruned scan
-    * ([[graft.sources.Layout.writeDatePartitioned]]): the date-range
-    * predicate prunes whole partition directories at planning time
-    * (PartitionFilters — asserted in LayoutSpec); the answer is
-    * layout-independent. */
-  private def eventsDatePartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val path = datePartCache.getOrElseUpdate(dir, {
-      val p = s"target/date_part/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.sources.Layout.writeDatePartitioned(Tables.events(spark, dir), p)
-      p
-    })
-    graft.sources.Layout.readDatePartitioned(spark, path)
-      .filter(col("event_date") >= lit("2024-01-05") && col("event_date") < lit("2024-01-10"))
-      .groupBy(col("event_date").cast("string").as("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-  }
-
-  /** Iceberg-style manifest file skipping over a range-sorted layout
-    * ([[graft.sources.Layout.writeSortedFiles]] + [[graft.sources.Layout.buildManifest]]):
-    * a 2-day predicate consults the per-file min/max manifest and reads
-    * only the files whose interval intersects it (LayoutSpec asserts
-    * files_read < files_total). The answer is layout-independent. */
-  private def manifestSkipScan(spark: SparkSession, dir: String): DataFrame = {
-    val path = sortedFilesCache.getOrElseUpdate(dir, {
-      val p = s"target/sorted_files/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.sources.Layout.writeSortedFiles(
-        Tables.events(spark, dir).withColumn("ts_ms", unix_millis(col("ts"))),
-        "ts_ms", p)
-      p
-    })
-    val manifest = cachedArtifact(manifestCache, dir)(
-      graft.sources.Layout.buildManifest(spark, path, "ts_ms").cache())
-    // [2024-01-10, 2024-01-12) in epoch ms
-    val (pruned, _, _) = graft.sources.Layout.manifestPrunedScan(
-      spark, manifest, "ts_ms", lit(1704844800000L), lit(1705017599999L))
-    pruned.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-  }
-
-  /** Posting-list (inverted index) build over documents
-    * ([[graft.text.InvertedIndex.postings]]): per term df, cf, and the
-    * ascending posting-list head — the lexical-search physical
-    * structure (the text analog of IVF inverted lists). */
-  private def postingsStats(spark: SparkSession, dir: String): DataFrame =
-    graft.text.InvertedIndex.postings(
-      Tables.documents(spark, dir), "doc_id", "text", minDf = 5L, sampleK = 5)
-
-  /** Positional phrase search ("the table" as consecutive tokens) via
-    * per-term position-list intersection — chained hash equi-joins on
-    * (doc, adjacent position), never a scan of non-matching terms. */
-  private def phraseSearchQ(spark: SparkSession, dir: String): DataFrame =
-    graft.text.InvertedIndex.phraseSearch(
-      Tables.documents(spark, dir), "doc_id", "text", Seq("the", "table"))
-
-  /** Cosine top-10, memoized per dir — the one search result the whole
-    * IR-evaluation family (MRR, nDCG, MAP, classify) re-scores, exactly
-    * the reference's search-once-score-once lifecycle. */
-  private def cosineHits(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("cosine", dir) {
-      Knn.cosineTopK(
-        Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir), KnnK)
-    }
-
-  /** Hard-negative mining for contrastive retrieval training: per query,
-    * the best-ranked SAME-label neighbor (the positive) and best-ranked
-    * DIFFERENT-label neighbor (the hard negative) from the cosine top-k —
-    * the (anchor, positive, hard-negative) triplet construction of
-    * dense-retriever training (DPR/ANCE-style mining reduced to its
-    * batch form). Reuses the memoized cosine pass; rank is unique per
-    * query so both picks are deterministic. */
-  private def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val scored = cosineHits(spark, dir)
-      .join(broadcast(qLab), "query_id").join(bLab, "neighbor_id")
-      .withColumn("is_pos", col("q_label") === col("b_label"))
-    val picks = scored.groupBy(col("query_id"))
-      .agg(min(when(col("is_pos"), col("rank"))).as("pos_rank"),
-        min(when(!col("is_pos"), col("rank"))).as("neg_rank"))
-      .filter(col("pos_rank").isNotNull && col("neg_rank").isNotNull)
-    picks
-      .join(scored.select(col("query_id"), col("rank").as("pos_rank"),
-        col("neighbor_id").as("pos_id")), Seq("query_id", "pos_rank"))
-      .join(scored.select(col("query_id"), col("rank").as("neg_rank"),
-        col("neighbor_id").as("neg_id")), Seq("query_id", "neg_rank"))
-      .select(col("query_id"), col("pos_id"), col("pos_rank"),
-        col("neg_id"), col("neg_rank"))
-  }
-
-  /** MAP@10 with label-agreement relevance: per query, AP in exact
-    * integer micro-units — each hit contributes
-    * floor(1e6·cum_hits/rank), normalized by the ideal pool size
-    * (min(#same-label base rows, 10)). The precision/recall companion
-    * to recall@k (M1) and nDCG. */
-  private def mapAt10(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rank"))
-    val apNum = cosineHits(spark, dir)
-      .join(qLab, Seq("query_id")).join(bLab, Seq("neighbor_id"))
-      .withColumn("rel", (col("q_label") === col("b_label")).cast("long"))
-      .withColumn("cum", sum(col("rel")).over(w))
-      .groupBy(col("query_id"))
-      .agg(sum(when(col("rel") === 1, expr("(1000000 * cum) div rank"))
-        .otherwise(lit(0L))).as("ap_num_micro"))
-    val pool = qLab
-      .join(bLab.groupBy(col("b_label")).agg(count(lit(1)).as("n_rel")),
-        qLab("q_label") === col("b_label"), "left")
-      .select(col("query_id"),
-        least(coalesce(col("n_rel"), lit(0L)), lit(10L)).as("r_ideal"))
-    apNum.join(pool, Seq("query_id"))
-      .select(col("query_id"), col("ap_num_micro"), col("r_ideal"),
-        when(col("r_ideal") === 0, lit(0L))
-          .otherwise(expr("ap_num_micro div r_ideal")).as("ap_micro"))
-  }
-
-  /** MRR@10 — reciprocal rank of the first label-relevant neighbor in
-    * integer micro-units (floor(1e6/rank), 0 when nothing relevant in
-    * the top-10), over the memoized cosine search — completes the IR
-    * metric family next to MAP and nDCG. */
-  private def mrrAt10(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val firstRel = cosineHits(spark, dir)
-      .join(qLab, Seq("query_id")).join(bLab, Seq("neighbor_id"))
-      .filter(col("q_label") === col("b_label"))
-      .groupBy(col("query_id")).agg(min(col("rank")).as("first_rel_rank"))
-    qLab.join(firstRel, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("first_rel_rank"), lit(0)).cast("long").as("first_rel_rank"),
-        when(col("first_rel_rank").isNull, lit(0L))
-          .otherwise(expr("1000000 div first_rel_rank")).as("rr_micro"))
-  }
-
-  /** Precision@10 / Recall@10 in basis points per query (recall against
-    * the UNCAPPED relevant pool — the quantity MAP's r_ideal caps). */
-  private def prAt10(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val hits = cosineHits(spark, dir)
-      .join(qLab, Seq("query_id")).join(bLab, Seq("neighbor_id"))
-      .groupBy(col("query_id"))
-      .agg(sum((col("q_label") === col("b_label")).cast("long")).as("n_hits"))
-    val pool = qLab
-      .join(bLab.groupBy(col("b_label")).agg(count(lit(1)).as("n_rel")),
-        qLab("q_label") === col("b_label"), "left")
-      .select(col("query_id"), coalesce(col("n_rel"), lit(0L)).as("n_rel"))
-    hits.join(pool, Seq("query_id"))
-      .select(col("query_id"), col("n_hits"), col("n_rel"),
-        expr("(n_hits * 10000) div 10").as("p_bp"),
-        when(col("n_rel") === 0, lit(0L))
-          .otherwise(expr("(n_hits * 10000) div n_rel")).as("r_bp"))
-  }
-
-  /** k-NN majority-vote classification over the cosine top-10:
-    * predicted label = most-voted neighbor label (ties to the smaller
-    * label), scored against the query's own label — the classification
-    * use of a vector index. */
-  private def knnClassify(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val qLab = emb.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"))
-    val bLab = emb.filter(col("vec_id") % 20 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("label").as("b_label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(desc("votes"), asc("pred_label"))
-    cosineHits(spark, dir)
-      .join(bLab, Seq("neighbor_id"))
-      .groupBy(col("query_id"), col("b_label").as("pred_label"))
-      .agg(count(lit(1)).as("votes"))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      .join(qLab, Seq("query_id"))
-      .select(col("query_id"), col("pred_label"), col("votes"),
-        (col("pred_label") === col("q_label")).cast("int").as("correct"))
-  }
-
-  /** Per-language top-5 terms by document frequency — grouped top-k
-    * over the distinct-token df aggregate, ties broken lexically. */
-  private def topWordsPerLang(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(desc("df"), asc("word"))
-    Tables.documents(spark, dir)
-      .select(col("lang"), col("doc_id"),
-        explode(array_distinct(TextFunctions.tokens(col("text")))).as("word"))
-      .groupBy(col("lang"), col("word"))
-      .agg(count(lit(1)).as("df"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-  }
-
-  /** Vocabulary coverage curve — the tokenizer-planning number next to
-    * the BPE family (`bpe_merges`, `tokenizer_fertility`): what share
-    * of all token OCCURRENCES a top-k frequency vocabulary covers, at
-    * k ∈ {100, 1000, 10000}. The frequency rank is vocab-cardinality
-    * (data-sized — grows with the corpus), so it's
-    * [[graft.operators.Eval.withGlobalRowNumber]]'s range-partitioned
-    * parallel prefix count, never a single-partition window; the three
-    * rungs then fold into one conditional aggregate and unpivot. All
-    * arithmetic exact int64, shares in ppm. */
-  private def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val tf = Tables.documents(spark, dir)
-      .select(explode(TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val ranked = graft.operators.Eval.withGlobalRowNumber(
-      tf, Seq(negate(col("n")), col("word")), "r")
-    ranked
-      .agg(sum(col("n")).as("total"),
-        sum(when(col("r") <= 100, col("n")).otherwise(0L)).as("c100"),
-        sum(when(col("r") <= 1000, col("n")).otherwise(0L)).as("c1000"),
-        sum(when(col("r") <= 10000, col("n")).otherwise(0L)).as("c10000"))
-      .select(expr("stack(3, 100L, c100, 1000L, c1000, 10000L, c10000)")
-        .as(Seq("vocab_k", "covered")), col("total"))
-      .select(col("vocab_k"), col("covered"), col("total"),
-        expr("(covered * 1000000) div total").as("coverage_ppm"))
-  }
-
-  /** Pareto frontier (skyline) per brand: parts not dominated on
-    * (price, size) — dominance as a per-brand left-anti self-join, so
-    * the work is blocked by brand keys (a hash join at any scale, never
-    * a global nested loop). */
-  private def paretoParts(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).select(col("p_partkey"), col("p_brand"),
-      floor(col("p_retailprice") * 100 + 0.5).cast("long").as("price_cents"),
-      col("p_size"))
-    val a = p.as("a")
-    val b = p.select(col("p_brand").as("b_brand"), col("price_cents").as("b_price"),
-      col("p_size").as("b_size"))
-    a.join(b,
-        col("b_brand") === col("p_brand") &&
-          col("b_price") <= col("price_cents") && col("b_size") <= col("p_size") &&
-          (col("b_price") < col("price_cents") || col("b_size") < col("p_size")),
-        "left_anti")
-      .select(col("p_brand"), col("p_partkey"), col("price_cents"), col("p_size"))
-  }
-
-  /** Embedding drift monitor: per dimension, the label-0 vs label-1
-    * grid-quantized sums compared cross-multiplied (sum0·n1 − sum1·n0 —
-    * exact int64, no division), top-10 dims by |delta|. The feature-
-    * distribution-shift check a production embedding pipeline runs
-    * between snapshots. */
-  private def embeddingDrift(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .filter(col("label").isin(0, 1))
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "v")))
-      .select(col("label"), (col("pos0") + 1).as("dim"),
-        floor(col("v").cast("double") * 1048576 + 0.5).cast("long").as("g"))
-    e.groupBy(col("dim"))
-      .agg(sum(when(col("label") === 0, col("g")).otherwise(0L)).as("sum0_g"),
-        sum(when(col("label") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("label") === 1, col("g")).otherwise(0L)).as("sum1_g"),
-        sum(when(col("label") === 1, 1L).otherwise(0L)).as("n1"))
-      .withColumn("delta", abs(col("sum0_g") * col("n1") - col("sum1_g") * col("n0")))
-      .orderBy(desc("delta"), asc("dim"))
-      .limit(10)
-  }
-
-  /** Mergeable-sketch distinct counting: per-(type, day) HLL sketches
-    * union-merged to type level (the DataSketches hll_union_agg path) —
-    * THE 100 TB distinct-count pattern: daily sketches are KB-sized,
-    * merge associatively, and never rescan history. Checked against the
-    * exact distinct within the sketch's error bound. */
-  private def hllUnionGroups(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val merged = ev
-      .groupBy(col("event_type"), dayofmonth(col("ts")).as("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      .groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
-    val exact = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    merged.join(exact, Seq("event_type"))
-      .select(col("event_type"), col("n_exact"),
-        (abs(col("est") - col("n_exact")) <=
-          col("n_exact") * lit(0.05) + lit(16.0)).as("within_bound"))
-  }
-
-  /** Runtime-discovered pivot: distinct event types collected first
-    * (metadata-sized), then a standard pivot — the two-phase plan
-    * dynamic pivoting needs on an engine with static schemas. */
-  private def dynamicPivot(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val keys = ev.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).sorted.toIndexedSeq
-    ev.groupBy(col("user_id"))
-      .pivot("event_type", keys)
-      .agg(count(lit(1)))
-      .select(col("user_id") +: keys.map(k => coalesce(col(k), lit(0L)).as(k)): _*)
-  }
-
-  /** Blocked n-gram Jaccard pairs at the permissive 0.5 threshold,
-    * memoized per dir: `ngram_jaccard_pairs` reports them and
-    * `dedup_clusters` clusters the ≥0.8 subset — pairs are found once
-    * and re-scored, the same lifecycle as the search/recall family. */
-  private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("ngram_pairs", dir) {
-      Dedup.ngramJaccardBlocked(
-        Tables.documents(spark, dir), "doc_id", "text",
-        Seq("lang", "source"), shingleSize = 1, threshold = 0.5)
-    }
-
-  private val fragmentedCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val compactedCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Small-file compaction round-trip ([[graft.sources.Layout.compact]]):
-    * a deliberately fragmented copy of events (64 small files) is
-    * bin-packed back to a handful; the aggregate over the compacted
-    * table must equal the original's. LayoutSpec asserts the file-count
-    * reduction. */
-  private def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val frag = fragmentedCache.getOrElseUpdate(dir, {
-      val p = s"target/fragmented/${java.lang.Integer.toHexString(dir.hashCode)}"
-      Tables.events(spark, dir).repartition(64).write.mode("overwrite").parquet(p)
-      p
-    })
-    val out = compactedCache.getOrElseUpdate(dir, {
-      val p = s"target/compacted/${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.sources.Layout.compact(spark, frag, p, targetBytes = 64L << 20)
-      p
-    })
-    spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"),
-        countDistinct(col("event_id")).as("n_ids"))
-  }
-
-  /** Last-touch attribution: each purchase joined to the user's latest
-    * prior click/view via the as-of join ([[Joins.asOf]]) — the
-    * marketing-analytics shape of temporal join, oracled against
-    * DuckDB's native ASOF LEFT JOIN. */
-  private def attributionLastTouch(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"),
-        col("event_id").as("purchase_event"))
-    val touches = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"),
-        unix_millis(col("ts")).as("t_ms"),
-        col("event_id").as("touch_event"), col("event_type").as("touch_type"))
-    Joins.asOf(purchases, touches, "user_id", "ms",
-        Seq("touch_event", "touch_type", "t_ms"))
-      .select(col("user_id"), col("purchase_event"),
-        col("touch_event"), col("touch_type"),
-        (col("ms") - col("t_ms")).as("gap_ms"))
-  }
-
-  /** Linear multi-touch attribution — the equal-credit generalization of
-    * [[attributionLastTouch]]: every purchase distributes 10 000 bps
-    * across ALL the user's click/view touches in the preceding 7 days,
-    * `10000 div n` each with the integer remainder credited to the
-    * EARLIEST touch (deterministic, so credits sum to exactly 10 000 per
-    * attributed conversion in any engine). Shape: one user-keyed band
-    * join (the [[Joins]] range-join discipline), one window over the
-    * conversion key for (n, earliest), one groupBy per touch — keyed
-    * shuffles only, nothing quadratic. */
-  private def attributionLinear(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val horizon = 7L * 24 * 3600 * 1000
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_millis(col("ts")).as("p_ms"),
-        col("event_id").as("purchase_event"))
-    val touches = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("user_id"), unix_millis(col("ts")).as("t_ms"),
-        col("event_id").as("touch_event"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("purchase_event"))
-    val wOrd = w.orderBy(col("t_ms"), col("touch_event"))
-    purchases.join(touches, Seq("user_id"))
-      .filter(col("t_ms") <= col("p_ms") && col("t_ms") > col("p_ms") - horizon)
-      .withColumn("n_touch", count(lit(1)).over(w))
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("bps",
-        expr("10000 div n_touch") +
-          when(col("rn") === 1, expr("10000 - n_touch * (10000 div n_touch)"))
-            .otherwise(lit(0L)))
-      .groupBy(col("user_id"), col("touch_event"))
-      .agg(count(lit(1)).as("n_conversions"), sum(col("bps")).as("total_bps"))
-  }
-
-  /** Trailing-7-day distinct users per day: the daily (day, user) set is
-    * built FIRST (the only corpus-sized aggregation), then a
-    * metadata-sized day grid band-joins the trailing window — the
-    * standard rolling-distinct pattern (at 100 TB the per-day distinct
-    * sets are the small thing; the raw events never enter the window
-    * join). */
-  private def rolling7dUsers(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-    val grid = daily.select(col("day").as("g_day")).distinct()
-    broadcast(grid)
-      .join(daily, daily("day").between(date_sub(col("g_day"), 6), col("g_day")))
-      .groupBy(date_format(col("g_day"), "yyyy-MM-dd").as("day"))
-      .agg(countDistinct(col("user_id")).as("users_7d"))
-  }
-
-  /** Exact equi-depth histogram (8 quantile bins of cents over the
-    * (cents, event_id) total order). ntile's bucket arithmetic is
-    * replayed in closed form from a range-partitioned parallel global
-    * rank (Eval.withGlobalRowNumber) — the global sort Spark plans
-    * anyway, but the rank/bin assignment runs per partition in parallel
-    * instead of funneling the corpus through one ntile window task.
-    * With q = n div 8 and r = n mod 8, the first r buckets hold q+1
-    * rows: bin = (rn+q) div (q+1) inside them, r + ceil((rn−r(q+1))/q)
-    * after — exactly SQL ntile(8). */
-  private def equiDepthHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.events(spark, dir)
-      .select(floor(col("value") * 100 + 0.5).cast("long").as("cents"), col("event_id"))
-    val ranked = graft.operators.Eval.withGlobalRowNumber(
-      c, Seq(col("cents"), col("event_id")), "rn")
-    val census = ranked.agg(max(col("rn")).as("n"))
-    ranked.crossJoin(broadcast(census))
-      .withColumn("bin", ntileFromRank("rn", "n", 8).cast("int"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"),
-        min(col("cents")).as("lo_cents"),
-        max(col("cents")).as("hi_cents"))
-  }
-
-  /** Robust anomaly scan: per event type, outliers by the MAD rule
-    * |x − median| > 3 · 1.4826 · MAD, all in exact integer arithmetic
-    * (lower medians selected by rank, the 1.4826 consistency constant
-    * as 14826 basis points). The heavy-tail-safe companion to the 3σ
-    * z-score scan (metrics_anomalies). */
-  private def anomalyMad(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.events(spark, dir)
-      .select(col("event_type"), col("event_id"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val counts = c.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("cents"), col("event_id"))
-    val med = c.withColumn("rn", row_number().over(wv))
-      .join(counts, Seq("event_type"))
-      .filter(col("rn") === expr("(n + 1) div 2"))
-      .select(col("event_type"), col("cents").as("med_cents"))
-    val dev = c.join(med, Seq("event_type"))
-      .withColumn("dev", abs(col("cents") - col("med_cents")))
-    val wd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("dev"), col("event_id"))
-    val mad = dev.withColumn("rn", row_number().over(wd))
-      .join(counts, Seq("event_type"))
-      .filter(col("rn") === expr("(n + 1) div 2"))
-      .select(col("event_type"), col("dev").as("mad_cents"))
-    dev.join(mad, Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        first(col("med_cents")).as("med_cents"),
-        first(col("mad_cents")).as("mad_cents"),
-        sum(when(col("dev") * 10000 > lit(3L) * 14826L * col("mad_cents"), 1L)
-          .otherwise(0L)).as("n_outliers"))
-  }
-
-  /** Streaming exact dedup run END-TO-END by the streaming engine:
-    * watermarked dropDuplicates on the (user, type) fingerprint over
-    * the AvailableNow backlog, aggregated to per-type first-seen user
-    * counts — order-free, so the streaming answer equals the batch
-    * count-distinct (the shared oracle). */
-  private def streamDedupUsers(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val events = Tables.normalizeEventTs(raw)
-    val deduped = graft.streaming.StreamingMetrics.streamingDedup(
-      events.withColumn("fp", concat_ws("|", col("user_id"), col("event_type"))),
-      "fp", "1 hour")
-    val sink = "stream_dedup_" + java.lang.Integer.toHexString(dir.hashCode)
-    // two stateful operators (dedup + agg): dedup state is keyed by
-    // (user, type) fingerprints — size stores by users × 5 types
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        streamCensus(spark, dir).users * 5)) {
-      val q = deduped.groupBy(col("event_type")).agg(count(lit(1)).as("n_users"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
-  }
-
-  /** Cross-asset duplicate media segments: sampled frames grouped by
-    * content digest; a digest seen in ≥2 media rows marks shared
-    * footage/boilerplate segments — the multimodal analog of exact text
-    * dedup, running entirely on digests (the payloads never shuffle). */
-  private def multimodalFrameDedup(spark: SparkSession, dir: String): DataFrame =
-    multimodalFrames(spark, dir)
-      .groupBy(col("frame_digest"))
-      .agg(countDistinct(col("media_id")).as("n_media"),
-        count(lit(1)).as("n_frames"),
-        min(col("media_id")).as("first_media"))
-      .filter(col("n_media") >= 2)
-
-  /** TPC-H Q7-shaped: shipped revenue between (supplier nation,
-    * customer nation) pairs by ship year. Constant-size nation
-    * broadcast twice under different aliases; the fact-side joins stay
-    * AQE-decided. */
-  private def q7VolumeShipping(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val n1 = broadcast(Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("s_nkey"), col("n_name").as("supp_nation")))
-    val n2 = broadcast(Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("c_nkey"), col("n_name").as("cust_nation")))
-    li.join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .join(n1, col("s_nationkey") === col("s_nkey"))
-      .join(n2, col("c_nationkey") === col("c_nkey"))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).as("ship_year"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")).as("volume_cents"),
-        count(lit(1)).as("n_items"))
-  }
-
-  /** Ratio-to-report window: each nation's share (basis points) of its
-    * region's revenue — the percent-of-total window pattern, sharing
-    * the region partitioning between aggregate and window (one
-    * shuffle). Integer cents end-to-end. */
-  private def revenueShareWindow(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("r_name"))
-    Tables.lineitem(spark, dir)
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")).as("rev_cents"))
-      .withColumn("share_bp",
-        expr("(rev_cents * 10000) div sum(rev_cents) OVER (PARTITION BY r_name)"))
-  }
-
-  /** Retention cohort analysis: users bucketed by signup day, activity
-    * counted per trailing week offset — the product-analytics staple.
-    * Day-level distinct sets are built first; the cohort join never
-    * touches raw events. */
-  private def retentionCohorts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val daily = ev.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val cohorts = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("cohort_day"))
-    cohorts.join(daily, Seq("user_id"))
-      .filter(col("day") >= col("cohort_day"))
-      .select(date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort"),
-        expr("datediff(day, cohort_day) div 7").as("week_offset"),
-        col("user_id"))
-      .groupBy(col("cohort"), col("week_offset"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-  }
-
-  /** Incremental materialized-view maintenance for a JOIN view: the
-    * standing per-priority summary of lineitem ⋈ orders is refreshed by
-    * joining ONLY the delta slice (new l_shipdate rows) against the
-    * dimension side and folding the partial aggregates — the base fact
-    * rows are never rescanned. Equals the from-scratch recompute (the
-    * oracle) because the FK join distributes over the union of fact
-    * slices and the summary is algebraic (cf. IncrementalAgg for the
-    * single-table case). */
-  private def incrementalJoinView(spark: SparkSession, dir: String): DataFrame = {
-    val ord = Tables.orders(spark, dir)
-    val cut = lit("2001-01-01").cast("timestamp")
-    def partial(l: DataFrame): DataFrame = l
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("rev_cents"))
-    val li = Tables.lineitem(spark, dir)
-    val base = partial(li.filter(col("l_shipdate") < cut))   // the standing view
-    val delta = partial(li.filter(col("l_shipdate") >= cut)) // the refresh batch
-    base.unionByName(delta)
-      .groupBy(col("o_orderpriority"))
-      .agg(sum(col("n")).as("n"), sum(col("rev_cents")).as("rev_cents"))
-  }
-
-  /** Join-skew diagnostics: the per-key row counts of the join column,
-    * reported as the top-5 hottest keys with their skew vs the mean key
-    * (basis points) — the profile that decides between a plain hash
-    * join, AQE skew splitting, and the salted join (Joins.salted). */
-  private def joinSkewProfile(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.lineitem(spark, dir)
-      .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"))
-    val tot = counts.agg(sum(col("n")).as("n_rows"), count(lit(1)).as("n_keys"))
-    counts.crossJoin(broadcast(tot))
-      .select(col("l_suppkey"), col("n"),
-        expr("(n * 10000) div (n_rows div n_keys)").as("skew_vs_mean_bp"))
-      .orderBy(desc("n"), asc("l_suppkey")).limit(5)
-  }
-
-  // ——— TPC-H completion: every spec query expressible over the fixture
-  // schema (no partsupp table, so Q2/Q9/Q11/Q16/Q20 are out of reach;
-  // Q12/Q17/Q19/Q21/Q22 keep the spec's PLAN SHAPE on the columns that
-  // exist). Money stays in integer cents (fold-order-free sums). ———
-
-  /** TPC-H Q6: the single-table predicate-pushdown probe — every filter
-    * lands in the parquet scan, the aggregate is a map-side partial +
-    * one exchange of ONE row per partition. */
-  private def q6ForecastRevenue(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .filter(year(col("l_shipdate")) === 1996 &&
-        col("l_discount").between(0.02, 0.04) && col("l_quantity") < 24)
-      .agg(sum(floor(col("l_extendedprice") * col("l_discount") * 100 + 0.5)
-        .cast("long")).as("revenue_cents"),
-        count(lit(1)).as("n_items"))
-
-  /** TPC-H Q8: national market share inside one region's customer base.
-    * The two constant-size dims broadcast; the share is reported as
-    * numerator/denominator cents plus integer basis points — no
-    * double division to diverge between engines. */
-  private def q8MarketShare(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val nationC = broadcast(Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("cn_key"), col("n_regionkey")))
-    val nationS = broadcast(Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation")))
-    val region = broadcast(Tables.region(spark, dir).filter(col("r_name") === "ASIA"))
-    li.join(Tables.part(spark, dir).filter(col("p_type") === "STANDARD"),
-        col("l_partkey") === col("p_partkey"), "left_semi")
-      .join(Tables.orders(spark, dir)
-          .filter(col("o_orderdate").between(
-            lit("1996-01-01").cast("timestamp"), lit("1997-12-31").cast("timestamp"))),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(nationC, col("c_nationkey") === col("cn_key"))
-      .join(region, col("n_regionkey") === col("r_regionkey"), "left_semi")
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .join(nationS, col("s_nationkey") === col("sn_key"))
-      .withColumn("vol_cents",
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5).cast("long"))
-      .groupBy(year(col("o_orderdate")).as("o_year"))
-      .agg(sum(when(col("supp_nation") === "NATION_12", col("vol_cents")).otherwise(0L))
-          .as("nation_cents"),
-        sum(col("vol_cents")).as("total_cents"))
-      .withColumn("share_bp", expr("(nation_cents * 10000) div total_cents"))
-  }
-
-  /** TPC-H Q12 shape on the fixture's columns: the spec buckets by ship
-    * mode and counts priority classes; with no l_shipmode, the bucket
-    * is the ship-lag class (on-time ≤ 90 days vs late) — same
-    * join + CASE-count aggregate plan. */
-  private def q12ShipLagPriority(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(when(datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))) <= 90, "ON_TIME")
-        .otherwise("LATE").as("lag_class"))
-      .agg(
-        sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-          .as("high_line_count"),
-        sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L).otherwise(1L))
-          .as("low_line_count"))
-
-  /** TPC-H Q13: order-count distribution over customers, INCLUDING the
-    * zero-order ones — the left-outer-join-then-histogram plan. The
-    * order side is pre-aggregated to one row per customer before the
-    * join, so the outer join moves |customers| rows, not |orders|. */
-  private def q13CustomerDistribution(spark: SparkSession, dir: String): DataFrame = {
-    val perCust = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("c_count"))
-    Tables.customer(spark, dir)
-      .join(perCust, col("c_custkey") === col("o_custkey"), "left_outer")
-      .select(coalesce(col("c_count"), lit(0L)).as("c_count"))
-      .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-  }
-
-  /** TPC-H Q14: promo revenue share for one ship month — numerator via
-    * conditional sum over the broadcast part join, share in bp. */
-  private def q14PromoRevenue(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate").between(
-        lit("1996-03-01").cast("timestamp"), lit("1996-03-31").cast("timestamp")))
-      .join(Tables.part(spark, dir).select(col("p_partkey"), col("p_type")),
-        col("l_partkey") === col("p_partkey"))
-      .withColumn("rev_cents",
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5).cast("long"))
-      .agg(sum(when(col("p_type") === "PROMO", col("rev_cents")).otherwise(0L))
-          .as("promo_cents"),
-        sum(col("rev_cents")).as("total_cents"))
-      .withColumn("promo_share_bp", expr("(promo_cents * 10000) div total_cents"))
-
-  /** TPC-H Q15: the top supplier(s) by windowed revenue — the view is
-    * the per-supplier aggregate; `rev == max(rev)` keeps the spec's
-    * tie semantics (HAVING total = MAX(...)) without a second scan:
-    * one global max broadcast back over the aggregate. */
-  private def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate").between(
-        lit("1996-01-01").cast("timestamp"), lit("1996-03-31").cast("timestamp")))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")).as("total_cents"))
-    val top = rev.agg(max(col("total_cents")).as("max_cents"))
-    rev.join(broadcast(top), col("total_cents") === col("max_cents"))
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"), col("total_cents"))
-  }
-
-  /** TPC-H Q17 shape (no p_container): small-quantity revenue for one
-    * brand — the correlated `l_quantity < 0.2 * avg(per-part qty)`
-    * turned into a broadcast join against the per-part aggregate;
-    * the 0.2·avg threshold compares cross-multiplied in int64
-    * (5·qty·100 < sum_qty_hundredths·… folded to `5*q*n < sum`),
-    * so no double division enters the predicate. */
-  private def q17SmallQtyRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .join(Tables.part(spark, dir).filter(col("p_brand") === "Brand#23"),
-        col("l_partkey") === col("p_partkey"), "left_semi")
-    val perPart = li.groupBy(col("l_partkey").as("pp_key"))
-      .agg(sum((col("l_quantity") * 100).cast("long")).as("qty_hundredths"),
-        count(lit(1)).as("n_lines"))
-    li.join(broadcast(perPart), col("l_partkey") === col("pp_key"))
-      // l_quantity < 0.2 * avg  ⇔  5 * q*100 * n < sum(q*100)
-      .filter((col("l_quantity") * 100).cast("long") * 5 * col("n_lines") <
-        col("qty_hundredths"))
-      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("revenue_cents"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q18: large-volume orders — the fact table aggregates to
-    * per-order quantity FIRST (HAVING sum > 300), and only the
-    * surviving handful of keys join customer/orders. */
-  private def q18LargeOrders(spark: SparkSession, dir: String): DataFrame = {
-    val big = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(sum((col("l_quantity") * 100).cast("long")).as("qty_hundredths"))
-      .filter(col("qty_hundredths") > 300 * 100)
-    big.join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"), col("o_orderdate"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("total_cents"),
-        col("qty_hundredths"))
-      .orderBy(desc("total_cents"), asc("o_orderkey"))
-      .limit(100)
-  }
-
-  /** TPC-H Q19: the disjunctive-predicate revenue query. Each OR arm
-    * pairs brand/size with a quantity band; the common `p_partkey`
-    * equi-join stays a hash join with the OR residual as a post-join
-    * filter — the planner must NOT fall back to nested-loop. */
-  private def q19DisjunctiveRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val arm1 = col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-      col("l_quantity").between(1, 11)
-    val arm2 = col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-      col("l_quantity").between(10, 20)
-    val arm3 = col("p_brand") === "Brand#34" && col("p_size").between(1, 15) &&
-      col("l_quantity").between(20, 30)
-    Tables.lineitem(spark, dir)
-      .join(Tables.part(spark, dir).select(col("p_partkey"), col("p_brand"), col("p_size")),
-        col("l_partkey") === col("p_partkey"))
-      .filter(arm1 || arm2 || arm3)
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-        .cast("long")).as("revenue_cents"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q21 shape on the fixture's dates: suppliers who were the
-    * SOLE late shipper (ship lag > 90 days) on a multi-supplier order.
-    * The spec's EXISTS/NOT-EXISTS pair collapses into one per-order
-    * aggregate — distinct suppliers vs distinct late suppliers — so
-    * the fact table is scanned once, not three times. */
-  private def q21LateSuppliers(spark: SparkSession, dir: String): DataFrame = {
-    // SINGLE fact-table pass, and the pair reduction happens BEFORE the
-    // orders join: "any line late" only needs max(l_shipdate) per
-    // (order, supplier), so the raw fact rows map-side combine down to
-    // the pair table before any join or wide shuffle sees them — at
-    // 100 TB the orders join then moves pairs (~¼ the rows), not lines.
-    // The per-order late-supplier set is tiny (bounded by suppliers per
-    // order), so the "exactly one late supplier on a multi-supplier
-    // order" predicate falls out without re-joining the fact table
-    // against its own aggregate.
-    val pairs = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"), col("l_suppkey"))
-      .agg(max(col("l_shipdate")).as("max_ship"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey"), col("l_suppkey"),
-        (datediff(to_date(col("max_ship")), to_date(col("o_orderdate"))) > 90).as("is_late"))
-    pairs.groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("n_supp"),
-        collect_set(when(col("is_late"), col("l_suppkey"))).as("late_supps"))
-      .filter(col("n_supp") >= 2 && size(col("late_supps")) === 1)
-      .select(explode(col("late_supps")).as("l_suppkey"))
-      .groupBy(col("l_suppkey")).agg(count(lit(1)).as("numwait"))
-      .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_name"), col("numwait"))
-      .orderBy(desc("numwait"), asc("s_name"))
-      .limit(20)
-  }
-
-  /** TPC-H Q22 shape (c_phone → c_nationkey): rich-but-idle customers —
-    * above-average balance in their nation group, no RECENT orders
-    * (every fixture customer has some lifetime order, so the spec's
-    * "no orders" anti-join keys on the recent slice). The average
-    * threshold compares cross-multiplied in integer cents
-    * (bal·n > total), and the anti-join stays a left-anti. */
-  private def q22IdleCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val nations = Seq(10, 11, 12, 13, 14, 15, 16).map(_.toLong)
-    val cust = Tables.customer(spark, dir)
-      .filter(col("c_nationkey").isin(nations: _*))
-      .withColumn("bal_cents", floor(col("c_acctbal") * 100 + 0.5).cast("long"))
-    val avgPos = cust.filter(col("bal_cents") > 0)
-      .agg(sum(col("bal_cents")).as("total_cents"), count(lit(1)).as("n_pos"))
-    cust.crossJoin(broadcast(avgPos))
-      .filter(col("bal_cents") * col("n_pos") > col("total_cents"))
-      .join(Tables.orders(spark, dir)
-          .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
-          .select(col("o_custkey")),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(col("c_nationkey"))
-      .agg(count(lit(1)).as("numcust"), sum(col("bal_cents")).as("totacctbal_cents"))
-  }
-
-  /** Deterministic derived PARTSUPP — the fixture has no partsupp
-    * table, so the supply relation is DERIVED, not invented: its key
-    * set is exactly the (l_partkey, l_suppkey) pairs observed in
-    * lineitem (in TPC-H lineitem's supply pairs are a subset of
-    * partsupp, so this is the portion of partsupp the fact table
-    * exercises — and it makes Q9's supply-cost join total by
-    * construction), and the two measures are closed-form integer
-    * functions of the key (ps_availqty = 1 + (7p + 11s) mod 9999,
-    * ps_supplycost_cents = 100 + (13p + 17s) mod 99900), replayable by
-    * any engine. Unlocks the five partsupp-dependent TPC-H queries
-    * (Q2/Q9/Q11/Q16/Q20) the fixture previously could not express.
-    * Memoized per dir (five consumers); dimension-bounded (≤ distinct
-    * supply pairs). */
-  private[graft] def partsupp(spark: SparkSession, dir: String): DataFrame =
-    memoSearch("partsupp", dir) {
-      Tables.lineitem(spark, dir)
-        .select(col("l_partkey").as("ps_partkey"),
-          col("l_suppkey").as("ps_suppkey"))
-        .distinct()
-        .withColumn("ps_availqty",
-          expr("CAST(1 + pmod(ps_partkey * 7 + ps_suppkey * 11, 9999) AS INT)"))
-        .withColumn("ps_supplycost_cents",
-          expr("100 + pmod(ps_partkey * 13 + ps_suppkey * 17, 99900)"))
-    }
-
-  /** Suppliers of a region with their nation and cent-quantized account
-    * balance — the dimension-side prep shared by [[q2MinCostSupplier]],
-    * [[q11ImportantStock]] and [[q20PotentialPromotion]]; supplier ⋈
-    * nation ⋈ region is dimension-sized, so consumers broadcast it. */
-  private def regionSuppliers(spark: SparkSession, dir: String, rName: String): DataFrame =
-    Tables.supplier(spark, dir)
-      .join(Tables.nation(spark, dir), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === rName)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("s_suppkey"), col("s_name"), col("n_name"),
-        expr("CAST(round(s_acctbal * 100) AS BIGINT)").as("acctbal_cents"))
-
-  /** TPC-H Q2 over the derived [[partsupp]]: cheapest EUROPE supplier
-    * per qualifying part (adapted to the fixture part schema —
-    * p_type = 'STANDARD', p_size ≤ 25 stand in for the spec's
-    * size/type predicate; no p_mfgr/s_address columns exist). The
-    * min-cost correlated subquery is a per-part min aggregate joined
-    * back on (part, cost) — two dimension broadcasts plus one keyed
-    * shuffle of the supply pairs; top-100 under a UNIQUE total order
-    * (balance desc, nation, supplier, part). */
-  private def q2MinCostSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir)
-      .filter(col("p_type") === "STANDARD" && col("p_size") <= 25)
-      .select(col("p_partkey"), col("p_size"))
-    val offers = partsupp(spark, dir)
-      .join(broadcast(p), col("ps_partkey") === col("p_partkey"))
-      .join(broadcast(regionSuppliers(spark, dir, "EUROPE")),
-        col("ps_suppkey") === col("s_suppkey"))
-    // the per-part min is dimension-sized (≤ filtered part count) —
-    // broadcast it or AQE plans a sort-merge join of offers against
-    // its own aggregate
-    val minCost = offers.groupBy(col("ps_partkey").as("mk"))
-      .agg(min(col("ps_supplycost_cents")).as("mc"))
-    offers.join(broadcast(minCost),
-        col("ps_partkey") === col("mk") && col("ps_supplycost_cents") === col("mc"))
-      .select(col("acctbal_cents"), col("s_name"), col("n_name"),
-        col("p_partkey"), col("p_size"),
-        col("ps_supplycost_cents").as("supplycost_cents"))
-      .orderBy(col("acctbal_cents").desc, col("n_name"), col("s_name"),
-        col("p_partkey"))
-      .limit(100)
-  }
-
-  /** TPC-H Q9 over the derived [[partsupp]]: profit by nation and
-    * order year for '%widget%' parts — revenue cents (the repo's
-    * fixed-shape floor idiom) minus supply cost · quantity, all int64.
-    * Part filter broadcasts; the supply-cost join is co-keyed with the
-    * lineitem scan on (partkey, suppkey) — and total by construction,
-    * since the derived partsupp's key set IS lineitem's pair set; the
-    * orders join shuffles on orderkey (the Q9 shape). */
-  private def q9ProductProfit(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir)
-          .filter(col("p_name").like("%widget%")).select(col("p_partkey"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
-          .cast("long").as("rev_cents"),
-        col("l_quantity").cast("long").as("qty"))
-    li.join(partsupp(spark, dir),
-        col("l_partkey") === col("ps_partkey") &&
-          col("l_suppkey") === col("ps_suppkey"))
-      .join(broadcast(Tables.supplier(spark, dir)
-          .join(Tables.nation(spark, dir), col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(spark, dir)
-          .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("n_name").as("nation"), col("o_year"))
-      .agg(sum(col("rev_cents") - col("ps_supplycost_cents") * col("qty"))
-        .as("profit_cents"))
-  }
-
-  /** TPC-H Q11 over the derived [[partsupp]]: parts whose ASIA stock
-    * value exceeds TWICE the mean per-part share of the region total
-    * (the spec scales its 0.0001 fraction by 1/SF for exactly this
-    * reason — a fixed fraction goes vacuous as the part count grows;
-    * share > 2/n_parts is the scale-free form). Value = cost ·
-    * availqty stays integral; the HAVING fraction becomes an integer
-    * cross-multiply against the 1-row broadcast (total, part-count)
-    * aggregate. */
-  private def q11ImportantStock(spark: SparkSession, dir: String): DataFrame = {
-    val v = partsupp(spark, dir)
-      .join(broadcast(regionSuppliers(spark, dir, "ASIA").select(col("s_suppkey"))),
-        col("ps_suppkey") === col("s_suppkey"))
-      .select(col("ps_partkey"),
-        (col("ps_supplycost_cents") * col("ps_availqty").cast("long")).as("v"))
-    // per-part aggregate FIRST, then total-over-parts (r13, guide §2.4):
-    // the old shape computed the global (sum, countDistinct) directly on
-    // v, so the partsupp⋈suppliers subtree — which has no exchange of
-    // its own — executed twice per action (once under the global agg,
-    // once under the per-part groupBy). Deriving the total from the
-    // per-part aggregate makes BOTH branches share vp's shuffle exchange
-    // (ReuseExchange), one scan+join pass total. Identical values:
-    // sum of group sums ≡ sum (exact int64), count of groups ≡
-    // countDistinct(ps_partkey) (non-null by construction).
-    val vp = v.groupBy(col("ps_partkey")).agg(sum(col("v")).as("value_cents"))
-    val tot = vp.agg(sum(col("value_cents")).as("__t"),
-      count(lit(1)).as("__np"))
-    vp.crossJoin(broadcast(tot))
-      .filter(col("value_cents") * col("__np") > col("__t") * 2)
-      .select(col("ps_partkey"), col("value_cents"))
-  }
-
-  /** TPC-H Q16 over the derived [[partsupp]]: distinct supplier count
-    * per (brand, type, size) for non-excluded parts (Brand#1 and PROMO
-    * type excluded, eight spec-style sizes; the supplier-comment
-    * exclusion is dropped — the fixture supplier has no comment
-    * column). One broadcast of the filtered part dim, one distinct
-    * aggregate keyed by the group. */
-  private def q16PartsSuppliers(spark: SparkSession, dir: String): DataFrame =
-    partsupp(spark, dir)
-      .join(broadcast(Tables.part(spark, dir)
-          .filter(col("p_brand") =!= "Brand#1" && col("p_type") =!= "PROMO" &&
-            col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45))
-          .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))),
-        col("ps_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-
-  /** TPC-H Q20 over the derived [[partsupp]]: AMERICA suppliers whose
-    * available stock of '%rod%' parts exceeds half of what they
-    * actually shipped in 1996 (the spec's excess-stock screen; nation
-    * CANADA widened to its region for the synthetic fixture). The
-    * shipped-quantity aggregate and the availqty comparison are
-    * integral (2·availqty > qty); every join side except the supply
-    * pairs is dimension-sized and broadcast. */
-  private def q20PotentialPromotion(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.part(spark, dir)
-      .filter(col("p_name").like("%rod%")).select(col("p_partkey"))
-    val shipped = Tables.lineitem(spark, dir)
-      .filter(year(col("l_shipdate")) === 1996)
-      .join(broadcast(fp), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("qty"))
-    partsupp(spark, dir)
-      .join(shipped,
-        col("ps_partkey") === col("l_partkey") &&
-          col("ps_suppkey") === col("l_suppkey"))
-      .filter(col("ps_availqty").cast("long") * 2 > col("qty"))
-      .select(col("ps_suppkey")).distinct()
-      .join(broadcast(regionSuppliers(spark, dir, "AMERICA")),
-        col("ps_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"))
-  }
-
-  /** Gram matrix of the whole embedding corpus
-    * ([[graft.operators.Gram]]): the single-pass mergeable matrix
-    * summary PCA/whitening starts from — per-partition d·(d+1)/2 long
-    * folds treeReduced, no shuffle of the vectors, driver holds only
-    * the d×d triangle. Grid-quantized int64 → exact and replayable. */
-  private def embeddingGram(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Gram.upperTriangle(
-      spark, Tables.embeddings(spark, dir).select(col("embedding")),
-      "embedding", scale = 1024L)
-
-  /** Roaring-style bitmap intersection ([[graft.operators.Bitmap]]):
-    * two predicates' id sets compressed to 32-id block words, ANDed
-    * block-aligned, popcounted — set algebra over blocks (32× smaller
-    * than the id space) instead of a row-level join. The filtered-search
-    * pre-filter bitmap the server backends build (Milvus boolean-expr
-    * bitmap, Redis FT.SEARCH tag filters). */
-  private def bitmapAndCount(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val clicks = graft.operators.Bitmap.build(ev, "event_id", col("event_type") === "click")
-    val high = graft.operators.Bitmap.build(ev, "event_id", col("value") >= 50.0)
-    graft.operators.Bitmap.and(clicks, high)
-      .select(col("block"), col("word_a").as("word_click"),
-        col("word_b").as("word_high"), col("word_both"), col("n_both"))
-  }
-
-  /** Space-saving heavy hitters ([[graft.operators.SpaceSaving]]): the
-    * deterministic counter-table sibling of `cms_heavy_users` — capacity-64
-    * summaries folded per partition and tree-merged (Mergeable Summaries,
-    * PODS 2012), est ∈ [true, true + N/64] checked for the exact top-10.
-    * No keyed shuffle: at 100 TB the summary moves, not the keys. */
-  private def topkFreqSketch(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.SpaceSaving.heavyHitters(
-      spark, Tables.events(spark, dir), "user_id", capacity = 64, k = 10)
-
-  /** Deterministic Munro–Paterson quantile summary over event cents —
-    * percentiles WITHOUT a global sort ([[graft.operators.QuantileSketch]]):
-    * per-partition folds tree-merged, the carried worst-case rank bound
-    * checked against the exact order statistics. */
-  private def quantileSketchEvents(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.QuantileSketch.checkedQuantiles(
-      spark,
-      Tables.events(spark, dir)
-        .select(round(col("value") * 100).cast("long").as("cents")),
-      "cents", k = 256, qBps = Seq(1000, 2500, 5000, 7500, 9000, 9900))
-
-  /** Set-intersection cardinality from mergeable HLL sketches by
-    * inclusion-exclusion (|A∩B| = est(A) + est(B) − est(A∪B)) — the
-    * audience-overlap question answered from per-segment KB-sized
-    * artifacts, never a join of the id sets. Error compounds across the
-    * three estimates, so the checked bound is the sum of per-sketch
-    * bounds; the output is the exact overlap + the bound boolean
-    * (partition-layout independent — HLL merge is register-max). */
-  private def hllIntersectEst(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val a = ev.filter(col("event_type") === "click").select(col("user_id"))
-    val b = ev.filter(col("event_type") === "purchase").select(col("user_id"))
-    val ests = a.agg(hll_sketch_agg(col("user_id")).as("ska"))
-      .crossJoin(b.agg(hll_sketch_agg(col("user_id")).as("skb")))
-      .select(
-        hll_sketch_estimate(col("ska")).as("est_a"),
-        hll_sketch_estimate(col("skb")).as("est_b"),
-        hll_sketch_estimate(hll_union(col("ska"), col("skb"))).as("est_u"))
-      .head()
-    val estBoth = ests.getLong(0) + ests.getLong(1) - ests.getLong(2)
-    val exact = a.intersect(b).count()
-    val nA = a.distinct().count()
-    val nB = b.distinct().count()
-    val slack = 0.05 * (nA + nB) + 48.0
-    import spark.implicits._
-    Seq((nA, nB, exact, math.abs(estBoth - exact) <= slack))
-      .toDF("n_click_users", "n_purchase_users", "n_both_exact", "within_bound")
-  }
-
-  /** PER-GROUP quantile summaries via the native aggregate
-    * ([[graft.functions.GraftFunctions.quantileSketchAgg]]): one
-    * `groupBy(event_type)` replaces five per-group sorts — map-side
-    * partial sketches cross the shuffle as KB blobs. The emitted check:
-    * each group's estimates honor the group's carried rank bound
-    * (layout-independent), pinned against per-group exact order
-    * statistics. */
-  private def quantileSketchByType(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qs = Seq(2500, 5000, 9000)
-    val ev = Tables.events(spark, dir).select(col("event_type"),
-      round(col("value") * 100).cast("long").as("cents"), col("event_id"))
-      .localCheckpoint() // three consumers: sketch agg, exact ranks, bound counts
-    val qArr = array(qs.map(lit): _*)
-    val ests = ev.groupBy(col("event_type"))
-      .agg(graft.functions.GraftFunctions
-          .quantileSketchAgg(col("cents"), 128, qs).as("sk"),
-        count(lit(1)).as("n"))
-      .select(col("event_type"), col("n"), col("sk.err_bound").as("err"),
-        posexplode(col("sk.ests")).as(Seq("qi", "est")))
-      .withColumn("q_bps", element_at(qArr, col("qi") + 1).cast("long"))
-      .withColumn("target", expr("(n - 1) * q_bps div 10000"))
-    val ranked = ev.withColumn("rn",
-      row_number().over(Window.partitionBy(col("event_type"))
-        .orderBy(col("cents"), col("event_id"))) - 1)
-    val exact = ests.select(col("event_type"), col("q_bps"), col("target"))
-      .join(ranked, Seq("event_type"))
-      .filter(col("rn") === col("target"))
-      .select(col("event_type"), col("q_bps"), col("cents").as("exact_cents"))
-    val bounds = ests.join(ev, Seq("event_type"))
-      .groupBy(col("event_type"), col("q_bps"))
-      .agg(max(col("est")).as("est"), max(col("err")).as("err"),
-        max(col("target")).as("target"),
-        sum(when(col("cents") < col("est"), 1L).otherwise(0L)).as("n_less"),
-        sum(when(col("cents") <= col("est"), 1L).otherwise(0L)).as("n_leq"))
-      .select(col("event_type"), col("q_bps"),
-        (col("n_less") - col("err") <= col("target") &&
-          col("target") <= col("n_leq") + col("err")).as("within_bound"))
-    exact.join(bounds, Seq("event_type", "q_bps"))
-      .select(col("event_type"), col("q_bps"), col("exact_cents"),
-        col("within_bound"))
-  }
-
-  /** The quantile summary folded by the streaming ENGINE: each
-    * micro-batch builds its partition-folded sketch
-    * ([[graft.operators.QuantileSketch.summarize]]) and merges it into
-    * an atomically-swapped accumulator — the KB-sized artifact is all
-    * that crosses batches, the monitor pattern for "p99 over an
-    * unbounded stream" (bounds add across merges, so the carried
-    * guarantee survives any batch split). Validation + oracle are the
-    * batch twin's: one logical answer, two physical engines. */
-  private def streamQuantileEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val cents = Tables.normalizeEventTs(raw)
-      .select(round(col("value") * 100).cast("long").as("cents"))
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      graft.operators.QuantileSketch.Sketch.empty(256))
-    // no keyed state on this path (foreachBatch / batch-sized per-micro-
-    // batch work): the fixture floor of the sizing rule applies
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = cents.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (!batch.isEmpty) {
-            val sk = graft.operators.QuantileSketch.summarize(batch, "cents", 256)
-            acc.updateAndGet(s => s.merge(sk)); ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.QuantileSketch.checkedAgainst(
-      spark,
-      Tables.events(spark, dir)
-        .select(round(col("value") * 100).cast("long").as("v")),
-      acc.get, Seq(1000, 2500, 5000, 7500, 9000, 9900))
-  }
-
-  /** The space-saving heavy-hitter summary folded ACROSS streaming
-    * micro-batches — continuous "top talkers" monitoring: each
-    * micro-batch folds into one capacity-64 counter table
-    * ([[graft.operators.SpaceSaving]]), merged associatively into the
-    * running summary (the mergeable-summaries property that makes the
-    * sketch a streaming-native artifact); the final merged table answers
-    * the same bound-checked exact-top-10 contract as the batch
-    * `topk_freq_sketch`, whose oracle it shares. */
-  private def streamTopkFreq(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val keys = Tables.normalizeEventTs(raw).select(col("user_id"))
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      graft.operators.SpaceSaving.Summary.empty(64))
-    // no keyed state on this path (foreachBatch / batch-sized per-micro-
-    // batch work): the fixture floor of the sizing rule applies
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(0L)) {
-      val q = keys.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (!batch.isEmpty) {
-            val sk = graft.operators.SpaceSaving.summarize(batch, "user_id", 64)
-            acc.updateAndGet(s => s.merge(sk)); ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.SpaceSaving.checkedAgainst(
-      spark, Tables.events(spark, dir).select(col("user_id")), "user_id",
-      acc.get, k = 10)
-  }
-
-  /** The CDC fold executed by the streaming ENGINE
-    * ([[graft.streaming.StreamingMetrics.cdcApplyStream]]): per-key
-    * winner state via flatMapGroupsWithState in Update mode, memory sink
-    * accumulating the update log, final snapshot = arg-max over the log
-    * (monotone winner ⇒ identical to the batch fold). Shares the batch
-    * `cdc_apply` oracle: one logical MERGE INTO, two physical engines. */
-  private def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val changes = Tables.normalizeEventTs(raw)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .as[graft.streaming.StreamingMetrics.CdcIn]
-    val sink = "stream_cdc_" + java.lang.Integer.toHexString(dir.hashCode)
-    // user-keyed state: stores sized by the user-cardinality census
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        streamCensus(spark, dir).users)) {
-      val q = graft.streaming.StreamingMetrics.cdcApplyStream(changes)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms").desc, col("event_id").desc)
-    spark.table(sink)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "D")
-      .select(col("user_id"), col("cents"), col("ms").as("last_ms"))
-  }
-
-  /** Hopping (sliding) windows run by the streaming engine — the
-    * overlapping-window form of `stream_windowed_agg`
-    * ([[graft.streaming.StreamingMetrics.hoppingWindowAgg]] under
-    * AvailableNow, complete-mode memory sink). Each event expands to
-    * windowDur/slideDur window keys BEFORE the keyed shuffle, state per
-    * (window, type). Shares the batch `hopping_window_agg` oracle. */
-  private def streamHoppingAgg(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-    val events = Tables.normalizeEventTs(raw)
-    val sink = "stream_hop_" + java.lang.Integer.toHexString(dir.hashCode)
-    // (window, type)-keyed state: hopping windows double the bucket count
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        streamCensus(spark, dir).windowBuckets(3600000L) * 2 * 5)) {
-      val q = graft.streaming.StreamingMetrics
-        .hoppingWindowAgg(events, "2 hours", "1 hour", "2 hours")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
-  }
-
-  /** Spectral projection onto the corpus' dominant principal direction
-    * ([[graft.operators.Gram.topComponentProject]]): distributed Gram,
-    * driver-side integer power iteration (2 rounds, model-sized), then
-    * one codegen'd zip_with/aggregate dot-product scan. The exact-int64
-    * floor-division pipeline replays bit-for-bit in the oracle. */
-  private def pcaPowerProject(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Gram.topComponentProject(
-      spark, Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding", scale = 1024L)
-
-  /** SQL-exact ntile(k) replayed in closed form from a range-partitioned
-    * parallel global rank (Eval.withGlobalRowNumber) — the same
-    * de-globalization as [[equiDepthHistogram]], factored for reuse.
-    * Needs a `__n` column (total row count) on the input; ranks are
-    * unique so the first n mod k buckets hold n div k + 1 rows. */
-  private def ntileFromRank(rn: String, n: String, k: Int): org.apache.spark.sql.Column =
-    when(expr(s"$n div $k") === 0, col(rn)) // n < k: one row per bucket
-      .when(col(rn) <= expr(s"($n % $k) * ($n div $k + 1)"),
-        expr(s"($rn + $n div $k) div ($n div $k + 1)"))
-      .otherwise(expr(
-        s"$n % $k + ($rn - ($n % $k) * ($n div $k + 1) + $n div $k - 1) div ($n div $k)"))
-      .cast("long")
-
-  /** RFM segmentation — the classic user-value cut: per user, recency
-    * (days since last event, vs the corpus max day), frequency (event
-    * count) and monetary (summed cents), each quartiled by a
-    * deterministic ntile over (metric, user_id). The user census is
-    * data-sized, so each quartile is [[ntileFromRank]] over a
-    * range-partitioned parallel rank (Eval.withGroupedRowNumber), never
-    * a single-partition ntile window; the corpus max timestamp and
-    * census size ride back in as a 1-row broadcast. */
-  private def rfmUsers(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.events(spark, dir)
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("user_id"))
-      .agg(max(col("ms")).as("last_ms"), count(lit(1)).as("freq"),
-        sum(col("cents")).as("monetary_cents"))
-    val census = per.agg(max(col("last_ms")).as("__max_ms"),
-      count(lit(1)).as("__n"))
-    val base = per.crossJoin(broadcast(census))
-      .withColumn("recency_days", expr("(__max_ms - last_ms) div 86400000"))
-    // one rank machine for all three quartiles: unpivot (metric, sortkey)
-    // — sort keys are all ascending longs once freq/monetary negate —
-    // rank per metric in a single grouped prefix pass, regroup per user
-    val unpiv = base.select(col("user_id"), col("recency_days"), col("freq"),
-      col("monetary_cents"), col("__n"),
-      expr("stack(3, 0, recency_days, 1, -freq, 2, -monetary_cents)" +
-        " as (__metric, __key)"))
-    val ranked = graft.operators.Eval.withGroupedRowNumber(unpiv, "__metric",
-        Seq(col("__key"), col("user_id")), "__rn")
-      .withColumn("__q", ntileFromRank("__rn", "__n", 4))
-    val m = ranked
-      .groupBy(col("user_id"), col("recency_days"), col("freq"),
-        col("monetary_cents"))
-      .agg(max(when(col("__metric") === 0, col("__q"))).as("r_q"),
-        max(when(col("__metric") === 1, col("__q"))).as("f_q"),
-        max(when(col("__metric") === 2, col("__q"))).as("m_q"))
-    m.select(col("user_id"), col("recency_days"), col("freq"),
-        col("monetary_cents"),
-        concat(lit("R"), col("r_q"), lit("F"), col("f_q"), lit("M"), col("m_q"))
-          .as("segment"))
-  }
-
-  /** DAU/WAU stickiness per day: distinct daily actives over distinct
-    * trailing-7-day actives, in basis points — the engagement ratio
-    * next to [[rolling7dUsers]]' WAU. Reuses the same
-    * count-distinct-over-range shape. */
-  private def dauWauRatio(spark: SparkSession, dir: String): DataFrame = {
-    val days = Tables.events(spark, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"), col("user_id"))
-      .distinct()
-    val dau = days.groupBy(col("day")).agg(countDistinct(col("user_id")).as("dau"))
-    // trailing-7-day actives via a (day, user) range self-join on the
-    // bounded 7-day band — the band is a constant, the join is keyed
-    val wau = days.select(col("day")).distinct().as("a")
-      .join(days.select(col("day").as("d2"), col("user_id")).as("b"),
-        col("b.d2") between (col("a.day") - 6, col("a.day")))
-      .groupBy(col("a.day").as("day"))
-      .agg(countDistinct(col("b.user_id")).as("wau"))
-    dau.join(wau, Seq("day"))
-      .select(col("day"), col("dau"), col("wau"),
-        expr("(dau * 10000) div wau").as("stickiness_bp"))
-  }
-
-  /** Top event-type 3-step paths (path/funnel mining): consecutive
-    * per-user triples within a 30-minute step gap, counted corpus-wide.
-    * One window pass (lead ×4) + one aggregate — no self-joins; the
-    * classic clickstream "what do users do next" query. */
-  private def eventPaths(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
-    val gapMs = 1800000L
-    Tables.events(spark, dir)
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"),
-        col("event_id"), col("event_type"))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("ms2", lead(col("ms"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .withColumn("ms3", lead(col("ms"), 2).over(w))
-      .filter(col("t3").isNotNull &&
-        col("ms2") - col("ms") <= gapMs && col("ms3") - col("ms2") <= gapMs)
-      .select(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
-      .groupBy(col("path")).agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("path")).limit(10)
-  }
-
-  /** Min-label propagation communities on the shared-rare-gram document
-    * graph ([[graft.operators.Graph.minLabelPropagation]], 3 rounds) —
-    * the deterministic community detector next to PageRank's centrality
-    * and the triangle counts' density, over the same reused edge
-    * artifact. */
-  private def labelPropCommunities(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.minLabelPropagation(sharedGramEdges(spark, dir), rounds = 3)
-      .select(col("id").as("doc_id"), col("label"))
-
-  /** Bigram-LM quality scoring
-    * ([[graft.text.ImportanceScoring.bigramDigitScore]]) — the
-    * order-sensitive n=2 member of the CCNet/KenLM filter family next to
-    * `unigram_logprob`'s n=1. */
-  private def bigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    graft.text.ImportanceScoring.bigramDigitScore(
-      Tables.documents(spark, dir), "doc_id", "text")
-
-  /** Interpolated Kneser–Ney bigram-LM scoring
-    * ([[graft.text.ImportanceScoring.kneserNeyBigramScore]]) — the
-    * actual KenLM smoothing next to `bigram_logprob`'s unsmoothed
-    * surrogate; the whole LM (train + score) replays exactly in the
-    * oracle as integer rationals. */
-  private def knBigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    graft.text.ImportanceScoring.kneserNeyBigramScore(
-      Tables.documents(spark, dir), "doc_id", "text")
-
-  /** ROUGE-1/2 overlap scoring ([[graft.text.Rouge.rouge12]]) — CLIPPED
-    * n-gram matches over (candidate, reference) doc pairs (even doc_id
-    * paired with its successor), recall + F1 in exact floor-ppm. The
-    * clipped counting (min of multiplicities per gram) is what the
-    * set-based `ngram_jaccard_pairs` cannot express. */
-  private def rougeOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val cand = docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id").as("pair_id"), col("text").as("cand_text"))
-    val ref = docs.filter(col("doc_id") % 2 =!= 0)
-      .select((col("doc_id") - 1).as("pair_id"), col("text").as("ref_text"))
-    graft.text.Rouge.rouge12(cand.join(ref, "pair_id"))
-  }
-
-  /** k-occurrence (hubness) diagnostic over the exact kNN graph
-    * (Radovanović et al., JMLR 2010 "Hubs in Space"): the in-degree
-    * distribution of the degree-16 adjacency, zeros included — hubs
-    * (vectors in many neighbor lists) are where ANN recall degrades
-    * first and antihubs are unreachable, so this histogram is the
-    * standard pre-flight read on an embedding space before sizing an
-    * index. One groupBy over the memoized adjacency artifact. */
-  private def hubnessStats(spark: SparkSession, dir: String): DataFrame = {
-    val occ = graphAdj(spark, dir)
-      .groupBy(col("neighbor_id")).agg(count(lit(1)).as("k_occ"))
-      .withColumnRenamed("neighbor_id", "vec_id")
-    Tables.embeddingBase(spark, dir).select(col("vec_id"))
-      .join(occ, Seq("vec_id"), "left")
-      .select(coalesce(col("k_occ"), lit(0L)).as("k_occ"))
-      .groupBy(col("k_occ")).agg(count(lit(1)).as("n_vectors"))
-  }
-
-  /** Unicode text normalization
-    * ([[graft.text.TextFunctions.normalizeText]] — NFC via the native
-    * [[graft.functions.NfcNormalize]] codegen kernel with an ASCII fast
-    * path, then control/zero-width strip and whitespace collapse). The
-    * ASCII fixtures are decorated deterministically per doc with NFD
-    * sequences, C0 controls, CRLF and a ZERO WIDTH SPACE so the pass
-    * does real work; the oracle builds the identical raw string and
-    * replays the pipeline with DuckDB's `nfc_normalize`. */
-  // NFD (decomposed) decorations for text_normalize: base letter +
-  // combining mark, so NFC composition does real work on the ASCII
-  // fixtures. ONE definition shared by the Spark query and the oracle
-  // SQL (interpolated into the SQL text as raw UTF-8) -- they cannot
-  // drift.
-  private val NfdDecor0 = " Cafe\u0301 du the\u0301"
-  private val NfdDecor1 = " A\u030Angstro\u0308m"
-  private val NfdDecor2 = " pin\u0303a colada"
-  // ZWSP + double-space tail, shared the same way; the BEL/TAB/CRLF
-  // prefix is built with chr() in the SQL (control bytes inside a SQL
-  // literal are legal but unreadable) and as escapes here.
-  private val ZwspTail = " zero\u200Bwidth  end "
-
-  private def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val m4 = pmod(col("doc_id"), lit(4L))
-    val decor = when(m4 === 0, lit(NfdDecor0))
-      .when(m4 === 1, lit(NfdDecor1))
-      .when(m4 === 2, lit(NfdDecor2))
-      .otherwise(lit(""))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        concat(col("text"), decor,
-          lit("\u0007\t tail\r\n" + ZwspTail)).as("raw"))
-      .select(col("doc_id"),
-        graft.text.TextFunctions.normalizeText(col("raw")).as("norm_text"),
-        length(col("raw")).cast("long").as("n_raw"))
-      .withColumn("n_norm", length(col("norm_text")).cast("long"))
-  }
-
-  /** URL canonicalization + registered-domain extraction — the
-    * dedup-key step of a web-corpus pipeline (two scrapes of one page
-    * differ only in scheme/host case, default ports, utm_* tracking
-    * params, fragments and trailing slashes; canonicalizing first is
-    * what makes URL-level dedup sound). URLs are synthesized
-    * deterministically from (source, doc_id) to exercise every rule;
-    * the canonical form lowercases scheme+host, strips default ports
-    * (443/https, 80/http — the :8080 arm survives), drops the fragment
-    * and utm_* params (other params kept in order), and trims trailing
-    * slashes. doc_id %% 7 == 0 rows sit under `.co.uk` so the
-    * public-suffix branch of [[graft.text.UrlFunctions.registeredDomain]]
-    * (last THREE labels under a multi-label suffix) is fixture-covered.
-    * Row-local regex/HOF work, no shuffle. */
-  private def urlCanonicalize(spark: SparkSession, dir: String): DataFrame = {
-    val m2 = pmod(col("doc_id"), lit(2L))
-    val m3 = pmod(col("doc_id"), lit(3L))
-    val m5 = pmod(col("doc_id"), lit(5L))
-    val rawUrl = concat(
-      when(m2 === 0, lit("HTTPS")).otherwise(lit("http")), lit("://"),
-      when(m3 === 0, lit("WWW.News.")).when(m3 === 1, lit("www.blog."))
-        .otherwise(lit("CDN.")),
-      col("source"),
-      // doc_id % 7 == 0 rows live under a TWO-LEVEL public suffix so the
-      // registeredDomain PSL branch is exercised by the fixture
-      when(pmod(col("doc_id"), lit(7L)) === 0, lit(".ExAmple.CO.UK"))
-        .otherwise(lit(".ExAmple.COM")),
-      when(m2 === 0, lit(":443")).otherwise(lit(":8080")),
-      lit("/Articles/"), pmod(col("doc_id"), lit(7L)).cast("string"),
-      when(m5 === 0, lit("/")).otherwise(lit("")),
-      lit("?utm_source=feed&id="), col("doc_id").cast("string"),
-      lit("&utm_campaign=x&ref=home"),
-      lit("#sec"), m3.cast("string"))
-    import graft.text.UrlFunctions
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), rawUrl.as("raw"))
-      .select(col("doc_id"),
-        UrlFunctions.canonicalize(col("raw")).as("canon_url"),
-        UrlFunctions.host(col("raw")).as("host"),
-        UrlFunctions.registeredDomain(col("raw")).as("reg_domain"),
-        UrlFunctions.pathDepth(col("raw")).cast("long").as("path_depth"))
-  }
-
-  /** Margin-based bitext mining
-    * ([[graft.operators.Bitext.mutualMarginPairs]], Artetxe & Schwenk
-    * 2019) over the embeddings table split by vec_id parity — the
-    * parallel-corpus alignment pass of LASER/CCMatrix pipelines,
-    * decided entirely in quantized int64 arithmetic so the mining
-    * replays in the oracle. */
-  /** Bitext mining knobs, shared by the Scala call sites AND the oracle
-    * CTE builders (which s-interpolate them) so the neighborhood size k,
-    * the margin numerator 2k*10^6, the prefix dim, and the shortlist
-    * cannot drift between the two sides (round-8 review). */
-  private val BitextK = 4
-  private val BitextPrefixDim = 32
-  private val BitextShortlist = 16
-
-  /** Second shortlist rung for the recovery knob curve (r8 verdict
-    * item 4): how much mutual-pair recovery one more doubling of the
-    * prefix-pass shortlist buys. */
-  private val BitextShortlist2 = 32
-
-  /** Margin thresholds (ppm of the ratio margin) for the mining census —
-    * shared with the oracle's VALUES ladder. 1.00–1.08× in the band
-    * where CCMatrix-style pipelines pick their operating point. */
-  private val BitextThresholdLadder: Seq[Long] =
-    Seq(1000000L, 1010000L, 1020000L, 1040000L, 1060000L, 1080000L)
-
-  private def bitextSplit(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val emb = Tables.embeddings(spark, dir)
-    (emb.filter(col("vec_id") % 2 === 0).select(col("vec_id"), col("embedding")),
-      emb.filter(col("vec_id") % 2 =!= 0).select(col("vec_id"), col("embedding")))
-  }
-
-  // the mined pair sets are per-dir ARTIFACTS like graphAdjCache: three
-  // queries consume them (the two mining queries + the recovery
-  // comparison), so the pipelines run once per fixture dir — the
-  // cross-QUERY memoization that the within-query checkpoint A/Bs
-  // (comments in Bitext.scala / bitextPrefixRecovery) showed is the
-  // only checkpointing that pays here
-  private val bitextExactCache = namedArtifactCache[String]("bitext_exact")
-  private val bitextPrefixCache = namedArtifactCache[String]("bitext_prefix16")
-
-  // (helper lives with the bitext caches historically; used by every
-  // per-dir DataFrame artifact cache in this object — see cachedArtifact
-  // scaladoc at its definition near the top of the file)
-
-  private def bitextExactPairs(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextExactCache, dir) {
-      val (src, tgt) = bitextSplit(spark, dir)
-      graft.operators.Bitext.mutualMarginPairs(src, tgt, k = BitextK).localCheckpoint()
-    }
-
-  private def bitextPrefixPairs(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextPrefixCache, dir) {
-      val (src, tgt) = bitextSplit(spark, dir)
-      graft.operators.Bitext.mutualMarginPairsPrefix(src, tgt,
-        k = BitextK, prefixDim = BitextPrefixDim, shortlist = BitextShortlist)
-        .localCheckpoint()
-    }
-
-  private val bitextPrefix32Cache = namedArtifactCache[String]("bitext_prefix32")
-
-  private def bitextPrefixPairs32(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextPrefix32Cache, dir) {
-      val (src, tgt) = bitextSplit(spark, dir)
-      graft.operators.Bitext.mutualMarginPairsPrefix(src, tgt,
-        k = BitextK, prefixDim = BitextPrefixDim, shortlist = BitextShortlist2)
-        .localCheckpoint()
-    }
-
-  private def bitextMargin(spark: SparkSession, dir: String): DataFrame =
-    bitextExactPairs(spark, dir)
-
-  /** IVF nprobe for the ANN-candidate bitext pass — the measured
-    * operating point off the `bitext_ann_curve` ladder (r10 verdict
-    * item 2: the cheapest rung with ≥85% mutual-pair recovery at every
-    * SF). Measured recovery by rung (sf0.001/0.01/0.1 ppm÷10⁴):
-    * np=2 50.6/56.5/52.4, np=3 66.7/73.3/69.3, np=4 83.3/83.9/80.9,
-    * np=6 92.3/95.0/94.8 — np=6 is the first rung clearing the bar
-    * (these synthetic embeddings are weakly clustered, the same reason
-    * `knn_ivf_flat` serves at nprobe=6). Cost delta vs the old np=3
-    * point: candidate mass tracks np/nlist, so 2× at fixture scale
-    * (nlist=8); at 100 TB nlist ≈ √n and the same absolute np is a
-    * vanishing corpus fraction. Shared with the oracle replay via
-    * interpolation. */
-  private val BitextAnnNprobe = 6
-
-  private val bitextAnnCache = namedArtifactCache[String]("bitext_ann")
-
-  /** ANN-candidate bitext mining (r9 verdict item 3) — the measured
-    * 100 TB pass 1. The r9 recovery curve proved the FIXED-shortlist
-    * prefix pass DEGRADES with corpus size (75.8% → 58.4% mutual-pair
-    * recovery at 4× rows/side; SCALING.md): a constant per-node
-    * shortlist covers a shrinking corpus fraction. Cell candidates
-    * don't: the per-dir deterministic IVF codebook (the same
-    * [[ivfFlatModel]] that serves `knn_ivf_flat`) assigns both sides to
-    * cells, each node probes its [[BitextAnnNprobe]] nearest cells, and
-    * its candidates are the OPPOSITE side's members of those cells —
-    * per-node candidate mass tracks n/nlist and nlist grows with the
-    * corpus (nlist ≈ √n), so recovery holds where the fixed shortlist's
-    * falls. The margin tail is byte-identical machinery
-    * ([[graft.operators.Bitext.mutualMarginPairsFromCandidates]]); the
-    * oracle replays the IVF training verbatim (ivfTrainCtes) plus the
-    * probe/assign joins. Cost shape: train once, two cell hash joins,
-    * per-node top-k window — no all-pairs pass anywhere. */
-  /** Shared ANN candidate tables at the DEEPEST ladder rung
-    * ([[BitextAnnNprobeLadder]].max = [[BitextAnnNprobe]]), carrying the
-    * probe rank that generated each pair row and rescored full-dim ONCE
-    * (r13, verdict item 4): `filter(prank <= np)` reproduces rung np's
-    * candidate MULTISET exactly (one row per (pair, probed cell), probe
-    * sets are rank prefixes — [[graft.index.IvfFlat.probesRanked]]), so
-    * the 4-rung curve and the operating-point mining share one
-    * probe + assign + join + rescore pass instead of four (guide §1.2).
-    * The margin tails (per-node windows + mutual argmax) still run per
-    * rung — they genuinely differ per rung. */
-  private val bitextAnnCandACache = namedArtifactCache[String]("bitext_ann_cand_a")
-  private val bitextAnnCandBCache = namedArtifactCache[String]("bitext_ann_cand_b")
-
-  private def bitextAnnCandA(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextAnnCandACache, dir) {
-      val (src, tgt) = bitextSplit(spark, dir)
-      val cs = ivfFlatModel(spark, dir)
-      val aTgt = graft.index.IvfFlat.assignments(tgt, cs)
-      graft.operators.Bitext.rescorePairs(src, tgt,
-        graft.index.IvfFlat.probesRanked(src, cs, BitextAnnNprobe)
-          .select(col("query_id").as("src_id"), col("cid"), col("prank"))
-          .join(aTgt.select(col("vec_id").as("tgt_id"), col("cid")), Seq("cid"))
-          .select(col("src_id"), col("tgt_id"), col("prank")))
-        .localCheckpoint()
-    }
-
-  private def bitextAnnCandB(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextAnnCandBCache, dir) {
-      val (src, tgt) = bitextSplit(spark, dir)
-      val cs = ivfFlatModel(spark, dir)
-      val aSrc = graft.index.IvfFlat.assignments(src, cs)
-      graft.operators.Bitext.rescorePairs(src, tgt,
-        graft.index.IvfFlat.probesRanked(tgt, cs, BitextAnnNprobe)
-          .select(col("query_id").as("tgt_id"), col("cid"), col("prank"))
-          .join(aSrc.select(col("vec_id").as("src_id"), col("cid")), Seq("cid"))
-          .select(col("src_id"), col("tgt_id"), col("prank")))
-        .localCheckpoint()
-    }
-
-  private def buildBitextAnnPairs(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    // the shared candidate tables are built at BitextAnnNprobe; a deeper
-    // rung would silently truncate to it — refuse loudly instead
-    require(nprobe <= BitextAnnNprobe,
-      s"bitext ANN rung nprobe=$nprobe exceeds the shared candidate depth $BitextAnnNprobe")
-    graft.operators.Bitext.mutualMarginPairsFromRescored(
-      bitextAnnCandA(spark, dir).filter(col("prank") <= nprobe),
-      bitextAnnCandB(spark, dir).filter(col("prank") <= nprobe),
-      k = BitextK).localCheckpoint()
-  }
-
-  private def bitextAnnPairs(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(bitextAnnCache, dir)(
-      buildBitextAnnPairs(spark, dir, BitextAnnNprobe))
-
-  /** Off-operating-point rungs of the ANN candidate pass, keyed
-    * (dir, nprobe); the [[BitextAnnNprobe]] rung serves from the shared
-    * [[bitextAnnCache]] artifact so the curve never rebuilds what the
-    * mining queries already built. */
-  private val bitextAnnNpCache = namedArtifactCache[(String, Int)]("bitext_ann_np")
-  private def bitextAnnPairsAt(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
-    if (nprobe == BitextAnnNprobe) bitextAnnPairs(spark, dir)
-    else cachedArtifact(bitextAnnNpCache, (dir, nprobe))(
-      buildBitextAnnPairs(spark, dir, nprobe))
-
-  private def bitextMarginAnn(spark: SparkSession, dir: String): DataFrame =
-    bitextAnnPairs(spark, dir)
-
-  /** Measured recovery of the ANN-candidate mining vs the exact one —
-    * the row that closes the r9 curve's open end: unlike the fixed
-    * shortlist, the cell-candidate pass must HOLD its recovery as the
-    * corpus grows. At the r11 operating point ([[BitextAnnNprobe]] = 6,
-    * chosen off [[bitextAnnCurve]]'s measured ladder) this reads
-    * 92.3/95.0/94.8% across the three SFs — vs the collapsing
-    * shortlist-16 prefix pass (75.8% → 58.4%). */
-  private def bitextAnnRecovery(spark: SparkSession, dir: String): DataFrame = {
-    val exact = bitextExactPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    val ann = bitextAnnPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(ann.agg(count(lit(1)).as("n_ann")))
-      .crossJoin(exact.join(ann, Seq("src_id", "tgt_id"))
-        .agg(count(lit(1)).as("n_common")))
-      .select(col("n_exact"), col("n_ann"), col("n_common"),
-        expr("(1000000 * n_common) div greatest(n_exact, 1)").as("recovery_ppm"))
-  }
-
-  /** nprobe rungs of the ANN-candidate operating-point ladder (r10
-    * verdict item 2), deepest rung = the shipped [[BitextAnnNprobe]].
-    * nlist is 8 at fixture scale, so nprobe=8 would be exhaustive
-    * (degenerate all-pairs) — 6 is the deepest honest rung; at 100 TB
-    * nlist ≈ √n and the same absolute nprobe is a vanishing corpus
-    * fraction. */
-  private val BitextAnnNprobeLadder: Seq[Int] = Seq(2, 3, 4, 6)
-
-  /** Recovery-vs-nprobe curve of the ANN candidate pass — the measured
-    * ladder the r10 verdict asked for before naming an operating point:
-    * each rung mines mutual pairs with a deeper cell probe and is scored
-    * against the exact pipeline's pairs. The [[BitextAnnNprobe]] rung
-    * serves from the mining queries' shared artifact; the others build
-    * once per dir. Cost shape per rung: two cell hash joins + the margin
-    * tail over ~np/nlist of the cross pairs — never all-pairs. */
-  private def bitextAnnCurve(spark: SparkSession, dir: String): DataFrame = {
-    val exact = bitextExactPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    def rung(np: Int): DataFrame = {
-      val ann = bitextAnnPairsAt(spark, dir, np).select(col("src_id"), col("tgt_id"))
-      exact.agg(count(lit(1)).as("n_exact"))
-        .crossJoin(ann.agg(count(lit(1)).as("n_ann")))
-        .crossJoin(exact.join(ann, Seq("src_id", "tgt_id"))
-          .agg(count(lit(1)).as("n_common")))
-        .select(lit(np.toLong).as("nprobe"),
-          col("n_exact"), col("n_ann"), col("n_common"),
-          expr("(1000000 * n_common) div greatest(n_exact, 1)").as("recovery_ppm"))
-    }
-    BitextAnnNprobeLadder.map(rung).reduce(_.unionByName(_))
-  }
-
-  /** Operating margin threshold for the mined-bitext → training-mix
-    * composition — a mid-band rung of [[BitextThresholdLadder]] (the
-    * census query measures the yield at every rung; the composition
-    * picks one, the way CCMatrix pipelines fix a margin like 1.06 for
-    * the release). Shared with the oracle via interpolation. */
-  private val BitextMixThreshold = 1040000L
-
-  /** Mined-bitext → training-mix COMPOSITION (r9 verdict item 7a) — the
-    * CCMatrix end-to-end: mutual pairs clearing [[BitextMixThreshold]]
-    * become per-language-pair PARALLEL corpora (token mass = both sides'
-    * documents, domain key `bitext:lo-hi`), and those domains water-fill
-    * the same 50% token budget ALONGSIDE the monolingual sources —
-    * [[graft.text.Curation.tokenBudgetAllocationFromCaps]] over the
-    * union of capacity tables. Cost beyond the memoized pair artifact:
-    * two id hash joins + the metadata-sized allocation. At 100 TB the
-    * caps are one aggregate per corpus and the water-filling runs on the
-    * domain table — unchanged from `token_budget_mix`'s scale shape. */
-  private def bitextMixCompose(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val mono = docs
-      .select(col("source").as("domain"),
-        size(TextFunctions.tokens(col("text"))).cast("long").as("__nt"))
-      .groupBy(col("domain")).agg(sum(col("__nt")).as("cap"))
-    val meta = docs.select(col("doc_id"), col("lang"),
-      size(TextFunctions.tokens(col("text"))).cast("long").as("nt"))
-    val par = bitextExactPairs(spark, dir)
-      .filter(col("margin_ppm") >= BitextMixThreshold)
-      .join(meta.select(col("doc_id").as("src_id"),
-        col("lang").as("lang_s"), col("nt").as("nt_s")), Seq("src_id"))
-      .join(meta.select(col("doc_id").as("tgt_id"),
-        col("lang").as("lang_t"), col("nt").as("nt_t")), Seq("tgt_id"))
-      .select(concat(lit("bitext:"), least(col("lang_s"), col("lang_t")),
-          lit("-"), greatest(col("lang_s"), col("lang_t"))).as("domain"),
-        (col("nt_s") + col("nt_t")).as("__nt"))
-      .groupBy(col("domain")).agg(sum(col("__nt")).as("cap"))
-    graft.text.Curation.tokenBudgetAllocationFromCaps(
-      mono.unionByName(par), budgetPctBps = 5000)
-  }
-
-  /** Query terms of the lexical/hybrid retrieval stack, shared by
-    * `hybrid_rerank` and its oracle (bm25/hybrid queries predate the
-    * constant and keep their literals for hash stability). */
-  private val HybridTerms = Seq("spark", "join", "query")
-
-  /** Candidate-list size the reranker reads from the fused ranking —
-    * the standard two-stage retrieval shape (cheap retriever → top-N →
-    * expensive scorer → top-k). */
-  private val RerankShortlist = 50
-
-  /** Model-based rerank of the hybrid retrieval stack (r9 verdict item
-    * 7b) — the reranker slot of a RAG pipeline: the RRF-fused top-50 of
-    * `hybrid_search` is re-scored by a FROZEN-INTEGER cross-scorer (the
-    * deterministic stand-in for a cross-encoder, the same contract as
-    * the multimodal stub featurizer): per candidate,
-    * 10000·coverage² + 100·Σ min(tf_t, 3) + Σ_pairs min(prox, 5), where
-    * coverage = distinct query terms present and prox counts co-occur-
-    * rences of a term pair within 8 token positions — term interaction
-    * a bag-of-words retriever can't see, which is exactly what the
-    * cross-scoring stage exists to add. All int64; rank ties break on
-    * (fused score, doc_id). Scale shape: TakeOrdered for the top-N (no
-    * global window), then everything runs on the 50-row shortlist. */
-  private def hybridRerank(spark: SparkSession, dir: String): DataFrame = {
-    val cand = hybridSearch(spark, dir)
-      .orderBy(col("rrf_score").desc, col("doc_id")).limit(RerankShortlist)
-    val toks = Tables.documents(spark, dir)
-      .join(cand.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "term")))
-      .filter(col("term").isin(HybridTerms: _*))
-    val perTerm = toks.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val cover = perTerm.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("coverage"),
-        sum(least(col("tf"), lit(3L))).as("tf_capped"))
-    val prox = toks.as("a").join(toks.as("b"),
-        col("a.doc_id") === col("b.doc_id") &&
-          col("a.term") < col("b.term") &&
-          abs(col("a.pos") - col("b.pos")) <= 8)
-      .groupBy(col("a.doc_id").as("doc_id"), col("a.term"), col("b.term"))
-      .agg(count(lit(1)).as("np"))
-      .groupBy(col("doc_id"))
-      .agg(sum(least(col("np"), lit(5L))).as("prox"))
-    val w = Window.orderBy(col("cross_score").desc, col("rrf_score").desc, col("doc_id"))
-    cand
-      .join(cover, Seq("doc_id"), "left")
-      .join(prox, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("rrf_score"),
-        (coalesce(col("coverage"), lit(0L)) * coalesce(col("coverage"), lit(0L)) * 10000L +
-          coalesce(col("tf_capped"), lit(0L)) * 100L +
-          coalesce(col("prox"), lit(0L))).as("cross_score"))
-      .withColumn("rerank_rank", row_number().over(w).cast("long"))
-      .transform(graft.functions.Guards.boundedWindow(_, "hybrid_rerank"))
-      .filter(col("rerank_rank") <= KnnK)
-  }
-
-  /** The bitext scale path made concrete
-    * ([[graft.operators.Bitext.mutualMarginPairsPrefix]]): candidate
-    * generation on the 32-dim embedding PREFIX (the Matryoshka/
-    * prefix-rerank move — prefixDim/dim of the bytes through the cheap
-    * pass), shortlist 16, full-dim margin machinery from there. */
-  private def bitextMarginPrefix(spark: SparkSession, dir: String): DataFrame =
-    bitextPrefixPairs(spark, dir)
-
-  /** Measured recovery of the prefix-candidate mining vs the exact one —
-    * the recall-ladder companion every other index family gets: how many
-    * of the exact mutual pairs the cheap-pass pipeline reproduces. Both
-    * sides serve from the per-dir artifacts. */
-  private def bitextPrefixRecovery(spark: SparkSession, dir: String): DataFrame = {
-    val exact = bitextExactPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    val pref = bitextPrefixPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(pref.agg(count(lit(1)).as("n_prefix")))
-      .crossJoin(exact.join(pref, Seq("src_id", "tgt_id"))
-        .agg(count(lit(1)).as("n_common")))
-      .select(col("n_exact"), col("n_prefix"), col("n_common"),
-        expr("(1000000 * n_common) div greatest(n_exact, 1)").as("recovery_ppm"))
-  }
-
-  /** Cross-lingual dedup COMPOSITION (r8 verdict item 7a): the mined
-    * mutual bitext pairs ([[bitextExactPairs]]) become a dedup keep
-    * list over the whole split corpus — the CCMatrix/LASER pipeline
-    * step where an aligned (src, tgt) pair is one logical document and
-    * only the lower id survives (the `dedup_keep_list` canonicalization
-    * applied to cross-lingual clusters). Mutual-argmax pairs are 1:1,
-    * so clusters are exactly the pairs; unpaired docs keep themselves.
-    * Cost beyond the shared pair artifact: two hash joins on id,
-    * linear at any scale. */
-  private def crosslingualDedup(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = bitextExactPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    val keep = pairs.select(col("src_id").as("vec_id"),
-        least(col("src_id"), col("tgt_id")).as("keep_id"))
-      .unionByName(pairs.select(col("tgt_id").as("vec_id"),
-        least(col("src_id"), col("tgt_id")).as("keep_id")))
-    Tables.embeddings(spark, dir).select(col("vec_id"))
-      .join(keep, Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("keep_id"), col("vec_id")).as("keep_id"))
-      .withColumn("is_kept",
-        when(col("keep_id") === col("vec_id"), 1L).otherwise(0L))
-  }
-
-  /** Margin-threshold ladder for the mining census (r8 verdict item 7b)
-    * — the CCMatrix knob curve (Schwenk et al. 2021 sweep margin
-    * thresholds and read off pair yield): for each threshold in
-    * [[BitextThresholdLadder]], how many mutual pairs clear it and
-    * their summed quantized cosine. One broadcast join of the 6-row
-    * ladder against the shared pair artifact; zero-yield rungs stay
-    * visible via the left join. */
-  private def bitextThresholdCurve(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = bitextExactPairs(spark, dir)
-    val th = BitextThresholdLadder.toDF("threshold_ppm")
-    th.join(pairs, pairs("margin_ppm") >= th("threshold_ppm"), "left")
-      .groupBy(col("threshold_ppm"))
-      .agg(count(col("src_id")).as("n_pairs"),
-        coalesce(sum(col("cos_q")), lit(0L)).as("sum_cos_q"))
-  }
-
-  /** Hubness REMEDIATION (r8 verdict item 7c) — the treatment for the
-    * disease [[hubnessStats]] reads: centering. Subtracting the global
-    * mean is the standard hubness-reduction transform for COSINE
-    * retrieval (Radovanović et al. JMLR 2010 observe hubs concentrate
-    * near the data mean; Suzuki et al. EMNLP 2013 show centering
-    * weakens exactly that effect for cosine similarity). The census
-    * therefore ranks by COSINE — under L2 a global translation is
-    * distance-invariant and the treatment would be vacuous by
-    * construction (measured: the L2 census was bit-identical raw vs
-    * centered) — and the raw variant is cosine-ranked too, so the
-    * comparison is like for like. Replay parity: the mean is computed
-    * on the 2²⁰ quantized grid (order-free integer sums; the s/n
-    * division and the centered coordinates are bit-identical doubles in
-    * both engines), and both engines rank through the proven
-    * cosine-kernel parity of [[knnCosine]]. The 64-row mean collect is
-    * metadata-sized. At 100 TB the centering is a broadcast subtract
-    * feeding any index build; the all-pairs rebuild here is the exact
-    * BASELINE (the scale path is the cell-blocked build, unchanged). */
-  private def hubnessCentered(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    val qb = quantizedBase(spark, dir)
-    val means = hubnessMoments(spark, dir)._1
-    val centered = qb.select(col("vec_id"),
-      zip_with(col("qv"), typedLit(means.toSeq),
-        (x, m) => x.cast("double") - m).as("embedding"))
-    val adjCentered = cachedArtifact(centeredAdjCache, dir)(
-      cosineAdjacency(centered, GraphDegree).localCheckpoint())
-    inDegreeCensus(base, rawCosineAdjacency(spark, dir), "raw")
-      .unionByName(inDegreeCensus(base, adjCentered, "centered"))
-  }
-
-  /** Per-dim (mean, 1/√variance) of the quantized base, memoized per dir
-    * — ONE corpus scan shared by the whole remediation family. The r9
-    * build recomputed the posexplode+groupBy scan inside EVERY
-    * hubness_centered / hubness_whitened invocation, which is why the
-    * driver's warm reading (4.29 s) sat 2.6–3.3× over the pinned census
-    * cost (r9 verdict "What's wrong" #2): the memoized adjacency made
-    * the all-pairs part warm, but the 64-row stats collect still paid a
-    * full O(n·d) aggregation per call. Exact parity is untouched: the
-    * sums are order-free int64 on the 2²⁰ grid and the mean/scale
-    * doubles are the same expressions both engines compute. */
-  private val hubnessMomentsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Long], Array[Long], Long)]
-  /** Raw per-dim (Σx, Σx², n) on the quantized grid — exact int64,
-    * order-free, the shared input of every remediation rung. */
-  private def hubnessRawMoments(spark: SparkSession, dir: String): (Array[Long], Array[Long], Long) =
-    hubnessMomentsCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:hubness_moments")
-      val stats = quantizedBase(spark, dir)
-        .select(posexplode(col("qv")).as(Seq("pos", "e")))
-        .groupBy(col("pos")).agg(sum(col("e")).as("sx"),
-          sum(col("e") * col("e")).as("sxx"), count(lit(1)).as("n"))
-        .orderBy(col("pos")).collect()
-      (stats.map(_.getLong(1)), stats.map(_.getLong(2)), stats.head.getLong(3))
-    })
-  private def hubnessMoments(spark: SparkSession, dir: String): (Array[Double], Array[Double]) = {
-    val (sx, sxx, n) = hubnessRawMoments(spark, dir)
-    val mean = sx.map(_.toDouble / n)
-    val scale = Array.tabulate(sx.length) { i =>
-      val nd = n.toDouble
-      val v = (nd * sxx(i).toDouble - sx(i).toDouble * sx(i).toDouble) / (nd * nd)
-      if (v > 0) 1.0 / math.sqrt(v) else 1.0
-    }
-    (mean, scale)
-  }
-
-  private def quantizedBase(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddingBase(spark, dir).select(col("vec_id"),
-      graft.index.IvfFlat.quantize(col("embedding")).as("qv"))
-
-  /** Unit-normalize an embedding column, ROUNDED TO FLOAT: one map pass
-    * computing ‖v‖ = √(Σv²) through the sequential
-    * [[graft.functions.DotProduct]] fold, the per-element division, and
-    * one float rounding — so the n² scan downstream reads 4-byte
-    * components (the measured A/B: double unit vectors were SLOWER than
-    * the fused-cosine baseline because they doubled the bytes/pair;
-    * see [[cosineAdjacency]]). Oracle twin:
-    * `list_transform(v, x -> CAST(CAST(x / sqrt(list_inner_product(v, v)) AS REAL) AS DOUBLE))`
-    * — DuckDB 1.0's list_inner_product is the same left-to-right double
-    * fold (verified on an association-sensitive probe), double→float→
-    * double is the same IEEE round-trip both engines, so the unit
-    * coordinates are bit-identical. */
-  private def unitVectors(vecs: DataFrame): DataFrame =
-    vecs.select(col("vec_id"), col("embedding"),
-        sqrt(graft.functions.VectorFunctions.dot(col("embedding"), col("embedding"))).as("nrm"))
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => (x.cast("double") / col("nrm")).cast("float")).as("embedding"))
-
-  /** Exact degree-`degree` adjacency ranked by cosine DESC (ties by id),
-    * self excluded — the cosine twin of [[graft.index.GraphIndex.buildExact]],
-    * shared by the hubness-remediation family.
-    *
-    * Physical plan (r9 verdict item 2 — the A/B neither prior attempt
-    * tried, extended): normalize each vector ONCE in a map pass (float
-    * components, so scan bytes match the raw build), NEGATE the
-    * query-side copies at normalize time, and rank by the bare
-    * single-accumulator [[graft.functions.DotProduct]] kernel — cosine
-    * order over unit vectors IS dot order, the negation makes descending
-    * cosine the heap's natural ascending dist with NO extra expression
-    * node, and the n² hot loop does one multiply-add per dim instead of
-    * the fused cosine kernel's three. IEEE negation commutes exactly
-    * with both product and sum, so the heap's (dist, id) order equals
-    * the oracle's (-list_inner_product, id) order bit-for-bit. Measured
-    * (graft.tools.CosKernelAB, sf0.1, warm): fused cosine 6.9–7.2 s,
-    * double-unit -dot 8.5–9.3 s (2× scan bytes loses more than the FMAs
-    * save), float-unit negated-query dot 5.4–5.7 s — the shipped plan. */
-  private def cosineAdjacency(vecs: DataFrame, degree: Int): DataFrame = {
-    // spread BELOW the normalize so both the per-row normalize and the
-    // n² scan run at full parallelism (spread above a projection would
-    // leave the projection on the single input split)
-    val unit = unitVectors(Knn.spread(vecs))
-    val asQueries = unit.select(col("vec_id").as("query_id"),
-      transform(col("embedding"), x => -x).as("q_embedding"))
-    // kernel in a PROJECTION between join and aggregate (r12): the
-    // ObjectHashAggregate boundary then carries (query_id, vec_id, dist)
-    // instead of both 64-float embeddings, and the dot fold runs inside
-    // the whole-stage-codegen'd join stage. Same expression ⇒ same
-    // doubles ⇒ same heap order. Measured 2x (CosKernelAB variant D vs C).
-    val topk = graft.functions.GraftFunctions.topKByDist(
-      col("vec_id"), col("dist"), degree + 1)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    unit
-      .crossJoin(broadcast(asQueries))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions.dot(col("q_embedding"), col("embedding"))
-          .as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("g_rank", row_number().over(w))
-      .filter(col("g_rank") <= degree)
-      .select(col("query_id").as("node_id"), col("neighbor_id"))
-  }
-
-  // per-dir artifacts, graphAdjCache pattern: the three cosine
-  // adjacencies are index BUILDS (all-pairs, the family's shared cold
-  // cost — ~4 s each at sf0.1); both census queries read the raw one
-  private val rawCosAdjCache = namedArtifactCache[String]("cos_adj_raw")
-  private val centeredAdjCache = namedArtifactCache[String]("cos_adj_centered")
-  private val whitenedAdjCache = namedArtifactCache[String]("cos_adj_whitened")
-
-  private def rawCosineAdjacency(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(rawCosAdjCache, dir)(
-      cosineAdjacency(Tables.embeddingBase(spark, dir), GraphDegree)
-        .localCheckpoint())
-
-  private val cosCellAdjCache = namedArtifactCache[String]("cos_adj_cell")
-
-  /** Cell-blocked COSINE adjacency — the cosine family's 100 TB build
-    * path made CONCRETE (the r9 verdict accepted "cell-blocked is the
-    * scale path" as a declaration; this builds it): candidate pairs
-    * from IVF coarse-cell co-membership (nassign=3 over the shared
-    * `ivfFlatModel`, the same blocking as
-    * [[graft.index.GraphIndex.buildCellBlocked]]), ranked by dot over
-    * the SAME float unit vectors as the exact build — so the only
-    * difference from [[rawCosineAdjacency]] is the candidate generator,
-    * and [[hubnessCellBlockedQuality]] measures exactly that gap.
-    * Pair generation is a co-partitioned equi-join on cell id: |cell|²
-    * per cell, never |base|². */
-  private def cosCellBlockedAdj(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(cosCellAdjCache, dir) {
-      val base = Tables.embeddingBase(spark, dir)
-      val cells = graft.index.IvfFlat.probes(base, ivfFlatModel(spark, dir), 3)
-        .select(col("query_id").as("vec_id"), col("cid"))
-      val unit = unitVectors(Knn.spread(base))
-      val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child — see [[cosineAdjacency]]
-      val topk = graft.functions.GraftFunctions.topKByDist(
-        col("cand_id"), col("dist"), GraphDegree)
-      nodes.alias("na")
-        .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
-        .filter(col("na.vec_id") =!= col("nb.vec_id"))
-        .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
-          (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist"))
-        .groupBy(col("node_id"))
-        .agg(topk.as("nn"))
-        .select(col("node_id"), explode(col("nn")).as("neighbor_id"))
-        .localCheckpoint()
-    }
-
-  /** Edge recall of the cell-blocked cosine build vs the exact cosine
-    * adjacency — the measured cost of never running the all-pairs
-    * cosine pass, closing the hubness family's declared-but-unmeasured
-    * scale path (same shape as `graph_cellblocked_quality` for L2). */
-  private def hubnessCellBlockedQuality(spark: SparkSession, dir: String): DataFrame = {
-    val exact = rawCosineAdjacency(spark, dir).select(col("node_id"), col("neighbor_id"))
-    val blocked = cosCellBlockedAdj(spark, dir).select(col("node_id"), col("neighbor_id"))
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(blocked.agg(count(lit(1)).as("n_blocked")))
-      .crossJoin(exact.join(blocked, Seq("node_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits")))
-      .select(col("n_exact"), col("n_blocked"),
-        expr("(n_hits * 10000) div n_exact").as("edge_recall_bp"))
-  }
-
-  /** In-degree (k-occurrence) census of an adjacency over `base`, zeros
-    * included, labeled with a variant column — shared by the hubness
-    * diagnosis/remediation family. */
-  private def inDegreeCensus(base: DataFrame, adj: DataFrame, variant: String): DataFrame =
-    base.select(col("vec_id"))
-      .join(adj.groupBy(col("neighbor_id")).agg(count(lit(1)).as("k_occ"))
-        .withColumnRenamed("neighbor_id", "vec_id"), Seq("vec_id"), "left")
-      .select(coalesce(col("k_occ"), lit(0L)).as("k_occ"))
-      .groupBy(col("k_occ")).agg(count(lit(1)).as("n_vectors"))
-      .select(lit(variant).as("variant"), col("k_occ"), col("n_vectors"))
-
-  /** Diagonal (per-dimension) WHITENING — one step past [[hubnessCentered]]
-    * on the remediation ladder: center by the global mean AND rescale each
-    * dimension to unit variance (the cheap diagonal of ZCA; full-covariance
-    * whitening needs the eigenbasis — `pca_power_project` holds that
-    * machinery — but per-dim variance already removes the dominant-axis
-    * bias that feeds hub formation). Ranked by COSINE like the rest of the
-    * family (see [[hubnessCentered]] for why L2 would be vacuous for the
-    * centering term; the per-dim rescale DOES change L2 but the family
-    * measures the retrieval metric the treatment targets). Replay parity:
-    * per-dim sums Σx and Σx² are exact int64 on the 2²⁰ grid (order-free;
-    * |Σx²| < 2⁵³ at fixture scale — a production run would widen to a
-    * decimal accumulator), the variance (n·Σx² − Σx·Σx)/n² and the 1/√v
-    * scale are the SAME double expression tree in both engines, and the
-    * whitened coordinates (x − μ)·s rank through the proven cosine-kernel
-    * parity. Output: raw vs whitened in-degree census, the measured cure. */
-  private def hubnessWhitened(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    val qb = quantizedBase(spark, dir)
-    val (mean, scale) = hubnessMoments(spark, dir)
-    val whitened = qb.select(col("vec_id"),
-      zip_with(
-        zip_with(col("qv"), typedLit(mean.toSeq), (x, m) => x.cast("double") - m),
-        typedLit(scale.toSeq), (x, sc) => x * sc).as("embedding"))
-    val adjWhitened = cachedArtifact(whitenedAdjCache, dir)(
-      cosineAdjacency(whitened, GraphDegree).localCheckpoint())
-    inDegreeCensus(base, rawCosineAdjacency(spark, dir), "raw")
-      .unionByName(inDegreeCensus(base, adjWhitened, "whitened"))
-  }
-
-  /** Newton–Schulz iteration count for the ZCA rung. The coupled NS
-    * iteration on the trace-normalized covariance converges to machine
-    * precision by iteration 12 on both fixture spectra (measured:
-    * ‖ZAZ−I‖_max 4e-3 at iter 8, 4e-15 at iter 12); 14 adds margin and
-    * is FIXED so the replay is a deterministic unroll, not a
-    * convergence test. Shared with the oracle's generated CTE chain. */
-  private val ZcaIters = 14
-
-  private val zcaMatrixCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-
-  /** W ≈ (C/τ)^(−1/2) for the base split's quantized covariance — the
-    * full-covariance whitening transform (up to the cosine-irrelevant
-    * global √τ scale), computed EXACTLY replayably: cross-moments Σxᵢxⱼ
-    * are one distributed int64 Gram pass ([[graft.operators.Gram.upperTriangle]],
-    * the same 2²⁰ grid as every rung), C/τ/A are fixed double expression
-    * trees, and [[ZcaIters]] coupled Newton–Schulz rounds
-    * (Yₖ₊₁ = Yₖ(3I−ZₖYₖ)/2, Zₖ₊₁ = (3I−ZₖYₖ)Zₖ/2, Higham 2008 ch. 6 —
-    * public textbook iteration) run on the driver over the 64×64
-    * matrices with sequential left-to-right inner products — the same
-    * fold order as the oracle's list_reduce matmul CTEs, verified
-    * BIT-EXACT against DuckDB on the fixture. Model-sized driver work
-    * (64³·14 ≈ 3.7M flops); the corpus only pays one Gram scan plus the
-    * row-local transform. */
-  private def zcaMatrix(spark: SparkSession, dir: String): Array[Array[Double]] =
-    zcaMatrixCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:zca_matrix")
-      val (sx, _, n) = hubnessRawMoments(spark, dir)
-      val d = sx.length
-      val tri = graft.operators.Gram.upperTriangle(spark,
-        Tables.embeddingBase(spark, dir).select(col("embedding")), "embedding",
-        scale = graft.index.IvfFlat.Scale).collect()
-      val s2 = Array.ofDim[Long](d, d)
-      tri.foreach { r =>
-        val (i, j, v) = (r.getInt(0) - 1, r.getInt(1) - 1, r.getLong(2))
-        s2(i)(j) = v; s2(j)(i) = v
-      }
-      val nd = n.toDouble
-      val c = Array.tabulate(d, d)((i, j) =>
-        (nd * s2(i)(j).toDouble - sx(i).toDouble * sx(j).toDouble) / (nd * nd))
-      // τ via the oracle's seedless left fold over the diagonal
-      var tau = c(0)(0)
-      var i = 1
-      while (i < d) { tau += c(i)(i); i += 1 }
-      var y = Array.tabulate(d, d)((i, j) => c(i)(j) / tau)
-      var z = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-      // matmul with the list_reduce fold order: s = a[i][0]*b[0][j], then
-      // += ascending k — the exact order the oracle's generated CTEs fold
-      def mm(a: Array[Array[Double]], b: Array[Array[Double]], halve: Boolean): Array[Array[Double]] =
-        Array.tabulate(d, d) { (i, j) =>
-          var s = a(i)(0) * b(0)(j)
-          var k = 1
-          while (k < d) { s += a(i)(k) * b(k)(j); k += 1 }
-          if (halve) s / 2 else s
-        }
-      (1 to ZcaIters).foreach { _ =>
-        val zy = mm(z, y, halve = false)
-        val t = Array.tabulate(d, d)((i, j) => (if (i == j) 3.0 else 0.0) - zy(i)(j))
-        y = mm(y, t, halve = true)
-        z = mm(t, z, halve = true)
-      }
-      z
-    })
-
-  private val zcaAdjCache = namedArtifactCache[String]("cos_adj_zca")
-  private val zcaVecsCache = namedArtifactCache[String]("zca_vecs")
-
-  /** The ZCA-transformed base x′ = W·(x−μ) as a shared per-dir artifact
-    * (vec_id, embedding: double[64]) — consumed by the exact rung
-    * ([[hubnessZca]]) and the blocked rung ([[zcaCellBlockedAdj]]).
-    * The 64×64 mat-vec per row is interpreted-HOF work — spread it
-    * across the session's parallelism (the fixture parquet is one
-    * split) and materialize ONCE (localCheckpoint) so CollapseProject
-    * can't inline the big fold into the downstream normalize's three
-    * references (first cut: 88 s single-task; spread+checkpointed:
-    * sub-second). Shape: centered = zip_with(qv, μ), then each output
-    * dim folds zip_with(w_row, centered) left-to-right with a 0.0
-    * seed — exactly the oracle's list_prepend(0.0, …) list_reduce. */
-  private def zcaVectors(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(zcaVecsCache, dir) {
-      val qb = quantizedBase(spark, dir)
-      val w = zcaMatrix(spark, dir)
-      val mean = hubnessMoments(spark, dir)._1
-      val wLit = typedLit(w.map(_.toSeq).toSeq)
-      val muLit = typedLit(mean.toSeq)
-      val centered = zip_with(col("qv"), muLit, (x, m) => x.cast("double") - m)
-      Knn.spread(qb).select(col("vec_id"), centered.as("cv"))
-        .select(col("vec_id"),
-          transform(wLit, wrow =>
-            aggregate(zip_with(wrow, col("cv"), (wv, x) => wv * x),
-              lit(0.0d), (acc, t) => acc + t)).as("embedding"))
-        .localCheckpoint()
-    }
-
-  /** Full-covariance (ZCA) whitening — the remediation ladder's third
-    * rung (r9 verdict item 4): x′ = W·(x−μ) with W = [[zcaMatrix]], the
-    * decorrelate-AND-equalize transform of which [[hubnessWhitened]] is
-    * the diagonal approximation (Bell & Sejnowski 1997's ZCA; the global
-    * √τ scale is dropped — cosine ranking is scale-invariant). The
-    * per-row transform lives in [[zcaVectors]]. Measured cure at
-    * sf0.001: max k-occurrence 28 → 24, the strongest rung (centered
-    * 31, diagonal 30 there). Output: raw vs zca in-degree census. This
-    * rung's adjacency rebuild is the exact all-pairs VALIDATOR; the
-    * 100 TB build path is [[hubnessZcaCellBlocked]]. */
-  private def zcaExactAdj(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(zcaAdjCache, dir)(
-      cosineAdjacency(zcaVectors(spark, dir), GraphDegree).localCheckpoint())
-
-  private def hubnessZca(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    inDegreeCensus(base, rawCosineAdjacency(spark, dir), "raw")
-      .unionByName(inDegreeCensus(base, zcaExactAdj(spark, dir), "zca"))
-  }
-
-  /** Probe surface for [[graft.tools.ZcaEdgeRecall]]: the (exact,
-    * blocked) ZCA adjacencies off the shared per-dir artifacts. */
-  private[graft] def zcaAdjPairForProbe(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (zcaExactAdj(spark, dir), zcaCellBlockedAdj(spark, dir))
-
-  /** Coarse cells of the ZCA-TRANSFORMED space: the same deterministic
-    * integer k-means as [[ivfFlatModel]], trained on the transformed
-    * vectors — blocking for a remediated space must cluster in THAT
-    * space (whitening reshapes the metric; raw-space cells would block
-    * the wrong neighborhoods). [[zcaVectors]] carries the transform in
-    * QUANTIZED-GRID units (W·(qv−μ), qv = x·2²⁰), so it is divided by
-    * 2²⁰ before the trainer's own ×2²⁰ quantize — a power-of-two
-    * exponent shift, exact in IEEE double, making the trainer's grid
-    * floor(cv + ½): |x′| ≤ ~4 real keeps every distance term exact
-    * int64 (without the shift the double-scaled values overflow the
-    * trainer's integer distances). */
-  private val zcaIvfCache = scala.collection.concurrent.TrieMap.empty[String, Array[Array[Long]]]
-  private def zcaDownscaled(spark: SparkSession, dir: String): DataFrame =
-    zcaVectors(spark, dir).select(col("vec_id"),
-      transform(col("embedding"), e => e / lit(graft.index.IvfFlat.Scale.toDouble))
-        .as("embedding"))
-  private def zcaIvfModel(spark: SparkSession, dir: String): Array[Array[Long]] =
-    zcaIvfCache.getOrElseUpdate(dir, {
-      ArtifactLedger.recordNamedBuild("model:zca_ivf")
-      graft.index.IvfFlat.fit(zcaDownscaled(spark, dir), nlist = 8)
-    })
-
-  private val zcaCellAdjCache = namedArtifactCache[String]("cos_adj_zca_cell")
-
-  /** Cell-blocked cosine adjacency of the ZCA space — the remediation
-    * rung riding the 100 TB build path (r10 verdict item 1): transform →
-    * IVF cells IN the transformed space → co-membership candidates
-    * (nassign=3) → bounded-heap rank by dot over unit vectors. Identical
-    * ranking machinery to [[cosCellBlockedAdj]]; only the space and its
-    * codebook differ. Pair generation is a co-partitioned equi-join on
-    * cell id — |cell|² per cell, never |base|². Measured edge recall vs
-    * the exact ZCA adjacency ([[graft.tools.ZcaEdgeRecall]]): 90.9%
-    * (sf0.001) / 92.8% (sf0.01) — a touch under the raw space's
-    * 93.8/94.6% (whitening flattens the spectrum, so cell boundaries
-    * cut more near-ties). */
-  private def zcaCellBlockedAdj(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(zcaCellAdjCache, dir) {
-      val zv = zcaVectors(spark, dir)
-      val cells = graft.index.IvfFlat.probes(zcaDownscaled(spark, dir),
-          zcaIvfModel(spark, dir), 3)
-        .select(col("query_id").as("vec_id"), col("cid"))
-      val unit = unitVectors(Knn.spread(zv))
-      val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child — see [[cosineAdjacency]]
-      val topk = graft.functions.GraftFunctions.topKByDist(
-        col("cand_id"), col("dist"), GraphDegree)
-      nodes.alias("na")
-        .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
-        .filter(col("na.vec_id") =!= col("nb.vec_id"))
-        .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
-          (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist"))
-        .groupBy(col("node_id"))
-        .agg(topk.as("nn"))
-        .select(col("node_id"), explode(col("nn")).as("neighbor_id"))
-        .localCheckpoint()
-    }
-
-  /** The hubness DIAGNOSIS run entirely on blocked builds — the shape a
-    * 100 TB remediation pass actually takes (r10 verdict item 1): both
-    * the raw and the ZCA-treated adjacencies come from cell-blocked
-    * candidate generation ([[cosCellBlockedAdj]] / [[zcaCellBlockedAdj]]),
-    * so no stage anywhere is |base|². Output: raw_blocked vs zca_blocked
-    * in-degree census; agreement with the exact rung ([[hubnessZca]]) is
-    * the measured SCALING.md row. */
-  private def hubnessZcaCellBlocked(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddingBase(spark, dir)
-    inDegreeCensus(base, cosCellBlockedAdj(spark, dir), "raw_blocked")
-      .unionByName(inDegreeCensus(base, zcaCellBlockedAdj(spark, dir), "zca_blocked"))
-  }
-
-  /** The recovery KNOB CURVE (r8 verdict item 4): mutual-pair recovery
-    * of the prefix-candidate pipeline vs the exact one at shortlist 16
-    * AND 32 — how much one shortlist doubling buys, the same
-    * knob-vs-quality shape as `ivf_nprobe_curve`. Each rung reads its
-    * per-dir memoized pair artifact; the comparisons are id joins. */
-  private def bitextRecoveryCurve(spark: SparkSession, dir: String): DataFrame = {
-    val exact = bitextExactPairs(spark, dir).select(col("src_id"), col("tgt_id"))
-    def rung(shortlist: Int, pairs: DataFrame): DataFrame =
-      exact.agg(count(lit(1)).as("n_exact"))
-        .crossJoin(pairs.agg(count(lit(1)).as("n_prefix")))
-        .crossJoin(exact.join(pairs.select(col("src_id"), col("tgt_id")),
-          Seq("src_id", "tgt_id")).agg(count(lit(1)).as("n_common")))
-        .select(lit(shortlist.toLong).as("shortlist"),
-          col("n_exact"), col("n_prefix"), col("n_common"),
-          expr("(1000000 * n_common) div greatest(n_exact, 1)").as("recovery_ppm"))
-    rung(BitextShortlist, bitextPrefixPairs(spark, dir))
-      .unionByName(rung(BitextShortlist2, bitextPrefixPairs32(spark, dir)))
-  }
-
-  /** Feature-hashed document cosine top-k
-    * ([[graft.text.HashEmbed.cosineTopK]]) — similarity search over
-    * embeddings DERIVED from the corpus text itself (hashing trick), no
-    * trained model, sparse dot-product join. */
-  private def knnTextHashembed(spark: SparkSession, dir: String): DataFrame =
-    graft.text.HashEmbed.cosineTopK(Tables.documents(spark, dir), "doc_id", "text",
-      isQuery = col("doc_id") % 100 === 0, dim = 4096, k = 5)
-
-  /** SimHash banding quality vs the exact Jaccard ≥ 0.5 ground truth on
-    * the shared 3-gram domain — the measured companion of
-    * `lsh_quality` for the OTHER near-dup family: how many exact
-    * near-dup pairs the 15-bit-chunk banding surfaces. */
-  private def simhashQuality(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val gt = setSimGt3(spark, dir)
-    val found = Dedup.simHashNearDup(docs, "doc_id", "text", maxHamming = 3)
-      .select(col("id_a"), col("id_b"))
-    gt.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(found.agg(count(lit(1)).as("n_found")))
-      .crossJoin(gt.join(found, Seq("id_a", "id_b"), "left_semi")
-        .agg(count(lit(1)).as("n_hits")))
-      .select(col("n_exact"), col("n_found"),
-        when(col("n_exact") > 0, expr("(n_hits * 10000) div n_exact"))
-          .otherwise(lit(10000L)).as("recall_bp"))
-  }
-
-  /** Recall-vs-nprobe ladder for the deterministic IVF — §4's
-    * `nprobe` knob (the reference trains once and sweeps search-time
-    * params, multi_tenant_script.py:94-99) measured as ONE query: the
-    * base→cell assignment is built once and reused across all four
-    * probe depths, so the ladder costs 4 probe joins, not 4 index
-    * builds. Recall must be non-decreasing in nprobe (spec-asserted). */
-  private def ivfNprobeCurve(spark: SparkSession, dir: String): DataFrame =
-    // memoized: the closed-loop autotune query (ivf_autotune) walks the
-    // same measured ladder — the 4 probe joins must not run twice
-    memoSearch("ivf_nprobe_curve", dir) {
-      val model = ivfFlatModel(spark, dir)
-      val queries = Tables.embeddingQueries(spark, dir)
-      val base = Tables.embeddingBase(spark, dir)
-      val assign = graft.index.IvfFlat.assignBase(base, model).localCheckpoint()
-      val gt = groundTruth(spark, dir)
-      Seq(1, 2, 4, 6).map { np =>
-        Recall.recallBasisPoints(
-          graft.index.IvfFlat.searchAssigned(model, queries, base, assign, KnnK, np),
-          gt, KnnK).select(lit(np).as("nprobe"), col("recall_bp"))
-      }.reduce(_.union(_))
-    }
-
-  /** nlist rungs of the coarse-quantizer GROWTH story, probed at a
-    * FIXED 3/4 cell fraction (nprobe = 3·nlist/4): SCALING.md's 100 TB
-    * argument everywhere is "nlist grows ≈ √n, nprobe holds the probed
-    * fraction" — this measures the premise: recall is a function of
-    * the probed FRACTION, not of nlist, so growing the cell count with
-    * the corpus preserves recall while each list stays
-    * constant-sized. */
-  private val IvfNlistLadder: Seq[(Int, Int)] = Seq((4, 3), (8, 6), (16, 12))
-
-  private val ivfNlistCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Array[Array[Long]]]
-  private def ivfNlistModel(spark: SparkSession, dir: String, nlist: Int): Array[Array[Long]] =
-    if (nlist == 8) ivfFlatModel(spark, dir)
-    else ivfNlistCache.getOrElseUpdate((dir, nlist), {
-      ArtifactLedger.recordNamedBuild(s"model:ivf_nlist$nlist")
-      graft.index.IvfFlat.fit(Tables.embeddingBase(spark, dir), nlist = nlist)
-    })
-
-  /** Recall across the [[IvfNlistLadder]] — every rung is a fresh
-    * deterministic training (the nlist=8 rung shares the serving
-    * model), one probe search, one recall join vs the memoized exact
-    * ground truth. */
-  private def ivfNlistCurve(spark: SparkSession, dir: String): DataFrame = {
-    val queries = Tables.embeddingQueries(spark, dir)
-    val base = Tables.embeddingBase(spark, dir)
-    val gt = groundTruth(spark, dir)
-    IvfNlistLadder.map { case (nl, np) =>
-      Recall.recallBasisPoints(
-        graft.index.IvfFlat.search(ivfNlistModel(spark, dir, nl), queries, base, KnnK, np),
-        gt, KnnK)
-        .select(lit(nl.toLong).as("nlist"), lit(np.toLong).as("nprobe"), col("recall_bp"))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** The reference's closed-loop autotune (`build_autotune_sample
-    * (target_recall=0.9)`, /root/reference/dynamic_script_mrpt.py:44-47)
-    * as a CHECKED query: walk the measured recall-vs-nprobe ladder
-    * (shared with `ivf_nprobe_curve` via the memo — the ladder is
-    * computed once) and emit the smallest nprobe whose measured recall
-    * meets the 0.9 target, falling back to the deepest rung if none
-    * does. Fully replayable: the "sweep" is a closed-form argmin over
-    * the measured rungs, no iterative re-measurement. */
-  private def ivfAutotune(spark: SparkSession, dir: String): DataFrame = {
-    val curve = ivfNprobeCurve(spark, dir)
-    val chosen = curve.agg(
-      coalesce(
-        min(when(col("recall_bp") >= lit(9000L), col("nprobe"))),
-        max(col("nprobe"))).as("nprobe"))
-    broadcast(chosen).join(curve, Seq("nprobe"))
-      .select(lit(9000L).as("target_bp"), col("nprobe"), col("recall_bp"))
-  }
-
-  /** Exact median + deterministic mode per event type — §2.7 central
-    * tendency without interpolation drift: the median is carried as the
-    * SUM of the two middle order statistics (×2 for odd n), so it stays
-    * int64; the mode breaks count ties to the smallest value. One
-    * keyed window shuffle for the median, one groupBy for the mode. */
-  private def medianModeStats(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"),
-        col("event_id"))
-    val ranked = ev
-      .withColumn("rn", row_number().over(Window.partitionBy(col("event_type"))
-        .orderBy(col("cents"), col("event_id"))))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("event_type"))))
-    val med = ranked
-      .filter(col("rn") === expr("(n + 1) div 2") || col("rn") === expr("(n + 2) div 2"))
-      .groupBy(col("event_type"))
-      .agg(max(col("n")).as("n"),
-        sum(col("cents") * when(col("n") % 2 === 1, 2L).otherwise(1L))
-          .as("median_x2_cents"))
-    val mode = ev.groupBy(col("event_type"), col("cents"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("mrn", row_number().over(Window.partitionBy(col("event_type"))
-        .orderBy(col("cnt").desc, col("cents"))))
-      .filter(col("mrn") === 1)
-      .select(col("event_type"), col("cents").as("mode_cents"), col("cnt").as("mode_count"))
-    med.join(mode, Seq("event_type"))
-  }
-
-  /** Date/interval scalar breadth (§2.7): truncation, month arithmetic
-    * with end-of-month clamping, day diffs, day-of-year — grouped to a
-    * quarterly profile so the whole surface replays as integers. */
-  private def dateFuncs(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(year(col("o_orderdate")).as("o_year"),
-        quarter(col("o_orderdate")).as("o_quarter"))
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct(date_trunc("week", col("o_orderdate"))).as("n_weeks"),
-        sum(datediff(last_day(col("o_orderdate")), col("o_orderdate")))
-          .as("days_to_eom"),
-        sum(dayofyear(col("o_orderdate")).cast("long")).as("sum_doy"),
-        sum(when(month(add_months(col("o_orderdate"), 3)) === 2, 1L)
-          .otherwise(0L)).as("n_land_feb"))
-
-  /** String scalar breadth (§2.7): regex strip, first-occurrence
-    * search, reverse, first-word split — per-brand integer profile. */
-  private def stringFuncs(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .groupBy(col("p_brand"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(length(regexp_replace(lower(col("p_name")), "[aeiou]", "")))
-          .cast("long").as("consonant_chars"),
-        sum(locate(" ", col("p_name")).cast("long")).as("sum_first_space"),
-        sum(length(element_at(split(col("p_type"), " "), 1)).cast("long"))
-          .as("first_word_chars"),
-        sum(when(reverse(col("p_brand")) === col("p_brand"), 1L).otherwise(0L))
-          .as("n_palindrome_brand"))
-
-  /** Null-semantics probe (§2.7): null-safe equality (`<=>` / IS NOT
-    * DISTINCT FROM), NULLIF null injection, COALESCE defaults — the
-    * three-valued-logic corners that silently diverge between engines
-    * unless pinned. */
-  private def nullSemantics(spark: SparkSession, dir: String): DataFrame = {
-    val a = nullif(pmod(col("user_id"), lit(7L)), lit(0L))
-    val b = nullif(pmod(col("event_id"), lit(7L)), lit(0L))
-    Tables.events(spark, dir)
-      .select(col("event_type"), a.as("a"), b.as("b"))
-      .groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("a") <=> col("b"), 1L).otherwise(0L)).as("n_nullsafe_eq"),
-        sum(when(col("a") === col("b"), 1L).otherwise(0L)).as("n_plain_eq"),
-        sum(coalesce(col("a"), lit(7L))).as("sum_coalesce"),
-        sum(col("a").isNull.cast("long")).as("n_null_a"))
-  }
-
-  /** CCNet-style perplexity-bucket mixing: documents terciled per
-    * language by the unigram-LM average (head = most in-distribution),
-    * then sampled head-heavy (100%/50%/20%) by the deterministic id
-    * hash — the bucketed-quality data-mix step of the CCNet pipeline
-    * (Wenzek et al. 2020 §4.4) with the digit-log surrogate. One
-    * corpus scoring pass + one lang-keyed window + one map-side hash
-    * filter; no RNG, identical keep set on any engine. */
-  private def pplBucketMix(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val scored = graft.text.ImportanceScoring
-      .unigramDigitScore(docs, "doc_id", "text")
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-    val bucketed = scored.withColumn("bucket",
-      ntile(3).over(Window.partitionBy(col("lang"))
-        .orderBy(col("avg_digit_bp").desc, col("doc_id"))))
-      .withColumn("keep_bps",
-        when(col("bucket") === 1, 10000L).when(col("bucket") === 2, 5000L)
-          .otherwise(2000L))
-    bucketed
-      .withColumn("kept",
-        graft.operators.Sampling.idBucket(col("doc_id"), 10000) < col("keep_bps"))
-      .groupBy(col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("n_tokens"),
-        sum(col("kept").cast("long")).as("n_kept"))
-  }
-
-  /** Sampled join-cardinality estimation — the optimizer-statistics
-    * move behind join reordering: UNIVERSE sampling (both sides keep
-    * exactly the keys whose shared hash bucket is 0, Vengerov et al.
-    * VLDB'15), so the sample join is the true join restricted to a
-    * 1/16 key universe and scaling by 16 is unbiased even under FK
-    * fan-out — independent Bernoulli rows would miss matching pairs at
-    * rate p². Emits estimate vs exact with the error in bp; the
-    * estimate side touches 1/16 of each input. */
-  private def joinCardinalityEst(spark: SparkSession, dir: String): DataFrame = {
-    val p = 16
-    val o = Tables.orders(spark, dir).select(col("o_orderkey"))
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"))
-    val exact = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .agg(count(lit(1)).as("exact_rows"))
-    val os = o.filter(graft.operators.Sampling.idBucket(col("o_orderkey"), p) === 0)
-    val ls = li.filter(graft.operators.Sampling.idBucket(col("l_orderkey"), p) === 0)
-    val est = os.join(ls, col("o_orderkey") === col("l_orderkey"))
-      .agg((count(lit(1)) * p).as("est_rows"))
-    exact.crossJoin(est)
-      .select(col("exact_rows"), col("est_rows"),
-        expr("abs(est_rows - exact_rows) * 10000 div exact_rows").as("err_bp"))
-  }
-
-  /** TF-IDF-weighted cosine retrieval
-    * ([[graft.text.HashEmbed.tfidfCosineTopK]]) — the vector-space
-    * model next to `bm25_topk`'s probabilistic ranking; token-space
-    * sparse join with integer digit-log idf. */
-  private def knnTextTfidf(spark: SparkSession, dir: String): DataFrame =
-    // 9000 bp df cut: the fixture corpus is stopword-dense (30 of 31
-    // vocabulary tokens sit near df 77%), so the classic half-corpus
-    // prune would empty the vocabulary and the query would be vacuous
-    graft.text.HashEmbed.tfidfCosineTopK(Tables.documents(spark, dir),
-      "doc_id", "text", isQuery = col("doc_id") % 100 === 0, k = 5, maxDfBps = 9000)
-
-  /** Generator breadth (§2.7): posexplode (1-based in the output so the
-    * ordinal replays), explode_outer null-row preservation, sequence
-    * ranges — aggregated per language so the whole surface is one
-    * integer profile. */
-  private def generatorFuncs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), TextFunctions.tokens(col("text")).as("toks"))
-    val g1 = docs
-      .select(col("lang"),
-        posexplode(slice(col("toks"), lit(1), lit(5))).as(Seq("p", "tok")))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_tok_rows"),
-        sum(((col("p") + 1) * length(col("tok"))).cast("long")).as("pos_len_sum"))
-    val g2 = docs
-      .select(col("lang"),
-        explode_outer(when(col("doc_id") % 5 === 0, lit(null).cast("array<bigint>"))
-          .otherwise(sequence(lit(1L), lit(1L) + pmod(col("doc_id"), lit(3L)))))
-          .as("s"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_seq_rows"),
-        sum(coalesce(col("s"), lit(0L))).as("seq_sum"),
-        sum(col("s").isNull.cast("long")).as("n_null_rows"))
-    g1.join(g2, Seq("lang"))
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knn_exact" -> ((s, dir) => knnExact(s, dir)),
-    "knn_matryoshka" -> ((s, dir) => knnMatryoshka(s, dir)),
-    "recall_matryoshka" -> ((s, dir) => recallMatryoshka(s, dir)),
-    "knn_graph_adj" -> ((s, dir) => graphAdj(s, dir)),
-    "mutual_knn_pairs" -> ((s, dir) => mutualKnnPairs(s, dir)),
-    "knn_graph" -> ((s, dir) => knnGraphSearch(s, dir)),
-    "knn_graph_stored" -> ((s, dir) => knnGraphStored(s, dir)),
-    "knn_graph_filtered" -> ((s, dir) => knnGraphFiltered(s, dir)),
-    "recall_graph_filtered" -> ((s, dir) => recallGraphFiltered(s, dir)),
-    "graph_cellblocked_quality" -> ((s, dir) => graphCellBlockedQuality(s, dir)),
-    "knn_graph_cellblocked" -> ((s, dir) => knnGraphCellBlocked(s, dir)),
-    "recall_graph_cellblocked" -> ((s, dir) => recallGraphCellBlocked(s, dir)),
-    "recall_graph" -> ((s, dir) => recallGraph(s, dir)),
-    "recall_curve_graph" -> ((s, dir) => recallCurveGraph(s, dir)),
-    "nnd_graph_adj" -> ((s, dir) => nndAdj(s, dir)),
-    "nnd_graph_quality" -> ((s, dir) => nndGraphQuality(s, dir)),
-    "knn_graph_nnd" -> ((s, dir) => knnGraphNnd(s, dir)),
-    "recall_graph_nnd" -> ((s, dir) => recallGraphNnd(s, dir)),
-    "knn_lsh_multiprobe" -> ((s, dir) => knnLshMultiprobe(s, dir)),
-    "recall_lsh_multiprobe" -> ((s, dir) => recallLshMultiprobe(s, dir)),
-    "semantic_dedup" -> ((s, dir) => semanticDedup(s, dir)),
-    "stream_sessionize" -> ((s, dir) => streamSessionize(s, dir)),
-    "stream_knn_search" -> ((s, dir) => streamKnnSearch(s, dir)),
-    "knn_graph_upsert" -> ((s, dir) => knnGraphUpsert(s, dir)),
-    "knn_graph_delete" -> ((s, dir) => knnGraphDelete(s, dir)),
-    "recall_graph_delete" -> ((s, dir) => recallGraphDelete(s, dir)),
-    "recall_graph_upsert" -> ((s, dir) => recallGraphUpsert(s, dir)),
-    "ndcg_at_10" -> ((s, dir) => ndcgAt10(s, dir)),
-    "auc_label_score" -> ((s, dir) => aucLabelScore(s, dir)),
-    "ohlc_bars" -> ((s, dir) => ohlcBars(s, dir)),
-    "interval_merge" -> ((s, dir) => intervalMerge(s, dir)),
-    "dq_checks" -> ((s, dir) => dqChecks(s, dir)),
-    "ewma_user" -> ((s, dir) => ewmaUser(s, dir)),
-    "knn_radius" -> ((s, dir) => knnRadius(s, dir)),
-    "knn_hamming" -> ((s, dir) => knnHamming(s, dir)),
-    "ivf_list_stats" -> ((s, dir) => ivfListStats(s, dir)),
-    "cluster_balance_sample" -> ((s, dir) => clusterBalanceSample(s, dir)),
-    "index_advisor" -> ((s, dir) => indexAdvisor(s, dir)),
-    "knn_exact_window" -> ((s, dir) => knnExactWindow(s, dir)),
-    "knn_grouped" -> ((s, dir) => knnGrouped(s, dir)),
-    "approx_distinct_parts" -> ((s, dir) => approxDistinctParts(s, dir)),
-    "approx_quantile_events" -> ((s, dir) => approxQuantileEvents(s, dir)),
-    "cms_heavy_users" -> ((s, dir) => cmsHeavyUsers(s, dir)),
-    "incremental_agg" -> ((s, dir) => incrementalAgg(s, dir)),
-    "funnel_conversion" -> ((s, dir) => funnelConversion(s, dir)),
-    "knn_cosine" -> ((s, dir) => knnCosine(s, dir)),
-    "knn_label_mrr" -> ((s, dir) => knnLabelMrr(s, dir)),
-    "knn_ivf_flat" -> ((s, dir) => knnIvfFlat(s, dir)),
-    "knn_ivf_filtered" -> ((s, dir) => knnIvfFiltered(s, dir)),
-    "recall_ivf_filtered" -> ((s, dir) => recallIvfFiltered(s, dir)),
-    "ivf_split_hot_cell" -> ((s, dir) => ivfSplitHotCell(s, dir)),
-    "embedding_dq" -> ((s, dir) => embeddingDq(s, dir)),
-    "knn_ivf_flat_part" -> ((s, dir) => knnIvfFlatPartitioned(s, dir)),
-    "knn_ivf_upsert" -> ((s, dir) => knnIvfUpsert(s, dir)),
-    "zorder_range_scan" -> ((s, dir) => zorderRangeScan(s, dir)),
-    "bucketed_join_agg" -> ((s, dir) => bucketedJoinAgg(s, dir)),
-    "recall_ivf_flat" -> ((s, dir) => recallIvfFlat(s, dir)),
-    "knn_pq_flat" -> ((s, dir) => knnPqFlat(s, dir)),
-    "recall_pq_flat" -> ((s, dir) => recallPqFlat(s, dir)),
-    "pq_code_stats" -> ((s, dir) => pqCodeStats(s, dir)),
-    "knn_pq_perm" -> ((s, dir) => knnPqPerm(s, dir)),
-    "recall_pq_perm" -> ((s, dir) => recallPqPerm(s, dir)),
-    "knn_ivfpq" -> ((s, dir) => knnIvfPq(s, dir)),
-    "knn_ivfpq_part" -> ((s, dir) => knnIvfPqPartitioned(s, dir)),
-    "recall_ivfpq" -> ((s, dir) => recallIvfPq(s, dir)),
-    "knn_prefix" -> ((s, dir) => knnPrefix(s, dir)),
-    "knn_prefix_part" -> ((s, dir) => knnPrefixPartitioned(s, dir)),
-    "recall_prefix" -> ((s, dir) => recallPrefix(s, dir)),
-    "knn_mips" -> ((s, dir) => knnMips(s, dir)),
-    "stratified_sample" -> ((s, dir) => stratifiedSample(s, dir)),
-    "fvecs_roundtrip" -> ((s, dir) => fvecsRoundtrip(s, dir)),
-    "csv_roundtrip" -> ((s, dir) => csvRoundtrip(s, dir)),
-    "jsonl_roundtrip" -> ((s, dir) => jsonlRoundtrip(s, dir)),
-    "knn_lsh" -> ((s, dir) => knnLsh(s, dir)),
-    "knn_sq" -> ((s, dir) => knnSq(s, dir)),
-    "recall_sq" -> ((s, dir) => recallSq(s, dir)),
-    "knn_bq" -> ((s, dir) => knnBq(s, dir)),
-    "recall_bq" -> ((s, dir) => recallBq(s, dir)),
-    "knn_update_identity" -> ((s, dir) => knnUpdateIdentity(s, dir)),
-    "update_fraction_sweep" -> ((s, dir) => updateFractionSweep(s, dir)),
-    "recall_degraded" -> ((s, dir) => recallDegraded(s, dir)),
-    "recall_lsh" -> ((s, dir) => recallLsh(s, dir)),
-    "q1_agg" -> ((s, dir) => q1Agg(s, dir)),
-    "metrics_tail_summary" -> ((s, dir) => metricsTail(s, dir)),
-    "metrics_head_summary" -> ((s, dir) => metricsHead(s, dir)),
-    "multi_tenant_agg" -> ((s, dir) => multiTenantAgg(s, dir)),
-    "multi_tenant_curve" -> ((s, dir) => multiTenantCurve(s, dir)),
-    "svg_tenant_curve_chart" -> ((s, dir) => svgTenantCurveChart(s, dir)),
-    "pdf_tenant_curve_chart" -> ((s, dir) => pdfTenantCurveChart(s, dir)),
-    "event_regions" -> ((s, dir) => eventRegions(s, dir)),
-    "sessionize" -> ((s, dir) => sessionizeEvents(s, dir)),
-    "session_windows" -> ((s, dir) => sessionWindows(s, dir)),
-    "range_join_events" -> ((s, dir) => rangeJoinEvents(s, dir)),
-    "upsert_guard" -> ((s, dir) => upsertGuard(s, dir)),
-    "log_roundtrip" -> ((s, dir) => logRoundtrip(s, dir)),
-    "svg_interval_chart" -> ((s, dir) => svgIntervalChart(s, dir)),
-    "pdf_interval_chart" -> ((s, dir) => pdfIntervalChart(s, dir)),
-    "pdf_qps_latency_chart" -> ((s, dir) => pdfQpsLatencyChart(s, dir)),
-    "svg_qps_latency_chart" -> ((s, dir) => svgQpsLatencyChart(s, dir)),
-    "event_props" -> ((s, dir) => eventProps(s, dir)),
-    "asof_join" -> ((s, dir) => asofJoin(s, dir)),
-    "doc_winnow" -> ((s, dir) => docWinnow(s, dir)),
-    "text_stats" -> ((s, dir) => textStats(s, dir)),
-    "top_words" -> ((s, dir) => topWords(s, dir)),
-    "tfidf" -> ((s, dir) => tfidf(s, dir)),
-    "label_centroids" -> ((s, dir) => labelCentroids(s, dir)),
-    "quality_filter" -> ((s, dir) => qualityFilter(s, dir)),
-    "corpus_curate" -> ((s, dir) => corpusCurate(s, dir)),
-    "bm25_topk" -> ((s, dir) => bm25TopK(s, dir)),
-    "rrf_fuse" -> ((s, dir) => rrfFuse(s, dir)),
-    "hybrid_search" -> ((s, dir) => hybridSearch(s, dir)),
-    "train_test_split" -> ((s, dir) => trainTestSplit(s, dir)),
-    "lang_id" -> ((s, dir) => langId(s, dir)),
-    "doc_fingerprint" -> ((s, dir) => docFingerprint(s, dir)),
-    "dedup_exact" -> ((s, dir) => dedupExact(s, dir)),
-    "dedup_clusters" -> ((s, dir) => dedupClusters(s, dir)),
-    "leakage_safe_split" -> ((s, dir) => leakageSafeSplit(s, dir)),
-    "jaccard_threshold_profile" -> ((s, dir) => jaccardThresholdProfile(s, dir)),
-    "dedup_rate_by_source" -> ((s, dir) => dedupRateBySource(s, dir)),
-    "dedup_keep_list" -> ((s, dir) => dedupKeepList(s, dir)),
-    "ngram_jaccard_pairs" -> ((s, dir) => ngramJaccardPairs(s, dir)),
-    "substring_dedup" -> ((s, dir) => substringDedup(s, dir)),
-    "minhash_neardup" -> ((s, dir) => minhashNearDup(s, dir)),
-    "lsh_quality" -> ((s, dir) => lshQuality(s, dir)),
-    "simhash_quality" -> ((s, dir) => simhashQuality(s, dir)),
-    "ivf_nprobe_curve" -> ((s, dir) => ivfNprobeCurve(s, dir)),
-    "ivf_nlist_curve" -> ((s, dir) => ivfNlistCurve(s, dir)),
-    "ivf_autotune" -> ((s, dir) => ivfAutotune(s, dir)),
-    "bigram_logprob" -> ((s, dir) => bigramLogprob(s, dir)),
-    "kn_bigram_logprob" -> ((s, dir) => knBigramLogprob(s, dir)),
-    "text_normalize" -> ((s, dir) => textNormalize(s, dir)),
-    "url_canonicalize" -> ((s, dir) => urlCanonicalize(s, dir)),
-    "bitext_margin" -> ((s, dir) => bitextMargin(s, dir)),
-    "rouge_overlap" -> ((s, dir) => rougeOverlap(s, dir)),
-    "hubness_stats" -> ((s, dir) => hubnessStats(s, dir)),
-    "bitext_margin_prefix" -> ((s, dir) => bitextMarginPrefix(s, dir)),
-    "bitext_prefix_recovery" -> ((s, dir) => bitextPrefixRecovery(s, dir)),
-    "crosslingual_dedup" -> ((s, dir) => crosslingualDedup(s, dir)),
-    "bitext_threshold_curve" -> ((s, dir) => bitextThresholdCurve(s, dir)),
-    "hubness_centered" -> ((s, dir) => hubnessCentered(s, dir)),
-    "bitext_recovery_curve" -> ((s, dir) => bitextRecoveryCurve(s, dir)),
-    "bitext_margin_ann" -> ((s, dir) => bitextMarginAnn(s, dir)),
-    "bitext_ann_recovery" -> ((s, dir) => bitextAnnRecovery(s, dir)),
-    "bitext_ann_curve" -> ((s, dir) => bitextAnnCurve(s, dir)),
-    "bitext_mix_compose" -> ((s, dir) => bitextMixCompose(s, dir)),
-    "hybrid_rerank" -> ((s, dir) => hybridRerank(s, dir)),
-    "bm25_prf" -> ((s, dir) => bm25Prf(s, dir)),
-    "hubness_cellblocked_quality" -> ((s, dir) => hubnessCellBlockedQuality(s, dir)),
-    "hubness_whitened" -> ((s, dir) => hubnessWhitened(s, dir)),
-    "hubness_zca" -> ((s, dir) => hubnessZca(s, dir)),
-    "hubness_zca_cellblocked" -> ((s, dir) => hubnessZcaCellBlocked(s, dir)),
-    "knn_graph_cosine" -> ((s, dir) => knnGraphCosine(s, dir)),
-    "recall_graph_cosine" -> ((s, dir) => recallGraphCosine(s, dir)),
-    "knn_text_hashembed" -> ((s, dir) => knnTextHashembed(s, dir)),
-    "median_mode_stats" -> ((s, dir) => medianModeStats(s, dir)),
-    "date_funcs" -> ((s, dir) => dateFuncs(s, dir)),
-    "string_funcs" -> ((s, dir) => stringFuncs(s, dir)),
-    "null_semantics" -> ((s, dir) => nullSemantics(s, dir)),
-    "ppl_bucket_mix" -> ((s, dir) => pplBucketMix(s, dir)),
-    "join_cardinality_est" -> ((s, dir) => joinCardinalityEst(s, dir)),
-    "knn_text_tfidf" -> ((s, dir) => knnTextTfidf(s, dir)),
-    "generator_funcs" -> ((s, dir) => generatorFuncs(s, dir)),
-    "multimodal_audio_vad" -> ((s, dir) => multimodalAudioVad(s, dir)),
-    "json_funcs" -> ((s, dir) => jsonFuncs(s, dir)),
-    "regexp_funcs" -> ((s, dir) => regexpFuncs(s, dir)),
-    "lang_id_ngram" -> ((s, dir) => langIdNgram(s, dir)),
-    "k_anonymity" -> ((s, dir) => kAnonymity(s, dir)),
-    "rocchio_classify" -> ((s, dir) => rocchioClassify(s, dir)),
-    "spearman_value_ts" -> ((s, dir) => spearmanValueTs(s, dir)),
-    "benford_digits" -> ((s, dir) => benfordDigits(s, dir)),
-    "autocorr_daily_revenue" -> ((s, dir) => autocorrDailyRevenue(s, dir)),
-    "cusum_changepoint" -> ((s, dir) => cusumChangepoint(s, dir)),
-    "xcorr_event_types" -> ((s, dir) => xcorrEventTypes(s, dir)),
-    "mann_kendall_trend" -> ((s, dir) => mannKendallTrend(s, dir)),
-    "theil_sen_slope" -> ((s, dir) => theilSenSlope(s, dir)),
-    "ks_two_sample" -> ((s, dir) => ksTwoSample(s, dir)),
-    "ece_calibration" -> ((s, dir) => eceCalibration(s, dir)),
-    "kappa_classifiers" -> ((s, dir) => kappaClassifiers(s, dir)),
-    "vocab_coverage" -> ((s, dir) => vocabCoverage(s, dir)),
-    "cumulative_distinct_users" -> ((s, dir) => cumulativeDistinctUsers(s, dir)),
-    "order_cycle_time" -> ((s, dir) => orderCycleTime(s, dir)),
-    "repeat_purchase_rate" -> ((s, dir) => repeatPurchaseRate(s, dir)),
-    "pareto_80_20" -> ((s, dir) => pareto8020(s, dir)),
-    "weekly_seasonality" -> ((s, dir) => weeklySeasonality(s, dir)),
-    "gini_customer_spend" -> ((s, dir) => giniCustomerSpend(s, dir)),
-    "contingency_stats" -> ((s, dir) => contingencyStats(s, dir)),
-    "not_in_vs_not_exists" -> ((s, dir) => notInVsNotExists(s, dir)),
-    "incremental_neardup" -> ((s, dir) => incrementalNearDup(s, dir)),
-    "simhash_neardup" -> ((s, dir) => simhashNearDup(s, dir)),
-    "embedding_neardup" -> ((s, dir) => embeddingNearDup(s, dir)),
-    "multimodal_meta" -> ((s, dir) => multimodalMeta(s, dir)),
-    "multimodal_frames" -> ((s, dir) => multimodalFrames(s, dir)),
-    "multimodal_embed" -> ((s, dir) => multimodalEmbed(s, dir)),
-    "q3_top_orders" -> ((s, dir) => q3TopOrders(s, dir)),
-    "q5_region_revenue" -> ((s, dir) => q5RegionRevenue(s, dir)),
-    "window_running_total" -> ((s, dir) => windowRunningTotal(s, dir)),
-    "window_funcs" -> ((s, dir) => windowFuncs(s, dir)),
-    "array_map_funcs" -> ((s, dir) => arrayMapFuncs(s, dir)),
-    "word_lift_pairs" -> ((s, dir) => wordLiftPairs(s, dir)),
-    "quality_score_linear" -> ((s, dir) => qualityScoreLinear(s, dir)),
-    "quality_percentile" -> ((s, dir) => qualityPercentile(s, dir)),
-    "group_sample" -> ((s, dir) => groupSample(s, dir)),
-    "shard_assign" -> ((s, dir) => shardAssign(s, dir)),
-    "winsorized_stats" -> ((s, dir) => winsorizedStats(s, dir)),
-    "rollup_agg" -> ((s, dir) => rollupAgg(s, dir)),
-    "cube_agg" -> ((s, dir) => cubeAgg(s, dir)),
-    "grouping_sets_agg" -> ((s, dir) => groupingSetsAgg(s, dir)),
-    "weighted_sample" -> ((s, dir) => weightedSample(s, dir)),
-    "bpe_merges" -> ((s, dir) => bpeMerges(s, dir)),
-    "pagerank_sharedgrams" -> ((s, dir) => pagerankSharedGrams(s, dir)),
-    "graph_triangles" -> ((s, dir) => graphTriangles(s, dir)),
-    "bfs_hops" -> ((s, dir) => bfsHops(s, dir)),
-    "sssp_weighted" -> ((s, dir) => ssspWeighted(s, dir)),
-    "kcore_sharedgrams" -> ((s, dir) => kcoreSharedGrams(s, dir)),
-    "block_dedup" -> ((s, dir) => blockDedup(s, dir)),
-    "trigram_novelty" -> ((s, dir) => trigramNovelty(s, dir)),
-    "setsim_join" -> ((s, dir) => setsimJoin(s, dir)),
-    "merge_into" -> ((s, dir) => mergeIntoOrders(s, dir)),
-    "knn_mmr" -> ((s, dir) => knnMmr(s, dir)),
-    "scd2_user_state" -> ((s, dir) => scd2UserState(s, dir)),
-    "sequence_pack" -> ((s, dir) => sequencePack(s, dir)),
-    "bloom_join_prune" -> ((s, dir) => bloomJoinPrune(s, dir)),
-    "q4_order_priority" -> ((s, dir) => q4OrderPriority(s, dir)),
-    "q10_returned" -> ((s, dir) => q10Returned(s, dir)),
-    "unpivot_profile" -> ((s, dir) => unpivotProfile(s, dir)),
-    "fuzzy_dedup_lev" -> ((s, dir) => fuzzyDedupLev(s, dir)),
-    "hopping_window_agg" -> ((s, dir) => hoppingWindowAgg(s, dir)),
-    "embedding_gram" -> ((s, dir) => embeddingGram(s, dir)),
-    "pca_power_project" -> ((s, dir) => pcaPowerProject(s, dir)),
-    "event_paths" -> ((s, dir) => eventPaths(s, dir)),
-    "event_transitions" -> ((s, dir) => eventTransitions(s, dir)),
-    "stream_late_data" -> ((s, dir) => streamLateData(s, dir)),
-    "rfm_users" -> ((s, dir) => rfmUsers(s, dir)),
-    "dau_wau_ratio" -> ((s, dir) => dauWauRatio(s, dir)),
-    "label_prop_communities" -> ((s, dir) => labelPropCommunities(s, dir)),
-    "bitmap_and_count" -> ((s, dir) => bitmapAndCount(s, dir)),
-    "topk_freq_sketch" -> ((s, dir) => topkFreqSketch(s, dir)),
-    "stream_topk_freq" -> ((s, dir) => streamTopkFreq(s, dir)),
-    "quantile_sketch_events" -> ((s, dir) => quantileSketchEvents(s, dir)),
-    "quantile_sketch_by_type" -> ((s, dir) => quantileSketchByType(s, dir)),
-    "hll_intersect_est" -> ((s, dir) => hllIntersectEst(s, dir)),
-    "stream_cdc_apply" -> ((s, dir) => streamCdcApply(s, dir)),
-    "stream_quantile_events" -> ((s, dir) => streamQuantileEvents(s, dir)),
-    "stream_hopping_agg" -> ((s, dir) => streamHoppingAgg(s, dir)),
-    "late_interaction" -> ((s, dir) => lateInteraction(s, dir)),
-    "cdc_apply" -> ((s, dir) => cdcApply(s, dir)),
-    "range_frame_total" -> ((s, dir) => rangeFrameTotal(s, dir)),
-    "knn_filtered" -> ((s, dir) => knnFiltered(s, dir)),
-    "correlated_subquery" -> ((s, dir) => correlatedSubquery(s, dir)),
-    "scalar_funcs" -> ((s, dir) => scalarFuncs(s, dir)),
-    "boilerplate_stats" -> ((s, dir) => boilerplateStats(s, dir)),
-    "twap_user" -> ((s, dir) => twapUser(s, dir)),
-    "set_ops_all" -> ((s, dir) => setOpsAll(s, dir)),
-    "snapshot_diff" -> ((s, dir) => snapshotDiff(s, dir)),
-    "metrics_anomalies" -> ((s, dir) => metricsAnomalies(s, dir)),
-    "metrics_correlation" -> ((s, dir) => metricsCorrelation(s, dir)),
-    "events_histogram" -> ((s, dir) => eventsHistogram(s, dir)),
-    "metrics_gapfill" -> ((s, dir) => metricsGapfill(s, dir)),
-    "pivot_events" -> ((s, dir) => pivotEvents(s, dir)),
-    "semi_anti_orders" -> ((s, dir) => semiAntiOrders(s, dir)),
-    "salted_join_agg" -> ((s, dir) => saltedJoinAgg(s, dir)),
-    "event_deltas" -> ((s, dir) => eventDeltas(s, dir)),
-    "set_ops_suppliers" -> ((s, dir) => setOpsSuppliers(s, dir)),
-    "windowed_agg" -> ((s, dir) => windowedAgg(s, dir)),
-    "stream_windowed_agg" -> ((s, dir) => streamWindowedAgg(s, dir)),
-    "distinct_parts" -> ((s, dir) => distinctParts(s, dir)),
-    "table_profile" -> ((s, dir) => tableProfile(s, dir)),
-    "metrics_quantiles" -> ((s, dir) => metricsQuantiles(s, dir)),
-    "rare_token_stats" -> ((s, dir) => rareTokenStats(s, dir)),
-    "pii_redact" -> ((s, dir) => piiRedact(s, dir)),
-    "doc_chunks" -> ((s, dir) => docChunks(s, dir)),
-    "repetition_stats" -> ((s, dir) => repetitionStats(s, dir)),
-    "contamination" -> ((s, dir) => contaminationScan(s, dir)),
-    "contamination_embedding" -> ((s, dir) => contaminationEmbeddingScan(s, dir)),
-    "domain_mix" -> ((s, dir) => domainMix(s, dir)),
-    "token_budget_mix" -> ((s, dir) => tokenBudgetMix(s, dir)),
-    "temperature_mix" -> ((s, dir) => temperatureMixQ(s, dir)),
-    "orc_roundtrip" -> ((s, dir) => orcRoundtrip(s, dir)),
-    "events_date_partitioned" -> ((s, dir) => eventsDatePartitioned(s, dir)),
-    "manifest_skip_scan" -> ((s, dir) => manifestSkipScan(s, dir)),
-    "postings_stats" -> ((s, dir) => postingsStats(s, dir)),
-    "phrase_search" -> ((s, dir) => phraseSearchQ(s, dir)),
-    "map_at_10" -> ((s, dir) => mapAt10(s, dir)),
-    "mrr_at_10" -> ((s, dir) => mrrAt10(s, dir)),
-    "pr_at_10" -> ((s, dir) => prAt10(s, dir)),
-    "knn_classify" -> ((s, dir) => knnClassify(s, dir)),
-    "top_words_per_lang" -> ((s, dir) => topWordsPerLang(s, dir)),
-    "pareto_parts" -> ((s, dir) => paretoParts(s, dir)),
-    "embedding_drift" -> ((s, dir) => embeddingDrift(s, dir)),
-    "hll_union_groups" -> ((s, dir) => hllUnionGroups(s, dir)),
-    "dynamic_pivot" -> ((s, dir) => dynamicPivot(s, dir)),
-    "compaction_roundtrip" -> ((s, dir) => compactionRoundtrip(s, dir)),
-    "attribution_last_touch" -> ((s, dir) => attributionLastTouch(s, dir)),
-    "attribution_linear" -> ((s, dir) => attributionLinear(s, dir)),
-    "rolling_7d_users" -> ((s, dir) => rolling7dUsers(s, dir)),
-    "equi_depth_histogram" -> ((s, dir) => equiDepthHistogram(s, dir)),
-    "anomaly_mad" -> ((s, dir) => anomalyMad(s, dir)),
-    "stream_dedup_users" -> ((s, dir) => streamDedupUsers(s, dir)),
-    "multimodal_frame_dedup" -> ((s, dir) => multimodalFrameDedup(s, dir)),
-    "q7_volume_shipping" -> ((s, dir) => q7VolumeShipping(s, dir)),
-    "revenue_share_window" -> ((s, dir) => revenueShareWindow(s, dir)),
-    "retention_cohorts" -> ((s, dir) => retentionCohorts(s, dir)),
-    "incremental_join_view" -> ((s, dir) => incrementalJoinView(s, dir)),
-    "join_skew_profile" -> ((s, dir) => joinSkewProfile(s, dir)),
-    "q6_forecast_revenue" -> ((s, dir) => q6ForecastRevenue(s, dir)),
-    "q8_market_share" -> ((s, dir) => q8MarketShare(s, dir)),
-    "q12_ship_lag_priority" -> ((s, dir) => q12ShipLagPriority(s, dir)),
-    "q13_customer_distribution" -> ((s, dir) => q13CustomerDistribution(s, dir)),
-    "q14_promo_revenue" -> ((s, dir) => q14PromoRevenue(s, dir)),
-    "q15_top_supplier" -> ((s, dir) => q15TopSupplier(s, dir)),
-    "q17_small_qty_revenue" -> ((s, dir) => q17SmallQtyRevenue(s, dir)),
-    "q18_large_orders" -> ((s, dir) => q18LargeOrders(s, dir)),
-    "q19_disjunctive_revenue" -> ((s, dir) => q19DisjunctiveRevenue(s, dir)),
-    "q21_late_suppliers" -> ((s, dir) => q21LateSuppliers(s, dir)),
-    "q22_idle_customers" -> ((s, dir) => q22IdleCustomers(s, dir)),
-    "q2_min_cost_supplier" -> ((s, dir) => q2MinCostSupplier(s, dir)),
-    "q9_product_profit" -> ((s, dir) => q9ProductProfit(s, dir)),
-    "q11_important_stock" -> ((s, dir) => q11ImportantStock(s, dir)),
-    "q16_parts_suppliers" -> ((s, dir) => q16PartsSuppliers(s, dir)),
-    "q20_potential_promotion" -> ((s, dir) => q20PotentialPromotion(s, dir)),
-    "unigram_logprob" -> ((s, dir) =>
-      graft.text.ImportanceScoring.unigramDigitScore(
-        Tables.documents(s, dir), "doc_id", "text")),
-    "dsir_weights" -> ((s, dir) =>
-      graft.text.ImportanceScoring.dsirDigitWeights(
-        Tables.documents(s, dir), "doc_id", "text", col("lang") === "en")),
-    "stream_stream_join" -> ((s, dir) => streamStreamJoin(s, dir)),
-    "bpe_encode" -> ((s, dir) => bpeEncode(s, dir)),
-    "stream_ivf_search" -> ((s, dir) => streamIvfSearch(s, dir)),
-    "stream_audio_vad" -> ((s, dir) => streamAudioVad(s, dir)),
-    "stream_graph_search" -> ((s, dir) => streamGraphSearch(s, dir)),
-    "hard_negatives" -> ((s, dir) => hardNegatives(s, dir)),
-    "tokenizer_fertility" -> ((s, dir) => tokenizerFertility(s, dir)),
-    "bpe_vocab_curve" -> ((s, dir) => bpeVocabCurve(s, dir)),
-    "bpe_sampled_curve" -> ((s, dir) => bpeSampledCurve(s, dir)),
-    "stream_minhash_neardup" -> ((s, dir) => streamMinhashNearDup(s, dir)),
-  )
-
-  /** Stream-stream interval join run END-TO-END by the streaming engine:
-    * each view event joined to the same user's clicks in the following
-    * 24 h. Both sides are watermarked, so join state evicts once the
-    * watermark passes the interval — bounded state under continuous
-    * ingest, the canonical Structured Streaming join discipline. The
-    * AvailableNow backlog replay emits exactly the batch interval join
-    * (inner-join results emit eagerly; the watermark only governs state
-    * eviction), which is the shared oracle. */
-  private def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src(): DataFrame = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
-    // the watermark horizon must cover the FIXTURE's full event span
-    // (~30 days): if the backlog ever splits into multiple micro-batches
-    // (a second file under the glob, maxFilesPerTrigger), a horizon
-    // shorter than the span would evict rows between batches and the
-    // replay would silently emit a subset of the batch join. 45 days
-    // keeps state bounded (the streaming contract) while guaranteeing
-    // exact batch equality on any batching of this data.
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "45 days")
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "45 days")
-    val joined = views.join(clicks,
-      col("v_user") === col("c_user") &&
-        col("c_ts") >= col("v_ts") &&
-        col("c_ts") <= col("v_ts") + expr("INTERVAL 24 HOURS"))
-      .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
-    val sink = "stream_ssj_" + java.lang.Integer.toHexString(dir.hashCode)
-    // a stream-stream join allocates FOUR state stores (keyed + buffer,
-    // each side) per shuffle partition; the key space is user_id, so
-    // stores are sized by the user-cardinality census — fixture lands
-    // on the measured 4-store floor (A/B'd vs 8: warm 3.3→2.7 s), and
-    // at real scale the census grows the count with the key space.
-    graft.streaming.StreamingMetrics.withStatePartitions(spark,
-      graft.streaming.StreamingMetrics.statePartitionsFor(
-        streamCensus(spark, dir).users)) {
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sink)
-  }
-
-  // DuckDB oracle SQL. Table names resolve to the same parquet fixtures.
-  // Column names and types must match the Spark results exactly (driver
-  // sorts columns by name before hashing).
-  private val knnOracle =
-    """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |scored AS (
-      |  SELECT q.query_id, b.vec_id AS neighbor_id,
-      |         CAST(row_number() OVER (
-      |           PARTITION BY q.query_id
-      |           ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id
-      |         ) AS INTEGER) AS rank
-      |  FROM q CROSS JOIN b)
-      |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin
-
-  // -- bitext mining oracle pieces (shared by the prefix variant and the
-  // recovery query; the exact `bitext_margin` oracle predates these and
-  // stays monolithic for hash stability, but its k-derived constants are
-  // now s-interpolated from the same BitextK the Scala side uses) ------
-
-  /** The frozen public-suffix subset rendered as a SQL IN-list — ONE
-    * source of truth ([[graft.text.UrlFunctions.MultiLabelSuffixes]])
-    * for both the Spark registeredDomain branch and the oracle. */
-  private val urlSuffixInList: String =
-    graft.text.UrlFunctions.MultiLabelSuffixes.map(x => s"'$x'").mkString(", ")
-
-  /** BM25 + cosine RRF fusion as a CTE block ending in
-    * `fused(doc_id, rrf_score)` — shared by `hybrid_search` (which
-    * SELECTs it verbatim) and `hybrid_rerank` (which reranks its top-50
-    * shortlist). */
-  private val hybridFusedCtes: String =
-    """toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-      |       WHERE term IN ('spark','join','query') GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, len(string_split(trim(text), ' ')) AS dl FROM documents),
-      |n AS (SELECT count(*) AS n_docs FROM documents),
-      |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |idf AS (SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM dfq CROSS JOIN n),
-      |avgdl AS (SELECT avg(dl) AS avgdl FROM dl),
-      |bm AS (SELECT tf.doc_id,
-      |    round(sum(idf.idf * (tf.tf * 2.2)
-      |              / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl.avgdl))), 4) AS score
-      |  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id) CROSS JOIN avgdl
-      |  GROUP BY tf.doc_id),
-      |qv AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-      |vec AS (SELECT e.vec_id AS doc_id,
-      |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])) AS score
-      |  FROM embeddings e CROSS JOIN qv q),
-      |r1 AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM bm),
-      |r2 AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM vec),
-      |u AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2),
-      |fused AS (SELECT doc_id, round(sum(1.0 / (60 + rank)), 6) AS rrf_score
-      |  FROM u GROUP BY doc_id)""".stripMargin
-
-  /** Parity split + full-dim quantized cosine over all pairs. */
-  private val bitextBaseCtes: String =
-    """s AS (SELECT vec_id AS src_id, CAST(embedding AS DOUBLE[]) AS emb
-      |  FROM embeddings WHERE vec_id % 2 = 0),
-      |t AS (SELECT vec_id AS tgt_id, CAST(embedding AS DOUBLE[]) AS emb
-      |  FROM embeddings WHERE vec_id % 2 <> 0),
-      |sc AS (SELECT s.src_id, t.tgt_id,
-      |  CAST(floor(list_cosine_similarity(s.emb, t.emb) * 1000000000.0)
-      |    AS BIGINT) AS cos_q
-      |  FROM s CROSS JOIN t)""".stripMargin
-
-  /** Exact per-side neighborhoods `ena`/`enb`: top-k by full cosine. */
-  private val bitextExactNbhCtes: String =
-    s"""eta AS (SELECT src_id, tgt_id, cos_q, row_number() OVER (
-       |  PARTITION BY src_id ORDER BY cos_q DESC, tgt_id) AS r FROM sc),
-       |etb AS (SELECT src_id, tgt_id, cos_q, row_number() OVER (
-       |  PARTITION BY tgt_id ORDER BY cos_q DESC, src_id) AS r FROM sc),
-       |ena AS (SELECT src_id, tgt_id, cos_q FROM eta WHERE r <= $BitextK),
-       |enb AS (SELECT src_id, tgt_id, cos_q FROM etb WHERE r <= $BitextK)""".stripMargin
-
-  /** Prefix-pass neighborhoods `pna`/`pnb`: shortlist 16 by 32-dim prefix
-    * cosine, then top-4 by FULL cosine within the shortlist. */
-  private def bitextPrefixNbhCtes(q: String, shortlist: Int): String =
-    s"""${q}spre AS (SELECT s.src_id, t.tgt_id,
-       |  CAST(floor(list_cosine_similarity(s.emb[1:$BitextPrefixDim], t.emb[1:$BitextPrefixDim])
-       |    * 1000000000.0) AS BIGINT) AS pcos
-       |  FROM s CROSS JOIN t),
-       |${q}ra AS (SELECT src_id, tgt_id, row_number() OVER (
-       |  PARTITION BY src_id ORDER BY pcos DESC, tgt_id) AS r FROM ${q}spre),
-       |${q}rb AS (SELECT src_id, tgt_id, row_number() OVER (
-       |  PARTITION BY tgt_id ORDER BY pcos DESC, src_id) AS r FROM ${q}spre),
-       |${q}na AS (SELECT src_id, tgt_id, cos_q FROM (
-       |  SELECT f.src_id, f.tgt_id, sc.cos_q, row_number() OVER (
-       |    PARTITION BY f.src_id ORDER BY sc.cos_q DESC, f.tgt_id) AS rr
-       |  FROM ${q}ra f JOIN sc USING (src_id, tgt_id) WHERE f.r <= $shortlist) WHERE rr <= $BitextK),
-       |${q}nb AS (SELECT src_id, tgt_id, cos_q FROM (
-       |  SELECT f.src_id, f.tgt_id, sc.cos_q, row_number() OVER (
-       |    PARTITION BY f.tgt_id ORDER BY sc.cos_q DESC, f.src_id) AS rr
-       |  FROM ${q}rb f JOIN sc USING (src_id, tgt_id) WHERE f.r <= $shortlist) WHERE rr <= $BitextK)""".stripMargin
-
-  /** ANN-candidate neighborhoods `vna`/`vnb` for the bitext pass-1 swap:
-    * the SHARED deterministic IVF codebook (ivfTrainCtes' c2, trained on
-    * the %20<>0 base split exactly as the Scala [[ivfFlatModel]]), both
-    * parity sides assigned to their nearest cell (ties by cid), each
-    * node probing its [[BitextAnnNprobe]] nearest cells, candidates =
-    * the opposite side's probed-cell members, then top-[[BitextK]] by
-    * full quantized cosine within candidates. Requires ivfTrainCtes and
-    * bitextBaseCtes in scope. */
-  private def bitextAnnIdist(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-
-  /** nprobe-INDEPENDENT half of the ANN candidate replay: both parity
-    * sides quantized and assigned to their nearest cell (ties by cid).
-    * Shared by the operating-point queries and every rung of the
-    * nprobe curve. */
-  private def bitextAnnSharedCtes: String = {
-    val quant = "list_transform(emb, e -> CAST(floor(e * 1048576 + 0.5) AS BIGINT))"
-    s"""sqv AS (SELECT src_id, $quant AS qv FROM s),
-       |tqv AS (SELECT tgt_id, $quant AS qv FROM t),
-       |asg_s AS (SELECT src_id, cid FROM (
-       |  SELECT sqv.src_id, c.cid, row_number() OVER (PARTITION BY sqv.src_id
-       |    ORDER BY ${bitextAnnIdist("sqv.qv", "c.cvec")}, c.cid) AS rn FROM sqv CROSS JOIN c2 c) WHERE rn = 1),
-       |asg_t AS (SELECT tgt_id, cid FROM (
-       |  SELECT tqv.tgt_id, c.cid, row_number() OVER (PARTITION BY tqv.tgt_id
-       |    ORDER BY ${bitextAnnIdist("tqv.qv", "c.cvec")}, c.cid) AS rn FROM tqv CROSS JOIN c2 c) WHERE rn = 1)""".stripMargin
-  }
-
-  /** One nprobe RUNG of the ANN candidate replay, CTE names prefixed
-    * `$p`: each node probes its `np` nearest cells, candidates = the
-    * opposite side's assigned members of those cells, then
-    * top-[[BitextK]] by full quantized cosine — ends at `${p}na`/`${p}nb`
-    * for [[bitextTailSql]]. Requires [[bitextAnnSharedCtes]] in scope. */
-  private def bitextAnnRungCtes(np: Int, p: String): String =
-    s"""${p}prb_s AS (SELECT src_id, cid FROM (
-       |  SELECT sqv.src_id, c.cid, row_number() OVER (PARTITION BY sqv.src_id
-       |    ORDER BY ${bitextAnnIdist("sqv.qv", "c.cvec")}, c.cid) AS rn FROM sqv CROSS JOIN c2 c) WHERE rn <= $np),
-       |${p}prb_t AS (SELECT tgt_id, cid FROM (
-       |  SELECT tqv.tgt_id, c.cid, row_number() OVER (PARTITION BY tqv.tgt_id
-       |    ORDER BY ${bitextAnnIdist("tqv.qv", "c.cvec")}, c.cid) AS rn FROM tqv CROSS JOIN c2 c) WHERE rn <= $np),
-       |${p}cnd_a AS (SELECT ${p}prb_s.src_id, asg_t.tgt_id FROM ${p}prb_s JOIN asg_t USING (cid)),
-       |${p}cnd_b AS (SELECT asg_s.src_id, ${p}prb_t.tgt_id FROM ${p}prb_t JOIN asg_s USING (cid)),
-       |${p}na AS (SELECT src_id, tgt_id, cos_q FROM (
-       |  SELECT f.src_id, f.tgt_id, sc.cos_q, row_number() OVER (
-       |    PARTITION BY f.src_id ORDER BY sc.cos_q DESC, f.tgt_id) AS rr
-       |  FROM ${p}cnd_a f JOIN sc USING (src_id, tgt_id)) WHERE rr <= $BitextK),
-       |${p}nb AS (SELECT src_id, tgt_id, cos_q FROM (
-       |  SELECT f.src_id, f.tgt_id, sc.cos_q, row_number() OVER (
-       |    PARTITION BY f.tgt_id ORDER BY sc.cos_q DESC, f.src_id) AS rr
-       |  FROM ${p}cnd_b f JOIN sc USING (src_id, tgt_id)) WHERE rr <= $BitextK)""".stripMargin
-
-  private def bitextAnnNbhCtes: String =
-    s"$bitextAnnSharedCtes,\n${bitextAnnRungCtes(BitextAnnNprobe, "v")}"
-
-  /** The full `hubness_zca` oracle, GENERATED: exact int64 cross-moments
-    * over the 2²⁰ grid, the C/τ normalization, [[ZcaIters]] coupled
-    * Newton–Schulz rounds unrolled as matmul CTE chains (row/col list
-    * aggregates + left-to-right list_reduce inner products — the fold
-    * order [[zcaMatrix]] mirrors on the driver, verified bit-exact),
-    * then the row-local W·(x−μ) transform (0.0-seeded fold via
-    * list_prepend, matching Spark's `aggregate` seed), unit-normalize,
-    * degree-16 adjacency, raw-vs-zca census. */
-  /** The `b`-scoped ZCA transform chain, factored so the exact-rung
-    * oracle ([[zcaOracleSql]]) and the blocked-rung oracle
-    * (`hubness_zca_cellblocked`) replay ONE construction: quantized
-    * grid → moments/Gram → C/τ → [[ZcaIters]] Newton–Schulz rounds as
-    * matmul CTE chains → the row-local W·(x−μ) transform, ending at
-    * `ztr(vec_id, cv)`. Assumes a CTE `b(vec_id, embedding)` in scope. */
-  private def zcaChainCtes: String = {
-    val D = 64
-    def mmFold(l: String, r: String): String =
-      s"list_reduce(list_transform(generate_series(1,$D), kk -> $l.r[kk]*$r.c[kk]), (a,b)->a+b)"
-    def rowsCols(m: String): String =
-      s"""${m}_rows AS MATERIALIZED (SELECT i, array_agg(v ORDER BY j) AS r FROM $m GROUP BY i),
-         |${m}_cols AS MATERIALIZED (SELECT j, array_agg(v ORDER BY i) AS c FROM $m GROUP BY j)""".stripMargin
-    def iter(k: Int): String =
-      s"""zy$k AS MATERIALIZED (SELECT zr.i, yc.j, ${mmFold("zr", "yc")} AS v
-         |  FROM z${k - 1}_rows zr CROSS JOIN y${k - 1}_cols yc),
-         |t$k AS MATERIALIZED (SELECT i, j, (CASE WHEN i=j THEN 3.0 ELSE 0.0 END) - v AS v FROM zy$k),
-         |${rowsCols(s"t$k")},
-         |y$k AS MATERIALIZED (SELECT yr.i, tc.j, ${mmFold("yr", "tc")} / 2 AS v
-         |  FROM y${k - 1}_rows yr CROSS JOIN t${k}_cols tc),
-         |z$k AS MATERIALIZED (SELECT tr.i, zc.j, ${mmFold("tr", "zc")} / 2 AS v
-         |  FROM t${k}_rows tr CROSS JOIN z${k - 1}_cols zc),
-         |${rowsCols(s"y$k")},
-         |${rowsCols(s"z$k")}""".stripMargin
-    val head =
-      s"""zqb AS MATERIALIZED (SELECT vec_id,
-         |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-         |  FROM b),
-         |zn AS (SELECT count(*) AS n FROM b),
-         |zexp AS MATERIALIZED (SELECT vec_id, CAST(generate_subscripts(qv,1) AS INTEGER) AS i, unnest(qv) AS e FROM zqb),
-         |zs AS MATERIALIZED (SELECT i, CAST(sum(e) AS BIGINT) AS si FROM zexp GROUP BY i),
-         |zg AS MATERIALIZED (SELECT a.i AS i, bb.i AS j, CAST(sum(a.e*bb.e) AS BIGINT) AS sij
-         |  FROM zexp a JOIN zexp bb USING (vec_id) GROUP BY 1,2),
-         |zcv AS MATERIALIZED (SELECT g.i, g.j,
-         |  (CAST(n AS DOUBLE)*CAST(sij AS DOUBLE) - CAST(sa.si AS DOUBLE)*CAST(sb.si AS DOUBLE))
-         |    / (CAST(n AS DOUBLE)*CAST(n AS DOUBLE)) AS v
-         |  FROM zg g JOIN zs sa ON sa.i = g.i JOIN zs sb ON sb.i = g.j CROSS JOIN zn),
-         |ztau AS (SELECT list_reduce(list_transform(generate_series(1,$D), i -> dg[i]), (a,b)->a+b) AS tau
-         |  FROM (SELECT array_agg(v ORDER BY i) AS dg FROM zcv WHERE i = j)),
-         |y0 AS MATERIALIZED (SELECT i, j, v / tau AS v FROM zcv CROSS JOIN ztau),
-         |z0 AS MATERIALIZED (SELECT a.i, bb.i AS j, CASE WHEN a.i=bb.i THEN 1.0 ELSE 0.0 END AS v
-         |  FROM (SELECT DISTINCT i FROM zcv) a CROSS JOIN (SELECT DISTINCT i FROM zcv) bb),
-         |${rowsCols("y0")},
-         |${rowsCols("z0")}""".stripMargin
-    val iters = (1 to ZcaIters).map(iter).mkString(",\n")
-    val tail =
-      s"""zmu AS (SELECT array_agg(CAST(si AS DOUBLE) / n ORDER BY i) AS mv FROM zs CROSS JOIN zn),
-         |wm AS (SELECT array_agg(r ORDER BY i) AS w FROM z${ZcaIters}_rows),
-         |ztr AS MATERIALIZED (SELECT vec_id, list_transform(generate_series(1,$D), i ->
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(generate_series(1,$D), j ->
-         |      w[i][j] * (CAST(qv[j] AS DOUBLE) - mv[j]))), (a,b)->a+b)) AS cv
-         |  FROM zqb CROSS JOIN wm CROSS JOIN zmu)""".stripMargin
-    s"$head,\n$iters,\n$tail"
-  }
-
-  private def zcaOracleSql: String =
-    s"""WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |zrbn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-       |zradj AS MATERIALIZED ${sqlUnitAdj("zrbn", 16)},
-       |$zcaChainCtes,
-       |zbn AS (SELECT vec_id, ${sqlUnit("cv")} AS nv FROM ztr),
-       |zadj AS MATERIALIZED ${sqlUnitAdj("zbn", 16)},
-       |zocc_r AS (SELECT neighbor_id, count(*) AS k_occ FROM zradj GROUP BY 1),
-       |zocc_z AS (SELECT neighbor_id, count(*) AS k_occ FROM zadj GROUP BY 1),
-       |zcr AS (SELECT 'raw' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-       |    count(*) AS n_vectors
-       |  FROM b LEFT JOIN zocc_r o ON b.vec_id = o.neighbor_id GROUP BY 1, 2),
-       |zcz AS (SELECT 'zca' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-       |    count(*) AS n_vectors
-       |  FROM b LEFT JOIN zocc_z o ON b.vec_id = o.neighbor_id GROUP BY 1, 2)
-       |SELECT variant, k_occ, n_vectors FROM zcr
-       |UNION ALL SELECT variant, k_occ, n_vectors FROM zcz""".stripMargin
-
-  /** Deterministic IVF training replay over an arbitrary quantized
-    * source CTE `src(vec_id, qv)` with prefixed CTE names and an
-    * arbitrary `nlist` — the generalized twin of [[ivfCtesFor]]'s
-    * training prefix (which is pinned to the raw base split and
-    * nlist=8), used where a model must be trained IN a transformed
-    * space (the blocked ZCA rung) or at a different cell count (the
-    * nlist-growth curve). Mirrors [[graft.index.IvfFlat.fit]]:
-    * Knuth-mixed-id init, two integer Lloyd steps, floor-div means,
-    * empty cells keep their centroid. Ends at `${pfx}c2(cid, cvec)`. */
-  private def ivfTrainCtesOnQv(src: String, pfx: String, nlist: Int = 8): String = {
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    def stepSql(n: Int, prev: String): String =
-      s"""${pfx}s$n AS (SELECT vec_id, qv, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |  FROM (SELECT t.vec_id, t.qv, c.cid, ${idist("t.qv", "c.cvec")} AS dist FROM $src t CROSS JOIN $prev c)),
-         |${pfx}a$n AS (SELECT vec_id, qv, cid FROM ${pfx}s$n WHERE rn = 1),
-         |${pfx}g$n AS (SELECT cid, pos, sum(e) AS s, count(*) AS cnt FROM
-         |  (SELECT cid, CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e FROM ${pfx}a$n)
-         |  GROUP BY cid, pos),
-         |${pfx}m$n AS (SELECT cid, pos,
-         |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM ${pfx}g$n),
-         |${pfx}c$n AS (SELECT cid, array_agg(c ORDER BY pos) AS cvec FROM ${pfx}m$n GROUP BY cid
-         |  UNION ALL SELECT cid, cvec FROM $prev WHERE cid NOT IN (SELECT cid FROM ${pfx}m$n))""".stripMargin
-    s"""${pfx}mx AS (SELECT vec_id, qv,
-       |  (((vec_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-       |    + (vec_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mx FROM $src),
-       |${pfx}init AS (SELECT CAST(row_number() OVER (ORDER BY mx, vec_id) - 1 AS INTEGER) AS cid, qv AS cvec
-       |  FROM (SELECT * FROM ${pfx}mx ORDER BY mx, vec_id LIMIT $nlist)),
-       |${stepSql(1, s"${pfx}init")},
-       |${stepSql(2, s"${pfx}c1")}""".stripMargin
-  }
-
-  /** Margin tail over neighborhoods `${p}na`/`${p}nb` → mutual set
-    * `${p}mut`; the ratio-margin numerator 2k·10⁶ is generated from
-    * [[BitextK]] so it cannot drift from the Scala side. */
-  private def bitextTailSql(p: String): String =
-    s"""${p}sa AS (SELECT src_id, CAST(sum(cos_q) AS BIGINT) AS sum_a
-       |  FROM ${p}na GROUP BY 1),
-       |${p}sb AS (SELECT tgt_id, CAST(sum(cos_q) AS BIGINT) AS sum_b
-       |  FROM ${p}nb GROUP BY 1),
-       |${p}cand AS (SELECT src_id, tgt_id, cos_q FROM ${p}na
-       |  UNION SELECT src_id, tgt_id, cos_q FROM ${p}nb),
-       |${p}m AS (SELECT c.src_id, c.tgt_id, c.cos_q,
-       |  (${2 * BitextK} * 1000000 * c.cos_q) // (sum_a + sum_b) AS margin_ppm
-       |  FROM ${p}cand c JOIN ${p}sa USING (src_id) JOIN ${p}sb USING (tgt_id)
-       |  WHERE c.cos_q > 0 AND sum_a + sum_b > 0),
-       |${p}w AS (SELECT src_id, tgt_id, cos_q, margin_ppm,
-       |  row_number() OVER (PARTITION BY src_id
-       |    ORDER BY margin_ppm DESC, tgt_id) AS rs,
-       |  row_number() OVER (PARTITION BY tgt_id
-       |    ORDER BY margin_ppm DESC, src_id) AS rt
-       |  FROM ${p}m),
-       |${p}mut AS (SELECT src_id, tgt_id, cos_q, margin_ppm FROM ${p}w
-       |  WHERE rs = 1 AND rt = 1)""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  private val knnCosineOracle =
-    """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |scored AS (
-      |  SELECT q.query_id, b.vec_id AS neighbor_id,
-      |         CAST(row_number() OVER (
-      |           PARTITION BY q.query_id
-      |           ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id
-      |         ) AS INTEGER) AS rank
-      |  FROM q CROSS JOIN b)
-      |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin
-
-  private val recallDegradedOracle =
-    """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |deg AS (SELECT * FROM b WHERE vec_id % 3 <> 0),
-      |gt AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT q.query_id, b.vec_id AS neighbor_id,
-      |         row_number() OVER (PARTITION BY q.query_id
-      |           ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-      |  FROM q CROSS JOIN b) WHERE rank <= 10),
-      |pr AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT q.query_id, deg.vec_id AS neighbor_id,
-      |         row_number() OVER (PARTITION BY q.query_id
-      |           ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(deg.embedding AS DOUBLE[])), deg.vec_id) AS rank
-      |  FROM q CROSS JOIN deg) WHERE rank <= 10),
-      |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-      |total AS (SELECT count(*) AS n_gt FROM gt)
-      |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  // ---- Portable-hash oracle fragments -------------------------------
-  // DuckDB replicas of graft.functions.PolyHash and the derived MinHash /
-  // SimHash / winnowing / SQ / LSH pipelines. Every constant is inlined
-  // from the same Scala definitions the Spark operators use, so the two
-  // sides can only drift if the code drifts.
-
-  /** DuckDB replica of PolyHash.hash(x, base, mod): left fold over
-    * codepoints in exact int64 arithmetic. */
-  /** CTE prefix shared by the graph-analytics oracles: rare-8-gram
-    * blocked document edges `p(src < dst)`, replaying ShingleHashes. */
-  /** The derived-partsupp CTE shared by the five partsupp TPC-H
-    * oracles — byte-for-byte the [[partsupp]] rule: observed lineitem
-    * supply pairs + closed-form integer measures (pmod spelled with
-    * the portable double-% idiom; keys are positive, so it matches
-    * Spark's pmod exactly). */
-  private lazy val partsuppCte: String =
-    """ps AS MATERIALIZED (SELECT ps_partkey, ps_suppkey,
-      |  CAST(1 + ((ps_partkey * 7 + ps_suppkey * 11) % 9999 + 9999) % 9999 AS INTEGER) AS ps_availqty,
-      |  100 + ((ps_partkey * 13 + ps_suppkey * 17) % 99900 + 99900) % 99900 AS ps_supplycost_cents
-      |  FROM (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey FROM lineitem))""".stripMargin
-
-  private lazy val sharedGramEdgeCtes: String =
-    s"""t AS MATERIALIZED (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-      |dg AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(
-      |    [array_to_string(toks[i:i+7], ' ') for i in generate_series(1, greatest(len(toks) - 7, 1))],
-      |    x -> ${duckPolyHash("x", 257L, 1000000007L)}))) AS g FROM t),
-      |rare AS MATERIALIZED (SELECT g FROM dg GROUP BY g HAVING count(*) BETWEEN 2 AND 5),
-      |rs AS MATERIALIZED (SELECT doc_id, g FROM dg WHERE g IN (SELECT g FROM rare)),
-      |p AS MATERIALIZED (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-      |  FROM rs a JOIN rs b USING (g) WHERE a.doc_id < b.doc_id)""".stripMargin
-
-  private def duckPolyHash(x: String, base: Long, mod: Long): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(generate_series(1, length($x)), i -> CAST(unicode($x[i]) AS BIGINT))), " +
-      s"(acc, c) -> (acc * $base + c) % $mod)"
-
-  /** CTE prefix replaying the MinHash pipeline through banding:
-    * t → sh (distinct 3-gram shingles) → ph → sig (16 seeded mins) →
-    * bands (4 bands × 4 rows, 31-fold band hash). */
-  private lazy val minhashBandCtes: String = {
-    val p = graft.text.Dedup.MinHashMod
-    val sigExprs = (0 until 16).map { s =>
-      val a = graft.text.Dedup.minHashCoeffA(s)
-      val b = graft.text.Dedup.minHashCoeffB(s)
-      s"list_min(list_transform(phs, h -> (h * $a + $b) % $p))"
-    }
-    // band hash = left fold (acc*31 + sig_i) mod P over the band's 4 rows
-    val bandSelects = (0 until 4).map { b =>
-      val e = (b * 4 until b * 4 + 4).foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
-        s"($acc * 31 + sig[${i + 1}]) % $p"
-      }
-      s"SELECT doc_id, shingles, $b AS band_idx, $e AS band_hash FROM sig"
-    }.mkString("\n", "\nUNION ALL ", "")
-    s"""t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-       |sh AS (SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-       |  for i in generate_series(1, greatest(len(toks) - 2, 1))]) AS shingles FROM t),
-       |ph AS (SELECT doc_id, shingles,
-       |  list_transform(shingles, x -> ${duckPolyHash("x", 257L, p)}) AS phs FROM sh),
-       |sig AS (SELECT doc_id, shingles, [${sigExprs.mkString(",\n  ")}] AS sig FROM ph),
-       |bands AS ($bandSelects)""".stripMargin
-  }
-
-  private def minhashOracleWith(candWhere: String, outCols: String): String =
-    s"""WITH $minhashBandCtes,
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b USING (band_idx, band_hash) WHERE $candWhere),
-       |v AS (SELECT id_a, id_b, len(list_intersect(sa.shingles, sb.shingles)) AS n_int,
-       |    len(sa.shingles) AS na, len(sb.shingles) AS nb
-       |  FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b)
-       |SELECT $outCols, (n_int * 10000) // (na + nb - n_int) AS jaccard_bp
-       |FROM v WHERE (n_int * 10000) // (na + nb - n_int) >= 5000""".stripMargin
-
-  /** LSH-vs-exact recall: the banded pipeline's verified pairs against
-    * the all-pairs exact Jaccard ≥ 0.5 set on the same shingle domain. */
-  private lazy val lshQualityOracle: String =
-    s"""WITH $minhashBandCtes,
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b USING (band_idx, band_hash) WHERE a.doc_id < b.doc_id),
-       |v AS (SELECT id_a, id_b, len(list_intersect(sa.shingles, sb.shingles)) AS n_int,
-       |    len(sa.shingles) AS na, len(sb.shingles) AS nb
-       |  FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b),
-       |fd AS (SELECT id_a, id_b FROM v
-       |  WHERE (n_int * 10000) // (na + nb - n_int) >= 5000),
-       |ex AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    len(list_intersect(a.shingles, b.shingles)) AS n_int,
-       |    len(a.shingles) AS na, len(b.shingles) AS nb
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-       |gt AS (SELECT id_a, id_b FROM ex
-       |  WHERE (n_int * 10000) // (na + nb - n_int) >= 5000),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN fd USING (id_a, id_b)),
-       |tot AS (SELECT count(*) AS n_exact FROM gt),
-       |nf AS (SELECT count(*) AS n_found FROM fd)
-       |SELECT n_exact, n_found,
-       |  CAST(CASE WHEN n_exact > 0 THEN (n_hits * 10000) // n_exact
-       |    ELSE 10000 END AS BIGINT) AS recall_bp
-       |FROM tot CROSS JOIN nf CROSS JOIN hits""".stripMargin
-
-  private val minhashOracle: String =
-    minhashOracleWith("a.doc_id < b.doc_id", "id_a, id_b")
-
-  /** Asymmetric variant: increment (doc_id ≡ 0 mod 4) vs corpus. */
-  private val minhashIncrementalOracle: String =
-    minhashOracleWith("a.doc_id % 4 = 0 AND b.doc_id % 4 <> 0",
-      "id_a AS id_new, id_b AS id_old")
-
-  /** Shared CTE prefix replaying simhash signatures (t → h → sg). */
-  private val simhashSigCtes: String = {
-    val two30 = 1073741824L
-    val bits = graft.text.TextFunctions.SimHashBits
-    val kHi = graft.text.TextFunctions.SimHashMixHi
-    val kLo = graft.text.TextFunctions.SimHashMixLo
-    s"""t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-       |h AS (SELECT doc_id, list_transform(toks, tk ->
-       |  ((${duckPolyHash("tk", 313L, two30)} * $kHi % 4294967296) >> 2) * $two30 +
-       |  ((${duckPolyHash("tk", 257L, two30)} * $kLo % 4294967296) >> 2)) AS hs FROM t),
-       |sg AS (SELECT doc_id, CAST(list_sum(list_transform(generate_series(0, ${bits - 1}), j ->
-       |  CASE WHEN 2 * len(list_filter(hs, hh -> ((hh >> j) & 1) = 1)) - len(hs) > 0
-       |       THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS simhash FROM h)""".stripMargin
-  }
-
-  private val simhashOracle: String =
-    s"""WITH $simhashSigCtes,
-       |ch AS (SELECT doc_id, simhash, unnest([0, 1, 2, 3]) AS chunk_idx FROM sg),
-       |ch2 AS (SELECT doc_id, simhash, chunk_idx,
-       |  (simhash >> (chunk_idx * 15)) & 32767 AS chunk FROM ch),
-       |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-       |  FROM ch2 a JOIN ch2 b USING (chunk_idx, chunk) WHERE a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 3""".stripMargin
-
-  private val hammingKnnOracle: String =
-    s"""WITH $simhashSigCtes,
-       |q AS (SELECT doc_id AS query_id, simhash AS qs FROM sg WHERE doc_id % 20 = 0),
-       |b AS (SELECT doc_id, simhash FROM sg WHERE doc_id % 20 <> 0),
-       |scored AS (SELECT query_id, b.doc_id AS neighbor_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY bit_count(xor(qs, simhash)), b.doc_id) AS INTEGER) AS rank
-       |  FROM q CROSS JOIN b)
-       |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin
-
-  /** SimHash-vs-exact recall: the 15-bit-chunk banding's verified pairs
-    * against the all-pairs exact Jaccard ≥ 0.5 set on the same 3-gram
-    * domain (the simhash sibling of [[lshQualityOracle]]). */
-  private lazy val simhashQualityOracle: String =
-    s"""WITH $simhashSigCtes,
-       |ch AS (SELECT doc_id, simhash, unnest([0, 1, 2, 3]) AS chunk_idx FROM sg),
-       |ch2 AS (SELECT doc_id, simhash, chunk_idx,
-       |  (simhash >> (chunk_idx * 15)) & 32767 AS chunk FROM ch),
-       |fd AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ch2 a JOIN ch2 b USING (chunk_idx, chunk)
-       |  WHERE a.doc_id < b.doc_id
-       |    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |sh AS (SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-       |  for i in generate_series(1, greatest(len(toks) - 2, 1))]) AS shingles FROM t),
-       |ex AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    len(list_intersect(a.shingles, b.shingles)) AS n_int,
-       |    len(a.shingles) AS na, len(b.shingles) AS nb
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-       |gt AS (SELECT id_a, id_b FROM ex
-       |  WHERE (n_int * 10000) // (na + nb - n_int) >= 5000),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN fd USING (id_a, id_b)),
-       |tot AS (SELECT count(*) AS n_exact FROM gt),
-       |nf AS (SELECT count(*) AS n_found FROM fd)
-       |SELECT n_exact, n_found,
-       |  CAST(CASE WHEN n_exact > 0 THEN (n_hits * 10000) // n_exact
-       |    ELSE 10000 END AS BIGINT) AS recall_bp
-       |FROM tot CROSS JOIN nf CROSS JOIN hits""".stripMargin
-
-  /** Recall ladder over nprobe ∈ {1,2,4,6}: probe ranks computed once,
-    * each ladder level filters rn ≤ nprobe — the training prefix is the
-    * standard IVF replay verbatim. */
-  /** The recall-vs-nprobe ladder as a reusable CTE chain ending in
-    * `curve(nprobe, recall_bp)` — shared by the curve dump and the
-    * closed-loop autotune oracle. */
-  private lazy val ivfNprobeCurveCtes: String = {
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    s"""$ivfTrainCtes,
-       |pr AS (SELECT qq.query_id, c.cid,
-       |    row_number() OVER (PARTITION BY qq.query_id
-       |      ORDER BY ${idist("qq.qv", "c.cvec")}, c.cid) AS prn
-       |  FROM qq CROSS JOIN c2 c),
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |lv AS (SELECT unnest([1, 2, 4, 6]) AS nprobe),
-       |cand AS (SELECT l.nprobe, p.query_id, ab.vec_id
-       |  FROM lv l JOIN pr p ON p.prn <= l.nprobe JOIN ab ON ab.cid = p.cid),
-       |scored AS (SELECT c.nprobe, c.query_id, c.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY c.nprobe, c.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), c.vec_id) AS rank
-       |  FROM cand c JOIN b ON b.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |pred AS (SELECT nprobe, query_id, neighbor_id FROM scored WHERE rank <= 10),
-       |hits AS (SELECT nprobe, count(*) AS n_hits FROM pred
-       |  JOIN gt USING (query_id, neighbor_id) GROUP BY 1),
-       |total AS (SELECT count(*) AS n_gt FROM gt),
-       |curve AS (SELECT h.nprobe, CAST((h.n_hits * 10000) // t.n_gt AS BIGINT) AS recall_bp
-       |  FROM hits h CROSS JOIN total t)""".stripMargin
-  }
-
-  private lazy val ivfNprobeCurveOracle: String =
-    s"""WITH $ivfNprobeCurveCtes
-       |SELECT nprobe, recall_bp FROM curve""".stripMargin
-
-  /** Closed-loop knob replay: the smallest measured rung meeting the
-    * 0.9 recall target, falling back to the deepest rung. */
-  private lazy val ivfAutotuneOracle: String =
-    s"""WITH $ivfNprobeCurveCtes
-       |SELECT CAST(9000 AS BIGINT) AS target_bp, nprobe, recall_bp FROM curve
-       |WHERE nprobe = coalesce(
-       |  (SELECT min(nprobe) FROM curve WHERE recall_bp >= 9000),
-       |  (SELECT max(nprobe) FROM curve))""".stripMargin
-
-  /** Windowed-energy VAD replay (shared by the batch query and its
-    * streamed twin): char windows == byte windows after the ASCII
-    * sanitize; energy = Σ codepoint; active compared cross-multiplied. */
-  private val streamAudioVadOracle: String =
-    """WITH d AS (SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '?', 'g') AS text FROM documents),
-      |m AS (SELECT doc_id AS media_id, text, length(text) AS n FROM d WHERE length(text) > 0),
-      |w AS (SELECT media_id, text, n, unnest(generate_series(0, (n - 1) // 128)) AS win_idx FROM m),
-      |e AS (SELECT media_id, win_idx, substring(text, win_idx * 128 + 1, 128) AS wt FROM w),
-      |g AS (SELECT media_id, win_idx, length(wt) AS wb,
-      |  CAST(list_sum(list_transform(generate_series(1, length(wt)),
-      |    i -> ascii(substring(wt, i, 1)))) AS BIGINT) AS energy FROM e)
-      |SELECT media_id, count(*) AS n_windows,
-      |  CAST(sum(CASE WHEN energy >= 64 * wb THEN 1 ELSE 0 END) AS BIGINT) AS n_active,
-      |  CAST(sum(CASE WHEN energy >= 64 * wb THEN 1 ELSE 0 END) * 10000 // count(*) AS BIGINT) AS active_bp,
-      |  CAST(sum(energy) AS BIGINT) AS total_energy
-      |FROM g GROUP BY 1""".stripMargin
-
-  /** Feature-hashed cosine top-k replay: PolyHash mod 4096 buckets,
-    * sparse dot join, exact int64 dots/norms, one shared fixed-shape
-    * double ppm expression. */
-  private lazy val hashEmbedKnnOracle: String =
-    s"""WITH t AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-       |sv AS (SELECT doc_id, ${duckPolyHash("tok", 257L, 1000000007L)} % 4096 AS bucket,
-       |  count(*) AS cnt FROM t GROUP BY 1, 2),
-       |nr AS (SELECT doc_id, CAST(sum(cnt * cnt) AS BIGINT) AS nrm FROM sv GROUP BY 1),
-       |q AS (SELECT doc_id AS query_id, bucket, cnt AS qcnt FROM sv WHERE doc_id % 100 = 0),
-       |b AS (SELECT * FROM sv WHERE doc_id % 100 <> 0),
-       |d AS (SELECT q.query_id, b.doc_id, CAST(sum(q.qcnt * b.cnt) AS BIGINT) AS dot
-       |  FROM q JOIN b USING (bucket) GROUP BY 1, 2),
-       |sc AS (SELECT d.query_id, d.doc_id AS neighbor_id,
-       |    CAST(floor(1000000.0 * d.dot
-       |      / sqrt(CAST(qn.nrm AS DOUBLE) * CAST(bn.nrm AS DOUBLE))) AS BIGINT) AS cos_ppm
-       |  FROM d JOIN nr qn ON qn.doc_id = d.query_id JOIN nr bn ON bn.doc_id = d.doc_id),
-       |r AS (SELECT query_id, neighbor_id, cos_ppm,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_ppm DESC, neighbor_id) AS INTEGER) AS rank FROM sc)
-       |SELECT query_id, neighbor_id, rank, cos_ppm FROM r WHERE rank <= 5""".stripMargin
-
-  private val winnowOracle: String = {
-    val p = 4294967291L // must match Dedup.winnowFingerprints
-    s"""WITH lo AS (SELECT doc_id, lower(text) AS s FROM documents),
-       |cp AS (SELECT doc_id, list_transform(generate_series(1, length(s)),
-       |  i -> CAST(unicode(s[i]) AS BIGINT)) AS cps FROM lo),
-       |hs AS (SELECT doc_id, CASE WHEN len(cps) < 8 THEN []::BIGINT[] ELSE
-       |    list_transform(generate_series(1, len(cps) - 7), i ->
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT), cps[i:i+7]),
-       |        (acc, c) -> (acc * 257 + c) % $p)) END AS hashes FROM cp),
-       |fp AS (SELECT doc_id, CASE
-       |    WHEN len(hashes) = 0 THEN []::BIGINT[]
-       |    WHEN len(hashes) <= 4 THEN [list_min(hashes)]
-       |    ELSE list_distinct(list_transform(generate_series(1, len(hashes) - 3),
-       |      i -> list_min(hashes[i:i+3]))) END AS fps FROM hs)
-       |SELECT doc_id, CAST(len(fps) AS INTEGER) AS n_fps,
-       |  coalesce(list_min(fps), -1) AS min_fp FROM fp""".stripMargin
-  }
-
-  /** Shared CTE prefix replicating the SQ8 codec + compressed-domain
-    * shortlist + exact rerank (SqIndex.fit/encode/searchRerank). */
-  private val sqKnnCtes: String =
-    """q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |dims AS (SELECT CAST(generate_subscripts(embedding, 1) AS INTEGER) AS pos,
-      |  CAST(unnest(embedding) AS DOUBLE) AS e FROM b),
-      |st AS (SELECT pos, min(e) AS mn, greatest(max(e) - min(e), 1e-9) AS sc
-      |  FROM dims GROUP BY pos),
-      |codec AS (SELECT array_agg(mn ORDER BY pos) AS mns, array_agg(sc ORDER BY pos) AS scs FROM st),
-      |encb AS (SELECT vec_id, list_transform(generate_series(1, len(embedding)), i ->
-      |    least(255, greatest(0, CAST(floor((CAST(embedding[i] AS DOUBLE) - mns[i]) / scs[i] * 255 + 0.5) AS BIGINT)))) AS codes
-      |  FROM b CROSS JOIN codec),
-      |encq AS (SELECT query_id, list_transform(generate_series(1, len(embedding)), i ->
-      |    least(255, greatest(0, CAST(floor((CAST(embedding[i] AS DOUBLE) - mns[i]) / scs[i] * 255 + 0.5) AS BIGINT)))) AS q_codes
-      |  FROM q CROSS JOIN codec),
-      |appx AS (SELECT query_id, vec_id, list_sum(list_transform(generate_series(1, len(codes)),
-      |    i -> (codes[i] - q_codes[i]) * (codes[i] - q_codes[i]))) AS adist
-      |  FROM encb CROSS JOIN encq),
-      |short AS (SELECT query_id, vec_id FROM (
-      |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS r
-      |  FROM appx) WHERE r <= 50),
-      |sq_scored AS (SELECT s.query_id, s.vec_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY s.query_id
-      |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), s.vec_id) AS INTEGER) AS rank
-      |  FROM short s JOIN q ON q.query_id = s.query_id JOIN b ON b.vec_id = s.vec_id)""".stripMargin
-
-  private val sqKnnOracle: String =
-    s"WITH $sqKnnCtes\nSELECT query_id, neighbor_id, rank FROM sq_scored WHERE rank <= 10"
-
-  /** Shared CTE prefix replaying BqIndex end to end: grid quantize →
-    * per-dim floor-mean thresholds → packed 32-bit sign words → Hamming
-    * (popcount-of-xor) shortlist 100 with vec_id tie-break → exact
-    * rerank. */
-  private val bqKnnCtes: String = {
-    val quant = "list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT))"
-    def enc(src: String, idc: String): String =
-      s"""(SELECT $idc,
-         |    CAST(sum(CASE WHEN d < 32 AND e > thr THEN CAST(1 AS BIGINT) << d ELSE 0 END) AS BIGINT) AS w0,
-         |    CAST(sum(CASE WHEN d >= 32 AND e > thr THEN CAST(1 AS BIGINT) << (d - 32) ELSE 0 END) AS BIGINT) AS w1
-         |  FROM $src JOIN thr USING (d) GROUP BY $idc)""".stripMargin
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bd AS (SELECT vec_id, CAST(generate_subscripts(qv, 1) AS INTEGER) - 1 AS d, unnest(qv) AS e
-       |  FROM (SELECT vec_id, $quant AS qv FROM b)),
-       |qd AS (SELECT query_id, CAST(generate_subscripts(qv, 1) AS INTEGER) - 1 AS d, unnest(qv) AS e
-       |  FROM (SELECT query_id, $quant AS qv FROM q)),
-       |thr AS (SELECT d, (s - ((s % cnt + cnt) % cnt)) // cnt AS thr FROM
-       |  (SELECT d, sum(e) AS s, count(*) AS cnt FROM bd GROUP BY d)),
-       |encb AS ${enc("bd", "vec_id")},
-       |encq AS ${enc("qd", "query_id")},
-       |cand AS (SELECT query_id, vec_id FROM (
-       |  SELECT eq.query_id, eb.vec_id,
-       |    row_number() OVER (PARTITION BY eq.query_id
-       |      ORDER BY bit_count(xor(eb.w0, eq.w0)) + bit_count(xor(eb.w1, eq.w1)), eb.vec_id) AS rn
-       |  FROM encb eb CROSS JOIN encq eq) WHERE rn <= 100),
-       |bq_scored AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY c.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), c.vec_id) AS INTEGER) AS rank
-       |  FROM cand c JOIN b ON b.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id)""".stripMargin
-  }
-
-  private val bqKnnOracle: String =
-    s"WITH $bqKnnCtes\nSELECT query_id, neighbor_id, rank FROM bq_scored WHERE rank <= 10"
-
-  private val bqRecallOracle: String =
-    s"""WITH $bqKnnCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM bq_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val sqRecallOracle: String =
-    s"""WITH $sqKnnCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM sq_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Shared CTE prefix replicating hash-sign RP-LSH bucketing
-    * (LshIndex.signProjection/searchFast: 8 tables, bucketLength 1.0). */
-  private val lshKnnCtes: String = {
-    val dot =
-      """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(generate_series(1, 64), i -> CAST(embedding[i] AS DOUBLE) *
-        |        CASE WHEN ((((tbl * 64 + i - 1) * 2654435761) % 4294967296) >> 16) & 1 = 1
-        |             THEN 1.0 ELSE -1.0 END)), (a, x) -> a + x)""".stripMargin
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bt AS (SELECT vec_id, embedding, unnest(generate_series(0, 7)) AS tbl FROM b),
-       |bb AS (SELECT vec_id, tbl, CAST(floor($dot) AS BIGINT) AS bucket FROM bt),
-       |qt AS (SELECT query_id, embedding, unnest(generate_series(0, 7)) AS tbl FROM q),
-       |qb AS (SELECT query_id, tbl, CAST(floor($dot) AS BIGINT) AS bucket FROM qt),
-       |cand AS (SELECT DISTINCT qb.query_id, bb.vec_id
-       |  FROM qb JOIN bb ON qb.tbl = bb.tbl AND qb.bucket = bb.bucket),
-       |lsh_scored AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY c.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), c.vec_id) AS INTEGER) AS rank
-       |  FROM cand c JOIN q ON q.query_id = c.query_id JOIN b ON b.vec_id = c.vec_id)""".stripMargin
-  }
-
-  /** Shared CTE prefix replaying IvfFlat end to end: quantize → hash-pick
-    * init → 2 integer Lloyd steps (floor-div means, empty clusters keep
-    * their centroid) → assign/probe → exact rerank. Split as (training
-    * prefix through base assignment `ab` + quantized queries `qq`,
-    * full flat-search pipeline) so the IVFPQ oracle reuses the coarse
-    * training verbatim. */
-  /** IVF oracle CTE builder. `trainPred` filters which base rows TRAIN
-    * the centroids (`bt`); assignment `ab` and the search always run over
-    * the FULL base — with `trainPred = "true"` this is the plain
-    * train-on-everything pipeline, with a narrower predicate it replays
-    * the index-survives-upsert scenario (fit on the pre-insert snapshot,
-    * assign/search the post-insert one). */
-  private def ivfCtesFor(trainPred: String): (String, String) = {
-    // integer squared L2 between two 64-d BIGINT lists
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    // one Lloyd step: centroids `prev` -> assignment a_<n> -> centroids c_<n>
-    def stepSql(n: Int, prev: String): String =
-      s"""s$n AS (SELECT vec_id, qv, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |  FROM (SELECT bt.vec_id, bt.qv, c.cid, ${idist("bt.qv", "c.cvec")} AS dist FROM bt CROSS JOIN $prev c)),
-         |a$n AS (SELECT vec_id, qv, cid FROM s$n WHERE rn = 1),
-         |g$n AS (SELECT cid, pos, sum(e) AS s, count(*) AS cnt FROM
-         |  (SELECT cid, CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e FROM a$n)
-         |  GROUP BY cid, pos),
-         |m$n AS (SELECT cid, pos,
-         |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM g$n),
-         |c$n AS (SELECT cid, array_agg(c ORDER BY pos) AS cvec FROM m$n GROUP BY cid
-         |  UNION ALL SELECT cid, cvec FROM $prev WHERE cid NOT IN (SELECT cid FROM m$n))""".stripMargin
-    val quant = "list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT))"
-    val train = s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bq AS (SELECT vec_id, $quant AS qv FROM b),
-       |bt AS (SELECT vec_id, qv FROM bq WHERE $trainPred),
-       |mx AS (SELECT vec_id, qv,
-       |  (((vec_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-       |    + (vec_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mx FROM bt),
-       |init AS (SELECT CAST(row_number() OVER (ORDER BY mx, vec_id) - 1 AS INTEGER) AS cid, qv AS cvec
-       |  FROM (SELECT * FROM mx ORDER BY mx, vec_id LIMIT 8)),
-       |${stepSql(1, "init")},
-       |${stepSql(2, "c1")},
-       |ab AS (SELECT vec_id, cid FROM (
-       |  SELECT bq.vec_id, c.cid, row_number() OVER (PARTITION BY bq.vec_id ORDER BY ${idist("bq.qv", "c.cvec")}, c.cid) AS rn
-       |  FROM bq CROSS JOIN c2 c) WHERE rn = 1),
-       |qq AS (SELECT query_id, $quant AS qv FROM q)""".stripMargin
-    val search =
-      s"""probes AS (SELECT query_id, cid FROM (
-         |  SELECT qq.query_id, c.cid, row_number() OVER (PARTITION BY qq.query_id ORDER BY ${idist("qq.qv", "c.cvec")}, c.cid) AS rn
-         |  FROM qq CROSS JOIN c2 c) WHERE rn <= 6),
-         |ivf_scored AS (SELECT p.query_id, ab.vec_id AS neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY p.query_id
-         |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), ab.vec_id) AS INTEGER) AS rank
-         |  FROM probes p JOIN ab ON ab.cid = p.cid
-         |  JOIN b ON b.vec_id = ab.vec_id JOIN q ON q.query_id = p.query_id)""".stripMargin
-    (train, s"$train,\n$search")
-  }
-  private val ivfCtePieces: (String, String) = ivfCtesFor("true")
-  private def ivfTrainCtes: String = ivfCtePieces._1
-  private def ivfFlatCtes: String = ivfCtePieces._2
-
-  /** Filtered-serving scored CTE: the standard full-corpus model, the
-    * candidate join restricted to label ∈ {0,1,2} BEFORE ranking. */
-  private val ivfFilteredScoredCtes: String =
-    s"""$ivfFlatCtes,
-       |flt AS (SELECT vec_id FROM embeddings WHERE label IN (0, 1, 2)),
-       |fscored AS (SELECT p.query_id, ab.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY p.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), ab.vec_id) AS INTEGER) AS rank
-       |  FROM probes p JOIN ab ON ab.cid = p.cid
-       |  JOIN flt ON flt.vec_id = ab.vec_id
-       |  JOIN b ON b.vec_id = ab.vec_id JOIN q ON q.query_id = p.query_id)""".stripMargin
-
-  private val ivfFilteredKnnOracle: String =
-    s"WITH $ivfFilteredScoredCtes\n" +
-      "SELECT query_id, neighbor_id, rank FROM fscored WHERE rank <= 10"
-
-  private val ivfFilteredRecallOracle: String =
-    s"""WITH $ivfFilteredScoredCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b JOIN flt ON flt.vec_id = b.vec_id) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM fscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Hot-cell split replay: hot = fattest list, deterministic 2-means
-    * over ITS members (same init/Lloyd/rounding as the parent model —
-    * mirrors ivfCtesFor's stepSql with `ss`-prefixed CTE names), new
-    * cids 8/9, post-split census + imbalance. */
-  private val ivfSplitOracle: String = {
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    def step(n: Int, prev: String): String =
-      s"""ss$n AS (SELECT vec_id, qv, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |  FROM (SELECT cell.vec_id, cell.qv, c.cid, ${idist("cell.qv", "c.cvec")} AS dist FROM cell CROSS JOIN $prev c)),
-         |sa$n AS (SELECT vec_id, qv, cid FROM ss$n WHERE rn = 1),
-         |sg$n AS (SELECT cid, pos, sum(e) AS s, count(*) AS cnt FROM
-         |  (SELECT cid, CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e FROM sa$n)
-         |  GROUP BY cid, pos),
-         |sm$n AS (SELECT cid, pos,
-         |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM sg$n),
-         |sc$n AS (SELECT cid, array_agg(c ORDER BY pos) AS cvec FROM sm$n GROUP BY cid
-         |  UNION ALL SELECT cid, cvec FROM $prev WHERE cid NOT IN (SELECT cid FROM sm$n))""".stripMargin
-    s"""WITH $ivfTrainCtes,
-       |hot AS (SELECT cid FROM (SELECT cid, count(*) AS n FROM ab GROUP BY 1
-       |  ORDER BY n DESC, cid LIMIT 1)),
-       |cell AS (SELECT bq.vec_id, bq.qv FROM bq JOIN ab USING (vec_id)
-       |  WHERE ab.cid = (SELECT cid FROM hot)),
-       |smx AS (SELECT vec_id, qv,
-       |  (((vec_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-       |    + (vec_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mx FROM cell),
-       |sinit AS (SELECT CAST(row_number() OVER (ORDER BY mx, vec_id) - 1 AS INTEGER) AS cid, qv AS cvec
-       |  FROM (SELECT * FROM smx ORDER BY mx, vec_id LIMIT 2)),
-       |${step(1, "sinit")},
-       |${step(2, "sc1")},
-       |sab AS (SELECT vec_id, cid FROM (
-       |  SELECT cell.vec_id, c.cid, row_number() OVER (PARTITION BY cell.vec_id ORDER BY ${idist("cell.qv", "c.cvec")}, c.cid) AS rn
-       |  FROM cell CROSS JOIN sc2 c) WHERE rn = 1),
-       |newab AS (SELECT vec_id, cid FROM ab WHERE cid <> (SELECT cid FROM hot)
-       |  UNION ALL SELECT vec_id, cid + 8 FROM sab),
-       |sizes AS (SELECT cid, count(*) AS n_vecs FROM newab GROUP BY 1),
-       |tot AS (SELECT sum(n_vecs) AS n, sum(n_vecs * n_vecs) AS ss, count(*) AS nl FROM sizes)
-       |SELECT s.cid, s.n_vecs,
-       |  CAST((tot.nl * tot.ss * 10000) // (tot.n * tot.n) AS BIGINT) AS imbalance_bp
-       |FROM sizes s CROSS JOIN tot""".stripMargin
-  }
-
-  /** Index-survives-upsert oracle: centroids trained on the 80% pre-insert
-    * snapshot, assignment + probe + rerank over the full post-insert one. */
-  private val ivfUpsertKnnOracle: String =
-    s"WITH ${ivfCtesFor("vec_id % 5 <> 4")._2}\n" +
-      "SELECT query_id, neighbor_id, rank FROM ivf_scored WHERE rank <= 10"
-
-  /** Shared CTE prefix replaying PqFlat end to end: quantize → subvector
-    * rows → joint init → 2 joint Lloyd steps over (sub_id, cid) → encode
-    * → per-query ADC tables → shortlist 150 → exact rerank. */
-  /** PQ pipeline CTEs WITHOUT the leading q/b split — callers prepend
-    * their own `q`/`b` (plain split, or the variance-permuted views for
-    * the OPQ-lite variant). */
-  private lazy val pqFlatSearchCtes: String = {
-    def d4(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 4), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    def stepSql(n: Int, prev: String): String =
-      s"""ps$n AS (SELECT vec_id, sub_id, sv, cid, dist,
-         |    row_number() OVER (PARTITION BY vec_id, sub_id ORDER BY dist, cid) AS rn
-         |  FROM (SELECT sr.vec_id, sr.sub_id, sr.sv, c.cid, ${d4("sr.sv", "c.cvec")} AS dist
-         |        FROM sr JOIN $prev c ON c.sub_id = sr.sub_id)),
-         |pa$n AS (SELECT vec_id, sub_id, sv, cid FROM ps$n WHERE rn = 1),
-         |pg$n AS (SELECT sub_id, cid, pos, sum(e) AS s, count(*) AS cnt FROM
-         |  (SELECT sub_id, cid, CAST(generate_subscripts(sv, 1) AS INTEGER) AS pos, unnest(sv) AS e FROM pa$n)
-         |  GROUP BY sub_id, cid, pos),
-         |pm$n AS (SELECT sub_id, cid, pos,
-         |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM pg$n),
-         |pc$n AS (SELECT sub_id, cid, array_agg(c ORDER BY pos) AS cvec FROM pm$n GROUP BY sub_id, cid
-         |  UNION ALL SELECT p.sub_id, p.cid, p.cvec FROM $prev p
-         |    LEFT JOIN (SELECT DISTINCT sub_id AS su, cid AS cu FROM pg$n) u
-         |      ON u.su = p.sub_id AND u.cu = p.cid WHERE u.cu IS NULL)""".stripMargin
-    val quant = "list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT))"
-    s"""bq AS (SELECT vec_id, $quant AS qv FROM b),
-       |sr0 AS (SELECT vec_id, qv, unnest(generate_series(0, 15)) AS sub_id FROM bq),
-       |sr AS (SELECT vec_id, sub_id, qv[sub_id*4+1 : sub_id*4+4] AS sv FROM sr0),
-       |pmx AS (SELECT vec_id,
-       |  (((vec_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-       |    + (vec_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mx FROM bq),
-       |seeds AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY mx, vec_id) - 1 AS INTEGER) AS cid
-       |  FROM (SELECT * FROM pmx ORDER BY mx, vec_id LIMIT 32)),
-       |pinit AS (SELECT sr.sub_id, seeds.cid, sr.sv AS cvec FROM sr JOIN seeds USING (vec_id)),
-       |${stepSql(1, "pinit")},
-       |${stepSql(2, "pc1")},
-       |enc AS (SELECT vec_id, sub_id, cid AS code FROM (
-       |  SELECT sr.vec_id, sr.sub_id, c.cid,
-       |    row_number() OVER (PARTITION BY sr.vec_id, sr.sub_id ORDER BY ${d4("sr.sv", "c.cvec")}, c.cid) AS rn
-       |  FROM sr JOIN pc2 c ON c.sub_id = sr.sub_id) WHERE rn = 1),
-       |qq AS (SELECT query_id, $quant AS qv FROM q),
-       |qsr0 AS (SELECT query_id, qv, unnest(generate_series(0, 15)) AS sub_id FROM qq),
-       |qsr AS (SELECT query_id, sub_id, qv[sub_id*4+1 : sub_id*4+4] AS sv FROM qsr0),
-       |qtab AS (SELECT qsr.query_id, qsr.sub_id, c.cid AS code, ${d4("qsr.sv", "c.cvec")} AS qdist
-       |  FROM qsr JOIN pc2 c ON c.sub_id = qsr.sub_id),
-       |adc AS (SELECT qtab.query_id, enc.vec_id, sum(qdist) AS adist
-       |  FROM enc JOIN qtab ON qtab.sub_id = enc.sub_id AND qtab.code = enc.code
-       |  GROUP BY 1, 2),
-       |pshort AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rn
-       |  FROM adc) WHERE rn <= 150),
-       |pq_scored AS (SELECT s.query_id, s.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY s.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), s.vec_id) AS INTEGER) AS rank
-       |  FROM pshort s JOIN q ON q.query_id = s.query_id JOIN b ON b.vec_id = s.vec_id)""".stripMargin
-  }
-
-  private val pqFlatKnnOracle: String =
-    s"WITH $pqFlatCtes\nSELECT query_id, neighbor_id, rank FROM pq_scored WHERE rank <= 10"
-
-  /** The plain (contiguous-dims) PQ CTE chain — q/b split + search. */
-  private lazy val pqFlatCtes: String =
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |$pqFlatSearchCtes""".stripMargin
-
-  /** Variance-permuted PQ chain: dispersion ranks → snake permutation →
-    * q/b REDEFINED as permuted views → the identical search pipeline.
-    * `pos` from generate_subscripts is 1-based, which is exactly what
-    * list_select wants; the Scala side's 0-based perm selects the same
-    * source dims in the same order. */
-  private lazy val pqPermCtes: String = {
-    val quant = "list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT))"
-    s"""q0 AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |pel0 AS (SELECT CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e
-       |  FROM (SELECT $quant AS qv FROM b0)),
-       |pel AS (SELECT pos, (e - ((e % 256 + 256) % 256)) // 256 AS y FROM pel0),
-       |pst AS (SELECT pos, count(*) AS n, sum(y) AS s1, sum(y*y) AS s2 FROM pel GROUP BY 1),
-       |prk AS (SELECT pos, row_number() OVER (ORDER BY n*s2 - s1*s1 DESC, pos) - 1 AS r FROM pst),
-       |psb AS (SELECT pos, r // 16 AS rnd,
-       |  CASE WHEN (r // 16) % 2 = 0 THEN r % 16 ELSE 15 - (r % 16) END AS sub FROM prk),
-       |permc AS (SELECT list(pos ORDER BY sub, rnd) AS p FROM psb),
-       |q AS (SELECT query_id, list_select(embedding, (SELECT p FROM permc)) AS embedding FROM q0),
-       |b AS (SELECT vec_id, list_select(embedding, (SELECT p FROM permc)) AS embedding FROM b0),
-       |$pqFlatSearchCtes""".stripMargin
-  }
-
-  private lazy val pqPermKnnOracle: String =
-    s"WITH $pqPermCtes\nSELECT query_id, neighbor_id, rank FROM pq_scored WHERE rank <= 10"
-
-  private lazy val pqPermRecallOracle: String =
-    s"""WITH $pqPermCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q0.query_id, b0.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q0.query_id
-       |      ORDER BY list_distance(CAST(q0.embedding AS DOUBLE[]), CAST(b0.embedding AS DOUBLE[])), b0.vec_id) AS rank
-       |  FROM q0 CROSS JOIN b0) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM pq_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val pqFlatRecallOracle: String =
-    s"""WITH $pqFlatCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM pq_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val ivfFlatKnnOracle: String =
-    s"WITH $ivfFlatCtes\nSELECT query_id, neighbor_id, rank FROM ivf_scored WHERE rank <= 10"
-
-  private val ivfFlatRecallOracle: String =
-    s"""WITH $ivfFlatCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM ivf_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** IVFPQ replay (graft.index.IvfPq): the coarse-IVF training prefix
-    * verbatim, then residuals (grid vector − assigned centroid), the
-    * joint residual-codebook Lloyd (2 steps, floor-div means), encoding,
-    * per-(query, probed-cell) ADC tables, shortlist 250, exact rerank. */
-  private val ivfPqCtes: String = {
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    def d4(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 4), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    def stepSql(n: Int, prev: String): String =
-      s"""vps$n AS (SELECT vec_id, sub_id, sv, cid, dist,
-         |    row_number() OVER (PARTITION BY vec_id, sub_id ORDER BY dist, cid) AS rn
-         |  FROM (SELECT sr.vec_id, sr.sub_id, sr.sv, c.cid, ${d4("sr.sv", "c.cvec")} AS dist
-         |        FROM rsr sr JOIN $prev c ON c.sub_id = sr.sub_id)),
-         |vpa$n AS (SELECT vec_id, sub_id, sv, cid FROM vps$n WHERE rn = 1),
-         |vpg$n AS (SELECT sub_id, cid, pos, sum(e) AS s, count(*) AS cnt FROM
-         |  (SELECT sub_id, cid, CAST(generate_subscripts(sv, 1) AS INTEGER) AS pos, unnest(sv) AS e FROM vpa$n)
-         |  GROUP BY sub_id, cid, pos),
-         |vpm$n AS (SELECT sub_id, cid, pos,
-         |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM vpg$n),
-         |vpc$n AS (SELECT sub_id, cid, array_agg(c ORDER BY pos) AS cvec FROM vpm$n GROUP BY sub_id, cid
-         |  UNION ALL SELECT p.sub_id, p.cid, p.cvec FROM $prev p
-         |    LEFT JOIN (SELECT DISTINCT sub_id AS su, cid AS cu FROM vpg$n) u
-         |      ON u.su = p.sub_id AND u.cu = p.cid WHERE u.cu IS NULL)""".stripMargin
-    s"""$ivfTrainCtes,
-       |rres AS (SELECT bq.vec_id, list_transform(generate_series(1, 64), ii -> bq.qv[ii] - c.cvec[ii]) AS rv
-       |  FROM bq JOIN ab ON ab.vec_id = bq.vec_id JOIN c2 c ON c.cid = ab.cid),
-       |rsr0 AS (SELECT vec_id, rv, unnest(generate_series(0, 15)) AS sub_id FROM rres),
-       |rsr AS (SELECT vec_id, sub_id, rv[sub_id*4+1 : sub_id*4+4] AS sv FROM rsr0),
-       |vmx AS (SELECT vec_id,
-       |  (((vec_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-       |    + (vec_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mx FROM bq),
-       |vseeds AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY mx, vec_id) - 1 AS INTEGER) AS cid
-       |  FROM (SELECT * FROM vmx ORDER BY mx, vec_id LIMIT 32)),
-       |vinit AS (SELECT rsr.sub_id, vseeds.cid, rsr.sv AS cvec FROM rsr JOIN vseeds ON vseeds.vec_id = rsr.vec_id),
-       |${stepSql(1, "vinit")},
-       |${stepSql(2, "vpc1")},
-       |venc AS (SELECT vec_id, sub_id, cid AS code FROM (
-       |  SELECT rsr.vec_id, rsr.sub_id, c.cid,
-       |    row_number() OVER (PARTITION BY rsr.vec_id, rsr.sub_id ORDER BY ${d4("rsr.sv", "c.cvec")}, c.cid) AS rn
-       |  FROM rsr JOIN vpc2 c ON c.sub_id = rsr.sub_id) WHERE rn = 1),
-       |vprobes AS (SELECT query_id, cid FROM (
-       |  SELECT qq.query_id, c.cid, row_number() OVER (PARTITION BY qq.query_id ORDER BY ${idist("qq.qv", "c.cvec")}, c.cid) AS rn
-       |  FROM qq CROSS JOIN c2 c) WHERE rn <= 7),
-       |vqres AS (SELECT p.query_id, p.cid AS icid,
-       |    list_transform(generate_series(1, 64), ii -> qq.qv[ii] - c.cvec[ii]) AS rv
-       |  FROM vprobes p JOIN qq ON qq.query_id = p.query_id JOIN c2 c ON c.cid = p.cid),
-       |vqsr0 AS (SELECT query_id, icid, rv, unnest(generate_series(0, 15)) AS sub_id FROM vqres),
-       |vqsr AS (SELECT query_id, icid, sub_id, rv[sub_id*4+1 : sub_id*4+4] AS sv FROM vqsr0),
-       |vqtab AS (SELECT query_id, icid, sr.sub_id, c.cid AS code, ${d4("sr.sv", "c.cvec")} AS qdist
-       |  FROM vqsr sr JOIN vpc2 c ON c.sub_id = sr.sub_id),
-       |vadc AS (SELECT t.query_id, e.vec_id, sum(t.qdist) AS adist
-       |  FROM venc e JOIN ab ON ab.vec_id = e.vec_id
-       |  JOIN vqtab t ON t.icid = ab.cid AND t.sub_id = e.sub_id AND t.code = e.code
-       |  GROUP BY 1, 2),
-       |vshort AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rn
-       |  FROM vadc) WHERE rn <= 250),
-       |ivfpq_scored AS (SELECT s.query_id, s.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY s.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), s.vec_id) AS INTEGER) AS rank
-       |  FROM vshort s JOIN q ON q.query_id = s.query_id JOIN b ON b.vec_id = s.vec_id)""".stripMargin
-  }
-
-  private val ivfPqKnnOracle: String =
-    s"WITH $ivfPqCtes\nSELECT query_id, neighbor_id, rank FROM ivfpq_scored WHERE rank <= 10"
-
-  private val ivfPqRecallOracle: String =
-    s"""WITH $ivfPqCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM ivfpq_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Prefix-rerank replay: 32-dim first pass (ordering by L2 on the
-    * sliced vectors, ties by vec_id), shortlist 200, exact full-dim
-    * rerank. */
-  private val prefixCtes: String =
-    """q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |pshortp AS (SELECT query_id, vec_id FROM (
-      |  SELECT q.query_id, b.vec_id,
-      |    row_number() OVER (PARTITION BY q.query_id
-      |      ORDER BY list_distance(CAST(q.embedding[1:32] AS DOUBLE[]), CAST(b.embedding[1:32] AS DOUBLE[])), b.vec_id) AS rn
-      |  FROM q CROSS JOIN b) WHERE rn <= 200),
-      |prefix_scored AS (SELECT s.query_id, s.vec_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY s.query_id
-      |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), s.vec_id) AS INTEGER) AS rank
-      |  FROM pshortp s JOIN q ON q.query_id = s.query_id JOIN b ON b.vec_id = s.vec_id)""".stripMargin
-
-  private val prefixKnnOracle: String =
-    s"WITH $prefixCtes\nSELECT query_id, neighbor_id, rank FROM prefix_scored WHERE rank <= 10"
-
-  private val prefixRecallOracle: String =
-    s"""WITH $prefixCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM prefix_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val lshKnnOracle: String =
-    s"WITH $lshKnnCtes\nSELECT query_id, neighbor_id, rank FROM lsh_scored WHERE rank <= 10"
-
-  private val lshRecallOracle: String =
-    s"""WITH $lshKnnCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM lsh_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val piiRedactOracle: String = {
-    import graft.text.Curation.{EmailRe, LongNumRe}
-    s"""SELECT doc_id,
-       |  CAST(len(regexp_extract_all(text, '$EmailRe')) AS INTEGER) AS n_emails,
-       |  CAST(len(regexp_extract_all(text, '$LongNumRe')) AS INTEGER) AS n_long_numbers,
-       |  md5(regexp_replace(regexp_replace(text, '$EmailRe', '<EMAIL>', 'g'),
-       |      '$LongNumRe', '<NUM>', 'g')) AS redacted_fp
-       |FROM documents""".stripMargin
-  }
-
-  private val docChunksOracle: String =
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-      |s AS (SELECT doc_id, toks, n,
-      |  CASE WHEN n <= 128 THEN 0 ELSE ((n - 128 + 63) // 64) * 64 END AS smax FROM n),
-      |c AS (SELECT doc_id, toks, unnest(generate_series(0, smax, 64)) AS start FROM s)
-      |SELECT doc_id, CAST(start // 64 AS INTEGER) AS chunk_idx,
-      |  CAST(len(toks[start+1 : start+128]) AS INTEGER) AS n_chunk_tokens,
-      |  md5(array_to_string(toks[start+1 : start+128], ' ')) AS chunk_fp
-      |FROM c""".stripMargin
-
-  private val repetitionOracle: String =
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-      |tok AS (SELECT doc_id, n, unnest(toks) AS tok FROM n),
-      |tc AS (SELECT doc_id, n, tok, count(*) AS c FROM tok GROUP BY 1, 2, 3),
-      |tt AS (SELECT doc_id, n, max(c) AS top_tok FROM tc GROUP BY 1, 2),
-      |bg AS (SELECT doc_id, unnest([array_to_string(toks[i:i+1], ' ')
-      |  for i in generate_series(1, greatest(len(toks) - 1, 1))]) AS big FROM t),
-      |bc AS (SELECT doc_id, big, count(*) AS c FROM bg GROUP BY 1, 2),
-      |tb AS (SELECT doc_id, max(c) AS top_big FROM bc GROUP BY 1)
-      |SELECT doc_id,
-      |  (top_tok * 10000) // n AS top_token_bp,
-      |  (top_big * 10000) // greatest(n - 1, 1) AS top_bigram_bp,
-      |  ((top_tok * 10000) // n < 2000
-      |   AND (top_big * 10000) // greatest(n - 1, 1) < 1800) AS pass
-      |FROM tt JOIN tb USING (doc_id)""".stripMargin
-
-  private val contaminationOracle: String =
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-      |shs AS (SELECT doc_id, (doc_id % 20 = 7) AS is_bench,
-      |  list_distinct([array_to_string(toks[i:i+7], ' ')
-      |    for i in generate_series(1, greatest(len(toks) - 7, 1))]) AS sh FROM t),
-      |bench AS (SELECT doc_id AS bench_id, unnest(sh) AS g FROM shs WHERE is_bench),
-      |train AS (SELECT doc_id AS train_id, unnest(sh) AS g FROM shs WHERE NOT is_bench),
-      |hits AS (SELECT bench_id, count(DISTINCT train_id) AS n_contaminated
-      |  FROM bench JOIN train USING (g) GROUP BY 1)
-      |SELECT s.doc_id AS bench_id, coalesce(h.n_contaminated, 0) AS n_contaminated
-      |FROM shs s LEFT JOIN hits h ON h.bench_id = s.doc_id WHERE s.is_bench""".stripMargin
-
-  private val domainMixOracle: String =
-    """WITH h AS (SELECT doc_id, lang, source, doc_id % 4294967296 AS a FROM documents),
-      |m AS (SELECT doc_id, lang, source,
-      |  (((a >> 16) * 2654435761) % 65536 * 65536 + (a & 65535) * 2654435761)
-      |    % 4294967296 % 1000000 AS bucket FROM h),
-      |r AS (SELECT lang, source, doc_id,
-      |  row_number() OVER (PARTITION BY lang, source ORDER BY bucket, doc_id) AS rn FROM m)
-      |SELECT lang, source, count(*) AS n_total,
-      |  CAST(sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      |  CAST(sum(CASE WHEN rn <= 5 THEN doc_id ELSE 0 END) AS BIGINT) AS kept_id_sum
-      |FROM r GROUP BY 1, 2""".stripMargin
-
-  /** Exact-graph replay prefix: query/base splits + the degree-16 exact
-    * k-NN adjacency (self excluded, ties by id). */
-  private val graphBaseCtes: String =
-    """q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |gadj AS MATERIALIZED (SELECT node_id, neighbor_id, rank FROM (
-      |  SELECT a.vec_id AS node_id, c.vec_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_distance(CAST(a.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS INTEGER) AS rank
-      |  FROM b a CROSS JOIN b c WHERE c.vec_id <> a.vec_id) WHERE rank <= 16)""".stripMargin
-
-  /** Beam-search replay over adjacency CTE `adjCte` (CTE names prefixed
-    * with `p` so exact and NN-Descent variants stay disjoint): entry
-    * seeding (vec_id % 16 = 0, top-8), then 3 rounds of
-    * expand-score-prune (beam 32), exact rerank over everything visited
-    * — the same batched beam as [[graft.index.GraphIndex.search]]. */
-  private def beamSearchCtes(adjCte: String, p: String,
-      qCte: String = "q", bCte: String = "b", beam: Int = 32,
-      cosine: Boolean = false): String = {
-    val qdist =
-      if (cosine) "-list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-      else "list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-    val seedDist =
-      if (cosine) "-list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))"
-      else "list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))"
-    val hops = 3
-    val sb = new StringBuilder
-    sb.append(
-      s"""${p}beam0 AS MATERIALIZED (SELECT query_id, vec_id FROM (
-         |  SELECT q.query_id, e.vec_id,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY $seedDist, e.vec_id) AS rn
-         |  FROM $qCte q CROSS JOIN $bCte e WHERE e.vec_id % 16 = 0) WHERE rn <= 8),
-         |${p}vis0 AS MATERIALIZED (SELECT query_id, vec_id FROM ${p}beam0)""")
-    for (h <- 1 to hops) {
-      sb.append(
-        s""",
-           |${p}cand$h AS MATERIALIZED (SELECT DISTINCT query_id, vec_id FROM (
-           |  SELECT query_id, vec_id FROM ${p}beam${h - 1}
-           |  UNION ALL SELECT s.query_id, g.neighbor_id AS vec_id
-           |    FROM ${p}beam${h - 1} s JOIN $adjCte g ON g.node_id = s.vec_id)),
-           |${p}beam$h AS MATERIALIZED (SELECT query_id, vec_id FROM (
-           |  SELECT c.query_id, c.vec_id,
-           |    row_number() OVER (PARTITION BY c.query_id
-           |      ORDER BY $qdist, c.vec_id) AS rn
-           |  FROM ${p}cand$h c JOIN $qCte q USING (query_id)
-           |    JOIN $bCte b ON b.vec_id = c.vec_id) WHERE rn <= $beam),
-           |${p}vis$h AS MATERIALIZED (SELECT query_id, vec_id FROM ${p}vis${h - 1}
-           |  UNION SELECT query_id, vec_id FROM ${p}cand$h)""")
-    }
-    sb.append(
-      s""",
-         |${p}scored AS MATERIALIZED (SELECT c.query_id, c.vec_id AS neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY $qdist, c.vec_id) AS INTEGER) AS rank
-         |  FROM ${p}vis$hops c JOIN $qCte q USING (query_id)
-         |    JOIN $bCte b ON b.vec_id = c.vec_id)""")
-    sb.toString
-  }
-
-  /** Unit-normalize SQL twin of [[unitVectors]]: norm = sqrt of DuckDB's
-    * list_inner_product (verified the same left-to-right double fold as
-    * the [[graft.functions.DotProduct]] kernel), then the per-element
-    * division — the oracle side of the normalize-once + dot-rank
-    * adjacency plan. */
-  private def sqlUnit(v: String): String =
-    s"list_transform($v, x -> CAST(CAST(x / sqrt(list_inner_product($v, $v)) AS REAL) AS DOUBLE))"
-
-  /** Cosine-DESC degree-`deg` adjacency CTE body over pre-normalized
-    * vectors `src(vec_id, nv)`: dot rank == cosine rank on unit vectors,
-    * ties by id — replays [[cosineAdjacency]] exactly. */
-  private def sqlUnitAdj(src: String, deg: Int): String =
-    s"""(SELECT node_id, neighbor_id FROM (
-       |  SELECT a.vec_id AS node_id, c.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY a.vec_id
-       |      ORDER BY -list_inner_product(a.nv, c.nv), c.vec_id) AS rank
-       |  FROM $src a CROSS JOIN $src c WHERE c.vec_id <> a.vec_id) WHERE rank <= $deg)""".stripMargin
-
-  /** q/b split + cosine degree-16 adjacency (the hubness family's raw
-    * variant, reused by the cosine serving oracles). */
-  private val cosGraphBaseCtes: String =
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-       |cosadj AS MATERIALIZED ${sqlUnitAdj("bn", 16)}""".stripMargin
-
-  private val graphCosineKnnOracle: String =
-    (s"""WITH $cosGraphBaseCtes,
-        |${beamSearchCtes("cosadj", "gc", cosine = true)}
-        |SELECT query_id, neighbor_id, rank FROM gcscored WHERE rank <= 10""").stripMargin
-
-  private val graphCosineRecallOracle: String =
-    s"""WITH $cosGraphBaseCtes,
-       |${beamSearchCtes("cosadj", "gc", cosine = true)},
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM gcscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val graphAdjOracle: String =
-    s"WITH $graphBaseCtes\nSELECT node_id, neighbor_id, rank FROM gadj"
-
-  private val graphKnnOracle: String =
-    (s"""WITH $graphBaseCtes,
-        |${beamSearchCtes("gadj", "g")}
-        |SELECT query_id, neighbor_id, rank FROM gscored WHERE rank <= 10""").stripMargin
-
-  /** Cell-blocked adjacency replay: the IVF training prefix verbatim,
-    * 3-nearest-cell multi-assignment, per-cell DISTINCT candidate
-    * pairs, float rerank to degree 16 (the heap's (dist, id) dedup on
-    * the Spark side ≡ the DISTINCT here). */
-  private lazy val cellAdjCtes: String = {
-    def idist(a: String, b: String): String =
-      s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-    s"""$ivfTrainCtes,
-       |cba AS MATERIALIZED (SELECT vec_id, cid FROM (
-       |  SELECT bq.vec_id, c.cid, row_number() OVER (PARTITION BY bq.vec_id
-       |    ORDER BY ${idist("bq.qv", "c.cvec")}, c.cid) AS rn
-       |  FROM bq CROSS JOIN c2 c) WHERE rn <= 3),
-       |cadj AS MATERIALIZED (SELECT node_id, neighbor_id, rank FROM (
-       |  SELECT p.node_id, p.cand_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY p.node_id
-       |      ORDER BY list_distance(CAST(ba.embedding AS DOUBLE[]), CAST(bb.embedding AS DOUBLE[])), p.cand_id) AS INTEGER) AS rank
-       |  FROM (SELECT DISTINCT a.vec_id AS node_id, b2.vec_id AS cand_id
-       |        FROM cba a JOIN cba b2 USING (cid) WHERE a.vec_id <> b2.vec_id) p
-       |  JOIN b ba ON ba.vec_id = p.node_id
-       |  JOIN b bb ON bb.vec_id = p.cand_id) WHERE rank <= 16)""".stripMargin
-  }
-
-  private lazy val cellBlockedQualityOracle: String =
-    s"""WITH $cellAdjCtes,
-       |xadj AS MATERIALIZED (SELECT node_id, neighbor_id FROM (
-       |  SELECT a.vec_id AS node_id, c.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY a.vec_id
-       |      ORDER BY list_distance(CAST(a.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rank
-       |  FROM b a CROSS JOIN b c WHERE c.vec_id <> a.vec_id) WHERE rank <= 16),
-       |he AS (SELECT count(*) AS n_hits FROM xadj
-       |  JOIN (SELECT node_id, neighbor_id FROM cadj) ca USING (node_id, neighbor_id)),
-       |te AS (SELECT count(*) AS n_exact FROM xadj),
-       |tb AS (SELECT count(*) AS n_blocked FROM cadj)
-       |SELECT CAST(n_exact AS BIGINT) AS n_exact,
-       |  CAST(n_blocked AS BIGINT) AS n_blocked,
-       |  CAST((n_hits * 10000) // n_exact AS BIGINT) AS edge_recall_bp
-       |FROM te CROSS JOIN tb CROSS JOIN he""".stripMargin
-
-  private lazy val cellBlockedKnnOracle: String =
-    s"""WITH $cellAdjCtes,
-       |${beamSearchCtes("cadj", "cb")}
-       |SELECT query_id, neighbor_id, rank FROM cbscored WHERE rank <= 10""".stripMargin
-
-  private lazy val cellBlockedRecallOracle: String =
-    s"""WITH $cellAdjCtes,
-       |${beamSearchCtes("cadj", "cb")},
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM cbscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Filtered-graph serving replay: the full beam CTEs verbatim, then
-    * the allowed-set semi join + re-rank (rank order preserved — the
-    * unfiltered rank is already distance-ordered). */
-  private lazy val graphFilteredKnnOracle: String =
-    s"""WITH $graphBaseCtes,
-       |${beamSearchCtes("gadj", "gf", beam = 96)},
-       |flt AS (SELECT vec_id FROM embeddings WHERE label IN (0, 1, 2)),
-       |ff AS (SELECT s.query_id, s.neighbor_id, s.rank AS orank
-       |  FROM gfscored s JOIN flt f ON f.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, rank FROM (
-       |  SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY orank) AS INTEGER) AS rank
-       |  FROM ff) WHERE rank <= 10""".stripMargin
-
-  private lazy val graphFilteredRecallOracle: String =
-    s"""WITH $graphBaseCtes,
-       |${beamSearchCtes("gadj", "gf", beam = 96)},
-       |flt AS (SELECT vec_id FROM embeddings WHERE label IN (0, 1, 2)),
-       |ff AS (SELECT s.query_id, s.neighbor_id, s.rank AS orank
-       |  FROM gfscored s JOIN flt f ON f.vec_id = s.neighbor_id),
-       |pr AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY orank) AS rn
-       |  FROM ff) WHERE rn <= 10),
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b JOIN flt ON flt.vec_id = b.vec_id) WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val graphRecallOracle: String =
-    s"""WITH $graphBaseCtes,
-       |${beamSearchCtes("gadj", "g")},
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM gscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** NN-Descent replay core (assumes a CTE `b(vec_id, embedding)` is in
-    * scope): per-edge hashed init (neighbor j of rank r = rank
-    * mix32(r·31+j) mod n), then 3 rounds of undirected 1-hop ∪ 2-hop
-    * expansion + exact re-rank — the same deterministic pipeline as
-    * [[graft.index.GraphIndex.buildNNDescent]]. */
-  private def nndCteCoreFor(bCte: String): String = {
-    def dist(x: String, y: String): String =
-      s"list_distance(CAST($x.embedding AS DOUBLE[]), CAST($y.embedding AS DOUBLE[]))"
-    // wrap-safe Knuth mix of expression v, mod 2^32 (Sampling.idBucket scheme)
-    def mix32(v: String): String =
-      s"((($v) % 4294967296 >> 16) * 2654435761 % 65536 * 65536 + (($v) % 65536) * 2654435761) % 4294967296"
-    def round(n: Int, prev: String, last: Boolean): String = {
-      val sel =
-        if (last) "node_id, neighbor_id, CAST(rn AS INTEGER) AS rank"
-        else "node_id, neighbor_id"
-      s"""und$n AS MATERIALIZED (SELECT DISTINCT node_id, neighbor_id FROM (
-         |  SELECT node_id, neighbor_id FROM $prev
-         |  UNION ALL SELECT neighbor_id, node_id FROM $prev)),
-         |cand$n AS MATERIALIZED (SELECT DISTINCT node_id, neighbor_id FROM (
-         |  SELECT node_id, neighbor_id FROM und$n
-         |  UNION ALL SELECT u1.node_id, u2.neighbor_id
-         |    FROM und$n u1 JOIN und$n u2 ON u1.neighbor_id = u2.node_id)
-         |  WHERE node_id <> neighbor_id),
-         |nnd$n AS MATERIALIZED (SELECT $sel FROM (
-         |  SELECT t.node_id, t.neighbor_id,
-         |    row_number() OVER (PARTITION BY t.node_id
-         |      ORDER BY ${dist("x", "y")}, t.neighbor_id) AS rn
-         |  FROM cand$n t JOIN $bCte x ON x.vec_id = t.node_id
-         |    JOIN $bCte y ON y.vec_id = t.neighbor_id) WHERE rn <= 16)"""
-    }
-    s"""bn AS MATERIALIZED (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM $bCte),
-       |nt AS MATERIALIZED (SELECT count(*) AS n FROM $bCte),
-       |e0 AS MATERIALIZED (SELECT DISTINCT a_rn, b_rn FROM (
-       |  SELECT a.rn AS a_rn, ${mix32("a.rn * 31 + js.j")} % nt.n AS b_rn
-       |  FROM bn a CROSS JOIN nt
-       |  CROSS JOIN (SELECT unnest(generate_series(1, 16)) AS j) js)
-       |  WHERE a_rn <> b_rn),
-       |nnd0 AS MATERIALIZED (SELECT x.vec_id AS node_id, y.vec_id AS neighbor_id
-       |  FROM e0 JOIN bn x ON x.rn = e0.a_rn JOIN bn y ON y.rn = e0.b_rn),
-       |${round(1, "nnd0", last = false)},
-       |${round(2, "nnd1", last = false)},
-       |${round(3, "nnd2", last = true)}"""
-  }
-
-  private val nndCteCore: String = nndCteCoreFor("b")
-
-  private val nndAdjOracle: String =
-    s"""WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |$nndCteCore
-       |SELECT node_id, neighbor_id, rank FROM nnd3""".stripMargin
-
-  /** Edge recall of the approximate graph vs the exact one — reuses the
-    * exact-graph CTEs (gadj) plus the NN-Descent core. */
-  private val nndQualityOracle: String =
-    s"""WITH $graphBaseCtes,
-       |$nndCteCore,
-       |hits AS (SELECT count(*) AS n_hits
-       |  FROM gadj g JOIN nnd3 n ON g.node_id = n.node_id AND g.neighbor_id = n.neighbor_id),
-       |total AS (SELECT count(*) AS n_total FROM gadj)
-       |SELECT (n_hits * 10000) // n_total AS overlap_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Beam search over the NN-Descent adjacency — [[beamSearchCtes]] with
-    * nnd3 as the graph. */
-  private val nndSearchCtes: String =
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |$nndCteCore,
-       |${beamSearchCtes("nnd3", "n")}""".stripMargin
-
-  private val nndKnnOracle: String =
-    s"WITH $nndSearchCtes\nSELECT query_id, neighbor_id, rank FROM nscored WHERE rank <= 10"
-
-  private val nndRecallOracle: String =
-    s"""WITH $nndSearchCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM nscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Incremental-insert replay: NN-Descent on the 80% snapshot, beam
-    * insertion of the 20% (out-edges = best 16 of the visited set),
-    * reverse edges, exact re-prune per touched node, beam search over
-    * the augmented graph. */
-  private val graphUpsertCtes: String = {
-    val edist = "list_distance(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[]))"
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bpre AS MATERIALIZED (SELECT vec_id, embedding FROM b WHERE vec_id % 5 <> 4),
-       |bins AS MATERIALIZED (SELECT vec_id AS query_id, embedding FROM b WHERE vec_id % 5 = 4),
-       |${nndCteCoreFor("bpre")},
-       |${beamSearchCtes("nnd3", "i", qCte = "bins", bCte = "bpre")},
-       |newe AS MATERIALIZED (SELECT query_id AS node_id, neighbor_id
-       |  FROM iscored WHERE rank <= 16),
-       |alle AS MATERIALIZED (SELECT DISTINCT node_id, neighbor_id FROM (
-       |  SELECT node_id, neighbor_id FROM nnd3
-       |  UNION ALL SELECT node_id, neighbor_id FROM newe
-       |  UNION ALL SELECT neighbor_id AS node_id, node_id AS neighbor_id FROM newe)),
-       |gaug AS MATERIALIZED (SELECT node_id, neighbor_id FROM (
-       |  SELECT e.node_id, e.neighbor_id,
-       |    row_number() OVER (PARTITION BY e.node_id
-       |      ORDER BY $edist, e.neighbor_id) AS rn
-       |  FROM alle e JOIN b x ON x.vec_id = e.node_id
-       |    JOIN b y ON y.vec_id = e.neighbor_id) WHERE rn <= 16),
-       |${beamSearchCtes("gaug", "u")}"""
-  }
-
-  /** Delete-phase replay: full-base NN-Descent graph, edges touching
-    * deleted nodes filtered out, beam search over the surviving base. */
-  private val graphDeleteCtes: String =
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bpre AS MATERIALIZED (SELECT vec_id, embedding FROM b WHERE vec_id % 5 <> 4),
-       |$nndCteCore,
-       |adjdel AS MATERIALIZED (SELECT node_id, neighbor_id FROM nnd3
-       |  WHERE node_id % 5 <> 4 AND neighbor_id % 5 <> 4),
-       |${beamSearchCtes("adjdel", "d", qCte = "q", bCte = "bpre")}"""
-
-  private val graphDeleteKnnOracle: String =
-    (s"""WITH $graphDeleteCtes
-        |SELECT query_id, neighbor_id, rank FROM dscored WHERE rank <= 10""").stripMargin
-
-  private val graphDeleteRecallOracle: String =
-    s"""WITH $graphDeleteCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN bpre b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM dscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  private val graphUpsertKnnOracle: String =
-    (s"""WITH $graphUpsertCtes
-        |SELECT query_id, neighbor_id, rank FROM uscored WHERE rank <= 10""").stripMargin
-
-  private val graphUpsertRecallOracle: String =
-    s"""WITH $graphUpsertCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM uscored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** Multi-probe RP-LSH replay: 4 tables, query side probes buckets
-    * {0, +1, −1} — same hash-sign projection arithmetic as [[lshKnnCtes]]. */
-  private val lshMpCtes: String = {
-    val dot =
-      """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(generate_series(1, 64), i -> CAST(embedding[i] AS DOUBLE) *
-        |        CASE WHEN ((((tbl * 64 + i - 1) * 2654435761) % 4294967296) >> 16) & 1 = 1
-        |             THEN 1.0 ELSE -1.0 END)), (a, x) -> a + x)""".stripMargin
-    s"""q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-       |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-       |bt AS (SELECT vec_id, embedding, unnest(generate_series(0, 3)) AS tbl FROM b),
-       |bb AS (SELECT vec_id, tbl, CAST(floor($dot) AS BIGINT) AS bucket FROM bt),
-       |qt AS (SELECT query_id, embedding, unnest(generate_series(0, 3)) AS tbl FROM q),
-       |qb AS (SELECT query_id, tbl, CAST(floor($dot) AS BIGINT) AS bucket FROM qt),
-       |qo AS (SELECT query_id, tbl, bucket + off AS bucket
-       |  FROM qb CROSS JOIN (SELECT unnest([0, 1, -1]) AS off) offs),
-       |mp_cand AS (SELECT DISTINCT qo.query_id, bb.vec_id
-       |  FROM qo JOIN bb ON qo.tbl = bb.tbl AND qo.bucket = bb.bucket),
-       |mp_scored AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY c.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), c.vec_id) AS INTEGER) AS rank
-       |  FROM mp_cand c JOIN q ON q.query_id = c.query_id JOIN b ON b.vec_id = c.vec_id)""".stripMargin
-  }
-
-  private val lshMpKnnOracle: String =
-    s"WITH $lshMpCtes\nSELECT query_id, neighbor_id, rank FROM mp_scored WHERE rank <= 10"
-
-  private val lshMpRecallOracle: String =
-    s"""WITH $lshMpCtes,
-       |gt AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT q.query_id, b.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-       |  FROM q CROSS JOIN b) WHERE rank <= 10),
-       |pr AS (SELECT query_id, neighbor_id FROM mp_scored WHERE rank <= 10),
-       |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-       |total AS (SELECT count(*) AS n_gt FROM gt)
-       |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin
-
-  /** SemDeDup replay: IvfFlat's integer k-means training (ivfTrainCtes →
-    * assignment `ab`), then the within-cluster lower-id cosine prune. */
-  private val semanticDedupOracle: String =
-    s"""WITH $ivfTrainCtes,
-       |sd_drop AS (SELECT DISTINCT a.vec_id
-       |  FROM ab a JOIN ab c ON a.cid = c.cid AND c.vec_id < a.vec_id
-       |  JOIN b ea ON ea.vec_id = a.vec_id JOIN b eb ON eb.vec_id = c.vec_id
-       |  WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])) >= 0.35)
-       |SELECT ab.vec_id, CAST(ab.cid AS INTEGER) AS cid, (d.vec_id IS NULL) AS kept
-       |FROM ab LEFT JOIN sd_drop d ON d.vec_id = ab.vec_id""".stripMargin
-
-  private val ndcgOracle: String =
-    """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-      |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-      |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY q.query_id
-      |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-      |  FROM q CROSS JOIN b),
-      |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-      |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-      |w(r, wt) AS (VALUES (1, 1000000), (2, 630930), (3, 500000), (4, 430677), (5, 386853),
-      |  (6, 356207), (7, 333333), (8, 315465), (9, 301030), (10, 289065)),
-      |pw(r, cum) AS (VALUES (1, 1000000), (2, 1630930), (3, 2130930), (4, 2561607), (5, 2948460),
-      |  (6, 3304667), (7, 3638000), (8, 3953465), (9, 4254495), (10, 4543560)),
-      |dcg AS (SELECT s.query_id,
-      |    CAST(sum(CASE WHEN ql.q_label = bl.b_label THEN w.wt ELSE 0 END) AS BIGINT) AS dcg_micro
-      |  FROM scored s JOIN ql USING (query_id) JOIN bl USING (neighbor_id) JOIN w ON w.r = s.rank
-      |  WHERE s.rank <= 10 GROUP BY 1),
-      |pool AS (SELECT ql.query_id, least(count(bl.neighbor_id), 10) AS r_ideal
-      |  FROM ql LEFT JOIN bl ON bl.b_label = ql.q_label GROUP BY 1),
-      |idcg AS (SELECT p.query_id,
-      |    CAST(coalesce(pw.cum, 0) AS BIGINT) AS idcg_micro
-      |  FROM pool p LEFT JOIN pw ON pw.r = p.r_ideal)
-      |SELECT d.query_id, d.dcg_micro, i.idcg_micro,
-      |  CAST(CASE WHEN i.idcg_micro = 0 THEN 0
-      |    ELSE (d.dcg_micro * 10000) // i.idcg_micro END AS BIGINT) AS ndcg_bp
-      |FROM dcg d JOIN idcg i USING (query_id)""".stripMargin
-
-  private val ohlcOracle: String =
-    """WITH e AS (SELECT event_type,
-      |    epoch_ms(date_trunc('hour', ts)) AS hour_ms,
-      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-      |    epoch_ms(ts) * 1048576 + event_id AS ord
-      |  FROM events)
-      |SELECT event_type, hour_ms,
-      |  arg_min(cents, ord) AS open_cents,
-      |  max(cents) AS high_cents,
-      |  min(cents) AS low_cents,
-      |  arg_max(cents, ord) AS close_cents,
-      |  count(*) AS n_events
-      |FROM e GROUP BY 1, 2""".stripMargin
-
-  private val intervalMergeOracle: String =
-    """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS start_ms,
-      |    epoch_ms(ts) + 300000 AS end_ms FROM events),
-      |m AS (SELECT *, max(end_ms) OVER (PARTITION BY user_id ORDER BY start_ms, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_end FROM e),
-      |f AS (SELECT *, CASE WHEN prev_max_end IS NULL OR start_ms > prev_max_end
-      |    THEN 1 ELSE 0 END AS new_island FROM m),
-      |i AS (SELECT *, sum(new_island) OVER (PARTITION BY user_id ORDER BY start_ms, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island_id FROM f),
-      |g AS (SELECT user_id, island_id, min(start_ms) AS i_start, max(end_ms) AS i_end,
-      |    count(*) AS i_events FROM i GROUP BY 1, 2)
-      |SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands,
-      |  CAST(sum(i_end - i_start) AS BIGINT) AS covered_ms,
-      |  CAST(max(i_events) AS BIGINT) AS max_island_events
-      |FROM g GROUP BY 1""".stripMargin
-
-  private val dqChecksOracle: String =
-    """WITH s AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-      |    CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_ok,
-      |    CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) AS qty_out,
-      |    CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END) AS BIGINT) AS disc_out
-      |  FROM lineitem),
-      |d AS (SELECT CAST(count(*) AS BIGINT) AS n_dup FROM (
-      |  SELECT l_orderkey, l_linenumber FROM lineitem GROUP BY 1, 2 HAVING count(*) > 1)),
-      |o AS (SELECT CAST(count(*) AS BIGINT) AS n_orphan FROM lineitem l
-      |  WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l.l_orderkey))
-      |SELECT 'row_count_min_1000' AS check_name, n_rows AS observed, n_rows >= 1000 AS pass FROM s
-      |UNION ALL SELECT 'orderkey_not_null', null_ok, null_ok = 0 FROM s
-      |UNION ALL SELECT 'quantity_in_1_50', qty_out, qty_out = 0 FROM s
-      |UNION ALL SELECT 'discount_in_0_1', disc_out, disc_out = 0 FROM s
-      |UNION ALL SELECT 'linenumber_unique', n_dup, n_dup = 0 FROM d
-      |UNION ALL SELECT 'orders_fk', n_orphan, n_orphan = 0 FROM o""".stripMargin
-
-  // ── chart-oracle templates ──────────────────────────────────────────
-  // The decoration constants (axis frame, title/label text, legends,
-  // document framing) are spliced from the SAME Scala values the sinks
-  // render, so sink and oracle cannot drift; only the data-dependent
-  // pieces (tick geometry from the extrema, per-series legend) are
-  // recomputed in SQL with the sinks' integer pixel math.
-
-  /** The multi-tenant per-client-QPS curve's leading CTEs (shared by the
-    * SVG and PDF chart oracles): per-(backend, clients) mean rows-served
-    * per client over the {10..50}-client sweep. */
-  private val tenantCurveBaseCtes: String =
-    """s0 AS (SELECT event_type AS backend, nc.num_clients,
-      |    user_id % nc.num_clients AS client,
-      |    CAST(round(value * 100) AS BIGINT) AS cents
-      |  FROM events, (SELECT unnest([10, 20, 30, 40, 50]) AS num_clients) nc),
-      |c0 AS (SELECT backend, num_clients, client, count(*) AS n_rows
-      |  FROM s0 GROUP BY 1, 2, 3),
-      |base AS (SELECT backend AS s, CAST(num_clients AS BIGINT) AS x,
-      |    CAST(sum(n_rows) // count(*) AS BIGINT) AS y
-      |  FROM c0 GROUP BY 1, 2)""".stripMargin
-
-  /** The interval chart's base CTE (shared by the SVG and PDF oracles). */
-  private val intervalChartBaseCtes: String =
-    """base AS (SELECT event_type AS s, (event_id % 5) + 1 AS x,
-      |  CAST(floor(value * 100) AS BIGINT) AS y FROM events)""".stripMargin
-
-  /** Tick CTE columns for one value domain: tick value `v` and its pixel
-    * `p` (`flip` = SVG y; unflipped = PDF y / SVG x with extent 640). */
-  private def tickColsSql(vmin: String, vmax: String, extent: Int,
-      flip: Boolean, v: String, p: String): String = {
-    val seg = graft.sources.SvgPlot.Ticks - 1
-    val scaled = s"CAST(floor((($vmax - $vmin) * i // $seg) * ${extent - 1} " +
-      s"/ greatest($vmax - $vmin, 1)) AS BIGINT)"
-    s"$vmin + (($vmax - $vmin) * i) // $seg AS $v,\n" +
-      s"  ${if (flip) s"${extent - 1} - $scaled" else scaled} AS $p"
-  }
-
-  /** SVG tick elements for the bottom edge (x) from tick CTE cols. */
-  private val svgXTickAggSql = {
-    import graft.sources.SvgPlot.H
-    s"""string_agg('<line class="tick" x1="' || xp::VARCHAR || '" y1="${H - 1}" x2="' ||
-       |      xp::VARCHAR || '" y2="${H - 7}"/><text class="xtick" x="' || xp::VARCHAR ||
-       |      '" y="${H - 10}">' || xv::VARCHAR || '</text>', '' ORDER BY i)""".stripMargin
-  }
-
-  /** SVG tick elements for a left/right y edge from tick CTE cols. */
-  private def svgYTickAggSql(v: String, p: String, cls: String, right: Boolean): String =
-    if (right)
-      s"""string_agg('<line class="tick" x1="${graft.sources.SvgPlot.W - 7}" y1="' || $p::VARCHAR || '" x2="${graft.sources.SvgPlot.W - 1}" y2="' ||
-         |      $p::VARCHAR || '"/><text class="$cls" x="${graft.sources.SvgPlot.W - 80}" y="' || $p::VARCHAR || '">' ||
-         |      $v::VARCHAR || '</text>', '' ORDER BY i)""".stripMargin
-    else
-      s"""string_agg('<line class="tick" x1="0" y1="' || $p::VARCHAR || '" x2="6" y2="' ||
-         |      $p::VARCHAR || '"/><text class="$cls" x="8" y="' || $p::VARCHAR || '">' ||
-         |      $v::VARCHAR || '</text>', '' ORDER BY i)""".stripMargin
-
-  /** PDF tick ops for the bottom edge from tick CTE cols. */
-  private val pdfXTickAggSql =
-    """string_agg(xp::VARCHAR || ' 0 m ' || xp::VARCHAR || ' 6 l S' || chr(10) ||
-      |      'BT /F1 8 Tf ' || xp::VARCHAR || ' 10 Td (' || xv::VARCHAR || ') Tj ET' ||
-      |      chr(10), '' ORDER BY i)""".stripMargin
-
-  /** PDF tick ops for a left/right y edge from tick CTE cols. */
-  private def pdfYTickAggSql(v: String, p: String, right: Boolean): String =
-    if (right)
-      s"""string_agg('${graft.sources.SvgPlot.W - 7} ' || $p::VARCHAR || ' m ${graft.sources.SvgPlot.W - 1} ' || $p::VARCHAR || ' l S' || chr(10) ||
-         |      'BT /F1 8 Tf ${graft.sources.SvgPlot.W - 80} ' || $p::VARCHAR || ' Td (' || $v::VARCHAR || ') Tj ET' ||
-         |      chr(10), '' ORDER BY i)""".stripMargin
-    else
-      s"""string_agg('0 ' || $p::VARCHAR || ' m 6 ' || $p::VARCHAR || ' l S' || chr(10) ||
-         |      'BT /F1 8 Tf 8 ' || $p::VARCHAR || ' Td (' || $v::VARCHAR || ') Tj ET' ||
-         |      chr(10), '' ORDER BY i)""".stripMargin
-
-  /** PDF document framing around a `doc` CTE exposing `obj4`: splices the
-    * sink's exact constant prefix/xref bytes and computed startxref. */
-  private def pdfFramingSql: String = {
-    import graft.sources.PdfPlot.{DocPrefix, XrefAndTrailer, Off4}
-    s"'$DocPrefix' || obj4 || '$XrefAndTrailer' || ($Off4 + length(obj4))::VARCHAR " +
-      s"|| chr(10) || '%%EOF' || chr(10)"
-  }
-
-  /** Full oracle for [[graft.sources.SvgPlot.multiSeriesChart]] over any
-    * leading CTE chain ending in `base(s, x, y)`. */
-  private def svgMultiSeriesOracle(leadingCtes: String,
-      title: String, xlabel: String, ylabel: String): String = {
-    import graft.sources.SvgPlot.{AxisElem, labelElems}
-    s"""WITH $leadingCtes,
-       |ext AS (SELECT min(x) AS xmin, max(x) AS xmax,
-       |               min(y) AS ymin, max(y) AS ymax FROM base),
-       |ticks AS (SELECT i,
-       |  ${tickColsSql("xmin", "xmax", 640, flip = false, "xv", "xp")},
-       |  ${tickColsSql("ymin", "ymax", 400, flip = true, "yv", "yp")}
-       |  FROM (SELECT unnest(generate_series(0, ${graft.sources.SvgPlot.Ticks - 1})) AS i), ext),
-       |decor AS (SELECT '$AxisElem'
-       |  || $svgXTickAggSql
-       |  || ${svgYTickAggSql("yv", "yp", "ytick", right = false)}
-       |  || '${labelElems(title, xlabel, ylabel)}' AS decor_elems FROM ticks),
-       |pts AS (SELECT s,
-       |  CAST(floor((x - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS px,
-       |  ${graft.sources.SvgPlot.H - 1} - CAST(floor((y - ymin) * ${graft.sources.SvgPlot.H - 1} / greatest(ymax - ymin, 1)) AS BIGINT) AS py
-       |  FROM base, ext),
-       |env AS (SELECT s, px, min(py) AS py FROM pts GROUP BY 1, 2),
-       |lines AS (SELECT s, CAST(count(*) AS BIGINT) AS n_points,
-       |  '<polyline class="' || s || '" fill="none" points="' ||
-       |  string_agg(px::VARCHAR || ',' || py::VARCHAR, ' ' ORDER BY px) ||
-       |  '"/>' AS elem
-       |  FROM env GROUP BY s),
-       |leg AS (SELECT string_agg('<text class="legend" x="${graft.sources.SvgPlot.W - 120}" y="' ||
-       |    (20 + 14 * (rn - 1))::VARCHAR || '">' || s || '</text>', '' ORDER BY s) AS legend_elems
-       |  FROM (SELECT s, row_number() OVER (ORDER BY s) AS rn FROM lines) rl)
-       |SELECT CAST(count(*) AS BIGINT) AS n_series,
-       |  CAST(sum(n_points) AS BIGINT) AS n_points,
-       |  '<svg xmlns="http://www.w3.org/2000/svg" viewBox="0 0 ${graft.sources.SvgPlot.W} ${graft.sources.SvgPlot.H}">' ||
-       |  decor_elems || string_agg(elem, '' ORDER BY s) || legend_elems || '</svg>' AS svg
-       |FROM lines, decor, leg
-       |GROUP BY decor_elems, legend_elems""".stripMargin
-  }
-
-  /** Full oracle for [[graft.sources.PdfPlot.multiSeriesPdf]] over any
-    * leading CTE chain ending in `base(s, x, y)`. */
-  private def pdfMultiSeriesOracle(leadingCtes: String,
-      title: String, xlabel: String, ylabel: String): String = {
-    import graft.sources.PdfPlot.{AxisOps, labelOps}
-    s"""WITH $leadingCtes,
-       |ext AS (SELECT min(x) AS xmin, max(x) AS xmax,
-       |               min(y) AS ymin, max(y) AS ymax FROM base),
-       |ticks AS (SELECT i,
-       |  ${tickColsSql("xmin", "xmax", 640, flip = false, "xv", "xp")},
-       |  ${tickColsSql("ymin", "ymax", 400, flip = false, "yv", "yp")}
-       |  FROM (SELECT unnest(generate_series(0, ${graft.sources.SvgPlot.Ticks - 1})) AS i), ext),
-       |decor AS (SELECT '$AxisOps'
-       |  || $pdfXTickAggSql
-       |  || ${pdfYTickAggSql("yv", "yp", right = false)}
-       |  || '${labelOps(title, xlabel, ylabel)}' AS decor_ops FROM ticks),
-       |pts AS (SELECT s,
-       |  CAST(floor((x - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS px,
-       |  CAST(floor((y - ymin) * ${graft.sources.SvgPlot.H - 1} / greatest(ymax - ymin, 1)) AS BIGINT) AS py
-       |  FROM base, ext),
-       |env AS (SELECT s, px, max(py) AS py FROM pts GROUP BY 1, 2),
-       |tok AS (SELECT s, px, py,
-       |  CASE WHEN row_number() OVER (PARTITION BY s ORDER BY px) = 1
-       |       THEN ' m' ELSE ' l' END AS op FROM env),
-       |paths AS (SELECT s, CAST(count(*) AS BIGINT) AS n_points,
-       |  string_agg(px::VARCHAR || ' ' || py::VARCHAR || op, ' ' ORDER BY px) AS path
-       |  FROM tok GROUP BY s),
-       |ranked AS (SELECT s, n_points, path,
-       |  row_number() OVER (ORDER BY s) AS rn FROM paths),
-       |blocks AS (SELECT s, n_points,
-       |  (['0 0 1','1 0 0','0 1 0','1 0 1','0 1 1','1 1 0'])[
-       |      CAST((rn - 1) % 6 AS INTEGER) + 1]
-       |    || ' RG 1 w' || chr(10) || path || ' S' || chr(10) AS block,
-       |  (['0 0 1','1 0 0','0 1 0','1 0 1','0 1 1','1 1 0'])[
-       |      CAST((rn - 1) % 6 AS INTEGER) + 1]
-       |    || ' RG 1 w' || chr(10) || '${graft.sources.SvgPlot.W - 120} ' || (${graft.sources.SvgPlot.H - 20} - 14 * (rn - 1))::VARCHAR ||
-       |    ' m ${graft.sources.SvgPlot.W - 100} ' || (${graft.sources.SvgPlot.H - 20} - 14 * (rn - 1))::VARCHAR || ' l S' || chr(10) ||
-       |    'BT /F1 8 Tf ${graft.sources.SvgPlot.W - 96} ' || (${graft.sources.SvgPlot.H - 23} - 14 * (rn - 1))::VARCHAR || ' Td (' || s ||
-       |    ') Tj ET' || chr(10) AS legend_block FROM ranked),
-       |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_series,
-       |  CAST(sum(n_points) AS BIGINT) AS n_points,
-       |  decor_ops || string_agg(block, '' ORDER BY s) || '0 0 0 rg' || chr(10) ||
-       |    string_agg(legend_block, '' ORDER BY s) AS content
-       |  FROM blocks, decor GROUP BY decor_ops),
-       |doc AS (SELECT n_series, n_points,
-       |  CAST(length(content) AS BIGINT) AS content_len,
-       |  '4 0 obj' || chr(10) || '<< /Length ' || length(content)::VARCHAR
-       |    || ' >>' || chr(10) || 'stream' || chr(10) || content
-       |    || 'endstream' || chr(10) || 'endobj' || chr(10) AS obj4 FROM agg)
-       |SELECT n_series, n_points, content_len,
-       |  $pdfFramingSql AS pdf
-       |FROM doc""".stripMargin
-  }
-
-  /** The dual-axis QPS/latency chart's shared leading CTEs: the
-    * (x, abp, bbp) series plus the 3 longest signup→purchase spans as
-    * pixel regions (logs/plot.py's axvspan inputs). */
-  private val dualAxisLeadCtes: String =
-    s"""base AS (SELECT epoch_ms(ts) AS x,
-      |  CAST(floor(value * 100) AS BIGINT) AS abp,
-      |  CAST(floor(value * 200) AS BIGINT) AS bbp FROM events),
-      |ext AS (SELECT min(x) AS xmin, max(x) AS xmax,
-      |  min(abp) AS amin, max(abp) AS amax,
-      |  min(bbp) AS bmin, max(bbp) AS bmax FROM base),
-      |f AS (SELECT user_id, event_id, event_type, ts FROM events
-      |  WHERE event_type IN ('signup', 'purchase')),
-      |m AS (SELECT user_id, event_id AS start_event_id, event_type,
-      |  epoch_ms(ts) AS start_ms,
-      |  min(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) OVER (
-      |    PARTITION BY user_id ORDER BY ts, event_id
-      |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS end_ms
-      |  FROM f),
-      |top3 AS (SELECT start_ms AS xs, end_ms AS xe FROM m
-      |  WHERE event_type = 'signup' AND end_ms IS NOT NULL
-      |  ORDER BY (end_ms - start_ms) DESC, start_ms, start_event_id LIMIT 3),
-      |spx AS (SELECT
-      |  CAST(floor((xs - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS pxs,
-      |  CAST(floor((xe - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS pxe
-      |  FROM top3, ext)""".stripMargin
-
-  /** The dual-axis charts' tick CTE (x bottom, a left, b right). */
-  private def dualTicksCteSql(flip: Boolean): String =
-    s"""ticks AS (SELECT i,
-       |  ${tickColsSql("xmin", "xmax", 640, flip = false, "xv", "xp")},
-       |  ${tickColsSql("amin", "amax", 400, flip, "av", "ap")},
-       |  ${tickColsSql("bmin", "bmax", 400, flip, "bv", "bp")}
-       |  FROM (SELECT unnest(generate_series(0, ${graft.sources.SvgPlot.Ticks - 1})) AS i), ext)""".stripMargin
-
-  /** Full oracle for `svg_qps_latency_chart` — the decorated
-    * [[graft.sources.SvgPlot.dualAxisChart]] byte replay. */
-  private def svgDualAxisOracle: String = {
-    import graft.sources.SvgPlot.{AxisElem, labelElems, legendEntry}
-    val legend = legendEntry("QPS", 0) + legendEntry("Latency", 1) +
-      legendEntry("Phase", 2)
-    val labels = labelElems("QPS and Latency with Phase Regions", "Time ms",
-      "QPS bp", "Latency bp")
-    s"""WITH $dualAxisLeadCtes,
-       |${dualTicksCteSql(flip = true)},
-       |decor AS (SELECT '$AxisElem'
-       |  || $svgXTickAggSql
-       |  || ${svgYTickAggSql("av", "ap", "ytick", right = false)}
-       |  || ${svgYTickAggSql("bv", "bp", "ytick2", right = true)}
-       |  || '$labels' AS decor_elems FROM ticks),
-       |b AS (SELECT
-       |  CAST(floor((x - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS px,
-       |  ${graft.sources.SvgPlot.H - 1} - CAST(floor((abp - amin) * ${graft.sources.SvgPlot.H - 1} / greatest(amax - amin, 1)) AS BIGINT) AS pya,
-       |  ${graft.sources.SvgPlot.H - 1} - CAST(floor((bbp - bmin) * ${graft.sources.SvgPlot.H - 1} / greatest(bmax - bmin, 1)) AS BIGINT) AS pyb
-       |  FROM base, ext),
-       |env AS (SELECT px, min(pya) AS pya, min(pyb) AS pyb FROM b GROUP BY px),
-       |lns AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
-       |  '<polyline class="a" fill="none" points="' ||
-       |  string_agg(px::VARCHAR || ',' || pya::VARCHAR, ' ' ORDER BY px) || '"/>' ||
-       |  '<polyline class="b" fill="none" points="' ||
-       |  string_agg(px::VARCHAR || ',' || pyb::VARCHAR, ' ' ORDER BY px) || '"/>' AS line_elems
-       |  FROM env),
-       |rects AS (SELECT CAST(count(*) AS BIGINT) AS n_regions,
-       |  coalesce(string_agg('<rect class="phase" x="' || pxs::VARCHAR ||
-       |    '" y="0" width="' || greatest(pxe - pxs, 1)::VARCHAR ||
-       |    '" height="${graft.sources.SvgPlot.H}"/>', '' ORDER BY pxs, pxe), '') AS rect_elems
-       |  FROM spx)
-       |SELECT n_points, n_regions,
-       |  '<svg xmlns="http://www.w3.org/2000/svg" viewBox="0 0 ${graft.sources.SvgPlot.W} ${graft.sources.SvgPlot.H}">' ||
-       |  decor_elems || rect_elems || line_elems || '$legend' || '</svg>' AS svg
-       |FROM lns, rects, decor""".stripMargin
-  }
-
-  /** Full oracle for `pdf_qps_latency_chart` — the decorated
-    * [[graft.sources.PdfPlot.dualAxisPdf]] byte replay. */
-  private def pdfDualAxisOracle: String = {
-    import graft.sources.PdfPlot.{AxisOps, labelOps, legendOps}
-    val legend = legendOps(
-      Seq("0 0 1" -> "QPS", "1 0 0" -> "Latency", "1 1 0" -> "Phase"))
-    val labels = labelOps("QPS and Latency with Phase Regions", "Time ms",
-      "QPS bp", "Latency bp")
-    s"""WITH $dualAxisLeadCtes,
-       |${dualTicksCteSql(flip = false)},
-       |decor AS (SELECT '$AxisOps'
-       |  || $pdfXTickAggSql
-       |  || ${pdfYTickAggSql("av", "ap", right = false)}
-       |  || ${pdfYTickAggSql("bv", "bp", right = true)}
-       |  || '$labels' AS decor_ops FROM ticks),
-       |b AS (SELECT
-       |  CAST(floor((x - xmin) * ${graft.sources.SvgPlot.W - 1} / greatest(xmax - xmin, 1)) AS BIGINT) AS px,
-       |  CAST(floor((abp - amin) * ${graft.sources.SvgPlot.H - 1} / greatest(amax - amin, 1)) AS BIGINT) AS pya,
-       |  CAST(floor((bbp - bmin) * ${graft.sources.SvgPlot.H - 1} / greatest(bmax - bmin, 1)) AS BIGINT) AS pyb
-       |  FROM base, ext),
-       |env AS (SELECT px, max(pya) AS pya, max(pyb) AS pyb FROM b GROUP BY px),
-       |tok AS (SELECT px, pya, pyb,
-       |  CASE WHEN row_number() OVER (ORDER BY px) = 1 THEN ' m' ELSE ' l' END AS op
-       |  FROM env),
-       |lns AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
-       |  '0 0 1 RG 1 w' || chr(10) ||
-       |  string_agg(px::VARCHAR || ' ' || pya::VARCHAR || op, ' ' ORDER BY px)
-       |  || ' S' || chr(10) ||
-       |  '1 0 0 RG 1 w' || chr(10) ||
-       |  string_agg(px::VARCHAR || ' ' || pyb::VARCHAR || op, ' ' ORDER BY px)
-       |  || ' S' || chr(10) AS line_ops
-       |  FROM tok),
-       |rects AS (SELECT CAST(count(*) AS BIGINT) AS n_regions,
-       |  coalesce(string_agg('1 1 0 rg ' || pxs::VARCHAR || ' 0 ' ||
-       |    greatest(pxe - pxs, 1)::VARCHAR || ' ${graft.sources.SvgPlot.H} re f' || chr(10),
-       |    '' ORDER BY pxs, pxe), '') AS rect_ops
-       |  FROM spx),
-       |agg AS (SELECT n_points, n_regions,
-       |  decor_ops || rect_ops || line_ops || '$legend' AS content
-       |  FROM lns, rects, decor),
-       |doc AS (SELECT n_points, n_regions,
-       |  CAST(length(content) AS BIGINT) AS content_len,
-       |  '4 0 obj' || chr(10) || '<< /Length ' || length(content)::VARCHAR
-       |    || ' >>' || chr(10) || 'stream' || chr(10) || content
-       |    || 'endstream' || chr(10) || 'endobj' || chr(10) AS obj4 FROM agg)
-       |SELECT n_points, n_regions, content_len,
-       |  $pdfFramingSql AS pdf
-       |FROM doc""".stripMargin
-  }
-
-  private val ewmaOracle: String =
-    """WITH RECURSIVE ev AS (SELECT user_id, event_id,
-      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-      |    row_number() OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS rn
-      |  FROM events),
-      |r AS (
-      |  SELECT user_id, rn, cents AS s FROM ev WHERE rn = 1
-      |  UNION ALL
-      |  SELECT e.user_id, e.rn, (7 * r.s + e.cents) // 8
-      |  FROM r JOIN ev e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-      |SELECT user_id, CAST(max(rn) AS BIGINT) AS n_events,
-      |  CAST(arg_max(s, rn) AS BIGINT) AS ewma_cents
-      |FROM r GROUP BY 1""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "knn_graph_adj" -> graphAdjOracle,
-    "mutual_knn_pairs" ->
-      (s"WITH $graphBaseCtes\n" +
-        """SELECT a.node_id AS id_a, a.neighbor_id AS id_b,
-          |  a.rank AS rank_ab, b.rank AS rank_ba
-          |FROM gadj a JOIN gadj b
-          |  ON a.node_id = b.neighbor_id AND a.neighbor_id = b.node_id
-          |WHERE a.node_id < a.neighbor_id""".stripMargin),
-    "knn_graph" -> graphKnnOracle,
-    "knn_graph_stored" -> graphKnnOracle, // stored-adjacency replay, same answer
-    "knn_graph_filtered" -> graphFilteredKnnOracle,
-    "recall_graph_filtered" -> graphFilteredRecallOracle,
-    "graph_cellblocked_quality" -> cellBlockedQualityOracle,
-    "knn_graph_cellblocked" -> cellBlockedKnnOracle,
-    "recall_graph_cellblocked" -> cellBlockedRecallOracle,
-    "recall_graph" -> graphRecallOracle,
-    "knn_graph_cosine" -> graphCosineKnnOracle,
-    "recall_graph_cosine" -> graphCosineRecallOracle,
-    "recall_curve_graph" ->
-      (s"""WITH $graphBaseCtes,
-          |${beamSearchCtes("gadj", "g")},
-          |gt AS (SELECT query_id, neighbor_id, rank FROM (
-          |  SELECT q.query_id, b.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY q.query_id
-          |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-          |  FROM q CROSS JOIN b) WHERE rank <= 10),
-          |pr AS (SELECT query_id, neighbor_id, rank FROM gscored WHERE rank <= 10),
-          |ks AS (SELECT unnest([1, 5, 10]) AS k),
-          |j AS (SELECT g.rank AS grank, p.rank AS prank
-          |  FROM gt g JOIN pr p USING (query_id, neighbor_id)),
-          |tot AS (SELECT ks.k, count(*) AS n_gt FROM ks JOIN gt ON gt.rank <= ks.k GROUP BY 1),
-          |h AS (SELECT ks.k, count(*) AS n_hits FROM ks JOIN j
-          |  ON j.grank <= ks.k AND j.prank <= ks.k GROUP BY 1)
-          |SELECT CAST(coalesce(h.n_hits, 0) * 10000 // t.n_gt AS BIGINT) AS recall_bp,
-          |  CAST(t.k AS BIGINT) AS k
-          |FROM tot t LEFT JOIN h ON h.k = t.k""").stripMargin,
-    "nnd_graph_adj" -> nndAdjOracle,
-    "nnd_graph_quality" -> nndQualityOracle,
-    "knn_graph_nnd" -> nndKnnOracle,
-    "recall_graph_nnd" -> nndRecallOracle,
-    "knn_lsh_multiprobe" -> lshMpKnnOracle,
-    "recall_lsh_multiprobe" -> lshMpRecallOracle,
-    "semantic_dedup" -> semanticDedupOracle,
-    "stream_sessionize" -> // one logical answer, stateful streaming plan
-      """WITH g AS (SELECT user_id AS key, event_id, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events)
-        |SELECT key, event_id,
-        |  CAST(sum(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY key ORDER BY ms, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |FROM g""".stripMargin,
-    "ndcg_at_10" -> ndcgOracle,
-    "auc_label_score" -> // full replay: quantize → floor-mean centroid → dot → Mann-Whitney
-      """WITH qv AS (SELECT vec_id,
-        |    CASE WHEN label = 0 THEN 1 ELSE 0 END AS pos,
-        |    list_transform(embedding, e ->
-        |      CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |ex AS (SELECT vec_id, pos, generate_subscripts(qv, 1) AS d, unnest(qv) AS e FROM qv),
-        |ct AS (SELECT d,
-        |    (CAST(sum(e) AS BIGINT) - ((CAST(sum(e) AS BIGINT) % count(*) + count(*)) % count(*)))
-        |      // count(*) AS c
-        |  FROM ex GROUP BY 1),
-        |sc AS (SELECT vec_id, any_value(pos) AS pos, CAST(sum(e * c) AS BIGINT) AS score
-        |  FROM ex JOIN ct USING (d) GROUP BY vec_id),
-        |g AS (SELECT score AS s, CAST(sum(pos) AS BIGINT) AS np,
-        |    CAST(sum(1 - pos) AS BIGINT) AS nn FROM sc GROUP BY 1),
-        |w AS (SELECT *, coalesce(sum(nn) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS neg_below FROM g)
-        |SELECT CAST(sum(np) AS BIGINT) AS n_pos, CAST(sum(nn) AS BIGINT) AS n_neg,
-        |  CAST(sum(2 * np * neg_below + np * nn) AS BIGINT) AS u2,
-        |  CAST((10000 * CAST(sum(2 * np * neg_below + np * nn) AS BIGINT))
-        |    // (2 * CAST(sum(np) AS BIGINT) * CAST(sum(nn) AS BIGINT)) AS BIGINT) AS auc_bps
-        |FROM w""".stripMargin,
-    "ohlc_bars" -> ohlcOracle,
-    "interval_merge" -> intervalMergeOracle,
-    "dq_checks" -> dqChecksOracle,
-    "ewma_user" -> ewmaOracle,
-    "pii_redact" -> piiRedactOracle,
-    "doc_chunks" -> docChunksOracle,
-    "repetition_stats" -> repetitionOracle,
-    "contamination" -> contaminationOracle,
-    // embedding decontamination: quantized-cosine threshold screen of
-    // every benchmark vector against the training split (zero-filled
-    // by the conditional sum over the cross join)
-    "contamination_embedding" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-         |  (vec_id % 20 = 7) AS is_bench FROM embeddings),
-         |bench AS (SELECT vec_id AS bench_id, e FROM v WHERE is_bench),
-         |train AS (SELECT vec_id AS train_id, e FROM v WHERE NOT is_bench),
-         |sc AS (SELECT b.bench_id,
-         |  CAST(floor(list_cosine_similarity(t.e, b.e) * 1000000000.0) AS BIGINT) AS cos_q
-         |  FROM train t CROSS JOIN bench b)
-         |SELECT bench_id,
-         |  CAST(sum(CASE WHEN cos_q >= $ContaminationEmbThresholdQ THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated_emb,
-         |  max(cos_q) AS max_cos_q
-         |FROM sc GROUP BY 1""".stripMargin,
-    "domain_mix" -> domainMixOracle,
-    "temperature_mix" ->
-      // τ=1/2 as floor(sqrt(n)): IEEE sqrt of an exact integer is
-      // correctly rounded in every engine; all arithmetic after is int64
-      """WITH d AS (SELECT lang AS domain, count(*) AS n_docs,
-        |  CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS weight
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS budget,
-        |  CAST(sum(weight) AS BIGINT) AS wsum FROM d)
-        |SELECT domain, n_docs, weight,
-        |  CAST((budget * weight) // wsum AS BIGINT) AS quota,
-        |  CAST((10000 * ((budget * weight) // wsum)) // n_docs AS BIGINT) AS upsample_bps
-        |FROM d, t""".stripMargin,
-    // water-filling replay: same sorted-prefix closed form, int64 only
-    "token_budget_mix" ->
-      """WITH d AS (SELECT source AS domain,
-        |  CAST(sum(len(string_split(trim(text), ' '))) AS BIGINT) AS cap
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(cap) AS BIGINT) AS total, count(*) AS n_dom FROM d),
-        |s AS (SELECT domain, cap, total, n_dom, (total * 5000) // 10000 AS budget,
-        |  CAST(coalesce(sum(cap) OVER (ORDER BY cap, domain
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumcap_b,
-        |  CAST(coalesce(count(*) OVER (ORDER BY cap, domain
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumn_b
-        |  FROM d CROSS JOIN t),
-        |f AS (SELECT *, CASE WHEN cap * (n_dom - cumn_b) <= budget - cumcap_b
-        |  THEN 1 ELSE 0 END AS cond FROM s),
-        |g AS (SELECT *, min(cond) OVER (ORDER BY cap, domain
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 AS saturated FROM f),
-        |agg AS (SELECT CAST(coalesce(sum(CASE WHEN saturated THEN cap END), 0) AS BIGINT) AS satcap,
-        |  CAST(coalesce(sum(CASE WHEN saturated THEN 1 END), 0) AS BIGINT) AS satn FROM g)
-        |SELECT domain, cap AS cap_tokens,
-        |  CAST(CASE WHEN saturated THEN cap
-        |    ELSE (budget - satcap) // (n_dom - satn) END AS BIGINT) AS alloc_tokens,
-        |  saturated
-        |FROM g CROSS JOIN agg""".stripMargin,
-    "minhash_neardup" -> minhashOracle,
-    "lsh_quality" -> lshQualityOracle,
-    "simhash_quality" -> simhashQualityOracle,
-    "ivf_nprobe_curve" -> ivfNprobeCurveOracle,
-    // nlist-growth curve: two extra full training replays (nlist 4 and
-    // 16 via the parameterized trainer) + the shared nlist=8 model,
-    // each probed at the fixed 3/4 cell fraction and recall-scored
-    // against the exact ground truth
-    "ivf_nlist_curve" -> {
-      def idist(a: String, b: String): String =
-        s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-      def asgSql(c2: String, p: String): String =
-        s"""${p}ab AS (SELECT vec_id, cid FROM (
-           |  SELECT bq.vec_id, c.cid, row_number() OVER (PARTITION BY bq.vec_id
-           |    ORDER BY ${idist("bq.qv", "c.cvec")}, c.cid) AS rn
-           |  FROM bq CROSS JOIN $c2 c) WHERE rn = 1)""".stripMargin
-      def rungSql(nl: Int, np: Int, c2: String, ab: String, p: String): String =
-        s"""${p}pr AS (SELECT query_id, cid FROM (
-           |  SELECT qq.query_id, c.cid, row_number() OVER (PARTITION BY qq.query_id
-           |    ORDER BY ${idist("qq.qv", "c.cvec")}, c.cid) AS prn
-           |  FROM qq CROSS JOIN $c2 c) WHERE prn <= $np),
-           |${p}scored AS (SELECT pp.query_id, $ab.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY pp.query_id
-           |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), $ab.vec_id) AS rank
-           |  FROM ${p}pr pp JOIN $ab ON $ab.cid = pp.cid
-           |  JOIN b ON b.vec_id = $ab.vec_id JOIN q ON q.query_id = pp.query_id),
-           |${p}row AS (SELECT CAST($nl AS BIGINT) AS nlist, CAST($np AS BIGINT) AS nprobe,
-           |  CAST((count(*) * 10000) // (SELECT count(*) FROM gt) AS BIGINT) AS recall_bp
-           |  FROM (SELECT query_id, neighbor_id FROM ${p}scored WHERE rank <= 10) pd
-           |  JOIN gt USING (query_id, neighbor_id))""".stripMargin
-      s"""WITH $ivfTrainCtes,
-         |${ivfTrainCtesOnQv("bq", "n4", 4)},
-         |${asgSql("n4c2", "n4")},
-         |${ivfTrainCtesOnQv("bq", "n16", 16)},
-         |${asgSql("n16c2", "n16")},
-         |gt AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT q.query_id, b.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-         |  FROM q CROSS JOIN b) WHERE rank <= 10),
-         |${rungSql(4, 3, "n4c2", "n4ab", "r4")},
-         |${rungSql(8, 6, "c2", "ab", "r8")},
-         |${rungSql(16, 12, "n16c2", "n16ab", "r16")}
-         |SELECT nlist, nprobe, recall_bp FROM r4row
-         |UNION ALL SELECT nlist, nprobe, recall_bp FROM r8row
-         |UNION ALL SELECT nlist, nprobe, recall_bp FROM r16row""".stripMargin
-    },
-    "ivf_autotune" -> ivfAutotuneOracle,
-    // bigram twin of unigram_logprob: row-local bigram build, corpus
-    // count, digit-log sum — fully replayed
-    "bigram_logprob" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS a FROM documents),
-        |i AS (SELECT doc_id, a, unnest(generate_series(1, len(a) - 1)) AS i
-        |  FROM t WHERE len(a) >= 2),
-        |g AS (SELECT doc_id, a[i] || ' ' || a[i + 1] AS bg FROM i),
-        |c AS (SELECT bg, count(*) AS cnt FROM g GROUP BY 1),
-        |j AS (SELECT doc_id, CAST(length(CAST(cnt AS VARCHAR)) AS BIGINT) AS d
-        |  FROM g JOIN c USING (bg))
-        |SELECT doc_id, count(*) AS n_bigram, CAST(sum(d) AS BIGINT) AS lm2_digit_score,
-        |  CAST((10000 * CAST(sum(d) AS BIGINT)) // count(*) AS BIGINT) AS avg2_digit_bp
-        |FROM j GROUP BY 1""".stripMargin,
-    // interpolated Kneser-Ney bigram LM: the four count tables (bigram
-    // types, left-context totals, continuation counts, total types) and
-    // the discounted-probability floor(1e6*P) all train + score as exact
-    // integer rationals in both engines
-    "kn_bigram_logprob" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS a FROM documents),
-        |i AS (SELECT doc_id, a, unnest(generate_series(1, len(a) - 1)) AS i
-        |  FROM t WHERE len(a) >= 2),
-        |g AS (SELECT doc_id, a[i] AS w1, a[i + 1] AS w2 FROM i),
-        |db AS (SELECT doc_id, w1, w2, count(*) AS m FROM g GROUP BY 1, 2, 3),
-        |cb AS (SELECT w1, w2, count(*) AS c12 FROM g GROUP BY 1, 2),
-        |lft AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS n1w1
-        |  FROM cb GROUP BY 1),
-        |cont AS (SELECT w2, count(*) AS nw2 FROM cb GROUP BY 1),
-        |tot AS (SELECT count(*) AS nn FROM cb),
-        |ts AS (SELECT w1, w2,
-        |  (1000000 * (greatest(4 * c12 - 3, 0) * nn + 3 * n1w1 * nw2))
-        |    // (4 * c1 * nn) AS kn_ppm
-        |  FROM cb JOIN lft USING (w1) JOIN cont USING (w2) CROSS JOIN tot)
-        |SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigram,
-        |  CAST(sum(m * kn_ppm) AS BIGINT) AS kn_ppm_sum,
-        |  CAST(CAST(sum(m * kn_ppm) AS BIGINT) // CAST(sum(m) AS BIGINT)
-        |    AS BIGINT) AS avg_kn_ppm
-        |FROM db JOIN ts USING (w1, w2) GROUP BY 1""".stripMargin,
-    // NFC-normalize -> strip controls/zero-width -> collapse whitespace ->
-    // trim; the raw string is rebuilt from the SAME Scala constants the
-    // Spark query uses (NfdDecor*/ZwspTail interpolated as raw UTF-8)
-    "text_normalize" ->
-      s"""WITH r AS (SELECT doc_id, text ||
-         |  (CASE CAST(doc_id % 4 AS INTEGER)
-         |    WHEN 0 THEN '$NfdDecor0' WHEN 1 THEN '$NfdDecor1'
-         |    WHEN 2 THEN '$NfdDecor2' ELSE '' END) ||
-         |  chr(7) || chr(9) || ' tail' || chr(13) || chr(10) ||
-         |  '$ZwspTail' AS raw FROM documents),
-         |n AS (SELECT doc_id, raw,
-         |  trim(regexp_replace(regexp_replace(nfc_normalize(raw),
-         |    '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F\\x{200B}]', '', 'g'),
-         |    '\\s+', ' ', 'g')) AS norm_text FROM r)
-         |SELECT doc_id, norm_text, CAST(length(raw) AS BIGINT) AS n_raw,
-         |  CAST(length(norm_text) AS BIGINT) AS n_norm FROM n""".stripMargin,
-    // same synthesized raw URL, same rule set: lowercase scheme+host,
-    // strip default port / fragment / utm_* params / trailing slashes
-    "url_canonicalize" ->
-      s"""WITH r AS (SELECT doc_id,
-         |  (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END) || '://' ||
-         |  (CASE WHEN doc_id % 3 = 0 THEN 'WWW.News.'
-         |    WHEN doc_id % 3 = 1 THEN 'www.blog.' ELSE 'CDN.' END) ||
-         |  source ||
-         |  (CASE WHEN doc_id % 7 = 0 THEN '.ExAmple.CO.UK' ELSE '.ExAmple.COM' END) ||
-         |  (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':8080' END) ||
-         |  '/Articles/' || CAST(doc_id % 7 AS VARCHAR) ||
-         |  (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END) ||
-         |  '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) ||
-         |  '&utm_campaign=x&ref=home' ||
-         |  '#sec' || CAST(doc_id % 3 AS VARCHAR) AS raw FROM documents),
-         |p AS (SELECT doc_id,
-         |  lower(regexp_extract(raw, '^([A-Za-z]+)://', 1)) AS scheme,
-         |  lower(regexp_extract(regexp_extract(raw, '^[A-Za-z]+://([^/?#]+)', 1),
-         |    '^([^:]+)', 1)) AS host,
-         |  regexp_extract(regexp_extract(raw, '^[A-Za-z]+://([^/?#]+)', 1),
-         |    ':([0-9]+)$$', 1) AS port,
-         |  regexp_replace(regexp_extract(raw, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),
-         |    '/+$$', '') AS canon_path,
-         |  array_to_string(list_filter(
-         |    string_split(regexp_extract(raw, '\\?([^#]*)', 1), '&'),
-         |    q -> NOT starts_with(q, 'utm_') AND q <> ''), '&') AS canon_qs
-         |FROM r)
-         |SELECT doc_id,
-         |  scheme || '://' || host ||
-         |    (CASE WHEN port = '' OR (scheme = 'https' AND port = '443')
-         |      OR (scheme = 'http' AND port = '80')
-         |      THEN '' ELSE ':' || port END) ||
-         |    canon_path ||
-         |    (CASE WHEN canon_qs = '' THEN '' ELSE '?' || canon_qs END)
-         |    AS canon_url,
-         |  host,
-         |  (CASE WHEN regexp_extract(host, '([a-z0-9-]+\\.[a-z0-9-]+)$$', 1)
-         |      IN ($urlSuffixInList)
-         |    AND regexp_extract(host,
-         |      '([a-z0-9-]+\\.[a-z0-9-]+\\.[a-z0-9-]+)$$', 1) <> ''
-         |   THEN regexp_extract(host,
-         |      '([a-z0-9-]+\\.[a-z0-9-]+\\.[a-z0-9-]+)$$', 1)
-         |   ELSE regexp_extract(host, '([a-z0-9-]+\\.[a-z0-9-]+)$$', 1)
-         |   END) AS reg_domain,
-         |  CAST(len(list_filter(string_split(canon_path, '/'), s -> s <> ''))
-         |    AS BIGINT) AS path_depth
-         |FROM p""".stripMargin,
-    // margin-based bitext mining: cosine floor-quantized to int64
-    // nano-units, top-4 neighborhoods per side, ratio margin in ppm via
-    // integer division (all positive), mutual argmax with id tie-break
-    "bitext_margin" ->
-      s"""WITH s AS (SELECT vec_id AS src_id, CAST(embedding AS DOUBLE[]) AS emb
-         |  FROM embeddings WHERE vec_id % 2 = 0),
-         |t AS (SELECT vec_id AS tgt_id, CAST(embedding AS DOUBLE[]) AS emb
-         |  FROM embeddings WHERE vec_id % 2 <> 0),
-         |sc AS (SELECT s.src_id, t.tgt_id,
-         |  CAST(floor(list_cosine_similarity(s.emb, t.emb) * 1000000000.0)
-         |    AS BIGINT) AS cos_q
-         |  FROM s CROSS JOIN t),
-         |ta AS (SELECT src_id, tgt_id, cos_q, row_number() OVER (
-         |  PARTITION BY src_id ORDER BY cos_q DESC, tgt_id) AS r FROM sc),
-         |tb AS (SELECT src_id, tgt_id, cos_q, row_number() OVER (
-         |  PARTITION BY tgt_id ORDER BY cos_q DESC, src_id) AS r FROM sc),
-         |sa AS (SELECT src_id, CAST(sum(cos_q) AS BIGINT) AS sum_a
-         |  FROM ta WHERE r <= $BitextK GROUP BY 1),
-         |sb AS (SELECT tgt_id, CAST(sum(cos_q) AS BIGINT) AS sum_b
-         |  FROM tb WHERE r <= $BitextK GROUP BY 1),
-         |cand AS (SELECT src_id, tgt_id, cos_q FROM ta WHERE r <= $BitextK
-         |  UNION SELECT src_id, tgt_id, cos_q FROM tb WHERE r <= $BitextK),
-         |m AS (SELECT c.src_id, c.tgt_id, c.cos_q,
-         |  (${2 * BitextK} * 1000000 * c.cos_q) // (sum_a + sum_b) AS margin_ppm
-         |  FROM cand c JOIN sa USING (src_id) JOIN sb USING (tgt_id)
-         |  WHERE c.cos_q > 0 AND sum_a + sum_b > 0),
-         |w AS (SELECT src_id, tgt_id, cos_q, margin_ppm,
-         |  row_number() OVER (PARTITION BY src_id
-         |    ORDER BY margin_ppm DESC, tgt_id) AS rs,
-         |  row_number() OVER (PARTITION BY tgt_id
-         |    ORDER BY margin_ppm DESC, src_id) AS rt
-         |  FROM m)
-         |SELECT src_id, tgt_id, cos_q, margin_ppm FROM w
-         |WHERE rs = 1 AND rt = 1""".stripMargin,
-    // prefix-candidate bitext mining: shortlist by 32-dim prefix cosine,
-    // full-dim top-4 within the shortlist, then the identical margin tail
-    "bitext_margin_prefix" ->
-      (s"WITH $bitextBaseCtes,\n${bitextPrefixNbhCtes("p", BitextShortlist)},\n${bitextTailSql("p")}\n" +
-        "SELECT src_id, tgt_id, cos_q, margin_ppm FROM pmut"),
-    // recovery of the prefix pipeline vs the exact one — both pipelines
-    // replayed side by side with disjoint CTE prefixes
-    "bitext_prefix_recovery" ->
-      (s"WITH $bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"${bitextPrefixNbhCtes("p", BitextShortlist)},\n${bitextTailSql("p")},\n" +
-        """hits AS (SELECT count(*) AS n_common FROM emut JOIN pmut USING (src_id, tgt_id)),
-          |ne AS (SELECT count(*) AS n_exact FROM emut),
-          |np AS (SELECT count(*) AS n_prefix FROM pmut)
-          |SELECT n_exact, n_prefix, n_common,
-          |  (1000000 * n_common) // greatest(n_exact, 1) AS recovery_ppm
-          |FROM ne CROSS JOIN np CROSS JOIN hits""".stripMargin),
-    // recovery knob curve: both prefix rungs (shortlist 16 and 32)
-    // replayed against the exact pipeline, disjoint CTE prefixes
-    "bitext_recovery_curve" ->
-      (s"WITH $bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"${bitextPrefixNbhCtes("p", BitextShortlist)},\n${bitextTailSql("p")},\n" +
-        s"${bitextPrefixNbhCtes("r", BitextShortlist2)},\n${bitextTailSql("r")},\n" +
-        s"""ne AS (SELECT count(*) AS n_exact FROM emut),
-           |r16 AS (SELECT CAST($BitextShortlist AS BIGINT) AS shortlist, n_exact,
-           |  (SELECT count(*) FROM pmut) AS n_prefix,
-           |  (SELECT count(*) FROM emut JOIN pmut USING (src_id, tgt_id)) AS n_common
-           |  FROM ne),
-           |r32 AS (SELECT CAST($BitextShortlist2 AS BIGINT) AS shortlist, n_exact,
-           |  (SELECT count(*) FROM rmut) AS n_prefix,
-           |  (SELECT count(*) FROM emut JOIN rmut USING (src_id, tgt_id)) AS n_common
-           |  FROM ne)
-           |SELECT shortlist, n_exact, n_prefix, n_common,
-           |  (1000000 * n_common) // greatest(n_exact, 1) AS recovery_ppm
-           |FROM (SELECT * FROM r16 UNION ALL SELECT * FROM r32)""".stripMargin),
-    // ANN-candidate bitext mining: shared IVF codebook replay (training
-    // verbatim from ivfTrainCtes), probe/assign cell joins as candidate
-    // generator, identical margin tail
-    "bitext_margin_ann" ->
-      (s"WITH $ivfTrainCtes,\n$bitextBaseCtes,\n$bitextAnnNbhCtes,\n${bitextTailSql("v")}\n" +
-        "SELECT src_id, tgt_id, cos_q, margin_ppm FROM vmut"),
-    // recovery of the ANN-candidate pipeline vs the exact one — the
-    // scale-path check the r9 curve called for (fixed shortlist degrades
-    // with corpus size; cell candidates must not)
-    "bitext_ann_recovery" ->
-      (s"WITH $ivfTrainCtes,\n$bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"$bitextAnnNbhCtes,\n${bitextTailSql("v")},\n" +
-        """hits AS (SELECT count(*) AS n_common FROM emut JOIN vmut USING (src_id, tgt_id)),
-          |ne AS (SELECT count(*) AS n_exact FROM emut),
-          |na AS (SELECT count(*) AS n_ann FROM vmut)
-          |SELECT n_exact, n_ann, n_common,
-          |  (1000000 * n_common) // greatest(n_exact, 1) AS recovery_ppm
-          |FROM ne CROSS JOIN na CROSS JOIN hits""".stripMargin),
-    // recovery-vs-nprobe curve of the ANN candidate pass: every rung's
-    // probe/candidate/margin pipeline replayed with prefixed CTEs
-    // against the shared quantize/assign half and the exact pipeline
-    "bitext_ann_curve" -> {
-      val rungs = BitextAnnNprobeLadder.map(np =>
-        s"${bitextAnnRungCtes(np, s"w$np")},\n${bitextTailSql(s"w$np")}").mkString(",\n")
-      val rows = BitextAnnNprobeLadder.map(np =>
-        s"""r$np AS (SELECT CAST($np AS BIGINT) AS nprobe, n_exact,
-           |  (SELECT count(*) FROM w${np}mut) AS n_ann,
-           |  (SELECT count(*) FROM emut JOIN w${np}mut USING (src_id, tgt_id)) AS n_common
-           |  FROM ne)""".stripMargin).mkString(",\n")
-      val union = BitextAnnNprobeLadder.map(np => s"SELECT * FROM r$np")
-        .mkString("\nUNION ALL ")
-      s"WITH $ivfTrainCtes,\n$bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"$bitextAnnSharedCtes,\n$rungs,\n" +
-        s"""ne AS (SELECT count(*) AS n_exact FROM emut),
-           |$rows
-           |SELECT nprobe, n_exact, n_ann, n_common,
-           |  (1000000 * n_common) // greatest(n_exact, 1) AS recovery_ppm
-           |FROM ($union)""".stripMargin
-    },
-    // mined-bitext -> training-mix composition: pairs clearing the
-    // operating margin become per-language-pair parallel domains whose
-    // token mass water-fills alongside the monolingual sources
-    "bitext_mix_compose" ->
-      (s"WITH $bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"""mono AS (SELECT source AS domain,
-           |  CAST(sum(len(string_split(trim(text), ' '))) AS BIGINT) AS cap
-           |  FROM documents GROUP BY 1),
-           |meta AS (SELECT doc_id, lang,
-           |  CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS nt FROM documents),
-           |par AS (SELECT 'bitext:' || least(a.lang, c.lang) || '-' || greatest(a.lang, c.lang) AS domain,
-           |  CAST(sum(a.nt + c.nt) AS BIGINT) AS cap
-           |  FROM emut m JOIN meta a ON a.doc_id = m.src_id JOIN meta c ON c.doc_id = m.tgt_id
-           |  WHERE m.margin_ppm >= $BitextMixThreshold GROUP BY 1),
-           |wtd AS (SELECT * FROM mono UNION ALL SELECT * FROM par),
-           |wtt AS (SELECT CAST(sum(cap) AS BIGINT) AS total, count(*) AS n_dom FROM wtd),
-           |wts AS (SELECT domain, cap, total, n_dom, (total * 5000) // 10000 AS budget,
-           |  CAST(coalesce(sum(cap) OVER (ORDER BY cap, domain
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumcap_b,
-           |  CAST(coalesce(count(*) OVER (ORDER BY cap, domain
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumn_b
-           |  FROM wtd CROSS JOIN wtt),
-           |wtf AS (SELECT *, CASE WHEN cap * (n_dom - cumn_b) <= budget - cumcap_b
-           |  THEN 1 ELSE 0 END AS cond FROM wts),
-           |wtg AS (SELECT *, min(cond) OVER (ORDER BY cap, domain
-           |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 AS saturated FROM wtf),
-           |wtagg AS (SELECT CAST(coalesce(sum(CASE WHEN saturated THEN cap END), 0) AS BIGINT) AS satcap,
-           |  CAST(coalesce(sum(CASE WHEN saturated THEN 1 END), 0) AS BIGINT) AS satn FROM wtg)
-           |SELECT domain, cap AS cap_tokens,
-           |  CAST(CASE WHEN saturated THEN cap
-           |    ELSE (budget - satcap) // (n_dom - satn) END AS BIGINT) AS alloc_tokens,
-           |  saturated
-           |FROM wtg CROSS JOIN wtagg""".stripMargin),
-    // cross-lingual dedup composition: mutual pairs -> keep list (lower
-    // id survives, unpaired docs keep themselves)
-    "crosslingual_dedup" ->
-      (s"WITH $bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        """k AS (SELECT src_id AS vec_id, least(src_id, tgt_id) AS keep_id FROM emut
-          |  UNION ALL SELECT tgt_id, least(src_id, tgt_id) FROM emut)
-          |SELECT e.vec_id, coalesce(k.keep_id, e.vec_id) AS keep_id,
-          |  CASE WHEN coalesce(k.keep_id, e.vec_id) = e.vec_id
-          |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is_kept
-          |FROM (SELECT vec_id FROM embeddings) e LEFT JOIN k USING (vec_id)""".stripMargin),
-    // mining census: margin-threshold ladder -> pair yield + cosine mass
-    // (ladder VALUES generated from the same Scala constant)
-    "bitext_threshold_curve" ->
-      (s"WITH $bitextBaseCtes,\n$bitextExactNbhCtes,\n${bitextTailSql("e")},\n" +
-        s"""th AS (SELECT * FROM (VALUES ${BitextThresholdLadder.map(t => s"(CAST($t AS BIGINT))").mkString(", ")}) t(threshold_ppm))
-           |SELECT th.threshold_ppm, count(m.src_id) AS n_pairs,
-           |  CAST(coalesce(sum(m.cos_q), 0) AS BIGINT) AS sum_cos_q
-           |FROM th LEFT JOIN emut m ON m.margin_ppm >= th.threshold_ppm
-           |GROUP BY 1""".stripMargin),
-    // hubness remediation: global-mean centering (quantized-grid integer
-    // sums -> bit-identical s/n doubles), COSINE-ranked exact rebuild,
-    // before/after in-degree census (raw variant cosine-ranked too: L2
-    // is translation-invariant, so an L2 census would be vacuous for
-    // centering by construction)
-    "hubness_centered" ->
-      (s"""WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |rbn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-        |radj AS MATERIALIZED ${sqlUnitAdj("rbn", 16)},
-        |qb AS (SELECT vec_id,
-          |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-          |  FROM b),
-          |mexp AS (SELECT CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e FROM qb),
-          |mu AS (SELECT pos, CAST(sum(e) AS DOUBLE) / count(*) AS mu FROM mexp GROUP BY pos),
-          |muv AS (SELECT array_agg(mu ORDER BY pos) AS mv FROM mu),
-          |cb AS (SELECT vec_id,
-          |  list_transform(generate_series(1, 64), ii -> CAST(qv[ii] AS DOUBLE) - mv[ii]) AS cv
-          |  FROM qb CROSS JOIN muv),
-          |cbn AS (SELECT vec_id, ${sqlUnit("cv")} AS nv FROM cb),
-          |cadj AS MATERIALIZED ${sqlUnitAdj("cbn", 16)},
-          |occ_r AS (SELECT neighbor_id, count(*) AS k_occ FROM radj GROUP BY 1),
-          |occ_c AS (SELECT neighbor_id, count(*) AS k_occ FROM cadj GROUP BY 1),
-          |cr AS (SELECT 'raw' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-          |    count(*) AS n_vectors
-          |  FROM b LEFT JOIN occ_r o ON b.vec_id = o.neighbor_id GROUP BY 1, 2),
-          |cc AS (SELECT 'centered' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-          |    count(*) AS n_vectors
-          |  FROM b LEFT JOIN occ_c o ON b.vec_id = o.neighbor_id GROUP BY 1, 2)
-          |SELECT variant, k_occ, n_vectors FROM cr
-          |UNION ALL SELECT variant, k_occ, n_vectors FROM cc""".stripMargin),
-    // full-covariance ZCA whitening: int64 Gram moments -> generated
-    // Newton-Schulz matmul CTE unroll (bit-exact vs the driver mirror),
-    // row-local W*(x-mu) transform, rebuild, census
-    "hubness_zca" -> zcaOracleSql,
-    // the hubness diagnosis run entirely on blocked builds: raw blocked
-    // adjacency (IVF cells of the raw space), ZCA chain replay, fresh
-    // IVF training IN the transformed space, blocked zca adjacency,
-    // both in-degree censuses
-    "hubness_zca_cellblocked" -> {
-      def idist(a: String, b: String): String =
-        s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-      s"""WITH $ivfTrainCtes,
-         |hbn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-         |hcba AS MATERIALIZED (SELECT vec_id, cid FROM (
-         |  SELECT bq.vec_id, c.cid, row_number() OVER (PARTITION BY bq.vec_id
-         |    ORDER BY ${idist("bq.qv", "c.cvec")}, c.cid) AS rn
-         |  FROM bq CROSS JOIN c2 c) WHERE rn <= 3),
-         |hcand AS (SELECT DISTINCT a.vec_id AS node_id, b2.vec_id AS cand_id
-         |  FROM hcba a JOIN hcba b2 USING (cid) WHERE a.vec_id <> b2.vec_id),
-         |hccadj AS MATERIALIZED (SELECT node_id, neighbor_id FROM (
-         |  SELECT p.node_id, p.cand_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.node_id
-         |      ORDER BY -list_inner_product(na.nv, nb.nv), p.cand_id) AS rank
-         |  FROM hcand p JOIN hbn na ON na.vec_id = p.node_id
-         |    JOIN hbn nb ON nb.vec_id = p.cand_id) WHERE rank <= 16),
-         |$zcaChainCtes,
-         |zvq AS MATERIALIZED (SELECT vec_id,
-         |  list_transform(cv, e -> CAST(floor(e / 1048576 * 1048576 + 0.5) AS BIGINT)) AS qv FROM ztr),
-         |${ivfTrainCtesOnQv("zvq", "zz")},
-         |zbn AS (SELECT vec_id, ${sqlUnit("cv")} AS nv FROM ztr),
-         |zzcells AS MATERIALIZED (SELECT vec_id, cid FROM (
-         |  SELECT t.vec_id, c.cid, row_number() OVER (PARTITION BY t.vec_id
-         |    ORDER BY ${idist("t.qv", "c.cvec")}, c.cid) AS rn
-         |  FROM zvq t CROSS JOIN zzc2 c) WHERE rn <= 3),
-         |zzcand AS (SELECT DISTINCT a.vec_id AS node_id, b2.vec_id AS cand_id
-         |  FROM zzcells a JOIN zzcells b2 USING (cid) WHERE a.vec_id <> b2.vec_id),
-         |zzadj AS MATERIALIZED (SELECT node_id, neighbor_id FROM (
-         |  SELECT p.node_id, p.cand_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.node_id
-         |      ORDER BY -list_inner_product(na.nv, nb.nv), p.cand_id) AS rank
-         |  FROM zzcand p JOIN zbn na ON na.vec_id = p.node_id
-         |    JOIN zbn nb ON nb.vec_id = p.cand_id) WHERE rank <= 16),
-         |occ_rb AS (SELECT neighbor_id, count(*) AS k_occ FROM hccadj GROUP BY 1),
-         |occ_zb AS (SELECT neighbor_id, count(*) AS k_occ FROM zzadj GROUP BY 1),
-         |crb AS (SELECT 'raw_blocked' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-         |    count(*) AS n_vectors
-         |  FROM b LEFT JOIN occ_rb o ON b.vec_id = o.neighbor_id GROUP BY 1, 2),
-         |czb AS (SELECT 'zca_blocked' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-         |    count(*) AS n_vectors
-         |  FROM b LEFT JOIN occ_zb o ON b.vec_id = o.neighbor_id GROUP BY 1, 2)
-         |SELECT variant, k_occ, n_vectors FROM crb
-         |UNION ALL SELECT variant, k_occ, n_vectors FROM czb""".stripMargin
-    },
-    // cell-blocked cosine build vs the exact cosine adjacency: IVF
-    // training replay + 3-cell multi-assignment + per-cell candidates
-    // ranked by inner product over the shared unit vectors
-    "hubness_cellblocked_quality" -> {
-      def idist(a: String, b: String): String =
-        s"CAST(list_sum(list_transform(generate_series(1, 64), ii -> ($a[ii] - $b[ii]) * ($a[ii] - $b[ii]))) AS BIGINT)"
-      s"""WITH $ivfTrainCtes,
-         |hbn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-         |hxcos AS MATERIALIZED ${sqlUnitAdj("hbn", 16)},
-         |hcba AS MATERIALIZED (SELECT vec_id, cid FROM (
-         |  SELECT bq.vec_id, c.cid, row_number() OVER (PARTITION BY bq.vec_id
-         |    ORDER BY ${idist("bq.qv", "c.cvec")}, c.cid) AS rn
-         |  FROM bq CROSS JOIN c2 c) WHERE rn <= 3),
-         |hcand AS (SELECT DISTINCT a.vec_id AS node_id, b2.vec_id AS cand_id
-         |  FROM hcba a JOIN hcba b2 USING (cid) WHERE a.vec_id <> b2.vec_id),
-         |hccadj AS MATERIALIZED (SELECT node_id, neighbor_id FROM (
-         |  SELECT p.node_id, p.cand_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.node_id
-         |      ORDER BY -list_inner_product(na.nv, nb.nv), p.cand_id) AS rank
-         |  FROM hcand p JOIN hbn na ON na.vec_id = p.node_id
-         |    JOIN hbn nb ON nb.vec_id = p.cand_id) WHERE rank <= 16),
-         |hhe AS (SELECT count(*) AS n_hits FROM hxcos JOIN hccadj USING (node_id, neighbor_id)),
-         |hte AS (SELECT count(*) AS n_exact FROM hxcos),
-         |htb AS (SELECT count(*) AS n_blocked FROM hccadj)
-         |SELECT CAST(n_exact AS BIGINT) AS n_exact,
-         |  CAST(n_blocked AS BIGINT) AS n_blocked,
-         |  CAST((n_hits * 10000) // n_exact AS BIGINT) AS edge_recall_bp
-         |FROM hte CROSS JOIN htb CROSS JOIN hhe""".stripMargin
-    },
-    // diagonal whitening: center + unit per-dim variance (exact-int
-    // Σx/Σx² -> identical variance/scale doubles), rebuild, census
-    "hubness_whitened" ->
-      (s"""WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |wrbn AS (SELECT vec_id, ${sqlUnit("CAST(embedding AS DOUBLE[])")} AS nv FROM b),
-        |wradj AS MATERIALIZED ${sqlUnitAdj("wrbn", 16)},
-        |wqb AS (SELECT vec_id,
-          |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-          |  FROM b),
-          |wexp AS (SELECT CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos, unnest(qv) AS e FROM wqb),
-          |wst AS (SELECT pos, CAST(sum(e) AS BIGINT) AS sx,
-          |  CAST(sum(e * e) AS BIGINT) AS sxx, count(*) AS n FROM wexp GROUP BY pos),
-          |wsc AS (SELECT pos, CAST(sx AS DOUBLE) / n AS mu,
-          |  CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-          |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-          |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) > 0
-          |    THEN 1.0 / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-          |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-          |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-          |    ELSE 1.0 END AS scl FROM wst),
-          |wmu AS (SELECT array_agg(mu ORDER BY pos) AS mv,
-          |  array_agg(scl ORDER BY pos) AS sv FROM wsc),
-          |wb AS (SELECT vec_id,
-          |  list_transform(generate_series(1, 64),
-          |    ii -> (CAST(qv[ii] AS DOUBLE) - mv[ii]) * sv[ii]) AS cv
-          |  FROM wqb CROSS JOIN wmu),
-          |wbn AS (SELECT vec_id, ${sqlUnit("cv")} AS nv FROM wb),
-          |wadj AS MATERIALIZED ${sqlUnitAdj("wbn", 16)},
-          |wocc_r AS (SELECT neighbor_id, count(*) AS k_occ FROM wradj GROUP BY 1),
-          |wocc_w AS (SELECT neighbor_id, count(*) AS k_occ FROM wadj GROUP BY 1),
-          |wcr AS (SELECT 'raw' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-          |    count(*) AS n_vectors
-          |  FROM b LEFT JOIN wocc_r o ON b.vec_id = o.neighbor_id GROUP BY 1, 2),
-          |wcw AS (SELECT 'whitened' AS variant, coalesce(o.k_occ, CAST(0 AS BIGINT)) AS k_occ,
-          |    count(*) AS n_vectors
-          |  FROM b LEFT JOIN wocc_w o ON b.vec_id = o.neighbor_id GROUP BY 1, 2)
-          |SELECT variant, k_occ, n_vectors FROM wcr
-          |UNION ALL SELECT variant, k_occ, n_vectors FROM wcw""".stripMargin),
-    // ROUGE-1/2: clipped per-gram multiplicity matches (min of the two
-    // sides' counts), recall/F1 as floor-ppm integer division
-    "rouge_overlap" ->
-      """WITH c AS (SELECT doc_id AS pair_id, string_split(trim(text), ' ') AS a
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |r AS (SELECT doc_id - 1 AS pair_id, string_split(trim(text), ' ') AS a
-        |  FROM documents WHERE doc_id % 2 <> 0),
-        |p AS (SELECT c.pair_id, c.a AS ca, r.a AS ra FROM c JOIN r USING (pair_id)),
-        |c1 AS (SELECT pair_id, g, count(*) AS cc FROM
-        |  (SELECT pair_id, unnest(ca) AS g FROM p) GROUP BY 1, 2),
-        |r1 AS (SELECT pair_id, g, count(*) AS cr FROM
-        |  (SELECT pair_id, unnest(ra) AS g FROM p) GROUP BY 1, 2),
-        |m1 AS (SELECT pair_id, CAST(sum(least(cc, cr)) AS BIGINT) AS m_1
-        |  FROM c1 JOIN r1 USING (pair_id, g) GROUP BY 1),
-        |c2 AS (SELECT pair_id, g, count(*) AS cc FROM
-        |  (SELECT pair_id, ca[i] || ' ' || ca[i + 1] AS g FROM
-        |    (SELECT pair_id, ca, unnest(generate_series(1, len(ca) - 1)) AS i
-        |     FROM p WHERE len(ca) >= 2)) GROUP BY 1, 2),
-        |r2 AS (SELECT pair_id, g, count(*) AS cr FROM
-        |  (SELECT pair_id, ra[i] || ' ' || ra[i + 1] AS g FROM
-        |    (SELECT pair_id, ra, unnest(generate_series(1, len(ra) - 1)) AS i
-        |     FROM p WHERE len(ra) >= 2)) GROUP BY 1, 2),
-        |m2 AS (SELECT pair_id, CAST(sum(least(cc, cr)) AS BIGINT) AS m_2
-        |  FROM c2 JOIN r2 USING (pair_id, g) GROUP BY 1),
-        |t AS (SELECT pair_id,
-        |  CAST(len(ca) AS BIGINT) AS t_cand_1, CAST(len(ra) AS BIGINT) AS t_ref_1,
-        |  CAST(greatest(len(ca) - 1, 0) AS BIGINT) AS t_cand_2,
-        |  CAST(greatest(len(ra) - 1, 0) AS BIGINT) AS t_ref_2 FROM p)
-        |SELECT pair_id, coalesce(m_1, 0) AS m_1, t_cand_1, t_ref_1,
-        |  (1000000 * coalesce(m_1, 0)) // greatest(t_ref_1, 1) AS rouge1_r_ppm,
-        |  (2000000 * coalesce(m_1, 0)) // greatest(t_ref_1 + t_cand_1, 1)
-        |    AS rouge1_f_ppm,
-        |  coalesce(m_2, 0) AS m_2, t_cand_2, t_ref_2,
-        |  (1000000 * coalesce(m_2, 0)) // greatest(t_ref_2, 1) AS rouge2_r_ppm,
-        |  (2000000 * coalesce(m_2, 0)) // greatest(t_ref_2 + t_cand_2, 1)
-        |    AS rouge2_f_ppm
-        |FROM t LEFT JOIN m1 USING (pair_id) LEFT JOIN m2 USING (pair_id)""".stripMargin,
-    // hubness: in-degree census of the exact degree-16 adjacency,
-    // zero-occurrence vectors included via the left join
-    "hubness_stats" ->
-      (s"WITH $graphBaseCtes,\n" +
-        """occ AS (SELECT neighbor_id, count(*) AS k_occ FROM gadj GROUP BY 1)
-          |SELECT coalesce(k_occ, CAST(0 AS BIGINT)) AS k_occ,
-          |  count(*) AS n_vectors
-          |FROM b LEFT JOIN occ ON b.vec_id = occ.neighbor_id
-          |GROUP BY 1""".stripMargin),
-    "knn_text_hashembed" -> hashEmbedKnnOracle,
-    "date_funcs" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS o_quarter,
-        |  count(*) AS n,
-        |  count(DISTINCT date_trunc('week', o_orderdate)) AS n_weeks,
-        |  CAST(sum(date_diff('day', CAST(o_orderdate AS DATE),
-        |    last_day(CAST(o_orderdate AS DATE)))) AS BIGINT) AS days_to_eom,
-        |  CAST(sum(dayofyear(o_orderdate)) AS BIGINT) AS sum_doy,
-        |  CAST(sum(CASE WHEN month(o_orderdate + INTERVAL 3 MONTH) = 2
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_land_feb
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-    "string_funcs" ->
-      """SELECT p_brand, count(*) AS n,
-        |  CAST(sum(length(regexp_replace(lower(p_name), '[aeiou]', '', 'g'))) AS BIGINT)
-        |    AS consonant_chars,
-        |  CAST(sum(strpos(p_name, ' ')) AS BIGINT) AS sum_first_space,
-        |  CAST(sum(length(split_part(p_type, ' ', 1))) AS BIGINT) AS first_word_chars,
-        |  CAST(sum(CASE WHEN reverse(p_brand) = p_brand THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_palindrome_brand
-        |FROM part GROUP BY 1""".stripMargin,
-    "null_semantics" ->
-      """WITH e AS (SELECT event_type,
-        |  nullif(user_id % 7, 0) AS a, nullif(event_id % 7, 0) AS b FROM events)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN a IS NOT DISTINCT FROM b THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_nullsafe_eq,
-        |  CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT) AS n_plain_eq,
-        |  CAST(sum(coalesce(a, 7)) AS BIGINT) AS sum_coalesce,
-        |  CAST(sum(CASE WHEN a IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_a
-        |FROM e GROUP BY 1""".stripMargin,
-    // unigram scoring replay + per-lang tercile + Knuth-mix keep rule
-    "ppl_bucket_mix" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-        |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-        |j AS (SELECT doc_id, CAST(length(CAST(cnt AS VARCHAR)) AS BIGINT) AS d
-        |  FROM t JOIN c USING (tok)),
-        |u AS (SELECT doc_id, count(*) AS n_tok,
-        |  CAST((10000 * CAST(sum(d) AS BIGINT)) // count(*) AS BIGINT) AS avg_bp
-        |  FROM j GROUP BY 1),
-        |l AS (SELECT u.doc_id, dd.lang, u.n_tok, u.avg_bp
-        |  FROM u JOIN documents dd USING (doc_id)),
-        |b AS (SELECT *, CAST(ntile(3) OVER (PARTITION BY lang
-        |    ORDER BY avg_bp DESC, doc_id) AS INTEGER) AS bucket FROM l),
-        |k AS (SELECT *, CASE bucket WHEN 1 THEN 10000 WHEN 2 THEN 5000 ELSE 2000 END AS keep_bps,
-        |  (((doc_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (doc_id % 4294967296 & 65535) * 2654435761) % 4294967296 % 10000 AS mixed
-        |  FROM b)
-        |SELECT lang, bucket, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |  CAST(sum(CASE WHEN mixed < keep_bps THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM k GROUP BY 1, 2""".stripMargin,
-    // TF-IDF VSM replay: tf aggregate, df prune at 9000 bp of the
-    // corpus (the fixture is stopword-dense — see knnTextTfidf),
-    // digit-log idf, token-space dot join, double-space norm product
-    "knn_text_tfidf" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY 1, 2),
-        |n AS (SELECT count(*) AS nd FROM documents),
-        |dfp AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |dff AS (SELECT tok, df FROM dfp, n WHERE df * 10000 < nd * 9000),
-        |wt AS (SELECT tf.doc_id, tf.tok,
-        |  CAST(tf.tf * (1 + length(CAST(n.nd AS VARCHAR))
-        |    - length(CAST(dff.df AS VARCHAR))) AS BIGINT) AS w
-        |  FROM tf JOIN dff USING (tok) CROSS JOIN n),
-        |nr AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS nrm FROM wt GROUP BY 1),
-        |q AS (SELECT doc_id AS query_id, tok, w AS qw FROM wt WHERE doc_id % 100 = 0),
-        |b AS (SELECT * FROM wt WHERE doc_id % 100 <> 0),
-        |d AS (SELECT q.query_id, b.doc_id, CAST(sum(q.qw * b.w) AS BIGINT) AS dot
-        |  FROM q JOIN b USING (tok) GROUP BY 1, 2),
-        |sc AS (SELECT d.query_id, d.doc_id AS neighbor_id,
-        |    CAST(floor(1000000.0 * d.dot
-        |      / sqrt(CAST(qn.nrm AS DOUBLE) * CAST(bn.nrm AS DOUBLE))) AS BIGINT) AS cos_ppm
-        |  FROM d JOIN nr qn ON qn.doc_id = d.query_id JOIN nr bn ON bn.doc_id = d.doc_id),
-        |r AS (SELECT query_id, neighbor_id, cos_ppm,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos_ppm DESC, neighbor_id) AS INTEGER) AS rank FROM sc)
-        |SELECT query_id, neighbor_id, rank, cos_ppm FROM r WHERE rank <= 5""".stripMargin,
-    // generator replay: 1-based ordinal via generate_series indexing,
-    // explode_outer's null row as unnest([NULL])
-    "generator_funcs" ->
-      """WITH d AS (SELECT doc_id, lang, string_split(trim(text), ' ') AS a FROM documents),
-        |i AS (SELECT lang, a, unnest(generate_series(1, least(len(a), 5))) AS p FROM d),
-        |g1 AS (SELECT lang, count(*) AS n_tok_rows,
-        |  CAST(sum(p * length(a[p])) AS BIGINT) AS pos_len_sum FROM i GROUP BY 1),
-        |j AS (SELECT lang, unnest(CASE WHEN doc_id % 5 = 0 THEN [NULL]::BIGINT[]
-        |  ELSE generate_series(1, 1 + doc_id % 3) END) AS s FROM documents),
-        |g2 AS (SELECT lang, count(*) AS n_seq_rows,
-        |  CAST(sum(coalesce(s, 0)) AS BIGINT) AS seq_sum,
-        |  CAST(sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_rows
-        |  FROM j GROUP BY 1)
-        |SELECT g1.lang, n_tok_rows, pos_len_sum, n_seq_rows, seq_sum, n_null_rows
-        |FROM g1 JOIN g2 USING (lang)""".stripMargin,
-    // universe key-sampling replay: same Knuth mix on both join sides
-    "join_cardinality_est" ->
-      """WITH ex AS (SELECT count(*) AS exact_rows
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |os AS (SELECT o_orderkey FROM orders WHERE
-        |  (((o_orderkey % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (o_orderkey % 4294967296 & 65535) * 2654435761) % 4294967296 % 16 = 0),
-        |ls AS (SELECT l_orderkey FROM lineitem WHERE
-        |  (((l_orderkey % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (l_orderkey % 4294967296 & 65535) * 2654435761) % 4294967296 % 16 = 0),
-        |es AS (SELECT CAST(count(*) * 16 AS BIGINT) AS est_rows
-        |  FROM os JOIN ls ON os.o_orderkey = ls.l_orderkey)
-        |SELECT CAST(exact_rows AS BIGINT) AS exact_rows, est_rows,
-        |  CAST(abs(est_rows - exact_rows) * 10000 // exact_rows AS BIGINT) AS err_bp
-        |FROM ex CROSS JOIN es""".stripMargin,
-    "median_mode_stats" ->
-      """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-        |  event_id FROM events),
-        |r AS (SELECT event_type, cents,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY cents, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM e),
-        |med AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-        |    CAST(sum(cents * (CASE WHEN n % 2 = 1 THEN 2 ELSE 1 END)) AS BIGINT)
-        |      AS median_x2_cents
-        |  FROM r WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2 GROUP BY 1),
-        |c AS (SELECT event_type, cents, count(*) AS cnt FROM e GROUP BY 1, 2),
-        |m AS (SELECT event_type, cents AS mode_cents, CAST(cnt AS BIGINT) AS mode_count,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY cnt DESC, cents) AS mrn
-        |  FROM c)
-        |SELECT med.event_type, med.n, med.median_x2_cents, m.mode_cents, m.mode_count
-        |FROM med JOIN m USING (event_type) WHERE m.mrn = 1""".stripMargin,
-    "incremental_neardup" -> minhashIncrementalOracle,
-    "substring_dedup" ->
-      // full replay: 12-token window PolyHashes WITH positions → df-cap 50
-      // → position-aware hash equi-join → diagonal gaps-and-islands →
-      // longest shared run per pair, ≥ 20 tokens (run of c windows spans
-      // c + 11 tokens)
-      s"""WITH t AS MATERIALIZED (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |gr AS MATERIALIZED (SELECT doc_id, list_transform(
-        |    [array_to_string(toks[i:i+11], ' ') for i in generate_series(1, greatest(len(toks) - 11, 1))],
-        |    x -> ${duckPolyHash("x", 257L, 1000000007L)}) AS hs FROM t),
-        |occ AS MATERIALIZED (SELECT doc_id, u.pos AS pos, u.h AS h FROM
-        |  (SELECT doc_id, unnest([{'pos': i - 1, 'h': hs[i]} for i in generate_series(1, len(hs))]) AS u FROM gr)),
-        |kept AS MATERIALIZED (SELECT doc_id, pos, h FROM occ WHERE h NOT IN
-        |  (SELECT h FROM occ GROUP BY h HAVING count(*) > 50)),
-        |m AS MATERIALIZED (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.pos AS pos_a,
-        |    a.pos - b.pos AS diag
-        |  FROM kept a JOIN kept b USING (h) WHERE a.doc_id < b.doc_id),
-        |r AS (SELECT id_a, id_b, diag, pos_a,
-        |    pos_a - row_number() OVER (PARTITION BY id_a, id_b, diag ORDER BY pos_a) AS grp FROM m),
-        |spans AS (SELECT id_a, id_b, count(*) + 11 AS span FROM r GROUP BY id_a, id_b, diag, grp)
-        |SELECT id_a, id_b, CAST(max(span) AS BIGINT) AS span_tokens FROM spans GROUP BY id_a, id_b
-        |HAVING max(span) >= 20""".stripMargin,
-    "simhash_neardup" -> simhashOracle,
-    "knn_hamming" -> hammingKnnOracle,
-    "doc_winnow" -> winnowOracle,
-    "knn_sq" -> sqKnnOracle,
-    "recall_sq" -> sqRecallOracle,
-    "knn_bq" -> bqKnnOracle,
-    "recall_bq" -> bqRecallOracle,
-    "knn_lsh" -> lshKnnOracle,
-    "recall_lsh" -> lshRecallOracle,
-    "knn_ivf_flat" -> ivfFlatKnnOracle,
-    "knn_ivf_filtered" -> ivfFilteredKnnOracle,
-    "recall_ivf_filtered" -> ivfFilteredRecallOracle,
-    "ivf_split_hot_cell" -> ivfSplitOracle,
-    "embedding_dq" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, len(qv) AS dim,
-        |  CAST(list_sum(list_transform(qv, e -> e * e)) AS BIGINT) AS nsq FROM v)
-        |SELECT count(*) AS n_vecs,
-        |  CAST(sum(CASE WHEN nsq = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |  min(nsq) AS min_norm_sq_q, max(nsq) AS max_norm_sq_q,
-        |  CAST(sum(CASE WHEN dim = 64 THEN 0 ELSE 1 END) AS BIGINT) AS n_bad_dim
-        |FROM s""".stripMargin,
-    "knn_ivf_flat_part" -> ivfFlatKnnOracle, // same logical answer, file-pruned plan
-    "knn_ivf_upsert" -> ivfUpsertKnnOracle,
-    "zorder_range_scan" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events
-        |WHERE user_id <= (SELECT max(user_id) // 10 FROM events)
-        |  AND ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-10'
-        |GROUP BY 1""".stripMargin,
-    "bucketed_join_agg" ->
-      // layout-independent answer: the bucketed tables must join to the
-      // same aggregate as the plain parquet join
-      """SELECT o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue, count(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "recall_ivf_flat" -> ivfFlatRecallOracle,
-    "knn_pq_flat" -> pqFlatKnnOracle,
-    "recall_pq_flat" -> pqFlatRecallOracle,
-    "knn_pq_perm" -> pqPermKnnOracle,
-    "recall_pq_perm" -> pqPermRecallOracle,
-    "pq_code_stats" -> (
-      s"""WITH $pqFlatCtes,
-        |sizes AS (SELECT CAST(sub_id AS BIGINT) AS sub_id,
-        |  CAST(code AS BIGINT) AS code, count(*) AS n_vecs FROM enc GROUP BY 1, 2),
-        |tot AS (SELECT sub_id, sum(n_vecs) AS n, sum(n_vecs * n_vecs) AS ss,
-        |  count(*) AS nl FROM sizes GROUP BY 1)
-        |SELECT s.sub_id, s.code, s.n_vecs,
-        |  CAST((t.nl * t.ss * 10000) // (t.n * t.n) AS BIGINT) AS imbalance_bp
-        |FROM sizes s JOIN tot t USING (sub_id)""".stripMargin),
-    "knn_ivfpq" -> ivfPqKnnOracle,
-    "knn_ivfpq_part" -> ivfPqKnnOracle, // same logical answer, file-pruned plan
-    "recall_ivfpq" -> ivfPqRecallOracle,
-    "knn_prefix" -> prefixKnnOracle,
-    "knn_prefix_part" -> prefixKnnOracle, // same logical answer, column-pruned plan
-    "recall_prefix" -> prefixRecallOracle,
-    "knn_mips" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY q.query_id
-        |           ORDER BY -list_inner_product(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id
-        |         ) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b)
-        |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin,
-    "rare_token_stats" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-        |df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY tok)
-        |SELECT t.doc_id, count(*) AS n_tokens,
-        |  CAST(sum(CASE WHEN df.df < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare,
-        |  CAST(sum(CASE WHEN df.df < 5 THEN 1 ELSE 0 END) AS BIGINT) * 10000
-        |    // count(*) AS rare_bp
-        |FROM toks t JOIN df ON df.tok = t.tok
-        |GROUP BY t.doc_id""".stripMargin,
-    "fvecs_roundtrip" ->
-      // positional fvecs id = rank of vec_id in the exported base; the
-      // digest replays the 2^20 grid quantization on the parquet floats
-      """WITH b AS (SELECT vec_id, embedding,
-        |  row_number() OVER (ORDER BY vec_id) - 1 AS id
-        |  FROM embeddings WHERE vec_id % 20 <> 0)
-        |SELECT id, CAST(list_sum(list_transform(embedding,
-        |  e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT))) AS BIGINT) AS qsum
-        |FROM b""".stripMargin,
-    "csv_roundtrip" ->
-      // the CSV round-trip must be lossless: the per-lang text hash sums
-      // computed over the re-read CSV must equal the parquet-direct ones
-      s"""SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(${duckPolyHash("text", 257L, 1000000007L)}) AS BIGINT) AS text_hash_sum
-        |FROM documents GROUP BY lang""".stripMargin,
-    "jsonl_roundtrip" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  min(epoch_ms(ts)) AS min_ts_ms, max(epoch_ms(ts)) AS max_ts_ms,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "stratified_sample" ->
-      """WITH h AS (SELECT vec_id, label, vec_id % 4294967296 AS a FROM embeddings),
-        |m AS (SELECT vec_id, label,
-        |  (((a >> 16) * 2654435761) % 65536 * 65536 + (a & 65535) * 2654435761)
-        |    % 4294967296 AS mixed FROM h)
-        |SELECT vec_id, label FROM m WHERE mixed % 100 < 10""".stripMargin,
-    "knn_exact" -> knnOracle,
-    "knn_matryoshka" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding[1:32] AS DOUBLE[]) AS emb FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, CAST(embedding[1:32] AS DOUBLE[]) AS emb FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY q.query_id
-        |           ORDER BY list_distance(q.emb, b.emb), b.vec_id
-        |         ) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b)
-        |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin,
-    "recall_matryoshka" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |gt AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         row_number() OVER (PARTITION BY q.query_id
-        |           ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS rank
-        |  FROM q CROSS JOIN b) WHERE rank <= 10),
-        |pr AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         row_number() OVER (PARTITION BY q.query_id
-        |           ORDER BY list_distance(CAST(q.embedding[1:32] AS DOUBLE[]), CAST(b.embedding[1:32] AS DOUBLE[])), b.vec_id) AS rank
-        |  FROM q CROSS JOIN b) WHERE rank <= 10),
-        |hits AS (SELECT count(*) AS n_hits FROM gt JOIN pr USING (query_id, neighbor_id)),
-        |total AS (SELECT count(*) AS n_gt FROM gt)
-        |SELECT (n_hits * 10000) // n_gt AS recall_bp FROM hits CROSS JOIN total""".stripMargin,
-    "stream_knn_search" -> knnOracle, // micro-batched union == batch answer
-    "knn_graph_upsert" -> graphUpsertKnnOracle,
-    "knn_graph_delete" -> graphDeleteKnnOracle,
-    "recall_graph_delete" -> graphDeleteRecallOracle,
-    "recall_graph_upsert" -> graphUpsertRecallOracle,
-    "knn_exact_window" -> knnOracle,
-    "knn_filtered" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 20 <> 0 AND label IN (0, 1, 2)),
-        |scored AS (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY q.query_id
-        |           ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id
-        |         ) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b)
-        |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin,
-    "knn_radius" ->
-      // sequential double fold (list_reduce, prepend 0) = the codegen
-      // kernel's left-to-right loop, bit-identical ⇒ the 1.40 boundary
-      // compare agrees exactly
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-        |  FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS be
-        |  FROM embeddings WHERE vec_id % 20 <> 0),
-        |d AS (SELECT query_id, b.vec_id AS neighbor_id,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(generate_series(1, len(qe)),
-        |      i -> (qe[i] - be[i]) * (qe[i] - be[i]))),
-        |    (acc, x) -> acc + x) AS d2
-        |  FROM q CROSS JOIN b)
-        |SELECT query_id, neighbor_id FROM d WHERE d2 <= 1.40""".stripMargin,
-    "ivf_list_stats" -> (
-      s"""WITH $ivfTrainCtes,
-        |sizes AS (SELECT cid, count(*) AS n_vecs FROM ab GROUP BY cid),
-        |tot AS (SELECT sum(n_vecs) AS n, sum(n_vecs * n_vecs) AS ss,
-        |  count(*) AS nl FROM sizes)
-        |SELECT s.cid, s.n_vecs,
-        |  CAST((tot.nl * tot.ss * 10000) // (tot.n * tot.n) AS BIGINT) AS imbalance_bp
-        |FROM sizes s CROSS JOIN tot""".stripMargin),
-    "index_advisor" ->
-      """WITH s AS (SELECT count(*) AS n FROM embeddings WHERE vec_id % 20 <> 0),
-        |c AS (
-        |  SELECT 'exact' AS strategy, n AS est_comps, n * 256 AS est_bytes FROM s
-        |  UNION ALL SELECT 'ivf_flat', 8 + (n * 2) // 8, 8 * 256 + ((n * 2) // 8) * 256 FROM s
-        |  UNION ALL SELECT 'graph', n // 16 + 1536, (n // 16 + 1536) * 256 FROM s
-        |  UNION ALL SELECT 'bq', n + 100, n * 8 + 100 * 256 FROM s)
-        |SELECT strategy, CAST(est_comps AS BIGINT) AS est_comps,
-        |  CAST(est_bytes AS BIGINT) AS est_bytes,
-        |  est_bytes = (SELECT min(est_bytes) FROM c) AS chosen
-        |FROM c""".stripMargin,
-    "cluster_balance_sample" -> (
-      s"""WITH $ivfTrainCtes,
-        |h AS (SELECT vec_id, cid, vec_id % 4294967296 AS a FROM ab),
-        |m AS (SELECT vec_id, cid,
-        |  (((a >> 16) * 2654435761) % 65536 * 65536 + (a & 65535) * 2654435761)
-        |    % 4294967296 % 1000000 AS bucket FROM h),
-        |r AS (SELECT cid, vec_id,
-        |  row_number() OVER (PARTITION BY cid ORDER BY bucket, vec_id) AS rn FROM m)
-        |SELECT cid, count(*) AS n_total,
-        |  CAST(sum(CASE WHEN rn <= 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(sum(CASE WHEN rn <= 40 THEN vec_id ELSE 0 END) AS BIGINT) AS kept_id_sum
-        |FROM r GROUP BY 1""".stripMargin),
-    "knn_grouped" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding, label FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |  CAST(row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q JOIN b USING (label))
-        |SELECT query_id, neighbor_id, rank FROM scored WHERE rank <= 10""".stripMargin,
-    "approx_distinct_parts" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_exact, true AS within_15pct
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "approx_quantile_events" ->
-      """SELECT event_type, count(*) AS n, true AS rank_ok
-        |FROM events GROUP BY 1""".stripMargin,
-    "cms_heavy_users" ->
-      """SELECT user_id, n_exact, true AS within_bound FROM (
-        |  SELECT user_id, count(*) AS n_exact FROM events GROUP BY 1
-        |  ORDER BY n_exact DESC, user_id LIMIT 10)""".stripMargin,
-    "incremental_agg" ->
-      """WITH c AS (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  min(cents) AS min_cents, max(cents) AS max_cents,
-        |  CAST(sum(cents) // count(*) AS BIGINT) AS avg_cents
-        |FROM c GROUP BY 1""".stripMargin,
-    "funnel_conversion" ->
-      """WITH v AS (SELECT user_id, min(ts) AS tv FROM events WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(e.ts) AS tc FROM events e JOIN v USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > v.tv GROUP BY 1),
-        |p AS (SELECT e.user_id, min(e.ts) AS tp FROM events e JOIN c USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.tc GROUP BY 1)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        |  (SELECT count(*) FROM c) AS n_click_after_view,
-        |  (SELECT count(*) FROM p) AS n_purchase_after_click""".stripMargin,
-    "knn_cosine" -> knnCosineOracle,
-    "knn_label_mrr" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (
-        |  SELECT q.query_id, b.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (
-        |           PARTITION BY q.query_id
-        |           ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id
-        |         ) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |first_hit AS (
-        |  SELECT s.query_id, min(s.rank) AS r1
-        |  FROM scored s
-        |  JOIN ql ON s.query_id = ql.query_id
-        |  JOIN bl ON s.neighbor_id = bl.neighbor_id
-        |  WHERE s.rank <= 10 AND ql.q_label = bl.b_label
-        |  GROUP BY s.query_id),
-        |rr AS (
-        |  SELECT COALESCE(CAST(10000 // f.r1 AS BIGINT), 0) AS rr_bp
-        |  FROM ql LEFT JOIN first_hit f ON ql.query_id = f.query_id)
-        |SELECT n_queries, rr_sum_bp, rr_sum_bp // n_queries AS mrr_bp
-        |FROM (SELECT CAST(count(*) AS BIGINT) AS n_queries,
-        |             CAST(sum(rr_bp) AS BIGINT) AS rr_sum_bp FROM rr)""".stripMargin,
-    "knn_update_identity" -> knnOracle,
-    "update_fraction_sweep" ->
-      // the oracle fingerprints the UNTOUCHED base: matching hashes prove
-      // delete∘insert = identity at each update fraction
-      """WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |s AS (SELECT count(*) AS n_rows, CAST(sum(vec_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(vec_id * vec_id) AS BIGINT) AS id_sq_sum,
-        |  CAST(sum(CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS e0_milli_sum FROM b)
-        |SELECT CAST(nc.update_pct AS BIGINT) AS update_pct, n_rows, id_sum,
-        |  id_sq_sum, e0_milli_sum
-        |FROM s, (SELECT unnest([25, 50, 75]) AS update_pct) nc""".stripMargin,
-    "recall_degraded" -> recallDegradedOracle,
-    "metrics_tail_summary" ->
-      """WITH r AS (SELECT user_id, value,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents, count(*) AS n_rows
-        |FROM r WHERE rn <= 5 GROUP BY user_id""".stripMargin,
-    "metrics_head_summary" ->
-      """WITH r AS (SELECT user_id, value,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents, count(*) AS n_rows
-        |FROM r WHERE rn <= 5 GROUP BY user_id""".stripMargin,
-    "multi_tenant_agg" ->
-      """SELECT event_type, CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents,
-        |  count(*) AS n_rows
-        |FROM events GROUP BY event_type""".stripMargin,
-    "multi_tenant_curve" ->
-      """WITH s AS (SELECT event_type AS backend, nc.num_clients,
-        |    user_id % nc.num_clients AS client,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events, (SELECT unnest([10, 20, 30, 40, 50]) AS num_clients) nc),
-        |c AS (SELECT backend, num_clients, client, count(*) AS n_rows,
-        |    sum(cents) AS sum_cents,
-        |    sum(CASE WHEN cents % 5 = 0 THEN 1 ELSE 0 END) AS hits
-        |  FROM s GROUP BY 1, 2, 3),
-        |r AS (SELECT *, (10000 * hits) // n_rows AS recall_bps FROM c)
-        |SELECT backend, num_clients,
-        |  CAST(sum(sum_cents) // count(*) AS BIGINT) AS mean_latency_cents,
-        |  CAST(sum(n_rows) // count(*) AS BIGINT) AS mean_qps_rows,
-        |  CAST(sum(n_rows) AS BIGINT) AS sum_qps_rows,
-        |  CAST(sum(recall_bps) // count(*) AS BIGINT) AS mean_recall_bps
-        |FROM r GROUP BY 1, 2""".stripMargin,
-    "svg_tenant_curve_chart" -> svgMultiSeriesOracle(tenantCurveBaseCtes,
-      "Per-client QPS vs Client Count", "Clients", "QPS"),
-    "pdf_tenant_curve_chart" -> pdfMultiSeriesOracle(tenantCurveBaseCtes,
-      "Per-client QPS vs Client Count", "Clients", "QPS"),
-    "event_regions" ->
-      """WITH f AS (SELECT user_id, event_id, event_type, ts FROM events
-        |  WHERE event_type IN ('signup', 'purchase')),
-        |m AS (SELECT user_id AS key, event_id AS start_event_id, event_type,
-        |  epoch_ms(ts) AS start_ms,
-        |  min(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS end_ms
-        |  FROM f)
-        |SELECT key, start_event_id, start_ms, end_ms FROM m
-        |WHERE event_type = 'signup' AND end_ms IS NOT NULL""".stripMargin,
-    "sessionize" ->
-      """WITH g AS (SELECT user_id AS key, event_id, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events)
-        |SELECT key, event_id,
-        |  CAST(sum(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY key ORDER BY ms, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |FROM g""".stripMargin,
-    "session_windows" ->
-      // session id via the running new-session sum, then per-session agg;
-      // end = last event + gap (Spark session_window semantics)
-      """WITH g AS (SELECT user_id, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms,
-        |  event_id FROM events),
-        |s AS (SELECT user_id, ms,
-        |  sum(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM g)
-        |SELECT user_id, min(ms) AS start_ms, max(ms) + 1800000 AS end_ms,
-        |  count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-    "range_join_events" ->
-      """SELECT c.event_id,
-        |  CAST(sum(CASE WHEN o.user_id <> c.user_id THEN 1 ELSE 0 END) AS BIGINT) AS n_nearby
-        |FROM events c JOIN events o
-        |  ON abs(epoch_ms(c.ts) - epoch_ms(o.ts)) <= 300000
-        |WHERE c.event_type = 'click'
-        |GROUP BY c.event_id""".stripMargin,
-    "upsert_guard" ->
-      // base (vec_id%20<>0) upserted with the overlapping %10=0 slice:
-      // the existence guard makes the result exactly the full table —
-      // a broken guard duplicates the %20=10 rows and fails the hash.
-      "SELECT vec_id, label FROM embeddings",
-    "log_roundtrip" ->
-      """WITH lines AS (SELECT printf(
-        |  'Interval %d: QPS = %.2f queries/sec, Latency = %.2f ms, Recall = %.4f',
-        |  CAST(event_id AS INTEGER), value, value * 2, value / 100) AS line FROM events)
-        |SELECT CAST(regexp_extract(line, 'Interval (\d+):', 1) AS INTEGER) AS interval,
-        |  CAST(regexp_extract(line, 'QPS = ([0-9.]+)', 1) AS DOUBLE) AS qps,
-        |  CAST(regexp_extract(line, 'Latency = ([0-9.]+)', 1) AS DOUBLE) AS latency_ms,
-        |  CAST(regexp_extract(line, 'Recall = ([0-9.]+)', 1) AS DOUBLE) AS recall
-        |FROM lines WHERE regexp_matches(line, 'Interval')""".stripMargin,
-    "pdf_interval_chart" -> pdfMultiSeriesOracle(intervalChartBaseCtes,
-      "Value over First 5 Intervals", "Interval", "Value bp"),
-    "svg_interval_chart" -> svgMultiSeriesOracle(intervalChartBaseCtes,
-      "Value over First 5 Intervals", "Interval", "Value bp"),
-    "pdf_qps_latency_chart" -> pdfDualAxisOracle,
-    "svg_qps_latency_chart" -> svgDualAxisOracle,
-    "event_props" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "text_stats" ->
-      """WITH t AS (SELECT doc_id, text, string_split(trim(text), ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS INTEGER) AS n_tokens,
-        |  CAST(len(list_distinct(toks)) AS INTEGER) AS n_distinct,
-        |  round(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-        |        / greatest(len(toks), 1), 4) AS avg_token_len,
-        |  round(CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-        |        / greatest(len(toks), 1), 4) AS stopword_ratio,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpe_tokens
-        |FROM t""".stripMargin,
-    "asof_join" ->
-      """WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |s AS (SELECT user_id, ts, event_id AS signup_id, value AS signup_value
-        |      FROM events WHERE event_type = 'signup')
-        |SELECT c.event_id, c.user_id,
-        |  coalesce(s.signup_id, -1) AS signup_id,
-        |  coalesce(s.signup_value, -1.0) AS signup_value
-        |FROM clicks c ASOF LEFT JOIN s
-        |  ON c.user_id = s.user_id AND c.ts >= s.ts""".stripMargin,
-    "top_words" ->
-      """SELECT word, count(*) AS df FROM (
-        |  SELECT doc_id, unnest(list_distinct(string_split(trim(text), ' '))) AS word
-        |  FROM documents)
-        |GROUP BY word ORDER BY df DESC, word LIMIT 20""".stripMargin,
-    "train_test_split" ->
-      """WITH h AS (SELECT label, vec_id % 4294967296 AS a FROM embeddings),
-        |m AS (SELECT label,
-        |  (((a >> 16) * 2654435761) % 65536 * 65536 + (a & 65535) * 2654435761)
-        |    % 4294967296 AS mixed FROM h)
-        |SELECT label,
-        |  CASE WHEN mixed % 100 < 80 THEN 'train' ELSE 'test' END AS split,
-        |  count(*) AS n
-        |FROM m GROUP BY 1, 2""".stripMargin,
-    // RM3-style PRF: seed retrieval -> frozen-integer expansion-term
-    // mining over the feedback docs -> expanded retrieval (both scoring
-    // passes are the proven bm25_topk machinery; expansion knobs
-    // interpolated from the shared Scala constants)
-    "bm25_prf" ->
-      (s"""WITH toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM documents),
-          |tf0 AS (SELECT doc_id, term, count(*) AS tf FROM toks
-          |       WHERE term IN (${HybridTerms.map(t => s"'$t'").mkString(",")}) GROUP BY 1, 2),
-          |dl AS (SELECT doc_id, len(string_split(trim(text), ' ')) AS dl FROM documents),
-          |n AS (SELECT count(*) AS n_docs FROM documents),
-          |df0 AS (SELECT term, count(*) AS df FROM tf0 GROUP BY 1),
-          |idf0 AS (SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM df0 CROSS JOIN n),
-          |avgdl AS (SELECT avg(dl) AS avgdl FROM dl),
-          |sc0 AS (SELECT tf0.doc_id,
-          |    round(sum(idf0.idf * (tf0.tf * 2.2)
-          |              / (tf0.tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl.avgdl))), 4) AS score
-          |  FROM tf0 JOIN idf0 USING (term) JOIN dl USING (doc_id) CROSS JOIN avgdl
-          |  GROUP BY tf0.doc_id),
-          |fb AS (SELECT doc_id FROM sc0 ORDER BY score DESC, doc_id LIMIT $PrfFeedbackDocs),
-          |exw AS (SELECT term, CAST(sum(least(tf, 3)) AS BIGINT) AS w FROM (
-          |  SELECT t.doc_id, t.term, count(*) AS tf FROM toks t JOIN fb USING (doc_id)
-          |  WHERE length(t.term) >= 4
-          |    AND t.term NOT IN (${HybridTerms.map(t => s"'$t'").mkString(",")})
-          |  GROUP BY 1, 2) GROUP BY 1),
-          |expk AS (SELECT term FROM exw ORDER BY w DESC, term LIMIT $PrfExpansionK),
-          |allt AS (SELECT term FROM (VALUES ${HybridTerms.map(t => s"('$t')").mkString(",")}) s(term)
-          |  UNION ALL SELECT term FROM expk),
-          |tf1 AS (SELECT doc_id, term, count(*) AS tf FROM toks JOIN allt USING (term) GROUP BY 1, 2),
-          |df1 AS (SELECT term, count(*) AS df FROM tf1 GROUP BY 1),
-          |idf1 AS (SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM df1 CROSS JOIN n),
-          |sc1 AS (SELECT tf1.doc_id,
-          |    round(sum(idf1.idf * (tf1.tf * 2.2)
-          |              / (tf1.tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl.avgdl))), 4) AS score
-          |  FROM tf1 JOIN idf1 USING (term) JOIN dl USING (doc_id) CROSS JOIN avgdl
-          |  GROUP BY tf1.doc_id)
-          |SELECT doc_id, score FROM sc1 ORDER BY score DESC, doc_id LIMIT $PrfFeedbackDocs""".stripMargin),
-    "bm25_topk" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('spark','join','query') GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, len(string_split(trim(text), ' ')) AS dl FROM documents),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |idf AS (SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM dfq CROSS JOIN n),
-        |avgdl AS (SELECT avg(dl) AS avgdl FROM dl),
-        |scored AS (SELECT tf.doc_id,
-        |    round(sum(idf.idf * (tf.tf * 2.2)
-        |              / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl.avgdl))), 4) AS score
-        |  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id) CROSS JOIN avgdl
-        |  GROUP BY tf.doc_id)
-        |SELECT doc_id, score FROM scored ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-    "rrf_fuse" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('spark','join','query') GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, len(string_split(trim(text), ' ')) AS dl FROM documents),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |idf AS (SELECT term, ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM dfq CROSS JOIN n),
-        |avgdl AS (SELECT avg(dl) AS avgdl FROM dl),
-        |bm AS (SELECT tf.doc_id,
-        |    round(sum(idf.idf * (tf.tf * 2.2)
-        |              / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl.avgdl))), 4) AS score
-        |  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id) CROSS JOIN avgdl
-        |  GROUP BY tf.doc_id),
-        |tfs AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS score FROM toks
-        |        WHERE term IN ('spark','join','query') GROUP BY 1),
-        |r1 AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM bm),
-        |r2 AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM tfs),
-        |u AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2)
-        |SELECT doc_id, round(sum(1.0 / (60 + rank)), 6) AS rrf_score
-        |FROM u GROUP BY doc_id""".stripMargin,
-    "hybrid_search" ->
-      s"WITH $hybridFusedCtes\nSELECT doc_id, rrf_score FROM fused",
-    // two-stage retrieval: fused top-50 shortlist -> frozen-integer
-    // cross-scorer (coverage^2 / capped-tf / pair proximity) -> top-10
-    "hybrid_rerank" ->
-      (s"WITH $hybridFusedCtes,\n" +
-        s"""cand AS (SELECT doc_id, rrf_score FROM fused ORDER BY rrf_score DESC, doc_id LIMIT $RerankShortlist),
-           |ptoks AS (SELECT d.doc_id,
-           |    CAST(generate_subscripts(string_split(trim(d.text), ' '), 1) AS INTEGER) AS pos,
-           |    unnest(string_split(trim(d.text), ' ')) AS term
-           |  FROM documents d JOIN cand USING (doc_id)),
-           |hqt AS (SELECT doc_id, pos, term FROM ptoks
-           |  WHERE term IN (${HybridTerms.map(t => s"'$t'").mkString(", ")})),
-           |hpt AS (SELECT doc_id, term, count(*) AS tf FROM hqt GROUP BY 1, 2),
-           |hcov AS (SELECT doc_id, count(*) AS coverage,
-           |  CAST(sum(least(tf, 3)) AS BIGINT) AS tf_capped FROM hpt GROUP BY 1),
-           |hpx AS (SELECT doc_id, CAST(sum(least(np, 5)) AS BIGINT) AS prox FROM (
-           |  SELECT a.doc_id, a.term AS ta, b.term AS tb, count(*) AS np
-           |  FROM hqt a JOIN hqt b ON a.doc_id = b.doc_id AND a.term < b.term
-           |    AND abs(a.pos - b.pos) <= 8
-           |  GROUP BY 1, 2, 3) GROUP BY 1),
-           |hsc AS (SELECT c.doc_id, c.rrf_score,
-           |  coalesce(hcov.coverage, 0) * coalesce(hcov.coverage, 0) * 10000
-           |    + coalesce(hcov.tf_capped, 0) * 100 + coalesce(hpx.prox, 0) AS cross_score
-           |  FROM cand c LEFT JOIN hcov USING (doc_id) LEFT JOIN hpx USING (doc_id))
-           |SELECT doc_id, rrf_score, cross_score, rerank_rank FROM (
-           |  SELECT doc_id, rrf_score, CAST(cross_score AS BIGINT) AS cross_score,
-           |    row_number() OVER (ORDER BY cross_score DESC, rrf_score DESC, doc_id) AS rerank_rank
-           |  FROM hsc) WHERE rerank_rank <= 10""".stripMargin),
-    "tfidf" ->
-      """WITH terms AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word FROM documents),
-        |tf AS (SELECT doc_id, word, count(*) AS tf FROM terms GROUP BY 1, 2),
-        |dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-        |SELECT tf.doc_id, tf.word,
-        |  round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.df), 4) AS tfidf
-        |FROM tf JOIN dfreq USING (word) CROSS JOIN n
-        |WHERE dfreq.df >= 50""".stripMargin,
-    "label_centroids" ->
-      """WITH u AS (SELECT label,
-        |  CAST(generate_subscripts(embedding, 1) - 1 AS INTEGER) AS pos,
-        |  unnest(embedding) AS e
-        |FROM embeddings)
-        |SELECT label, pos,
-        |  CAST(floor(avg(CAST(e AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS avg_q
-        |FROM u GROUP BY label, pos""".stripMargin,
-    "quality_filter" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        |  (len(toks) BETWEEN 10 AND 1000
-        |   AND round(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-        |             / greatest(len(toks), 1), 4) >= 2.0
-        |   AND len(list_distinct(toks)) >= 5) AS pass
-        |FROM t""".stripMargin,
-    "corpus_curate" ->
-      """WITH gated AS (
-        |  SELECT doc_id, text, lang, source, string_split(trim(text), ' ') AS toks
-        |  FROM documents
-        |  WHERE len(string_split(trim(text), ' ')) BETWEEN 10 AND 1000
-        |    AND round(CAST(list_sum(list_transform(string_split(trim(text), ' '), x -> length(x))) AS DOUBLE)
-        |              / greatest(len(string_split(trim(text), ' ')), 1), 4) >= 2.0
-        |    AND len(list_distinct(string_split(trim(text), ' '))) >= 5),
-        |keepers AS (
-        |  SELECT min(doc_id) AS doc_id
-        |  FROM gated GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))),
-        |deduped AS (SELECT g.* FROM gated g JOIN keepers USING (doc_id)),
-        |sets AS (SELECT doc_id, lang, source, list_distinct(toks) AS sh FROM deduped),
-        |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM sets a JOIN sets b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |kill AS (SELECT DISTINCT id_b AS doc_id FROM cand
-        |  WHERE (n_int * 10000) // (na + nb - n_int) >= 8000),
-        |survivors AS (SELECT d.* FROM deduped d LEFT JOIN kill k USING (doc_id)
-        |  WHERE k.doc_id IS NULL),
-        |c AS (SELECT doc_id, toks,
-        |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is'))) AS c_en,
-        |  len(list_filter(toks, x -> x IN ('le','la','et','les','des','un','une'))) AS c_fr,
-        |  len(list_filter(toks, x -> x IN ('der','die','und','das','ein','nicht'))) AS c_de,
-        |  len(list_filter(toks, x -> x IN ('el','los','y','las','una','que'))) AS c_es
-        |  FROM survivors)
-        |SELECT doc_id, CASE
-        |  WHEN greatest(c_en, c_fr, c_de, c_es) = 0 THEN 'unknown'
-        |  WHEN c_en = greatest(c_en, c_fr, c_de, c_es) THEN 'en'
-        |  WHEN c_fr = greatest(c_en, c_fr, c_de, c_es) THEN 'fr'
-        |  WHEN c_de = greatest(c_en, c_fr, c_de, c_es) THEN 'de'
-        |  WHEN c_es = greatest(c_en, c_fr, c_de, c_es) THEN 'es'
-        |  ELSE 'unknown' END AS pred_lang,
-        |  CAST(len(toks) AS INTEGER) AS n_tokens
-        |FROM c""".stripMargin,
-    "lang_id" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |c AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is'))) AS c_en,
-        |  len(list_filter(toks, x -> x IN ('le','la','et','les','des','un','une'))) AS c_fr,
-        |  len(list_filter(toks, x -> x IN ('der','die','und','das','ein','nicht'))) AS c_de,
-        |  len(list_filter(toks, x -> x IN ('el','los','y','las','una','que'))) AS c_es
-        |  FROM t)
-        |SELECT doc_id, CASE
-        |  WHEN greatest(c_en, c_fr, c_de, c_es) = 0 THEN 'unknown'
-        |  WHEN c_en = greatest(c_en, c_fr, c_de, c_es) THEN 'en'
-        |  WHEN c_fr = greatest(c_en, c_fr, c_de, c_es) THEN 'fr'
-        |  WHEN c_de = greatest(c_en, c_fr, c_de, c_es) THEN 'de'
-        |  WHEN c_es = greatest(c_en, c_fr, c_de, c_es) THEN 'es'
-        |  ELSE 'unknown' END AS pred_lang
-        |FROM c""".stripMargin,
-    "doc_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
-        |  md5(array_to_string(list_sort(string_split(trim(text), ' ')), ' ')) AS bag_fp
-        |FROM documents""".stripMargin,
-    "dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
-        |  min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY 1""".stripMargin,
-    "dedup_clusters" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, lang, source,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT id_a, id_b FROM c WHERE (n_int * 10000) // (na + nb - n_int) >= 8000),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id, id AS c FROM nodes
-        |  UNION
-        |  SELECT e.dst AS id, reach.c FROM reach JOIN edges e ON reach.id = e.src)
-        |SELECT id, min(c) AS component FROM reach GROUP BY id""".stripMargin,
-    "jaccard_threshold_profile" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |p AS (SELECT (n_int * 10000) // (na + nb - n_int) AS jaccard_bp FROM c)
-        |SELECT (jaccard_bp // 500) * 500 AS bucket_bp,
-        |  CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM p WHERE jaccard_bp >= 5000 GROUP BY 1""".stripMargin,
-    "dedup_rate_by_source" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.source AS sa, b.source AS sb,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |p AS (SELECT sa, sb FROM c WHERE (n_int * 10000) // (na + nb - n_int) >= 5000)
-        |SELECT least(sa, sb) AS source_lo, greatest(sa, sb) AS source_hi,
-        |  CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM p GROUP BY 1, 2""".stripMargin,
-    "leakage_safe_split" -> // cluster replay + representative-hash routing
-      """WITH RECURSIVE t AS (SELECT doc_id, lang, source,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT id_a, id_b FROM c WHERE (n_int * 10000) // (na + nb - n_int) >= 8000),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id, id AS c FROM nodes
-        |  UNION
-        |  SELECT e.dst AS id, reach.c FROM reach JOIN edges e ON reach.id = e.src),
-        |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
-        |rep AS (SELECT d.doc_id, coalesce(comp.component, d.doc_id) AS component
-        |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id),
-        |h AS (SELECT doc_id, component, component % 4294967296 AS a FROM rep)
-        |SELECT doc_id, component,
-        |  CASE WHEN (((a >> 16) * 2654435761) % 65536 * 65536
-        |    + (a & 65535) * 2654435761) % 4294967296 % 100 < 80
-        |  THEN 'train' ELSE 'test' END AS split
-        |FROM h""".stripMargin,
-    "dedup_keep_list" -> // cluster replay + quality-argmax representative
-      """WITH RECURSIVE t AS (SELECT doc_id, lang, source, text,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT id_a, id_b FROM c WHERE (n_int * 10000) // (na + nb - n_int) >= 8000),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id, id AS c FROM nodes
-        |  UNION
-        |  SELECT e.dst AS id, reach.c FROM reach JOIN edges e ON reach.id = e.src),
-        |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
-        |q AS (SELECT doc_id,
-        |  3 * CAST(len(string_split(trim(text), ' ')) AS BIGINT)
-        |  + 20 * CAST(len(list_filter(string_split(trim(text), ' '),
-        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT)
-        |  - 5 * CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS BIGINT)
-        |    AS score FROM documents),
-        |f AS (SELECT q.doc_id, coalesce(comp.component, q.doc_id) AS component, q.score
-        |  FROM q LEFT JOIN comp ON comp.id = q.doc_id)
-        |SELECT doc_id, component, score,
-        |  row_number() OVER (PARTITION BY component ORDER BY score DESC, doc_id) = 1 AS keep
-        |FROM f""".stripMargin,
-    "ngram_jaccard_pairs" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id),
-        |p AS (SELECT id_a, id_b, (n_int * 10000) // (na + nb - n_int) AS jaccard_bp FROM c)
-        |SELECT id_a, id_b, jaccard_bp FROM p WHERE jaccard_bp >= 5000""".stripMargin,
-    // exact semantics = all-pairs Jaccard (fine at oracle scale); the
-    // Spark side must reach the same rows through the prefix filter
-    "setsim_join" ->
-      """WITH t AS (SELECT doc_id, list_distinct(string_split(trim(text), ' ')) AS sh FROM documents),
-        |c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh)) AS n_int, len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM t a JOIN t b ON a.doc_id < b.doc_id),
-        |p AS (SELECT id_a, id_b, (n_int * 10000) // (na + nb - n_int) AS jaccard_bp FROM c)
-        |SELECT id_a, id_b, jaccard_bp FROM p WHERE jaccard_bp >= 6000""".stripMargin,
-    "embedding_neardup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.35""".stripMargin,
-    "multimodal_meta" ->
-      """SELECT doc_id AS media_id, 'text/plain' AS media_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS digest
-        |FROM documents""".stripMargin,
-    // ASCII-sanitized on both sides → per-byte pass == per-codepoint replay
-    "multimodal_embed" ->
-      """WITH d AS (SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '?', 'g') AS text FROM documents),
-        |c AS (SELECT doc_id, text, unnest(generate_series(1, length(text))) AS i FROM d),
-        |v AS (SELECT doc_id, (i - 1) % 8 AS j, ascii(substring(text, i, 1)) AS b FROM c),
-        |g AS (SELECT doc_id, j, CAST(sum(b) AS BIGINT) AS s FROM v GROUP BY doc_id, j),
-        |scaffold AS (SELECT doc_id, unnest(generate_series(0, 7)) AS j FROM d)
-        |SELECT sc.doc_id AS media_id, CAST(sc.j AS BIGINT) AS dim_idx,
-        |  CAST(coalesce(g.s, 0) AS BIGINT) AS feature
-        |FROM scaffold sc LEFT JOIN g ON g.doc_id = sc.doc_id AND g.j = sc.j""".stripMargin,
-    "json_funcs" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  CAST(sum(CASE WHEN json_extract_string(props, '$.k') IS NOT NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_parsed,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k_str,
-        |  CAST(sum(CASE WHEN json_extract_string(props, '$.missing') IS NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_missing
-        |FROM events GROUP BY 1""".stripMargin,
-    "order_cycle_time" ->
-      """WITH fs AS (SELECT l_orderkey, min(CAST(l_shipdate AS DATE)) AS ship_day
-        |  FROM lineitem GROUP BY 1)
-        |SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(date_diff('day', CAST(o_orderdate AS DATE), ship_day)) AS BIGINT)
-        |    AS sum_lag_days,
-        |  CAST(min(date_diff('day', CAST(o_orderdate AS DATE), ship_day)) AS BIGINT)
-        |    AS min_lag,
-        |  CAST(max(date_diff('day', CAST(o_orderdate AS DATE), ship_day)) AS BIGINT)
-        |    AS max_lag
-        |FROM orders JOIN fs ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
-    "repeat_purchase_rate" ->
-      """WITH c AS (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1)
-        |SELECT count(*) AS n_customers,
-        |  CAST(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeat,
-        |  CAST(max(n_orders) AS BIGINT) AS max_orders,
-        |  CAST(sum(n_orders) AS BIGINT) AS total_orders,
-        |  CAST((sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) * 10000)
-        |    // count(*) AS BIGINT) AS repeat_bp
-        |FROM c""".stripMargin,
-    "cumulative_distinct_users" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events GROUP BY 1),
-        |d AS (SELECT day, count(*) AS new_users FROM f GROUP BY 1)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, new_users,
-        |  CAST(sum(new_users) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-        |FROM d""".stripMargin,
-    "pareto_80_20" ->
-      """WITH s AS (SELECT o_custkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS x
-        |  FROM orders GROUP BY 1),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x DESC, o_custkey) AS rn,
-        |  count(*) OVER () AS n FROM s),
-        |a AS (SELECT CAST(max(n) AS BIGINT) AS n_customers,
-        |  CAST(max(n + 4) // 5 AS BIGINT) AS top20_customers,
-        |  CAST(sum(CASE WHEN rn <= (n + 4) // 5 THEN x ELSE 0 END) AS BIGINT) AS top20_cents,
-        |  CAST(sum(x) AS BIGINT) AS total_cents FROM r)
-        |SELECT n_customers, top20_customers, top20_cents, total_cents,
-        |  CAST((top20_cents * 10000) // total_cents AS BIGINT) AS share_bp
-        |FROM a""".stripMargin,
-    "weekly_seasonality" ->
-      """WITH d AS (SELECT CAST(isodow(o_orderdate) AS INTEGER) AS dow,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(sum(cents) AS BIGINT) AS total FROM d)
-        |SELECT dow, cents, CAST((cents * 7 * 10000) // total AS BIGINT) AS index_bp
-        |FROM d CROSS JOIN t""".stripMargin,
-    "autocorr_daily_revenue" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |d AS (SELECT day, CAST(sum(cents) AS BIGINT) // 100000 AS x FROM o GROUP BY 1),
-        |p AS (SELECT x, lead(x) OVER (ORDER BY day) AS y FROM d),
-        |q AS (SELECT * FROM p WHERE y IS NOT NULL),
-        |a AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |  CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-        |  CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy FROM q)
-        |SELECT n, CAST(floor(1000000.0 * CAST(n * sxy - sx * sy AS DOUBLE)
-        |  / sqrt(CAST(greatest(n * sxx - sx * sx, 1) AS DOUBLE)
-        |    * CAST(greatest(n * syy - sy * sy, 1) AS DOUBLE))) AS BIGINT) AS r1_ppm
-        |FROM a""".stripMargin,
-    "benford_digits" ->
-      """WITH c AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE round(o_totalprice * 100) > 0),
-        |d AS (SELECT CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM c),
-        |g AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM g)
-        |SELECT digit, n, CAST((n * 1000000) // n_total AS BIGINT) AS obs_ppm,
-        |  CAST(CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 WHEN 3 THEN 124939
-        |    WHEN 4 THEN 96910 WHEN 5 THEN 79181 WHEN 6 THEN 66947 WHEN 7 THEN 57992
-        |    WHEN 8 THEN 51153 ELSE 45757 END AS BIGINT) AS benford_ppm,
-        |  CAST(abs((n * 1000000) // n_total
-        |    - CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 WHEN 3 THEN 124939
-        |      WHEN 4 THEN 96910 WHEN 5 THEN 79181 WHEN 6 THEN 66947 WHEN 7 THEN 57992
-        |      WHEN 8 THEN 51153 ELSE 45757 END) AS BIGINT) AS dev_ppm
-        |FROM g CROSS JOIN t""".stripMargin,
-    "gini_customer_spend" ->
-      """WITH s AS (SELECT o_custkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS x
-        |  FROM orders GROUP BY 1),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x, o_custkey) AS i FROM s),
-        |a AS (SELECT count(*) AS n_customers, CAST(sum(x) AS BIGINT) AS total_cents,
-        |  CAST(sum(i * x) AS BIGINT) AS six FROM r)
-        |SELECT n_customers, total_cents,
-        |  CAST(floor(1000000.0
-        |    * CAST(2 * six - (n_customers + 1) * total_cents AS DOUBLE)
-        |    / CAST(n_customers * total_cents AS DOUBLE)) AS BIGINT) AS gini_ppm
-        |FROM a""".stripMargin,
-    "spearman_value_ts" ->
-      """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-        |  CAST(epoch_ms(ts) AS BIGINT) AS ms, event_id FROM events),
-        |r AS (SELECT event_type,
-        |  row_number() OVER (PARTITION BY event_type ORDER BY cents, event_id) AS r1,
-        |  row_number() OVER (PARTITION BY event_type ORDER BY ms, event_id) AS r2
-        |  FROM e),
-        |a AS (SELECT event_type, count(*) AS n,
-        |  CAST(sum((r1 - r2) * (r1 - r2)) AS BIGINT) AS d2_sum FROM r GROUP BY 1)
-        |SELECT event_type, n, d2_sum,
-        |  CAST(floor(1000000.0 * (1.0 - 6.0 * CAST(d2_sum AS DOUBLE)
-        |    / CAST(greatest(n * (n * n - 1), 1) AS DOUBLE))) AS BIGINT) AS rho_ppm
-        |FROM a""".stripMargin,
-    // CUSUM replay: floor-mean target, closed-form S_t = P_t − min(0, min P_j)
-    "cusum_changepoint" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |d AS (SELECT day, CAST(sum(cents) AS BIGINT) // 100000 AS x FROM o GROUP BY 1),
-        |t AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx FROM d),
-        |b AS (SELECT day, x, (sx - ((sx % n + n) % n)) // n AS mu FROM d CROSS JOIN t),
-        |p AS (SELECT day, x, mu, CAST(sum(x - mu) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp FROM b),
-        |m AS (SELECT day, x, mu, pp, least(0, min(pp) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS pmin FROM p)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, x,
-        |  CAST(pp - pmin AS BIGINT) AS cusum,
-        |  CAST(CASE WHEN pp - pmin > mu THEN 1 ELSE 0 END AS INTEGER) AS flag
-        |FROM m""".stripMargin,
-    "xcorr_event_types" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |dx AS (SELECT day, CAST(sum(cents) AS BIGINT) AS x FROM e
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |dy AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y FROM e
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |l AS (SELECT unnest(generate_series(0, 7)) AS lag),
-        |j AS (SELECT l.lag, dx.x, dy.y FROM l, dx, dy
-        |  WHERE dx.day + CAST(l.lag AS INTEGER) = dy.day),
-        |a AS (SELECT lag, count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |  CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-        |  CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy
-        |  FROM j GROUP BY 1)
-        |SELECT CAST(lag AS BIGINT) AS lag, n,
-        |  CAST(floor(1000000.0 * CAST(n * sxy - sx * sy AS DOUBLE)
-        |    / sqrt(CAST(greatest(n * sxx - sx * sx, 1) AS DOUBLE)
-        |      * CAST(greatest(n * syy - sy * sy, 1) AS DOUBLE))) AS BIGINT) AS r_ppm
-        |FROM a""".stripMargin,
-    // Mann–Kendall replay: integer sign census over the calendar pair
-    // join, tie-corrected variance numerator, one fixed-shape double
-    "mann_kendall_trend" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |d AS MATERIALIZED (SELECT day, CAST(sum(cents) AS BIGINT) // 100000 AS x
-        |  FROM o GROUP BY 1),
-        |p AS (SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1
-        |    WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        |  FROM d a JOIN d b ON a.day < b.day),
-        |tt AS (SELECT x, count(*) AS t FROM d GROUP BY 1),
-        |ta AS (SELECT CAST(sum(t) AS BIGINT) AS nd,
-        |  CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_adj FROM tt),
-        |v AS (SELECT p.s_stat, ta.nd,
-        |  greatest(1, ta.nd * (ta.nd - 1) * (2 * ta.nd + 5) - ta.tie_adj) AS var_num
-        |  FROM p CROSS JOIN ta),
-        |z AS (SELECT nd, s_stat, var_num,
-        |  CAST(floor(1000000.0 * CAST(CASE WHEN s_stat > 0 THEN s_stat - 1
-        |      WHEN s_stat < 0 THEN s_stat + 1 ELSE 0 END AS DOUBLE)
-        |    / sqrt(CAST(var_num AS DOUBLE) / 18.0)) AS BIGINT) AS z_ppm FROM v)
-        |SELECT nd AS n_days, s_stat, CAST(var_num AS BIGINT) AS var_num, z_ppm,
-        |  CAST(CASE WHEN z_ppm >= 1960000 THEN 1
-        |    WHEN z_ppm <= -1960000 THEN -1 ELSE 0 END AS INTEGER) AS trend
-        |FROM z""".stripMargin,
-    // Theil–Sen replay: pmod-adjusted floor-div slopes over the same
-    // calendar pairs, lower median at rank (m+1) div 2
-    "theil_sen_slope" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |d AS MATERIALIZED (SELECT day, CAST(sum(cents) AS BIGINT) // 100000 AS x
-        |  FROM o GROUP BY 1),
-        |pr AS (SELECT a.day AS aday, b.day AS bday,
-        |  (b.x - a.x) * 1000000 AS num,
-        |  CAST(date_diff('day', a.day, b.day) AS BIGINT) AS dd
-        |  FROM d a JOIN d b ON a.day < b.day),
-        |s AS MATERIALIZED (SELECT aday, bday,
-        |  (num - ((num % dd + dd) % dd)) // dd AS slope_u FROM pr),
-        |r AS (SELECT slope_u,
-        |  row_number() OVER (ORDER BY slope_u, aday, bday) AS r FROM s),
-        |t AS (SELECT count(*) AS m FROM s)
-        |SELECT CAST(t.m AS BIGINT) AS n_pairs,
-        |  CAST(r.slope_u AS BIGINT) AS slope_med_u
-        |FROM r CROSS JOIN t WHERE r.r = (t.m + 1) // 2""".stripMargin,
-    // KS replay: signed mass prefix over the distinct-value grid,
-    // entirely integer (D scaled by n1*n2)
-    "ks_two_sample" ->
-      """WITH o AS (SELECT o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS v FROM orders),
-        |c AS (SELECT c_custkey,
-        |  CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS a FROM customer),
-        |g AS (SELECT v, CAST(sum(a) AS BIGINT) AS c1,
-        |  CAST(sum(1 - a) AS BIGINT) AS c2
-        |  FROM o JOIN c ON o_custkey = c_custkey GROUP BY 1),
-        |t AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
-        |  CAST(sum(c2) AS BIGINT) AS n2 FROM g),
-        |p AS (SELECT v, n1, n2,
-        |  abs(CAST(sum(c1 * n2 - c2 * n1) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)) AS diff
-        |  FROM g CROSS JOIN t),
-        |m AS (SELECT max(diff) AS dm FROM p)
-        |SELECT max(p.n1) AS n_a, max(p.n2) AS n_b,
-        |  CAST((1000000::HUGEINT * max(p.diff)) // greatest(1, max(p.n1) * max(p.n2)) AS BIGINT) AS d_ppm,
-        |  CAST(min(p.v) AS BIGINT) AS at_cents
-        |FROM p CROSS JOIN m WHERE p.diff = m.dm""".stripMargin,
-    // reliability-diagram replay: same centroid/score CTEs as
-    // auc_label_score, then min-max ppm confidence → 10 bins
-    "ece_calibration" ->
-      """WITH qv AS (SELECT vec_id,
-        |    CASE WHEN label = 0 THEN 1 ELSE 0 END AS pos,
-        |    list_transform(embedding, e ->
-        |      CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |ex AS (SELECT vec_id, pos, generate_subscripts(qv, 1) AS d, unnest(qv) AS e FROM qv),
-        |ct AS (SELECT d,
-        |    (CAST(sum(e) AS BIGINT) - ((CAST(sum(e) AS BIGINT) % count(*) + count(*)) % count(*)))
-        |      // count(*) AS c
-        |  FROM ex GROUP BY 1),
-        |sc AS (SELECT vec_id, any_value(pos) AS pos, CAST(sum(e * c) AS BIGINT) AS score
-        |  FROM ex JOIN ct USING (d) GROUP BY vec_id),
-        |mm AS (SELECT min(score) AS smin, max(score) AS smax FROM sc),
-        |cf AS (SELECT pos, CAST(floor(1000000.0 * CAST(score - smin AS DOUBLE)
-        |    / CAST(greatest(1, smax - smin) AS DOUBLE)) AS BIGINT) AS conf_ppm
-        |  FROM sc CROSS JOIN mm),
-        |g AS (SELECT least(9, conf_ppm // 100000) AS bin, count(*) AS n,
-        |    CAST(sum(pos) AS BIGINT) AS n_pos,
-        |    CAST(sum(conf_ppm) AS BIGINT) AS sconf
-        |  FROM cf GROUP BY 1)
-        |SELECT CAST(bin AS BIGINT) AS bin, n, n_pos,
-        |  CAST((sconf - ((sconf % n + n) % n)) // n AS BIGINT) AS conf_ppm,
-        |  CAST((n_pos * 1000000) // n AS BIGINT) AS acc_ppm,
-        |  CAST(abs((sconf - ((sconf % n + n) % n)) // n
-        |    - (n_pos * 1000000) // n) AS BIGINT) AS gap_ppm
-        |FROM g""".stripMargin,
-    // κ replay: both classifier replays (k-NN vote + Rocchio centroid)
-    // composed, then the integer agreement/marginal census
-    "kappa_classifiers" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |votes AS (SELECT s.query_id, bl.b_label AS pred_label, count(*) AS votes
-        |  FROM scored s JOIN bl USING (neighbor_id) WHERE s.rank <= 10 GROUP BY 1, 2),
-        |knn AS (SELECT query_id, pred_label FROM (SELECT query_id, pred_label,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, pred_label) AS rn
-        |  FROM votes) WHERE rn = 1),
-        |bq AS (SELECT label,
-        |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE vec_id % 20 <> 0),
-        |g AS (SELECT label, CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos,
-        |  unnest(qv) AS e FROM bq),
-        |gm AS (SELECT label, pos, sum(e) AS s, count(*) AS cnt FROM g GROUP BY 1, 2),
-        |m AS (SELECT label, pos,
-        |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM gm),
-        |cl AS (SELECT label AS p_label, array_agg(c ORDER BY pos) AS cvec FROM m GROUP BY 1),
-        |qq AS (SELECT vec_id AS query_id,
-        |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE vec_id % 20 = 0),
-        |rsc AS (SELECT query_id, p_label,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY
-        |      CAST(list_sum(list_transform(generate_series(1, 64),
-        |        ii -> (qq.qv[ii] - cl.cvec[ii]) * (qq.qv[ii] - cl.cvec[ii]))) AS BIGINT),
-        |      p_label) AS rn
-        |  FROM qq CROSS JOIN cl),
-        |roc AS (SELECT query_id, p_label FROM rsc WHERE rn = 1),
-        |jn AS (SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN knn.pred_label = roc.p_label THEN 1 ELSE 0 END) AS BIGINT) AS agree
-        |  FROM knn JOIN roc USING (query_id)),
-        |m1 AS (SELECT pred_label AS l, count(*) AS m1 FROM knn GROUP BY 1),
-        |m2 AS (SELECT p_label AS l, count(*) AS m2 FROM roc GROUP BY 1),
-        |pe AS (SELECT CAST(sum(m1.m1 * m2.m2) AS BIGINT) AS s_marg FROM m1 JOIN m2 USING (l))
-        |SELECT n, agree,
-        |  CAST(floor(1000000.0 * CAST(n * agree - s_marg AS DOUBLE)
-        |    / CAST(greatest(n * n - s_marg, 1) AS DOUBLE)) AS BIGINT) AS kappa_ppm
-        |FROM jn CROSS JOIN pe""".stripMargin,
-    "vocab_coverage" ->
-      """WITH w AS (SELECT unnest(string_split(trim(text), ' ')) AS word FROM documents),
-        |tf AS (SELECT word, count(*) AS n FROM w GROUP BY 1),
-        |r AS (SELECT n, row_number() OVER (ORDER BY n DESC, word) AS r FROM tf),
-        |a AS (SELECT CAST(sum(n) AS BIGINT) AS total,
-        |  CAST(sum(CASE WHEN r <= 100 THEN n ELSE 0 END) AS BIGINT) AS c100,
-        |  CAST(sum(CASE WHEN r <= 1000 THEN n ELSE 0 END) AS BIGINT) AS c1000,
-        |  CAST(sum(CASE WHEN r <= 10000 THEN n ELSE 0 END) AS BIGINT) AS c10000 FROM r),
-        |k AS (SELECT CAST(100 AS BIGINT) AS vocab_k, c100 AS covered, total FROM a
-        |  UNION ALL SELECT 1000, c1000, total FROM a
-        |  UNION ALL SELECT 10000, c10000, total FROM a)
-        |SELECT vocab_k, covered, total,
-        |  CAST((covered * 1000000) // total AS BIGINT) AS coverage_ppm FROM k""".stripMargin,
-    // Rocchio replay: grid quantization, per-label floor-div mean
-    // centroids, exact integer distances, ties to the smaller label
-    "rocchio_classify" ->
-      """WITH bq AS (SELECT label,
-        |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE vec_id % 20 <> 0),
-        |g AS (SELECT label, CAST(generate_subscripts(qv, 1) AS INTEGER) AS pos,
-        |  unnest(qv) AS e FROM bq),
-        |gm AS (SELECT label, pos, sum(e) AS s, count(*) AS cnt FROM g GROUP BY 1, 2),
-        |m AS (SELECT label, pos,
-        |  ((2*s + cnt) - (((2*s + cnt) % (2*cnt) + 2*cnt) % (2*cnt))) // (2*cnt) AS c FROM gm),
-        |cl AS (SELECT label AS p_label, array_agg(c ORDER BY pos) AS cvec FROM m GROUP BY 1),
-        |qq AS (SELECT vec_id AS query_id, label AS q_label,
-        |  list_transform(embedding, e -> CAST(floor(CAST(e AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS qv
-        |  FROM embeddings WHERE vec_id % 20 = 0),
-        |sc AS (SELECT query_id, q_label, p_label,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY
-        |      CAST(list_sum(list_transform(generate_series(1, 64),
-        |        ii -> (qq.qv[ii] - cl.cvec[ii]) * (qq.qv[ii] - cl.cvec[ii]))) AS BIGINT),
-        |      p_label) AS rn
-        |  FROM qq CROSS JOIN cl)
-        |SELECT q_label, p_label, count(*) AS n FROM sc WHERE rn = 1 GROUP BY 1, 2""".stripMargin,
-    "k_anonymity" ->
-      """WITH g AS (SELECT lang, source, n_chars // 500 AS len_band,
-        |  count(*) AS sz FROM documents GROUP BY 1, 2, 3)
-        |SELECT lang, source, count(*) AS n_groups,
-        |  CAST(sum(CASE WHEN sz < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_small_groups,
-        |  CAST(sum(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT) AS rows_at_risk
-        |FROM g GROUP BY 1, 2""".stripMargin,
-    // χ² cells: dev exact int64, square/denominator through one
-    // fixed-shape double expression (identical in any IEEE engine)
-    "contingency_stats" ->
-      """WITH c AS (SELECT event_type, isodow(ts) AS dow, count(*) AS obs
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, CAST(sum(obs) AS BIGINT) AS row_n FROM c GROUP BY 1),
-        |k AS (SELECT dow, CAST(sum(obs) AS BIGINT) AS col_n FROM c GROUP BY 1),
-        |n AS (SELECT CAST(sum(obs) AS BIGINT) AS n_total FROM c),
-        |j AS (SELECT c.event_type, c.dow, c.obs,
-        |    c.obs * n.n_total - r.row_n * k.col_n AS dev,
-        |    r.row_n, k.col_n, n.n_total
-        |  FROM c JOIN r USING (event_type) JOIN k USING (dow) CROSS JOIN n)
-        |SELECT event_type, CAST(dow AS INTEGER) AS dow, obs,
-        |  CAST(floor(1000000.0 * (CAST(dev AS DOUBLE) * CAST(dev AS DOUBLE))
-        |    / (CAST(row_n AS DOUBLE) * CAST(col_n AS DOUBLE)
-        |      * CAST(n_total AS DOUBLE))) AS BIGINT) AS chi2_term_ppm
-        |FROM j""".stripMargin,
-    // Cavnar–Trenkle replay: trigram profiles (top-50 per lang), distinct
-    // overlap score, argmax with lexicographic ties, confusion matrix
-    "lang_id_ngram" ->
-      """WITH d AS (SELECT doc_id, lang, lower(text) AS t FROM documents),
-        |el AS (SELECT * FROM d WHERE length(t) >= 3),
-        |tg AS (SELECT doc_id, lang,
-        |  unnest(list_transform(generate_series(1, length(t) - 2),
-        |    i -> substring(t, i, 3))) AS g FROM el
-        |  WHERE (((doc_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (doc_id % 4294967296 & 65535) * 2654435761) % 4294967296 % 4 = 0),
-        |prof AS (SELECT lang AS p_lang, g FROM (
-        |  SELECT lang, g, count(*) AS cnt,
-        |    row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, g) AS rn
-        |  FROM tg GROUP BY lang, g) WHERE rn <= 50),
-        |dg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, length(t) - 2),
-        |    i -> substring(t, i, 3)))) AS g FROM el),
-        |sc AS (SELECT doc_id, p_lang FROM (
-        |  SELECT dg.doc_id, prof.p_lang, count(*) AS overlap,
-        |    row_number() OVER (PARTITION BY dg.doc_id
-        |      ORDER BY count(*) DESC, prof.p_lang) AS rn
-        |  FROM dg JOIN prof USING (g) GROUP BY dg.doc_id, prof.p_lang) WHERE rn = 1)
-        |SELECT d.lang, coalesce(sc.p_lang, 'unknown') AS predicted_lang,
-        |  count(*) AS n
-        |FROM d LEFT JOIN sc USING (doc_id) GROUP BY 1, 2""".stripMargin,
-    "regexp_funcs" ->
-      """SELECT lang, count(*) AS n,
-        |  CAST(sum(len(regexp_extract_all(text, '[0-9]+'))) AS BIGINT) AS n_digit_runs,
-        |  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]{4,}'))) AS BIGINT) AS n_long_words,
-        |  CAST(sum(length(regexp_extract(text, '([A-Za-z]+)', 1))) AS BIGINT) AS sum_first_alpha_len,
-        |  CAST(sum(CASE WHEN regexp_matches(text, '[0-9]') THEN 1 ELSE 0 END) AS BIGINT) AS n_with_digit
-        |FROM documents GROUP BY 1""".stripMargin,
-    "not_in_vs_not_exists" ->
-      """SELECT
-        |  (SELECT count(*) FROM orders WHERE o_custkey NOT IN
-        |     (SELECT CASE WHEN c_custkey % 1000 = 7 THEN NULL ELSE c_custkey END
-        |      FROM customer)) AS n_not_in_with_null,
-        |  (SELECT count(*) FROM orders o WHERE NOT EXISTS
-        |     (SELECT 1 FROM customer c
-        |      WHERE CASE WHEN c.c_custkey % 1000 = 7 THEN NULL
-        |            ELSE c.c_custkey END = o.o_custkey)) AS n_not_exists,
-        |  (SELECT count(*) FROM orders WHERE o_custkey NOT IN
-        |     (SELECT c_custkey FROM customer WHERE c_custkey % 1000 <> 7))
-        |    AS n_not_in_no_null""".stripMargin,
-    // windowed-energy VAD replay: char windows == byte windows after
-    // sanitize; energy = Σ codepoint; active compared cross-multiplied
-    "multimodal_audio_vad" -> streamAudioVadOracle,
-    // non-ASCII sanitized to '?' on both sides → byte windows == char windows
-    "multimodal_frames" ->
-      """WITH d AS (SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '?', 'g') AS text FROM documents),
-        |m AS (SELECT doc_id AS media_id, text, octet_length(encode(text)) AS n FROM d),
-        |s AS (SELECT media_id, text, n,
-        |  CASE WHEN n <= 256 THEN 0 ELSE ((n - 256 + 191) // 192) * 192 END AS smax FROM m),
-        |f AS (SELECT media_id, text, n, unnest(generate_series(0, smax, 192)) AS start FROM s)
-        |SELECT media_id, CAST(start // 192 AS INTEGER) AS frame_idx,
-        |  CAST(least(256, n - start) AS INTEGER) AS frame_bytes,
-        |  md5(substring(text, start + 1, 256)) AS frame_digest
-        |FROM f""".stripMargin,
-    "q3_top_orders" ->
-      """SELECT l_orderkey, o_orderdate,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_region_revenue" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "window_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
-        |FROM orders""".stripMargin,
-    "window_funcs" ->
-      """WITH o AS (SELECT o_orderkey, o_orderpriority AS prio,
-        |  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents FROM orders)
-        |SELECT o_orderkey, prio, cents,
-        |  CAST(floor(percent_rank() OVER w * 10000) AS BIGINT) AS pr_bp,
-        |  CAST(floor(cume_dist() OVER w * 10000) AS BIGINT) AS cd_bp,
-        |  nth_value(cents, 3) OVER wa AS third_cents,
-        |  first_value(cents) OVER wa AS min_cents,
-        |  last_value(cents) OVER wa AS max_cents,
-        |  lag(cents, 2, -1) OVER w AS lag2_cents
-        |FROM o
-        |WINDOW w AS (PARTITION BY prio ORDER BY cents, o_orderkey),
-        |  wa AS (PARTITION BY prio ORDER BY cents, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-    "array_map_funcs" ->
-      """WITH li AS (SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty,
-        |  CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_cents FROM lineitem),
-        |s AS (SELECT l_orderkey, array_agg({'q': qty, 'p': price_cents}
-        |    ORDER BY l_linenumber, qty, price_cents) AS srt FROM li GROUP BY l_orderkey),
-        |a AS (SELECT l_orderkey,
-        |  list_transform(srt, x -> x.q) AS qtys,
-        |  list_transform(srt, x -> x.p) AS prices FROM s)
-        |SELECT l_orderkey, len(qtys) AS n,
-        |  CAST(list_sum(list_transform(qtys, x -> x * 2)) AS BIGINT) AS doubled_sum,
-        |  len(list_filter(qtys, x -> x > 25)) AS n_big,
-        |  list_contains(qtys, 50) AS has_50,
-        |  len(list_filter(qtys, x -> x <= 0)) = 0 AS all_pos,
-        |  CAST(list_sum(list_transform(generate_series(1, len(qtys)), i -> qtys[i] * prices[i])) AS BIGINT) AS dot_cents,
-        |  len(list_filter(qtys, x -> x > 25)) AS map_gt25
-        |FROM a""".stripMargin,
-    "word_lift_pairs" ->
-      """WITH occ AS (SELECT doc_id, unnest(list_distinct(string_split(trim(text), ' '))) AS tok FROM documents),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |dfs AS (SELECT tok, count(*) AS df FROM occ GROUP BY tok),
-        |top AS (SELECT tok, df FROM (SELECT tok, df,
-        |    row_number() OVER (ORDER BY df DESC, tok) AS rn FROM dfs) WHERE rn <= 20),
-        |kept AS (SELECT doc_id, tok FROM occ WHERE tok IN (SELECT tok FROM top)),
-        |pairs AS (SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS n_both
-        |  FROM kept a JOIN kept b USING (doc_id) WHERE a.tok < b.tok GROUP BY 1, 2)
-        |SELECT tok_a, tok_b, n_both,
-        |  (10000 * n_docs * n_both) // (ta.df * tb.df) AS lift_bp
-        |FROM pairs JOIN top ta ON ta.tok = pairs.tok_a JOIN top tb ON tb.tok = pairs.tok_b
-        |CROSS JOIN n""".stripMargin,
-    "quality_score_linear" ->
-      """WITH t AS (SELECT doc_id, text, string_split(trim(text), ' ') AS toks FROM documents),
-        |f AS (SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tok,
-        |  CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS n_stop,
-        |  CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS BIGINT) AS n_punct
-        |  FROM t)
-        |SELECT doc_id, n_tok, n_stop, n_punct,
-        |  3 * n_tok + 20 * n_stop - 5 * n_punct AS score,
-        |  3 * n_tok + 20 * n_stop - 5 * n_punct >= 100 AS keep
-        |FROM f""".stripMargin,
-    "quality_percentile" ->
-      """WITH t AS (SELECT doc_id, lang, text, string_split(trim(text), ' ') AS toks FROM documents),
-        |f AS (SELECT doc_id, lang,
-        |  3 * CAST(len(toks) AS BIGINT)
-        |  + 20 * CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT)
-        |  - 5 * CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS BIGINT) AS score
-        |  FROM t),
-        |r AS (SELECT doc_id, lang, score,
-        |  row_number() OVER (PARTITION BY lang ORDER BY score, doc_id) AS rn,
-        |  count(*) OVER (PARTITION BY lang) AS n FROM f)
-        |SELECT doc_id, lang, score,
-        |  CAST(CASE WHEN n > 1 THEN ((rn - 1) * 10000) // (n - 1) ELSE 10000 END AS BIGINT) AS pct_bp,
-        |  CASE WHEN n > 1 THEN ((rn - 1) * 10000) // (n - 1) ELSE 10000 END >= 6000 AS keep_top40
-        |FROM r""".stripMargin,
-    "winsorized_stats" ->
-      """WITH e AS (SELECT event_type, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-        |r AS (SELECT event_type, cents,
-        |  row_number() OVER (PARTITION BY event_type ORDER BY cents, event_id) AS rn,
-        |  count(*) OVER (PARTITION BY event_type) AS n FROM e),
-        |b AS (SELECT event_type, min(cents) AS p05_cents, max(cents) AS p95_cents FROM r
-        |  WHERE rn = greatest((n * 5) // 100, 1) OR rn = least((n * 95) // 100 + 1, n)
-        |  GROUP BY event_type),
-        |c AS (SELECT r.event_type, p05_cents, p95_cents,
-        |  greatest(least(cents, p95_cents), p05_cents) AS clamped
-        |  FROM r JOIN b USING (event_type)),
-        |g AS (SELECT event_type, p05_cents, p95_cents, count(*) AS n,
-        |  CAST(sum(clamped) AS BIGINT) AS wsum
-        |  FROM c GROUP BY 1, 2, 3)
-        |SELECT event_type, p05_cents, p95_cents, n,
-        |  (wsum - ((wsum % n + n) % n)) // n AS wins_mean_cents FROM g""".stripMargin,
-    "shard_assign" -> // rendezvous weights replayed; first-max tie like array_position
-      """WITH a AS (SELECT doc_id,
-        |  list_transform(generate_series(0, 7), s ->
-        |    ((doc_id % 1000000007 + (s + 1) * 97003999) % 1000000007
-        |      * 2654435761) % 1000000007) AS m8,
-        |  list_transform(generate_series(0, 8), s ->
-        |    ((doc_id % 1000000007 + (s + 1) * 97003999) % 1000000007
-        |      * 2654435761) % 1000000007) AS m9
-        |  FROM documents),
-        |b AS (SELECT doc_id,
-        |  list_position(m8, list_max(m8)) - 1 AS shard_before,
-        |  list_position(m9, list_max(m9)) - 1 AS shard_after FROM a),
-        |aft AS (SELECT shard_after AS shard,
-        |  CAST(sum(CASE WHEN shard_before = shard_after THEN 0 ELSE 1 END) AS BIGINT) AS n_entered,
-        |  CAST(count(*) AS BIGINT) AS n_after FROM b GROUP BY 1),
-        |bef AS (SELECT shard_before AS shard, CAST(count(*) AS BIGINT) AS n_before
-        |  FROM b GROUP BY 1)
-        |SELECT coalesce(aft.shard, bef.shard) AS shard,
-        |  coalesce(n_before, 0) AS n_before, coalesce(n_after, 0) AS n_after,
-        |  coalesce(n_entered, 0) AS n_entered,
-        |  (coalesce(n_entered, 0) = 0 OR coalesce(aft.shard, bef.shard) = 8) AS hrw_invariant
-        |FROM aft FULL OUTER JOIN bef USING (shard)""".stripMargin,
-    "group_sample" ->
-      """WITH m AS (SELECT doc_id, lang, source,
-        |  (((doc_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (doc_id % 65536) * 2654435761) % 4294967296 % 1000000007 AS mix FROM documents),
-        |r AS (SELECT doc_id, lang, source,
-        |  row_number() OVER (PARTITION BY lang, source ORDER BY mix, doc_id) AS rn FROM m)
-        |SELECT doc_id, lang, source, CAST(rn AS BIGINT) AS rn FROM r WHERE rn <= 3""".stripMargin,
-    "rollup_agg" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "cube_agg" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-    "grouping_sets_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gset,
-        |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin,
-    "bpe_merges" -> bpeOracle(6),
-    "knn_mmr" -> mmrOracle(5, 20, 7),
-    "scd2_user_state" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms, event_id FROM events),
-        |c AS (SELECT user_id, event_type, ms, event_id,
-        |  lag(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev FROM e),
-        |f AS (SELECT user_id, event_type, ms, event_id FROM c
-        |  WHERE prev IS NULL OR prev <> event_type)
-        |SELECT user_id, event_type,
-        |  CAST(row_number() OVER w AS INTEGER) AS version,
-        |  ms AS valid_from_ms,
-        |  coalesce(lead(ms) OVER w, -1) AS valid_to_ms,
-        |  lead(ms) OVER w IS NULL AS is_current
-        |FROM f WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)""".stripMargin,
-    "sequence_pack" ->
-      """WITH d AS (SELECT lang, doc_id,
-        |  CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens FROM documents),
-        |c AS (SELECT lang, doc_id, n_tokens,
-        |  CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before FROM d)
-        |SELECT lang, doc_id, n_tokens,
-        |  CAST(tok_before // 256 AS BIGINT) AS bin_id,
-        |  CAST(tok_before % 256 AS BIGINT) AS bin_offset,
-        |  (tok_before % 256) + n_tokens > 256 AS spans_bins
-        |FROM c""".stripMargin,
-    "bloom_join_prune" -> {
-      def pos3(k: String) = Seq(
-        (1103515245L, 12345L), (1299709L, 7919L), (15485863L, 104729L)).map {
-        case (a, b) => s"((($k % 2147483648) * $a + $b) % 1000000007) % 61440"
-      }.mkString("[", ",\n   ", "]")
-      s"""WITH keys AS (SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'),
-        |kp AS (SELECT unnest(${pos3("k")}) AS p FROM keys),
-        |words AS (SELECT p // 30 AS widx,
-        |  bit_or(CAST(1 AS BIGINT) << CAST(p % 30 AS INTEGER)) AS word FROM kp GROUP BY 1),
-        |op AS (SELECT o_orderkey, unnest(${pos3("o_custkey")}) AS p FROM orders),
-        |hits AS (SELECT o_orderkey FROM op JOIN words ON words.widx = op.p // 30
-        |  WHERE ((word >> CAST(p % 30 AS INTEGER)) & 1) = 1
-        |  GROUP BY o_orderkey HAVING count(*) = 3),
-        |np AS (SELECT count(*) AS n_bloom_pass FROM hits),
-        |nt AS (SELECT count(*) AS n_true_match FROM orders
-        |  WHERE o_custkey IN (SELECT k FROM keys))
-        |SELECT np.n_bloom_pass, nt.n_true_match,
-        |  np.n_bloom_pass - nt.n_true_match AS n_false_pos FROM np, nt""".stripMargin
-    },
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-        |GROUP BY 1""".stripMargin,
-    "q10_returned" ->
-      """SELECT c.c_custkey, c.c_name, n.n_name,
-        |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE l.l_returnflag = 'R'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c.c_custkey
-        |LIMIT 20""".stripMargin,
-    "unpivot_profile" ->
-      """WITH w AS (SELECT l_returnflag,
-        |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |  count(*) AS n_rows FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, 'sum_qty_cents' AS metric, sum_qty_cents AS value FROM w
-        |UNION ALL SELECT l_returnflag, 'sum_price_cents', sum_price_cents FROM w
-        |UNION ALL SELECT l_returnflag, 'n_rows', n_rows FROM w""".stripMargin,
-    "fuzzy_dedup_lev" ->
-      """WITH d AS (SELECT doc_id, lang, source, n_chars,
-        |  substr(text, 1, 40) AS prefix FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(levenshtein(a.prefix, b.prefix) AS INTEGER) AS lev
-        |FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-        |  AND abs(a.n_chars - b.n_chars) <= 32 AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.prefix, b.prefix) <= 8""".stripMargin,
-    "twap_user" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |d AS (SELECT user_id, cents,
-        |  lead(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) - ms AS dur FROM e)
-        |SELECT user_id, CAST(sum(dur) AS BIGINT) AS observed_ms,
-        |  CAST(sum(cents * dur) AS BIGINT) // CAST(sum(dur) AS BIGINT) AS twap_cents
-        |FROM d WHERE dur IS NOT NULL GROUP BY 1 HAVING sum(dur) > 0""".stripMargin,
-    "set_ops_all" ->
-      """SELECT
-        |  (SELECT count(*) FROM (
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |    EXCEPT ALL
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag <> 'R')) AS n_except_all,
-        |  (SELECT count(*) FROM (
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |    INTERSECT ALL
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag <> 'R')) AS n_intersect_all""".stripMargin,
-    "boilerplate_stats" -> {
-      val ph = duckPolyHash("trim(s)", 257L, 1000000007L)
-      s"""WITH s AS (SELECT DISTINCT doc_id, $ph AS sh
-        |  FROM (SELECT doc_id, unnest(string_split(text, '. ')) AS s FROM documents)
-        |  WHERE length(trim(s)) > 0),
-        |f AS (SELECT sh, count(*) AS sdf FROM s GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_sents,
-        |  CAST(sum(CASE WHEN sdf >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-        |  CAST(sum(CASE WHEN sdf >= 3 THEN 1 ELSE 0 END) AS BIGINT) * 10000
-        |    // count(*) AS boiler_bp
-        |FROM s JOIN f USING (sh) GROUP BY doc_id""".stripMargin
-    },
-    "correlated_subquery" ->
-      """SELECT o.o_orderpriority, count(*) AS n_big
-        |FROM orders o
-        |WHERE o.o_totalprice > (
-        |  SELECT 1.5 * avg(o2.o_totalprice) FROM orders o2
-        |  WHERE o2.o_custkey = o.o_custkey)
-        |GROUP BY o.o_orderpriority""".stripMargin,
-    "scalar_funcs" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  CAST(month(o_orderdate) AS INTEGER) AS o_month,
-        |  count(*) AS n,
-        |  count(DISTINCT dayofweek(o_orderdate)) AS n_weekdays,
-        |  CAST(sum(length(o_orderpriority)) AS BIGINT) AS prio_chars,
-        |  CAST(sum(CASE WHEN upper(substr(o_orderstatus, 1, 1)) = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  max(abs(CAST(round(o_totalprice * 100) AS BIGINT))) AS max_cents,
-        |  min(o_orderkey % 97) AS min_key_mod
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-    "cdc_apply" ->
-      """WITH c AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |  CAST(round(value * 100) AS BIGINT) AS cents,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY epoch_ms(ts) DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, cents, ms AS last_ms FROM c WHERE rn = 1 AND op <> 'D'""".stripMargin,
-    "range_frame_total" ->
-      // the RANGE frame replayed as an explicit band self-join: engine-
-      // version-proof (integer RANGE BETWEEN frames are dialect-fragile),
-      // and identical semantics — peers at equal ms are all included.
-      // floor-cents, not round(): round's double path is engine-version
-      // fragile and a whole-table SUM exposes one diverging row
-      """WITH e AS MATERIALIZED (SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT e.user_id, e.event_id,
-        |  CAST(sum(e2.cents) AS BIGINT) AS trailing_hour_cents
-        |FROM e JOIN e e2 ON e2.user_id = e.user_id
-        |  AND e2.ms BETWEEN e.ms - 3600000 AND e.ms
-        |GROUP BY e.user_id, e.event_id""".stripMargin,
-    "late_interaction" -> {
-      import graft.text.LateInteraction.{DimA, DimB}
-      val ph = duckPolyHash("tk", 257L, 1000000007L)
-      def dims(prefix: String) = (0 until 4).map(j =>
-        s"(((ph * ${DimA(j)} + ${DimB(j)}) % 1000000007) % 2001) - 1000 AS $prefix$j")
-        .mkString(",\n  ")
-      val dot = (0 until 4).map(j => s"q.q$j * d.v$j").mkString(" + ")
-      s"""WITH t AS MATERIALIZED (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |dt AS MATERIALIZED (SELECT doc_id,
-        |  unnest(list_distinct(list_transform(toks, tk -> $ph))) AS ph FROM t),
-        |dtv AS MATERIALIZED (SELECT doc_id, ${dims("v")} FROM dt),
-        |qp AS MATERIALIZED (SELECT doc_id AS query_id,
-        |  unnest(generate_series(1, least(len(toks), 4))) AS qpos, toks
-        |  FROM t WHERE doc_id % 50 = 0),
-        |qh AS MATERIALIZED (SELECT query_id, qpos,
-        |  list_transform([toks[qpos]], tk -> $ph)[1] AS ph FROM qp),
-        |qtv AS MATERIALIZED (SELECT query_id, qpos, ${dims("q")} FROM qh),
-        |mx AS MATERIALIZED (SELECT q.query_id, q.qpos, d.doc_id, max($dot) AS best
-        |  FROM qtv q CROSS JOIN dtv d GROUP BY 1, 2, 3),
-        |sc AS (SELECT query_id, doc_id, CAST(sum(best) AS BIGINT) AS score
-        |  FROM mx WHERE query_id <> doc_id GROUP BY 1, 2)
-        |SELECT query_id, doc_id AS neighbor_id, score, CAST(rnk AS INTEGER) AS "rank"
-        |FROM (SELECT query_id, doc_id, score, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk FROM sc)
-        |WHERE rnk <= 5""".stripMargin
-    },
-    "hopping_window_agg" ->
-      """WITH e AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS tb, event_type, value
-        |  FROM events),
-        |x AS (SELECT unnest([tb, tb - INTERVAL '1 hour']) AS window_start,
-        |  event_type, value FROM e)
-        |SELECT window_start, event_type, count(*) AS n,
-        |  CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents
-        |FROM x GROUP BY 1, 2""".stripMargin,
-    "stream_hopping_agg" -> // one logical answer, streaming-engine plan
-      """WITH e AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS tb, event_type, value
-        |  FROM events),
-        |x AS (SELECT unnest([tb, tb - INTERVAL '1 hour']) AS window_start,
-        |  event_type, value FROM e)
-        |SELECT window_start, event_type, count(*) AS n,
-        |  CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents
-        |FROM x GROUP BY 1, 2""".stripMargin,
-    "stream_cdc_apply" -> // shares the batch cdc_apply fold's oracle
-      """WITH c AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |  CAST(round(value * 100) AS BIGINT) AS cents,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY epoch_ms(ts) DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, cents, ms AS last_ms FROM c WHERE rn = 1 AND op <> 'D'""".stripMargin,
-    "embedding_gram" -> // full replay: quantize → upper-triangle products
-      """WITH e AS (SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS INTEGER) AS dim,
-        |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1024 + 0.5) AS BIGINT) AS g
-        |  FROM embeddings)
-        |SELECT a.dim AS dim_i, b.dim AS dim_j, CAST(sum(a.g * b.g) AS BIGINT) AS gram
-        |FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.dim <= b.dim
-        |GROUP BY 1, 2""".stripMargin,
-    "bitmap_and_count" -> // full replay: block words, AND, popcount
-      """WITH a AS (SELECT event_id // 32 AS block,
-        |    bit_or(CAST(1 AS BIGINT) << CAST(event_id % 32 AS INTEGER)) AS word_click
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |b AS (SELECT event_id // 32 AS block,
-        |    bit_or(CAST(1 AS BIGINT) << CAST(event_id % 32 AS INTEGER)) AS word_high
-        |  FROM events WHERE value >= 50 GROUP BY 1)
-        |SELECT a.block, a.word_click, b.word_high,
-        |  a.word_click & b.word_high AS word_both,
-        |  CAST(bit_count(a.word_click & b.word_high) AS BIGINT) AS n_both
-        |FROM a JOIN b ON a.block = b.block
-        |WHERE (a.word_click & b.word_high) <> 0""".stripMargin,
-    "pca_power_project" -> // full replay: gram → 2 integer power rounds → dot
-      """WITH e AS (SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS INTEGER) AS dim,
-        |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1024 + 0.5) AS BIGINT) AS g
-        |  FROM embeddings),
-        |tri AS MATERIALIZED (SELECT a.dim AS di, b.dim AS dj,
-        |    CAST(sum(a.g * b.g) AS BIGINT) AS gram
-        |  FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.dim <= b.dim GROUP BY 1, 2),
-        |gsym AS MATERIALIZED (SELECT di, dj, gram FROM tri
-        |  UNION ALL SELECT dj, di, gram FROM tri WHERE di <> dj),
-        |v1 AS MATERIALIZED (SELECT di AS dim,
-        |    CAST(sum(gram) // 1048576 AS BIGINT) AS v FROM gsym GROUP BY 1),
-        |v2 AS MATERIALIZED (SELECT g2.di AS dim,
-        |    CAST(sum(g2.gram * v1.v) // 1048576 AS BIGINT) AS v
-        |  FROM gsym g2 JOIN v1 ON v1.dim = g2.dj GROUP BY 1)
-        |SELECT e.vec_id, CAST(sum(e.g * v2.v) AS BIGINT) AS proj
-        |FROM e JOIN v2 ON v2.dim = e.dim GROUP BY 1""".stripMargin,
-    "event_transitions" ->
-      """WITH s AS (SELECT user_id, event_type, ts, event_id,
-        |  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        |  FROM events),
-        |g AS (SELECT prev_type, event_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM s WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT *, sum(n) OVER (PARTITION BY prev_type) AS tot FROM g)
-        |SELECT prev_type, event_type, n,
-        |  CAST((n * 10000) // tot AS BIGINT) AS p_bp FROM t""".stripMargin,
-    "rfm_users" ->
-      """WITH per AS (SELECT user_id, max(epoch_ms(ts)) AS last_ms,
-        |  CAST(count(*) AS BIGINT) AS freq,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS monetary_cents
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT *, (max(last_ms) OVER () - last_ms) // 86400000 AS recency_days FROM per),
-        |q AS (SELECT *, ntile(4) OVER (ORDER BY recency_days, user_id) AS r_q,
-        |  ntile(4) OVER (ORDER BY freq DESC, user_id) AS f_q,
-        |  ntile(4) OVER (ORDER BY monetary_cents DESC, user_id) AS m_q FROM r)
-        |SELECT user_id, CAST(recency_days AS BIGINT) AS recency_days, freq, monetary_cents,
-        |  'R' || r_q || 'F' || f_q || 'M' || m_q AS segment FROM q""".stripMargin,
-    "dau_wau_ratio" ->
-      """WITH d AS (SELECT DISTINCT epoch_ms(ts) // 86400000 AS day, user_id FROM events),
-        |dau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau FROM d GROUP BY 1),
-        |ad AS (SELECT DISTINCT day FROM d),
-        |wau AS (SELECT a.day, CAST(count(DISTINCT b.user_id) AS BIGINT) AS wau
-        |  FROM ad a JOIN d b ON b.day BETWEEN a.day - 6 AND a.day GROUP BY 1)
-        |SELECT day, dau, wau, CAST((dau * 10000) // wau AS BIGINT) AS stickiness_bp
-        |FROM dau JOIN wau USING (day)""".stripMargin,
-    // full watermark replay: phase split → phase-A watermark → per-row
-    // accept/drop → final-watermark emission cut. Exact ms arithmetic;
-    // the Spark side's checkpointed restart must land on the same rows.
-    "stream_late_data" ->
-      """WITH p AS (SELECT event_id, epoch_ms(ts) AS ms,
-        |  (((event_id % 4294967296 >> 16) * 2654435761) % 65536 * 65536
-        |    + (event_id & 65535) * 2654435761) % 4294967296 % 50 AS b FROM events),
-        |mx AS (SELECT max(ms) AS maxms FROM p),
-        |cutt AS (SELECT maxms - 172800000 AS cut FROM mx),
-        |ontime AS (SELECT ms FROM p, cutt WHERE ms <= cut AND b <> 0),
-        |late AS (SELECT ms FROM p, cutt WHERE ms > cut OR b = 0),
-        |w1 AS (SELECT max(ms) - 129600000 AS wm FROM ontime),
-        |w2 AS (SELECT max(ms) - 129600000 AS wm FROM p),
-        |acc AS (SELECT ms FROM ontime UNION ALL
-        |        SELECT l.ms FROM late l, w1 WHERE (l.ms // 86400000 + 1) * 86400000 > w1.wm),
-        |agg AS (SELECT (ms // 86400000) * 86400000 AS window_start_ms, count(*) AS n FROM acc GROUP BY 1)
-        |SELECT window_start_ms, CAST(n AS BIGINT) AS n FROM agg, w2
-        |WHERE window_start_ms + 86400000 <= w2.wm""".stripMargin,
-    "event_paths" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, event_id, event_type FROM events),
-        |s AS (SELECT event_type, ms,
-        |    lead(event_type, 1) OVER w AS t2, lead(ms, 1) OVER w AS ms2,
-        |    lead(event_type, 2) OVER w AS t3, lead(ms, 2) OVER w AS ms3
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id))
-        |SELECT event_type || '>' || t2 || '>' || t3 AS path, count(*) AS n
-        |FROM s
-        |WHERE t3 IS NOT NULL AND ms2 - ms <= 1800000 AND ms3 - ms2 <= 1800000
-        |GROUP BY 1 ORDER BY n DESC, path LIMIT 10""".stripMargin,
-    "label_prop_communities" -> // 3 unrolled min-propagation rounds
-      s"""WITH $sharedGramEdgeCtes,
-        |adj AS MATERIALIZED (SELECT src, dst FROM p
-        |  UNION ALL SELECT dst AS src, src AS dst FROM p),
-        |l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS label FROM adj),
-        |l1 AS MATERIALIZED (SELECT l.id, least(l.label, coalesce(min(x.label), l.label)) AS label
-        |  FROM l0 l LEFT JOIN adj a ON a.dst = l.id LEFT JOIN l0 x ON x.id = a.src
-        |  GROUP BY l.id, l.label),
-        |l2 AS MATERIALIZED (SELECT l.id, least(l.label, coalesce(min(x.label), l.label)) AS label
-        |  FROM l1 l LEFT JOIN adj a ON a.dst = l.id LEFT JOIN l1 x ON x.id = a.src
-        |  GROUP BY l.id, l.label),
-        |l3 AS MATERIALIZED (SELECT l.id, least(l.label, coalesce(min(x.label), l.label)) AS label
-        |  FROM l2 l LEFT JOIN adj a ON a.dst = l.id LEFT JOIN l2 x ON x.id = a.src
-        |  GROUP BY l.id, l.label)
-        |SELECT id AS doc_id, label FROM l3""".stripMargin,
-    "stream_quantile_events" -> // shares the batch twin's oracle
-      """WITH v AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |s AS (SELECT cents, row_number() OVER (ORDER BY cents) - 1 AS r FROM v),
-        |n AS (SELECT count(*) AS n FROM v),
-        |q AS (SELECT unnest([1000, 2500, 5000, 7500, 9000, 9900]) AS q_bps)
-        |SELECT CAST(q.q_bps AS BIGINT) AS q_bps,
-        |  (SELECT cents FROM s, n WHERE r = (n.n - 1) * q.q_bps // 10000) AS exact_cents,
-        |  true AS within_bound
-        |FROM q""".stripMargin,
-    "quantile_sketch_by_type" -> // per-group bound checked Spark-side (boolean)
-      """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-        |    event_id FROM events),
-        |n AS (SELECT event_type, count(*) AS n FROM e GROUP BY 1),
-        |q AS (SELECT unnest([2500, 5000, 9000]) AS q_bps),
-        |t AS (SELECT event_type, q_bps, (n - 1) * q_bps // 10000 AS target
-        |  FROM n CROSS JOIN q),
-        |r AS (SELECT event_type, cents, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY cents, event_id) - 1 AS rn FROM e)
-        |SELECT t.event_type, CAST(t.q_bps AS BIGINT) AS q_bps,
-        |  r.cents AS exact_cents, true AS within_bound
-        |FROM t JOIN r ON r.event_type = t.event_type AND r.rn = t.target""".stripMargin,
-    "quantile_sketch_events" -> // sketch bound checked Spark-side (boolean)
-      """WITH v AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |s AS (SELECT cents, row_number() OVER (ORDER BY cents) - 1 AS r FROM v),
-        |n AS (SELECT count(*) AS n FROM v),
-        |q AS (SELECT unnest([1000, 2500, 5000, 7500, 9000, 9900]) AS q_bps)
-        |SELECT CAST(q.q_bps AS BIGINT) AS q_bps,
-        |  (SELECT cents FROM s, n WHERE r = (n.n - 1) * q.q_bps // 10000) AS exact_cents,
-        |  true AS within_bound
-        |FROM q""".stripMargin,
-    "topk_freq_sketch" -> // sketch bound checked Spark-side (booleans)
-      """SELECT user_id, n_exact, true AS within_bound FROM (
-        |  SELECT user_id, count(*) AS n_exact FROM events GROUP BY 1
-        |  ORDER BY n_exact DESC, user_id LIMIT 10)""".stripMargin,
-    "stream_topk_freq" -> // same contract, summary folded by the stream
-      """SELECT user_id, n_exact, true AS within_bound FROM (
-        |  SELECT user_id, count(*) AS n_exact FROM events GROUP BY 1
-        |  ORDER BY n_exact DESC, user_id LIMIT 10)""".stripMargin,
-    "hll_intersect_est" -> // sketch bound checked Spark-side (boolean)
-      """WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
-        |b AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-        |SELECT (SELECT count(*) FROM a) AS n_click_users,
-        |  (SELECT count(*) FROM b) AS n_purchase_users,
-        |  (SELECT count(*) FROM a JOIN b USING (user_id)) AS n_both_exact,
-        |  true AS within_bound""".stripMargin,
-    "pagerank_sharedgrams" ->
-      // full replay: 8-gram shingles → PolyHash gram ids (the ShingleHashes
-      // kernel's ph domain; distinct AFTER hashing, matching Spark) →
-      // rare-gram blocking (2 ≤ df ≤ 5) → symmetric adjacency →
-      // 3 unrolled integer PageRank rounds
-      s"""WITH $sharedGramEdgeCtes,
-        |adj AS MATERIALIZED (SELECT src, dst FROM p UNION SELECT dst AS src, src AS dst FROM p),
-        |deg AS MATERIALIZED (SELECT src AS id, count(*) AS deg FROM adj GROUP BY 1),
-        |s0 AS MATERIALIZED (SELECT id, deg, CAST(1000000 AS BIGINT) AS score FROM deg),
-        |s1 AS MATERIALIZED (SELECT d.id, d.deg,
-        |  CAST(150000 + (85 * coalesce(c.sumc, 0)) // 100 AS BIGINT) AS score
-        |  FROM deg d LEFT JOIN (SELECT a.dst AS id, sum(s.score // s.deg) AS sumc
-        |    FROM adj a JOIN s0 s ON s.id = a.src GROUP BY 1) c ON c.id = d.id),
-        |s2 AS MATERIALIZED (SELECT d.id, d.deg,
-        |  CAST(150000 + (85 * coalesce(c.sumc, 0)) // 100 AS BIGINT) AS score
-        |  FROM deg d LEFT JOIN (SELECT a.dst AS id, sum(s.score // s.deg) AS sumc
-        |    FROM adj a JOIN s1 s ON s.id = a.src GROUP BY 1) c ON c.id = d.id),
-        |s3 AS MATERIALIZED (SELECT d.id, d.deg,
-        |  CAST(150000 + (85 * coalesce(c.sumc, 0)) // 100 AS BIGINT) AS score
-        |  FROM deg d LEFT JOIN (SELECT a.dst AS id, sum(s.score // s.deg) AS sumc
-        |    FROM adj a JOIN s2 s ON s.id = a.src GROUP BY 1) c ON c.id = d.id)
-        |SELECT id AS doc_id, deg, score FROM s3""".stripMargin,
-    "bfs_hops" -> // 4 unrolled frontier-relaxation rounds from the seed set
-      s"""WITH $sharedGramEdgeCtes,
-        |adj AS MATERIALIZED (SELECT src, dst FROM p
-        |  UNION SELECT dst AS src, src AS dst FROM p),
-        |d0 AS MATERIALIZED (SELECT doc_id AS id, CAST(0 AS BIGINT) AS hops
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |d1 AS MATERIALIZED (SELECT id, min(hops) AS hops FROM (
-        |  SELECT id, hops FROM d0 UNION ALL
-        |  SELECT a.dst AS id, d.hops + 1 FROM adj a JOIN d0 d ON d.id = a.src) GROUP BY 1),
-        |d2 AS MATERIALIZED (SELECT id, min(hops) AS hops FROM (
-        |  SELECT id, hops FROM d1 UNION ALL
-        |  SELECT a.dst AS id, d.hops + 1 FROM adj a JOIN d1 d ON d.id = a.src) GROUP BY 1),
-        |d3 AS MATERIALIZED (SELECT id, min(hops) AS hops FROM (
-        |  SELECT id, hops FROM d2 UNION ALL
-        |  SELECT a.dst AS id, d.hops + 1 FROM adj a JOIN d2 d ON d.id = a.src) GROUP BY 1),
-        |d4 AS MATERIALIZED (SELECT id, min(hops) AS hops FROM (
-        |  SELECT id, hops FROM d3 UNION ALL
-        |  SELECT a.dst AS id, d.hops + 1 FROM adj a JOIN d3 d ON d.id = a.src) GROUP BY 1)
-        |SELECT id AS doc_id, hops FROM d4""".stripMargin,
-    "sssp_weighted" -> // 4 unrolled Bellman–Ford rounds, weighted pair census
-      s"""WITH $sharedGramEdgeCtes,
-        |pw AS MATERIALIZED (SELECT a.doc_id AS src, b.doc_id AS dst,
-        |  CAST(greatest(1, 6 - count(*)) AS BIGINT) AS w
-        |  FROM rs a JOIN rs b USING (g) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-        |adj AS MATERIALIZED (SELECT src, dst, w FROM pw
-        |  UNION ALL SELECT dst AS src, src AS dst, w FROM pw),
-        |e0 AS MATERIALIZED (SELECT doc_id AS id, CAST(0 AS BIGINT) AS dist
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |e1 AS MATERIALIZED (SELECT id, min(dist) AS dist FROM (
-        |  SELECT id, dist FROM e0 UNION ALL
-        |  SELECT a.dst AS id, d.dist + a.w FROM adj a JOIN e0 d ON d.id = a.src) GROUP BY 1),
-        |e2 AS MATERIALIZED (SELECT id, min(dist) AS dist FROM (
-        |  SELECT id, dist FROM e1 UNION ALL
-        |  SELECT a.dst AS id, d.dist + a.w FROM adj a JOIN e1 d ON d.id = a.src) GROUP BY 1),
-        |e3 AS MATERIALIZED (SELECT id, min(dist) AS dist FROM (
-        |  SELECT id, dist FROM e2 UNION ALL
-        |  SELECT a.dst AS id, d.dist + a.w FROM adj a JOIN e2 d ON d.id = a.src) GROUP BY 1),
-        |e4 AS MATERIALIZED (SELECT id, min(dist) AS dist FROM (
-        |  SELECT id, dist FROM e3 UNION ALL
-        |  SELECT a.dst AS id, d.dist + a.w FROM adj a JOIN e3 d ON d.id = a.src) GROUP BY 1)
-        |SELECT id AS doc_id, dist FROM e4""".stripMargin,
-    "kcore_sharedgrams" -> { // 4 unrolled degree-peel rounds at k=2
-      val rounds = (1 to 4).map { r =>
-        val (np, ap) = (s"n${r - 1}", s"adj${r - 1}")
-        s"""dm$r AS MATERIALIZED (SELECT n.id FROM $np n LEFT JOIN (
-           |  SELECT src AS id, count(*) AS c FROM $ap GROUP BY 1) d USING (id)
-           |  WHERE coalesce(d.c, 0) < 2),
-           |n$r AS MATERIALIZED (SELECT id FROM $np
-           |  WHERE id NOT IN (SELECT id FROM dm$r)),
-           |adj$r AS MATERIALIZED (SELECT src, dst FROM $ap
-           |  WHERE src NOT IN (SELECT id FROM dm$r)
-           |    AND dst NOT IN (SELECT id FROM dm$r))""".stripMargin
-      }.mkString(",\n")
-      val unions = (1 to 4).map(r =>
-        s"SELECT id AS doc_id, CAST($r AS BIGINT) AS peel_round FROM dm$r")
-        .mkString("\nUNION ALL ")
-      s"""WITH $sharedGramEdgeCtes,
-        |adj0 AS MATERIALIZED (SELECT src, dst FROM p
-        |  UNION SELECT dst AS src, src AS dst FROM p),
-        |n0 AS MATERIALIZED (SELECT DISTINCT src AS id FROM adj0),
-        |$rounds
-        |$unions
-        |UNION ALL SELECT id AS doc_id, CAST(0 AS BIGINT) AS peel_round FROM n4""".stripMargin
-    },
-    "block_dedup" -> // corpus-wide first occurrence by (doc_id, blk_idx)
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |n AS (SELECT doc_id, toks, (len(toks) + 9) // 10 AS nb FROM t),
-        |b0 AS (SELECT doc_id, toks, unnest(generate_series(0, nb - 1)) AS i FROM n),
-        |b AS (SELECT doc_id, i AS blk_idx,
-        |  array_to_string(toks[i*10+1 : i*10+10], ' ') AS block FROM b0),
-        |f AS (SELECT block, min(doc_id * 1000000 + blk_idx) AS fk FROM b GROUP BY 1),
-        |k AS (SELECT b.doc_id, b.blk_idx, b.block FROM b JOIN f USING (block)
-        |  WHERE b.doc_id * 1000000 + b.blk_idx = f.fk),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |  string_agg(block, ' ' ORDER BY blk_idx) AS text_dedup FROM k GROUP BY 1),
-        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_blocks FROM b GROUP BY 1)
-        |SELECT d.doc_id, coalesce(tot.n_blocks, 0) AS n_blocks,
-        |  coalesce(agg.n_kept, 0) AS n_kept,
-        |  coalesce(agg.text_dedup, '') AS text_dedup
-        |FROM documents d LEFT JOIN tot USING (doc_id) LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "trigram_novelty" -> // df over per-doc DISTINCT trigrams, then novel share
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i FROM t),
-        |tri AS (SELECT DISTINCT doc_id,
-        |  toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS tri FROM ix),
-        |df AS (SELECT tri, CAST(count(*) AS BIGINT) AS df FROM tri GROUP BY 1)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_distinct_tri,
-        |  CAST(sum(CASE WHEN df.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-        |  CAST((10000 * CAST(sum(CASE WHEN df.df = 1 THEN 1 ELSE 0 END) AS BIGINT))
-        |    // count(*) AS BIGINT) AS novelty_bps
-        |FROM tri JOIN df USING (tri) GROUP BY doc_id""".stripMargin,
-    "merge_into" -> // full-outer clause application: update/insert/keep, delete absent
-      """WITH tgt AS (SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |src AS (SELECT k, cents + cents // 20 AS cents FROM tgt WHERE k % 7 = 0
-        |  UNION ALL SELECT k + 100000000, cents // 2 FROM tgt WHERE k % 11 = 0),
-        |j AS (SELECT coalesce(t.k, s.k) AS o_orderkey, t.cents AS tc, s.cents AS sc,
-        |    t.k IS NOT NULL AS in_t, s.k IS NOT NULL AS in_s
-        |  FROM tgt t FULL OUTER JOIN src s ON t.k = s.k)
-        |SELECT o_orderkey,
-        |  CASE WHEN NOT in_s THEN tc ELSE sc END AS cents,
-        |  CASE WHEN NOT in_t THEN 'insert' WHEN NOT in_s THEN 'keep'
-        |       ELSE 'update' END AS action
-        |FROM j WHERE NOT (in_t AND in_s AND sc % 7 = 0)""".stripMargin,
-    "graph_triangles" ->
-      // each triangle x<y<z enumerated once via the oriented edge list
-      s"""WITH $sharedGramEdgeCtes,
-        |tri AS (SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
-        |  FROM p e1 JOIN p e2 ON e1.dst = e2.src
-        |  JOIN p e3 ON e3.src = e1.src AND e3.dst = e2.dst)
-        |SELECT id AS doc_id, count(*) AS n_triangles FROM
-        |  (SELECT unnest([x, y, z]) AS id FROM tri) GROUP BY id""".stripMargin,
-    "weighted_sample" ->
-      """WITH w AS (SELECT doc_id, least(n_chars * 20, 10000) AS w_bps,
-        |  doc_id % 4294967296 AS a FROM documents),
-        |m AS (SELECT doc_id, w_bps,
-        |  (((a >> 16) * 2654435761) % 65536 * 65536 + (a & 65535) * 2654435761)
-        |    % 4294967296 AS mixed FROM w)
-        |SELECT doc_id, w_bps FROM m WHERE mixed % 10000 < w_bps""".stripMargin,
-    "snapshot_diff" ->
-      """WITH base AS (SELECT o_orderkey,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |old AS (SELECT * FROM base WHERE o_orderkey % 97 <> 3),
-        |new AS (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 83 = 11 THEN cents + cents // 10 ELSE cents END AS cents
-        |  FROM base WHERE o_orderkey % 89 <> 7)
-        |SELECT coalesce(old.o_orderkey, new.o_orderkey) AS o_orderkey,
-        |  coalesce(old.cents, -1) AS old_cents, coalesce(new.cents, -1) AS new_cents,
-        |  CASE WHEN old.o_orderkey IS NULL THEN 'insert'
-        |       WHEN new.o_orderkey IS NULL THEN 'delete'
-        |       ELSE 'update' END AS change_type
-        |FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey
-        |WHERE old.o_orderkey IS NULL OR new.o_orderkey IS NULL
-        |   OR old.cents IS DISTINCT FROM new.cents""".stripMargin,
-    "metrics_anomalies" ->
-      """WITH pm AS (SELECT epoch_ms(ts) - epoch_ms(ts) % 60000 AS bucket_ms,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT count(*) AS n, sum(x) AS t, sum(x * x) AS sx2 FROM pm)
-        |SELECT bucket_ms, CAST(x AS BIGINT) AS cents_sum,
-        |  CAST(CASE WHEN x * n > t THEN 1 ELSE -1 END AS BIGINT) AS direction
-        |FROM pm, g
-        |WHERE CAST(n * x - t AS DOUBLE) * CAST(n * x - t AS DOUBLE) * CAST(n - 1 AS DOUBLE)
-        |    > 9.0 * CAST(n AS DOUBLE)
-        |      * (CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(t AS DOUBLE) * CAST(t AS DOUBLE))""".stripMargin,
-    "metrics_correlation" ->
-      """WITH g AS (SELECT event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS cents,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-        |SELECT event_type, count(*) AS n,
-        |  round(corr(cents, k), 4) AS corr_vk,
-        |  round(covar_pop(cents, k), 2) AS covar_vk,
-        |  round(stddev_samp(cents), 2) AS stddev_cents
-        |FROM g GROUP BY event_type""".stripMargin,
-    "events_histogram" ->
-      """WITH c AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |ext AS (SELECT min(cents) AS lo,
-        |  (max(cents) - min(cents) + 20) // 20 AS width FROM c)
-        |SELECT (cents - lo) // width AS bin, count(*) AS n,
-        |  min(cents) AS bin_min, max(cents) AS bin_max
-        |FROM c, ext GROUP BY 1""".stripMargin,
-    "metrics_gapfill" ->
-      """WITH b AS (SELECT epoch_ms(ts) - epoch_ms(ts) % 60000 AS bucket_ms,
-        |    count(*) AS n_events,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS bucket_sum
-        |  FROM events GROUP BY 1),
-        |ext AS (SELECT min(bucket_ms) AS lo, max(bucket_ms) AS hi FROM b),
-        |grid AS (SELECT unnest(generate_series(lo, hi, 60000)) AS bucket_ms FROM ext),
-        |-- portable LOCF: the running non-null count is a fill-group id
-        |-- whose single non-null value max() recovers (the null-skipping
-        |-- last_value window modifier is dialect-fragile)
-        |f AS (SELECT g.bucket_ms,
-        |    coalesce(b.n_events, 0) AS n_events, b.bucket_sum,
-        |    count(b.bucket_sum) OVER (
-        |      ORDER BY g.bucket_ms ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-        |  FROM grid g LEFT JOIN b ON g.bucket_ms = b.bucket_ms)
-        |SELECT bucket_ms, n_events,
-        |  CAST(max(bucket_sum) OVER (PARTITION BY grp) AS BIGINT) AS filled_sum
-        |FROM f""".stripMargin,
-    "pivot_events" ->
-      """SELECT user_id % 10 AS cohort,
-        |  count(*) FILTER (event_type = 'click') AS click,
-        |  count(*) FILTER (event_type = 'error') AS error,
-        |  count(*) FILTER (event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (event_type = 'signup') AS signup,
-        |  count(*) FILTER (event_type = 'view') AS view
-        |FROM events GROUP BY 1""".stripMargin,
-    "salted_join_agg" ->
-      """SELECT s_nationkey, round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
-    "event_deltas" ->
-      """WITH e AS (SELECT user_id, event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events)
-        |SELECT user_id, event_id,
-        |  coalesce(epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id), -1) AS gap_ms,
-        |  CAST(ntile(4) OVER (PARTITION BY user_id ORDER BY cents, event_id) AS INTEGER)
-        |    AS value_quartile
-        |FROM e""".stripMargin,
-    "set_ops_suppliers" ->
-      """SELECT
-        |  (SELECT count(*) FROM (
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |    INTERSECT
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag <> 'R')) AS n_both,
-        |  (SELECT count(*) FROM (
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |    EXCEPT
-        |    SELECT l_suppkey FROM lineitem WHERE l_returnflag <> 'R')) AS n_only_returned""".stripMargin,
-    "semi_anti_orders" ->
-      """SELECT
-        |  (SELECT count(*) FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders)) AS n_with,
-        |  (SELECT count(*) FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)) AS n_without""".stripMargin,
-    "windowed_agg" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-        |  count(*) AS n, CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "stream_windowed_agg" -> // one logical answer, streaming-engine plan
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-        |  count(*) AS n, CAST(round(sum(value * 100)) AS BIGINT) AS sum_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "distinct_parts" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "table_profile" ->
-      """SELECT 'l_quantity' AS column_name, count(*) AS n_rows,
-        |  count(*) FILTER (l_quantity IS NULL) AS n_nulls,
-        |  count(DISTINCT l_quantity) AS n_distinct,
-        |  round(min(l_quantity), 2) AS min_val, round(max(l_quantity), 2) AS max_val
-        |FROM lineitem
-        |UNION ALL SELECT 'l_extendedprice', count(*),
-        |  count(*) FILTER (l_extendedprice IS NULL), count(DISTINCT l_extendedprice),
-        |  round(min(l_extendedprice), 2), round(max(l_extendedprice), 2) FROM lineitem
-        |UNION ALL SELECT 'l_discount', count(*),
-        |  count(*) FILTER (l_discount IS NULL), count(DISTINCT l_discount),
-        |  round(min(l_discount), 2), round(max(l_discount), 2) FROM lineitem
-        |UNION ALL SELECT 'l_tax', count(*),
-        |  count(*) FILTER (l_tax IS NULL), count(DISTINCT l_tax),
-        |  round(min(l_tax), 2), round(max(l_tax), 2) FROM lineitem""".stripMargin,
-    "metrics_quantiles" ->
-      """WITH c AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events)
-        |SELECT event_type,
-        |  CAST(floor(quantile_cont(cents, 0.5) * 100 + 0.5) AS BIGINT) AS p50_q,
-        |  CAST(floor(quantile_cont(cents, 0.95) * 100 + 0.5) AS BIGINT) AS p95_q
-        |FROM c GROUP BY event_type""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_discount), 4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "orc_roundtrip" ->
-      // ORC round-trip must be lossless: the per-type aggregate over the
-      // re-read ORC equals the parquet-direct answer
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  min(epoch_ms(ts)) AS min_ts_ms, max(epoch_ms(ts)) AS max_ts_ms,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type""".stripMargin,
-    "events_date_partitioned" -> // layout-independent answer
-      """SELECT strftime(ts, '%Y-%m-%d') AS event_date, event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events
-        |WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-05'
-        |  AND strftime(ts, '%Y-%m-%d') < '2024-01-10'
-        |GROUP BY 1, 2""".stripMargin,
-    "manifest_skip_scan" -> // layout-independent answer
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events
-        |WHERE epoch_ms(ts) BETWEEN 1704844800000 AND 1705017599999
-        |GROUP BY event_type""".stripMargin,
-    "postings_stats" ->
-      """WITH pos AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
-        |    FROM documents),
-        |td AS (SELECT term, doc_id, count(*) AS tf FROM pos GROUP BY 1, 2)
-        |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf,
-        |  array_to_string(list_slice(list_sort(list(doc_id)), 1, 5), ',') AS posting_head
-        |FROM td GROUP BY term HAVING count(*) >= 5""".stripMargin,
-    "phrase_search" ->
-      """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, CAST(generate_subscripts(t, 1) AS BIGINT) AS pos,
-        |    unnest(t) AS term FROM toks)
-        |SELECT a.doc_id, count(*) AS n_occurrences
-        |FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-        |WHERE a.term = 'the' AND b.term = 'table'
-        |GROUP BY a.doc_id""".stripMargin,
-    "map_at_10" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |hits AS (SELECT s.query_id, s.rank,
-        |    CASE WHEN ql.q_label = bl.b_label THEN 1 ELSE 0 END AS rel
-        |  FROM scored s JOIN ql USING (query_id) JOIN bl USING (neighbor_id)
-        |  WHERE s.rank <= 10),
-        |terms AS (SELECT query_id, rank, rel,
-        |    sum(rel) OVER (PARTITION BY query_id ORDER BY rank) AS cum FROM hits),
-        |ap AS (SELECT query_id,
-        |    CAST(sum(CASE WHEN rel = 1 THEN (1000000 * cum) // rank ELSE 0 END) AS BIGINT) AS ap_num_micro
-        |  FROM terms GROUP BY 1),
-        |pool AS (SELECT ql.query_id, least(count(bl.neighbor_id), 10) AS r_ideal
-        |  FROM ql LEFT JOIN bl ON bl.b_label = ql.q_label GROUP BY 1)
-        |SELECT a.query_id, a.ap_num_micro, CAST(p.r_ideal AS BIGINT) AS r_ideal,
-        |  CAST(CASE WHEN p.r_ideal = 0 THEN 0
-        |    ELSE a.ap_num_micro // p.r_ideal END AS BIGINT) AS ap_micro
-        |FROM ap a JOIN pool p USING (query_id)""".stripMargin,
-    "mrr_at_10" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |fr AS (SELECT s.query_id, min(s.rank) AS frr
-        |  FROM scored s JOIN ql USING (query_id) JOIN bl USING (neighbor_id)
-        |  WHERE s.rank <= 10 AND ql.q_label = bl.b_label GROUP BY 1)
-        |SELECT ql.query_id,
-        |  CAST(coalesce(fr.frr, 0) AS BIGINT) AS first_rel_rank,
-        |  CAST(CASE WHEN fr.frr IS NULL THEN 0 ELSE 1000000 // fr.frr END AS BIGINT) AS rr_micro
-        |FROM ql LEFT JOIN fr USING (query_id)""".stripMargin,
-    "pr_at_10" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |h AS (SELECT s.query_id,
-        |    CAST(sum(CASE WHEN ql.q_label = bl.b_label THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-        |  FROM scored s JOIN ql USING (query_id) JOIN bl USING (neighbor_id)
-        |  WHERE s.rank <= 10 GROUP BY 1),
-        |pool AS (SELECT ql.query_id, CAST(count(bl.neighbor_id) AS BIGINT) AS n_rel
-        |  FROM ql LEFT JOIN bl ON bl.b_label = ql.q_label GROUP BY 1)
-        |SELECT h.query_id, h.n_hits, p.n_rel,
-        |  CAST((h.n_hits * 10000) // 10 AS BIGINT) AS p_bp,
-        |  CAST(CASE WHEN p.n_rel = 0 THEN 0
-        |    ELSE (h.n_hits * 10000) // p.n_rel END AS BIGINT) AS r_bp
-        |FROM h JOIN pool p USING (query_id)""".stripMargin,
-    "knn_classify" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |ql AS (SELECT vec_id AS query_id, label AS q_label FROM embeddings WHERE vec_id % 20 = 0),
-        |bl AS (SELECT vec_id AS neighbor_id, label AS b_label FROM embeddings WHERE vec_id % 20 <> 0),
-        |votes AS (SELECT s.query_id, bl.b_label AS pred_label, count(*) AS votes
-        |  FROM scored s JOIN bl USING (neighbor_id) WHERE s.rank <= 10 GROUP BY 1, 2),
-        |top AS (SELECT query_id, pred_label, votes,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, pred_label) AS rn
-        |  FROM votes)
-        |SELECT t.query_id, t.pred_label, t.votes,
-        |  CAST(CASE WHEN t.pred_label = ql.q_label THEN 1 ELSE 0 END AS INTEGER) AS correct
-        |FROM top t JOIN ql USING (query_id) WHERE t.rn = 1""".stripMargin,
-    "top_words_per_lang" ->
-      """WITH dfs AS (SELECT lang, word, count(*) AS df FROM (
-        |    SELECT lang, doc_id, unnest(list_distinct(string_split(trim(text), ' '))) AS word
-        |    FROM documents) GROUP BY 1, 2)
-        |SELECT lang, word, df, rank FROM (
-        |  SELECT lang, word, df,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY df DESC, word) AS INTEGER) AS rank
-        |  FROM dfs) WHERE rank <= 5""".stripMargin,
-    "pareto_parts" ->
-      """WITH p AS (SELECT p_partkey, p_brand,
-        |    CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents, p_size
-        |  FROM part)
-        |SELECT p_brand, p_partkey, price_cents, p_size FROM p a
-        |WHERE NOT EXISTS (SELECT 1 FROM p b WHERE b.p_brand = a.p_brand
-        |  AND b.price_cents <= a.price_cents AND b.p_size <= a.p_size
-        |  AND (b.price_cents < a.price_cents OR b.p_size < a.p_size))""".stripMargin,
-    "embedding_drift" ->
-      """WITH e AS (SELECT label, CAST(generate_subscripts(embedding, 1) AS INTEGER) AS dim,
-        |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1048576 + 0.5) AS BIGINT) AS g
-        |  FROM embeddings WHERE label IN (0, 1)),
-        |a AS (SELECT dim,
-        |    CAST(sum(CASE WHEN label = 0 THEN g ELSE 0 END) AS BIGINT) AS sum0_g,
-        |    CAST(sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN label = 1 THEN g ELSE 0 END) AS BIGINT) AS sum1_g,
-        |    CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-        |  FROM e GROUP BY dim)
-        |SELECT dim, sum0_g, n0, sum1_g, n1,
-        |  abs(sum0_g * n1 - sum1_g * n0) AS delta
-        |FROM a ORDER BY delta DESC, dim LIMIT 10""".stripMargin,
-    "hll_union_groups" -> // sketch estimate checked within bound (Spark side)
-      """SELECT event_type, count(DISTINCT user_id) AS n_exact, true AS within_bound
-        |FROM events GROUP BY 1""".stripMargin,
-    "dynamic_pivot" ->
-      """SELECT user_id,
-        |  count(*) FILTER (event_type = 'click') AS click,
-        |  count(*) FILTER (event_type = 'error') AS error,
-        |  count(*) FILTER (event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (event_type = 'signup') AS signup,
-        |  count(*) FILTER (event_type = 'view') AS view
-        |FROM events GROUP BY user_id""".stripMargin,
-    "compaction_roundtrip" -> // layout-independent answer
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  count(DISTINCT event_id) AS n_ids
-        |FROM events GROUP BY event_type""".stripMargin,
-    "attribution_last_touch" ->
-      """WITH p AS (SELECT user_id, epoch_ms(ts) AS ms, event_id AS purchase_event
-        |      FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, epoch_ms(ts) AS ms, event_id AS touch_event,
-        |      event_type AS touch_type FROM events WHERE event_type IN ('click', 'view'))
-        |SELECT p.user_id, p.purchase_event, t.touch_event, t.touch_type,
-        |  p.ms - t.ms AS gap_ms
-        |FROM p ASOF LEFT JOIN t ON p.user_id = t.user_id AND p.ms >= t.ms""".stripMargin,
-    "attribution_linear" -> // equal split, integer remainder to earliest touch
-      """WITH p AS (SELECT user_id, epoch_ms(ts) AS p_ms, event_id AS purchase_event
-        |      FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, epoch_ms(ts) AS t_ms, event_id AS touch_event
-        |      FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (SELECT p.user_id, p.purchase_event, t.touch_event, t.t_ms
-        |  FROM p JOIN t ON p.user_id = t.user_id
-        |  AND t.t_ms <= p.p_ms AND t.t_ms > p.p_ms - 604800000),
-        |c AS (SELECT *, count(*) OVER (PARTITION BY purchase_event) AS n_touch,
-        |  row_number() OVER (PARTITION BY purchase_event
-        |    ORDER BY t_ms, touch_event) AS rn FROM j)
-        |SELECT user_id, touch_event, CAST(count(*) AS BIGINT) AS n_conversions,
-        |  CAST(sum(10000 // n_touch + CASE WHEN rn = 1
-        |    THEN 10000 - n_touch * (10000 // n_touch) ELSE 0 END) AS BIGINT) AS total_bps
-        |FROM c GROUP BY user_id, touch_event""".stripMargin,
-    "rolling_7d_users" ->
-      """WITH daily AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-        |grid AS (SELECT DISTINCT day AS g_day FROM daily)
-        |SELECT strftime(g_day, '%Y-%m-%d') AS day, count(DISTINCT user_id) AS users_7d
-        |FROM grid JOIN daily ON daily.day BETWEEN g_day - 6 AND g_day
-        |GROUP BY 1""".stripMargin,
-    "equi_depth_histogram" ->
-      """WITH c AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents, event_id
-        |      FROM events),
-        |b AS (SELECT cents, ntile(8) OVER (ORDER BY cents, event_id) AS bin FROM c)
-        |SELECT bin, count(*) AS n, min(cents) AS lo_cents, max(cents) AS hi_cents
-        |FROM b GROUP BY 1""".stripMargin,
-    "anomaly_mad" ->
-      """WITH c AS (SELECT event_type, event_id,
-        |      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-        |n AS (SELECT event_type, count(*) AS n FROM c GROUP BY 1),
-        |med AS (SELECT event_type, cents AS med_cents FROM (
-        |    SELECT c.event_type, c.cents,
-        |      row_number() OVER (PARTITION BY c.event_type ORDER BY c.cents, c.event_id) AS rn,
-        |      n.n FROM c JOIN n USING (event_type))
-        |  WHERE rn = (n + 1) // 2),
-        |dev AS (SELECT c.event_type, c.event_id, c.cents,
-        |    abs(c.cents - med.med_cents) AS dev, med.med_cents
-        |  FROM c JOIN med USING (event_type)),
-        |mad AS (SELECT event_type, dev AS mad_cents FROM (
-        |    SELECT d.event_type, d.dev,
-        |      row_number() OVER (PARTITION BY d.event_type ORDER BY d.dev, d.event_id) AS rn,
-        |      n.n FROM dev d JOIN n USING (event_type))
-        |  WHERE rn = (n + 1) // 2)
-        |SELECT d.event_type, count(*) AS n,
-        |  CAST(min(d.med_cents) AS BIGINT) AS med_cents,
-        |  CAST(min(m.mad_cents) AS BIGINT) AS mad_cents,
-        |  CAST(sum(CASE WHEN d.dev * 10000 > 3 * 14826 * m.mad_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM dev d JOIN mad m USING (event_type)
-        |GROUP BY 1""".stripMargin,
-    "stream_dedup_users" -> // streaming first-seen dedup == batch distinct
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1""".stripMargin,
-    "multimodal_frame_dedup" ->
-      """WITH d AS (SELECT doc_id, regexp_replace(text, '[^\x00-\x7F]', '?', 'g') AS text FROM documents),
-        |m AS (SELECT doc_id AS media_id, text, octet_length(encode(text)) AS n FROM d),
-        |s AS (SELECT media_id, text, n,
-        |  CASE WHEN n <= 256 THEN 0 ELSE ((n - 256 + 191) // 192) * 192 END AS smax FROM m),
-        |f AS (SELECT media_id, text, n, unnest(generate_series(0, smax, 192)) AS start FROM s),
-        |fr AS (SELECT media_id, md5(substring(text, start + 1, 256)) AS frame_digest FROM f)
-        |SELECT frame_digest, count(DISTINCT media_id) AS n_media, count(*) AS n_frames,
-        |  min(media_id) AS first_media
-        |FROM fr GROUP BY 1 HAVING count(DISTINCT media_id) >= 2""".stripMargin,
-    "q7_volume_shipping" ->
-      """SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS INTEGER) AS ship_year,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS volume_cents,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ns ON s_nationkey = ns.n_nationkey
-        |JOIN nation nc ON c_nationkey = nc.n_nationkey
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "revenue_share_window" ->
-      """WITH rev AS (SELECT r_name, n_name,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_cents
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  GROUP BY 1, 2)
-        |SELECT r_name, n_name, rev_cents,
-        |  CAST((rev_cents * 10000) // sum(rev_cents) OVER (PARTITION BY r_name) AS BIGINT) AS share_bp
-        |FROM rev""".stripMargin,
-    "incremental_join_view" -> // incremental refresh == from-scratch recompute
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "join_skew_profile" ->
-      """WITH c AS (SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_keys FROM c)
-        |SELECT l_suppkey, n,
-        |  CAST((n * 10000) // (n_rows // n_keys) AS BIGINT) AS skew_vs_mean_bp
-        |FROM c CROSS JOIN t
-        |ORDER BY n DESC, l_suppkey LIMIT 5""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT
-        |  CAST(sum(CAST(floor(l_extendedprice * l_discount * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE year(l_shipdate) = 1996
-        |  AND l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 24""".stripMargin,
-    "q8_market_share" ->
-      """WITH vol AS (
-        |  SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, ns.n_name AS supp_nation,
-        |    CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS vol_cents
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation nc ON c_nationkey = nc.n_nationkey
-        |  JOIN region ON nc.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ns ON s_nationkey = ns.n_nationkey
-        |  WHERE r_name = 'ASIA'
-        |    AND o_orderdate BETWEEN '1996-01-01' AND '1997-12-31'
-        |    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'STANDARD'))
-        |SELECT o_year,
-        |  CAST(sum(CASE WHEN supp_nation = 'NATION_12' THEN vol_cents ELSE 0 END) AS BIGINT) AS nation_cents,
-        |  CAST(sum(vol_cents) AS BIGINT) AS total_cents,
-        |  CAST((CAST(sum(CASE WHEN supp_nation = 'NATION_12' THEN vol_cents ELSE 0 END) AS BIGINT) * 10000)
-        |    // CAST(sum(vol_cents) AS BIGINT) AS BIGINT) AS share_bp
-        |FROM vol GROUP BY 1""".stripMargin,
-    "q12_ship_lag_priority" ->
-      """SELECT
-        |  CASE WHEN datediff('day', o_orderdate, l_shipdate) <= 90 THEN 'ON_TIME' ELSE 'LATE' END AS lag_class,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "q13_customer_distribution" ->
-      """WITH pc AS (SELECT o_custkey, count(*) AS c_count FROM orders GROUP BY 1)
-        |SELECT COALESCE(c_count, 0) AS c_count, count(*) AS custdist
-        |FROM customer LEFT JOIN pc ON c_custkey = o_custkey
-        |GROUP BY 1""".stripMargin,
-    "q14_promo_revenue" ->
-      """WITH t AS (
-        |  SELECT CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS rev_cents, p_type
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate BETWEEN '1996-03-01' AND '1996-03-31')
-        |SELECT
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_cents ELSE 0 END) AS BIGINT) AS promo_cents,
-        |  CAST(sum(rev_cents) AS BIGINT) AS total_cents,
-        |  CAST((CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_cents ELSE 0 END) AS BIGINT) * 10000)
-        |    // CAST(sum(rev_cents) AS BIGINT) AS BIGINT) AS promo_share_bp
-        |FROM t""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
-        |  FROM lineitem WHERE l_shipdate BETWEEN '1996-01-01' AND '1996-03-31' GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_cents
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_cents = (SELECT max(total_cents) FROM rev)""".stripMargin,
-    "q17_small_qty_revenue" ->
-      """WITH li AS (
-        |  SELECT l_partkey, l_quantity, l_extendedprice FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#23')),
-        |pp AS (SELECT l_partkey AS pp_key,
-        |    CAST(sum(CAST(l_quantity * 100 AS BIGINT)) AS BIGINT) AS qty_hundredths,
-        |    count(*) AS n_lines
-        |  FROM li GROUP BY 1)
-        |SELECT
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_lines
-        |FROM li JOIN pp ON l_partkey = pp_key
-        |WHERE CAST(l_quantity * 100 AS BIGINT) * 5 * n_lines < qty_hundredths""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, CAST(sum(CAST(l_quantity * 100 AS BIGINT)) AS BIGINT) AS qty_hundredths
-        |  FROM lineitem GROUP BY 1
-        |  HAVING CAST(sum(CAST(l_quantity * 100 AS BIGINT)) AS BIGINT) > 30000)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-        |  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents, qty_hundredths
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_cents DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q19_disjunctive_revenue" ->
-      """SELECT
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q21_late_suppliers" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_suppkey, datediff('day', o_orderdate, l_shipdate) > 90 AS is_late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |po AS (SELECT l_orderkey AS ord_key, count(DISTINCT l_suppkey) AS n_supp,
-        |    count(DISTINCT CASE WHEN is_late THEN l_suppkey END) AS n_late_supp
-        |  FROM li GROUP BY 1),
-        |w AS (SELECT DISTINCT l_suppkey, l_orderkey FROM li JOIN po ON l_orderkey = ord_key
-        |  WHERE is_late AND n_supp >= 2 AND n_late_supp = 1),
-        |g AS (SELECT l_suppkey, count(*) AS numwait FROM w GROUP BY 1)
-        |SELECT s_name, numwait FROM g JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q22_idle_customers" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_nationkey, CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-        |  FROM customer WHERE c_nationkey IN (10,11,12,13,14,15,16)),
-        |a AS (SELECT CAST(sum(bal_cents) AS BIGINT) AS total_cents, count(*) AS n_pos
-        |  FROM cust WHERE bal_cents > 0)
-        |SELECT c_nationkey, count(*) AS numcust, CAST(sum(bal_cents) AS BIGINT) AS totacctbal_cents
-        |FROM cust CROSS JOIN a
-        |WHERE bal_cents * n_pos > total_cents
-        |  AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderdate >= '2000-01-01')
-        |GROUP BY 1""".stripMargin,
-    // Q2 replay: derived partsupp, per-part min cost joined back,
-    // top-100 under the unique (balance desc, nation, supplier, part) order
-    "q2_min_cost_supplier" ->
-      s"""WITH $partsuppCte,
-        |p AS (SELECT p_partkey, p_size FROM part
-        |  WHERE p_type = 'STANDARD' AND p_size <= 25),
-        |eu AS (SELECT s_suppkey, s_name, n_name,
-        |  CAST(round(s_acctbal * 100) AS BIGINT) AS acctbal_cents
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'),
-        |o AS (SELECT ps_partkey, ps_suppkey, ps_supplycost_cents, p_partkey, p_size,
-        |  s_name, n_name, acctbal_cents
-        |  FROM ps JOIN p ON ps_partkey = p_partkey JOIN eu ON ps_suppkey = s_suppkey),
-        |m AS (SELECT ps_partkey AS mk, min(ps_supplycost_cents) AS mc FROM o GROUP BY 1)
-        |SELECT acctbal_cents, s_name, n_name, p_partkey, p_size,
-        |  CAST(ps_supplycost_cents AS BIGINT) AS supplycost_cents
-        |FROM o JOIN m ON ps_partkey = mk AND ps_supplycost_cents = mc
-        |ORDER BY acctbal_cents DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-    // Q9 replay: revenue cents minus derived supply cost x quantity,
-    // grouped by supplier nation and order year
-    "q9_product_profit" ->
-      s"""WITH $partsuppCte,
-        |pp AS (SELECT p_partkey FROM part WHERE p_name LIKE '%widget%'),
-        |li AS (SELECT l_orderkey, l_partkey, l_suppkey,
-        |  CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS rev_cents,
-        |  CAST(l_quantity AS BIGINT) AS qty
-        |  FROM lineitem JOIN pp ON l_partkey = p_partkey),
-        |j AS (SELECT li.*, ps_supplycost_cents FROM li
-        |  JOIN ps ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey),
-        |sn AS (SELECT s_suppkey, n_name FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey),
-        |oy AS (SELECT o_orderkey, CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS o_year
-        |  FROM orders)
-        |SELECT n_name AS nation, o_year,
-        |  CAST(sum(rev_cents - ps_supplycost_cents * qty) AS BIGINT) AS profit_cents
-        |FROM j JOIN sn ON l_suppkey = s_suppkey JOIN oy ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-    // Q11 replay: integral stock value, HAVING fraction as an integer
-    // cross-multiply against the total
-    "q11_important_stock" ->
-      s"""WITH $partsuppCte,
-        |asup AS (SELECT s_suppkey FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA'),
-        |v AS (SELECT ps_partkey,
-        |  ps_supplycost_cents * CAST(ps_availqty AS BIGINT) AS val
-        |  FROM ps JOIN asup ON ps_suppkey = s_suppkey),
-        |t AS (SELECT CAST(sum(val) AS BIGINT) AS tot,
-        |  CAST(count(DISTINCT ps_partkey) AS BIGINT) AS np FROM v),
-        |g AS (SELECT ps_partkey, CAST(sum(val) AS BIGINT) AS value_cents FROM v GROUP BY 1)
-        |SELECT ps_partkey, value_cents FROM g CROSS JOIN t
-        |WHERE value_cents * np > tot * 2""".stripMargin,
-    // Q16 replay: distinct supplier census per (brand, type, size)
-    "q16_parts_suppliers" ->
-      s"""WITH $partsuppCte,
-        |p AS (SELECT p_partkey, p_brand, p_type, p_size FROM part
-        |  WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-        |    AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45))
-        |SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM p JOIN ps ON p_partkey = ps_partkey
-        |GROUP BY 1, 2, 3""".stripMargin,
-    // Q20 replay: 1996 shipped-quantity aggregate per supply pair,
-    // integral excess-stock screen, AMERICA suppliers
-    "q20_potential_promotion" ->
-      s"""WITH $partsuppCte,
-        |fp AS (SELECT p_partkey FROM part WHERE p_name LIKE '%rod%'),
-        |q AS (SELECT l_partkey, l_suppkey,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-        |  FROM lineitem JOIN fp ON l_partkey = p_partkey
-        |  WHERE year(CAST(l_shipdate AS DATE)) = 1996 GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT ps_suppkey FROM ps
-        |  JOIN q ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
-        |  WHERE CAST(ps_availqty AS BIGINT) * 2 > qty),
-        |am AS (SELECT s_suppkey, s_name FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'AMERICA')
-        |SELECT s_suppkey, s_name FROM cand JOIN am ON ps_suppkey = s_suppkey""".stripMargin,
-    "retention_cohorts" ->
-      """WITH daily AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |cohorts AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1)
-        |SELECT strftime(cohort_day, '%Y-%m-%d') AS cohort,
-        |  CAST(date_diff('day', cohort_day, day) // 7 AS BIGINT) AS week_offset,
-        |  count(DISTINCT d.user_id) AS n_users
-        |FROM cohorts c JOIN daily d USING (user_id)
-        |WHERE d.day >= c.cohort_day
-        |GROUP BY 1, 2""".stripMargin,
-    // digit-log surrogate: length(CAST(count AS VARCHAR)) = ⌊log10⌋+1,
-    // exact in both engines — the whole LM training + scoring replays
-    "unigram_logprob" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-        |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-        |j AS (SELECT doc_id, CAST(length(CAST(cnt AS VARCHAR)) AS BIGINT) AS d
-        |  FROM t JOIN c USING (tok))
-        |SELECT doc_id, count(*) AS n_tok, CAST(sum(d) AS BIGINT) AS lm_digit_score,
-        |  CAST((10000 * CAST(sum(d) AS BIGINT)) // count(*) AS BIGINT) AS avg_digit_bp
-        |FROM j GROUP BY 1""".stripMargin,
-    "dsir_weights" ->
-      s"""WITH t AS (SELECT doc_id, lang = 'en' AS tgt,
-        |  unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-        |h AS (SELECT doc_id, tgt,
-        |  ${duckPolyHash("tok", 257L, 1000000007L)} % 1024 AS b FROM t),
-        |d AS (SELECT b, count(*) AS raw_cnt,
-        |  CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS tgt_cnt
-        |  FROM h GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_tok,
-        |  CAST(sum(CAST(length(CAST(tgt_cnt + 1 AS VARCHAR)) AS BIGINT)
-        |         - CAST(length(CAST(raw_cnt + 1 AS VARCHAR)) AS BIGINT)) AS BIGINT) AS w_digit
-        |FROM h JOIN d USING (b) GROUP BY 1""".stripMargin,
-    "stream_stream_join" -> // streaming interval join == batch interval join
-      """SELECT v.event_id AS view_id, c.event_id AS click_id, v.user_id
-        |FROM events v JOIN events c ON v.user_id = c.user_id
-        |WHERE v.event_type = 'view' AND c.event_type = 'click'
-        |  AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 24 HOUR""".stripMargin,
-    "bpe_encode" -> bpeEncodeOracle(6),
-    "tokenizer_fertility" -> bpeFertilityOracle(6),
-    // vocab-size knob curve: three rungs off one replayed 6-round chain
-    "bpe_vocab_curve" -> (bpeDocCtes(6) + ",\n" +
-      """r0 AS (SELECT CAST(0 AS BIGINT) AS n_merges, count(*) AS n_words,
-        |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe FROM dw0),
-        |r3 AS (SELECT CAST(3 AS BIGINT) AS n_merges, count(*) AS n_words,
-        |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe FROM dw3),
-        |r6 AS (SELECT CAST(6 AS BIGINT) AS n_merges, count(*) AS n_words,
-        |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe FROM dw6)
-        |SELECT n_merges, CAST(n_words AS BIGINT) AS n_words, n_bpe,
-        |  (10000 * n_bpe) // CAST(n_words AS BIGINT) AS fertility_bp
-        |FROM (SELECT * FROM r0 UNION ALL SELECT * FROM r3
-        |  UNION ALL SELECT * FROM r6)""".stripMargin),
-    // sampled-training curve: two extra chains trained on 1-in-N doc
-    // samples (prefixed CTEs), each vocabulary re-encoding the WHOLE
-    // corpus; merge agreement via pair IN (full chain's pairs)
-    "bpe_sampled_curve" -> {
-      val sampled = Seq(4, 16)
-      val chains = sampled.map(m => bpeChainBody(6, s"u$m", s"doc_id % $m = 0")).mkString(",\n")
-      val rencode = sampled.map(m => bpeDocBody(6, s"u$m", s"u$m")).mkString(",\n")
-      def mergeList(pfx: String) =
-        (1 to 6).map(r => s"SELECT pair FROM $pfx" + s"b$r").mkString(" UNION ALL ")
-      def aggFor(mod: Int, pfx: String, mlist: String) =
-        s"""agg$mod AS (SELECT CAST($mod AS BIGINT) AS sample_mod,
-           |  CAST(count(*) AS BIGINT) AS n_words,
-           |  CAST(sum(len(string_split(seq, ' '))) AS BIGINT) AS n_bpe,
-           |  CAST((SELECT count(*) FROM $mlist WHERE pair IN (SELECT pair FROM fullm)) AS BIGINT) AS n_shared_merges
-           |  FROM ${pfx}dw6)""".stripMargin
-      bpeDocCtes(6) + ",\n" + chains + ",\n" + rencode + ",\n" +
-        s"""fullm AS (${mergeList("")}),
-           |u4m AS (${mergeList("u4")}),
-           |u16m AS (${mergeList("u16")}),
-           |${aggFor(1, "", "fullm")},
-           |${aggFor(4, "u4", "u4m")},
-           |${aggFor(16, "u16", "u16m")}
-           |SELECT sample_mod, n_words, n_bpe,
-           |  (10000 * n_bpe) // n_words AS fertility_bp, n_shared_merges
-           |FROM (SELECT * FROM agg1 UNION ALL SELECT * FROM agg4
-           |  UNION ALL SELECT * FROM agg16)""".stripMargin
-    },
-    "stream_minhash_neardup" -> minhashOracle, // stream pairs == batch pairs
-    "stream_ivf_search" -> ivfFlatKnnOracle, // micro-batch union == batch IVF
-    // streamed per-media censuses union to the batch answer (a media
-    // row never splits across micro-batches) → shares the batch oracle
-    "stream_audio_vad" -> streamAudioVadOracle,
-    // graph-served loop: per-micro-batch beam over the standing
-    // adjacency; query batches union to the batch beam answer (each
-    // query's whole beam lives in its own micro-batch)
-    "stream_graph_search" -> graphKnnOracle,
-    "hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding, label AS q_label
-        |  FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (SELECT vec_id, embedding, label AS b_label
-        |  FROM embeddings WHERE vec_id % 20 <> 0),
-        |scored AS (SELECT q.query_id, b.vec_id AS neighbor_id,
-        |    q.q_label = b.b_label AS is_pos,
-        |    CAST(row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY -list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), b.vec_id) AS INTEGER) AS rank
-        |  FROM q CROSS JOIN b),
-        |topk AS (SELECT * FROM scored WHERE rank <= 10),
-        |picks AS (SELECT query_id,
-        |    min(CASE WHEN is_pos THEN rank END) AS pos_rank,
-        |    min(CASE WHEN NOT is_pos THEN rank END) AS neg_rank
-        |  FROM topk GROUP BY 1
-        |  HAVING pos_rank IS NOT NULL AND neg_rank IS NOT NULL)
-        |SELECT p.query_id, tp.neighbor_id AS pos_id, p.pos_rank,
-        |  tn.neighbor_id AS neg_id, p.neg_rank
-        |FROM picks p
-        |JOIN topk tp ON tp.query_id = p.query_id AND tp.rank = p.pos_rank
-        |JOIN topk tn ON tn.query_id = p.query_id AND tn.rank = p.neg_rank""".stripMargin,
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    QuerySpec.all.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] =
+    QuerySpec.all.map(q => q.name -> q.oracleSql).toMap
 }

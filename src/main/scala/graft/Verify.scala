@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,16 @@ object Verify {
     // optional trailing names restrict the dump — local iteration on one
     // query without paying for the full sweep (driver passes none)
     val only = args.drop(2).toSet
+    // a name must be registered: a typo would otherwise dump nothing and
+    // still look like a pass; oracle_sql.json below is restricted alike
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"not registered queries: ${unknown.toSeq.sorted.mkString(", ")}")
     // FIXED 32 like Bench (r10 review): Verify is the parity checker, and
     // shuffle-partition count changes double-sum association — a
     // machine-dependent default could flip the 6th decimal of the
     // float-rounded oracles (rrf/bm25) on hosts with <32 cores.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
@@ -42,7 +39,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => only.isEmpty || only(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * equals [[summarize]] of the full table (asserted in HarnessSpec and
   * oracle-checked by the `incremental_agg` query). Non-algebraic stats
   * (distinct, quantiles) take the sketch route instead — HLL /
-  * approx-quantile / CMS are likewise mergeable (see `SparkEntry`'s
+  * approx-quantile / CMS are likewise mergeable (see `StatsTrendQueries`'
   * bound-check queries).
   */
 object IncrementalAgg {

@@ -231,7 +231,7 @@ object Knn {
     // (~520 B/pair); projecting (query_id, vec_id, dist) first runs the
     // fold inside the codegen'd join stage and shrinks the boundary row
     // to 24 B. Same expression tree, same doubles, same heap order —
-    // measured 2x on the all-pairs cosine build (CosKernelAB variant D).
+    // measured 2x on the all-pairs cosine build (OPTIMIZATION_r12.md §1).
     val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
     spread(base)
       .crossJoin(broadcast(queries))

@@ -44,7 +44,7 @@ object UrlFunctions {
     * `foo.co.uk`, not `co.uk`). A production web-corpus pipeline would
     * broadcast the full PSL; this frozen subset covers the common ccTLD
     * second-level registries and is shared verbatim with the DuckDB
-    * oracle (SparkEntry interpolates it into the `url_canonicalize`
+    * oracle (TextDedupQueries interpolates it into the `url_canonicalize`
     * SQL) so the dedup key cannot drift between the two sides. */
   val MultiLabelSuffixes: Seq[String] = Seq(
     "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk", "ltd.uk", "plc.uk",

@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
+import graft.queries.Artifacts
 
 /** Same-JVM multi-rep COLD adjudication (SCALING.md drift protocol,
   * extended to artifact-build cost): each rep drops every memoized
-  * DataFrame artifact ([[SparkEntry.resetArtifactCaches]]) and clears
+  * DataFrame artifact ([[Artifacts.resetArtifactCaches]]) and clears
   * the block cache before timing, so rep 1 measures JVM-cold +
   * artifact-cold and reps 2+ measure JIT-warm + artifact-cold — the
   * quantity the driver's per-round cold bench draws sample once per
@@ -21,16 +20,10 @@ object ColdReps {
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     (1 to reps).foreach { i =>
-      SparkEntry.resetArtifactCaches(spark)
+      Artifacts.resetArtifactCaches(spark)
       names.foreach { name =>
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(name)(spark, sfDir).count()

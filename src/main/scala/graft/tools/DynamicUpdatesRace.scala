@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.operators.DynamicBench
 import graft.sources.Tables
 
@@ -24,11 +24,8 @@ object DynamicUpdatesRace {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "dynamicupdates_run.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalSession.builder(cpus)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.operators.DynamicBench
 import graft.sources.{MetricLogs, Tables}
 
@@ -15,11 +14,7 @@ object DynamicUpdatesRun {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "target/logs"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val queries = Tables.embeddingQueries(spark, dir)
     val base = Tables.embeddingBase(spark, dir)

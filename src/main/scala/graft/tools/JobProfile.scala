@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Dev utility: run named SparkEntry queries with a SparkListener that
   * prints per-job wall-clock, stage/task counts and the job's callsite —
@@ -18,14 +17,8 @@ object JobProfile {
     val sfDir = args.head
     val names = args.tail.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,14 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import graft.index.LshIndex
 import graft.operators.{Knn, Recall}
 import graft.sources.Tables
 object LshSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val queries = Tables.embeddingQueries(spark, dir).cache()
     val base = Tables.embeddingBase(spark, dir).cache()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Dump formatted physical plans for the headline queries — the
   * `.explain("formatted")` iteration loop the builder brief requires. */
@@ -8,12 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries
       .filter { case (n, _) => names.isEmpty || names.contains(n) }

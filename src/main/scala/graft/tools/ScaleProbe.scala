@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Measured scaling probe: replicate the sf0.1 fixtures N× with
   * key-space offsets (dimension tables stay constant — as at a real
@@ -147,13 +147,7 @@ object ScaleProbe {
     val only = args.drop(2).toSet
     val outDir = "target/scaleprobe"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // key columns per table; every listed column is offset per replica by

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.operators.DynamicBench
 import graft.sources.Tables
 
@@ -30,12 +29,8 @@ object ScalingRun {
     val countArgs = if (oldShape) args.drop(1) else args.drop(2)
     val counts = if (countArgs.nonEmpty) countArgs.map(_.toInt).toSeq else Seq(2, 4, 8)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalSession.builder(cpus)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val queries = Tables.embeddingQueries(spark, dir)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical
+
+import graft.LocalSession
 
 /** Repo-wide scale-shape audit: flags every registered query whose
   * optimized plan contains an UNPARTITIONED window — the one plan shape
@@ -30,13 +31,7 @@ object WindowAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,30 +1,47 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.QuerySpec
+
 /** Guards the driver contract itself: every registered query must run and
   * produce rows at the smoke scale factor (the driver's t1/t2 behavior),
-  * and the oracle map must stay consistent with the query map. */
+  * and the query registry must stay whole. */
 class ContractSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
   val dir = "/root/testdata/sf0.001"
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracle entries without queries: $extra")
+  // Each query is one QuerySpec carrying its oracle, so "every query has
+  // an oracle" is a type fact; what the registry can still get wrong is
+  // a duplicate name (the derived Map would keep one silently), a lost
+  // query, or a family the bench slices do not know.
+  test("registry: spec names are unique") {
+    val dups = QuerySpec.all.groupBy(_.name).collect { case (n, s) if s.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
   }
 
-  test("every declared query is oracle-checked (no rows-only entries)") {
-    // The entire declared contract hash-matches DuckDB: portable
-    // PolyHash dedup family, double-codec SQ8, hash-sign LSH, and the
-    // integer-Lloyd IvfFlat/PqFlat (which replace the MLlib-KMeans
-    // variants in the contract — those stay in the library, spec-tested
-    // in KnnSpec, but float-summed iterative training cannot be
-    // replayed by a SQL oracle).
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"rows-only queries crept in: $rowsOnly")
+  test("registry: 332 specs, each in one of the seven families") {
+    assert(QuerySpec.all.size == 332)
+    assert(SparkEntry.queries.size == 332 && SparkEntry.oracleSql.size == 332)
+    assert(QuerySpec.Families.size == 7)
+    val stray = QuerySpec.all.filterNot(q => QuerySpec.Families.contains(q.family))
+    assert(stray.isEmpty, stray.map(q => s"${q.name}: ${q.family}").mkString("\n"))
+  }
+
+  test("registry: every perfbench/registry.tsv line names a query of its family") {
+    val src = scala.io.Source.fromFile("perfbench/registry.tsv", "UTF-8")
+    val lines = try src.getLines().map(_.trim)
+      .filter(l => l.nonEmpty && !l.startsWith("#")).toList finally src.close()
+    assert(lines.nonEmpty)
+    val byName = QuerySpec.all.map(q => q.name -> q.family).toMap
+    lines.foreach { l =>
+      val Array(family, name, _) = l.split("\\s+")
+      assert(byName.get(name).contains(family), s"registry.tsv: $name is not a $family query")
+    }
   }
 
   test("oracle SQL stays inside the version-portable DuckDB subset") {
@@ -309,40 +326,73 @@ class ContractSpec extends AnyFunSuite {
     assert(fullBroken.contains("\"value_min\":"))
   }
 
+  // [^\[\]]* keeps a match inside ONE bracket pair, so the registry
+  // field (whose VALUE type is a nested TrieMap[_, DataFrame]) is not a
+  // hit while any direct TrieMap.empty[K, DataFrame] is. r10 review: the
+  // bare form is not the only way to smuggle in an unregistered cache —
+  // the ascribed (`val c: TrieMap[String, DataFrame] = TrieMap.empty`)
+  // and constructor (`new TrieMap[...]`) forms are caught too.
+  private val bareCache = """TrieMap\s*\.\s*empty\s*\[\s*[^\[\]]*DataFrame\s*\]""".r
+  private val ctorCache = """new\s+(?:scala\.collection\.concurrent\.)?TrieMap\s*\[[^\[\]]*DataFrame""".r
+  private val ascribedCache = """:\s*(?:scala\.collection\.concurrent\.)?TrieMap\s*\[[^\[\]]*DataFrame\s*\]\s*=""".r
+
+  /** Hits of the three cache patterns in `src`: the bare, constructor and
+    * ascribed form. The factory's own signature is the one legitimate
+    * ascription; it is filtered by name. */
+  def cacheLintHits(src: String): (Seq[String], Seq[String], Seq[String]) = {
+    def line(at: Int): String = {
+      val lineStart = src.lastIndexOf('\n', at) + 1
+      val end = src.indexOf('\n', at)
+      src.substring(lineStart, if (end < 0) src.length else end).trim
+    }
+    (bareCache.findAllMatchIn(src).map(m => line(m.start)).toSeq,
+      ctorCache.findAllMatchIn(src).map(m => line(m.start)).toSeq,
+      ascribedCache.findAllMatchIn(src).map(m => line(m.start)).toSeq
+        .filterNot(_.contains("namedArtifactCache")))
+  }
+
   test("every DataFrame artifact cache goes through namedArtifactCache (registry lint)") {
     // resetArtifactCaches and the bench artifact ledger enumerate the
     // registry; a cache created via a bare TrieMap.empty would be
     // invisible to both — exactly the r9 review finding (four late-added
     // caches missing from the hand-maintained drop list made ColdReps'
     // "artifact-cold" reps serve warm adjacencies). The factory itself is
-    // the single allowed occurrence.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    // [^\[\]]* keeps the match inside ONE bracket pair, so the registry
-    // field (whose VALUE type is a nested TrieMap[_, DataFrame]) is not
-    // a hit while any direct TrieMap.empty[K, DataFrame] is
-    val hits = """TrieMap\s*\.\s*empty\s*\[\s*[^\[\]]*DataFrame\s*\]""".r
-      .findAllMatchIn(src).toSeq
-    assert(hits.size == 1,
-      s"found ${hits.size} bare DataFrame TrieMaps in SparkEntry — use namedArtifactCache: " +
-        hits.map(m => src.substring(math.max(0, m.start - 60), m.start).linesIterator
-          .toSeq.lastOption.getOrElse("")).mkString("; "))
-    // r10 review: the bare-`TrieMap.empty[K, DataFrame]` form is not the
-    // only way to smuggle in an unregistered cache — catch the ascribed
-    // (`val c: TrieMap[String, DataFrame] = TrieMap.empty`) and
-    // constructor (`new TrieMap[...]`) forms too. The factory's own
-    // signature is the one legitimate ascription; filter it by name.
-    val ctorHits = """new\s+(?:scala\.collection\.concurrent\.)?TrieMap\s*\[[^\[\]]*DataFrame""".r
-      .findAllMatchIn(src).toSeq
-    assert(ctorHits.isEmpty, "DataFrame TrieMap constructed directly — use namedArtifactCache")
-    val ascribed = """:\s*(?:scala\.collection\.concurrent\.)?TrieMap\s*\[[^\[\]]*DataFrame\s*\]\s*=""".r
-      .findAllMatchIn(src).toSeq
-      .filterNot { m =>
-        val lineStart = src.lastIndexOf('\n', m.start) + 1
-        val line = src.substring(lineStart, src.indexOf('\n', m.start) max m.end)
-        line.contains("namedArtifactCache")
-      }
+    // the single allowed occurrence, anywhere under graft/.
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(files.size > 50, s"lint scanned only ${files.size} files")
+    val hits = files.map { p =>
+      p -> cacheLintHits(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    }
+    val bare = hits.flatMap { case (p, (b, _, _)) => b.map(l => s"$p: $l") }
+    assert(bare.size == 1 && bare.head.contains("Artifacts.scala"),
+      s"found ${bare.size} bare DataFrame TrieMaps — use namedArtifactCache:\n" +
+        bare.mkString("\n"))
+    val ctor = hits.flatMap { case (p, (_, c, _)) => c.map(l => s"$p: $l") }
+    assert(ctor.isEmpty, "DataFrame TrieMap constructed directly — use namedArtifactCache:\n" +
+      ctor.mkString("\n"))
+    val ascribed = hits.flatMap { case (p, (_, _, a)) => a.map(l => s"$p: $l") }
     assert(ascribed.isEmpty,
-      "DataFrame TrieMap bound via type ascription outside namedArtifactCache")
+      "DataFrame TrieMap bound via type ascription outside namedArtifactCache:\n" +
+        ascribed.mkString("\n"))
+  }
+
+  test("the artifact-cache lint itself fires on seeded unregistered caches") {
+    val seeded = Seq(
+      "val a = scala.collection.concurrent.TrieMap.empty[String, DataFrame]" -> ((1, 0, 0)),
+      "val b = TrieMap . empty [ (String, String), DataFrame ]" -> ((1, 0, 0)),
+      "val c = new TrieMap[String, DataFrame]()" -> ((0, 1, 0)),
+      "val d = new scala.collection.concurrent.TrieMap[Long, DataFrame]" -> ((0, 1, 0)),
+      "val e: TrieMap[String, DataFrame] = TrieMap.empty" -> ((0, 0, 1)),
+      "val f: scala.collection.concurrent.TrieMap[Int, DataFrame] = x" -> ((0, 0, 1)),
+      "val g = namedArtifactCache[String](\"g\")" -> ((0, 0, 0)),
+      "private val reg = TrieMap.empty[String, TrieMap[_, DataFrame]]" -> ((0, 0, 0)),
+      "def namedArtifactCache[K](n: String): TrieMap[K, DataFrame] = {" -> ((0, 0, 0)))
+    seeded.foreach { case (src, expected) =>
+      val (b, c, a) = cacheLintHits(src)
+      assert((b.size, c.size, a.size) == expected, src)
+    }
   }
 }

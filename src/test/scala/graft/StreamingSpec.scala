@@ -346,13 +346,13 @@ class StreamingSpec extends AnyFunSuite {
       StructField("query_id", LongType), StructField("rank", IntegerType)))
     // nonexistent dir (stream never wrote) — must not throw schema inference
     val missing = new java.io.File("target/test_sink_missing_dir")
-    val empty = SparkEntry.readSinkOrEmpty(spark, missing, schema)
+    val empty = graft.queries.StreamingQueries.readSinkOrEmpty(spark, missing, schema)
     assert(empty.schema == schema && empty.count() == 0)
     // dir with real part files — must read the data, not return empty
     val written = new java.io.File("target/test_sink_written_dir")
     Seq((1L, 1), (2L, 2)).toDF("query_id", "rank")
       .write.mode("overwrite").parquet(written.getPath)
-    assert(SparkEntry.readSinkOrEmpty(spark, written, schema).count() == 2)
+    assert(graft.queries.StreamingQueries.readSinkOrEmpty(spark, written, schema).count() == 2)
   }
 
   test("IVF searchAssigned with a precomputed assignment equals search") {

@@ -15,7 +15,7 @@ class TpchDerivedSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("partsupp key set is exactly the distinct lineitem supply pairs") {
-    val ps = SparkEntry.partsupp(spark, dir)
+    val ps = graft.queries.TpchQueries.partsupp(spark, dir)
     val pairs = graft.sources.Tables.lineitem(spark, dir)
       .select(col("l_partkey"), col("l_suppkey")).distinct()
     assert(ps.count() == pairs.count())
@@ -25,7 +25,7 @@ class TpchDerivedSpec extends AnyFunSuite {
   }
 
   test("partsupp measures are the documented closed forms, in bounds") {
-    val rows = SparkEntry.partsupp(spark, dir)
+    val rows = graft.queries.TpchQueries.partsupp(spark, dir)
       .select("ps_partkey", "ps_suppkey", "ps_availqty", "ps_supplycost_cents")
       .collect()
     assert(rows.nonEmpty)

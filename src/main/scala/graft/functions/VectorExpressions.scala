@@ -153,51 +153,11 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryE
     copy(left = l, right = r)
 }
 
-/** ADC (asymmetric distance computation) lookup for product quantization:
-  * given a query's flattened distance table (m·ksub floats: distance from
-  * the query's j-th subvector to centroid c is `table[j*ksub + c]`) and a
-  * candidate's code array (m ints), returns Σ_j table[j*ksub + codes[j]] —
-  * the PQ-approximate squared L2 distance. Fused-loop codegen, no
-  * allocation per pair (the FAISS IVFADC hot loop,
-  * /root/reference/multi_tenant_script.py:94-103 uses IndexIVFPQ). */
-case class PqAdcDistance(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "pq_adc_dist"
-
-  override def nullSafeEval(t: Any, c: Any): Any = {
-    val table = t.asInstanceOf[ArrayData]
-    val codes = c.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var j = 0
-    val m = codes.numElements()
-    while (j < m) { acc += table.getFloat(j * ksub + codes.getInt(j)); j += 1 }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, c) => {
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      s"""
-         |int $m = $c.numElements();
-         |double ${ev.value}Acc = 0.0;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  ${ev.value}Acc += $t.getFloat($j * $ksub + $c.getInt($j));
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcDistance =
-    copy(left = l, right = r)
-}
-
-/** Table-lookup ADC over an int64 distance table (entry `j*ksub + code`
-  * for subspace j) — the exact-integer sibling of [[PqAdcDistance]] used
-  * by the oracle-checkable PQ paths ([[graft.index.PqFlat]] /
-  * [[graft.index.IvfPq]]): every entry and the sum are exact int64, so
+/** ADC (asymmetric distance computation) table lookup for product
+  * quantization over an int64 distance table (entry `j*ksub + code` for
+  * subspace j): returns Σ_j table[j*ksub + codes[j]], the PQ-approximate
+  * squared L2 distance used by [[graft.index.PqFlat]] and
+  * [[graft.index.IvfPq]]. Every entry and the sum are exact int64, so
   * the compressed-domain ordering replays bit-for-bit in a SQL engine
   * while keeping the fused no-allocation lookup loop of the FAISS IVFADC
   * scan (/root/reference/multi_tenant_script.py:94-103). */

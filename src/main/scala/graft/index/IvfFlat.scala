@@ -8,9 +8,9 @@ import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions.l2sq
 
 /** Deterministic integer-arithmetic IVF — the oracle-checkable coarse
-  * quantizer completing the IVF family next to [[IvfIndex]] (MLlib
-  * KMeans): embeddings are quantized to a 2²⁰ integer grid, Lloyd runs a
-  * FIXED number of iterations with integer centroids (sums are exact
+  * quantizer of the IVF family (FAISS `IndexIVFFlat` / the IVF half of
+  * `IndexIVFPQ`): embeddings are quantized to a 2²⁰ integer grid, Lloyd
+  * runs a FIXED number of iterations with integer centroids (sums are exact
   * int64, means round back to the grid via floor-div), and every
   * assignment breaks ties by centroid id. No floating-point accumulation
   * anywhere in training ⇒ bit-identical replay in any engine, any
@@ -183,7 +183,14 @@ object IvfFlat {
     val spark = queries.sparkSession
     val qq = queries.select(col("query_id").as("vec_id"),
       quantize(col("q_embedding")).as("qv"))
+    // The cid filter is always true. It is there because Spark plans
+    // dynamic partition pruning only when the join's build side holds a
+    // selective Filter, and an explode over centroid literals has none:
+    // without it DPP rests on the caller's query filter, which a cached
+    // query set hides inside an InMemoryRelation, and the scan then reads
+    // every cluster directory.
     val probes = probeCells(qq, centroids, nprobe)
+      .filter(col("cid") < centroids.length)
       .select(col("query_id"), col("cid").as("cluster_id"))
     val topk = topKByDist(col("vec_id"), col("dist"), k)
     graft.sources.Layout.readIvfPartitioned(spark, layoutPath)

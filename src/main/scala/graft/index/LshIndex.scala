@@ -1,9 +1,6 @@
 package graft.index
 
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Random-projection LSH index — the Spark analog of the reference's
@@ -11,30 +8,12 @@ import org.apache.spark.sql.functions._
   * `/root/reference/dynamic_script_annoy.py:61-64` 100 trees euclidean,
   * `/root/reference/dynamic_script_mrpt.py:44-47` autotuned).
   *
-  * MLlib's `BucketedRandomProjectionLSH` hashes vectors into buckets by
-  * random projections; `approxSimilarityJoin` turns the kNN into an
-  * equi-join on (hash-table, bucket) — candidates co-located by bucket id,
-  * which is the partitioning that scales: no nested loop ever materializes.
+  * Vectors hash into buckets by deterministic random projections
+  * ([[signProjection]]); [[search]] turns the kNN into an equi-join on
+  * (hash-table, bucket) — candidates co-located by bucket id, which is the
+  * partitioning that scales: no nested loop ever materializes.
   */
-final case class LshModel(model: BucketedRandomProjectionLSHModel)
-
 object LshIndex {
-
-  /** Fit on the base table (vec_id, embedding). `bucketLength` follows the
-    * MLlib guidance ~ pow(n, -1/d) scaled to data range; for the unit-ish
-    * synthetic embeddings a constant works and is seed-stable. */
-  def fit(base: DataFrame, numHashTables: Int, bucketLength: Double, seed: Long = 42L): LshModel = {
-    val lsh = new BucketedRandomProjectionLSH()
-      .setNumHashTables(numHashTables)
-      .setBucketLength(bucketLength)
-      .setSeed(seed)
-      .setInputCol("features")
-      .setOutputCol("hashes")
-    LshModel(lsh.fit(featurize(base)))
-  }
-
-  private def featurize(df: DataFrame): DataFrame =
-    df.withColumn("features", array_to_vector(col("embedding")))
 
   /** Hash-sign (Rademacher ±1) projection matrix: entry (t, j) is the
     * 17th bit of the Knuth multiplicative mix of t·dim + j. Statistically
@@ -48,13 +27,11 @@ object LshIndex {
     if (((mixed >> 16) & 1L) == 1L) 1.0 else -1.0
   }
 
-  /** Spark-first RP-LSH without the MLlib wrapper: `numHashTables`
-    * deterministic ±1 projection vectors ([[signProjection]]); bucket =
-    * ⌊(v·p)/bucketLength⌋; candidates = equi-join on (table, bucket);
-    * exact distance + bounded-heap top-k on the candidate set. Same
-    * algorithm family as `BucketedRandomProjectionLSH`, leaner plan (no
-    * UDT conversions, no per-pair key dedup pass). */
-  def searchFast(queries: DataFrame, base: DataFrame, k: Int,
+  /** RP-LSH kNN: `numHashTables` deterministic ±1 projection vectors
+    * ([[signProjection]]); bucket = ⌊(v·p)/bucketLength⌋; candidates =
+    * equi-join on (table, bucket); exact distance + bounded-heap top-k on
+    * the candidate set. Output: (query_id, neighbor_id, rank). */
+  def search(queries: DataFrame, base: DataFrame, k: Int,
       numHashTables: Int, bucketLength: Double, dim: Int,
       probes: Int = 1): DataFrame = {
     import graft.functions.GraftFunctions.topKByDist
@@ -85,27 +62,5 @@ object LshIndex {
       .agg(topk.as("nn"))
       .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
       .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Approximate kNN: bucket-join candidates within `threshold` L2 distance,
-    * then per-query top-k. Output: (query_id, neighbor_id, rank).
-    *
-    * MRPT's `build_autotune_sample(target_recall)` analog: callers sweep
-    * (numHashTables, threshold) until [[graft.operators.Recall]] clears the
-    * target on a validation split. */
-  def search(model: LshModel, queries: DataFrame, base: DataFrame, k: Int, threshold: Double): DataFrame = {
-    val q = featurize(queries.select(col("query_id").as("vec_id"), col("q_embedding").as("embedding")))
-    val b = featurize(base)
-    val joined = model.model
-      .approxSimilarityJoin(q, b, threshold, "dist")
-      .select(
-        col("datasetA.vec_id").as("query_id"),
-        col("datasetB.vec_id").as("neighbor_id"),
-        col("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("neighbor_id"))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions.l2sq
 
-/** Deterministic integer-arithmetic product quantizer — the
-  * oracle-checkable member of the PQ family next to [[PqIndex]] (MLlib
-  * KMeans codebooks). Same construction as [[IvfFlat]], lifted to
+/** Deterministic integer-arithmetic product quantizer — the PQ half of
+  * FAISS `IndexIVFPQ` (m subquantizers over d/m-dim subvectors, ADC
+  * search). Same construction as [[IvfFlat]], lifted to
   * subspaces: vectors quantize to the 2²⁰ grid, split into `m` 4-d
   * subvectors, and ALL `m` codebooks train in ONE relational Lloyd chain
   * with (sub_id, cid) as the grouping key — integer sums, floor-div
@@ -20,9 +20,7 @@ import graft.functions.VectorFunctions.l2sq
   * Scale shape: training is two explode-aggregates keyed by
   * (sub_id, cid, pos); the ADC scan is an equi-join of the encoded base
   * (m rows per vector) against the per-query distance table on
-  * (sub_id, code) followed by a sum keyed by (query, vec). The
-  * lookup-kernel variant ([[PqIndex]] with `PqAdcDistance`) remains the
-  * raw-throughput path; this is the reproducibility-grade one.
+  * (sub_id, code) followed by a sum keyed by (query, vec).
   */
 object PqFlat {
 

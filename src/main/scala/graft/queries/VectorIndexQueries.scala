@@ -211,14 +211,13 @@ object VectorIndexQueries {
   private def knnCosine(spark: SparkSession, dir: String): DataFrame =
     cosineHits(spark, dir)
 
-  /** IVF pruned kNN (SURVEY §2.2 I2 / §2.3). nlist=8/nprobe=6 clears the
-    * BASELINE ≥0.9 recall bar on the weakly-clustered synthetic embeddings
-    * (autotuned via graft.tools.IvfSweep, the MRPT-autotune analog); on
-    * naturally clustered corpora the same code runs nlist=√n, nprobe≈10%. */
-
-  /** Deterministic integer-Lloyd IVF (graft.index.IvfFlat): the
-    * oracle-checkable member of the IVF family — quantized grid, exact
-    * int64 training, fixed 2 iterations, nprobe=6 probe + float rerank. */
+  /** IVF pruned kNN (SURVEY §2.2 I2 / §2.3) with the deterministic
+    * integer-Lloyd coarse quantizer (graft.index.IvfFlat): quantized grid,
+    * exact int64 training, fixed 2 iterations, nprobe=6 probe + float
+    * rerank. nlist=8/nprobe=6 clears the BASELINE ≥0.9 recall bar on the
+    * weakly-clustered synthetic embeddings (the `ivf_autotune` query is
+    * the MRPT-autotune analog); on naturally clustered corpora the same
+    * code runs nlist=√n, nprobe≈10%. */
   private[queries] def ivfFlatModel(spark: SparkSession, dir: String): Array[Array[Long]] =
     ivfFlatCache.getOrElseUpdate(dir, {
       ArtifactLedger.recordNamedBuild("model:ivf_flat")
@@ -465,12 +464,11 @@ object VectorIndexQueries {
         Tables.embeddingBase(spark, dir), KnnK, prefixDim = 32, shortlistSize = 200)
     }
 
-  /** LSH kNN (SURVEY §2.2 I4/I5): Spark-first RP-LSH bucket join, 8 hash
-    * tables, bucket length 1.0 (recall 0.95-0.97 across fixtures; the
-    * MLlib-wrapper variant LshIndex.search stays covered in KnnSpec). */
+  /** LSH kNN (SURVEY §2.2 I4/I5): RP-LSH bucket join, 8 hash tables,
+    * bucket length 1.0 (recall 0.95-0.97 across fixtures). */
   private def knnLsh(spark: SparkSession, dir: String): DataFrame =
     memoSearch("lsh", dir) {
-      LshIndex.searchFast(
+      LshIndex.search(
         Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
         KnnK, numHashTables = 8, bucketLength = 1.0, dim = 64)
     }
@@ -723,7 +721,7 @@ object VectorIndexQueries {
     * query side. */
   private def knnLshMultiprobe(spark: SparkSession, dir: String): DataFrame =
     memoSearch("lsh_mp", dir) {
-      graft.index.LshIndex.searchFast(
+      graft.index.LshIndex.search(
         Tables.embeddingQueries(spark, dir), Tables.embeddingBase(spark, dir),
         KnnK, numHashTables = 4, bucketLength = 1.0, dim = 64, probes = 3)
     }
@@ -1206,7 +1204,7 @@ object VectorIndexQueries {
     s"WITH $bqKnnCtes\nSELECT query_id, neighbor_id, rank FROM bq_scored WHERE rank <= 10"
 
   /** Shared CTE prefix replicating hash-sign RP-LSH bucketing
-    * (LshIndex.signProjection/searchFast: 8 tables, bucketLength 1.0). */
+    * (LshIndex.signProjection/search: 8 tables, bucketLength 1.0). */
   private val lshKnnCtes: String = {
     val dot =
       """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),

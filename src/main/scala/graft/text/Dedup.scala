@@ -680,32 +680,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
   }
 
-  /** Embedding near-dup at scale: normalize, then LSH-bucketed similarity
-    * join (cos ≥ t ⇔ L2 ≤ √(2−2t) on unit vectors) — candidates co-located
-    * by hash bucket instead of the all-pairs cross join. */
-  def embeddingNearDupLsh(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, numHashTables: Int = 4, bucketLength: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.functions.array_to_vector
-    val norm = VectorFunctions.norm2(col(vecCol))
-    val unit = emb.select(
-      col(idCol),
-      transform(col(vecCol), x => x.cast("double") / norm).as("unit"))
-    val feat = unit.withColumn("features", array_to_vector(col("unit")))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setNumHashTables(numHashTables).setBucketLength(bucketLength).setSeed(seed)
-      .setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(feat)
-    val dist = math.sqrt(math.max(2 - 2 * threshold, 0))
-    model.approxSimilarityJoin(feat, feat, dist, "l2")
-      .select(
-        col(s"datasetA.$idCol").as("id_a"),
-        col(s"datasetB.$idCol").as("id_b"),
-        round(lit(1) - col("l2") * col("l2") / 2, 4).as("cos"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
   /** Exact substring dedup — the suffix-array criterion of Lee et al.
     * 2021 ("Deduplicating Training Data Makes Language Models Better"):
     * two documents are substring duplicates when they share a contiguous

@@ -243,7 +243,7 @@ object ScaleProbe {
         graft.index.IvfFlat.search(cs, fixedQueries(dir), base, k = 10, nprobe = 8)
       },
       "knn_lsh_fixedq" -> (dir =>
-        graft.index.LshIndex.searchFast(fixedQueries(dir), baseOf(dir),
+        graft.index.LshIndex.search(fixedQueries(dir), baseOf(dir),
           k = 10, numHashTables = 8, bucketLength = 4.0, dim = 64)),
       // I1 incremental insert end to end: NN-Descent build on 80% of the
       // corpus, beam-search insertion of the held-out 20%, then a fixed-

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.IvfIndex
+import graft.index.IvfFlat
 import graft.sources.{Layout, Tables}
 
 /** The layout claims must be visible in the physical plan: partition
@@ -15,9 +15,9 @@ class LayoutSpec extends AnyFunSuite {
 
   test("IVF-partitioned layout prunes partitions at the scan") {
     val base = Tables.embeddingBase(spark, dir)
-    val model = IvfIndex.fit(base.coalesce(2), base, nlist = 8)
+    val model = IvfFlat.fit(base, nlist = 8)
     val path = "target/tmp/ivf_layout"
-    Layout.writeIvfPartitioned(model.assignedBase, path)
+    IvfFlat.writeLayout(model, base, path)
     val pruned = Layout.prunedClusters(spark, path, Seq(0, 1))
     val planStr = pruned.queryExecution.executedPlan.toString
     // partition filters appear at the scan; only 2 of 8 cluster dirs read
@@ -33,12 +33,15 @@ class LayoutSpec extends AnyFunSuite {
 
   test("partitioned IVF search: dynamic partition pruning, same results") {
     val base = Tables.embeddingBase(spark, dir)
-    val queries = Tables.embeddingQueries(spark, dir)
-    val model = IvfIndex.fit(base.coalesce(2), base, nlist = 8)
+    // cached, as other suites in this JVM cache the same query plan: the
+    // vec_id filter then sits inside an InMemoryRelation, so pruning must
+    // not depend on it
+    val queries = Tables.embeddingQueries(spark, dir).cache()
+    val model = IvfFlat.fit(base, nlist = 8)
     val path = "target/tmp/ivf_layout_dpp"
-    Layout.writeIvfPartitioned(model.assignedBase, path)
-    val viaLayout = IvfIndex.searchPartitioned(model, path, queries, 10, nprobe = 4)
-    val inMemory = IvfIndex.search(model, queries, 10, nprobe = 4)
+    IvfFlat.writeLayout(model, base, path)
+    val viaLayout = IvfFlat.searchPartitioned(model, path, queries, 10, nprobe = 4)
+    val inMemory = IvfFlat.search(model, queries, base, 10, nprobe = 4)
     val a = viaLayout.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val b = inMemory.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(a == b && a.nonEmpty)

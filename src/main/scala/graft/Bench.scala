@@ -49,7 +49,7 @@ object Bench {
     * round-5/6 headline; 3 reps from round 10 — see the timing loop). */
   private[graft] def fullLine(results: Seq[(String, Double, Double)], sfDir: String,
       artifacts: Map[String, Seq[String]] = Map.empty,
-      gcMs: Map[String, Long] = Map.empty, retain: String = "all",
+      gcMs: Map[String, Long] = Map.empty,
       cpus: String = "?",
       jobsCold: Map[String, Int] = Map.empty,
       jobsWarm: Map[String, Int] = Map.empty): String = {
@@ -94,7 +94,7 @@ object Bench {
     val jw = results.flatMap { case (k, _, _) => jobsWarm.get(k).map(n => s"\"" + k + "\":" + n) }
       .mkString("{", ",", "}")
     val refPart = refFields(results)
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":3,"agg":"cold","retain":"$retain",$refPart"queries":$qs,"queries_min":$mins,"queries_artifact":$arts,"gc_ms":$gcs,"gc_ms_total":$gcTotal,"jobs_cold":$jc,"jobs_warm":$jw,"cpus":"$cpus","n_queries":${results.size},"n_failed":$nFailed,"n_cold_failed":$nColdFailed,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":3,"agg":"cold",$refPart"queries":$qs,"queries_min":$mins,"queries_artifact":$arts,"gc_ms":$gcs,"gc_ms_total":$gcTotal,"jobs_cold":$jc,"jobs_warm":$jw,"cpus":"$cpus","n_queries":${results.size},"n_failed":$nFailed,"n_cold_failed":$nColdFailed,"sf":"$sfDir"}"""
   }
 
   /** The machine-state index fields shared by both JSON lines:
@@ -201,55 +201,16 @@ object Bench {
     // warnings — which are exactly the signals a bench run should surface
     // (ADVICE r11).
     suppressNoPartitionWarn()
-    // retention policy for the per-dir memoized artifacts (r9 verdict
-    // item 1): "drop" unpersists each artifact-cache entry right after
-    // its LAST consumer in the sorted query order finishes. MEASURED
-    // same-tree A/B at sf0.1 (round 10): retain-all 387.0 s cold /
-    // 126.9 s min / 8.9 s GC vs drop 446.2 / 151.8 / 15.9 — eager
-    // dropping LOSES (median per-query min +34 ms): the standing
-    // artifacts cost nothing while the per-query unpersist feeds the
-    // ContextCleaner/GC on every cycle. The r9 heap-pressure hypothesis
-    // is REFUTED; "all" stays the default and "drop" remains available
-    // for re-adjudication. Consumers are observed during the warmup
-    // pass through the artifact ledger (per-dir keys canonicalized so
-    // warmup-dir observations map onto the timed dir's entries).
-    val retainRequested = sys.env.getOrElse("SPARK_GRAFT_RETAIN", "all")
+    // warmup pass over the small fixture: first-touch JIT/codegen is not
+    // billed to the timed reps
     Artifacts.ArtifactLedger.enabled = true
-    def canonKey(k: String, dir: String): String = k.replace(dir, "@dir")
-    val warmAccesses = scala.collection.mutable.Map.empty[String, Set[(String, String)]]
-    val warmupFailed = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      Artifacts.ArtifactLedger.drainAccesses()
-      try { fn(spark, warmupDir).count() } catch { case _: Throwable => warmupFailed += name }
-      warmAccesses(name) = Artifacts.ArtifactLedger.drainAccesses()
-        .map { case (n, k) => (n, canonKey(k, warmupDir)) }.toSet
+    SparkEntry.queries.foreach { case (_, fn) =>
+      try { fn(spark, warmupDir).count() } catch { case _: Throwable => () }
     }
     Artifacts.ArtifactLedger.drainBuilds()
-    // access recording exists only to build the consumer map; stop it for
-    // the timed pass (builds stay recorded for the attribution map)
-    Artifacts.ArtifactLedger.accessRecording = false
-    // the consumer map is only trustworthy if every query's warmup run
-    // actually executed: a query that failed at warmup contributes no
-    // accesses, so its artifacts would be dropped after an EARLIER
-    // consumer and every later rep would silently pay a rebuild —
-    // corrupting the very A/B the knob adjudicates. Fall back to
-    // keep-everything and say so.
-    val retain =
-      if (retainRequested == "drop" && warmupFailed.nonEmpty) {
-        System.err.println(s"[bench] retain=drop requested but warmup failed for " +
-          s"${warmupFailed.toSeq.sorted.mkString(",")} - falling back to retain=all")
-        "all"
-      } else retainRequested
     // drop ALL warmup-dir artifacts (nothing consumes them again) and
-    // every cached block — the timed pass starts artifact-cold either way
+    // every cached block — the timed pass starts artifact-cold
     Artifacts.resetArtifactCaches(spark)
-    // entry -> last consumer in sorted (= timed) order; later queries
-    // overwrite earlier ones in the fold
-    val sortedQueryNames = SparkEntry.queries.keys.toSeq.sorted
-    val dropAfter: Map[String, Seq[(String, String)]] = sortedQueryNames
-      .flatMap(q => warmAccesses.getOrElse(q, Set.empty[(String, String)]).map(_ -> q))
-      .toMap // (cache, canonKey) -> last consumer
-      .groupBy(_._2).map { case (q, m) => q -> m.keys.toSeq }
     // best-of-three per query: single-shot numbers carry ±15%
     // scheduler/GC noise at fixture scale; min-of-3 reports the
     // repeatable cost (see the rep comment below for the r10 widening).
@@ -322,9 +283,6 @@ object Bench {
       // code adjudications of cross-round drift can read heap pressure
       // straight off bench_full.json (r9 verdict item 1)
       gcPerQuery(name) = gcNow() - gc0
-      if (retain == "drop") dropAfter.getOrElse(name, Nil).foreach { case (cache, ck) =>
-        Artifacts.dropArtifactEntries(cache, k => canonKey(k, sfDir) == ck)
-      }
       // localCheckpoint blocks are released by the ContextCleaner only
       // after their DataFrames are GC'd; across 100+ queries the dead
       // blocks otherwise pile up in storage memory and the later queries
@@ -344,7 +302,7 @@ object Bench {
     // full map to a file ONLY — echoing 7 KB to stderr could interleave
     // after the compact stdout line in a merged capture and push it out
     // of the driver's 2000-char window.
-    val full = fullLine(results, sfDir, artifactNames.toMap, gcPerQuery.toMap, retain, cpus,
+    val full = fullLine(results, sfDir, artifactNames.toMap, gcPerQuery.toMap, cpus,
       jobsCold.toMap, jobsWarm.toMap)
     try {
       java.nio.file.Files.write(

@@ -13,6 +13,9 @@ import org.apache.spark.sql.types._
   * pairs seen, ordered lexicographically by (dist, id) so results are
   * deterministic under ties. Distinctness makes the aggregate insensitive
   * to duplicated candidate pairs (e.g. LSH multi-table collisions).
+  * The dist order is total: NaN ranks after every number and equals
+  * itself (as in DuckDB), and -0.0 equals 0.0 — so the kept set does not
+  * depend on arrival order, that is, on partitioning.
   * O(k) state, O(log k) insert (+O(k) equality scan on accepted inserts).
   */
 final class TopKHeap(val k: Int) extends Serializable {
@@ -20,13 +23,20 @@ final class TopKHeap(val k: Int) extends Serializable {
   val ids = new Array[Long](k)
   var size = 0
 
+  /** (d1, i1) ranks after (d2, i2). The plain comparisons decide every
+    * number pair (±0 compare equal); only a NaN reaches the last two
+    * branches. */
   @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-    d1 > d2 || (d1 == d2 && i1 > i2)
+    if (d1 > d2) true
+    else if (d1 < d2) false
+    else if (d1 == d2) i1 > i2
+    else if (d1.isNaN != d2.isNaN) d1.isNaN
+    else i1 > i2
 
   @inline private def contains(d: Double, id: Long): Boolean = {
     var i = 0
     while (i < size) {
-      if (dists(i) == d && ids(i) == id) return true
+      if (ids(i) == id && (dists(i) == d || (d.isNaN && dists(i).isNaN))) return true
       i += 1
     }
     false
@@ -68,20 +78,19 @@ final class TopKHeap(val k: Int) extends Serializable {
     while (i < size) { other.insert(dists(i), ids(i)); i += 1 }
   }
 
-  /** Ids sorted ascending by (dist, id) — rank order. */
-  def sortedIds: Array[Long] = {
-    val idx = (0 until size).sortBy(i => (dists(i), ids(i)))
-    idx.map(ids).toArray
-  }
+  /** Heap slots in rank order: ascending by (dist, id) under [[worse]]. */
+  private def rankOrder: Seq[Int] =
+    (0 until size).sortWith((a, b) => worse(dists(b), ids(b), dists(a), ids(a)))
 
-  def sortedPairs: Array[(Double, Long)] = {
-    val idx = (0 until size).sortBy(i => (dists(i), ids(i)))
-    idx.map(i => (dists(i), ids(i))).toArray
-  }
+  def sortedIds: Array[Long] = rankOrder.map(ids).toArray
+
+  def sortedPairs: Array[(Double, Long)] = rankOrder.map(i => (dists(i), ids(i))).toArray
 }
 
-/** `topk_by_dist(id, dist, k)` — aggregate returning the ids of the k
-  * smallest-distance rows per group, ascending by (dist, id).
+/** The bounded-heap aggregate both top-k functions share: one
+  * [[TopKHeap]] per group, partial heaps merged across partitions, the
+  * heap shipped as (k, size, (dist, id)*). The subclasses differ only in
+  * what `eval` returns.
   *
   * This is the one genuinely warranted custom Catalyst piece (SURVEY §4.4):
   * the reference's ANN kernels keep bounded per-query heaps in C++
@@ -92,22 +101,20 @@ final class TopKHeap(val k: Int) extends Serializable {
   * only k (dist, id) pairs per query per partition cross the shuffle —
   * the difference between O(|base|·|queries|) and O(k·|queries|·partitions)
   * shuffle bytes, which is what survives a 100 TB scale-up.
+  *
+  * Input typing is enforced at the Column layer (GraftFunctions casts id
+  * to long and dist to double); ExpectsInputTypes is private[sql] in 4.x.
+  * k is a constructor PARAMETER, not an expression child: planner rules
+  * map children through attribute substitution (e.g. grouping-key
+  * pull-out), and a literal child would come back as a non-foldable
+  * attribute reference mid-planning.
   */
-case class TopKByDistance(
-    id: Expression,
-    dist: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
+abstract class TopKHeapAggregate
   extends TypedImperativeAggregate[TopKHeap]
   with BinaryLike[Expression] {
-  // Input typing is enforced at the Column layer (GraftFunctions casts id
-  // to long and dist to double); ExpectsInputTypes is private[sql] in 4.x.
-  // k is a constructor PARAMETER, not an expression child: planner rules
-  // map children through attribute substitution (e.g. grouping-key
-  // pull-out), and a literal child would come back as a non-foldable
-  // attribute reference mid-planning.
-  require(k > 0, "k must be positive")
+  def id: Expression
+  def dist: Expression
+  def k: Int
 
   override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
 
@@ -124,8 +131,6 @@ case class TopKByDistance(
     other.mergeInto(buf)
     buf
   }
-
-  override def eval(buf: TopKHeap): Any = new GenericArrayData(buf.sortedIds)
 
   override def serialize(buf: TopKHeap): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 + 16 * buf.size)
@@ -144,12 +149,27 @@ case class TopKByDistance(
     heap
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "topk_by_dist"
-
   override def left: Expression = id
   override def right: Expression = dist
+}
+
+/** `topk_by_dist(id, dist, k)` — aggregate returning the ids of the k
+  * smallest-distance rows per group, ascending by (dist, id). */
+case class TopKByDistance(
+    id: Expression,
+    dist: Expression,
+    k: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TopKHeapAggregate {
+  require(k > 0, "k must be positive")
+
+  override def eval(buf: TopKHeap): Any = new GenericArrayData(buf.sortedIds)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "topk_by_dist"
+
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKByDistance =
     copy(id = newLeft, dist = newRight)
@@ -172,58 +192,21 @@ case class TopKPairsByDistance(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKHeap]
-  with BinaryLike[Expression] {
+  extends TopKHeapAggregate {
   require(k > 0, "k must be positive")
-
-  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
-
-  override def update(buf: TopKHeap, input: InternalRow): TopKHeap = {
-    val d = dist.eval(input)
-    val i = id.eval(input)
-    if (d != null && i != null) {
-      buf.insert(d.asInstanceOf[Double], i.asInstanceOf[Long])
-    }
-    buf
-  }
-
-  override def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
-    other.mergeInto(buf)
-    buf
-  }
 
   override def eval(buf: TopKHeap): Any =
     new GenericArrayData(buf.sortedPairs.map { case (d, i) =>
       InternalRow(d, i)
     })
 
-  override def serialize(buf: TopKHeap): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 16 * buf.size)
-    bb.putInt(buf.k).putInt(buf.size)
-    var i = 0
-    while (i < buf.size) { bb.putDouble(buf.dists(i)).putLong(buf.ids(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKHeap = {
-    val bb = ByteBuffer.wrap(bytes)
-    val heap = new TopKHeap(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) { val d = bb.getDouble(); val id = bb.getLong(); heap.insert(d, id); i += 1 }
-    heap
-  }
-
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("dist", DoubleType, nullable = false),
       StructField("id", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "topk_pairs_by_dist"
 
-  override def left: Expression = id
-  override def right: Expression = dist
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKPairsByDistance =
     copy(id = newLeft, dist = newRight)

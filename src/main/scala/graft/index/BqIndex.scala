@@ -3,8 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.topKByDist
-import graft.functions.VectorFunctions.l2sq
+import graft.operators.Knn
 
 /** Binary quantization (1-bit-per-dimension) index: each embedding
   * becomes its sign pattern against per-dimension thresholds, packed
@@ -59,7 +58,7 @@ object BqIndex {
   /** Top-k by Hamming shortlist + exact re-rank. Two broadcast-queries
     * passes: the compressed scan reads only the packed words (8 bytes a
     * vector), the re-rank reads full vectors for `shortlist` ids per
-    * query. Output: (query_id, neighbor_id, rank), rank ∈ [1, k]. */
+    * query. */
   def search(queries: DataFrame, base: DataFrame, k: Int,
       shortlist: Int = 100): DataFrame = {
     val thr = fitThresholds(base)
@@ -73,22 +72,9 @@ object BqIndex {
     val ham = (0 until nw)
       .map(i => bit_count(col(s"w$i").bitwiseXOR(col(s"qw$i"))))
       .reduce(_ + _)
-    val cand = encB
+    val cand = Knn.shortlist(encB
       .crossJoin(broadcast(encQ))
-      .withColumn("ham", ham.cast("double"))
-      .groupBy(col("query_id"))
-      .agg(topKByDist(col("vec_id"), col("ham"), shortlist).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("vec_id"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    cand
-      .join(base, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
+      .withColumn("ham", ham.cast("double")), shortlist, dist = "ham")
+    Knn.rerank(cand, base, broadcast(queries), k)
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions.l2sq
+import graft.operators.Knn
 
 /** Graph-based ANN — the Spark-native answer to the reference's HNSW-class
   * backends (SURVEY §2.2 I1 FAISS `IndexHNSWFlat`,
@@ -43,9 +43,8 @@ import graft.functions.VectorFunctions.l2sq
   */
 object GraphIndex {
 
-  /** Exact degree-`degree` k-NN graph over the base:
-    * `(node_id, neighbor_id, rank)` with rank ∈ [1, degree] ordered by
-    * (squared L2, neighbor_id), self excluded. Computed as top-(degree+1)
+  /** Exact degree-`degree` k-NN graph over the base: [[Knn]]'s ranked
+    * rows keyed by `node_id`, self excluded. Computed as top-(degree+1)
     * through [[graft.operators.Knn.exact]] then dropping the self match —
     * at most one self row can appear, so the surviving top-`degree` rows
     * and their order are exactly the top-`degree` among non-self rows. */
@@ -53,12 +52,23 @@ object GraphIndex {
     val asQueries = base.select(
       col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    graft.operators.Knn.exact(asQueries, base, degree + 1)
+    Knn.exact(asQueries, base, degree + 1)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("g_rank", row_number().over(w))
       .filter(col("g_rank") <= degree)
       .select(col("query_id").as("node_id"), col("neighbor_id"),
         col("g_rank").cast("int").as("rank"))
+  }
+
+  /** Exact-score edge candidates `(node_id, neighbor_id)` against
+    * `base`'s embeddings and keep the best `degree` per node
+    * ([[Knn.ranked]]; a duplicate candidate edge counts once). */
+  private def rankTop(base: DataFrame, cand: DataFrame, degree: Int): DataFrame = {
+    val nodeEmb = base.select(col("vec_id").as("node_id"), col("embedding").as("n_emb"))
+    val nbrEmb = base.select(col("vec_id").as("neighbor_id"), col("embedding").as("b_emb"))
+    Knn.ranked(cand.join(nbrEmb, "neighbor_id").join(nodeEmb, "node_id")
+      .select(col("node_id"), col("neighbor_id"),
+        l2sq(col("n_emb"), col("b_emb")).as("dist")), "node_id", degree, id = "neighbor_id")
   }
 
   /** NN-Descent approximate k-NN graph build (Dong et al., WWW 2011) —
@@ -93,23 +103,6 @@ object GraphIndex {
     * both expansion rounds, final ranks — replays in the DuckDB oracle.
     * Output: `(node_id, neighbor_id, rank)` like [[buildExact]], directly
     * usable by [[search]]. */
-  /** Exact-score edge candidates `(node_id, neighbor_id)` against
-    * `base`'s embeddings and keep the best `degree` per node (bounded
-    * heap, ties by id). Duplicate candidate edges are absorbed by the
-    * heap's (dist, id) semantics. */
-  private def rankTop(base: DataFrame, cand: DataFrame, degree: Int): DataFrame = {
-    val topk = topKByDist(col("neighbor_id"), col("dist"), degree)
-    val nodeEmb = base.select(col("vec_id").as("node_id"), col("embedding").as("n_emb"))
-    val nbrEmb = base.select(col("vec_id").as("neighbor_id"), col("embedding").as("b_emb"))
-    cand.join(nbrEmb, "neighbor_id").join(nodeEmb, "node_id")
-      .select(col("node_id"), col("neighbor_id"),
-        l2sq(col("n_emb"), col("b_emb")).as("dist"))
-      .groupBy(col("node_id")).agg(topk.as("nn"))
-      .select(col("node_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("node_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
-
   def buildNNDescent(base: DataFrame, degree: Int, rounds: Int = 3): DataFrame = {
     // (v · 2654435761) mod 2³², multiply split into 16-bit halves so no
     // intermediate overflows int64 under ANSI (same scheme as
@@ -196,20 +189,6 @@ object GraphIndex {
     rankTop(fullBase, allEdges, degree)
   }
 
-  /** Batched beam search: entry-point seeding, then `hops` rounds of
-    * expand-score-prune, exact rerank over everything visited.
-    *
-    * The HNSW greedy walk, re-expressed so every round is a hash join
-    * over the WHOLE query batch: the per-query beam (`beam` best
-    * candidates so far) expands through the adjacency (join on node id,
-    * fan-out ≤ degree), the expansion is exactly scored, and the beam is
-    * re-pruned with the bounded-heap aggregate. All visited candidates
-    * feed the final top-k (HNSW's visited-set semantics). Per-query work
-    * is O(seedK·|base|/seedMod + hops·beam·degree) — independent of
-    * |base| once seeded, which is what makes the graph index the
-    * 100 TB path. With (seedK=8, beam=32, hops=3) on the fixtures this
-    * clears the BASELINE graph ladder (recall@10 ≈ 0.98).
-    * Output: `(query_id, neighbor_id, rank)`, rank ∈ [1, k]. */
   /** Cell-blocked approximate build — the 100 TB build path the exact
     * all-pairs pass cannot take: candidate pairs come from coarse-cell
     * CO-MEMBERSHIP (each node is assigned to its `nassign` nearest IVF
@@ -232,13 +211,23 @@ object GraphIndex {
       .select(col("na.vec_id").as("node_id"),
         col("nb.vec_id").as("cand_id"),
         l2sq(col("na.embedding"), col("nb.embedding")).as("dist"))
-    pairs.groupBy(col("node_id"))
-      .agg(topKByDist(col("cand_id"), col("dist"), degree).as("nn"))
-      .select(col("node_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("node_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
+    Knn.ranked(pairs, "node_id", degree, id = "cand_id")
   }
 
+  /** Batched beam search: entry-point seeding, then `hops` rounds of
+    * expand-score-prune, exact rerank over everything visited.
+    *
+    * The HNSW greedy walk, re-expressed so every round is a hash join
+    * over the WHOLE query batch: the per-query beam (`beam` best
+    * candidates so far) expands through the adjacency (join on node id,
+    * fan-out ≤ degree), the expansion is exactly scored, and the beam is
+    * re-pruned with the bounded-heap aggregate. All visited candidates
+    * feed the final top-k (HNSW's visited-set semantics). Per-query work
+    * is O(seedK·|base|/seedMod + hops·beam·degree) — independent of
+    * |base| once seeded, which is what makes the graph index the
+    * 100 TB path. With (seedK=8, beam=32, hops=3) on the fixtures this
+    * clears the BASELINE graph ladder (recall@10 ≈ 0.98).
+    * Output: [[Knn]]'s ranked rows keyed by `query_id`. */
   def search(queries: DataFrame, base: DataFrame, adjacency: DataFrame,
       k: Int, seedMod: Int = 16, seedK: Int = 8, hops: Int = 3,
       beam: Int = 32): DataFrame =
@@ -318,13 +307,10 @@ object GraphIndex {
     // kernel, same doubles, same (dist, id) heap order throughout, so
     // results are bit-identical.
     //
-    // Seeds: the same spread + broadcast-queries scan Knn.exact/
-    // cosineTopK run, with the pairs heap instead of the id heap.
+    // Seeds: the same spread + broadcast-queries scan Knn.cosineTopK
+    // runs, with the pairs heap instead of the id heap.
     val seeds = topPairs(
-      graft.operators.Knn.spread(entry)
-        .crossJoin(broadcast(queries))
-        .select(col("query_id"), col("vec_id"),
-          distOf(col("q_embedding"), col("embedding")).as("dist")),
+      Knn.scan(queries, entry, distOf(col("q_embedding"), col("embedding"))),
       seedK).localCheckpoint(false)
     // Adjacency WITH the neighbor payload, built once per search (r13,
     // verdict item 3 "carry the adjacency with payload"): the r12 shape
@@ -378,12 +364,6 @@ object GraphIndex {
       case None => visited
     }
     // Final top-k over the carried distances — no re-scoring join.
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    rerankSet
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
+    Knn.ranked(rerankSet, "query_id", k)
   }
 }

@@ -1,10 +1,8 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions.l2sq
 
 /** Deterministic integer-arithmetic IVF — the oracle-checkable coarse
@@ -52,20 +50,24 @@ object IvfFlat {
       struct(lit(i).as("cid"), typedlit(c.toSeq).as("cvec"))
     }: _*)
 
-  /** `(query_id, qv, cid)` for the `nprobe` nearest centroids, computed
-    * in ONE projection: score every centroid literal inside a
-    * `transform`, `array_sort` the (dist, cid) structs, keep the prefix.
-    * Identical probe set and order to the window formulation (struct
-    * sort is lexicographic: dist, then cid for ties) with no shuffle —
-    * probing is a map over the query stream, which is what lets a
-    * 10k-query batch fan out without a per-query-group exchange. */
+  /** Every centroid of `cs` as a `(dist, cid)` struct, sorted — the
+    * integer distance from the quantized `qv` column, ties by cid (struct
+    * sort is lexicographic), computed in ONE projection: no join, no
+    * window, no shuffle. The one centroid ranking that probing, probe
+    * ranks and assignment all read a prefix of. */
+  private def cellsByDist(cs: Array[Array[Long]]): Column =
+    array_sort(transform(centroidLits(cs),
+      c => struct(l2sq(col("qv"), c.getField("cvec")).as("dist"),
+        c.getField("cid").as("cid"))))
+
+  /** `(query_id, qv, cid)` for the `nprobe` nearest centroids — the
+    * [[cellsByDist]] prefix. Probing is a map over the query stream,
+    * which is what lets a 10k-query batch fan out without a
+    * per-query-group exchange. */
   private[index] def probeCells(qq: DataFrame, cs: Array[Array[Long]],
       nprobe: Int): DataFrame =
     qq.select(col("vec_id").as("query_id"), col("qv"),
-        explode(slice(array_sort(transform(centroidLits(cs),
-            c => struct(l2sq(col("qv"), c.getField("cvec")).as("dist"),
-              c.getField("cid").as("cid")))),
-          1, nprobe)).as("p"))
+        explode(slice(cellsByDist(cs), 1, nprobe)).as("p"))
       .select(col("query_id"), col("qv"), col("p.cid").as("cid"))
 
   /** Public probe surface: `(query_id, cid)` membership of each vector's
@@ -85,10 +87,7 @@ object IvfFlat {
   def probesRanked(queries: DataFrame, cs: Array[Array[Long]], nprobe: Int): DataFrame =
     queries.select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .select(col("vec_id").as("query_id"),
-        posexplode(slice(array_sort(transform(centroidLits(cs),
-            c => struct(l2sq(col("qv"), c.getField("cvec")).as("dist"),
-              c.getField("cid").as("cid")))),
-          1, nprobe)).as(Seq("pos", "p")))
+        posexplode(slice(cellsByDist(cs), 1, nprobe)).as(Seq("pos", "p")))
       .select(col("query_id"), col("p.cid").as("cid"),
         (col("pos") + 1).as("prank"))
 
@@ -99,15 +98,11 @@ object IvfFlat {
     assign(base.select(col("vec_id"), quantize(col("embedding")).as("qv")), cs)
       .select(col("vec_id"), col("cid"))
 
-  /** Nearest-centroid assignment, ties by cid — computed in ONE
-    * projection like [[probeCells]] (nprobe=1 without the explode):
-    * score every centroid literal inside a `transform`, `array_sort` the
-    * (dist, cid) structs, keep the head. Identical winner to the window
-    * formulation (struct sort is lexicographic: dist, then cid), with NO
-    * shuffle — the r11 shape exploded n·nlist rows each carrying the
-    * full qv and shuffled them through a per-vec_id window, a full pass
-    * of the quantized corpus per Lloyd iteration at any scale (guide
-    * §2.4: remove shuffles outright). */
+  /** Nearest-centroid assignment, ties by cid — the [[cellsByDist]]
+    * head, with NO shuffle: the r11 shape exploded n·nlist rows each
+    * carrying the full qv and shuffled them through a per-vec_id window,
+    * a full pass of the quantized corpus per Lloyd iteration at any
+    * scale (guide §2.4: remove shuffles outright). */
   private[index] def assign(bq: DataFrame, cs: Array[Array[Long]]): DataFrame = {
     // contract: initCentroids always yields nlist ≥ 1 centroids; with an
     // empty array the old explode-based assign returned ZERO rows, while
@@ -115,10 +110,7 @@ object IvfFlat {
     // propagate into downstream joins (ADVICE r12) — refuse loudly.
     require(cs.nonEmpty, "IvfFlat.assign: empty centroid array")
     bq.select(col("vec_id"), col("qv"),
-      element_at(array_sort(transform(centroidLits(cs),
-          c => struct(l2sq(col("qv"), c.getField("cvec")).as("dist"),
-            c.getField("cid").as("cid")))), 1)
-        .getField("cid").as("cid"))
+      element_at(cellsByDist(cs), 1).getField("cid").as("cid"))
   }
 
   /** One Lloyd step: integer mean per (cluster, dim), rounded back to the
@@ -192,16 +184,11 @@ object IvfFlat {
     val probes = probeCells(qq, centroids, nprobe)
       .filter(col("cid") < centroids.length)
       .select(col("query_id"), col("cid").as("cluster_id"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    graft.sources.Layout.readIvfPartitioned(spark, layoutPath)
+    graft.operators.Knn.ranked(graft.sources.Layout.readIvfPartitioned(spark, layoutPath)
       .join(broadcast(probes), Seq("cluster_id"))
       .join(queries, Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+        l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
   }
 
   /** IVF probe search: queries visit their `nprobe` nearest clusters
@@ -228,16 +215,6 @@ object IvfFlat {
       quantize(col("q_embedding")).as("qv"))
     val probes = probeCells(qq, centroids, nprobe)
       .select(col("query_id"), col("cid"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    probes
-      .join(baseAssign, Seq("cid"))
-      .join(base, Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+    graft.operators.Knn.rerank(probes.join(baseAssign, Seq("cid")), base, queries, k)
   }
 }

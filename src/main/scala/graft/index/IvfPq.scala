@@ -3,8 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.topKByDist
-import graft.functions.VectorFunctions.l2sq
+import graft.operators.Knn
 
 /** Deterministic IVF+PQ — the faithful Spark analog of the reference's
   * FAISS `IndexIVFPQ` (`/root/reference/multi_tenant_script.py:94-103`:
@@ -121,7 +120,10 @@ object IvfPq {
       k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val qq = queries.select(col("query_id").as("vec_id"),
       IvfFlat.quantize(col("q_embedding")).as("qv"))
+    // always-true cid filter: lets a partitioned list layout be pruned
+    // dynamically with a cached query set ([[IvfFlat.searchPartitioned]])
     val probes = IvfFlat.probeCells(qq, model.centroids, nprobe)
+      .filter(col("cid") < model.nlist)
       .select(col("query_id"), col("qv"), col("cid").as("icid"))
     // per-(query, probed cell) residual → flat ADC table, all in one
     // projection over codebook literals: entry sub_id·ksub+code is the
@@ -137,23 +139,10 @@ object IvfPq {
     // compressed-domain scan of the probed lists only (join key carries
     // icid): fused int64 lookup kernel + bounded-heap shortlist — same
     // integer values as the relational formulation the oracle replays
-    val shortAgg = topKByDist(col("vec_id"), col("adist"), shortlist)
-    val short = model.lists.join(broadcast(qarr), Seq("icid"))
+    val short = Knn.shortlist(model.lists.join(broadcast(qarr), Seq("icid"))
       .select(col("query_id"), col("vec_id"),
         graft.functions.GraftFunctions.pqAdcLong(col("qd"), col("codes"), model.ksub)
-          .cast("double").as("adist"))
-      .groupBy(col("query_id"))
-      .agg(shortAgg.as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("vec_id"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    short
-      .join(base, Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+          .cast("double").as("adist")), shortlist, dist = "adist")
+    Knn.rerank(short, base, queries, k)
   }
 }

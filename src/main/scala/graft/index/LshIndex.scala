@@ -30,11 +30,10 @@ object LshIndex {
   /** RP-LSH kNN: `numHashTables` deterministic ±1 projection vectors
     * ([[signProjection]]); bucket = ⌊(v·p)/bucketLength⌋; candidates =
     * equi-join on (table, bucket); exact distance + bounded-heap top-k on
-    * the candidate set. Output: (query_id, neighbor_id, rank). */
+    * the candidate set. */
   def search(queries: DataFrame, base: DataFrame, k: Int,
       numHashTables: Int, bucketLength: Double, dim: Int,
       probes: Int = 1): DataFrame = {
-    import graft.functions.GraftFunctions.topKByDist
     import graft.functions.VectorFunctions.{dot, l2sq}
     val projections = Array.tabulate(numHashTables)(t =>
       Array.tabulate(dim)(j => signProjection(t, j, dim)))
@@ -52,15 +51,10 @@ object LshIndex {
       explode(buckets(col("embedding"), Seq(0L))).as("tb"))
     val q = queries.select(col("query_id"), col("q_embedding"),
       explode(buckets(col("q_embedding"), offsets)).as("tb"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
     // duplicate (query, candidate) pairs from multi-table collisions are
     // absorbed by the heap's distinct-(dist,id) semantics — no dedup pass
-    b.join(broadcast(q), Seq("tb"))
+    graft.operators.Knn.ranked(b.join(broadcast(q), Seq("tb"))
       .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+        l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
   }
 }

@@ -1,11 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions.l2sq
 
 /** Deterministic integer-arithmetic product quantizer — the PQ half of
@@ -208,24 +206,11 @@ object PqFlat {
       IvfFlat.quantize(col("q_embedding")).as("qv"))
     val qarr = qq.select(col("vec_id").as("query_id"),
       adcTable(col("qv"), model.codebookArray, model.dsub).as("qd"))
-    val shortAgg = topKByDist(col("vec_id"), col("adist"), shortlist)
-    val short = model.codes
+    val short = graft.operators.Knn.shortlist(model.codes
       .crossJoin(broadcast(qarr))
       .select(col("query_id"), col("vec_id"),
         graft.functions.GraftFunctions.pqAdcLong(col("qd"), col("codes"), model.ksub)
-          .cast("double").as("adist"))
-      .groupBy(col("query_id"))
-      .agg(shortAgg.as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("vec_id"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    short
-      .join(base, Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+          .cast("double").as("adist")), shortlist, dist = "adist")
+    graft.operators.Knn.rerank(short, base, queries, k)
   }
 }

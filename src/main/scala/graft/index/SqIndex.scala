@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions.topKByDist
+import graft.operators.Knn
 
 /** Scalar quantization (SQ8) — the FAISS `IndexScalarQuantizer` family
   * member completing the quantization ladder (flat → SQ8 → PQ): per
@@ -78,16 +78,11 @@ object SqIndex {
       queries.select(col("query_id").as("vec_id"), col("q_embedding").as("embedding")),
       model.mins, model.scales)
       .select(col("vec_id").as("query_id"), col("codes").as("q_codes"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    model.encodedBase
+    Knn.ranked(model.encodedBase
       .crossJoin(broadcast(qCodes))
       // native fused loop over the int code arrays (Σ Δcode², see note)
       .withColumn("dist",
-        graft.functions.VectorFunctions.l2sq(col("codes"), col("q_codes")))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+        graft.functions.VectorFunctions.l2sq(col("codes"), col("q_codes"))), "query_id", k)
   }
   // Note: with a shared per-dim scale the unscaled Σ Δcode² is NOT
   // ordering-equivalent to true L2 when scales differ per dim; the
@@ -99,14 +94,6 @@ object SqIndex {
       k: Int, shortlist: Int): DataFrame = {
     val candidates = search(model, queries, shortlist)
       .select(col("query_id"), col("neighbor_id").as("vec_id"))
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    candidates
-      .join(base, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("dist", graft.functions.VectorFunctions.l2sq(col("q_embedding"), col("embedding")))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+    Knn.rerank(candidates, base, broadcast(queries), k)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions._
 
 /** Batch top-k nearest-neighbor search — the reference's one query shape
@@ -27,31 +28,57 @@ import graft.functions.VectorFunctions._
   * Expected input schemas:
   *   queries: (query_id: Long, q_embedding: Array[Float])
   *   base:    (vec_id: Long, embedding: Array[Float])
-  * Output: (query_id: Long, neighbor_id: Long, rank: Int) with
-  * rank ∈ [1, k] ordered by (squared L2 distance, neighbor_id).
+  *
+  * **Ranked-output contract** — every search, rerank and graph build in
+  * the engine ranks through [[ranked]], [[shortlist]] and [[rerank]], so
+  * this is the one statement of it: output `(key, neighbor_id: Long,
+  * rank: Int)` with rank ∈ [1, k] (fewer rows when a key has fewer than k
+  * candidates), ordered by (dist, neighbor_id) ascending — ties in dist
+  * break on the smaller id. Duplicate (dist, id) candidates count once.
+  * A NaN dist ranks after every number, -0.0 and 0.0 tie, and a null
+  * dist or id is skipped ([[graft.functions.TopKHeap]]).
   */
 object Knn {
+
+  /** Per-`key` top-`k` of scored rows `(key, id, dist)` under the ranked
+    * contract above: the bounded-heap aggregate, then one row per kept id
+    * with its 1-based rank. */
+  def ranked(scored: DataFrame, key: String, k: Int, id: String = "vec_id"): DataFrame =
+    scored
+      .groupBy(col(key))
+      .agg(topKByDist(col(id), col("dist"), k).as("nn"))
+      .select(col(key), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
+      .select(col(key), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+
+  /** Per-query candidate shortlist `(query_id, vec_id)`: the same heap
+    * over scored rows `(query_id, vec_id, <dist>)` keeping `m` ids, for a
+    * cheap-distance first pass that [[rerank]] then ranks exactly. */
+  def shortlist(scored: DataFrame, m: Int, dist: String = "dist"): DataFrame =
+    scored
+      .groupBy(col("query_id"))
+      .agg(topKByDist(col("vec_id"), col(dist), m).as("cand"))
+      .select(col("query_id"), explode(col("cand")).as("vec_id"))
+
+  /** Exact rerank of candidates `(query_id, vec_id)`: join their base
+    * vectors and their queries, score squared L2, and rank. A caller that
+    * needs the query join broadcast passes `broadcast(queries)`. */
+  def rerank(cands: DataFrame, base: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    ranked(cands
+      .join(base, Seq("vec_id"))
+      .join(queries, Seq("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
 
   /** Grouped kNN: top-k nearest neighbors WITHIN the query's group (e.g.
     * per-domain / per-label retrieval in a training pipeline). The group
     * column turns the all-pairs nested loop into an equi-join on the
     * group key — candidates are co-partitioned by group, which is
-    * exactly the layout a label-bucketed 100 TB corpus already has.
-    * Output: (query_id, neighbor_id, rank) with rank ≤ k inside the
-    * query's own group. */
-  def groupedExact(queries: DataFrame, base: DataFrame, groupCol: String, k: Int): DataFrame = {
-    import graft.functions.GraftFunctions.topKByDist
-    import graft.functions.VectorFunctions.l2sq
-    val topk = topKByDist(col("vec_id"), col("dist"), k)
-    queries
+    * exactly the layout a label-bucketed 100 TB corpus already has. */
+  def groupedExact(queries: DataFrame, base: DataFrame, groupCol: String, k: Int): DataFrame =
+    ranked(queries
       .join(base, Seq(groupCol))
       .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
-  }
+        l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
 
   /** Spread the scan side across the session's full parallelism before
     * an O(|base|·|queries|) broadcast-NL pass. Why: a BroadcastNestedLoop
@@ -114,24 +141,23 @@ object Knn {
     else df
   }
 
-  /** Cross product of base × broadcast(queries) with the distance column. */
-  private def scored(queries: DataFrame, base: DataFrame, distance: (Column, Column) => Column): DataFrame =
+  /** Cross product of base × broadcast(queries), every input column
+    * kept, plus the `dist` column. */
+  private def scored(queries: DataFrame, base: DataFrame, dist: Column): DataFrame =
     spread(base)
       .crossJoin(broadcast(queries))
-      .withColumn("dist", distance(col("q_embedding"), col("embedding")))
+      .withColumn("dist", dist)
+
+  /** The brute-force scan `(query_id, vec_id, dist)`: [[scored]] narrowed
+    * to the three columns the heap reads. [[exact]], [[hammingTopK]],
+    * [[radius]] and [[exactWindow]] read [[scored]] itself; Catalyst prunes
+    * it to the same three columns, in its own column order. */
+  private[graft] def scan(queries: DataFrame, base: DataFrame, dist: Column): DataFrame =
+    scored(queries, base, dist).select(col("query_id"), col("vec_id"), col("dist"))
 
   /** Exact kNN via bounded-heap aggregate — the scale path. */
-  def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame = {
-    val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
-    scored(queries, base, l2sq)
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
+  def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(scored(queries, base, l2sq(col("q_embedding"), col("embedding"))), "query_id", k)
 
   /** Hamming top-k over packed binary signatures — FAISS
     * `IndexBinaryFlat` (the binary-vector member of the reference's
@@ -140,19 +166,9 @@ object Knn {
     * broadcast-queries scan + bounded-heap shape as [[exact]]; the
     * signature column is 8 bytes/row, so the scan side is as compressed
     * as vector search gets. */
-  def hammingTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame = {
-    val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
-    spread(base)
-      .crossJoin(broadcast(queries))
-      .withColumn("dist", bit_count(col("q_sig").bitwiseXOR(col("sig"))).cast("double"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
+  def hammingTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(scored(queries, base,
+      bit_count(col("q_sig").bitwiseXOR(col("sig"))).cast("double")), "query_id", k)
 
   /** Radius (range) search — FAISS `range_search`
     * (faiss Index API; the reference's index family exposes it alongside
@@ -163,7 +179,7 @@ object Knn {
     * size is data-dependent, which is the caller's contract in FAISS
     * too). */
   def radius(queries: DataFrame, base: DataFrame, maxDistSq: Double): DataFrame =
-    scored(queries, base, l2sq)
+    scored(queries, base, l2sq(col("q_embedding"), col("embedding")))
       .filter(col("dist") <= maxDistSq)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
 
@@ -171,7 +187,7 @@ object Knn {
     * plan comparison and as oracle cross-check. */
   def exactWindow(queries: DataFrame, base: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
-    scored(queries, base, l2sq)
+    scored(queries, base, l2sq(col("q_embedding"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
@@ -179,37 +195,18 @@ object Knn {
 
   /** Two-stage prefix-dimension kNN — Matryoshka-style adaptive
     * retrieval: the first pass scores only the first `prefixDim`
-    * dimensions (prefixDim/dim of the bytes through the scan; with
-    * column pruning to a stored prefix column, that is a physically
-    * smaller read), keeps a per-query `shortlist` via the bounded-heap
-    * aggregate, then reranks the shortlist exactly on the full vector.
-    * At 100 TB the cheap pass is the only full scan; the rerank touches
-    * |queries|·shortlist rows. Recall depends on how much signal the
-    * leading dims carry (Matryoshka-trained embeddings concentrate it
-    * there by construction). */
+    * dimensions (prefixDim/dim of the bytes through the scan), keeps a
+    * per-query `shortlist` via the bounded-heap aggregate, then reranks
+    * the shortlist exactly on the full vector. At 100 TB the cheap pass
+    * is the only full scan; the rerank touches |queries|·shortlist rows.
+    * Recall depends on how much signal the leading dims carry
+    * (Matryoshka-trained embeddings concentrate it there by
+    * construction). [[prefixRerankStored]] over an in-memory prefix. */
   def prefixRerank(queries: DataFrame, base: DataFrame, k: Int,
-      prefixDim: Int, shortlistSize: Int): DataFrame = {
-    val shortAgg = graft.functions.GraftFunctions.topKByDist(
-      col("vec_id"), col("pdist"), shortlistSize)
-    val short = spread(base
-      .select(col("vec_id"), slice(col("embedding"), 1, prefixDim).as("pemb")))
-      .crossJoin(broadcast(queries.select(col("query_id"),
-        slice(col("q_embedding"), 1, prefixDim).as("q_pemb"))))
-      .select(col("query_id"), col("vec_id"), l2sq(col("q_pemb"), col("pemb")).as("pdist"))
-      .groupBy(col("query_id"))
-      .agg(shortAgg.as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("vec_id"))
-    val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
-    short
-      .join(base, Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
-  }
+      prefixDim: Int, shortlistSize: Int): DataFrame =
+    prefixRerankStored(base.select(col("vec_id"),
+        slice(col("embedding"), 1, prefixDim).as("prefix"), col("embedding")),
+      queries, k, prefixDim, shortlistSize)
 
   /** Exact top-k by cosine similarity (descending) — the similarity-search
     * baseline for the embedding column (builder brief: ANN over embeddings).
@@ -220,81 +217,39 @@ object Knn {
     * 5.2 s warm on the sf0.1 all-pairs build): a 4-node composed tree
     * (neg∘div∘mul + dot) costs more per pair in dispatch than the two
     * redundant norm loops cost in arithmetic. One fused kernel node is
-    * the fast shape here. (r12: the kernel now runs in a projection
-    * before the aggregate — see the plan note in the body — but the
-    * fused-vs-composed tradeoff is unchanged.) */
-  def cosineTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame = {
-    // kernel in a PROJECTION between join and aggregate (r12, the rankTop
-    // shape): ObjectHashAggregate does not join whole-stage codegen, so a
-    // kernel in the agg child is evaluated through the aggregate's own
-    // projection over boundary rows that still carry BOTH embeddings
-    // (~520 B/pair); projecting (query_id, vec_id, dist) first runs the
-    // fold inside the codegen'd join stage and shrinks the boundary row
-    // to 24 B. Same expression tree, same doubles, same heap order —
-    // measured 2x on the all-pairs cosine build (OPTIMIZATION_r12.md §1).
-    val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
-    spread(base)
-      .crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        (-cosine(col("q_embedding"), col("embedding"))).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
+    * the fast shape here.
+    *
+    * The kernel runs in the [[scan]] PROJECTION between join and
+    * aggregate (r12, the rankTop shape): ObjectHashAggregate does not
+    * join whole-stage codegen, so a kernel in the agg child is evaluated
+    * through the aggregate's own projection over boundary rows that still
+    * carry BOTH embeddings (~520 B/pair); projecting (query_id, vec_id,
+    * dist) first runs the fold inside the codegen'd join stage and
+    * shrinks the boundary row to 24 B — measured 2x on the all-pairs
+    * cosine build (OPTIMIZATION_r12.md §1). */
+  def cosineTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(scan(queries, base, -cosine(col("q_embedding"), col("embedding"))), "query_id", k)
 
-  /** [[prefixRerank]] served from a stored-prefix layout
-    * ([[graft.sources.Layout.writePrefixLayout]]): the cheap pass scans
-    * only (vec_id, prefix) — Parquet column pruning turns the
-    * prefixDim/dim byte saving from an in-memory slice into a physically
-    * smaller read. Identical results to prefixRerank on the same data. */
+  /** Two-stage prefix kNN served from a stored-prefix layout
+    * ([[graft.sources.Layout.writePrefixLayout]]) `(vec_id, prefix,
+    * embedding)`: the cheap pass scans only (vec_id, prefix) — Parquet
+    * column pruning turns the prefixDim/dim byte saving from an in-memory
+    * slice into a physically smaller read. */
   def prefixRerankStored(layout: DataFrame, queries: DataFrame, k: Int,
       prefixDim: Int, shortlistSize: Int): DataFrame = {
-    val shortAgg = graft.functions.GraftFunctions.topKByDist(
-      col("vec_id"), col("pdist"), shortlistSize)
-    val short = spread(layout
-      .select(col("vec_id"), col("prefix")))
-      .crossJoin(broadcast(queries.select(col("query_id"),
-        slice(col("q_embedding"), 1, prefixDim).as("q_pemb"))))
-      .select(col("query_id"), col("vec_id"), l2sq(col("q_pemb"), col("prefix")).as("pdist"))
-      .groupBy(col("query_id"))
-      .agg(shortAgg.as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("vec_id"))
-    val topk = graft.functions.GraftFunctions.topKByDist(col("vec_id"), col("dist"), k)
-    short
-      .join(layout.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), (col("pos") + 1).cast("int").as("rank"))
+    val short = shortlist(scan(
+      queries.select(col("query_id"), slice(col("q_embedding"), 1, prefixDim).as("q_pemb")),
+      layout.select(col("vec_id"), col("prefix")),
+      l2sq(col("q_pemb"), col("prefix"))), shortlistSize)
+    rerank(short, layout.select(col("vec_id"), col("embedding")), queries, k)
   }
 
   /** Exact top-k by inner product (descending) — FAISS
     * METRIC_INNER_PRODUCT, the MIPS metric of recommendation/retrieval
     * scorers. Same plan shape as [[cosineTopK]]: negated score through
     * the bounded-heap aggregate. */
-  def mipsTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame = {
-    // kernel in a projection, not the agg child — see [[cosineTopK]]
-    val topk = graft.functions.GraftFunctions.topKByDist(
-      col("vec_id"), col("dist"), k)
-    spread(base)
-      .crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        (-dot(col("q_embedding"), col("embedding"))).as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
+  def mipsTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(scan(queries, base, -dot(col("q_embedding"), col("embedding"))), "query_id", k)
 
   /** Maximal-marginal-relevance diversified retrieval: per query, take a
     * `shortlist`-sized cosine shortlist, then greedily select `k` items

@@ -32,21 +32,15 @@ object Artifacts {
     m
   }
 
-  /** Bench-side ledger: which artifact caches a query touched/built.
-    * Off by default (zero overhead outside the bench harness); when
-    * enabled, [[cachedArtifact]] records every access (for the
-    * last-consumer retention analysis) and every build (for the
-    * cold-cost attribution map in bench_full.json — r9 verdict item 6:
-    * the NAME, not just the seconds). Single-threaded consumer (Bench's
-    * timing loop); concurrent producers are fine via the queues. */
+  /** Bench-side ledger: which artifact caches a query built. Off by
+    * default (zero overhead outside the bench harness); when enabled,
+    * [[cachedArtifact]] records every build for the cold-cost
+    * attribution map in bench_full.json (r9 verdict item 6: the NAME,
+    * not just the seconds). Single-threaded consumer (Bench's timing
+    * loop); concurrent producers are fine via the queue. */
   private[graft] object ArtifactLedger {
     @volatile var enabled = false
-    /** Accesses feed only the warmup-time consumer map; Bench turns this
-      * off for the timed pass so 325×3 reps don't enqueue into a queue
-      * nobody drains (r10 review). Builds stay recorded throughout. */
-    @volatile var accessRecording = true
     private val buildsQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val accessQ = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     private[Artifacts] def nameOf(cache: AnyRef): Option[String] =
       artifactCacheRegistry.collectFirst { case (n, c) if c eq cache => n }
     private[Artifacts] def recordBuild(cache: AnyRef): Unit =
@@ -58,35 +52,12 @@ object Artifacts {
       * 2.7 s of sampled merge training read as "jit/noise"). */
     private[queries] def recordNamedBuild(name: String): Unit =
       if (enabled) buildsQ.add(name)
-    private[Artifacts] def recordAccess(cache: AnyRef, key: Any): Unit =
-      if (enabled && accessRecording) nameOf(cache).foreach(n => accessQ.add((n, key.toString)))
     def drainBuilds(): Seq[String] = {
       val b = Seq.newBuilder[String]
       var x = buildsQ.poll(); while (x != null) { b += x; x = buildsQ.poll() }
       b.result()
     }
-    def drainAccesses(): Seq[(String, String)] = {
-      val b = Seq.newBuilder[(String, String)]
-      var x = accessQ.poll(); while (x != null) { b += x; x = accessQ.poll() }
-      b.result()
-    }
   }
-
-  /** Unpersist + forget the entries of artifact cache `cacheName` whose
-    * key's string form satisfies `keyMatches` — the bench's
-    * drop-after-last-consumer retention policy (r9 verdict item 1: 250
-    * retained localCheckpointed/cached DataFrames in one JVM were the
-    * suspect mechanism for the suite-wide warm inflation). Removing the
-    * map reference lets the ContextCleaner reclaim localCheckpoint
-    * blocks (unpersist alone does not free those). */
-  private[graft] def dropArtifactEntries(cacheName: String, keyMatches: String => Boolean): Unit =
-    artifactCacheRegistry.get(cacheName).foreach { c =>
-      val m = c.asInstanceOf[scala.collection.concurrent.TrieMap[Any, DataFrame]]
-      m.keys.filter(k => keyMatches(k.toString)).foreach { k =>
-        m.remove(k).foreach(df =>
-          try df.unpersist(blocking = false) catch { case _: Throwable => () })
-      }
-    }
 
   // Model/ground-truth memo per dataset dir. The reference builds each
   // index ONCE and searches it repeatedly (dynamic_script_*.py build →
@@ -149,7 +120,6 @@ object Artifacts {
     * for every later caller). */
   private[queries] def cachedArtifact[K](cache: scala.collection.concurrent.TrieMap[K, DataFrame],
       key: K)(build: => DataFrame): DataFrame = {
-    ArtifactLedger.recordAccess(cache, key)
     cache.get(key).filter(df => !df.sparkSession.sparkContext.isStopped)
       .getOrElse {
         ArtifactLedger.recordBuild(cache)

@@ -496,19 +496,12 @@ object GraphQueries {
     // instead of both 64-float embeddings, and the dot fold runs inside
     // the whole-stage-codegen'd join stage. Same expression ⇒ same
     // doubles ⇒ same heap order. Measured 2x (OPTIMIZATION_r12.md §1, D vs C).
-    val topk = graft.functions.GraftFunctions.topKByDist(
-      col("vec_id"), col("dist"), degree + 1)
     val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    unit
+    Knn.ranked(unit
       .crossJoin(broadcast(asQueries))
       .select(col("query_id"), col("vec_id"),
         graft.functions.VectorFunctions.dot(col("q_embedding"), col("embedding"))
-          .as("dist"))
-      .groupBy(col("query_id"))
-      .agg(topk.as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
+          .as("dist")), "query_id", degree + 1)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("g_rank", row_number().over(w))
       .filter(col("g_rank") <= degree)
@@ -548,17 +541,14 @@ object GraphQueries {
       val unit = unitVectors(Knn.spread(base))
       val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
       // kernel in a projection, not the agg child — see [[cosineAdjacency]]
-      val topk = graft.functions.GraftFunctions.topKByDist(
-        col("cand_id"), col("dist"), GraphDegree)
-      nodes.alias("na")
+      Knn.ranked(nodes.alias("na")
         .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
         .filter(col("na.vec_id") =!= col("nb.vec_id"))
         .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
           (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist"))
-        .groupBy(col("node_id"))
-        .agg(topk.as("nn"))
-        .select(col("node_id"), explode(col("nn")).as("neighbor_id"))
+            col("na.embedding"), col("nb.embedding"))).as("dist")),
+          "node_id", GraphDegree, id = "cand_id")
+        .select(col("node_id"), col("neighbor_id"))
         .localCheckpoint()
     }
 
@@ -774,17 +764,14 @@ object GraphQueries {
       val unit = unitVectors(Knn.spread(zv))
       val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
       // kernel in a projection, not the agg child — see [[cosineAdjacency]]
-      val topk = graft.functions.GraftFunctions.topKByDist(
-        col("cand_id"), col("dist"), GraphDegree)
-      nodes.alias("na")
+      Knn.ranked(nodes.alias("na")
         .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
         .filter(col("na.vec_id") =!= col("nb.vec_id"))
         .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
           (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist"))
-        .groupBy(col("node_id"))
-        .agg(topk.as("nn"))
-        .select(col("node_id"), explode(col("nn")).as("neighbor_id"))
+            col("na.embedding"), col("nb.embedding"))).as("dist")),
+          "node_id", GraphDegree, id = "cand_id")
+        .select(col("node_id"), col("neighbor_id"))
         .localCheckpoint()
     }
 

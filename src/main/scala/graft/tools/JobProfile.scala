@@ -17,9 +17,7 @@ object JobProfile {
     val sfDir = args.head
     val names = args.tail.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSession.builder(cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobStart = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]

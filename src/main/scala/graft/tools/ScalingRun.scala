@@ -20,13 +20,8 @@ object ScalingRun {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    // back-compat with the original [sfDir] [counts...] shape: a numeric
-    // args(1) is a client count, not an output path — the old invocation
-    // must not silently write a JSON file named "10" and drop a count
-    val oldShape = args.length > 1 && args(1).forall(_.isDigit)
-    val outJson =
-      if (!oldShape && args.length > 1 && args(1) != "-") Some(args(1)) else None
-    val countArgs = if (oldShape) args.drop(1) else args.drop(2)
+    val outJson = if (args.length > 1 && args(1) != "-") Some(args(1)) else None
+    val countArgs = args.drop(2)
     val counts = if (countArgs.nonEmpty) countArgs.map(_.toInt).toSeq else Seq(2, 4, 8)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = LocalSession.builder(cpus)

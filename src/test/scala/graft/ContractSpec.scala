@@ -271,11 +271,11 @@ class ContractSpec extends AnyFunSuite {
     expectArts.headOption.foreach { case (k, v, c) =>
       val named = Bench.fullLine(results, "/root/testdata/sf0.1",
         artifacts = Map(k -> Seq("gt", "graph_adj", "gt")),
-        gcMs = Map(k -> 123L), retain = "drop")
+        gcMs = Map(k -> 123L))
       assert(named.contains(
         "\"" + k + "\":{\"sec\":" + Bench.fmt(c - v) + ",\"artifact\":\"gt+graph_adj\"}"))
       assert(named.contains("\"gc_ms\":{\"" + k + "\":123}") &&
-        named.contains("\"gc_ms_total\":123") && named.contains("\"retain\":\"drop\""))
+        named.contains("\"gc_ms_total\":123"))
     }
     // a rep-1-failed / rep-2-ok query is visible as -1 in the cold map
     // and does NOT inflate n_failed
@@ -393,6 +393,60 @@ class ContractSpec extends AnyFunSuite {
     seeded.foreach { case (src, expected) =>
       val (b, c, a) = cacheLintHits(src)
       assert((b.size, c.size, a.size) == expected, src)
+    }
+  }
+
+  /** The ranked top-k tail — the heap aggregates and the rank explode —
+    * lives in `Knn` (and the Column API in `GraftFunctions`). These files
+    * may also hold the listed patterns, for shapes that are not a ranked
+    * kNN output: Bitext's margin mining keeps id-only neighborhoods keyed
+    * by either corpus side with the distance computed inside the
+    * aggregate, InvertedIndex samples a posting head with the doc id as
+    * its own rank, and GraphIndex's beam carries (dist, id) pairs between
+    * hops. */
+  private val rankedTailPatterns = Seq("posexplode(col(\"nn\"))", "topKByDist(", "topKPairsByDist(")
+  private val rankedTailHomes = Set("Knn.scala", "GraftFunctions.scala")
+  private val rankedTailExceptions = Map(
+    "Bitext.scala" -> Set("topKByDist("),
+    "InvertedIndex.scala" -> Set("topKByDist("),
+    "GraphIndex.scala" -> Set("topKPairsByDist("))
+
+  /** Lines of `src` (from file `fileName`) that hold a ranked-tail
+    * pattern the file may not hold. */
+  def rankedTailHits(fileName: String, src: String): Seq[String] =
+    if (rankedTailHomes(fileName)) Nil
+    else {
+      val allowed = rankedTailExceptions.getOrElse(fileName, Set.empty[String])
+      val banned = rankedTailPatterns.filterNot(allowed)
+      src.split('\n').toSeq.filter(l => banned.exists(l.contains)).map(_.trim)
+    }
+
+  test("ranked top-k tails live in Knn (ranked-tail lint)") {
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(files.size > 50, s"lint scanned only ${files.size} files")
+    val hits = files.flatMap { p =>
+      rankedTailHits(p.getFileName.toString,
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(l => s"$p: $l")
+    }
+    assert(hits.isEmpty,
+      "ranked top-k tail outside Knn — use Knn.ranked/shortlist/rerank:\n" + hits.mkString("\n"))
+  }
+
+  test("the ranked-tail lint itself fires on seeded copies") {
+    val seeded = Seq(
+      ("IvfFlat.scala", ".agg(topKByDist(col(\"vec_id\"), col(\"dist\"), k).as(\"nn\"))") -> 1,
+      ("Foo.scala", ".select(col(\"query_id\"), posexplode(col(\"nn\")).as(Seq(\"pos\", \"neighbor_id\")))") -> 1,
+      ("Foo.scala", "val t = GraftFunctions.topKPairsByDist(\n  col(\"id\"), col(\"d\"), 3)\n" +
+        "val u = GraftFunctions.topKByDist(col(\"id\"), col(\"d\"), 3)") -> 2,
+      ("GraphIndex.scala", "topKByDist(col(\"vec_id\"), col(\"dist\"), k)") -> 1,
+      ("GraphIndex.scala", "graft.functions.GraftFunctions.topKPairsByDist(") -> 0,
+      ("Knn.scala", ".agg(topKByDist(col(id), col(\"dist\"), k).as(\"nn\")) posexplode(col(\"nn\"))") -> 0,
+      ("Foo.scala", "Knn.ranked(scored, \"query_id\", k)") -> 0)
+    seeded.foreach { case ((file, src), expected) =>
+      assert(rankedTailHits(file, src).size == expected, s"$file: $src")
     }
   }
 }

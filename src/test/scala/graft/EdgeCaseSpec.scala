@@ -45,6 +45,23 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(out.map(_.getInt(2)).sorted.toSeq == Seq(1, 2))
   }
 
+  test("kNN over a base with a NaN-component vector ranks it last under any base order") {
+    val rows = Seq((1L, Array(1f, 0f)), (2L, Array(2f, 0f)), (3L, Array(Float.NaN, 0f)),
+      (4L, Array(3f, 0f)), (5L, Array(4f, 0f)))
+    val queries = Seq((10L, Array(0f, 0f)), (11L, Array(0.5f, 0f))).toDF("query_id", "q_embedding")
+    val orders = Seq(rows, rows.reverse, rows.drop(2) ++ rows.take(2), rows.drop(3) ++ rows.take(3))
+    Seq(3 -> Seq(1L, 2L, 4L), 5 -> Seq(1L, 2L, 4L, 5L, 3L)).foreach { case (k, expected) =>
+      orders.foreach { order =>
+        val got = Knn.exact(queries, order.toDF("vec_id", "embedding"), k).collect()
+          .map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
+        Seq(10L, 11L).foreach { q =>
+          assert(expected.indices.map(i => got((q, i + 1))) == expected, s"k=$k q=$q")
+        }
+        assert(got.size == 2 * expected.size, s"k=$k")
+      }
+    }
+  }
+
   test("recall against an empty prediction set is zero, not an error") {
     val base = Seq((1L, Array(0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")

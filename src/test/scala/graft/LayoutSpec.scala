@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.IvfFlat
+import graft.index.{IvfFlat, IvfPq}
 import graft.sources.{Layout, Tables}
 
 /** The layout claims must be visible in the physical plan: partition
@@ -46,6 +46,24 @@ class LayoutSpec extends AnyFunSuite {
     val b = inMemory.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(a == b && a.nonEmpty)
     // dynamic partition pruning appears at the layout scan
+    val plan = viaLayout.queryExecution.executedPlan.toString
+    assert(plan.toLowerCase.contains("dynamicpruning"),
+      s"no dynamic partition pruning in plan:\n$plan")
+  }
+
+  test("partitioned IVF-PQ search: dynamic partition pruning, same results") {
+    val base = Tables.embeddingBase(spark, dir)
+    // cached for the same reason as the IVF test above
+    val queries = Tables.embeddingQueries(spark, dir).cache()
+    val model = IvfPq.fit(base, IvfFlat.fit(base, nlist = 8))
+    val path = "target/tmp/ivfpq_layout_dpp"
+    IvfPq.writeListsLayout(model, path)
+    val viaLayout = IvfPq.searchPartitioned(model, path, queries, base, 10,
+      nprobe = 4, shortlist = 50)
+    val inMemory = IvfPq.search(model, queries, base, 10, nprobe = 4, shortlist = 50)
+    val a = viaLayout.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val b = inMemory.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(a == b && a.nonEmpty)
     val plan = viaLayout.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"no dynamic partition pruning in plan:\n$plan")

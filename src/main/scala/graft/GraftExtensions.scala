@@ -12,13 +12,16 @@ import graft.functions.{CosineSimilarity, DotProduct, L2SquaredDistance, MaxSimS
   *
   * Two registration paths:
   *  - `GraftExtensions` via `spark.sql.extensions=graft.GraftExtensions`
-  *    (or `.withExtensions(new GraftExtensions)`) — cluster-wide.
+  *    (or `.withExtensions(new GraftExtensions)`) — cluster-wide. It also
+  *    injects the planner strategy of [[graft.exec.VectorTopK]], which
+  *    `Knn.exact` otherwise installs on its session itself.
   *  - [[GraftFunctions.register]] on a live session — ad hoc.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    ext.injectPlannerStrategy(_ => graft.exec.VectorTopKStrategy)
     ext.injectFunction((
       FunctionIdentifier("l2sq"),
       new ExpressionInfo(classOf[L2SquaredDistance].getName, "l2sq"),

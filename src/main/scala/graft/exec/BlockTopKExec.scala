@@ -1,0 +1,141 @@
+package graft.exec
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types._
+
+import graft.functions.{FloatVecFold, TopKHeap}
+
+/** Physical [[VectorTopK]]: the query batch is broadcast (`left`), the
+  * base streams in its own partitioning (`right`). Each task copies the
+  * batch into one contiguous double array ([[QueryBlock]]), scores every
+  * base row against it and keeps one [[TopKHeap]] per query, then emits
+  * only the heaps' rows — k per query per partition instead of one joined
+  * row per (query, base) pair. `numPairs` counts the pairs scored. */
+case class BlockTopKExec(k: Int, dist: Attribute, left: SparkPlan, right: SparkPlan)
+    extends BinaryExecNode {
+  override def output: Seq[Attribute] = Seq(left.output.head, right.output.head, dist)
+  override def producedAttributes: AttributeSet = AttributeSet(dist)
+  override def requiredChildDistribution: Seq[Distribution] =
+    BroadcastDistribution(IdentityBroadcastMode) :: UnspecifiedDistribution :: Nil
+  override def outputPartitioning: Partitioning =
+    UnknownPartitioning(right.outputPartitioning.numPartitions)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numPairs" -> SQLMetrics.createMetric(sparkContext, "number of pairs scored"))
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    val numPairs = longMetric("numPairs")
+    val queries = left.executeBroadcast[Array[InternalRow]]()
+    val qidType = left.output.head.dataType
+    val loadQuery = BlockTopKExec.loader(left.output(1).dataType)
+    val loadBase = BlockTopKExec.loader(right.output(1).dataType)
+    val outTypes = output.map(_.dataType).toArray
+    val topK = k
+    right.execute().mapPartitions { rows =>
+      val block = new QueryBlock(queries.value, loadQuery, topK)
+      rows.foreach(block.score(_, loadBase))
+      numPairs += block.pairs
+      val toUnsafe = UnsafeProjection.create(outTypes)
+      block.candidates(qidType).map { r => numOutputRows += 1; toUnsafe(r) }
+    }
+  }
+
+  override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): BlockTopKExec =
+    copy(left = l, right = r)
+}
+
+object BlockTopKExec {
+  /** Copies a vector's elements, promoted to double, into `out`. */
+  type Loader = (ArrayData, Array[Double], Int) => Unit
+
+  /** The loader of an embedding column type; the element types and the
+    * error are those of [[graft.functions.FloatVecFold]]. */
+  def loader(t: DataType): Loader = t match {
+    case ArrayType(FloatType, _) =>
+      (a, out, off) => { var i = 0; while (i < a.numElements()) { out(off + i) = a.getFloat(i); i += 1 } }
+    case ArrayType(DoubleType, _) =>
+      (a, out, off) => { var i = 0; while (i < a.numElements()) { out(off + i) = a.getDouble(i); i += 1 } }
+    case ArrayType(IntegerType, _) =>
+      (a, out, off) => { var i = 0; while (i < a.numElements()) { out(off + i) = a.getInt(i); i += 1 } }
+    case ArrayType(LongType, _) =>
+      (a, out, off) => { var i = 0; while (i < a.numElements()) { out(off + i) = a.getLong(i).toDouble; i += 1 } }
+    case other => throw new IllegalArgumentException(s"unsupported vector type $other")
+  }
+}
+
+/** One task's query batch: the rows with an embedding, their vectors in
+  * one contiguous array (query j at `j * dim`), and a heap each. Rows
+  * with a null embedding score nothing, as `l2sq` of null is null. */
+private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTopKExec.Loader, k: Int) {
+  private val live = queries.filter(!_.isNullAt(1))
+  private val n = live.length
+  private val lens = live.map(_.getArray(1).numElements())
+  /** The common dimension, or -1 when the queries disagree (then every
+    * base row fails [[FloatVecFold.checkDims]] against one of them). */
+  private val dim = if (n > 0 && lens.forall(_ == lens(0))) lens(0) else -1
+  private val vecs = new Array[Double](n * math.max(dim, 0))
+  if (dim > 0) { var j = 0; while (j < n) { load(live(j).getArray(1), vecs, j * dim); j += 1 } }
+  private val heaps = Array.fill(n)(new TopKHeap(k))
+  private val row = new Array[Double](math.max(dim, 0))
+  var pairs = 0L
+
+  /** Scores base row `(vec_id, embedding)` against every query. Each pair
+    * keeps `l2sq`'s arithmetic — `d = q(i) - b(i)`, `acc += d * d` from
+    * 0.0, left to right — so its distance is bit-identical; four queries
+    * run interleaved, each in its own accumulator. A null embedding
+    * scores nothing; a null id is scored (a dimension mismatch still
+    * raises) but, like the heap aggregate, not kept. */
+  def score(base: InternalRow, loadBase: BlockTopKExec.Loader): Unit =
+    if (n > 0 && !base.isNullAt(1)) {
+      val emb = base.getArray(1)
+      val nb = emb.numElements()
+      if (nb != dim) FloatVecFold.checkDims(lens.find(_ != nb).get, nb)
+      if (!base.isNullAt(0)) {
+        loadBase(emb, row, 0)
+        val id = base.getLong(0)
+        val b = row; val v = vecs; val d = dim
+        var j = 0
+        while (j + 4 <= n) {
+          val o0 = j * d; val o1 = o0 + d; val o2 = o1 + d; val o3 = o2 + d
+          var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+          var i = 0
+          while (i < d) {
+            val x = b(i)
+            val d0 = v(o0 + i) - x; a0 += d0 * d0
+            val d1 = v(o1 + i) - x; a1 += d1 * d1
+            val d2 = v(o2 + i) - x; a2 += d2 * d2
+            val d3 = v(o3 + i) - x; a3 += d3 * d3
+            i += 1
+          }
+          heaps(j).insert(a0, id); heaps(j + 1).insert(a1, id)
+          heaps(j + 2).insert(a2, id); heaps(j + 3).insert(a3, id)
+          j += 4
+        }
+        while (j < n) {
+          val o = j * d
+          var a = 0.0
+          var i = 0
+          while (i < d) { val e = v(o + i) - b(i); a += e * e; i += 1 }
+          heaps(j).insert(a, id)
+          j += 1
+        }
+        pairs += n
+      }
+    }
+
+  /** Every heap's rows as `(query_id, vec_id, dist)`. */
+  def candidates(qidType: DataType): Iterator[InternalRow] =
+    Iterator.range(0, n).flatMap { j =>
+      val qid = if (live(j).isNullAt(0)) null else live(j).get(0, qidType)
+      val h = heaps(j)
+      Iterator.range(0, h.size).map(s => new GenericInternalRow(Array[Any](qid, h.ids(s), h.dists(s))))
+    }
+}

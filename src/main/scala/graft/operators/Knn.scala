@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.VectorTopK
 import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions._
 
@@ -12,18 +13,19 @@ import graft.functions.VectorFunctions._
   * `index.search(xq, topk)`).
   *
   * Spark formulation: the query side is always small relative to the base
-  * (10k vs 1M in SIFT1M; 1-in-20 here), so we `broadcast` it and let
-  * Catalyst plan a BroadcastNestedLoopJoin — the 100 TB-scale shape is
-  * "stream the base once per partition, keep all queries in memory", which
-  * is exactly what the reference's batch kernels do per thread.
+  * (10k vs 1M in SIFT1M; 1-in-20 here), so it is broadcast and the base
+  * streams once per partition with every query in memory — which is
+  * exactly what the reference's batch kernels do per thread.
   *
   * Per-query top-k has two physical strategies:
   *   - `exactWindow`: row_number over (query_id, dist) — simple, but sorts
   *     |base|×|queries| rows through a shuffle; fine at fixture scale only.
-  *   - `exact` (default): groupBy(query_id) + bounded-heap aggregate
-  *     ([[graft.functions.TopKByDistance]]) — map-side partial aggregation
-  *     reduces shuffle traffic to k rows per query per partition, the plan
-  *     that survives a 100× scale-up.
+  *   - `exact` (default): [[graft.exec.BlockTopKExec]] scores each base
+  *     partition against the broadcast batch in one block kernel with a
+  *     bounded heap per query ([[graft.functions.TopKHeap]]) and emits
+  *     only k rows per query per partition, which [[ranked]] merges — no
+  *     joined row per (query, base) pair, the plan that survives a 100×
+  *     scale-up.
   *
   * Expected input schemas:
   *   queries: (query_id: Long, q_embedding: Array[Float])
@@ -80,33 +82,6 @@ object Knn {
       .select(col("query_id"), col("vec_id"),
         l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
 
-  /** Spread the scan side across the session's full parallelism before
-    * an O(|base|·|queries|) broadcast-NL pass. Why: a BroadcastNestedLoop
-    * join runs in the STREAM side's partitioning, and the fixture
-    * parquet is one small file = ONE input split — without this the
-    * entire quadratic scan (the suite's dominant cost) executes in a
-    * single task (measured round 10, ColdReps artifact-cold at sf0.1:
-    * hubness_zca 88.8 s → 2.2–2.7 s, hubness_centered 9.4 → ~3.0 s,
-    * hubness_whitened 4.5 → 1.7 s once the scan side was spread). The
-    * reshuffle moves
-    * each base row once — O(n) against the O(n·q) scan it parallelizes,
-    * amortized at ANY scale — and it's a no-op when the input already
-    * arrives with ≥ parallelism splits (the 100 TB case: thousands of
-    * parquet splits). Values are unaffected: every downstream aggregate
-    * is order-free (bounded heap orders by (dist, id)).
-    *
-    * The partition probe goes through `df.rdd`, which finalizes the
-    * physical plan — under AQE an input containing an exchange would
-    * have its upstream stages EXECUTED at construction time just to
-    * read a partition count, and that work is not reused by the real
-    * action (r10 review found `knn_update_identity` paying its
-    * anti-join twice this way). So the probe runs only when the
-    * analyzed plan is probe-safe — nothing but projections/filters
-    * over leaves (file scan, localCheckpoint LogicalRDD, local
-    * relation), where `.rdd` is pure planning. Any other shape
-    * (join/union/aggregate in the input) skips the probe and
-    * repartitions unconditionally: one O(n) reshuffle against the
-    * O(n·q) scan it parallelizes, amortized at any scale. */
   /** [[spread]] gated on the input's Catalyst size estimate (metadata —
     * no job, no action): below `minBytes` the forced O(n) reshuffle is
     * skipped. Rationale (r12 verdict item 2): on a sub-task-sized scan
@@ -128,17 +103,53 @@ object Knn {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(minBytes)) df
     else spread(df)
 
+  /** Spread the scan side across the session's full parallelism before
+    * an O(|base|·|queries|) pass over a broadcast side. Why: a broadcast
+    * pass runs in the STREAM side's partitioning, and the fixture
+    * parquet is one small file = ONE input split — without this the
+    * entire quadratic scan (the suite's dominant cost) executes in a
+    * single task (measured round 10, ColdReps artifact-cold at sf0.1:
+    * hubness_zca 88.8 s → 2.2–2.7 s, hubness_centered 9.4 → ~3.0 s,
+    * hubness_whitened 4.5 → 1.7 s once the scan side was spread). The
+    * reshuffle moves each base row once — O(n) against the O(n·q) scan
+    * it parallelizes, amortized at ANY scale — and it's a no-op when the
+    * input already arrives with ≥ parallelism splits (the 100 TB case:
+    * thousands of parquet splits). Values are unaffected: every
+    * downstream aggregate is order-free (bounded heap orders by
+    * (dist, id)).
+    *
+    * The split count is read without a job, or not at all:
+    *   - input that is only projections/filters over a cached relation
+    *     reads the count from the cached physical plan's partitioning (an
+    *     adaptive plan's current one), so a base cached already spread is
+    *     not reshuffled on every batch;
+    *   - input that is only projections/filters over other leaves (file
+    *     scan, localCheckpoint LogicalRDD, local relation) probes
+    *     `df.rdd`, which is pure planning there;
+    *   - any other shape (join/union/aggregate in the input) repartitions
+    *     unconditionally: `df.rdd` finalizes the physical plan, and under
+    *     AQE an input containing an exchange would have its upstream
+    *     stages EXECUTED at construction time just to read a partition
+    *     count, work the real action does not reuse (`knn_update_identity`
+    *     paid its anti-join twice this way in round 10). */
   private[graft] def spread(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, LogicalPlan, Project, SubqueryAlias}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def leafOf(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+      case p @ (_: Project | _: LFilter | _: SubqueryAlias) => leafOf(p.children.head)
+      case l: LeafNode => Some(l)
+      case _ => None
+    }
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val probeSafe = df.queryExecution.analyzed.collectFirst {
-      case n: LogicalPlan
-        if !n.isInstanceOf[LeafNode] && !n.isInstanceOf[Project] &&
-          !n.isInstanceOf[LFilter] && !n.isInstanceOf[SubqueryAlias] => n
-    }.isEmpty
-    if (!probeSafe) df.repartition(p)
-    else if (df.rdd.getNumPartitions < p) df.repartition(p)
-    else df
+    val splits = leafOf(df.queryExecution.withCachedData) match {
+      case Some(cached: InMemoryRelation) => Some((cached.cachedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case plan => plan
+      }).outputPartitioning.numPartitions)
+      case _ => leafOf(df.queryExecution.analyzed).map(_ => df.rdd.getNumPartitions)
+    }
+    if (splits.exists(_ >= p)) df else df.repartition(p)
   }
 
   /** Cross product of base × broadcast(queries), every input column
@@ -149,21 +160,23 @@ object Knn {
       .withColumn("dist", dist)
 
   /** The brute-force scan `(query_id, vec_id, dist)`: [[scored]] narrowed
-    * to the three columns the heap reads. [[exact]], [[hammingTopK]],
-    * [[radius]] and [[exactWindow]] read [[scored]] itself; Catalyst prunes
+    * to the three columns the heap reads. [[hammingTopK]], [[radius]]
+    * and [[exactWindow]] read [[scored]] itself; Catalyst prunes
     * it to the same three columns, in its own column order. */
   private[graft] def scan(queries: DataFrame, base: DataFrame, dist: Column): DataFrame =
     scored(queries, base, dist).select(col("query_id"), col("vec_id"), col("dist"))
 
-  /** Exact kNN via bounded-heap aggregate — the scale path. */
+  /** Exact squared-L2 kNN — the scale path: per base partition, the
+    * block kernel's top-k candidates ([[graft.exec.VectorTopK]]), merged
+    * by [[ranked]]. */
   def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(scored(queries, base, l2sq(col("q_embedding"), col("embedding"))), "query_id", k)
+    ranked(VectorTopK.candidates(queries, spread(base), k), "query_id", k)
 
   /** Hamming top-k over packed binary signatures — FAISS
     * `IndexBinaryFlat` (the binary-vector member of the reference's
     * index family): distance = popcount of the XOR of two int64
     * signatures (e.g. [[graft.text.Dedup.simHashSignatures]]). Same
-    * broadcast-queries scan + bounded-heap shape as [[exact]]; the
+    * broadcast-queries scan + bounded-heap shape as [[cosineTopK]]; the
     * signature column is 8 bytes/row, so the scan side is as compressed
     * as vector search gets. */
   def hammingTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
@@ -173,7 +186,7 @@ object Knn {
   /** Radius (range) search — FAISS `range_search`
     * (faiss Index API; the reference's index family exposes it alongside
     * `search`): ALL neighbors within squared-L2 `maxDistSq`, not a fixed
-    * k. Same broadcast-queries scan shape as [[exact]], but the output is
+    * k. Same broadcast-queries scan as [[exactWindow]], but the output is
     * a pure filter of the scored stream — no per-query state at all, so
     * it parallelizes even better than top-k (nothing to merge; result
     * size is data-dependent, which is the caller's contract in FAISS

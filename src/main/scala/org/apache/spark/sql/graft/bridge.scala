@@ -14,6 +14,13 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over a logical plan — for plans with graft's own nodes,
+    * which no public Dataset method builds. */
+  def ofRows(session: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Lazy plan truncation WITHOUT constraint/stats capture — what
     * `Dataset.localCheckpoint(eager = false)` does minus the
     * `originConstraints`/`originStats` it copies into the resulting

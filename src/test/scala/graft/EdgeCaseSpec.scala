@@ -62,6 +62,37 @@ class EdgeCaseSpec extends AnyFunSuite {
     }
   }
 
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  test("kNN through the block kernel raises on mismatched dimensions") {
+    val base = Seq((1L, Array(1f, 2f, 3f)), (2L, Array(0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val queries = Seq((10L, Array(1f, 2f))).toDF("query_id", "q_embedding")
+    val knn = Knn.exact(queries, base, 1)
+    assert(knn.queryExecution.executedPlan.toString.contains("BlockTopK"))
+    val e = intercept[Exception](knn.collect())
+    assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")))
+  }
+
+  test("kNN skips base rows with a null embedding or id and queries with a null embedding") {
+    val base = Seq[(java.lang.Long, Array[Float])]((1L, Array(0f, 0f)), (null, Array(0f, 0f)),
+      (3L, null), (4L, Array(1f, 1f)), (5L, Array(2f, 2f))).toDF("vec_id", "embedding")
+    val queries = Seq((10L, Array(0f, 0f)), (11L, null)).toDF("query_id", "q_embedding")
+    val got = Knn.exact(queries, base, 10).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(got.sortBy(_._3).toSeq == Seq((10L, 1L, 1), (10L, 4L, 2), (10L, 5L, 3)))
+  }
+
+  test("building kNN starts no Spark job") {
+    val base = Seq((1L, Array(0f, 0f)), (2L, Array(1f, 1f))).toDF("vec_id", "embedding")
+      .repartition(4).cache()
+    try {
+      base.count()
+      val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")
+      val jobs = SparkTestSession.jobsStarted(Knn.exact(queries, base.filter(col("vec_id") > 0), 1))
+      assert(jobs == 0, s"Knn.exact launched $jobs job(s) at construction time")
+    } finally base.unpersist(blocking = true)
+  }
+
   test("recall against an empty prediction set is zero, not an error") {
     val base = Seq((1L, Array(0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")
@@ -98,8 +129,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       df.select(graft.functions.VectorFunctions.l2sq(col("a"), col("b"))).collect()
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
     assert(causes(e).exists(_.getMessage != null) &&
       causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")))
     // cosine kernel enforces the same guard

@@ -1,0 +1,146 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.VectorFunctions.l2sq
+import graft.operators.Knn
+
+/** `Knn.exact` against a plain-Scala kernel over generated corpora with
+  * duplicate vectors and ids, tied distances, ±0, NaN and ±Inf
+  * components, null ids and vectors, empty sides, k > n, fewer base rows
+  * than partitions, float and double vectors, int and long query ids.
+  * Each corpus is also ranked by the broadcast-join composition that
+  * `Knn.exact` replaced (`Knn.scan` → `Knn.ranked`). */
+class KnnReferenceSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+
+  /** Vectors hold values a float holds exactly, so a float corpus and its
+    * double reference agree; `null` is a null id, vector or query id. */
+  case class Corpus(floats: Boolean, intQid: Boolean, queries: Seq[(Any, Array[Double])],
+      base: Seq[(java.lang.Long, Array[Double])], k: Int) {
+    override def toString: String = {
+      def v(a: Array[Double]) = Option(a).map(_.mkString("[", ",", "]")).orNull
+      s"Corpus(floats=$floats, k=$k, queries=${queries.map(q => (q._1, v(q._2)))}, " +
+        s"base=${base.map(b => (b._1, v(b._2)))})"
+    }
+  }
+
+  type Ranked = Set[(Any, Long, Int)]
+
+  private def sqDist(q: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < q.length) { val d = q(i) - b(i); acc += d * d; i += 1 }
+    acc
+  }
+
+  /** The ranked-output contract in plain Scala: per query id, every pair
+    * with a vector on both sides and a base id, ordered by dist (NaN last,
+    * -0.0 equal to 0.0) then id, distinct (dist, id) pairs once, the
+    * first k ranked from 1. `idsDescending` seeds a defect. */
+  def reference(c: Corpus, idsDescending: Boolean = false): Ranked = {
+    val order = Ordering.Tuple2(Ordering.Double.TotalOrdering,
+      if (idsDescending) Ordering.Long.reverse else Ordering.Long)
+    c.queries.filter(_._2 != null).groupBy(_._1).toSeq.flatMap { case (qid, qs) =>
+      val pairs = for ((_, q) <- qs; (id, b) <- c.base if id != null && b != null)
+        yield (sqDist(q, b) + 0.0, id.longValue)
+      pairs.distinctBy { case (d, id) => (java.lang.Double.doubleToLongBits(d), id) }
+        .sorted(order).take(c.k).zipWithIndex
+        .map { case ((_, id), r) => (qid, id, r + 1) }
+    }.toSet
+  }
+
+  private def frames(c: Corpus): (DataFrame, DataFrame) = {
+    val vecType = ArrayType(if (c.floats) FloatType else DoubleType, containsNull = false)
+    def vec(a: Array[Double]): Any =
+      if (a == null) null else if (c.floats) a.map(_.toFloat).toSeq else a.toSeq
+    def df(rows: Seq[Row], fields: StructField*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+    (df(c.queries.map { case (q, v) => Row(q, vec(v)) },
+        StructField("query_id", if (c.intQid) IntegerType else LongType),
+        StructField("q_embedding", vecType)),
+      df(c.base.map { case (id, v) => Row(id, vec(v)) },
+        StructField("vec_id", LongType), StructField("embedding", vecType)))
+  }
+
+  private def collectRanked(df: DataFrame): Ranked =
+    df.collect().map(r => (r.get(0), r.getLong(1), r.getInt(2))).toSet
+
+  private val checked = scala.collection.mutable.ArrayBuffer.empty[Corpus]
+
+  /** `Knn.exact` and the join composition both equal `ref` on `c`. */
+  private def agrees(ref: Corpus => Ranked)(c: Corpus): Prop = {
+    checked += c
+    val (q, b) = frames(c)
+    val expected = ref(c)
+    val joined = Knn.ranked(Knn.scan(q, b, l2sq(col("q_embedding"), col("embedding"))), "query_id", c.k)
+    Prop(collectRanked(Knn.exact(q, b, c.k)) == expected) :| "Knn.exact" &&
+      Prop(collectRanked(joined) == expected) :| "join composition"
+  }
+
+  private val value: Gen[Double] = Gen.frequency(
+    8 -> Gen.choose(-3, 3).map(_.toDouble), 1 -> Gen.const(0.5), 1 -> Gen.const(-0.0),
+    1 -> Gen.const(Double.NaN), 1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity))
+
+  private val corpus: Gen[Corpus] = for {
+    floats <- Gen.oneOf(true, false)
+    intQid <- Gen.oneOf(true, false)
+    dim <- Gen.choose(1, 4)
+    vector = Gen.listOfN(dim, value).map(_.toArray)
+    pool <- Gen.listOfN(3, vector)
+    // a small pool of shared vectors makes duplicates and tied distances common
+    maybeVector = Gen.frequency(6 -> Gen.oneOf(pool), 6 -> vector, 1 -> Gen.const(null))
+    nb <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.choose(1, 3), 4 -> Gen.choose(4, 20))
+    base <- Gen.listOfN(nb, Gen.zip(
+      Gen.frequency(12 -> Gen.choose(0L, 30L).map(Long.box), 1 -> Gen.const(null)), maybeVector))
+    nq <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 6))
+    queries <- Gen.listOfN(nq, Gen.zip(
+      Gen.frequency(8 -> Gen.choose(0, 4).map(i => if (intQid) Int.box(i): Any else Long.box(i.toLong)), 1 -> Gen.const(null)),
+      maybeVector))
+    k <- Gen.choose(1, nb + 3)
+  } yield Corpus(floats, intQid, queries.map { case (q, v) => (q: Any, v) },
+    base.map { case (id, v) => (id: java.lang.Long, v) }, k)
+
+  private def run(ref: Corpus => Ranked, samples: Int): SCTest.Result =
+    SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(samples)
+      .withInitialSeed(Seed(20261019L)).withWorkers(1), Prop.forAllNoShrink(corpus)(agrees(ref)))
+
+  /** The edge cases the checked corpora must have met. */
+  private def coverage(cs: Seq[Corpus]): Map[String, Boolean] = {
+    def vecs(c: Corpus) = (c.queries.map(_._2) ++ c.base.map(_._2)).filter(_ != null)
+    def anyComponent(p: Double => Boolean) = cs.exists(vecs(_).exists(_.exists(p)))
+    Map(
+      "empty base" -> cs.exists(_.base.isEmpty),
+      "empty queries" -> cs.exists(_.queries.isEmpty),
+      "k > n" -> cs.exists(c => c.base.nonEmpty && c.k > c.base.size),
+      "fewer base rows than partitions" -> cs.exists(c =>
+        c.base.nonEmpty && c.base.size < spark.sparkContext.defaultParallelism),
+      "NaN" -> anyComponent(_.isNaN),
+      "±Inf" -> anyComponent(_.isInfinite),
+      "-0.0" -> anyComponent(d => d == 0.0 && 1 / d < 0),
+      "duplicate vectors" -> cs.exists(c => c.base.filter(_._2 != null)
+        .groupBy(_._2.toSeq).exists(_._2.map(_._1).distinct.size > 1)),
+      "null id or vector" -> cs.exists(_.base.exists(b => b._1 == null || b._2 == null)),
+      "double vectors" -> cs.exists(!_.floats),
+      "int query ids" -> cs.exists(_.intQid))
+  }
+
+  test("Knn.exact equals the plain-Scala reference and the join composition") {
+    checked.clear()
+    val res = run(reference(_), 20)
+    assert(res.passed, res.status.toString)
+    val missed = coverage(checked.toSeq).collect { case (name, false) => name }
+    assert(missed.isEmpty, s"the corpora never had: ${missed.mkString(", ")}")
+  }
+
+  test("the reference property fails on a reference with a reversed id tie-break") {
+    val res = run(reference(_, idsDescending = true), 20)
+    // a mismatch, not an exception: the same seed passes the true reference
+    assert(res.status.isInstanceOf[SCTest.Failed], s"a defective reference went undetected: ${res.status}")
+  }
+}

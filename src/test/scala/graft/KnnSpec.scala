@@ -14,6 +14,19 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Spark jobs started while `body` runs (listener delivery is async, so
+    * the bus gets a beat before the count is read). */
+  def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(500); jobs.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 class KnnSpec extends AnyFunSuite {
@@ -227,30 +240,48 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("spread: join-bearing input skips the partition probe (no eager job) and still spreads") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.functions._
     // r10 review: spread()'s `.rdd` partition probe FINALIZES the plan —
     // under AQE a join in the input has its exchange stages EXECUTED at
     // construction time just to read a count. The fix routes any
     // non-(projection/filter-over-leaf) plan straight to repartition.
     // This test pins it: constructing spread(join) must launch ZERO jobs.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     val a = spark.range(0, 1000).toDF("vec_id")
     val b = spark.range(0, 1000).toDF("vec_id").withColumn("x", col("vec_id") * 2)
     val joined = a.join(b, Seq("vec_id"), "left_anti").union(b.select(col("vec_id")))
-    spark.sparkContext.addSparkListener(listener)
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkTestSession.jobsStarted { out = Knn.spread(joined) }
+    assert(jobs == 0, s"spread() launched $jobs job(s) at construction time on a join-bearing plan")
+    // and the contract still holds: the scan side ends up spread
+    assert(out.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+  }
+
+  private def repartitions(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+    }.size
+
+  test("spread: a cached base already spread is not reshuffled, and no job starts") {
+    val p = spark.sparkContext.defaultParallelism
+    val cached = spark.range(0, 1000).toDF("vec_id").repartition(p).cache()
     try {
-      val out = graft.operators.Knn.spread(joined)
-      // listener delivery is async; give the bus a beat before reading
-      Thread.sleep(500)
-      assert(jobs.get() == 0,
-        s"spread() launched ${jobs.get()} job(s) at construction time on a join-bearing plan")
-      // and the contract still holds: the scan side ends up spread
+      cached.count()
+      val in = cached.filter(col("vec_id") % 2 === 0).select(col("vec_id"))
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = SparkTestSession.jobsStarted { out = Knn.spread(in) }
+      assert(jobs == 0, s"spread() launched $jobs job(s) on a cached input")
+      assert(repartitions(out) == repartitions(in), out.queryExecution.analyzed.toString)
+      assert(out.rdd.getNumPartitions == p)
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("spread: a cached single-partition frame is still spread") {
+    val cached = spark.range(0, 1000, 1, 1).toDF("vec_id").cache()
+    try {
+      cached.count()
+      val out = Knn.spread(cached)
+      assert(repartitions(out) == 1)
       assert(out.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally cached.unpersist(blocking = true)
   }
 
   test("spread: projection-over-scan input keeps the cheap probe path (no reshuffle when pre-split)") {

@@ -61,11 +61,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("knn_exact: broadcast queries + bounded-heap top-k, no sort of the cross product") {
     val p = planOf("knn_exact")
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("BlockTopK"), p)
+    assert(p.contains("BroadcastExchange"), p)
     assert(p.contains("topk_by_dist"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    // the only global Sort allowed is the final k-row output ordering
-    assert(p.contains("l2sq_native"), p)
+    // no joined row per (query, base) pair, and no sort of the cross product
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("SortMergeJoin"), p)
   }
 
   test("knn_ivfpq: fused kernels in plan, compressed scan join is broadcast-hash") {

@@ -73,6 +73,17 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(sqlResult == api)
   }
 
+  test("a session without graft's extensions still plans Knn.exact as the block kernel") {
+    import spark.implicits._
+    assert(!spark.conf.getOption("spark.sql.extensions").exists(_.contains("GraftExtensions")))
+    val knn = graft.operators.Knn.exact(
+      Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding"),
+      Seq((1L, Array(0f, 0f)), (2L, Array(1f, 1f))).toDF("vec_id", "embedding"), 1)
+    assert(knn.queryExecution.executedPlan.toString.contains("BlockTopK"))
+    assert(knn.collect().map(_.getLong(1)).toSeq == Seq(1L))
+    assert(spark.experimental.extraStrategies.count(_ == graft.exec.VectorTopKStrategy) == 1)
+  }
+
   test("maxsim_score callable from SQL, agrees with the Column API") {
     GraftFunctions.register(spark)
     val got = spark.sql(

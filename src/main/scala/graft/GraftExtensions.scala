@@ -12,16 +12,15 @@ import graft.functions.{CosineSimilarity, DotProduct, L2SquaredDistance, MaxSimS
   *
   * Two registration paths:
   *  - `GraftExtensions` via `spark.sql.extensions=graft.GraftExtensions`
-  *    (or `.withExtensions(new GraftExtensions)`) — cluster-wide. It also
-  *    injects the planner strategy of [[graft.exec.VectorTopK]], which
-  *    `Knn.exact` otherwise installs on its session itself.
+  *    (or `.withExtensions(new GraftExtensions)`) — cluster-wide.
   *  - [[GraftFunctions.register]] on a live session — ad hoc.
+  * No SQL function builds a [[graft.exec.VectorTopK]]: its planner
+  * strategy is installed by `VectorTopK.candidates`, on its session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectPlannerStrategy(_ => graft.exec.VectorTopKStrategy)
     ext.injectFunction((
       FunctionIdentifier("l2sq"),
       new ExpressionInfo(classOf[L2SquaredDistance].getName, "l2sq"),

@@ -14,10 +14,11 @@ import graft.functions.{FloatVecFold, TopKHeap}
 /** Physical [[VectorTopK]]: the query batch is broadcast (`left`), the
   * base streams in its own partitioning (`right`). Each task copies the
   * batch into one contiguous double array ([[QueryBlock]]), scores every
-  * base row against it and keeps one [[TopKHeap]] per query, then emits
-  * only the heaps' rows — k per query per partition instead of one joined
-  * row per (query, base) pair. `numPairs` counts the pairs scored. */
-case class BlockTopKExec(k: Int, dist: Attribute, left: SparkPlan, right: SparkPlan)
+  * base row against it under `metric` and keeps one [[TopKHeap]] per
+  * query, then emits only the heaps' rows — k per query per partition
+  * instead of one joined row per (query, base) pair. `numPairs` counts
+  * the pairs scored. */
+case class BlockTopKExec(k: Int, metric: Metric, dist: Attribute, left: SparkPlan, right: SparkPlan)
     extends BinaryExecNode {
   override def output: Seq[Attribute] = Seq(left.output.head, right.output.head, dist)
   override def producedAttributes: AttributeSet = AttributeSet(dist)
@@ -39,8 +40,9 @@ case class BlockTopKExec(k: Int, dist: Attribute, left: SparkPlan, right: SparkP
     val loadBase = BlockTopKExec.loader(right.output(1).dataType)
     val outTypes = output.map(_.dataType).toArray
     val topK = k
+    val m = metric
     right.execute().mapPartitions { rows =>
-      val block = new QueryBlock(queries.value, loadQuery, topK)
+      val block = new QueryBlock(queries.value, loadQuery, topK, m)
       rows.foreach(block.score(_, loadBase))
       numPairs += block.pairs
       val toUnsafe = UnsafeProjection.create(outTypes)
@@ -73,8 +75,10 @@ object BlockTopKExec {
 
 /** One task's query batch: the rows with an embedding, their vectors in
   * one contiguous array (query j at `j * dim`), and a heap each. Rows
-  * with a null embedding score nothing, as `l2sq` of null is null. */
-private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTopKExec.Loader, k: Int) {
+  * with a null embedding score nothing, as the Column kernels return null
+  * on a null vector. */
+private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTopKExec.Loader, k: Int,
+    metric: Metric) {
   private val live = queries.filter(!_.isNullAt(1))
   private val n = live.length
   private val lens = live.map(_.getArray(1).numElements())
@@ -83,16 +87,16 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
   private val dim = if (n > 0 && lens.forall(_ == lens(0))) lens(0) else -1
   private val vecs = new Array[Double](n * math.max(dim, 0))
   if (dim > 0) { var j = 0; while (j < n) { load(live(j).getArray(1), vecs, j * dim); j += 1 } }
+  /** Cosine only: √Σ q² per query, summed as the fused kernel sums it. */
+  private val qNorms =
+    if (metric == Metric.Cosine) Array.tabulate(n)(j => math.sqrt(sumSq(vecs, j * dim, dim))) else null
   private val heaps = Array.fill(n)(new TopKHeap(k))
   private val row = new Array[Double](math.max(dim, 0))
   var pairs = 0L
 
-  /** Scores base row `(vec_id, embedding)` against every query. Each pair
-    * keeps `l2sq`'s arithmetic — `d = q(i) - b(i)`, `acc += d * d` from
-    * 0.0, left to right — so its distance is bit-identical; four queries
-    * run interleaved, each in its own accumulator. A null embedding
-    * scores nothing; a null id is scored (a dimension mismatch still
-    * raises) but, like the heap aggregate, not kept. */
+  /** Scores base row `(vec_id, embedding)` against every query. A null
+    * embedding scores nothing; a null id is scored (a dimension mismatch
+    * still raises) but, like the heap aggregate, not kept. */
   def score(base: InternalRow, loadBase: BlockTopKExec.Loader): Unit =
     if (n > 0 && !base.isNullAt(1)) {
       val emb = base.getArray(1)
@@ -100,36 +104,65 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
       if (nb != dim) FloatVecFold.checkDims(lens.find(_ != nb).get, nb)
       if (!base.isNullAt(0)) {
         loadBase(emb, row, 0)
-        val id = base.getLong(0)
-        val b = row; val v = vecs; val d = dim
-        var j = 0
-        while (j + 4 <= n) {
-          val o0 = j * d; val o1 = o0 + d; val o2 = o1 + d; val o3 = o2 + d
-          var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-          var i = 0
-          while (i < d) {
-            val x = b(i)
-            val d0 = v(o0 + i) - x; a0 += d0 * d0
-            val d1 = v(o1 + i) - x; a1 += d1 * d1
-            val d2 = v(o2 + i) - x; a2 += d2 * d2
-            val d3 = v(o3 + i) - x; a3 += d3 * d3
-            i += 1
-          }
-          heaps(j).insert(a0, id); heaps(j + 1).insert(a1, id)
-          heaps(j + 2).insert(a2, id); heaps(j + 3).insert(a3, id)
-          j += 4
-        }
-        while (j < n) {
-          val o = j * d
-          var a = 0.0
-          var i = 0
-          while (i < d) { val e = v(o + i) - b(i); a += e * e; i += 1 }
-          heaps(j).insert(a, id)
-          j += 1
-        }
+        scoreRow(base.getLong(0))
         pairs += n
       }
     }
+
+  /** Scores the loaded row against every query, four queries interleaved,
+    * each in its own accumulator summing left to right from 0.0 — `l2sq`'s
+    * `d = q(i) - b(i)`, `acc += d * d`, or `dot`'s `acc += q(i) * b(i)` —
+    * so every distance is bit-identical to its Column kernel's. */
+  private def scoreRow(id: Long): Unit = {
+    val b = row; val v = vecs; val d = dim; val l2 = metric == Metric.L2
+    val bNorm = if (qNorms == null) 0.0 else math.sqrt(sumSq(b, 0, d))
+    var j = 0
+    while (j + 4 <= n) {
+      val o0 = j * d; val o1 = o0 + d; val o2 = o1 + d; val o3 = o2 + d
+      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+      var i = 0
+      if (l2) while (i < d) {
+        val x = b(i)
+        val d0 = v(o0 + i) - x; a0 += d0 * d0
+        val d1 = v(o1 + i) - x; a1 += d1 * d1
+        val d2 = v(o2 + i) - x; a2 += d2 * d2
+        val d3 = v(o3 + i) - x; a3 += d3 * d3
+        i += 1
+      } else while (i < d) {
+        val x = b(i)
+        a0 += v(o0 + i) * x; a1 += v(o1 + i) * x; a2 += v(o2 + i) * x; a3 += v(o3 + i) * x
+        i += 1
+      }
+      heaps(j).insert(dist(a0, j, bNorm), id); heaps(j + 1).insert(dist(a1, j + 1, bNorm), id)
+      heaps(j + 2).insert(dist(a2, j + 2, bNorm), id); heaps(j + 3).insert(dist(a3, j + 3, bNorm), id)
+      j += 4
+    }
+    while (j < n) {
+      val o = j * d
+      var a = 0.0
+      var i = 0
+      if (l2) while (i < d) { val e = v(o + i) - b(i); a += e * e; i += 1 }
+      else while (i < d) { a += v(o + i) * b(i); i += 1 }
+      heaps(j).insert(dist(a, j, bNorm), id)
+      j += 1
+    }
+  }
+
+  /** Query `j`'s distance from its accumulator: the L2 sum, `-dot`, or the
+    * fused cosine kernel's `dot / (√Σ q² · √Σ b²)` negated. */
+  @inline private def dist(acc: Double, j: Int, bNorm: Double): Double = metric match {
+    case Metric.L2 => acc
+    case Metric.InnerProduct => -acc
+    case Metric.Cosine => -(acc / (qNorms(j) * bNorm))
+  }
+
+  /** Σ v(i)², i from `off` for `len` elements, left to right from 0.0. */
+  private def sumSq(v: Array[Double], off: Int, len: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < len) { val x = v(off + i); acc += x * x; i += 1 }
+    acc
+  }
 
   /** Every heap's rows as `(query_id, vec_id, dist)`. */
   def candidates(qidType: DataType): Iterator[InternalRow] =

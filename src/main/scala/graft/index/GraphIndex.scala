@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.{Metric, VectorTopK}
 import graft.functions.VectorFunctions.l2sq
 import graft.operators.Knn
 
@@ -289,9 +290,6 @@ object GraphIndex {
       allowed: Option[DataFrame], k: Int, seedMod: Int, seedK: Int, hops: Int,
       beam: Int, cosine: Boolean = false): DataFrame = {
     val entry = base.filter(col("vec_id") % seedMod === 0)
-    def distOf(q: Column, e: Column): Column =
-      if (cosine) -graft.functions.VectorFunctions.cosine(q, e)
-      else l2sq(q, e)
     def topPairs(scored: DataFrame, m: Int): DataFrame =
       scored.groupBy(col("query_id"))
         .agg(graft.functions.GraftFunctions.topKPairsByDist(
@@ -306,12 +304,8 @@ object GraphIndex {
     // search (guide §1.2: don't compute things you throw away). Same
     // kernel, same doubles, same (dist, id) heap order throughout, so
     // results are bit-identical.
-    //
-    // Seeds: the same spread + broadcast-queries scan Knn.cosineTopK
-    // runs, with the pairs heap instead of the id heap.
-    val seeds = topPairs(
-      Knn.scan(queries, entry, distOf(col("q_embedding"), col("embedding"))),
-      seedK).localCheckpoint(false)
+    val seeds = topPairs(VectorTopK.candidates(queries, Knn.spread(entry), seedK,
+      if (cosine) Metric.Cosine else Metric.L2), seedK).localCheckpoint(false)
     // Adjacency WITH the neighbor payload, built once per search (r13,
     // verdict item 3 "carry the adjacency with payload"): the r12 shape
     // joined each hop's expansion against `base` — a fresh base

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.exec.{Metric, VectorTopK}
 import graft.operators.Knn
 
 /** Scalar quantization (SQ8) — the FAISS `IndexScalarQuantizer` family
@@ -71,18 +72,17 @@ object SqIndex {
   }
 
   /** Compressed-domain kNN: queries are quantized with the same codec so
-    * the distance is a pure integer-difference loop (symmetric SQ);
-    * optional exact rerank on a shortlist recovers full accuracy. */
+    * the distance is a pure integer-difference loop (symmetric SQ): the
+    * block kernel's squared L2 over the int code arrays (Σ Δcode², see
+    * note); optional exact rerank on a shortlist recovers full accuracy. */
   def search(model: SqModel, queries: DataFrame, k: Int): DataFrame = {
     val qCodes = encode(
       queries.select(col("query_id").as("vec_id"), col("q_embedding").as("embedding")),
       model.mins, model.scales)
-      .select(col("vec_id").as("query_id"), col("codes").as("q_codes"))
-    Knn.ranked(model.encodedBase
-      .crossJoin(broadcast(qCodes))
-      // native fused loop over the int code arrays (Σ Δcode², see note)
-      .withColumn("dist",
-        graft.functions.VectorFunctions.l2sq(col("codes"), col("q_codes"))), "query_id", k)
+      .select(col("vec_id").as("query_id"), col("codes").as("q_embedding"))
+    Knn.ranked(VectorTopK.candidates(qCodes,
+      model.encodedBase.select(col("vec_id"), col("codes").as("embedding")), k, Metric.L2),
+      "query_id", k)
   }
   // Note: with a shared per-dim scale the unscaled Σ Δcode² is NOT
   // ordering-equivalent to true L2 when scales differ per dim; the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.exec.VectorTopK
+import graft.exec.{Metric, VectorTopK}
 import graft.functions.GraftFunctions.topKByDist
 import graft.functions.VectorFunctions._
 
@@ -25,7 +25,8 @@ import graft.functions.VectorFunctions._
   *     bounded heap per query ([[graft.functions.TopKHeap]]) and emits
   *     only k rows per query per partition, which [[ranked]] merges — no
   *     joined row per (query, base) pair, the plan that survives a 100×
-  *     scale-up.
+  *     scale-up. [[cosineTopK]], [[mipsTopK]] and the prefix pass of
+  *     [[prefixRerankStored]] run the same kernel under their metric.
   *
   * Expected input schemas:
   *   queries: (query_id: Long, q_embedding: Array[Float])
@@ -153,32 +154,38 @@ object Knn {
   }
 
   /** Cross product of base × broadcast(queries), every input column
-    * kept, plus the `dist` column. */
+    * kept, plus the `dist` column: the scan of the shapes the block
+    * kernel does not run ([[hammingTopK]], [[radius]], [[exactWindow]]). */
   private def scored(queries: DataFrame, base: DataFrame, dist: Column): DataFrame =
     spread(base)
       .crossJoin(broadcast(queries))
       .withColumn("dist", dist)
 
-  /** The brute-force scan `(query_id, vec_id, dist)`: [[scored]] narrowed
-    * to the three columns the heap reads. [[hammingTopK]], [[radius]]
-    * and [[exactWindow]] read [[scored]] itself; Catalyst prunes
-    * it to the same three columns, in its own column order. */
-  private[graft] def scan(queries: DataFrame, base: DataFrame, dist: Column): DataFrame =
-    scored(queries, base, dist).select(col("query_id"), col("vec_id"), col("dist"))
-
   /** Exact squared-L2 kNN — the scale path: per base partition, the
     * block kernel's top-k candidates ([[graft.exec.VectorTopK]]), merged
     * by [[ranked]]. */
   def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(VectorTopK.candidates(queries, spread(base), k), "query_id", k)
+    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.L2), "query_id", k)
+
+  /** Exact top-k by cosine similarity (descending) — the similarity-search
+    * baseline for the embedding column: [[exact]]'s plan under
+    * [[Metric.Cosine]]. */
+  def cosineTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.Cosine), "query_id", k)
+
+  /** Exact top-k by inner product (descending) — FAISS
+    * METRIC_INNER_PRODUCT, the MIPS metric of recommendation/retrieval
+    * scorers: [[exact]]'s plan under [[Metric.InnerProduct]]. */
+  def mipsTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.InnerProduct), "query_id", k)
 
   /** Hamming top-k over packed binary signatures — FAISS
     * `IndexBinaryFlat` (the binary-vector member of the reference's
     * index family): distance = popcount of the XOR of two int64
-    * signatures (e.g. [[graft.text.Dedup.simHashSignatures]]). Same
-    * broadcast-queries scan + bounded-heap shape as [[cosineTopK]]; the
-    * signature column is 8 bytes/row, so the scan side is as compressed
-    * as vector search gets. */
+    * signatures (e.g. [[graft.text.Dedup.simHashSignatures]]), scored
+    * by the broadcast-queries scan into the bounded heap; the signature
+    * column is 8 bytes/row, so the scan side is as compressed as vector
+    * search gets. */
   def hammingTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
     ranked(scored(queries, base,
       bit_count(col("q_sig").bitwiseXOR(col("sig"))).cast("double")), "query_id", k)
@@ -221,28 +228,6 @@ object Knn {
         slice(col("embedding"), 1, prefixDim).as("prefix"), col("embedding")),
       queries, k, prefixDim, shortlistSize)
 
-  /** Exact top-k by cosine similarity (descending) — the similarity-search
-    * baseline for the embedding column (builder brief: ANN over embeddings).
-    *
-    * Stays on the FUSED [[cosine]] kernel on purpose: an r9 A/B tried
-    * precomputing per-row norms and scoring dot/(‖q‖·‖b‖) — bit-identical
-    * math, one loop per pair instead of three — and it was SLOWER (7.2 vs
-    * 5.2 s warm on the sf0.1 all-pairs build): a 4-node composed tree
-    * (neg∘div∘mul + dot) costs more per pair in dispatch than the two
-    * redundant norm loops cost in arithmetic. One fused kernel node is
-    * the fast shape here.
-    *
-    * The kernel runs in the [[scan]] PROJECTION between join and
-    * aggregate (r12, the rankTop shape): ObjectHashAggregate does not
-    * join whole-stage codegen, so a kernel in the agg child is evaluated
-    * through the aggregate's own projection over boundary rows that still
-    * carry BOTH embeddings (~520 B/pair); projecting (query_id, vec_id,
-    * dist) first runs the fold inside the codegen'd join stage and
-    * shrinks the boundary row to 24 B — measured 2x on the all-pairs
-    * cosine build (OPTIMIZATION_r12.md §1). */
-  def cosineTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(scan(queries, base, -cosine(col("q_embedding"), col("embedding"))), "query_id", k)
-
   /** Two-stage prefix kNN served from a stored-prefix layout
     * ([[graft.sources.Layout.writePrefixLayout]]) `(vec_id, prefix,
     * embedding)`: the cheap pass scans only (vec_id, prefix) — Parquet
@@ -250,19 +235,12 @@ object Knn {
     * slice into a physically smaller read. */
   def prefixRerankStored(layout: DataFrame, queries: DataFrame, k: Int,
       prefixDim: Int, shortlistSize: Int): DataFrame = {
-    val short = shortlist(scan(
-      queries.select(col("query_id"), slice(col("q_embedding"), 1, prefixDim).as("q_pemb")),
-      layout.select(col("vec_id"), col("prefix")),
-      l2sq(col("q_pemb"), col("prefix"))), shortlistSize)
+    val short = shortlist(VectorTopK.candidates(
+      queries.select(col("query_id"), slice(col("q_embedding"), 1, prefixDim).as("q_embedding")),
+      spread(layout.select(col("vec_id"), col("prefix").as("embedding"))),
+      shortlistSize, Metric.L2), shortlistSize)
     rerank(short, layout.select(col("vec_id"), col("embedding")), queries, k)
   }
-
-  /** Exact top-k by inner product (descending) — FAISS
-    * METRIC_INNER_PRODUCT, the MIPS metric of recommendation/retrieval
-    * scorers. Same plan shape as [[cosineTopK]]: negated score through
-    * the bounded-heap aggregate. */
-  def mipsTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(scan(queries, base, -dot(col("q_embedding"), col("embedding"))), "query_id", k)
 
   /** Maximal-marginal-relevance diversified retrieval: per query, take a
     * `shortlist`-sized cosine shortlist, then greedily select `k` items

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.{Metric, VectorTopK}
 import graft.operators.{Knn, Recall}
 import graft.sources.Tables
 import graft.text.TextFunctions
@@ -453,7 +454,7 @@ object GraphQueries {
     * one float rounding — so the n² scan downstream reads 4-byte
     * components (the measured A/B: double unit vectors were SLOWER than
     * the fused-cosine baseline because they doubled the bytes/pair;
-    * see [[cosineAdjacency]]). Oracle twin:
+    * SCALING.md, round 10). Oracle twin:
     * `list_transform(v, x -> CAST(CAST(x / sqrt(list_inner_product(v, v)) AS REAL) AS DOUBLE))`
     * — DuckDB 1.0's list_inner_product is the same left-to-right double
     * fold (verified on an association-sensitive probe), double→float→
@@ -470,38 +471,21 @@ object GraphQueries {
     * self excluded — the cosine twin of [[graft.index.GraphIndex.buildExact]],
     * shared by the hubness-remediation family.
     *
-    * Physical plan (r9 verdict item 2 — the A/B neither prior attempt
-    * tried, extended): normalize each vector ONCE in a map pass (float
-    * components, so scan bytes match the raw build), NEGATE the
-    * query-side copies at normalize time, and rank by the bare
-    * single-accumulator [[graft.functions.DotProduct]] kernel — cosine
-    * order over unit vectors IS dot order, the negation makes descending
-    * cosine the heap's natural ascending dist with NO extra expression
-    * node, and the n² hot loop does one multiply-add per dim instead of
-    * the fused cosine kernel's three. IEEE negation commutes exactly
-    * with both product and sum, so the heap's (dist, id) order equals
-    * the oracle's (-list_inner_product, id) order bit-for-bit. Measured
-    * (SCALING.md, round-10 kernel A/B, sf0.1, warm): fused cosine 6.9–7.2 s,
-    * double-unit -dot 8.5–9.3 s (2× scan bytes loses more than the FMAs
-    * save), float-unit negated-query dot 5.4–5.7 s — the shipped plan. */
+    * Normalize each vector ONCE in a map pass (float components, so scan
+    * bytes match the raw build; SCALING.md, round-10 kernel A/B) and rank
+    * by the block kernel's inner product: cosine order over unit vectors
+    * IS dot order, and −Σq·b over these unit vectors is the oracle's
+    * −list_inner_product bit-for-bit, so the heap's (dist, id) order
+    * equals the oracle's. */
   private def cosineAdjacency(vecs: DataFrame, degree: Int): DataFrame = {
     // spread BELOW the normalize so both the per-row normalize and the
     // n² scan run at full parallelism (spread above a projection would
     // leave the projection on the single input split)
     val unit = unitVectors(Knn.spread(vecs))
-    val asQueries = unit.select(col("vec_id").as("query_id"),
-      transform(col("embedding"), x => -x).as("q_embedding"))
-    // kernel in a PROJECTION between join and aggregate (r12): the
-    // ObjectHashAggregate boundary then carries (query_id, vec_id, dist)
-    // instead of both 64-float embeddings, and the dot fold runs inside
-    // the whole-stage-codegen'd join stage. Same expression ⇒ same
-    // doubles ⇒ same heap order. Measured 2x (OPTIMIZATION_r12.md §1, D vs C).
+    val asQueries = unit.select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    Knn.ranked(unit
-      .crossJoin(broadcast(asQueries))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions.dot(col("q_embedding"), col("embedding"))
-          .as("dist")), "query_id", degree + 1)
+    Knn.ranked(VectorTopK.candidates(asQueries, unit, degree + 1, Metric.InnerProduct),
+        "query_id", degree + 1)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("g_rank", row_number().over(w))
       .filter(col("g_rank") <= degree)
@@ -540,7 +524,9 @@ object GraphQueries {
         .select(col("query_id").as("vec_id"), col("cid"))
       val unit = unitVectors(Knn.spread(base))
       val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child — see [[cosineAdjacency]]
+      // kernel in a projection, not the agg child: the aggregate's input
+      // row carries (node_id, cand_id, dist), not both embeddings
+      // (measured 2x, OPTIMIZATION_r12.md §1)
       Knn.ranked(nodes.alias("na")
         .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
         .filter(col("na.vec_id") =!= col("nb.vec_id"))
@@ -763,7 +749,9 @@ object GraphQueries {
         .select(col("query_id").as("vec_id"), col("cid"))
       val unit = unitVectors(Knn.spread(zv))
       val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child — see [[cosineAdjacency]]
+      // kernel in a projection, not the agg child: the aggregate's input
+      // row carries (node_id, cand_id, dist), not both embeddings
+      // (measured 2x, OPTIMIZATION_r12.md §1)
       Knn.ranked(nodes.alias("na")
         .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
         .filter(col("na.vec_id") =!= col("nb.vec_id"))

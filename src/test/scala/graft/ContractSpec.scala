@@ -449,4 +449,64 @@ class ContractSpec extends AnyFunSuite {
       assert(rankedTailHits(file, src).size == expected, s"$file: $src")
     }
   }
+
+  /** A dense-vector top-k scan runs through the block kernel
+    * (`graft.exec.VectorTopK`), not as a broadcast cross join that
+    * projects a vector kernel per (query, base) pair. These files may
+    * still hold that join, for shapes that are not a dense top-k. */
+  private val scanKernels = Seq("l2sq(", "cosine(", "dot(")
+  private val scanExceptions = Set(
+    // scored: hammingTopK reads int64 signatures, not arrays; radius is a
+    // filter, not a top-k; exactWindow is the registered naive-plan
+    // query. mmrTopK: its window keeps duplicate (cos, id) rows, which
+    // the heap would merge.
+    "Knn.scala",
+    // contaminationEmbedding counts quantised-cosine hits, not a top-k
+    "Curation.scala",
+    // hybridSearch scores every row for rank fusion, not a top-k
+    "TextDedupQueries.scala",
+    // rocchioPreds: a nearest-centroid pick whose broadcast side is the
+    // centroid table, so a per-query heap would sit on the streamed side
+    "StatsTrendQueries.scala")
+
+  /** Lines of `src` (from file `fileName`) where a
+    * `crossJoin(broadcast(` is followed, on it or within the next three
+    * lines, by a vector kernel. */
+  def scanJoinHits(fileName: String, src: String): Seq[String] =
+    if (scanExceptions.contains(fileName)) Nil
+    else {
+      val lines = src.split('\n').toSeq
+      lines.indices.filter(i => lines(i).contains("crossJoin(broadcast(") &&
+        lines.slice(i, i + 4).exists(l => scanKernels.exists(l.contains))).map(i => lines(i).trim)
+    }
+
+  test("dense top-k scans run through the block kernel (scan lint)") {
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(files.size > 50, s"lint scanned only ${files.size} files")
+    val hits = files.flatMap { p =>
+      scanJoinHits(p.getFileName.toString,
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(l => s"$p: $l")
+    }
+    assert(hits.isEmpty,
+      "broadcast cross-join vector scan outside the block kernel — use VectorTopK.candidates:\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the scan lint itself fires on seeded copies") {
+    val seeded = Seq(
+      ("SqIndex.scala", "base\n  .crossJoin(broadcast(qCodes))\n  .withColumn(\"dist\", l2sq(col(\"codes\"), col(\"q\")))") -> 1,
+      ("Foo.scala", "a.crossJoin(broadcast(q)).select(-cosine(col(\"q\"), col(\"e\")))") -> 1,
+      ("GraphQueries.scala", "unit\n  .crossJoin(broadcast(asQueries))\n  .select(col(\"query_id\"),\n    VectorFunctions.dot(col(\"q\"), col(\"e\")))") -> 1,
+      ("Foo.scala", "a.crossJoin(broadcast(q))\n1\n2\n3\n.select(dot(col(\"q\"), col(\"e\")))") -> 0,
+      ("Foo.scala", "counts.crossJoin(broadcast(totals)).select(col(\"n\") / col(\"total\"))") -> 0,
+      ("Knn.scala", "base.crossJoin(broadcast(queries)).select(cosine(col(\"q\"), col(\"e\")))") -> 0,
+      ("Curation.scala", "train.crossJoin(broadcast(bench)).select(cosine(col(\"t\"), col(\"b\")))") -> 0)
+    seeded.foreach { case ((file, src), expected) =>
+      assert(scanJoinHits(file, src).size == expected, s"$file: $src")
+    }
+  }
+
 }

@@ -68,18 +68,25 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("kNN through the block kernel raises on mismatched dimensions") {
     val base = Seq((1L, Array(1f, 2f, 3f)), (2L, Array(0f, 0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(1f, 2f))).toDF("query_id", "q_embedding")
-    val knn = Knn.exact(queries, base, 1)
-    assert(knn.queryExecution.executedPlan.toString.contains("BlockTopK"))
-    val e = intercept[Exception](knn.collect())
-    assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")))
+    for (search <- Seq(Knn.exact _, Knn.cosineTopK _, Knn.mipsTopK _)) {
+      val knn = search(queries, base, 1)
+      assert(knn.queryExecution.executedPlan.toString.contains("BlockTopK"))
+      val e = intercept[Exception](knn.collect())
+      assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")))
+    }
   }
 
   test("kNN skips base rows with a null embedding or id and queries with a null embedding") {
     val base = Seq[(java.lang.Long, Array[Float])]((1L, Array(0f, 0f)), (null, Array(0f, 0f)),
       (3L, null), (4L, Array(1f, 1f)), (5L, Array(2f, 2f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(0f, 0f)), (11L, null)).toDF("query_id", "q_embedding")
-    val got = Knn.exact(queries, base, 10).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(got.sortBy(_._3).toSeq == Seq((10L, 1L, 1), (10L, 4L, 2), (10L, 5L, 3)))
+    def ranked(knn: org.apache.spark.sql.DataFrame) =
+      knn.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._3).toSeq
+    assert(ranked(Knn.exact(queries, base, 10)) == Seq((10L, 1L, 1), (10L, 4L, 2), (10L, 5L, 3)))
+    // from (1, 1): ids 4 and 5 tie at cosine 1, the zero vector's NaN ranks last
+    val fromOnes = Seq((12L, Array(1f, 1f)), (11L, null)).toDF("query_id", "q_embedding")
+    assert(ranked(Knn.cosineTopK(fromOnes, base, 10)) == Seq((12L, 4L, 1), (12L, 5L, 2), (12L, 1L, 3)))
+    assert(ranked(Knn.mipsTopK(fromOnes, base, 10)) == Seq((12L, 5L, 1), (12L, 4L, 2), (12L, 1L, 3)))
   }
 
   test("building kNN starts no Spark job") {
@@ -88,8 +95,11 @@ class EdgeCaseSpec extends AnyFunSuite {
     try {
       base.count()
       val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")
-      val jobs = SparkTestSession.jobsStarted(Knn.exact(queries, base.filter(col("vec_id") > 0), 1))
-      assert(jobs == 0, s"Knn.exact launched $jobs job(s) at construction time")
+      for ((name, search) <- Seq("exact" -> Knn.exact _, "cosineTopK" -> Knn.cosineTopK _,
+          "mipsTopK" -> Knn.mipsTopK _)) {
+        val jobs = SparkTestSession.jobsStarted(search(queries, base.filter(col("vec_id") > 0), 1))
+        assert(jobs == 0, s"Knn.$name launched $jobs job(s) at construction time")
+      }
     } finally base.unpersist(blocking = true)
   }
 

@@ -1,21 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions.l2sq
+import graft.functions.VectorFunctions.{cosine, dot, l2sq}
 import graft.operators.Knn
 
-/** `Knn.exact` against a plain-Scala kernel over generated corpora with
-  * duplicate vectors and ids, tied distances, ±0, NaN and ±Inf
-  * components, null ids and vectors, empty sides, k > n, fewer base rows
-  * than partitions, float and double vectors, int and long query ids.
-  * Each corpus is also ranked by the broadcast-join composition that
-  * `Knn.exact` replaced (`Knn.scan` → `Knn.ranked`). */
+/** `Knn.exact`, `Knn.cosineTopK` and `Knn.mipsTopK` against a plain-Scala
+  * kernel of each metric over generated corpora with duplicate vectors
+  * and ids, tied distances, ±0, NaN and ±Inf components, zero vectors,
+  * null ids and vectors, empty sides, k > n, fewer base rows than
+  * partitions, float and double vectors, int and long query ids. Each
+  * corpus is also ranked by the broadcast-join composition the block
+  * kernel replaced: the Column kernel projected over
+  * `spread(base) × broadcast(queries)`, then `Knn.ranked`. */
 class KnnReferenceSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -32,23 +34,37 @@ class KnnReferenceSpec extends AnyFunSuite {
 
   type Ranked = Set[(Any, Long, Int)]
 
-  private def sqDist(q: Array[Double], b: Array[Double]): Double = {
+  /** A metric: its engine search, its Column kernel for the join
+    * composition, and its plain-Scala distance. */
+  case class Metric(name: String, search: (DataFrame, DataFrame, Int) => DataFrame,
+      column: (Column, Column) => Column, dist: (Array[Double], Array[Double]) => Double)
+
+  private def sum(n: Int)(term: Int => Double): Double = {
     var acc = 0.0
     var i = 0
-    while (i < q.length) { val d = q(i) - b(i); acc += d * d; i += 1 }
+    while (i < n) { acc += term(i); i += 1 }
     acc
   }
 
+  private val metrics = Seq(
+    Metric("Knn.exact", Knn.exact, l2sq,
+      (q, b) => sum(q.length) { i => val d = q(i) - b(i); d * d }),
+    Metric("Knn.cosineTopK", Knn.cosineTopK, (q, b) => -cosine(q, b),
+      (q, b) => -(sum(q.length)(i => q(i) * b(i)) /
+        (math.sqrt(sum(q.length)(i => q(i) * q(i))) * math.sqrt(sum(b.length)(i => b(i) * b(i)))))),
+    Metric("Knn.mipsTopK", Knn.mipsTopK, (q, b) => -dot(q, b),
+      (q, b) => -sum(q.length)(i => q(i) * b(i))))
+
   /** The ranked-output contract in plain Scala: per query id, every pair
-    * with a vector on both sides and a base id, ordered by dist (NaN last,
-    * -0.0 equal to 0.0) then id, distinct (dist, id) pairs once, the
-    * first k ranked from 1. `idsDescending` seeds a defect. */
-  def reference(c: Corpus, idsDescending: Boolean = false): Ranked = {
+    * with a vector on both sides and a base id, ordered by `m`'s dist (NaN
+    * last, -0.0 equal to 0.0) then id, distinct (dist, id) pairs once,
+    * the first k ranked from 1. `idsDescending` seeds a defect. */
+  def reference(m: Metric, c: Corpus, idsDescending: Boolean = false): Ranked = {
     val order = Ordering.Tuple2(Ordering.Double.TotalOrdering,
       if (idsDescending) Ordering.Long.reverse else Ordering.Long)
     c.queries.filter(_._2 != null).groupBy(_._1).toSeq.flatMap { case (qid, qs) =>
       val pairs = for ((_, q) <- qs; (id, b) <- c.base if id != null && b != null)
-        yield (sqDist(q, b) + 0.0, id.longValue)
+        yield (m.dist(q, b) + 0.0, id.longValue)
       pairs.distinctBy { case (d, id) => (java.lang.Double.doubleToLongBits(d), id) }
         .sorted(order).take(c.k).zipWithIndex
         .map { case ((_, id), r) => (qid, id, r + 1) }
@@ -73,14 +89,19 @@ class KnnReferenceSpec extends AnyFunSuite {
 
   private val checked = scala.collection.mutable.ArrayBuffer.empty[Corpus]
 
-  /** `Knn.exact` and the join composition both equal `ref` on `c`. */
-  private def agrees(ref: Corpus => Ranked)(c: Corpus): Prop = {
+  /** Under every metric, the engine search and the join composition
+    * both equal `ref` on `c`. */
+  private def agrees(ref: (Metric, Corpus) => Ranked)(c: Corpus): Prop = {
     checked += c
     val (q, b) = frames(c)
-    val expected = ref(c)
-    val joined = Knn.ranked(Knn.scan(q, b, l2sq(col("q_embedding"), col("embedding"))), "query_id", c.k)
-    Prop(collectRanked(Knn.exact(q, b, c.k)) == expected) :| "Knn.exact" &&
-      Prop(collectRanked(joined) == expected) :| "join composition"
+    metrics.map { m =>
+      val expected = ref(m, c)
+      val joined = Knn.ranked(Knn.spread(b).crossJoin(broadcast(q))
+        .select(col("query_id"), col("vec_id"), m.column(col("q_embedding"), col("embedding")).as("dist")),
+        "query_id", c.k)
+      Prop(collectRanked(m.search(q, b, c.k)) == expected) :| m.name &&
+        Prop(collectRanked(joined) == expected) :| s"${m.name} join composition"
+    }.reduce(_ && _)
   }
 
   private val value: Gen[Double] = Gen.frequency(
@@ -106,7 +127,7 @@ class KnnReferenceSpec extends AnyFunSuite {
   } yield Corpus(floats, intQid, queries.map { case (q, v) => (q: Any, v) },
     base.map { case (id, v) => (id: java.lang.Long, v) }, k)
 
-  private def run(ref: Corpus => Ranked, samples: Int): SCTest.Result =
+  private def run(ref: (Metric, Corpus) => Ranked, samples: Int): SCTest.Result =
     SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(samples)
       .withInitialSeed(Seed(20261019L)).withWorkers(1), Prop.forAllNoShrink(corpus)(agrees(ref)))
 
@@ -123,6 +144,7 @@ class KnnReferenceSpec extends AnyFunSuite {
       "NaN" -> anyComponent(_.isNaN),
       "±Inf" -> anyComponent(_.isInfinite),
       "-0.0" -> anyComponent(d => d == 0.0 && 1 / d < 0),
+      "zero vector" -> cs.exists(vecs(_).exists(_.forall(_ == 0.0))),
       "duplicate vectors" -> cs.exists(c => c.base.filter(_._2 != null)
         .groupBy(_._2.toSeq).exists(_._2.map(_._1).distinct.size > 1)),
       "null id or vector" -> cs.exists(_.base.exists(b => b._1 == null || b._2 == null)),
@@ -130,17 +152,24 @@ class KnnReferenceSpec extends AnyFunSuite {
       "int query ids" -> cs.exists(_.intQid))
   }
 
+  // the name predates the cosine and inner-product metrics it now covers
   test("Knn.exact equals the plain-Scala reference and the join composition") {
     checked.clear()
-    val res = run(reference(_), 20)
+    val res = run(reference(_, _), 20)
     assert(res.passed, res.status.toString)
     val missed = coverage(checked.toSeq).collect { case (name, false) => name }
     assert(missed.isEmpty, s"the corpora never had: ${missed.mkString(", ")}")
   }
 
   test("the reference property fails on a reference with a reversed id tie-break") {
-    val res = run(reference(_, idsDescending = true), 20)
-    // a mismatch, not an exception: the same seed passes the true reference
-    assert(res.status.isInstanceOf[SCTest.Failed], s"a defective reference went undetected: ${res.status}")
+    // the defect in one metric at a time: each metric's checks must catch it
+    for (bad <- metrics) {
+      val res = run((m, c) => reference(m, c, idsDescending = m == bad), 20)
+      // a mismatch, not an exception: the same seed passes the true reference
+      assert(res.status match {
+        case SCTest.Failed(_, labels) => labels.exists(_.startsWith(bad.name))
+        case _ => false
+      }, s"a defective ${bad.name} reference went undetected: ${res.status}")
+    }
   }
 }

@@ -22,6 +22,26 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(name: String): String =
     finalPlan(SparkEntry.queries(name)(spark, dir))
 
+  /** The physical plan of every SQL execution `body` starts, its eager
+    * and lazy checkpoints included, then `body`'s value. */
+  private def executedPlans[T](body: => T): (Seq[String], T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      (plans.toArray(Array.empty[String]).toSeq, out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q1_agg: one shuffle, map-side partial aggregation, pruned scan") {
     val p = planOf("q1_agg")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
@@ -66,6 +86,26 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("topk_by_dist"), p)
     // no joined row per (query, base) pair, and no sort of the cross product
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("SortMergeJoin"), p)
+  }
+
+  test("dense top-k scans run in the block kernel, never a broadcast nested-loop join") {
+    // The graph seeds and the raw cosine adjacency sit behind
+    // checkpoints, so every plan the query executes is read, not only its
+    // final one. The dir key is one no other suite memoizes artifacts
+    // under (same files), so those artifacts are built, and planned, here.
+    val cold = s"$dir/"
+    for (name <- Seq("knn_cosine", "knn_mips", "knn_sq", "knn_prefix_part", "knn_graph",
+        "knn_graph_cosine", "hubness_centered")) {
+      val (plans, last) = executedPlans(finalPlan(SparkEntry.queries(name)(spark, cold)))
+      val all = plans :+ last
+      assert(all.exists(_.contains("BlockTopK")), s"$name:\n${all.mkString("\n")}")
+      assert(!all.exists(_.contains("BroadcastNestedLoopJoin")), s"$name:\n${all.mkString("\n")}")
+      if (name == "knn_prefix_part") {
+        // the cheap pass still reads only (vec_id, prefix) from the layout
+        val schemas = "ReadSchema: struct<[^\n]*>".r.findAllIn(last).toSeq
+        assert(schemas.exists(r => r.contains("prefix") && !r.contains("embedding")), last)
+      }
+    }
   }
 
   test("knn_ivfpq: fused kernels in plan, compressed scan join is broadcast-hash") {

@@ -14,8 +14,10 @@ import graft.functions.{CosineSimilarity, DotProduct, L2SquaredDistance, MaxSimS
   *  - `GraftExtensions` via `spark.sql.extensions=graft.GraftExtensions`
   *    (or `.withExtensions(new GraftExtensions)`) — cluster-wide.
   *  - [[GraftFunctions.register]] on a live session — ad hoc.
-  * No SQL function builds a [[graft.exec.VectorTopK]]: its planner
-  * strategy is installed by `VectorTopK.candidates`, on its session.
+  * No SQL function builds a [[graft.exec.VectorTopK]] or a
+  * [[graft.exec.BeamSearch]]: their planner strategy is installed by the
+  * builders, `VectorTopK.candidates` and `BeamSearch.visited`, on their
+  * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

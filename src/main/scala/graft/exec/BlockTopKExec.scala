@@ -89,7 +89,7 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
   if (dim > 0) { var j = 0; while (j < n) { load(live(j).getArray(1), vecs, j * dim); j += 1 } }
   /** Cosine only: √Σ q² per query, summed as the fused kernel sums it. */
   private val qNorms =
-    if (metric == Metric.Cosine) Array.tabulate(n)(j => math.sqrt(sumSq(vecs, j * dim, dim))) else null
+    if (metric == Metric.Cosine) Array.tabulate(n)(j => QueryBlock.norm(vecs, j * dim, dim)) else null
   private val heaps = Array.fill(n)(new TopKHeap(k))
   private val row = new Array[Double](math.max(dim, 0))
   var pairs = 0L
@@ -110,12 +110,11 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
     }
 
   /** Scores the loaded row against every query, four queries interleaved,
-    * each in its own accumulator summing left to right from 0.0 — `l2sq`'s
-    * `d = q(i) - b(i)`, `acc += d * d`, or `dot`'s `acc += q(i) * b(i)` —
-    * so every distance is bit-identical to its Column kernel's. */
+    * each in its own accumulator summing as [[QueryBlock.accumulate]]
+    * does, so every distance is bit-identical to its Column kernel's. */
   private def scoreRow(id: Long): Unit = {
     val b = row; val v = vecs; val d = dim; val l2 = metric == Metric.L2
-    val bNorm = if (qNorms == null) 0.0 else math.sqrt(sumSq(b, 0, d))
+    val bNorm = if (qNorms == null) 0.0 else QueryBlock.norm(b, 0, d)
     var j = 0
     while (j + 4 <= n) {
       val o0 = j * d; val o1 = o0 + d; val o2 = o1 + d; val o3 = o2 + d
@@ -138,31 +137,13 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
       j += 4
     }
     while (j < n) {
-      val o = j * d
-      var a = 0.0
-      var i = 0
-      if (l2) while (i < d) { val e = v(o + i) - b(i); a += e * e; i += 1 }
-      else while (i < d) { a += v(o + i) * b(i); i += 1 }
-      heaps(j).insert(dist(a, j, bNorm), id)
+      heaps(j).insert(dist(QueryBlock.accumulate(l2, v, j * d, b, 0, d), j, bNorm), id)
       j += 1
     }
   }
 
-  /** Query `j`'s distance from its accumulator: the L2 sum, `-dot`, or the
-    * fused cosine kernel's `dot / (√Σ q² · √Σ b²)` negated. */
-  @inline private def dist(acc: Double, j: Int, bNorm: Double): Double = metric match {
-    case Metric.L2 => acc
-    case Metric.InnerProduct => -acc
-    case Metric.Cosine => -(acc / (qNorms(j) * bNorm))
-  }
-
-  /** Σ v(i)², i from `off` for `len` elements, left to right from 0.0. */
-  private def sumSq(v: Array[Double], off: Int, len: Int): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < len) { val x = v(off + i); acc += x * x; i += 1 }
-    acc
-  }
+  @inline private def dist(acc: Double, j: Int, bNorm: Double): Double =
+    QueryBlock.distance(metric, acc, if (qNorms == null) 0.0 else qNorms(j), bNorm)
 
   /** Every heap's rows as `(query_id, vec_id, dist)`. */
   def candidates(qidType: DataType): Iterator[InternalRow] =
@@ -171,4 +152,37 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
       val h = heaps(j)
       Iterator.range(0, h.size).map(s => new GenericInternalRow(Array[Any](qid, h.ids(s), h.dists(s))))
     }
+}
+
+/** One pair's arithmetic, shared by the block kernel's remainder queries
+  * and [[BeamSearchExec]]. */
+private[exec] object QueryBlock {
+  /** `l2sq`'s `e = q(i) - b(i)`, `acc += e * e` when `l2`, else `dot`'s
+    * `acc += q(i) * b(i)`, over `d` elements from `qo` and `bo`, left to
+    * right from 0.0. */
+  def accumulate(l2: Boolean, q: Array[Double], qo: Int, b: Array[Double], bo: Int, d: Int): Double = {
+    var a = 0.0
+    var i = 0
+    if (l2) while (i < d) { val e = q(qo + i) - b(bo + i); a += e * e; i += 1 }
+    else while (i < d) { a += q(qo + i) * b(bo + i); i += 1 }
+    a
+  }
+
+  /** A pair's distance from its accumulator: the L2 sum, `-dot`, or the
+    * fused cosine kernel's `dot / (√Σ q² · √Σ b²)` negated, with the two
+    * norms from [[norm]] (read only under cosine). */
+  @inline def distance(metric: Metric, acc: Double, qNorm: Double, bNorm: Double): Double = metric match {
+    case Metric.L2 => acc
+    case Metric.InnerProduct => -acc
+    case Metric.Cosine => -(acc / (qNorm * bNorm))
+  }
+
+  /** √Σ v(i)², i from `off` for `len` elements, summed left to right from
+    * 0.0 as the fused cosine kernel sums it. */
+  def norm(v: Array[Double], off: Int, len: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < len) { val x = v(off + i); acc += x * x; i += 1 }
+    math.sqrt(acc)
+  }
 }

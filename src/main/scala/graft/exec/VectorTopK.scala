@@ -1,7 +1,7 @@
 package graft.exec
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, ExpressionSet}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
@@ -15,11 +15,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * bounded heap ([[graft.operators.Knn.ranked]]) gives the global top-k:
   * the heap keeps the k smallest distinct (dist, id) pairs, and the k
   * smallest of a union are the k smallest of its parts' k smallest.
-  * Planned by [[VectorTopKStrategy]] as a [[BlockTopKExec]]. */
+  * Planned by [[VectorTopKStrategy]] as a [[BlockTopKExec]]. Every
+  * output `query_id` is a left row's and every `vec_id` a right row's, so
+  * the children's constraints on those two columns hold above it. */
 case class VectorTopK(k: Int, metric: Metric, dist: Attribute, left: LogicalPlan, right: LogicalPlan)
     extends BinaryNode {
   override def output: Seq[Attribute] = Seq(left.output.head, right.output.head, dist)
   override def producedAttributes: AttributeSet = AttributeSet(dist)
+  override protected lazy val validConstraints: ExpressionSet =
+    VectorTopK.constraintsOn(left, output(0)) ++ VectorTopK.constraintsOn(right, output(1))
   override protected def withNewChildrenInternal(l: LogicalPlan, r: LogicalPlan): VectorTopK =
     copy(left = l, right = r)
 }
@@ -42,28 +46,43 @@ object VectorTopK {
     * `base` under `metric`, as a lazy DataFrame in `base`'s session.
     * `query_id` keeps its type; `vec_id` is cast to long, as the heap
     * reads it; both embeddings may be arrays of float, double, int or
-    * long, promoted to double. The first use on a session installs
-    * [[VectorTopKStrategy]] on it. */
+    * long, promoted to double. */
   def candidates(queries: DataFrame, base: DataFrame, k: Int, metric: Metric): DataFrame = {
     require(k > 0, "k must be positive")
     val q = queries.select(col("query_id"), col("q_embedding"))
     val b = base.select(col("vec_id").cast(LongType).as("vec_id"), col("embedding"))
-    val session = base.sparkSession
+    dataFrame(base.sparkSession, VectorTopK(k, metric, distAttribute(),
+      q.queryExecution.analyzed, b.queryExecution.analyzed))
+  }
+
+  /** A fresh non-null `dist` column for a node's output. */
+  private[exec] def distAttribute(): Attribute = AttributeReference("dist", DoubleType, nullable = false)()
+
+  /** A DataFrame over a plan holding graft.exec's nodes; the first use on
+    * a session installs [[VectorTopKStrategy]] on it. */
+  private[exec] def dataFrame(session: SparkSession, plan: LogicalPlan): DataFrame = {
     val ex = session.experimental
     ex.synchronized {
       if (!ex.extraStrategies.contains(VectorTopKStrategy))
         ex.extraStrategies = VectorTopKStrategy +: ex.extraStrategies
     }
-    bridge.ofRows(session, VectorTopK(k, metric, AttributeReference("dist", DoubleType, nullable = false)(),
-      q.queryExecution.analyzed, b.queryExecution.analyzed))
+    bridge.ofRows(session, plan)
   }
+
+  /** `child`'s constraints that read only `key`, an output column taken
+    * unchanged from `child`'s rows. */
+  private[exec] def constraintsOn(child: LogicalPlan, key: Attribute): ExpressionSet =
+    ExpressionSet(child.constraints.filter(_.references.subsetOf(AttributeSet(key))))
 }
 
-/** Plans [[VectorTopK]] as a [[BlockTopKExec]]. */
+/** Plans graft.exec's logical nodes: [[VectorTopK]] as a [[BlockTopKExec]]
+  * and [[BeamSearch]] as a [[BeamSearchExec]]. */
 object VectorTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case VectorTopK(k, metric, dist, l, r) =>
       BlockTopKExec(k, metric, dist, planLater(l), planLater(r)) :: Nil
+    case b: BeamSearch =>
+      BeamSearchExec(b.params, b.dist, planLater(b.queries), planLater(b.base), planLater(b.adjacency)) :: Nil
     case _ => Nil
   }
 }

@@ -16,16 +16,6 @@ object GraftFunctions {
         bridge.expression(dist.cast("double")),
         k).toAggregateExpression())
 
-  /** Aggregate: the k nearest rows per group WITH their distances —
-    * array<struct<dist, id>> ascending by (dist, id). See
-    * [[TopKPairsByDistance]]. */
-  def topKPairsByDist(id: Column, dist: Column, k: Int): Column =
-    bridge.column(
-      TopKPairsByDistance(
-        bridge.expression(id.cast("long")),
-        bridge.expression(dist.cast("double")),
-        k).toAggregateExpression())
-
   /** Aggregate: per-group Munro–Paterson quantile summary → struct(n,
     * err_bound, ests[]) for the given quantiles (basis points). See
     * [[QuantileSketchAgg]]. */

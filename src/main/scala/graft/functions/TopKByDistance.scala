@@ -83,14 +83,12 @@ final class TopKHeap(val k: Int) extends Serializable {
     (0 until size).sortWith((a, b) => worse(dists(b), ids(b), dists(a), ids(a)))
 
   def sortedIds: Array[Long] = rankOrder.map(ids).toArray
-
-  def sortedPairs: Array[(Double, Long)] = rankOrder.map(i => (dists(i), ids(i))).toArray
 }
 
-/** The bounded-heap aggregate both top-k functions share: one
+/** `topk_by_dist(id, dist, k)` — aggregate returning the ids of the k
+  * smallest-distance rows per group, ascending by (dist, id): one
   * [[TopKHeap]] per group, partial heaps merged across partitions, the
-  * heap shipped as (k, size, (dist, id)*). The subclasses differ only in
-  * what `eval` returns.
+  * heap shipped as (k, size, (dist, id)*).
   *
   * This is the one genuinely warranted custom Catalyst piece (SURVEY §4.4):
   * the reference's ANN kernels keep bounded per-query heaps in C++
@@ -109,12 +107,15 @@ final class TopKHeap(val k: Int) extends Serializable {
   * pull-out), and a literal child would come back as a non-foldable
   * attribute reference mid-planning.
   */
-abstract class TopKHeapAggregate
+case class TopKByDistance(
+    id: Expression,
+    dist: Expression,
+    k: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKHeap]
   with BinaryLike[Expression] {
-  def id: Expression
-  def dist: Expression
-  def k: Int
+  require(k > 0, "k must be positive")
 
   override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
 
@@ -152,18 +153,6 @@ abstract class TopKHeapAggregate
   override def nullable: Boolean = false
   override def left: Expression = id
   override def right: Expression = dist
-}
-
-/** `topk_by_dist(id, dist, k)` — aggregate returning the ids of the k
-  * smallest-distance rows per group, ascending by (dist, id). */
-case class TopKByDistance(
-    id: Expression,
-    dist: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TopKHeapAggregate {
-  require(k > 0, "k must be positive")
 
   override def eval(buf: TopKHeap): Any = new GenericArrayData(buf.sortedIds)
 
@@ -177,42 +166,5 @@ case class TopKByDistance(
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKByDistance =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): TopKByDistance =
-    copy(inputAggBufferOffset = newOffset)
-}
-
-/** [[TopKByDistance]] that keeps the distances: returns
-  * `array<struct<dist: double, id: long>>` ascending by (dist, id) —
-  * the same heap, the same dedup and tie-break semantics. Lets a
-  * consumer CARRY a once-computed distance through later pruning stages
-  * (e.g. the graph beam search) instead of re-scoring every candidate
-  * at each stage (guide §1.2: don't compute things you throw away). */
-case class TopKPairsByDistance(
-    id: Expression,
-    dist: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TopKHeapAggregate {
-  require(k > 0, "k must be positive")
-
-  override def eval(buf: TopKHeap): Any =
-    new GenericArrayData(buf.sortedPairs.map { case (d, i) =>
-      InternalRow(d, i)
-    })
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("dist", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "topk_pairs_by_dist"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKPairsByDistance =
-    copy(id = newLeft, dist = newRight)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKPairsByDistance =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKPairsByDistance =
     copy(inputAggBufferOffset = newOffset)
 }

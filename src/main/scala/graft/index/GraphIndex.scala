@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.exec.{Metric, VectorTopK}
+import graft.exec.{BeamParams, BeamSearch, Metric}
 import graft.functions.VectorFunctions.l2sq
 import graft.operators.Knn
 
@@ -14,30 +14,29 @@ import graft.operators.Knn
   * `/root/reference/dynamic_script_hnswlib.py:46-51`; I6 NGT,
   * `/root/reference/dynamic_script_ngt.py:57-65`).
   *
-  * An HNSW walk is inherently sequential — a greedy beam through a pointer
-  * structure — which distributes poorly. The batch re-expression keeps the
-  * two ideas that carry the recall: (1) a precomputed NEIGHBORHOOD GRAPH
-  * encodes most of the metric structure, and (2) search = cheap ENTRY
-  * POINTS + graph EXPANSION + exact rerank. The sequential beam becomes one
-  * bounded breadth-first expansion, so every stage is a hash join:
+  * Two ideas carry the recall of an HNSW walk: (1) a precomputed
+  * NEIGHBORHOOD GRAPH encodes most of the metric structure, and (2)
+  * search = cheap ENTRY POINTS + graph EXPANSION + exact rerank.
   *
   *   - build: the degree-`d` k-NN graph of the base. Here exact via the
   *     bounded-heap brute-force pass (fixture scale); at 100 TB the same
   *     adjacency schema is built approximately per IVF cell (equi-join
   *     within cell — candidates are co-partitioned) or by NN-Descent
   *     rounds, both plain joins.
-  *   - search: score queries against a deterministic entry-point subsample
-  *     (`vec_id % seedMod == 0` — the coarse "upper layer"; its size is
-  *     |base|/seedMod, so seedMod tunes the brute-force fraction), keep
-  *     `seedK` seeds per query, expand `hops` rounds through the adjacency
-  *     (hash join on node id, fan-out ≤ degree per candidate), dedupe, and
-  *     exact-rerank the candidate set with the bounded-heap aggregate.
+  *   - search: one [[graft.exec.BeamSearch]] operator. The query batch
+  *     streams; the base and the adjacency are broadcast, and each task
+  *     walks the packed graph in memory for its queries: score the
+  *     deterministic entry points (`vec_id % seedMod == 0` — the coarse
+  *     "upper layer"; its size is |base|/seedMod, so seedMod tunes the
+  *     brute-force fraction), keep `seedK` seeds, then `hops` rounds
+  *     each keep the best `beam` of the beam and its expansion. The
+  *     visited rows, with their distances, feed the exact final rank.
   *
-  * Shuffle shape at scale: the seed pass is a broadcast-queries scan over
-  * 1/seedMod of the base; each hop is a hash join keyed on node id against
-  * an adjacency that is |base|·degree rows (partitioned by node id, so
-  * expansion co-locates); the rerank touches |queries|·|candidates| rows.
-  * No stage depends on |base|² after the one-time build.
+  * Memory contract: a search holds the whole base and adjacency in each
+  * executor, as the reference backends hold their HNSW index resident.
+  * The search costs two broadcasts and one pass over the queries, with
+  * per-query work O(seedK·|base|/seedMod + hops·beam·degree); no stage
+  * depends on |base|² after the one-time build.
   *
   * Everything is deterministic (ties broken by id), so adjacency, seeding,
   * expansion, and rerank all replay in the DuckDB oracle.
@@ -155,7 +154,7 @@ object GraphIndex {
     *   3. every touched node re-prunes to the best `degree` by exact
     *      distance over the union of old and new edges.
     *
-    * All three steps are hash joins + the bounded-heap aggregate; the
+    * Steps 2 and 3 are hash joins + the bounded-heap aggregate; the
     * whole update touches O(|new|·degree) adjacency rows, not the graph.
     * Output: the augmented `(node_id, neighbor_id, rank)` adjacency over
     * `preBase ∪ newNodes`, directly usable by [[search]]. */
@@ -164,9 +163,9 @@ object GraphIndex {
       beam: Int = 32): DataFrame = {
     val asQueries = newNodes.select(
       col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    // checkpointed: the new-edge plan embeds a full beam search; without
-    // truncation every downstream search over the augmented adjacency
-    // re-analyzes (and re-plans) that subtree ~3^hops times
+    // checkpointed: the augmented edge list reads the new edges twice
+    // (forward and reverse), and every consumer re-reads that list, so
+    // without it each read would run the beam search again
     val newEdges = search(asQueries, preBase, adjacency, degree,
         seedMod, seedK, hops, beam)
       .select(col("query_id").as("node_id"), col("neighbor_id"))
@@ -180,7 +179,7 @@ object GraphIndex {
     // shallow (the build's per-round adjacency, the newEdges above), so a
     // consumer re-reading the augmented adjacency recomputes rankTop —
     // one keyed shuffle of the edge list + the bounded-heap aggregate per
-    // re-read, NOT free (a beam search re-reads it per hop). The A/B
+    // re-read, NOT free (each beam search broadcasts it once). The A/B
     // still favors recompute over materializing the full augmented edge
     // list: same-JVM with-vs-without measured 24.9 s vs 27.1 s cold for
     // the whole upsert+search at sf0.1, and 49.8 s vs 86.1 s at the 10×
@@ -218,17 +217,17 @@ object GraphIndex {
   /** Batched beam search: entry-point seeding, then `hops` rounds of
     * expand-score-prune, exact rerank over everything visited.
     *
-    * The HNSW greedy walk, re-expressed so every round is a hash join
-    * over the WHOLE query batch: the per-query beam (`beam` best
-    * candidates so far) expands through the adjacency (join on node id,
-    * fan-out ≤ degree), the expansion is exactly scored, and the beam is
-    * re-pruned with the bounded-heap aggregate. All visited candidates
-    * feed the final top-k (HNSW's visited-set semantics). Per-query work
-    * is O(seedK·|base|/seedMod + hops·beam·degree) — independent of
-    * |base| once seeded, which is what makes the graph index the
-    * 100 TB path. With (seedK=8, beam=32, hops=3) on the fixtures this
-    * clears the BASELINE graph ladder (recall@10 ≈ 0.98).
-    * Output: [[Knn]]'s ranked rows keyed by `query_id`. */
+    * The HNSW greedy walk per query, run for a whole batch in one
+    * [[graft.exec.BeamSearchExec]] pass: the per-query beam (`beam` best
+    * candidates so far) expands through the adjacency (fan-out ≤ degree),
+    * the expansion is exactly scored, and the beam is re-pruned with the
+    * (dist, id) heap. All visited candidates feed the final top-k
+    * (HNSW's visited-set semantics). A neighbor id with no base row is
+    * skipped, and every row of a duplicated base id is scored. With
+    * (seedK=8, beam=32, hops=3) on the fixtures this clears the BASELINE
+    * graph ladder (recall@10 ≈ 0.98).
+    * Output: [[Knn]]'s ranked rows keyed by `query_id`; query rows that
+    * share a `query_id` are walked apart and ranked together. */
   def search(queries: DataFrame, base: DataFrame, adjacency: DataFrame,
       k: Int, seedMod: Int = 16, seedK: Int = 8, hops: Int = 3,
       beam: Int = 32): DataFrame =
@@ -262,102 +261,18 @@ object GraphIndex {
       hops: Int = 3, beam: Int = 32): DataFrame =
     searchImpl(queries, base, adjacency, Some(allowed), k, seedMod, seedK, hops, beam)
 
-  /** The expansion edge list with the neighbor payload attached — ONE
-    * base join per search instead of one per hop (see the adjE comment
-    * in [[searchImpl]]). */
-  private[index] def adjWithPayload(adjacency: DataFrame, base: DataFrame): DataFrame =
-    adjacency.select(col("node_id"), col("neighbor_id"))
-      .join(base.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        "neighbor_id")
-
-  /** One hop: broadcast the beam, hash-probe the payload-carrying
-    * adjacency, score the expansion against the broadcast queries —
-    * plan-pinned in PlanSpec (BroadcastHashJoin, no SortMergeJoin, no
-    * shuffle exchange). */
-  private[index] def expandScore(beamDf: DataFrame, adjE: DataFrame,
-      queries: DataFrame, cosine: Boolean): DataFrame =
-    broadcast(beamDf.select(col("query_id"), col("vec_id")).alias("bm"))
-      .join(adjE.alias("ad"), col("bm.vec_id") === col("ad.node_id"))
-      .select(col("bm.query_id").as("query_id"),
-        col("ad.neighbor_id").as("vec_id"), col("ad.embedding").as("embedding"))
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (if (cosine)
-          -graft.functions.VectorFunctions.cosine(col("q_embedding"), col("embedding"))
-        else l2sq(col("q_embedding"), col("embedding"))).as("dist"))
-
+  /** The visited rows of [[BeamSearch]] over the broadcast graph, the
+    * `allowed` restriction, then the final rank over the carried
+    * distances: no row is scored twice, and there is no re-scoring join. */
   private def searchImpl(queries: DataFrame, base: DataFrame, adjacency: DataFrame,
       allowed: Option[DataFrame], k: Int, seedMod: Int, seedK: Int, hops: Int,
       beam: Int, cosine: Boolean = false): DataFrame = {
-    val entry = base.filter(col("vec_id") % seedMod === 0)
-    def topPairs(scored: DataFrame, m: Int): DataFrame =
-      scored.groupBy(col("query_id"))
-        .agg(graft.functions.GraftFunctions.topKPairsByDist(
-          col("vec_id"), col("dist"), m).as("nn"))
-        .select(col("query_id"), explode(col("nn")).as("p"))
-        .select(col("query_id"), col("p.id").as("vec_id"), col("p.dist").as("dist"))
-    // Distances are computed ONCE per (query, candidate) and CARRIED
-    // (r13, the pairs heap): the r12 shape kept id-only beams, so every
-    // hop re-scored the whole beam alongside the expansion and the final
-    // rerank re-joined base + queries to score the ENTIRE visited set
-    // again — ~2× the kernel work and two more broadcast-join stages per
-    // search (guide §1.2: don't compute things you throw away). Same
-    // kernel, same doubles, same (dist, id) heap order throughout, so
-    // results are bit-identical.
-    val seeds = topPairs(VectorTopK.candidates(queries, Knn.spread(entry), seedK,
-      if (cosine) Metric.Cosine else Metric.L2), seedK).localCheckpoint(false)
-    // Adjacency WITH the neighbor payload, built once per search (r13,
-    // verdict item 3 "carry the adjacency with payload"): the r12 shape
-    // joined each hop's expansion against `base` — a fresh base
-    // broadcast + hash join per hop-materialization, 3 base scans per
-    // search (plus the rerank's 4th). Pre-joining neighbor embeddings
-    // into the expansion edges makes each hop ONE broadcast hash probe
-    // of this cached edge list. Trade-off at 100 TB: one degree×|base|
-    // materialization per query batch versus `hops` full base scans —
-    // both linear; storing the payload in the adjacency ARTIFACT itself
-    // (amortized across batches) is the build-round follow-up the r12
-    // verdict scoped. Deleted/missing neighbors drop at this join
-    // exactly as they dropped at the per-hop base join before.
-    val adjE = adjWithPayload(adjacency, base).localCheckpoint(false)
-    // No distinct() anywhere: the bounded-heap aggregate de-duplicates by
-    // (dist, id), so duplicate candidates from multi-path expansion are
-    // absorbed where the data is already being shuffled anyway.
-    //
-    // localCheckpoint per hop is load-bearing for PLAN size, not data:
-    // each hop references the previous beam's subplan ~3× (expand, the
-    // union, the visited accumulator), so an unchecked fold builds a
-    // 3^hops-node logical plan. LAZY (eager=false, r12): materialization
-    // folds into the next hop's job, and the FINAL hop's beam (discarded
-    // by the fold) is never materialized. scoredExp is checkpointed too
-    // (r13): `visited` becomes a union of four LEAVES, so the final
-    // action aggregates cached rows instead of re-executing every hop's
-    // expansion join a second time.
-    //
-    // The beam side of the expansion join carries an explicit broadcast
-    // (r12): beam and adjacency are LogicalRDD leaves with no size stats,
-    // so the planner fell back to a SortMergeJoin exchanging BOTH sides
-    // every hop; the beam is O(|queries|·beam) — the query side, small by
-    // the same contract that broadcasts `queries` — so broadcasting it
-    // makes each hop a shuffle-free hash probe of the adjacency (§3.1).
-    val (_, visited) = (1 to hops).foldLeft((seeds, seeds: DataFrame)) {
-      case ((beamDf, vis), _) =>
-        // constraint-free lazy truncation (bridge.truncateLazy): the
-        // scored expansion is consumed TWICE (next beam + visited), so
-        // without truncation the final action re-executes every hop's
-        // expansion join a second time. Plain localCheckpoint(false) is
-        // NOT usable here — its captured originConstraints reference the
-        // using-join-pruned query_id and crash Union.rewriteConstraints
-        // under foreachBatch (stream_graph_search).
-        val scoredExp = org.apache.spark.sql.graft.bridge.truncateLazy(
-          expandScore(beamDf, adjE, queries, cosine))
-        (topPairs(beamDf.unionByName(scoredExp), beam).localCheckpoint(false),
-          vis.unionByName(scoredExp))
-    }
+    val visited = BeamSearch.visited(queries, base, adjacency,
+      BeamParams(if (cosine) Metric.Cosine else Metric.L2, seedMod, seedK, hops, beam))
     val rerankSet = allowed match {
       case Some(ok) => visited.join(ok.select(col("vec_id")), Seq("vec_id"), "left_semi")
       case None => visited
     }
-    // Final top-k over the carried distances — no re-scoring join.
     Knn.ranked(rerankSet, "query_id", k)
   }
 }

@@ -186,18 +186,18 @@ object GraphQueries {
     * [[graft.index.GraphIndex]]). Cached per dir: built once, searched
     * repeatedly — the reference's build → search-loop lifecycle. */
   private[queries] def graphAdj(spark: SparkSession, dir: String): DataFrame =
-    // localCheckpoint, not cache: consumers reference the adjacency
-    // subplan many times per beam hop — a LogicalRDD leaf keeps their
-    // analyzed plans small where a cached plan tree would not
+    // localCheckpoint, not cache: a LogicalRDD leaf keeps the analyzed
+    // plans of the many queries built over the adjacency small, where a
+    // cached plan tree would carry the whole build into each of them
     cachedArtifact(graphAdjCache, dir)(
       graft.index.GraphIndex.buildExact(Tables.embeddingBase(spark, dir), GraphDegree)
         .localCheckpoint())
 
   /** HNSW-class graph search: entry-point seeding (1/16 deterministic
-    * subsample scored exactly, 8 seeds kept), then 3 batched
-    * expand-score-prune beam rounds (beam 32) through the degree-16
-    * adjacency, exact rerank over everything visited. Every stage is a
-    * hash join — no sequential walk. */
+    * subsample scored exactly, 8 seeds kept), then 3 expand-score-prune
+    * beam rounds (beam 32) through the degree-16 adjacency, exact rerank
+    * over everything visited — one beam operator over the broadcast
+    * graph, each query walked in memory ([[graft.index.GraphIndex]]). */
   private val graphSearchCache = namedArtifactCache[String]("graph_search")
 
   private def knnGraphSearch(spark: SparkSession, dir: String): DataFrame =

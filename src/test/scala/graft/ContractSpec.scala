@@ -401,15 +401,13 @@ class ContractSpec extends AnyFunSuite {
     * may also hold the listed patterns, for shapes that are not a ranked
     * kNN output: Bitext's margin mining keeps id-only neighborhoods keyed
     * by either corpus side with the distance computed inside the
-    * aggregate, InvertedIndex samples a posting head with the doc id as
-    * its own rank, and GraphIndex's beam carries (dist, id) pairs between
-    * hops. */
+    * aggregate, and InvertedIndex samples a posting head with the doc id
+    * as its own rank. */
   private val rankedTailPatterns = Seq("posexplode(col(\"nn\"))", "topKByDist(", "topKPairsByDist(")
   private val rankedTailHomes = Set("Knn.scala", "GraftFunctions.scala")
   private val rankedTailExceptions = Map(
     "Bitext.scala" -> Set("topKByDist("),
-    "InvertedIndex.scala" -> Set("topKByDist("),
-    "GraphIndex.scala" -> Set("topKPairsByDist("))
+    "InvertedIndex.scala" -> Set("topKByDist("))
 
   /** Lines of `src` (from file `fileName`) that hold a ranked-tail
     * pattern the file may not hold. */
@@ -442,7 +440,7 @@ class ContractSpec extends AnyFunSuite {
       ("Foo.scala", "val t = GraftFunctions.topKPairsByDist(\n  col(\"id\"), col(\"d\"), 3)\n" +
         "val u = GraftFunctions.topKByDist(col(\"id\"), col(\"d\"), 3)") -> 2,
       ("GraphIndex.scala", "topKByDist(col(\"vec_id\"), col(\"dist\"), k)") -> 1,
-      ("GraphIndex.scala", "graft.functions.GraftFunctions.topKPairsByDist(") -> 0,
+      ("GraphIndex.scala", "graft.functions.GraftFunctions.topKPairsByDist(") -> 1,
       ("Knn.scala", ".agg(topKByDist(col(id), col(\"dist\"), k).as(\"nn\")) posexplode(col(\"nn\"))") -> 0,
       ("Foo.scala", "Knn.ranked(scored, \"query_id\", k)") -> 0)
     seeded.foreach { case ((file, src), expected) =>

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.index.GraphIndex
 import graft.operators.{Knn, Recall}
 import graft.text.{Dedup, TextFunctions}
 
@@ -65,12 +67,19 @@ class EdgeCaseSpec extends AnyFunSuite {
   private def causes(t: Throwable): Seq[Throwable] =
     if (t == null) Nil else t +: causes(t.getCause)
 
+  /** A two-node graph over `base`'s ids 1 and 2, every id a seed. */
+  private def graphSearch(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
+    GraphIndex.search(queries, base, Seq((1L, 2L, 1), (2L, 1L, 1)).toDF("node_id", "neighbor_id", "rank"),
+      k, seedMod = 1)
+
+  // the graph search runs in the beam operator, which scores as the kernel does
   test("kNN through the block kernel raises on mismatched dimensions") {
     val base = Seq((1L, Array(1f, 2f, 3f)), (2L, Array(0f, 0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(1f, 2f))).toDF("query_id", "q_embedding")
-    for (search <- Seq(Knn.exact _, Knn.cosineTopK _, Knn.mipsTopK _)) {
+    for ((node, search) <- Seq("BlockTopK" -> Knn.exact _, "BlockTopK" -> Knn.cosineTopK _,
+        "BlockTopK" -> Knn.mipsTopK _, "BeamSearch" -> graphSearch _)) {
       val knn = search(queries, base, 1)
-      assert(knn.queryExecution.executedPlan.toString.contains("BlockTopK"))
+      assert(knn.queryExecution.executedPlan.toString.contains(node))
       val e = intercept[Exception](knn.collect())
       assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")))
     }
@@ -95,10 +104,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     try {
       base.count()
       val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")
-      for ((name, search) <- Seq("exact" -> Knn.exact _, "cosineTopK" -> Knn.cosineTopK _,
-          "mipsTopK" -> Knn.mipsTopK _)) {
+      for ((name, search) <- Seq("Knn.exact" -> Knn.exact _, "Knn.cosineTopK" -> Knn.cosineTopK _,
+          "Knn.mipsTopK" -> Knn.mipsTopK _, "GraphIndex.search" -> graphSearch _)) {
         val jobs = SparkTestSession.jobsStarted(search(queries, base.filter(col("vec_id") > 0), 1))
-        assert(jobs == 0, s"Knn.$name launched $jobs job(s) at construction time")
+        assert(jobs == 0, s"$name launched $jobs job(s) at construction time")
       }
     } finally base.unpersist(blocking = true)
   }

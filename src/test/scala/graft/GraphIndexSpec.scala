@@ -160,4 +160,13 @@ class GraphIndexSpec extends AnyFunSuite {
     val wide = rec(32, 3)
     assert(wide >= narrow, s"wide $wide < narrow $narrow")
   }
+
+  test("collecting a graph search starts at most 4 Spark jobs") {
+    // two broadcasts (base and adjacency), then the final rank's map and
+    // result stages; the cached inputs are materialised first
+    queries.count(); base.count(); exactAdj.count()
+    val search = GraphIndex.search(queries, base, exactAdj, k = 10)
+    val jobs = SparkTestSession.jobsStarted(search.collect())
+    assert(jobs <= 4, s"a graph search ran $jobs jobs")
+  }
 }

@@ -332,25 +332,40 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"), p)
   }
 
-  test("graph beam hop: broadcast hash probes, no sort-merge join, no shuffle (r12/r13 pin)") {
-    // the pre-r12 hop was a SortMergeJoin exchanging BOTH sides per hop;
-    // r12 broadcast the beam, r13 carries the payload on the adjacency
-    // and the distance on the beam. The hop subplan lives behind
-    // per-hop localCheckpoints (invisible in the final query's plan), so
-    // pin the factored hop builder directly.
-    import org.apache.spark.sql.functions.{col, lit}
-    val base = graft.sources.Tables.embeddingBase(spark, dir)
-    val queries = graft.sources.Tables.embeddingQueries(spark, dir)
-    // ids must overlap on BOTH hop joins or AQE folds the empty result
-    // to an EmptyRelation and erases the join operators being pinned
-    val adjacency = base.select(col("vec_id").as("node_id"),
-      col("vec_id").as("neighbor_id"), lit(1).as("rank"))
-    val beam = queries.select(col("query_id"))
-      .crossJoin(base.select(col("vec_id")).filter(col("vec_id") % 64 === 0))
-      .withColumn("dist", lit(0.0)).localCheckpoint()
-    val p = finalPlan(graft.index.PqTestAccess.graphHop(beam, adjacency, base, queries))
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("Exchange hashpartitioning"), p)
+  test("graph search runs one beam operator, no sort-merge or nested-loop join") {
+    // A dir key no other test uses (same files), so each query builds its
+    // adjacency and runs its search here; every SQL execution is read.
+    val cold = s"$dir/./"
+    for (name <- Seq("knn_graph", "knn_graph_cosine", "knn_graph_filtered")) {
+      val (plans, last) = executedPlans(finalPlan(SparkEntry.queries(name)(spark, cold)))
+      val all = plans :+ last
+      // the query's own plan runs the search (its cached plan included)
+      assert(last.contains("BeamSearch"), s"$name:\n$last")
+      assert(!all.exists(p => p.contains("SortMergeJoin") || p.contains("BroadcastNestedLoopJoin")),
+        s"$name:\n${all.mkString("\n")}")
+    }
+  }
+
+  test("kernel nodes carry their inputs' constraints on query_id and vec_id") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    import graft.exec.{BeamParams, BeamSearch, Metric, VectorTopK}
+    // Filtered inputs built here, so no cache another suite holds replaces
+    // them with a leaf that carries no constraints. Their filters must
+    // reach the node's output columns, so nothing above re-infers and
+    // re-applies them.
+    def vectors(id: String, emb: String) = spark.range(0, 60)
+      .select(col("id").as(id), array(col("id").cast("float"), lit(1f)).as(emb))
+    val base = vectors("vec_id", "embedding").filter(col("vec_id") % 20 =!= 0)
+    val queries = vectors("query_id", "q_embedding").filter(col("query_id") % 20 === 0)
+    val adjacency = base.select(col("vec_id").as("node_id"), col("vec_id").as("neighbor_id"))
+    for (df <- Seq(VectorTopK.candidates(queries, base, 3, Metric.L2),
+        BeamSearch.visited(queries, base, adjacency, BeamParams(Metric.L2, 16, 8, 1, 4)))) {
+      val node = df.queryExecution.optimizedPlan.collectFirst {
+        case n @ (_: VectorTopK | _: BeamSearch) => n
+      }.get
+      val cs = node.constraints.toSeq.map(_.sql)
+      assert(cs.exists(c => c.contains("vec_id") && c.contains("20")), s"${node.nodeName}: $cs")
+      assert(cs.exists(c => c.contains("query_id") && c.contains("20")), s"${node.nodeName}: $cs")
+    }
   }
 }

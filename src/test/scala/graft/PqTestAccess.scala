@@ -12,13 +12,4 @@ object PqTestAccess {
   def assign(rows: org.apache.spark.sql.DataFrame,
       cb: Array[Array[Array[Long]]]): org.apache.spark.sql.DataFrame =
     PqFlat.assign(rows, cb)
-
-  /** [[GraphIndex.adjWithPayload]] + [[GraphIndex.expandScore]] — exposed
-    * so PlanSpec can pin the beam hop's join strategy (r13). */
-  def graphHop(beamDf: org.apache.spark.sql.DataFrame,
-      adjacency: org.apache.spark.sql.DataFrame,
-      base: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    GraphIndex.expandScore(beamDf, GraphIndex.adjWithPayload(adjacency, base),
-      queries, cosine = false)
 }

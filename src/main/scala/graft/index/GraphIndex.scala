@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exec.{BeamParams, BeamSearch, Metric}
-import graft.functions.VectorFunctions.l2sq
+import graft.functions.VectorFunctions.{cosine, dot, l2sq}
 import graft.operators.Knn
 
 /** Graph-based ANN — the Spark-native answer to the reference's HNSW-class
@@ -18,11 +18,14 @@ import graft.operators.Knn
   * NEIGHBORHOOD GRAPH encodes most of the metric structure, and (2)
   * search = cheap ENTRY POINTS + graph EXPANSION + exact rerank.
   *
-  *   - build: the degree-`d` k-NN graph of the base. Here exact via the
-  *     bounded-heap brute-force pass (fixture scale); at 100 TB the same
-  *     adjacency schema is built approximately per IVF cell (equi-join
-  *     within cell — candidates are co-partitioned) or by NN-Descent
-  *     rounds, both plain joins.
+  *   - build: the degree-`d` k-NN graph of the base under a
+  *     [[graft.exec.Metric]]. Every adjacency in the engine is built
+  *     here: exact via the block kernel's top-k ([[buildExact]], fixture
+  *     scale), or at 100 TB approximately over cell co-membership
+  *     ([[buildCellBlocked]]: an equi-join within cell, candidates
+  *     co-partitioned) or by NN-Descent rounds ([[buildNNDescent]]),
+  *     both plain joins. A cosine graph is the inner-product build over
+  *     unit vectors.
   *   - search: one [[graft.exec.BeamSearch]] operator. The query batch
   *     streams; the base and the adjacency are broadcast, and each task
   *     walks the packed graph in memory for its queries: score the
@@ -43,16 +46,17 @@ import graft.operators.Knn
   */
 object GraphIndex {
 
-  /** Exact degree-`degree` k-NN graph over the base: [[Knn]]'s ranked
-    * rows keyed by `node_id`, self excluded. Computed as top-(degree+1)
-    * through [[graft.operators.Knn.exact]] then dropping the self match —
-    * at most one self row can appear, so the surviving top-`degree` rows
-    * and their order are exactly the top-`degree` among non-self rows. */
-  def buildExact(base: DataFrame, degree: Int): DataFrame = {
-    val asQueries = base.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+  /** Exact degree-`degree` k-NN graph over the base under `metric`:
+    * [[Knn]]'s ranked rows keyed by `node_id`, self excluded. Computed as
+    * top-(degree+1) through [[Knn.topK]], then the self match is dropped
+    * and the rest re-ranked: at most one self row can appear, so the
+    * surviving rows are the top-`degree` non-self rows wherever the self
+    * row ranked (under an inner product it need not rank first). A base
+    * already spread below a projection keeps its one shuffle
+    * ([[Knn.spread]]). */
+  def buildExact(base: DataFrame, degree: Int, metric: Metric = Metric.L2): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    Knn.exact(asQueries, base, degree + 1)
+    Knn.topK(asQueries(base), base, degree + 1, metric)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("g_rank", row_number().over(w))
       .filter(col("g_rank") <= degree)
@@ -60,16 +64,9 @@ object GraphIndex {
         col("g_rank").cast("int").as("rank"))
   }
 
-  /** Exact-score edge candidates `(node_id, neighbor_id)` against
-    * `base`'s embeddings and keep the best `degree` per node
-    * ([[Knn.ranked]]; a duplicate candidate edge counts once). */
-  private def rankTop(base: DataFrame, cand: DataFrame, degree: Int): DataFrame = {
-    val nodeEmb = base.select(col("vec_id").as("node_id"), col("embedding").as("n_emb"))
-    val nbrEmb = base.select(col("vec_id").as("neighbor_id"), col("embedding").as("b_emb"))
-    Knn.ranked(cand.join(nbrEmb, "neighbor_id").join(nodeEmb, "node_id")
-      .select(col("node_id"), col("neighbor_id"),
-        l2sq(col("n_emb"), col("b_emb")).as("dist")), "node_id", degree, id = "neighbor_id")
-  }
+  /** A base `(vec_id, embedding)` as [[Knn]]'s query side. */
+  private def asQueries(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
 
   /** NN-Descent approximate k-NN graph build (Dong et al., WWW 2011) —
     * the 100 TB scale path for [[buildExact]], whose all-pairs pass is
@@ -95,8 +92,8 @@ object GraphIndex {
     *     or the ids themselves when they're dense).
     *   - round: candidates = undirected 1-hop ∪ undirected 2-hop
     *     (neighbors and reverse neighbors, then one join through the
-    *     edge list), dedup, exact-score, keep top-`degree` per node via
-    *     the bounded-heap aggregate. `localCheckpoint` between rounds
+    *     edge list), dedup, then [[Knn.rerank]] exact-scores them and
+    *     keeps the top-`degree` per node. `localCheckpoint` between rounds
     *     truncates the iterative lineage.
     *
     * Deterministic throughout (ties by id), so the whole build — init,
@@ -135,7 +132,8 @@ object GraphIndex {
       val cand = und.union(twoHop)
         .filter(col("node_id") =!= col("neighbor_id"))
         .distinct()
-      rankTop(base, cand, degree).localCheckpoint()
+      Knn.rerank(cand.toDF("query_id", "vec_id"), base, asQueries(base), degree)
+        .withColumnRenamed("query_id", "node_id").localCheckpoint()
     }
   }
 
@@ -154,19 +152,18 @@ object GraphIndex {
     *   3. every touched node re-prunes to the best `degree` by exact
     *      distance over the union of old and new edges.
     *
-    * Steps 2 and 3 are hash joins + the bounded-heap aggregate; the
+    * Steps 2 and 3 are hash joins + the bounded-heap aggregate (step 3
+    * is [[Knn.rerank]] of the edge list, with the nodes as queries); the
     * whole update touches O(|new|·degree) adjacency rows, not the graph.
     * Output: the augmented `(node_id, neighbor_id, rank)` adjacency over
     * `preBase ∪ newNodes`, directly usable by [[search]]. */
   def insert(preBase: DataFrame, adjacency: DataFrame, newNodes: DataFrame,
       degree: Int, seedMod: Int = 16, seedK: Int = 8, hops: Int = 3,
       beam: Int = 32): DataFrame = {
-    val asQueries = newNodes.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
     // checkpointed: the augmented edge list reads the new edges twice
     // (forward and reverse), and every consumer re-reads that list, so
     // without it each read would run the beam search again
-    val newEdges = search(asQueries, preBase, adjacency, degree,
+    val newEdges = search(asQueries(newNodes), preBase, adjacency, degree,
         seedMod, seedK, hops, beam)
       .select(col("query_id").as("node_id"), col("neighbor_id"))
       .localCheckpoint()
@@ -177,7 +174,7 @@ object GraphIndex {
         col("node_id").as("neighbor_id")))
     // deliberately NOT checkpointed: both inputs are already checkpoint-
     // shallow (the build's per-round adjacency, the newEdges above), so a
-    // consumer re-reading the augmented adjacency recomputes rankTop —
+    // consumer re-reading the augmented adjacency recomputes Knn.rerank —
     // one keyed shuffle of the edge list + the bounded-heap aggregate per
     // re-read, NOT free (each beam search broadcasts it once). The A/B
     // still favors recompute over materializing the full augmented edge
@@ -186,31 +183,46 @@ object GraphIndex {
     // probe — the materialization is the term that grows with the
     // corpus. A future consumer that re-reads the adjacency MANY more
     // times than a 3-hop search should checkpoint at its own call site.
-    rankTop(fullBase, allEdges, degree)
+    Knn.rerank(allEdges.toDF("query_id", "vec_id"), fullBase, asQueries(fullBase), degree)
+      .withColumnRenamed("query_id", "node_id")
   }
 
-  /** Cell-blocked approximate build — the 100 TB build path the exact
-    * all-pairs pass cannot take: candidate pairs come from coarse-cell
-    * CO-MEMBERSHIP (each node is assigned to its `nassign` nearest IVF
-    * cells — multi-assignment captures border edges a single-cell
-    * blocking would miss), so pair generation is a co-partitioned
-    * equi-join on cell id, |cell|² per cell instead of |base|². The
-    * bounded heap ranks each node's candidates; a pair sharing both
-    * cells is absorbed by the heap's (dist, id) dedup. Edge recall vs
-    * the exact graph is a measured query (`graph_cellblocked_quality`),
-    * not a guess. */
+  /** Cell-blocked approximate L2 build — the 100 TB build path the exact
+    * all-pairs pass cannot take: each node is assigned to its `nassign`
+    * nearest cells of the IVF coarse model `centroids` (multi-assignment
+    * captures border edges a single-cell blocking would miss), then the
+    * co-membership build below ranks by squared L2. Edge recall vs the
+    * exact graph is a measured query (`graph_cellblocked_quality`), not
+    * a guess. */
   def buildCellBlocked(base: DataFrame, centroids: Array[Array[Long]],
-      degree: Int, nassign: Int = 2): DataFrame = {
-    val qq = base.select(col("vec_id"), IvfFlat.quantize(col("embedding")).as("qv"))
-    val cells = IvfFlat.probeCells(qq, centroids, nassign)
-      .select(col("query_id").as("vec_id"), col("cid"))
-    val nodes = cells.join(base, Seq("vec_id")).localCheckpoint()
+      degree: Int, nassign: Int = 2): DataFrame =
+    buildCellBlocked(base,
+      IvfFlat.probes(base, centroids, nassign).select(col("query_id").as("vec_id"), col("cid")),
+      degree, Metric.L2)
+
+  /** Cell-blocked build over any blocking: candidate pairs are the
+    * CO-MEMBERS of each node's cells in `cells` `(vec_id, cid)`, so pair
+    * generation is a co-partitioned equi-join on cell id, |cell|² per
+    * cell instead of |base|². Each pair is scored in the Column kernel
+    * the [[Metric]] names (`l2sq`, `-dot` or `-cosine`), inside the
+    * projection so the aggregate's input row carries `(node_id, cand_id,
+    * dist)`, not both embeddings (measured 2×, OPTIMIZATION_r12.md §1),
+    * and the bounded heap keeps the best `degree` per node; a pair
+    * sharing several cells is absorbed by the heap's (dist, id) dedup.
+    * With every node in every cell this is [[buildExact]]'s graph. */
+  def buildCellBlocked(vectors: DataFrame, cells: DataFrame, degree: Int,
+      metric: Metric): DataFrame = {
+    val nodes = cells.join(vectors, Seq("vec_id")).localCheckpoint()
+    val (a, b) = (col("na.embedding"), col("nb.embedding"))
+    val dist = metric match {
+      case Metric.L2 => l2sq(a, b)
+      case Metric.InnerProduct => -dot(a, b)
+      case Metric.Cosine => -cosine(a, b)
+    }
     val pairs = nodes.alias("na")
       .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
       .filter(col("na.vec_id") =!= col("nb.vec_id"))
-      .select(col("na.vec_id").as("node_id"),
-        col("nb.vec_id").as("cand_id"),
-        l2sq(col("na.embedding"), col("nb.embedding")).as("dist"))
+      .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"), dist.as("dist"))
     Knn.ranked(pairs, "node_id", degree, id = "cand_id")
   }
 

@@ -124,6 +124,10 @@ object Knn {
     *     reads the count from the cached physical plan's partitioning (an
     *     adaptive plan's current one), so a base cached already spread is
     *     not reshuffled on every batch;
+    *   - input that is only projections/filters over a `Repartition`
+    *     reads the count from that logical node, so spreading a frame
+    *     that was spread below a projection (a normalize, a transform)
+    *     keeps its one shuffle: `spread` is idempotent;
     *   - input that is only projections/filters over other leaves (file
     *     scan, localCheckpoint LogicalRDD, local relation) probes
     *     `df.rdd`, which is pure planning there;
@@ -134,21 +138,22 @@ object Knn {
     *     count, work the real action does not reuse (`knn_update_identity`
     *     paid its anti-join twice this way in round 10). */
   private[graft] def spread(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, LogicalPlan, Project, SubqueryAlias}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, LogicalPlan, Project, Repartition, SubqueryAlias}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def leafOf(plan: LogicalPlan): Option[LogicalPlan] = plan match {
-      case p @ (_: Project | _: LFilter | _: SubqueryAlias) => leafOf(p.children.head)
-      case l: LeafNode => Some(l)
-      case _ => None
+    def below(plan: LogicalPlan): LogicalPlan = plan match {
+      case p @ (_: Project | _: LFilter | _: SubqueryAlias) => below(p.children.head)
+      case other => other
     }
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val splits = leafOf(df.queryExecution.withCachedData) match {
-      case Some(cached: InMemoryRelation) => Some((cached.cachedPlan match {
+    val splits = below(df.queryExecution.withCachedData) match {
+      case cached: InMemoryRelation => Some((cached.cachedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan
         case plan => plan
       }).outputPartitioning.numPartitions)
-      case _ => leafOf(df.queryExecution.analyzed).map(_ => df.rdd.getNumPartitions)
+      case r: Repartition if r.shuffle => Some(r.numPartitions)
+      case _: LeafNode => Some(df.rdd.getNumPartitions)
+      case _ => None
     }
     if (splits.exists(_ >= p)) df else df.repartition(p)
   }
@@ -161,23 +166,26 @@ object Knn {
       .crossJoin(broadcast(queries))
       .withColumn("dist", dist)
 
-  /** Exact squared-L2 kNN — the scale path: per base partition, the
+  /** Exact kNN under `metric` — the scale path: per base partition, the
     * block kernel's top-k candidates ([[graft.exec.VectorTopK]]), merged
     * by [[ranked]]. */
+  def topK(queries: DataFrame, base: DataFrame, k: Int, metric: Metric): DataFrame =
+    ranked(VectorTopK.candidates(queries, spread(base), k, metric), "query_id", k)
+
+  /** Exact squared-L2 kNN: [[topK]] under [[Metric.L2]]. */
   def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.L2), "query_id", k)
+    topK(queries, base, k, Metric.L2)
 
   /** Exact top-k by cosine similarity (descending) — the similarity-search
-    * baseline for the embedding column: [[exact]]'s plan under
-    * [[Metric.Cosine]]. */
+    * baseline for the embedding column: [[topK]] under [[Metric.Cosine]]. */
   def cosineTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.Cosine), "query_id", k)
+    topK(queries, base, k, Metric.Cosine)
 
   /** Exact top-k by inner product (descending) — FAISS
     * METRIC_INNER_PRODUCT, the MIPS metric of recommendation/retrieval
-    * scorers: [[exact]]'s plan under [[Metric.InnerProduct]]. */
+    * scorers: [[topK]] under [[Metric.InnerProduct]]. */
   def mipsTopK(queries: DataFrame, base: DataFrame, k: Int): DataFrame =
-    ranked(VectorTopK.candidates(queries, spread(base), k, Metric.InnerProduct), "query_id", k)
+    topK(queries, base, k, Metric.InnerProduct)
 
   /** Hamming top-k over packed binary signatures — FAISS
     * `IndexBinaryFlat` (the binary-vector member of the reference's

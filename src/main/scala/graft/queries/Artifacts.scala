@@ -94,7 +94,10 @@ object Artifacts {
     * codebooks, written file layouts) are on-purpose NOT dropped — they
     * are deterministic replays / on-disk artifacts whose cost queries
     * like `knn_pq_flat` measure separately. Used by
-    * [[graft.tools.ColdReps]]. */
+    * [[graft.tools.ColdReps]] between reps, by [[graft.Bench]] after
+    * its warmup, and by [[graft.tools.PlanDump]] before each query,
+    * so a dumped plan does not depend on which earlier query built a
+    * cache. */
   private[graft] def resetArtifactCaches(spark: SparkSession): Unit = {
     // enumerate the REGISTRY, not a hand-maintained list: the r9 review
     // found four late-added caches missing from the old Seq, which made

@@ -2,10 +2,9 @@ package graft
 package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.exec.{Metric, VectorTopK}
+import graft.exec.Metric
 import graft.operators.{Knn, Recall}
 import graft.sources.Tables
 import graft.text.TextFunctions
@@ -460,7 +459,7 @@ object GraphQueries {
     * fold (verified on an association-sensitive probe), double→float→
     * double is the same IEEE round-trip both engines, so the unit
     * coordinates are bit-identical. */
-  private def unitVectors(vecs: DataFrame): DataFrame =
+  private[graft] def unitVectors(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), col("embedding"),
         sqrt(graft.functions.VectorFunctions.dot(col("embedding"), col("embedding"))).as("nrm"))
       .select(col("vec_id"),
@@ -468,29 +467,21 @@ object GraphQueries {
           x => (x.cast("double") / col("nrm")).cast("float")).as("embedding"))
 
   /** Exact degree-`degree` adjacency ranked by cosine DESC (ties by id),
-    * self excluded — the cosine twin of [[graft.index.GraphIndex.buildExact]],
-    * shared by the hubness-remediation family.
+    * self excluded, shared by the hubness-remediation family: the
+    * inner-product [[graft.index.GraphIndex.buildExact]] over
+    * [[unitVectors]] — cosine order over unit vectors IS dot order, and
+    * −Σq·b over these unit vectors is the oracle's −list_inner_product
+    * bit-for-bit, so the heap's (dist, id) order equals the oracle's.
     *
     * Normalize each vector ONCE in a map pass (float components, so scan
-    * bytes match the raw build; SCALING.md, round-10 kernel A/B) and rank
-    * by the block kernel's inner product: cosine order over unit vectors
-    * IS dot order, and −Σq·b over these unit vectors is the oracle's
-    * −list_inner_product bit-for-bit, so the heap's (dist, id) order
-    * equals the oracle's. */
-  private def cosineAdjacency(vecs: DataFrame, degree: Int): DataFrame = {
+    * bytes match the raw build; SCALING.md, round-10 kernel A/B). */
+  private def cosineAdjacency(vecs: DataFrame, degree: Int): DataFrame =
     // spread BELOW the normalize so both the per-row normalize and the
     // n² scan run at full parallelism (spread above a projection would
-    // leave the projection on the single input split)
-    val unit = unitVectors(Knn.spread(vecs))
-    val asQueries = unit.select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
-    Knn.ranked(VectorTopK.candidates(asQueries, unit, degree + 1, Metric.InnerProduct),
-        "query_id", degree + 1)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("g_rank", row_number().over(w))
-      .filter(col("g_rank") <= degree)
-      .select(col("query_id").as("node_id"), col("neighbor_id"))
-  }
+    // leave the projection on the single input split); the build's own
+    // spread then leaves it as is
+    graft.index.GraphIndex.buildExact(unitVectors(Knn.spread(vecs)), degree, Metric.InnerProduct)
+      .select(col("node_id"), col("neighbor_id"))
 
   // per-dir artifacts, graphAdjCache pattern: the three cosine
   // adjacencies are index BUILDS (all-pairs, the family's shared cold
@@ -508,35 +499,26 @@ object GraphQueries {
 
   /** Cell-blocked COSINE adjacency — the cosine family's 100 TB build
     * path made CONCRETE (the r9 verdict accepted "cell-blocked is the
-    * scale path" as a declaration; this builds it): candidate pairs
-    * from IVF coarse-cell co-membership (nassign=3 over the shared
-    * `ivfFlatModel`, the same blocking as
-    * [[graft.index.GraphIndex.buildCellBlocked]]), ranked by dot over
-    * the SAME float unit vectors as the exact build — so the only
-    * difference from [[rawCosineAdjacency]] is the candidate generator,
-    * and [[hubnessCellBlockedQuality]] measures exactly that gap.
-    * Pair generation is a co-partitioned equi-join on cell id: |cell|²
-    * per cell, never |base|². */
+    * scale path" as a declaration; this builds it): the inner-product
+    * [[graft.index.GraphIndex.buildCellBlocked]] over IVF coarse-cell
+    * co-membership (nassign=3 over the shared `ivfFlatModel`, the
+    * blocking of [[cellBlockedAdj]]) and the SAME float unit vectors as
+    * the exact build — so the only difference from
+    * [[rawCosineAdjacency]] is the candidate generator, and
+    * [[hubnessCellBlockedQuality]] measures exactly that gap. */
   private def cosCellBlockedAdj(spark: SparkSession, dir: String): DataFrame =
     cachedArtifact(cosCellAdjCache, dir) {
       val base = Tables.embeddingBase(spark, dir)
-      val cells = graft.index.IvfFlat.probes(base, ivfFlatModel(spark, dir), 3)
-        .select(col("query_id").as("vec_id"), col("cid"))
-      val unit = unitVectors(Knn.spread(base))
-      val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child: the aggregate's input
-      // row carries (node_id, cand_id, dist), not both embeddings
-      // (measured 2x, OPTIMIZATION_r12.md §1)
-      Knn.ranked(nodes.alias("na")
-        .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
-        .filter(col("na.vec_id") =!= col("nb.vec_id"))
-        .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
-          (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist")),
-          "node_id", GraphDegree, id = "cand_id")
-        .select(col("node_id"), col("neighbor_id"))
-        .localCheckpoint()
+      cosineCellBlocked(base, graft.index.IvfFlat.probes(base, ivfFlatModel(spark, dir), 3))
     }
+
+  /** The degree-16 inner-product cell-blocked build over [[unitVectors]]
+    * of `vecs`, blocked by the probe rows `(query_id, cid)`. */
+  private def cosineCellBlocked(vecs: DataFrame, probes: DataFrame): DataFrame =
+    graft.index.GraphIndex.buildCellBlocked(unitVectors(Knn.spread(vecs)),
+        probes.select(col("query_id").as("vec_id"), col("cid")), GraphDegree, Metric.InnerProduct)
+      .select(col("node_id"), col("neighbor_id"))
+      .localCheckpoint()
 
   /** Edge recall of the cell-blocked cosine build vs the exact cosine
     * adjacency — the measured cost of never running the all-pairs
@@ -733,35 +715,16 @@ object GraphQueries {
   /** Cell-blocked cosine adjacency of the ZCA space — the remediation
     * rung riding the 100 TB build path (r10 verdict item 1): transform →
     * IVF cells IN the transformed space → co-membership candidates
-    * (nassign=3) → bounded-heap rank by dot over unit vectors. Identical
-    * ranking machinery to [[cosCellBlockedAdj]]; only the space and its
-    * codebook differ. Pair generation is a co-partitioned equi-join on
-    * cell id — |cell|² per cell, never |base|². Measured edge recall vs
+    * (nassign=3) → the build of [[cosCellBlockedAdj]]; only the space
+    * and its codebook differ. Measured edge recall vs
     * the exact ZCA adjacency (SCALING.md, round 11): 90.9%
     * (sf0.001) / 92.8% (sf0.01) — a touch under the raw space's
     * 93.8/94.6% (whitening flattens the spectrum, so cell boundaries
     * cut more near-ties). */
   private def zcaCellBlockedAdj(spark: SparkSession, dir: String): DataFrame =
-    cachedArtifact(zcaCellAdjCache, dir) {
-      val zv = zcaVectors(spark, dir)
-      val cells = graft.index.IvfFlat.probes(zcaDownscaled(spark, dir),
-          zcaIvfModel(spark, dir), 3)
-        .select(col("query_id").as("vec_id"), col("cid"))
-      val unit = unitVectors(Knn.spread(zv))
-      val nodes = cells.join(unit, Seq("vec_id")).localCheckpoint()
-      // kernel in a projection, not the agg child: the aggregate's input
-      // row carries (node_id, cand_id, dist), not both embeddings
-      // (measured 2x, OPTIMIZATION_r12.md §1)
-      Knn.ranked(nodes.alias("na")
-        .join(nodes.alias("nb"), col("na.cid") === col("nb.cid"))
-        .filter(col("na.vec_id") =!= col("nb.vec_id"))
-        .select(col("na.vec_id").as("node_id"), col("nb.vec_id").as("cand_id"),
-          (-graft.functions.VectorFunctions.dot(
-            col("na.embedding"), col("nb.embedding"))).as("dist")),
-          "node_id", GraphDegree, id = "cand_id")
-        .select(col("node_id"), col("neighbor_id"))
-        .localCheckpoint()
-    }
+    cachedArtifact(zcaCellAdjCache, dir)(
+      cosineCellBlocked(zcaVectors(spark, dir),
+        graft.index.IvfFlat.probes(zcaDownscaled(spark, dir), zcaIvfModel(spark, dir), 3)))
 
   /** The hubness DIAGNOSIS run entirely on blocked builds — the shape a
     * 100 TB remediation pass actually takes (r10 verdict item 1): both

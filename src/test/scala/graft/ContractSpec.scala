@@ -339,6 +339,15 @@ class ContractSpec extends AnyFunSuite {
   /** Hits of the three cache patterns in `src`: the bare, constructor and
     * ascribed form. The factory's own signature is the one legitimate
     * ascription; it is filtered by name. */
+  /** Every main Scala source under `graft/` with its text, for the lints;
+    * a scan that found few files would pass vacuously, so it fails. */
+  private lazy val mainSources: Seq[(java.nio.file.Path, String)] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    assert(files.size > 50, s"lint scanned only ${files.size} files")
+    files.map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+  }
+
   def cacheLintHits(src: String): (Seq[String], Seq[String], Seq[String]) = {
     def line(at: Int): String = {
       val lineStart = src.lastIndexOf('\n', at) + 1
@@ -358,14 +367,7 @@ class ContractSpec extends AnyFunSuite {
     // caches missing from the hand-maintained drop list made ColdReps'
     // "artifact-cold" reps serve warm adjacencies). The factory itself is
     // the single allowed occurrence, anywhere under graft/.
-    val files = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
-    assert(files.size > 50, s"lint scanned only ${files.size} files")
-    val hits = files.map { p =>
-      p -> cacheLintHits(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    }
+    val hits = mainSources.map { case (p, src) => p -> cacheLintHits(src) }
     val bare = hits.flatMap { case (p, (b, _, _)) => b.map(l => s"$p: $l") }
     assert(bare.size == 1 && bare.head.contains("Artifacts.scala"),
       s"found ${bare.size} bare DataFrame TrieMaps — use namedArtifactCache:\n" +
@@ -420,14 +422,8 @@ class ContractSpec extends AnyFunSuite {
     }
 
   test("ranked top-k tails live in Knn (ranked-tail lint)") {
-    val files = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
-    assert(files.size > 50, s"lint scanned only ${files.size} files")
-    val hits = files.flatMap { p =>
-      rankedTailHits(p.getFileName.toString,
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(l => s"$p: $l")
+    val hits = mainSources.flatMap { case (p, src) =>
+      rankedTailHits(p.getFileName.toString, src).map(l => s"$p: $l")
     }
     assert(hits.isEmpty,
       "ranked top-k tail outside Knn — use Knn.ranked/shortlist/rerank:\n" + hits.mkString("\n"))
@@ -479,14 +475,8 @@ class ContractSpec extends AnyFunSuite {
     }
 
   test("dense top-k scans run through the block kernel (scan lint)") {
-    val files = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
-    assert(files.size > 50, s"lint scanned only ${files.size} files")
-    val hits = files.flatMap { p =>
-      scanJoinHits(p.getFileName.toString,
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(l => s"$p: $l")
+    val hits = mainSources.flatMap { case (p, src) =>
+      scanJoinHits(p.getFileName.toString, src).map(l => s"$p: $l")
     }
     assert(hits.isEmpty,
       "broadcast cross-join vector scan outside the block kernel — use VectorTopK.candidates:\n" +
@@ -504,6 +494,40 @@ class ContractSpec extends AnyFunSuite {
       ("Curation.scala", "train.crossJoin(broadcast(bench)).select(cosine(col(\"t\"), col(\"b\")))") -> 0)
     seeded.foreach { case ((file, src), expected) =>
       assert(scanJoinHits(file, src).size == expected, s"$file: $src")
+    }
+  }
+
+  /** Every k-NN adjacency is built in `GraphIndex`: its drop-self
+    * re-rank (the `g_rank` window over a top-(degree+1)) and its cell
+    * co-membership self-join (`na.cid` = `nb.cid`) appear nowhere else. */
+  private val adjacencyBuildPattern = """\b(g_rank|na\.cid|nb\.cid)\b""".r
+
+  /** Lines of `src` (from file `fileName`) that hold an adjacency-build
+    * pattern, as a whole word, outside `GraphIndex.scala`. */
+  def adjacencyBuildHits(fileName: String, src: String): Seq[String] =
+    if (fileName == "GraphIndex.scala") Nil
+    else src.split('\n').toSeq.filter(l => adjacencyBuildPattern.findFirstIn(l).nonEmpty).map(_.trim)
+
+  test("k-NN adjacencies are built in GraphIndex (adjacency-build lint)") {
+    val hits = mainSources.flatMap { case (p, src) =>
+      adjacencyBuildHits(p.getFileName.toString, src).map(l => s"$p: $l")
+    }
+    assert(hits.isEmpty,
+      "adjacency build outside GraphIndex — use GraphIndex.buildExact/buildCellBlocked:\n" +
+        hits.mkString("\n"))
+  }
+
+  test("the adjacency-build lint itself fires on seeded copies") {
+    val seeded = Seq(
+      ("GraphQueries.scala", ".withColumn(\"g_rank\", row_number().over(w))\n.filter(col(\"g_rank\") <= degree)") -> 2,
+      ("Foo.scala", "nodes.alias(\"na\")\n  .join(nodes.alias(\"nb\"), col(\"na.cid\") === col(\"nb.cid\"))") -> 1,
+      ("GraphQueries.scala", ".join(nodes.alias(\"nb\"), col(\"nb.cid\") === col(\"na.cid\"))") -> 1,
+      ("GraphIndex.scala", ".withColumn(\"g_rank\", w) na.join(nb, col(\"na.cid\") === col(\"nb.cid\"))") -> 0,
+      ("GraphQueries.scala", "GraphIndex.buildCellBlocked(unit, cells, 16, Metric.InnerProduct)") -> 0,
+      ("Foo.scala", ".filter(col(\"na.vec_id\") =!= col(\"nb.vec_id\"))") -> 0,
+      ("VectorIndexQueries.scala", "min(when(!col(\"is_pos\"), col(\"rank\"))).as(\"neg_rank\"))") -> 0)
+    seeded.foreach { case ((file, src), expected) =>
+      assert(adjacencyBuildHits(file, src).size == expected, s"$file: $src")
     }
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.exec.Metric
 import graft.index.GraphIndex
 import graft.operators.{Knn, Recall}
 import graft.sources.Tables
@@ -118,27 +119,25 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("cell-blocked build with all cells assigned equals the exact graph") {
     // when every node is assigned to every cell, per-cell co-membership
-    // is all-pairs and the blocked build must reproduce buildExact
+    // is all-pairs and the blocked build must reproduce buildExact: under
+    // L2 over the base, and under the inner product over its unit vectors
+    // (the cosine graphs' build, scored by -dot against the block kernel)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val model = graft.index.IvfFlat.fit(base, nlist = 4)
-    val blockedAll = GraphIndex.buildCellBlocked(base, model, degree = 8, nassign = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val exact = exactAdj
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(blockedAll == exact)
+    assert(rows(GraphIndex.buildCellBlocked(base, model, degree = 8, nassign = 4)) == rows(exactAdj))
+    val unit = graft.queries.GraphQueries.unitVectors(base)
+    val cells = graft.index.IvfFlat.probes(base, model, 4).select(col("query_id").as("vec_id"), col("cid"))
+    val ipExact = rows(GraphIndex.buildExact(unit, 8, Metric.InnerProduct))
+    assert(ipExact.size == base.count() * 8)
+    assert(rows(GraphIndex.buildCellBlocked(unit, cells, 8, Metric.InnerProduct)) == ipExact)
   }
 
   test("cosine beam search clears the recall ladder vs exact cosine top-k") {
     // cosine-built adjacency + cosine-ranked beam — end-to-end cosine
     // serving (knn_graph_cosine's shape, asserted against the exact
     // cosine ground truth instead of the L2 one)
-    val asQ = base.select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rank"))
-    val cosAdj = Knn.cosineTopK(asQ, base, 17)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("g_rank", row_number().over(w))
-      .filter(col("g_rank") <= 16)
-      .select(col("query_id").as("node_id"), col("neighbor_id"))
+    val cosAdj = GraphIndex.buildExact(base, 16, Metric.Cosine)
     val pred = GraphIndex.searchCosine(queries, base, cosAdj, 10,
       seedMod = 16, seedK = 8, hops = 3, beam = 32)
     val cosGt = Knn.cosineTopK(queries, base, 10)

@@ -22,9 +22,10 @@ import graft.operators.Knn
   * duplicate edges, self-loops, duplicate base ids, tied distances, NaN
   * and ±Inf components, null ids and vectors, empty sides, k beyond the
   * visited set, seedMod beyond the base, and a base spread over more
-  * partitions than rows. Query ids are distinct and non-null: the operator
-  * walks rows sharing a query_id apart, where the hop loop mixed their
-  * beams. */
+  * partitions than rows. A second setting walks long sparse chains, where
+  * the rows each hop keeps decide the top-k. Query ids are distinct and
+  * non-null: the operator walks rows sharing a query_id apart, where the
+  * hop loop mixed their beams. */
 class GraphReferenceSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -58,17 +59,24 @@ class GraphReferenceSpec extends AnyFunSuite {
       df(c.allowed.map(Row(_)), StructField("vec_id", LongType)))
   }
 
-  /** The relational hop loop; `seedsUnvisited` seeds a fault by leaving
-    * the seeds out of the visited rows. */
+  /** Faults the reference can be seeded with: the seeds left out of the
+    * visited rows, or each hop's beam kept by smallest id instead of by
+    * (dist, id). */
+  private val SeedsUnvisited = "seeds unvisited"
+  private val BeamById = "beam pruned by id"
+
+  /** The relational hop loop, with the fault `defect` seeded if it names
+    * one. */
   def reference(c: Case, q: DataFrame, b: DataFrame, adj: DataFrame, allowed: DataFrame,
-      seedsUnvisited: Boolean = false): DataFrame = {
+      defect: String = ""): DataFrame = {
     def dist(qe: Column, e: Column): Column = if (c.mode == "searchCosine") -cosine(qe, e) else l2sq(qe, e)
-    // per query the m smallest distinct (dist, id) pairs; a null dist or
-    // id is never kept
-    def topPairs(scored: DataFrame, m: Int): DataFrame =
+    // per query the m smallest distinct (dist, id) pairs, or the m
+    // smallest ids under `byId`; a null dist or id is never kept
+    def topPairs(scored: DataFrame, m: Int, byId: Boolean = false): DataFrame =
       scored.filter(col("dist").isNotNull && col("vec_id").isNotNull)
         .select(col("query_id"), col("vec_id"), col("dist")).distinct()
-        .withColumn("rn", row_number().over(Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))))
+        .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy((if (byId) Seq(col("vec_id")) else Seq(col("dist"), col("vec_id"))): _*)))
         .filter(col("rn") <= m).drop("rn")
         .localCheckpoint(false)
     val seeds = topPairs(b.filter(col("vec_id") % c.seedMod === 0).crossJoin(broadcast(q))
@@ -78,7 +86,7 @@ class GraphReferenceSpec extends AnyFunSuite {
     val adjE = adj.select(col("node_id"), col("neighbor_id"))
       .join(b.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
     val (_, visited) = (1 to c.hops).foldLeft(
-        (seeds, if (seedsUnvisited) seeds.limit(0) else seeds)) { case ((beamDf, vis), _) =>
+        (seeds, if (defect == SeedsUnvisited) seeds.limit(0) else seeds)) { case ((beamDf, vis), _) =>
       val scoredExp = broadcast(beamDf.select(col("query_id"), col("vec_id")).alias("bm"))
         .join(adjE.alias("ad"), col("bm.vec_id") === col("ad.node_id"))
         .select(col("bm.query_id").as("query_id"),
@@ -86,7 +94,7 @@ class GraphReferenceSpec extends AnyFunSuite {
         .join(broadcast(q), "query_id")
         .select(col("query_id"), col("vec_id"), dist(col("q_embedding"), col("embedding")).as("dist"))
         .localCheckpoint(false)
-      (topPairs(beamDf.unionByName(scoredExp), c.beam),
+      (topPairs(beamDf.unionByName(scoredExp), c.beam, byId = defect == BeamById),
         vis.unionByName(scoredExp))
     }
     val rerank =
@@ -109,9 +117,9 @@ class GraphReferenceSpec extends AnyFunSuite {
   /** Every checked case with the reference's rows. */
   private val checked = scala.collection.mutable.ArrayBuffer.empty[(Case, Ranked)]
 
-  private def agrees(seedsUnvisited: Boolean)(c: Case): Prop = {
+  private def agrees(defect: String)(c: Case): Prop = {
     val (q, b, adj, allowed) = frames(c)
-    val expected = collectRanked(reference(c, q, b, adj, allowed, seedsUnvisited))
+    val expected = collectRanked(reference(c, q, b, adj, allowed, defect))
     checked += ((c, expected))
     Prop(collectRanked(engine(c, q, b, adj, allowed)) == expected) :| c.mode
   }
@@ -152,9 +160,42 @@ class GraphReferenceSpec extends AnyFunSuite {
     base.map { case (id, v) => (id: java.lang.Long, v) }, (edges ++ edges.take(repeated)).map { case (a, b) => (a: java.lang.Long, b) },
     allowed, k, seedMod, seedK, hops, beam, baseParts)
 
-  private def run(seedsUnvisited: Boolean, samples: Int): SCTest.Result =
+  /** Long sparse chains, where the walk decides the top-k: the ids are
+    * shuffled along a path of 10–20 nodes with forward and some backward
+    * edges, the entry points are one id in `seedMod` ≥ 2, the queries lie
+    * along or past the path, and k ≤ beam, so which rows a hop keeps
+    * decides which rows are ever visited. */
+  private val chains: Gen[Case] = for {
+    mode <- Gen.oneOf("search", "searchCosine", "searchFiltered")
+    floats <- Gen.oneOf(true, false)
+    n <- Gen.choose(10, 20)
+    keys <- Gen.listOfN(n, Gen.choose(0, Int.MaxValue))
+    path = (0 until n).sortBy(i => (keys(i), i)).map(_.toLong)
+    // the chain runs along the first axis, a small offset on the second
+    wiggle <- Gen.listOfN(n, Gen.choose(-1, 1))
+    back <- Gen.listOfN(n - 1, Gen.frequency(2 -> true, 1 -> false))
+    nq <- Gen.choose(1, 3)
+    queries <- Gen.listOfN(nq, Gen.zip(Gen.choose(-2, n + 2), Gen.choose(-1, 1)))
+    allowed <- Gen.someOf(path)
+    beam <- Gen.choose(1, 3)
+    k <- Gen.choose(1, beam)
+    seedMod <- Gen.choose(2, n)
+    seedK <- Gen.choose(1, 2)
+    hops <- Gen.choose(2, 4)
+    baseParts <- Gen.choose(1, 4)
+  } yield {
+    val steps = path.indices.init
+    Case(mode, floats,
+      queries.zipWithIndex.map { case ((x, y), i) => (i.toLong, Array(x.toDouble, y / 2.0)) },
+      path.zipWithIndex.map { case (id, j) => (id: java.lang.Long, Array(j.toDouble, wiggle(j) / 2.0)) },
+      steps.map(j => (path(j): java.lang.Long, path(j + 1): java.lang.Long)) ++
+        steps.filter(back).map(j => (path(j + 1): java.lang.Long, path(j): java.lang.Long)),
+      allowed.toSeq, k, seedMod, seedK, hops, beam, baseParts)
+  }
+
+  private def run(gen: Gen[Case], defect: String, samples: Int): SCTest.Result =
     SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(samples)
-      .withInitialSeed(Seed(20261019L)).withWorkers(1), Prop.forAllNoShrink(graph)(agrees(seedsUnvisited)))
+      .withInitialSeed(Seed(20261019L)).withWorkers(1), Prop.forAllNoShrink(gen)(agrees(defect)))
 
   /** The edge cases the checked cases must have met. */
   private def coverage(cs: Seq[(Case, Ranked)]): Map[String, Boolean] = {
@@ -188,14 +229,26 @@ class GraphReferenceSpec extends AnyFunSuite {
 
   test("graph search equals the relational hop loop") {
     checked.clear()
-    val res = run(seedsUnvisited = false, 8)
+    val res = run(graph, "", 8)
     assert(res.passed, res.status.toString)
     val missed = coverage(checked.toSeq).collect { case (name, false) => name }
     assert(missed.isEmpty, s"the cases never had: ${missed.mkString(", ")}")
+    checked.clear()
+    val onChains = run(chains, "", 8)
+    assert(onChains.passed, onChains.status.toString)
+    // some ranked row is no entry point, so the walk reached it
+    assert(checked.exists { case (c, r) => r.exists(_._2 % c.seedMod != 0) },
+      "no chain case ranked a row the walk reached")
   }
 
   test("the property fails on a hop loop that leaves the seeds unvisited") {
-    val res = run(seedsUnvisited = true, 8)
+    val res = run(graph, SeedsUnvisited, 8)
+    // a mismatch, not an exception: the same seed passes the true loop
+    assert(res.status.isInstanceOf[SCTest.Failed], s"the defect went undetected: ${res.status}")
+  }
+
+  test("the property fails on a hop loop that prunes the beam by id") {
+    val res = run(chains, BeamById, 8)
     // a mismatch, not an exception: the same seed passes the true loop
     assert(res.status.isInstanceOf[SCTest.Failed], s"the defect went undetected: ${res.status}")
   }

@@ -284,6 +284,18 @@ class KnnSpec extends AnyFunSuite {
     } finally cached.unpersist(blocking = true)
   }
 
+  test("spread: a frame spread below a projection is not spread again") {
+    // the union is no leaf, so the inner spread repartitions it; the outer
+    // spread reads that Repartition's count from the logical plan
+    val in = spark.range(0, 100, 1, 1).toDF("vec_id").union(spark.range(100, 200, 1, 1).toDF("vec_id"))
+    val once = Knn.spread(in).select((col("vec_id") * 2).as("vec_id"))
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkTestSession.jobsStarted { out = Knn.spread(once) }
+    assert(jobs == 0, s"spread() launched $jobs job(s) on a spread input")
+    assert(repartitions(out) == 1, out.queryExecution.analyzed.toString)
+    assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+  }
+
   test("spread: projection-over-scan input keeps the cheap probe path (no reshuffle when pre-split)") {
     import org.apache.spark.sql.functions._
     // a leaf-rooted input that already has >= parallelism partitions

@@ -16,7 +16,7 @@ import graft.functions.{CosineSimilarity, DotProduct, L2SquaredDistance, MaxSimS
   *  - [[GraftFunctions.register]] on a live session — ad hoc.
   * No SQL function builds a [[graft.exec.VectorTopK]] or a
   * [[graft.exec.BeamSearch]]: their planner strategy is installed by the
-  * builders, `VectorTopK.candidates` and `BeamSearch.visited`, on their
+  * builders, `VectorTopK.candidates` and `BeamSearch.ranked`, on their
   * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

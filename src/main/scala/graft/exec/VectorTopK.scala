@@ -82,7 +82,8 @@ object VectorTopKStrategy extends SparkStrategy {
     case VectorTopK(k, metric, dist, l, r) =>
       BlockTopKExec(k, metric, dist, planLater(l), planLater(r)) :: Nil
     case b: BeamSearch =>
-      BeamSearchExec(b.params, b.dist, planLater(b.queries), planLater(b.base), planLater(b.adjacency)) :: Nil
+      BeamSearchExec(b.params, b.k, b.rank, planLater(b.queries), planLater(b.base), planLater(b.adjacency),
+        b.allowed.map(planLater)) :: Nil
     case _ => Nil
   }
 }

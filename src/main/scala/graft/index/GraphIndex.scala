@@ -27,19 +27,24 @@ import graft.operators.Knn
   *     both plain joins. A cosine graph is the inner-product build over
   *     unit vectors.
   *   - search: one [[graft.exec.BeamSearch]] operator. The query batch
-  *     streams; the base and the adjacency are broadcast, and each task
-  *     walks the packed graph in memory for its queries: score the
-  *     deterministic entry points (`vec_id % seedMod == 0` — the coarse
-  *     "upper layer"; its size is |base|/seedMod, so seedMod tunes the
-  *     brute-force fraction), keep `seedK` seeds, then `hops` rounds
-  *     each keep the best `beam` of the beam and its expansion. The
-  *     visited rows, with their distances, feed the exact final rank.
+  *     is clustered by `query_id`, and each task walks the packed graph
+  *     in memory for its queries: score the deterministic entry points
+  *     (`vec_id % seedMod == 0` — the coarse "upper layer"; its size is
+  *     |base|/seedMod, so seedMod tunes the brute-force fraction), keep
+  *     `seedK` seeds, then `hops` rounds each keep the best `beam` of
+  *     the beam and its expansion. The visited rows, with their
+  *     distances, feed the exact final rank in the same task.
   *
-  * Memory contract: a search holds the whole base and adjacency in each
-  * executor, as the reference backends hold their HNSW index resident.
-  * The search costs two broadcasts and one pass over the queries, with
-  * per-query work O(seedK·|base|/seedMod + hops·beam·degree); no stage
-  * depends on |base|² after the one-time build.
+  * Memory contract: the graph is resident per cached snapshot. When the
+  * base and the adjacency are cached, their first search packs them once
+  * on the driver (ids, one vector array, a CSR neighbour list) and
+  * broadcasts the packed graph once ([[graft.exec.ResidentGraph]]); every
+  * later search of that snapshot costs one shuffle of the query batch and
+  * one result stage, with per-query work O(seedK·|base|/seedMod +
+  * hops·beam·degree), and unpersisting either cache frees the graph.
+  * Inputs that are not cached are packed for each search. Each executor
+  * holds the whole graph, as the reference backends hold their HNSW index
+  * resident; no stage depends on |base|² after the one-time build.
   *
   * Everything is deterministic (ties broken by id), so adjacency, seeding,
   * expansion, and rerank all replay in the DuckDB oracle.
@@ -176,7 +181,8 @@ object GraphIndex {
     // shallow (the build's per-round adjacency, the newEdges above), so a
     // consumer re-reading the augmented adjacency recomputes Knn.rerank —
     // one keyed shuffle of the edge list + the bounded-heap aggregate per
-    // re-read, NOT free (each beam search broadcasts it once). The A/B
+    // re-read, NOT free (a search packs an uncached adjacency each time;
+    // cached, it is packed once and stays resident). The A/B
     // still favors recompute over materializing the full augmented edge
     // list: same-JVM with-vs-without measured 24.9 s vs 27.1 s cold for
     // the whole upsert+search at sf0.1, and 49.8 s vs 86.1 s at the 10×
@@ -230,7 +236,8 @@ object GraphIndex {
     * expand-score-prune, exact rerank over everything visited.
     *
     * The HNSW greedy walk per query, run for a whole batch in one
-    * [[graft.exec.BeamSearchExec]] pass: the per-query beam (`beam` best
+    * [[graft.exec.BeamSearchExec]] pass over the snapshot's resident
+    * graph: the per-query beam (`beam` best
     * candidates so far) expands through the adjacency (fan-out ≤ degree),
     * the expansion is exactly scored, and the beam is re-pruned with the
     * (dist, id) heap. All visited candidates feed the final top-k
@@ -265,26 +272,21 @@ object GraphIndex {
     * selective predicates (the ACORN observation, Patel et al.
     * SIGMOD'24) — and only the final rerank restricts to the allowed id
     * set, so recall degrades with selectivity instead of collapsing.
-    * `allowed` is one id column (`vec_id`); the restriction is a
-    * left-semi hash join on the visited set, never a scan-side filter
-    * of the adjacency. */
+    * `allowed` is one id column (`vec_id`), broadcast to the beam
+    * operator, which drops a visited row whose id it lacks before the
+    * final heap; it never filters the adjacency. */
   def searchFiltered(queries: DataFrame, base: DataFrame, adjacency: DataFrame,
       allowed: DataFrame, k: Int, seedMod: Int = 16, seedK: Int = 8,
       hops: Int = 3, beam: Int = 32): DataFrame =
     searchImpl(queries, base, adjacency, Some(allowed), k, seedMod, seedK, hops, beam)
 
-  /** The visited rows of [[BeamSearch]] over the broadcast graph, the
-    * `allowed` restriction, then the final rank over the carried
-    * distances: no row is scored twice, and there is no re-scoring join. */
+  /** One [[BeamSearch]] operator: the walk over the resident graph, the
+    * `allowed` restriction and the final rank over the carried distances,
+    * in one task pass: no row is scored twice, and there is no re-scoring
+    * join and no rank stage. */
   private def searchImpl(queries: DataFrame, base: DataFrame, adjacency: DataFrame,
       allowed: Option[DataFrame], k: Int, seedMod: Int, seedK: Int, hops: Int,
-      beam: Int, cosine: Boolean = false): DataFrame = {
-    val visited = BeamSearch.visited(queries, base, adjacency,
+      beam: Int, cosine: Boolean = false): DataFrame =
+    BeamSearch.ranked(queries, base, adjacency, allowed, k,
       BeamParams(if (cosine) Metric.Cosine else Metric.L2, seedMod, seedK, hops, beam))
-    val rerankSet = allowed match {
-      case Some(ok) => visited.join(ok.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      case None => visited
-    }
-    Knn.ranked(rerankSet, "query_id", k)
-  }
 }

@@ -64,13 +64,24 @@ object Knn {
 
   /** Exact rerank of candidates `(query_id, vec_id)`: join their base
     * vectors and their queries, score squared L2, and rank. A caller that
-    * needs the query join broadcast passes `broadcast(queries)`. */
-  def rerank(cands: DataFrame, base: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    * needs the query join broadcast passes `broadcast(queries)`.
+    *
+    * Queries that are the base renamed (a graph's nodes as its queries)
+    * broadcast the base once: both sides sit behind a renaming projection,
+    * so they canonicalize alike, and the joins are null-safe, so the
+    * optimizer infers no filter into either side from the candidates'
+    * constraints, which differ between `vec_id` and `query_id`. A
+    * candidate with a null id is dropped first, so the joins match as
+    * inner equi-joins. */
+  def rerank(cands: DataFrame, base: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val b = base.select(col("vec_id").as("rr_id"), col("embedding").as("rr_vec"))
+    val q = queries.select(col("query_id").as("rr_qid"), col("q_embedding").as("rr_qvec"))
     ranked(cands
-      .join(base, Seq("vec_id"))
-      .join(queries, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2sq(col("q_embedding"), col("embedding")).as("dist")), "query_id", k)
+      .filter(col("vec_id").isNotNull && col("query_id").isNotNull)
+      .join(b, col("vec_id") <=> col("rr_id"))
+      .join(q, col("query_id") <=> col("rr_qid"))
+      .select(col("query_id"), col("vec_id"), l2sq(col("rr_qvec"), col("rr_vec")).as("dist")), "query_id", k)
+  }
 
   /** Grouped kNN: top-k nearest neighbors WITHIN the query's group (e.g.
     * per-domain / per-label retrieval in a training pipeline). The group

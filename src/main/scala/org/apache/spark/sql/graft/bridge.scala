@@ -6,13 +6,18 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ↔ Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`); this
-  * shim, placed inside the spark namespace, re-exports the two calls an
+  * shim, placed inside the spark namespace, re-exports the calls an
   * extension library needs. Same technique used by public Spark extension
   * projects to host custom Catalyst expressions.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `e` with float and double values normalized as Spark normalizes a
+    * grouping key (one NaN, -0.0 as 0.0); `e` itself when it holds none. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
   /** A DataFrame over a logical plan — for plans with graft's own nodes,
     * which no public Dataset method builds. */

@@ -112,6 +112,20 @@ class EdgeCaseSpec extends AnyFunSuite {
     } finally base.unpersist(blocking = true)
   }
 
+  test("a graph search with k <= 0 or negative hops fails when it is built") {
+    val base = Seq((1L, Array(0f, 0f)), (2L, Array(1f, 1f))).toDF("vec_id", "embedding")
+    val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")
+    val adj = Seq((1L, 2L, 1), (2L, 1L, 1)).toDF("node_id", "neighbor_id", "rank")
+    val hops = intercept[IllegalArgumentException](graft.exec.BeamParams(graft.exec.Metric.L2, 16, 8, -1, 32))
+    assert(hops.getMessage.contains("hops must be non-negative"))
+    assert(intercept[IllegalArgumentException](GraphIndex.search(queries, base, adj, k = 10, hops = -1))
+      .getMessage.contains("hops must be non-negative"))
+    for (k <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](GraphIndex.search(queries, base, adj, k))
+      assert(e.getMessage.contains("k must be positive"), s"k=$k: ${e.getMessage}")
+    }
+  }
+
   test("recall against an empty prediction set is zero, not an error") {
     val base = Seq((1L, Array(0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((10L, Array(0f, 0f))).toDF("query_id", "q_embedding")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -161,11 +163,66 @@ class GraphIndexSpec extends AnyFunSuite {
   }
 
   test("collecting a graph search starts at most 4 Spark jobs") {
-    // two broadcasts (base and adjacency), then the final rank's map and
-    // result stages; the cached inputs are materialised first
+    // the cached inputs are materialised first. The first search of a
+    // snapshot collects the base and the adjacency to pack its resident
+    // graph, then shuffles the query batch by query_id and ranks in one
+    // result stage; a second search of the same snapshot runs only the
+    // last two
     queries.count(); base.count(); exactAdj.count()
-    val search = GraphIndex.search(queries, base, exactAdj, k = 10)
-    val jobs = SparkTestSession.jobsStarted(search.collect())
-    assert(jobs <= 4, s"a graph search ran $jobs jobs")
+    val first = SparkTestSession.jobsStarted(GraphIndex.search(queries, base, exactAdj, k = 10).collect())
+    assert(first <= 4, s"a graph search ran $first jobs")
+    val second = SparkTestSession.jobsStarted(GraphIndex.search(queries, base, exactAdj, k = 10).collect())
+    assert(second <= 2, s"a second search of the same snapshot ran $second jobs")
+  }
+
+  /** A fresh cached snapshot: the base and its exact adjacency,
+    * materialised, and searched once so the memo holds its graph. */
+  private def searchedSnapshot(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val b = Tables.embeddingBase(spark, dir).select(col("vec_id"), col("embedding")).cache()
+    val a = GraphIndex.buildExact(b, 8).cache()
+    b.count(); a.count()
+    GraphIndex.search(queries, b, a, k = 10).collect()
+    (b, a)
+  }
+
+  test("a snapshot whose adjacency is cached anew is searched over the new rows, never a stale graph") {
+    val tmp = java.nio.file.Files.createTempDirectory("graph-adj")
+    val path = tmp.resolve("adj").toString
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val (b, a0) = searchedSnapshot()
+    a0.write.parquet(path)
+    val a1 = spark.read.parquet(path).cache()
+    val held = graft.exec.ResidentGraph.resident.toSet
+    val before = ranked(GraphIndex.search(queries, b, a1, k = 10))
+    val a1Graph = graft.exec.ResidentGraph.resident.toSet -- held
+    assert(a1Graph.size == 1, "the search of a cached snapshot packed no resident graph")
+    a1.unpersist(blocking = true)
+    // other rows under the same path and the same plan: two edges a node
+    a0.filter(col("rank") <= 2).write.mode("overwrite").parquet(path)
+    val a2 = spark.read.parquet(path).cache()
+    val after = ranked(GraphIndex.search(queries, b, a2, k = 10))
+    val expected = ranked(GraphIndex.search(queries, b,
+      spark.createDataFrame(a2.collect().toSeq.asJava, a2.schema), k = 10))
+    assert(after == expected)
+    assert(after != before, "the narrower adjacency changed no result")
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    assert(a1Graph.forall(org.apache.spark.graft.BroadcastDestroyed(_)), "the unpersisted adjacency's graph was not destroyed")
+    Seq(a2, a0, b).foreach(_.unpersist(blocking = true))
+    new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
+  }
+  test("clearing the caches empties the resident-graph memo and destroys its broadcasts") {
+    // last in this suite: both clears drop every cache the suite holds
+    for ((name, clear) <- Seq[(String, () => Unit)](
+        "catalog.clearCache" -> (() => spark.catalog.clearCache()),
+        "resetArtifactCaches" -> (() => graft.queries.Artifacts.resetArtifactCaches(spark)))) {
+      searchedSnapshot()
+      val held = graft.exec.ResidentGraph.resident
+      assert(held.nonEmpty, s"$name: the memo held no graph after a search of a cached snapshot")
+      clear()
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      assert(graft.exec.ResidentGraph.resident.isEmpty, s"$name left graphs in the memo")
+      assert(held.forall(org.apache.spark.graft.BroadcastDestroyed(_)), s"$name left a resident graph's broadcast alive")
+    }
   }
 }

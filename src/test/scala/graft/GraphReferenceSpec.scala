@@ -8,6 +8,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.exec.ResidentGraph
 import graft.functions.VectorFunctions.{cosine, l2sq}
 import graft.index.GraphIndex
 import graft.operators.Knn
@@ -23,7 +24,9 @@ import graft.operators.Knn
   * and ±Inf components, null ids and vectors, empty sides, k beyond the
   * visited set, seedMod beyond the base, and a base spread over more
   * partitions than rows. A second setting walks long sparse chains, where
-  * the rows each hop keeps decide the top-k. Query ids are distinct and
+  * the rows each hop keeps decide the top-k. Each case is also searched
+  * twice over its base and adjacency cached, so the second search reads
+  * the snapshot's resident graph from the memo. Query ids are distinct and
   * non-null: the operator walks rows sharing a query_id apart, where the
   * hop loop mixed their beams. */
 class GraphReferenceSpec extends AnyFunSuite {
@@ -121,7 +124,28 @@ class GraphReferenceSpec extends AnyFunSuite {
     val (q, b, adj, allowed) = frames(c)
     val expected = collectRanked(reference(c, q, b, adj, allowed, defect))
     checked += ((c, expected))
-    Prop(collectRanked(engine(c, q, b, adj, allowed)) == expected) :| c.mode
+    val direct = Prop(collectRanked(engine(c, q, b, adj, allowed)) == expected) :| c.mode
+    if (defect.nonEmpty) direct else direct && resident(c, q, b, adj, allowed, expected)
+  }
+
+  /** The engine over the base and adjacency cached, searched twice: the
+    * first search packs the snapshot's resident graph, the second reads
+    * it from the memo. */
+  private def resident(c: Case, q: DataFrame, b: DataFrame, adj: DataFrame, allowed: DataFrame,
+      expected: Ranked): Prop = {
+    val (cb, ca) = (b.cache(), adj.cache())
+    try {
+      val before = ResidentGraph.resident.toSet
+      val first = collectRanked(engine(c, q, cb, ca, allowed))
+      val held = ResidentGraph.resident.toSet
+      val second = collectRanked(engine(c, q, cb, ca, allowed))
+      // the memo only shrinks while an earlier case's caches are dropped;
+      // a batch with no query rows may never reach the operator
+      val packedFirst = (held -- before).nonEmpty
+      val packedSecond = (ResidentGraph.resident.toSet -- held).nonEmpty
+      Prop(first == expected && second == expected) :| s"${c.mode} over cached inputs" &&
+        Prop((c.queries.isEmpty || packedFirst) && !packedSecond) :| s"${c.mode} read from the memo"
+    } finally Seq(cb, ca).foreach(_.unpersist(blocking = true))
   }
 
   private val value: Gen[Double] = Gen.frequency(

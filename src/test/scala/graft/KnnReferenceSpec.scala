@@ -17,7 +17,10 @@ import graft.operators.Knn
   * partitions, float and double vectors, int and long query ids. Each
   * corpus is also ranked by the broadcast-join composition the block
   * kernel replaced: the Column kernel projected over
-  * `spread(base) × broadcast(queries)`, then `Knn.ranked`. */
+  * `spread(base) × broadcast(queries)`, then `Knn.ranked`.
+  * `Knn.hammingTopK` is checked against a plain-Scala popcount over int64
+  * signatures with tied distances, duplicate and null ids, null
+  * signatures and empty sides. */
 class KnnReferenceSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -171,5 +174,74 @@ class KnnReferenceSpec extends AnyFunSuite {
         case _ => false
       }, s"a defective ${bad.name} reference went undetected: ${res.status}")
     }
+  }
+
+  /** Packed int64 signatures for `Knn.hammingTopK`; `null` is a null id,
+    * signature or query id. */
+  case class SigCorpus(queries: Seq[(java.lang.Long, java.lang.Long)],
+      base: Seq[(java.lang.Long, java.lang.Long)], k: Int)
+
+  /** The ranked-output contract over Hamming distance in plain Scala: per
+    * query id, the popcount of `q XOR b` for every pair with a signature
+    * on both sides and a base id, ordered by (dist, id), distinct pairs
+    * once, the first k ranked from 1. `idsDescending` seeds a defect. */
+  def hammingReference(c: SigCorpus, idsDescending: Boolean = false): Ranked = {
+    val order = Ordering.Tuple2(Ordering.Double.TotalOrdering,
+      if (idsDescending) Ordering.Long.reverse else Ordering.Long)
+    c.queries.filter(_._2 != null).groupBy(_._1).toSeq.flatMap { case (qid, qs) =>
+      val pairs = for ((_, q) <- qs; (id, b) <- c.base if id != null && b != null)
+        yield (java.lang.Long.bitCount(q ^ b).toDouble, id.longValue)
+      pairs.distinct.sorted(order).take(c.k).zipWithIndex.map { case ((_, id), r) => (qid: Any, id, r + 1) }
+    }.toSet
+  }
+
+  private val sigCorpus: Gen[SigCorpus] = for {
+    pool <- Gen.listOfN(3, Gen.choose(Long.MinValue, Long.MaxValue))
+    // shared signatures and small ones make tied distances common
+    sig = Gen.frequency(4 -> Gen.oneOf(pool).map(Long.box), 2 -> Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box),
+      2 -> Gen.choose(0L, 15L).map(Long.box), 1 -> Gen.const(null: java.lang.Long))
+    nb <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 20))
+    base <- Gen.listOfN(nb, Gen.zip(
+      Gen.frequency(12 -> Gen.choose(0L, 30L).map(Long.box), 1 -> Gen.const(null: java.lang.Long)), sig))
+    nq <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 5))
+    queries <- Gen.listOfN(nq, Gen.zip(
+      Gen.frequency(8 -> Gen.choose(0L, 4L).map(Long.box), 1 -> Gen.const(null: java.lang.Long)), sig))
+    k <- Gen.choose(1, nb + 3)
+  } yield SigCorpus(queries, base, k)
+
+  private val checkedSigs = scala.collection.mutable.ArrayBuffer.empty[SigCorpus]
+
+  private def runHamming(idsDescending: Boolean): SCTest.Result =
+    SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(Seed(20261020L)).withWorkers(1), Prop.forAllNoShrink(sigCorpus) { c =>
+      checkedSigs += c
+      def df(rows: Seq[(java.lang.Long, java.lang.Long)], id: String, sig: String) =
+        spark.createDataFrame(java.util.Arrays.asList(rows.map { case (a, b) => Row(a, b) }: _*),
+          StructType(Seq(StructField(id, LongType), StructField(sig, LongType))))
+      val got = collectRanked(Knn.hammingTopK(df(c.queries, "query_id", "q_sig"), df(c.base, "vec_id", "sig"), c.k))
+      Prop(got == hammingReference(c, idsDescending)) :| c.toString
+    })
+
+  test("Knn.hammingTopK equals a plain-Scala popcount reference") {
+    checkedSigs.clear()
+    val res = runHamming(idsDescending = false)
+    assert(res.passed, res.status.toString)
+    val cs = checkedSigs.toSeq
+    def live(c: SigCorpus) = c.base.filter(b => b._1 != null && b._2 != null)
+    val missed = Map(
+      "tied distances under two ids" -> cs.exists(c => c.queries.exists(q => q._2 != null &&
+        live(c).groupBy(b => java.lang.Long.bitCount(q._2 ^ b._2)).exists(_._2.map(_._1).distinct.size > 1))),
+      "duplicate ids" -> cs.exists(c => live(c).map(_._1).distinct.size < live(c).size),
+      "null id or signature" -> cs.exists(_.base.exists(b => b._1 == null || b._2 == null)),
+      "null query id" -> cs.exists(_.queries.exists(q => q._1 == null && q._2 != null)),
+      "empty base" -> cs.exists(_.base.isEmpty),
+      "k > n" -> cs.exists(c => c.base.nonEmpty && c.k > c.base.size)).collect { case (n, false) => n }
+    assert(missed.isEmpty, s"the corpora never had: ${missed.mkString(", ")}")
+  }
+
+  test("the popcount property fails on a reference with a reversed id tie-break") {
+    val res = runHamming(idsDescending = true)
+    // a mismatch, not an exception: the same seed passes the true reference
+    assert(res.status.isInstanceOf[SCTest.Failed], s"the defect went undetected: ${res.status}")
   }
 }

@@ -346,6 +346,35 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("knn_graph_upsert: the insert's re-rank broadcasts the base once, its node-queries reuse it") {
+    // Knn.rerank's queries are the base renamed; both sides canonicalize
+    // alike. Run cold: AQE reuses no exchange above a cached-table stage
+    // (its canonical form keeps the stage's own expression ids), so a
+    // base another suite left cached would be broadcast twice regardless
+    graft.queries.Artifacts.resetArtifactCaches(spark)
+    val p = planOf("knn_graph_upsert")
+    assert(p.contains("ReusedExchange"), p)
+  }
+
+  test("a warm graph search reads its resident graph: no broadcast of base or adjacency, one shuffle") {
+    import org.apache.spark.sql.functions.col
+    val base = graft.sources.Tables.embeddingBase(spark, dir).select(col("vec_id"), col("embedding")).cache()
+    val adj = graft.index.GraphIndex.buildExact(base, 8).cache()
+    val queries = graft.sources.Tables.embeddingQueries(spark, dir)
+    try {
+      base.count(); adj.count()
+      graft.index.GraphIndex.search(queries, base, adj, 10).collect()
+      val warm = graft.index.GraphIndex.search(queries, base, adj, 10)
+      val text = finalPlan(warm)
+      // the search's own nodes, not those of the plans cached under it
+      val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(warm.queryExecution.executedPlan) { case p => p.nodeName }
+      assert(nodes.contains("BeamSearch"), text)
+      assert(!nodes.exists(_.startsWith("Broadcast")), text)
+      assert(nodes.count(_ == "Exchange") == 1, text)
+    } finally Seq(adj, base).foreach(_.unpersist(blocking = true))
+  }
+
   test("kernel nodes carry their inputs' constraints on query_id and vec_id") {
     import org.apache.spark.sql.functions.{array, col, lit}
     import graft.exec.{BeamParams, BeamSearch, Metric, VectorTopK}
@@ -359,7 +388,7 @@ class PlanSpec extends AnyFunSuite {
     val queries = vectors("query_id", "q_embedding").filter(col("query_id") % 20 === 0)
     val adjacency = base.select(col("vec_id").as("node_id"), col("vec_id").as("neighbor_id"))
     for (df <- Seq(VectorTopK.candidates(queries, base, 3, Metric.L2),
-        BeamSearch.visited(queries, base, adjacency, BeamParams(Metric.L2, 16, 8, 1, 4)))) {
+        BeamSearch.ranked(queries, base, adjacency, None, 3, BeamParams(Metric.L2, 16, 8, 1, 4)))) {
       val node = df.queryExecution.optimizedPlan.collectFirst {
         case n @ (_: VectorTopK | _: BeamSearch) => n
       }.get

@@ -11,14 +11,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, ExpressionSet, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 
@@ -68,10 +67,7 @@ object BeamSearch {
   def ranked(queries: DataFrame, base: DataFrame, adjacency: DataFrame, allowed: Option[DataFrame],
       k: Int, params: BeamParams): DataFrame = {
     require(k > 0, "k must be positive")
-    val q0 = queries.select(col("query_id"), col("q_embedding"))
-    val qid = q0.queryExecution.analyzed.output.head
-    val key = bridge.normalizeFloats(qid)
-    val q = if (key eq qid) q0 else q0.select(bridge.column(key).as("query_id"), col("q_embedding"))
+    val q = VectorTopK.keyed(queries)
     val b = base.select(col("vec_id").cast(LongType).as("vec_id"), col("embedding"))
     val a = adjacency.select(col("node_id").cast(LongType).as("node_id"),
       col("neighbor_id").cast(LongType).as("neighbor_id"))
@@ -83,14 +79,17 @@ object BeamSearch {
   }
 }
 
-/** Physical [[BeamSearch]]: the query batch arrives clustered by
-  * `query_id`; the graph is a [[PackedGraph]] broadcast once per cached
-  * snapshot ([[ResidentGraph]]), so the base and the adjacency are read
-  * only when a snapshot is first searched, and the whole graph must fit
-  * in each executor's memory, as an HNSW index is resident in the
-  * reference backends. Each task runs every query row's seeding and hops
-  * in memory and feeds its visited rows, kept to the `allowed` ids (a
-  * broadcast child), into one [[TopKHeap]] per `query_id`, so it emits
+/** Physical [[BeamSearch]]. The graph is a [[PackedGraph]] broadcast once
+  * per cached snapshot ([[ResidentGraph]]), so the base and the
+  * adjacency are read only when a snapshot is first searched, and the
+  * whole graph must fit in each executor's memory, as an HNSW index is
+  * resident in the reference backends. A driver-local query batch
+  * (`queries` a [[LocalTableScanExec]]) is a literal: the node splits its
+  * rows into tasks itself by the hash of `query_id`, so every row of one
+  * id lands in one task with no exchange. Any other batch arrives
+  * clustered by `query_id`. Each task runs every query row's seeding and
+  * hops in memory and feeds its visited rows, kept to the `allowed` ids
+  * (a broadcast child), into one [[TopKHeap]] per `query_id`, so it emits
   * the final ranks: one task pass, no per-hop job and no rank stage.
   * `numPairs` counts the pairs scored. */
 case class BeamSearchExec(params: BeamParams, k: Int, rank: Attribute, queries: SparkPlan, base: SparkPlan,
@@ -99,9 +98,16 @@ case class BeamSearchExec(params: BeamParams, k: Int, rank: Attribute, queries: 
   override def output: Seq[Attribute] = Seq(queries.output.head, base.output.head, rank)
   override def producedAttributes: AttributeSet = AttributeSet(rank)
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(queries.output.head)) :: UnspecifiedDistribution :: UnspecifiedDistribution ::
+    (if (local.isDefined) UnspecifiedDistribution else ClusteredDistribution(Seq(queries.output.head))) ::
+      UnspecifiedDistribution :: UnspecifiedDistribution ::
       allowed.map(_ => BroadcastDistribution(IdentityBroadcastMode)).toList
-  override def outputPartitioning: Partitioning = queries.outputPartitioning
+  override def outputPartitioning: Partitioning =
+    local.fold(queries.outputPartitioning)(l => UnknownPartitioning(BeamSearchExec.tasks(l, sparkContext)))
+
+  private def local: Option[LocalTableScanExec] = queries match {
+    case l: LocalTableScanExec => Some(l)
+    case _ => None
+  }
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -116,7 +122,8 @@ case class BeamSearchExec(params: BeamParams, k: Int, rank: Attribute, queries: 
     val loadQuery = BlockTopKExec.loader(queries.output(1).dataType)
     val outTypes = output.map(_.dataType).toArray
     val (p, topK) = (params, k)
-    queries.execute().mapPartitions { rows =>
+    val input = local.fold(queries.execute())(l => BeamSearchExec.byKey(sparkContext, l, queries.output.head))
+    input.mapPartitions { rows =>
       val walk = new BeamWalk(graph.value, p)
       val keep: Long => Boolean = allowedIds match {
         case None => _ => true
@@ -147,6 +154,24 @@ case class BeamSearchExec(params: BeamParams, k: Int, rank: Attribute, queries: 
 
   override protected def withNewChildrenInternal(c: IndexedSeq[SparkPlan]): BeamSearchExec =
     copy(queries = c(0), base = c(1), adjacency = c(2), allowed = allowed.map(_ => c(3)))
+}
+
+private object BeamSearchExec {
+  /** The tasks a local batch is split into: one per core, at most one
+    * per row. */
+  def tasks(local: LocalTableScanExec, sc: SparkContext): Int =
+    math.max(1, math.min(local.rows.size, sc.defaultParallelism))
+
+  /** `local`'s rows split into [[tasks]] partitions by the hash of their
+    * `qid` key ([[BlockTopKExec.keySlots]]), so the rows of one
+    * `query_id` share a partition. */
+  def byKey(sc: SparkContext, local: LocalTableScanExec, qid: Attribute): RDD[InternalRow] = {
+    val rows = local.executeCollect()
+    val (slots, keys) = BlockTopKExec.keySlots(rows, qid)
+    val n = tasks(local, sc)
+    val byTask = rows.indices.groupBy(i => Math.floorMod(keys(slots(i)).hashCode, n))
+    sc.parallelize(Seq.tabulate(n)(t => byTask.getOrElse(t, Nil).map(rows).toArray), n).flatMap(_.iterator)
+  }
 }
 
 /** The immutable half of a beam search's graph, packed once on the

@@ -1,60 +1,151 @@
 package graft.exec
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
 import graft.functions.{FloatVecFold, TopKHeap}
 
-/** Physical [[VectorTopK]]: the query batch is broadcast (`left`), the
-  * base streams in its own partitioning (`right`). Each task copies the
-  * batch into one contiguous double array ([[QueryBlock]]), scores every
-  * base row against it under `metric` and keeps one [[TopKHeap]] per
-  * query, then emits only the heaps' rows — k per query per partition
-  * instead of one joined row per (query, base) pair. `numPairs` counts
-  * the pairs scored. */
-case class BlockTopKExec(k: Int, metric: Metric, dist: Attribute, left: SparkPlan, right: SparkPlan)
-    extends BinaryExecNode {
-  override def output: Seq[Attribute] = Seq(left.output.head, right.output.head, dist)
-  override def producedAttributes: AttributeSet = AttributeSet(dist)
+/** Physical [[VectorTopK]]. The base streams in its own partitioning
+  * (`right`). A driver-local query batch (`left` a
+  * [[LocalTableScanExec]]) is a literal: its rows ride in the task
+  * closure, so the node needs no exchange. Any other batch is broadcast.
+  * Each task copies the batch into one contiguous double array
+  * ([[QueryBlock]]), scores every base row against it under `metric` and
+  * keeps one [[TopKHeap]] per query, so it emits k rows per query per
+  * partition instead of one joined row per (query, base) pair.
+  *
+  * Unranked, those rows are the output `(query_id, vec_id, dist)`.
+  * Ranked, the query rows of one `query_id` share a heap, and the node
+  * emits the final `(query_id, neighbor_id, rank)` through one of two
+  * paths. `executeCollect` runs the kernel as one stage and merges each
+  * partition's heaps on the driver: one Spark job, as Spark's own
+  * `TakeOrderedAndProjectExec` collects. `execute`, for consumers that do
+  * not collect, merges them in a keyed shuffle over
+  * `spark.sql.shuffle.partitions`. `numPairs` counts the pairs scored. */
+case class BlockTopKExec(k: Int, metric: Metric, ranked: Boolean, score: Attribute, left: SparkPlan,
+    right: SparkPlan) extends BinaryExecNode {
+  override def output: Seq[Attribute] =
+    Seq(left.output.head, if (ranked) right.output.head.withNullability(false) else right.output.head, score)
+  override def producedAttributes: AttributeSet = AttributeSet(score)
   override def requiredChildDistribution: Seq[Distribution] =
-    BroadcastDistribution(IdentityBroadcastMode) :: UnspecifiedDistribution :: Nil
+    (if (left.isInstanceOf[LocalTableScanExec]) UnspecifiedDistribution
+     else BroadcastDistribution(IdentityBroadcastMode)) :: UnspecifiedDistribution :: Nil
   override def outputPartitioning: Partitioning =
-    UnknownPartitioning(right.outputPartitioning.numPartitions)
+    UnknownPartitioning(if (ranked) conf.numShufflePartitions else right.outputPartitioning.numPartitions)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "numPairs" -> SQLMetrics.createMetric(sparkContext, "number of pairs scored"))
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numOutputRows = longMetric("numOutputRows")
+  /** The query batch: the local rows, or the broadcast that tasks read. */
+  private def batch(): BlockTopKExec.Batch = left match {
+    case local: LocalTableScanExec => Left(local.executeCollect())
+    case _ => Right(left.executeBroadcast[Array[InternalRow]]())
+  }
+
+  /** The kernel stage over `queries`: per base partition, the [[QueryBlock]]
+    * with heap slot `slots(i)` for query row i, after `emit` reads it. */
+  private def kernel[T: ClassTag](queries: BlockTopKExec.Batch, slots: Array[Int], nSlots: Int)(
+      emit: QueryBlock => Iterator[T]): RDD[T] = {
     val numPairs = longMetric("numPairs")
-    val queries = left.executeBroadcast[Array[InternalRow]]()
-    val qidType = left.output.head.dataType
     val loadQuery = BlockTopKExec.loader(left.output(1).dataType)
     val loadBase = BlockTopKExec.loader(right.output(1).dataType)
-    val outTypes = output.map(_.dataType).toArray
-    val topK = k
-    val m = metric
+    val (topK, m) = (k, metric)
     right.execute().mapPartitions { rows =>
-      val block = new QueryBlock(queries.value, loadQuery, topK, m)
+      val block = new QueryBlock(BlockTopKExec.rows(queries), slots, nSlots, loadQuery, topK, m)
       rows.foreach(block.score(_, loadBase))
       numPairs += block.pairs
-      val toUnsafe = UnsafeProjection.create(outTypes)
-      block.candidates(qidType).map { r => numOutputRows += 1; toUnsafe(r) }
+      emit(block)
     }
   }
+
+  /** Ranked: each partition's non-empty heaps, keyed by their slot in
+    * `keys` (the distinct `query_id`s of the batch). */
+  private def partialHeaps(): (Array[UnsafeRow], RDD[(Int, TopKHeap)]) = {
+    val queries = batch()
+    val (slots, keys) = BlockTopKExec.keySlots(BlockTopKExec.rows(queries), left.output.head)
+    (keys, kernel(queries, slots, keys.length) { block =>
+      block.slotHeaps.iterator.zipWithIndex.collect { case (h, slot) if h.size > 0 => (slot, h) }
+    })
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    val outTypes = output.map(_.dataType).toArray
+    if (ranked) {
+      val (keys, heaps) = partialHeaps()
+      heaps.reduceByKey(new HashPartitioner(conf.numShufflePartitions), (a, b) => { b.mergeInto(a); a })
+        .mapPartitions { it =>
+          val toUnsafe = UnsafeProjection.create(outTypes)
+          it.flatMap { case (slot, h) =>
+            BlockTopKExec.ranks(keys(slot), h, outTypes(0)).map { r => numOutputRows += 1; toUnsafe(r) }
+          }
+        }
+    } else {
+      val queries = batch()
+      val n = BlockTopKExec.rows(queries).length
+      val qidType = outTypes(0)
+      kernel(queries, Array.range(0, n), n) { block =>
+        val toUnsafe = UnsafeProjection.create(outTypes)
+        block.candidates(qidType).map { r => numOutputRows += 1; toUnsafe(r) }
+      }
+    }
+  }
+
+  /** Ranked: the kernel stage's heaps merged per `query_id` on the
+    * driver, so a collected top-k is one Spark job. */
+  override def executeCollect(): Array[InternalRow] =
+    if (!ranked) super.executeCollect()
+    else {
+      val (keys, heaps) = partialHeaps()
+      val merged = keys.map(_ => new TopKHeap(k))
+      heaps.collect().foreach { case (slot, h) => h.mergeInto(merged(slot)) }
+      val outTypes = output.map(_.dataType).toArray
+      val toUnsafe = UnsafeProjection.create(outTypes)
+      val rows = keys.indices.iterator.flatMap(slot => BlockTopKExec.ranks(keys(slot), merged(slot), outTypes(0)))
+        .map(toUnsafe(_).copy(): InternalRow).toArray
+      longMetric("numOutputRows") += rows.length
+      rows
+    }
 
   override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): BlockTopKExec =
     copy(left = l, right = r)
 }
 
 object BlockTopKExec {
+  /** A query batch: its rows, or a broadcast of them that tasks read. */
+  private[exec] type Batch = Either[Array[InternalRow], Broadcast[Array[InternalRow]]]
+
+  private[exec] def rows(batch: Batch): Array[InternalRow] = batch.fold(identity, _.value)
+
+  /** Each query row's key slot, and the distinct keys in first-seen order:
+    * `qid`, a query row's first column, as a one-column [[UnsafeRow]], so
+    * keys compare as Spark's hash aggregate groups them (by their bytes;
+    * one null key). */
+  private[exec] def keySlots(queries: Array[InternalRow], qid: Attribute): (Array[Int], Array[UnsafeRow]) = {
+    val key = UnsafeProjection.create(Seq(BoundReference(0, qid.dataType, qid.nullable)))
+    val slotOf = new java.util.LinkedHashMap[UnsafeRow, Integer]()
+    val slots = queries.map(q => slotOf.computeIfAbsent(key(q).copy(), _ => Int.box(slotOf.size)).intValue)
+    (slots, slotOf.keySet.toArray(new Array[UnsafeRow](0)))
+  }
+
+  /** The rows `(query_id, id, rank)` of `key`'s merged heap, rank 1 the
+    * nearest. */
+  private[exec] def ranks(key: UnsafeRow, h: TopKHeap, qidType: DataType): Iterator[InternalRow] = {
+    val qid = if (key.isNullAt(0)) null else key.get(0, qidType)
+    h.sortedIds.iterator.zipWithIndex.map { case (id, r) => new GenericInternalRow(Array[Any](qid, id, r + 1)) }
+  }
+
   /** Copies a vector's elements, promoted to double, into `out`. */
   type Loader = (ArrayData, Array[Double], Int) => Unit
 
@@ -74,12 +165,14 @@ object BlockTopKExec {
 }
 
 /** One task's query batch: the rows with an embedding, their vectors in
-  * one contiguous array (query j at `j * dim`), and a heap each. Rows
-  * with a null embedding score nothing, as the Column kernels return null
-  * on a null vector. */
-private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTopKExec.Loader, k: Int,
-    metric: Metric) {
-  private val live = queries.filter(!_.isNullAt(1))
+  * one contiguous array (query j at `j * dim`), and a heap each. Query
+  * row i keeps its top-k in heap slot `slots(i)` of `nSlots`, so rows
+  * sharing a slot share one heap. Rows with a null embedding score
+  * nothing, as the Column kernels return null on a null vector. */
+private[exec] final class QueryBlock(queries: Array[InternalRow], slots: Array[Int], nSlots: Int,
+    load: BlockTopKExec.Loader, k: Int, metric: Metric) {
+  private val liveRows = queries.indices.filter(!queries(_).isNullAt(1)).toArray
+  private val live = liveRows.map(queries)
   private val n = live.length
   private val lens = live.map(_.getArray(1).numElements())
   /** The common dimension, or -1 when the queries disagree (then every
@@ -90,7 +183,8 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
   /** Cosine only: √Σ q² per query, summed as the fused kernel sums it. */
   private val qNorms =
     if (metric == Metric.Cosine) Array.tabulate(n)(j => QueryBlock.norm(vecs, j * dim, dim)) else null
-  private val heaps = Array.fill(n)(new TopKHeap(k))
+  val slotHeaps: Array[TopKHeap] = Array.fill(nSlots)(new TopKHeap(k))
+  private val heaps = liveRows.map(i => slotHeaps(slots(i)))
   private val row = new Array[Double](math.max(dim, 0))
   var pairs = 0L
 
@@ -145,7 +239,8 @@ private[exec] final class QueryBlock(queries: Array[InternalRow], load: BlockTop
   @inline private def dist(acc: Double, j: Int, bNorm: Double): Double =
     QueryBlock.distance(metric, acc, if (qNorms == null) 0.0 else qNorms(j), bNorm)
 
-  /** Every heap's rows as `(query_id, vec_id, dist)`. */
+  /** Every live row's heap rows as `(query_id, vec_id, dist)`, for a
+    * block whose rows each have their own slot. */
   def candidates(qidType: DataType): Iterator[InternalRow] =
     Iterator.range(0, n).flatMap { j =>
       val qid = if (live(j).isNullAt(0)) null else live(j).get(0, qidType)

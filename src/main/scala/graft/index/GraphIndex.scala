@@ -27,7 +27,8 @@ import graft.operators.Knn
   *     both plain joins. A cosine graph is the inner-product build over
   *     unit vectors.
   *   - search: one [[graft.exec.BeamSearch]] operator. The query batch
-  *     is clustered by `query_id`, and each task walks the packed graph
+  *     is split into tasks by `query_id` (a driver-local batch by the
+  *     operator itself, any other by a shuffle), and each task walks the packed graph
   *     in memory for its queries: score the deterministic entry points
   *     (`vec_id % seedMod == 0` — the coarse "upper layer"; its size is
   *     |base|/seedMod, so seedMod tunes the brute-force fraction), keep

@@ -12,21 +12,27 @@ import graft.functions.VectorFunctions._
   * (SURVEY §2.3; canonical impl `/root/reference/dynamic_script_faiss.py:60`
   * `index.search(xq, topk)`).
   *
-  * Spark formulation: the query side is always small relative to the base
-  * (10k vs 1M in SIFT1M; 1-in-20 here), so it is broadcast and the base
-  * streams once per partition with every query in memory — which is
-  * exactly what the reference's batch kernels do per thread.
+  * Spark formulation: the query side is small relative to the base (10k
+  * vs 1M in SIFT1M; 1-in-20 here), so every task holds the whole batch
+  * and the base streams once per partition with every query in memory —
+  * which is exactly what the reference's batch kernels do per thread. A
+  * driver-local batch (a serving client's rows, `createDataFrame` over a
+  * local list) rides in the task closure; any other batch (a parquet
+  * scan, a cached relation) is broadcast.
   *
   * Per-query top-k has two physical strategies:
   *   - `exactWindow`: row_number over (query_id, dist) — simple, but sorts
   *     |base|×|queries| rows through a shuffle; fine at fixture scale only.
   *   - `exact` (default): [[graft.exec.BlockTopKExec]] scores each base
-  *     partition against the broadcast batch in one block kernel with a
-  *     bounded heap per query ([[graft.functions.TopKHeap]]) and emits
-  *     only k rows per query per partition, which [[ranked]] merges — no
-  *     joined row per (query, base) pair, the plan that survives a 100×
-  *     scale-up. [[cosineTopK]], [[mipsTopK]] and the prefix pass of
-  *     [[prefixRerankStored]] run the same kernel under their metric.
+  *     partition against the batch in one block kernel with a bounded
+  *     heap per query ([[graft.functions.TopKHeap]]) and emits only k rows
+  *     per query per partition — no joined row per (query, base) pair, the
+  *     plan that survives a 100× scale-up. A local batch's heaps are merged
+  *     by the node itself, on the driver when the result is collected, so
+  *     a collected search is one Spark job; any other batch's rows are
+  *     merged by [[ranked]]. [[cosineTopK]], [[mipsTopK]] and the prefix
+  *     pass of [[prefixRerankStored]] run the same kernel under their
+  *     metric.
   *
   * Expected input schemas:
   *   queries: (query_id: Long, q_embedding: Array[Float])
@@ -178,10 +184,11 @@ object Knn {
       .withColumn("dist", dist)
 
   /** Exact kNN under `metric` — the scale path: per base partition, the
-    * block kernel's top-k candidates ([[graft.exec.VectorTopK]]), merged
-    * by [[ranked]]. */
+    * block kernel's top-k ([[graft.exec.VectorTopK]]), merged in the node
+    * for a driver-local batch, else by [[ranked]]. */
   def topK(queries: DataFrame, base: DataFrame, k: Int, metric: Metric): DataFrame =
-    ranked(VectorTopK.candidates(queries, spread(base), k, metric), "query_id", k)
+    if (VectorTopK.isLocal(queries)) VectorTopK.ranked(queries, spread(base), k, metric)
+    else ranked(VectorTopK.candidates(queries, spread(base), k, metric), "query_id", k)
 
   /** Exact squared-L2 kNN: [[topK]] under [[Metric.L2]]. */
   def exact(queries: DataFrame, base: DataFrame, k: Int): DataFrame =

@@ -98,6 +98,55 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(ranked(Knn.mipsTopK(fromOnes, base, 10)) == Seq((12L, 5L, 1), (12L, 4L, 2), (12L, 1L, 3)))
   }
 
+  test("a local query batch ranks alike collected, executed and cached, through every edge case") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val base = Seq((1L, Array(0f, 0f)), (2L, Array(1f, 1f)), (3L, Array(2f, 2f))).toDF("vec_id", "embedding")
+    /** A local batch of `rows` `(query_id, q_embedding)`, `query_id` of `idType`. */
+    def batch(idType: DataType, rows: (Any, Array[Float])*): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map { case (q, v) => Row(q, Option(v).map(_.toSeq).orNull) }: _*),
+        StructType(Seq(StructField("query_id", idType), StructField("q_embedding", ArrayType(FloatType, containsNull = false)))))
+    // a double id compares by its bits, so a NaN id equals itself and -0.0 differs from 0.0
+    def key(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other => other
+    }
+    def rows(rs: Array[Row]) = rs.map(r => (key(r.get(0)), r.getLong(1), r.getInt(2))).toSet
+    /** `Knn.exact` of `q` collected, executed (its `rdd`) and over the same
+      * rows cached, checked equal; the collected rows. */
+    def threeWays(q: DataFrame, k: Int): Set[(Any, Long, Int)] = {
+      val collected = rows(Knn.exact(q, base, k).collect())
+      assert(rows(Knn.exact(q, base, k).rdd.collect()) == collected, "executed")
+      q.cache()
+      try assert(rows(Knn.exact(q, base, k).collect()) == collected, "cached batch")
+      finally q.unpersist(blocking = true)
+      collected
+    }
+    assert(threeWays(batch(LongType), 2).isEmpty, "empty batch")
+    assert(threeWays(batch(LongType, 10L -> Array(0f, 0f)), 10) == Set((10L, 1L, 1), (10L, 2L, 2), (10L, 3L, 3)),
+      "k > n")
+    // one id's rows merge into one top-k over both rows' candidates; a
+    // null embedding scores nothing
+    assert(threeWays(batch(LongType, 10L -> Array(0f, 0f), 10L -> Array(2f, 2f), (11L, null)), 2) ==
+      Set((10L, 1L, 1), (10L, 3L, 2)), "duplicate query_id")
+    assert(threeWays(batch(LongType, (null, Array(0f, 0f)), (null, Array(2f, 2f)), 12L -> Array(1f, 1f)), 2) ==
+      Set((null, 1L, 1), (null, 3L, 2), (12L, 2L, 1), (12L, 1L, 2)), "null query_id")
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val nanBits = java.lang.Double.doubleToRawLongBits(Double.NaN)
+    assert(threeWays(batch(DoubleType, Double.NaN -> Array(0f, 0f), otherNaN -> Array(2f, 2f),
+        -0.0 -> Array(1f, 1f), 0.0 -> Array(2f, 2f)), 2) ==
+      Set((nanBits, 1L, 1), (nanBits, 3L, 2), (0L, 2L, 1), (0L, 3L, 2)), "NaN and -0.0 query ids")
+    val mismatch = batch(LongType, 10L -> Array(1f, 2f, 3f))
+    for ((path, run) <- Seq[(String, () => Any)](
+        "collected" -> (() => Knn.exact(mismatch, base, 1).collect()),
+        "executed" -> (() => Knn.exact(mismatch, base, 1).rdd.collect()),
+        "cached batch" -> { () => mismatch.cache(); try Knn.exact(mismatch, base, 1).collect()
+          finally mismatch.unpersist(blocking = true) })) {
+      val e = intercept[Exception](run())
+      assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("dimension mismatch")), path)
+    }
+  }
+
   test("building kNN starts no Spark job") {
     val base = Seq((1L, Array(0f, 0f)), (2L, Array(1f, 1f))).toDF("vec_id", "embedding")
       .repartition(4).cache()

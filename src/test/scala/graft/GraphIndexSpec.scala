@@ -175,6 +175,23 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(second <= 2, s"a second search of the same snapshot ran $second jobs")
   }
 
+  test("a warm graph search of a local batch starts exactly 1 Spark job") {
+    // rows built in the driver, as a serving client sends them: the
+    // operator splits them into tasks itself, so no shuffle runs before
+    // the beam stage
+    queries.count(); base.count(); exactAdj.count()
+    val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+    val warm = GraphIndex.search(local, base, exactAdj, k = 10).collect()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val (jobs, stages) = SparkTestSession.jobsAndStages {
+      rows = GraphIndex.search(local, base, exactAdj, k = 10).collect()
+    }
+    assert((jobs, stages) == (1, 1), s"a warm search of a local batch ran $jobs jobs of $stages stages")
+    def ranked(rs: Array[org.apache.spark.sql.Row]) = rs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(ranked(rows) == ranked(warm))
+    assert(ranked(rows) == ranked(GraphIndex.search(queries, base, exactAdj, k = 10).collect()))
+  }
+
   /** A fresh cached snapshot: the base and its exact adjacency,
     * materialised, and searched once so the memo holds its graph. */
   private def searchedSnapshot(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {

@@ -24,7 +24,10 @@ import graft.operators.Knn
   * and ±Inf components, null ids and vectors, empty sides, k beyond the
   * visited set, seedMod beyond the base, and a base spread over more
   * partitions than rows. A second setting walks long sparse chains, where
-  * the rows each hop keeps decide the top-k. Each case is also searched
+  * the rows each hop keeps decide the top-k. Each search runs three ways:
+  * its local query batch collected and executed (read through `rdd`),
+  * both split into tasks by the operator itself, and the same rows cached
+  * (a non-local batch, shuffled by `query_id`). Each case is also searched
   * twice over its base and adjacency cached, so the second search reads
   * the snapshot's resident graph from the memo. Query ids are distinct and
   * non-null: the operator walks rows sharing a query_id apart, where the
@@ -117,14 +120,30 @@ class GraphReferenceSpec extends AnyFunSuite {
   private def collectRanked(df: DataFrame): Ranked =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
+  /** The physical paths of a search over a local query batch `q`, each
+    * with the search's ranked rows through it. */
+  private val paths: Seq[(String, (DataFrame => DataFrame, DataFrame) => Ranked)] = Seq(
+    "collected" -> ((search, q) => collectRanked(search(q))),
+    "executed" -> ((search, q) => search(q).rdd.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet),
+    "cached batch" -> { (search, q) =>
+      q.cache()
+      try collectRanked(search(q)) finally q.unpersist(blocking = true)
+    })
+
   /** Every checked case with the reference's rows. */
   private val checked = scala.collection.mutable.ArrayBuffer.empty[(Case, Ranked)]
+  /** The paths on which a checked case's search disagreed with the reference. */
+  private val mismatched = scala.collection.mutable.Set.empty[String]
 
   private def agrees(defect: String)(c: Case): Prop = {
     val (q, b, adj, allowed) = frames(c)
     val expected = collectRanked(reference(c, q, b, adj, allowed, defect))
     checked += ((c, expected))
-    val direct = Prop(collectRanked(engine(c, q, b, adj, allowed)) == expected) :| c.mode
+    val direct = paths.map { case (name, rows) =>
+      val got = rows(engine(c, _, b, adj, allowed), q)
+      if (got != expected) mismatched += name
+      Prop(got == expected) :| s"${c.mode} $name"
+    }.reduce(_ && _)
     if (defect.nonEmpty) direct else direct && resident(c, q, b, adj, allowed, expected)
   }
 
@@ -265,15 +284,22 @@ class GraphReferenceSpec extends AnyFunSuite {
       "no chain case ranked a row the walk reached")
   }
 
-  test("the property fails on a hop loop that leaves the seeds unvisited") {
-    val res = run(graph, SeedsUnvisited, 8)
+  /** Runs the property with `defect` seeded: it must fail, and on every
+    * path. */
+  private def catches(gen: Gen[Case], defect: String): Unit = {
+    mismatched.clear()
+    val res = run(gen, defect, 8)
     // a mismatch, not an exception: the same seed passes the true loop
     assert(res.status.isInstanceOf[SCTest.Failed], s"the defect went undetected: ${res.status}")
+    val missed = paths.map(_._1).filterNot(mismatched)
+    assert(missed.isEmpty, s"the defect went undetected on: ${missed.mkString(", ")}")
+  }
+
+  test("the property fails on a hop loop that leaves the seeds unvisited") {
+    catches(graph, SeedsUnvisited)
   }
 
   test("the property fails on a hop loop that prunes the beam by id") {
-    val res = run(chains, BeamById, 8)
-    // a mismatch, not an exception: the same seed passes the true loop
-    assert(res.status.isInstanceOf[SCTest.Failed], s"the defect went undetected: ${res.status}")
+    catches(chains, BeamById)
   }
 }

@@ -15,9 +15,13 @@ import graft.operators.Knn
   * and ids, tied distances, ±0, NaN and ±Inf components, zero vectors,
   * null ids and vectors, empty sides, k > n, fewer base rows than
   * partitions, float and double vectors, int and long query ids. Each
-  * corpus is also ranked by the broadcast-join composition the block
-  * kernel replaced: the Column kernel projected over
-  * `spread(base) × broadcast(queries)`, then `Knn.ranked`.
+  * search runs three ways: its local query batch collected (one node that
+  * merges on the driver), the same node executed (its keyed merge, read
+  * through `rdd`), and the same rows cached (a non-local batch:
+  * broadcast, then `Knn.ranked`). Each corpus is also ranked by the
+  * broadcast-join composition the block kernel replaced: the Column
+  * kernel projected over `spread(base) × broadcast(queries)`, then
+  * `Knn.ranked`.
   * `Knn.hammingTopK` is checked against a plain-Scala popcount over int64
   * signatures with tied distances, duplicate and null ids, null
   * signatures and empty sides. */
@@ -90,20 +94,37 @@ class KnnReferenceSpec extends AnyFunSuite {
   private def collectRanked(df: DataFrame): Ranked =
     df.collect().map(r => (r.get(0), r.getLong(1), r.getInt(2))).toSet
 
-  private val checked = scala.collection.mutable.ArrayBuffer.empty[Corpus]
+  /** The physical paths of a search over a local query batch `q`, each
+    * with the search's ranked rows through it. */
+  private val paths: Seq[(String, (DataFrame => DataFrame, DataFrame) => Ranked)] = Seq(
+    "collected" -> ((search, q) => collectRanked(search(q))),
+    "executed" -> ((search, q) => search(q).rdd.collect().map(r => (r.get(0), r.getLong(1), r.getInt(2))).toSet),
+    "cached batch" -> { (search, q) =>
+      q.cache()
+      try collectRanked(search(q)) finally q.unpersist(blocking = true)
+    })
 
-  /** Under every metric, the engine search and the join composition
-    * both equal `ref` on `c`. */
+  private val checked = scala.collection.mutable.ArrayBuffer.empty[Corpus]
+  /** The checks, "<metric> <path>", that disagreed with the reference. */
+  private val mismatched = scala.collection.mutable.Set.empty[String]
+
+  /** Under every metric, the engine search through each path and the
+    * join composition all equal `ref` on `c`. */
   private def agrees(ref: (Metric, Corpus) => Ranked)(c: Corpus): Prop = {
     checked += c
     val (q, b) = frames(c)
-    metrics.map { m =>
+    metrics.flatMap { m =>
       val expected = ref(m, c)
-      val joined = Knn.ranked(Knn.spread(b).crossJoin(broadcast(q))
+      def joined = Knn.ranked(Knn.spread(b).crossJoin(broadcast(q))
         .select(col("query_id"), col("vec_id"), m.column(col("q_embedding"), col("embedding")).as("dist")),
         "query_id", c.k)
-      Prop(collectRanked(m.search(q, b, c.k)) == expected) :| m.name &&
-        Prop(collectRanked(joined) == expected) :| s"${m.name} join composition"
+      val got = paths.map { case (name, rows) => name -> rows(m.search(_, b, c.k), q) } :+
+        ("join composition" -> collectRanked(joined))
+      got.map { case (name, rows) =>
+        val label = s"${m.name} $name"
+        if (rows != expected) mismatched += label
+        Prop(rows == expected) :| label
+      }
     }.reduce(_ && _)
   }
 
@@ -165,14 +186,16 @@ class KnnReferenceSpec extends AnyFunSuite {
   }
 
   test("the reference property fails on a reference with a reversed id tie-break") {
-    // the defect in one metric at a time: each metric's checks must catch it
+    // the defect in one metric at a time: each metric's checks on every
+    // path must catch it
     for (bad <- metrics) {
+      mismatched.clear()
       val res = run((m, c) => reference(m, c, idsDescending = m == bad), 20)
       // a mismatch, not an exception: the same seed passes the true reference
-      assert(res.status match {
-        case SCTest.Failed(_, labels) => labels.exists(_.startsWith(bad.name))
-        case _ => false
-      }, s"a defective ${bad.name} reference went undetected: ${res.status}")
+      assert(res.status.isInstanceOf[SCTest.Failed], s"a defective ${bad.name} reference went undetected")
+      val missed = (paths.map(_._1) :+ "join composition").map(p => s"${bad.name} $p").filterNot(mismatched)
+      assert(missed.isEmpty, s"the defect went undetected on: ${missed.mkString(", ")}")
+      assert(mismatched.forall(_.startsWith(bad.name)), s"checks of sound metrics failed: $mismatched")
     }
   }
 

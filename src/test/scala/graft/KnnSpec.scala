@@ -15,16 +15,21 @@ object SparkTestSession {
     s
   }
 
-  /** Spark jobs started while `body` runs (listener delivery is async, so
-    * the bus gets a beat before the count is read). */
-  def jobsStarted(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Spark jobs started while `body` runs. */
+  def jobsStarted(body: => Unit): Int = jobsAndStages(body)._1
+
+  /** Spark jobs and stages started while `body` runs (listener delivery
+    * is async, so the bus gets a beat before the counts are read). */
+  def jobsAndStages(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = { stages.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(500); jobs.get() }
+    try { body; Thread.sleep(500); (jobs.get(), stages.get()) }
     finally spark.sparkContext.removeSparkListener(listener)
   }
 }
@@ -44,6 +49,23 @@ class KnnSpec extends AnyFunSuite {
     val a = Knn.exact(queries, base, 10).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val w = Knn.exactWindow(queries, base, 10).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(a == w)
+  }
+
+  test("collecting Knn.exact of a local batch over a cached, materialised base starts exactly 1 job") {
+    // the base spread over the session's cores, as a served base is, so
+    // the search needs no shuffle of its own; the batch is rows built in
+    // the driver, as a serving client sends them
+    val served = base.repartition(spark.sparkContext.defaultParallelism).cache()
+    try {
+      served.count()
+      val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val (jobs, stages) = SparkTestSession.jobsAndStages { rows = Knn.exact(local, served, 10).collect() }
+      // one stage: the heaps merge on the driver, not in a shuffle
+      assert((jobs, stages) == (1, 1), s"a collected exact search ran $jobs jobs of $stages stages")
+      def ranked(rs: Array[org.apache.spark.sql.Row]) = rs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(ranked(rows) == ranked(gt.collect()))
+    } finally served.unpersist(blocking = true)
   }
 
   test("recall(exact, exact) == 1.0") {

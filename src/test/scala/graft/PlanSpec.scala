@@ -375,6 +375,53 @@ class PlanSpec extends AnyFunSuite {
     } finally Seq(adj, base).foreach(_.unpersist(blocking = true))
   }
 
+  test("a local query batch: the exact plan's root is the ranked kernel, the graph plan has no exchange") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.exec.{BeamSearchExec, BlockTopKExec}
+    // the base spread over the session's cores, so neither search shuffles it
+    val base = graft.sources.Tables.embeddingBase(spark, dir).select(col("vec_id"), col("embedding"))
+      .repartition(spark.sparkContext.defaultParallelism).cache()
+    val adj = graft.index.GraphIndex.buildExact(base, 8).cache()
+    val queries = graft.sources.Tables.embeddingQueries(spark, dir)
+    val local = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*), queries.schema)
+    try {
+      base.count(); adj.count()
+      val exact = graft.operators.Knn.exact(local, base, 10)
+      val text = finalPlan(exact)
+      // the root is the node, no projection, so a collect reaches its
+      // driver-side merge. A cached base whose own plan is adaptive still
+      // makes the plan adaptive (a table-cache stage), and then the
+      // result stage hands the node to the collect
+      val root = exact.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan match {
+          case r: ResultQueryStageExec => r.plan
+          case p => p
+        }
+        case p => p
+      }
+      assert(root match {
+        case b: BlockTopKExec => b.ranked
+        case _ => false
+      }, text)
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      // no exchange and no broadcast of the batch
+      assert(helper.collect(exact.queryExecution.executedPlan) { case e: Exchange => e }.isEmpty, text)
+      val graph = graft.index.GraphIndex.search(local, base, adj, 10)
+      val graphText = finalPlan(graph)
+      val nodes = helper.collect(graph.queryExecution.executedPlan) { case p => p }
+      assert(nodes.exists(_.isInstanceOf[BeamSearchExec]), graphText)
+      assert(!nodes.exists(_.isInstanceOf[Exchange]), graphText)
+    } finally Seq(adj, base).foreach(_.unpersist(blocking = true))
+  }
+
+  test("knn_graph: a non-local query batch is still shuffled by query_id into the beam operator") {
+    val p = planOf("knn_graph")
+    assert(p.contains("BeamSearch"), p)
+    assert("Exchange hashpartitioning\\(query_id".r.findFirstIn(p).nonEmpty, p)
+  }
+
   test("kernel nodes carry their inputs' constraints on query_id and vec_id") {
     import org.apache.spark.sql.functions.{array, col, lit}
     import graft.exec.{BeamParams, BeamSearch, Metric, VectorTopK}
